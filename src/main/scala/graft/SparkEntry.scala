@@ -87,12 +87,12 @@ object SparkEntry {
     */
   private[graft] def streamShufflePartitions(s: SparkSession, dir: String,
                                              table: String, minParts: Int): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
+    Knobs.positiveInt("SPARK_GRAFT_STREAM_PARTS", sys.env.get("SPARK_GRAFT_STREAM_PARTS"), {
       val bytes = dirBytes(new java.io.File(s"$dir/$table.parquet"))
       val byData = bytes / (32L << 20) + 1
       byData.min(s.sparkContext.defaultParallelism.toLong * 4).toInt
         .max(minParts).max(1)
-    }
+    })
 
   /** Run `body` (stream assembly through awaitTermination) under the
     * streaming partition policy, restoring the session value after. The

@@ -334,7 +334,8 @@ object Ops {
     // never calls spark.catalog.clearCache() accumulates nothing.
     // Guard the driver collect: a high-cardinality key column would both
     // blow the driver and produce an unusable million-column frame.
-    val maxKeys = sys.props.get("graft.unfold.maxKeys").map(_.toInt).getOrElse(10000)
+    val maxKeys = graft.Knobs.positiveInt("graft.unfold.maxKeys",
+      sys.props.get("graft.unfold.maxKeys"), 10000)
     val cached = df.localCheckpoint()
     val keysInOrder: Seq[Any] = cached
       .select(col(op.keyColumn))

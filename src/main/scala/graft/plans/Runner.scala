@@ -2,7 +2,8 @@ package graft.plans
 
 import graft.operators.Ops
 import graft.sources.{Sink, Source}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.apache.spark.sql.types._
 
 /** Pipeline execution. Reference control flow: apply_operations
@@ -86,30 +87,97 @@ object SchemaValidator {
 
 /** The three primitives the EXTERNAL LLM generation loop consumes
   * (SURVEY §3.2 — orchestration itself is out of engine scope by mandate).
-  * All are cheap on a lazy DataFrame: tryApply analyzes the plan and touches
-  * at most `sampleRows` rows.
+  *
+  * Cost model. The reference applies each step to the materialized previous
+  * frame and shows the model `head(3)` of the result (main.py:136-137, 255).
+  * Here every frame stays lazy, and each trial remembers the `sampleRows`
+  * rows it collected, weakly keyed by the identity of the frame it returned
+  * (no frame is retained):
+  *   - a row-local step (one deterministic `withColumn`: equality,
+  *     concatenation, application, switching, assignation, casting,
+  *     arithmetic, comparison) on a frame with remembered rows is evaluated
+  *     on those rows alone. Catalyst folds a projection over a
+  *     `LocalRelation` at optimization time, so the step starts no Spark job.
+  *     This equals the full-frame head because head(f(df)) = f(head(df)) for
+  *     a 1:1 deterministic projection;
+  *   - every other step (bind, fold, unfold, the extended ops, a frame with
+  *     no remembered rows, a nondeterministic plan) runs one bounded
+  *     `limit(sampleRows)` job over the whole lazy plan;
+  *   - `sampleJson` serves a trial's rows without starting a job.
+  * Either way the step is first built on the full lazy frame, so analysis
+  * errors surface exactly as in a pipeline run.
   */
 object AgentApi {
 
-  /** Trial-apply one op: analysis + a tiny action to surface runtime errors
-    * (the reference's trial execution, main.py:255). Left = failure text to
-    * feed back to the generator.
+  /** The first `rows.length` rows of a frame, from a trial bounded at
+    * `limit`; fewer rows than `limit` means the whole frame.
+    */
+  private final case class Head(limit: Int, rows: Array[Row]) {
+    def take(n: Int): Option[Array[Row]] =
+      if (n <= limit || rows.length < limit) Some(rows.take(n)) else None
+  }
+
+  // Dataset does not override equals, so this is an identity map whose
+  // entries go once the frame is unreachable
+  private val heads =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[DataFrame, Head]())
+
+  private def headOf(df: DataFrame, n: Int): Option[Array[Row]] =
+    Option(heads.get(df)).flatMap(_.take(n))
+
+  private def rowLocal(op: Operation): Boolean = op match {
+    case _: Equality | _: Concatenation | _: Application | _: Switching |
+         _: Assignation | _: Casting | _: Arithmetic | _: Comparison => true
+    case _ => false
+  }
+
+  private def localFrame(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** Trial-apply one op (the reference's trial execution, main.py:255):
+    * analysis on the full lazy frame plus a run over at most `sampleRows`
+    * rows to surface runtime errors — on the previous trial's rows for a
+    * row-local op, else one bounded job. Left = failure text to feed back
+    * to the generator, never empty.
     */
   def tryApply(spark: SparkSession, df: DataFrame, op: Operation,
                inputs: Map[String, FileDef], sampleRows: Int = 3): Either[String, DataFrame] =
     try {
       val next = Ops.applyOp(spark, df, op, inputs)
-      next.limit(sampleRows).collect() // force analysis + a bounded execution
+      val trial = headOf(df, sampleRows) match {
+        case Some(base) if rowLocal(op) && next.queryExecution.analyzed.deterministic =>
+          Ops.applyOp(spark, localFrame(spark, base, df.schema), op, inputs)
+        case _ => next.limit(sampleRows)
+      }
+      heads.put(next, Head(sampleRows, trial.collect()))
       Right(next)
-    } catch { case e: Exception => Left(e.getMessage) }
+    } catch { case e: Exception => Left(feedback(e)) }
+
+  /** The exception's message, or — when it has none (an NPE, say) — its
+    * class plus the root cause's message.
+    */
+  private[graft] def feedback(e: Throwable): String =
+    Option(e.getMessage).filter(_.trim.nonEmpty).getOrElse {
+      val root = org.apache.commons.lang3.exception.ExceptionUtils.getRootCause(e)
+      (e.getClass.getName +: Option(root.getMessage).filter(_.trim.nonEmpty).toSeq)
+        .mkString(": ")
+    }
 
   /** Schema feedback string, or None when the frame satisfies the target. */
   def schemaDiff(df: DataFrame, target: FileSchema): Option[String] =
     SchemaValidator.diff(df.schema, target)
 
   /** JSON sample of the first n rows (the reference sends head(3) to the
-    * LLM, main.py:136-137).
+    * LLM, main.py:136-137). A frame returned by `tryApply` with
+    * `n ≤ sampleRows` is served from the trial's rows with no Spark job;
+    * `to_json` over them renders exactly as `Dataset.toJSON`.
     */
-  def sampleJson(df: DataFrame, n: Int = 3): String =
-    df.limit(n).toJSON.collect().mkString("[", ",", "]")
+  def sampleJson(df: DataFrame, n: Int = 3): String = {
+    val json = headOf(df, n) match {
+      case Some(rows) =>
+        localFrame(df.sparkSession, rows, df.schema).select(to_json(struct(col("*"))))
+      case None => df.limit(n).toJSON.toDF()
+    }
+    json.collect().map(_.getString(0)).mkString("[", ",", "]")
+  }
 }

@@ -1,12 +1,60 @@
 package graft
 
+import graft.operators.Ops
 import graft.plans._
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{lit, rand}
 
 /** The three primitives the external LLM flow-generation loop consumes
   * (SURVEY §3.2): tryApply (trial-run feedback), schemaDiff, sampleJson.
   */
 class AgentApiSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Jobs started while `body` runs. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      ListenerBusAccess.drain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def fullSample(df: DataFrame, n: Int): String =
+    df.limit(n).toJSON.collect().mkString("[", ",", "]")
+
+  private def applied(r: Either[String, DataFrame]): DataFrame =
+    r.fold(msg => fail(s"step rejected: $msg"), identity)
+
+  private lazy val orders = Seq(
+    (1L, 10L, "$12.50", 2L, "2024-01-15"),
+    (2L, 11L, "$3.00", 10L, "2024-02-01"),
+    (3L, 99L, "$7.25", 1L, "2024-02-29"),
+    (4L, 10L, "$40.00", 3L, "2024-03-10"),
+    (5L, 12L, "$0.99", 7L, "2024-04-01"),
+    (6L, 11L, "$15.00", 4L, "2024-05-05"))
+    .toDF("order_id", "customer_id", "unit_price", "quantity", "order_date")
+
+  /** A bind onto a small CSV of customers (customer 99 is absent → nulls). */
+  private lazy val bindCustomers: Bind = {
+    val dir = java.nio.file.Files.createTempDirectory("agentapi")
+    dir.toFile.deleteOnExit()
+    val csv = dir.resolve("customers.csv")
+    java.nio.file.Files.write(csv,
+      "customer_id,country\n10,FR\n11,DE\n12,FR\n".getBytes("UTF-8"))
+    csv.toFile.deleteOnExit()
+    Bind(csv.toString, Seq("customer_id" -> SchemaType.Int64, "country" -> SchemaType.Str),
+      "customer_id", "customer_id", "left", Seq("country"))
+  }
 
   private lazy val df = Seq((1L, "a", "2024-01-15"), (2L, "b", "not-a-date"))
     .toDF("id", "name", "d")
@@ -43,5 +91,74 @@ class AgentApiSpec extends SparkSpec {
     assert(json.startsWith("[") && json.endsWith("]"))
     assert(json.contains("\"id\":1") && json.contains("\"name\":\"a\""))
     assert(!json.contains("not-a-date") || json.count(_ == '{') <= 2)
+  }
+
+  test("every step's sample and schema equal the full frame's, through a reference-shaped chain") {
+    val chain: Seq[Operation] = Seq(
+      bindCustomers,
+      Casting("order_date", SchemaType.Dt, Some("order_date_dt")),
+      Application(Seq("unit_price"), "lambda r: float(r['unit_price'].replace('$', ''))", Some("price")),
+      Arithmetic(Seq("price", "quantity"), "*", Some("total")),
+      Comparison("total", ">", 20.0, Some("big")),
+      Assignation(0.0, Some("other")),
+      Switching("country", Seq("FR" -> "total"), None, Some(0.0), Some("fr")),
+      Switching("country", Seq("DE" -> "total"), None, Some(0.0), Some("de")),
+      Fold(Seq("country", "order_id"), Seq("fr", "de", "other"), "key", "value"),
+      Unfold(Seq("country", "order_id"), "key", "value"))
+    chain.indices.foldLeft(orders) { (df, i) =>
+      val next = applied(AgentApi.tryApply(spark, df, chain(i), Map.empty))
+      // the same prefix applied op by op, never seen by tryApply
+      val full = chain.take(i + 1).foldLeft(orders)((acc, op) => Ops.applyOp(spark, acc, op, Map.empty))
+      assert(next.schema == full.schema, s"step ${i + 1} (${chain(i).opType})")
+      assert(AgentApi.sampleJson(next, 3) == fullSample(full, 3), s"step ${i + 1} (${chain(i).opType})")
+      next
+    }
+  }
+
+  test("a row-local step on a recorded head starts no job; a bind still runs its jobs") {
+    val (bound, bindJobs) = jobsDuring(applied(AgentApi.tryApply(spark, orders, bindCustomers, Map.empty)))
+    assert(bindJobs > 0)
+    val (cast, castJobs) = jobsDuring(applied(
+      AgentApi.tryApply(spark, bound, Casting("order_date", SchemaType.Dt, Some("d")), Map.empty)))
+    assert(castJobs == 0)
+    val (sample, sampleJobs) = jobsDuring(AgentApi.sampleJson(cast, 3))
+    assert(sampleJobs == 0)
+    assert(sample == fullSample(cast, 3))
+  }
+
+  test("an unparseable cast on a recorded head is rejected with feedback, without a job") {
+    val base = applied(AgentApi.tryApply(spark, spark.range(4).toDF("id")
+      .withColumn("d", lit("not-a-date")), Equality("id", Some("id2")), Map.empty))
+    val (bad, jobs) = jobsDuring(
+      AgentApi.tryApply(spark, base, Casting("d", SchemaType.Dt, Some("dd")), Map.empty))
+    assert(bad.isLeft && bad.left.toOption.get.trim.nonEmpty)
+    assert(jobs == 0)
+  }
+
+  test("sampleJson beyond the trial's rows, or on an untried frame, equals limit(n).toJSON") {
+    val next = applied(AgentApi.tryApply(spark, orders, Equality("order_id", Some("id2")), Map.empty))
+    assert(AgentApi.sampleJson(next, 5) == fullSample(next, 5))
+    assert(AgentApi.sampleJson(next, 2) == fullSample(next, 2))
+    val untried = Ops.applyOp(spark, orders, Equality("order_id", Some("id2")), Map.empty)
+    assert(AgentApi.sampleJson(untried, 3) == fullSample(untried, 3))
+    // a trial that saw fewer rows than its bound saw the whole frame
+    val small = applied(AgentApi.tryApply(spark, df, Equality("id", Some("id2")), Map.empty))
+    assert(AgentApi.sampleJson(small, 10) == fullSample(small, 10))
+  }
+
+  test("a nondeterministic plan takes the full trial run") {
+    def trial(base: DataFrame) = {
+      val recorded = applied(AgentApi.tryApply(spark, base, Equality("id", Some("id2")), Map.empty))
+      jobsDuring(AgentApi.tryApply(spark, recorded, Equality("r", Some("r2")), Map.empty))._2
+    }
+    assert(trial(spark.range(6).toDF("id").withColumn("r", lit(0.5))) == 0)
+    assert(trial(spark.range(6).toDF("id").withColumn("r", rand(7))) > 0)
+  }
+
+  test("feedback is never empty, even for exceptions without a message") {
+    assert(AgentApi.feedback(new IllegalArgumentException("bad column")) == "bad column")
+    assert(AgentApi.feedback(new NullPointerException()) == "java.lang.NullPointerException")
+    val wrapped = AgentApi.feedback(new RuntimeException(null, new IllegalStateException("root cause")))
+    assert(wrapped == "java.lang.RuntimeException: root cause")
   }
 }

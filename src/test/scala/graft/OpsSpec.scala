@@ -239,6 +239,12 @@ class OpsSpec extends SparkSpec {
     } finally System.clearProperty("graft.unfold.maxKeys")
     // under the cap it still pivots fine
     assert(Ops.unfold(long, Unfold(Seq("id"), "k", "v")).columns.toSeq == Seq("id", "a", "b", "c"))
+    // a cap <= 0 is a configuration error, not a rejection of every unfold
+    System.setProperty("graft.unfold.maxKeys", "0")
+    try {
+      val e = intercept[IllegalArgumentException] { Ops.unfold(long, Unfold(Seq("id"), "k", "v")) }
+      assert(e.getMessage.contains("graft.unfold.maxKeys"))
+    } finally System.clearProperty("graft.unfold.maxKeys")
   }
 
   test("filter/aggregate/sort/window/distinct extended ops") {
