@@ -44,8 +44,6 @@ object Bench {
     val tStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - tStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
     // Budget math (round-8, rehearsed): a quiet cold pass is ~585 s and a
     // cold-cache second pass costs about the same (the per-query
@@ -77,27 +75,7 @@ object Bench {
     // otherwise straddle the kill line).
     val hardCapSec = sys.env.getOrElse("SPARK_GRAFT_HARDCAP_SEC", "1300").toDouble
       .max(deadlineSec)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Generated-class cache (static conf, default 100 entries): this
-      // suite compiles ~6-10 whole-stage/projection codegen units per
-      // query × 445 distinct plan shapes, so the default LRU thrashes
-      // completely and EVERY pass re-pays Janino compilation for every
-      // query (~40-150 ms/query of pure driver CPU). Sizing it to hold
-      // the working set makes repeat executions compile-free — the
-      // steady state any long-lived multi-query driver (a 100 TB
-      // pipeline service replanning the same operators per batch) runs
-      // in. Measured on the 96-query sub-1.5 s slice, min-of-3, both
-      // orders: 38.6/41.6 s → 24.0/25.9 s (−37%). Caches compiled
-      // BYTECODE keyed on generated source, never data or results.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
+    val spark = Session.builder("graft-bench").getOrCreate()
     // ERROR, not WARN: bounded-domain window warnings × 400 queries × 3
     // passes flood the driver's combined-output tail buffer and can push
     // the summary line out of its capture window

@@ -215,12 +215,17 @@ operations:
       // a DYNAMICALLY-typed lambda MiniLambda's static Column compiler
       // rejects (mixed string/int conditional branches, string
       // repetition): runs through the interpreted RowLambda fallback
-      // behind its explicit opt-in flag; result renders via Python str()
-      s.conf.set("spark.graft.application.fallback", "true")
-      val r = Ops.application(T(s, dir, "part"),
+      // behind its explicit opt-in flag; result renders via Python str().
+      // The flag is read when the column is built, so it is set only for
+      // the build and restored after: the shared session never keeps it.
+      val flag = "spark.graft.application.fallback"
+      val prev = s.conf.getOption(flag)
+      s.conf.set(flag, "true")
+      val r = try Ops.application(T(s, dir, "part"),
         Application(Seq("p_name", "p_size"),
           "lambda r: r['p_name'].split(' ')[0] * 2 if r['p_size'] > 25 else len(r['p_name'])",
           Some("p_dyn")))
+      finally prev.fold(s.conf.unset(flag))(s.conf.set(flag, _))
       r.select("p_partkey", "p_dyn")
     }),
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names (local iteration only;
     // the driver always passes two args and gets the full suite)
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized for a multi-query driver (445 distinct
-      // plan shapes × ~6-10 codegen units vs the 100-entry default LRU):
-      // round-11 measured −37% on repeat executions from skipping Janino
-      // recompiles. Caches compiled BYTECODE keyed on generated source,
-      // never data or results. Round-12 item: this conf belongs in every
-      // long-lived session builder, not only the bench harness.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
+    val spark = Session.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

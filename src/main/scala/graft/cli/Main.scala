@@ -1,7 +1,6 @@
 package graft.cli
 
 import graft.plans.{Runner, Yaml}
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, Path}
 
 /** CLI entry replicating the reference's batch path (main.py:516-620):
@@ -17,20 +16,9 @@ object Main {
     val pipelinesDir = if (args.length > 1) Paths.get(args(1))
       else configPath.toAbsolutePath.getParent.resolve("pipelines")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized for a long-lived multi-pipeline driver
-      // (the 100-entry default LRU thrashes once a service replans many
-      // distinct operators; caches compiled bytecode only — never data)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
+    // SPARK_MASTER points the CLI at a cluster instead of local[cores]
+    val builder = graft.Session.builder("graft")
+    val spark = sys.env.get("SPARK_MASTER").fold(builder)(builder.master).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val config = Yaml.parseConfig(Files.readString(configPath))

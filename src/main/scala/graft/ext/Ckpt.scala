@@ -48,13 +48,7 @@ object Ckpt {
     * The price is a cheap per-consumer deserialize of ids-only rows.
     */
   val SER: org.apache.spark.storage.StorageLevel =
-    sys.env.get("GRAFT_CKPT_LEVEL") match {
-      // measurement override for A/B probes of the serialize-vs-unroll
-      // trade (see the scaladoc above) — production default is SER
-      case Some("deser") => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      case Some("disk")  => org.apache.spark.storage.StorageLevel.DISK_ONLY
-      case _             => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    }
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   /** Eager serialized local checkpoint — the loop-state variant every
     * iterative operator here uses (pair with [[free]] on supersession).
@@ -88,19 +82,15 @@ object Ckpt {
     * frames whose value-unroll reproducibly OOMed the r8 heap must stay
     * ABOVE it (2.2× margin). Above the ceiling the loop pays the
     * serialized tax for byte-accurate unroll accounting that SPILLS
-    * instead of OOMing. Env-tunable for A/B probes.
+    * instead of OOMing.
     */
-  val DeserMaxRows: Long = sys.env.get("GRAFT_CKPT_DESER_MAX_ROWS")
-    .map(_.toLong).getOrElse(32000000L)
-
-  private val levelForced = sys.env.get("GRAFT_CKPT_LEVEL").nonEmpty
+  val DeserMaxRows: Long = 32000000L
 
   /** Size-adaptive checkpoint handle for ONE recurring loop frame: the
     * materializing count() every eager checkpoint already pays is fed
     * back as the level chooser for the NEXT round — deserialized while
     * the frame stays under [[DeserMaxRows]], serialized above (or before
-    * any size is known, and always when GRAFT_CKPT_LEVEL forces a level
-    * for A/B probes). Use one Loop per recurring frame variable — mixing
+    * any size is known). Use one Loop per recurring frame variable — mixing
     * frames of different sizes through one handle would let a big
     * frame's count mis-level a small one.
     *
@@ -129,8 +119,7 @@ object Ckpt {
     private var level: org.apache.spark.storage.StorageLevel = SER
     def local(df: DataFrame): DataFrame = {
       val lvl =
-        if (levelForced || lastRows < 0 ||
-            lastRows * math.max(1.0, maxGrowth) > deserMaxRows) SER
+        if (lastRows < 0 || lastRows * math.max(1.0, maxGrowth) > deserMaxRows) SER
         else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       level = lvl
       val ck = df.localCheckpoint(false, lvl)
@@ -185,9 +174,7 @@ object Ckpt {
     * never storage reachable through a composite plan, so a mistaken
     * call on a derived frame cannot yank blocks out from under it.
     */
-  private val freeEnabled = !sys.env.get("GRAFT_CKPT_FREE").contains("off")
-
-  def free(df: DataFrame): Unit = if (freeEnabled) df.queryExecution.analyzed match {
+  def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
     case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
     case _              => ()
   }

@@ -90,8 +90,9 @@ object Dedup {
       .withColumn("__bmin__", min(col("id")).over(w))
     val observed = sized.observe(
       s"graft_${what}_bucket_cap_${obsCounter.incrementAndGet()}",
-      sum(when(col("__bsize__") > maxBucket, 1L).otherwise(0L)).as("star_entries"),
-      max(col("__bsize__")).as("max_bucket"))
+      coalesce(sum(when(col("__bsize__") > maxBucket, 1L).otherwise(0L)), lit(0L))
+        .as("star_entries"),
+      coalesce(max(col("__bsize__")), lit(0L)).as("max_bucket"))
     val small = observed.filter(col("__bsize__") <= maxBucket)
       .select(bucketCols.map(col) :+ col("id"): _*)
     val smallPairs = small.alias("a").join(small.alias("b"), bucketCols)

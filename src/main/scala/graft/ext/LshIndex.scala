@@ -308,8 +308,9 @@ object LshIndex {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bkey")
     val ledger = ledger0.withColumn("__bsize__", count(lit(1)).over(w))
       .observe(s"graft_lsh_probe_cap_${obsCounter.incrementAndGet()}",
-        sum(when(col("__bsize__") > maxPostings, 1L).otherwise(0L)).as("dropped_postings"),
-        max(col("__bsize__")).as("max_bucket"))
+        coalesce(sum(when(col("__bsize__") > maxPostings, 1L).otherwise(0L)), lit(0L))
+          .as("dropped_postings"),
+        coalesce(max(col("__bsize__")), lit(0L)).as("max_bucket"))
       .filter(col("__bsize__") <= maxPostings)
       .select(col("id").as("id_old"), col("band"), col("bkey"))
     // explicit broadcast: the probe batch is the bounded small side by

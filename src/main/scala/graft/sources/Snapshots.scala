@@ -92,10 +92,8 @@ object Snapshots {
     * the TTL bounds crash recovery latency, not job length.
     * System-property override for specs (read per acquisition).
     */
-  private def lockTtlMs: Long =
-    sys.props.get("graft.snapshot.lock.ttl.ms").map(_.toLong)
-      .orElse(sys.env.get("GRAFT_SNAPSHOT_LOCK_TTL_MS").map(_.toLong))
-      .getOrElse(30L * 60 * 1000)
+  private[graft] def lockTtlMs: Long =
+    knob("graft.snapshot.lock.ttl.ms", "GRAFT_SNAPSHOT_LOCK_TTL_MS", 30 * 60 * 1000)
 
   /** How long a writer WAITS for the lock before failing loudly. The
     * 10 s default keeps the accident-prevention stance (two maintenance
@@ -107,19 +105,22 @@ object Snapshots {
     * ManifestLogSpec proves the interleave). Env/prop-tunable per
     * deployment.
     */
-  private def lockWaitMs: Long =
-    sys.props.get("graft.snapshot.lock.wait.ms").map(_.toLong)
-      .orElse(sys.env.get("GRAFT_SNAPSHOT_LOCK_WAIT_MS").map(_.toLong))
-      .getOrElse(10000L)
+  private[graft] def lockWaitMs: Long =
+    knob("graft.snapshot.lock.wait.ms", "GRAFT_SNAPSHOT_LOCK_WAIT_MS", 10000)
 
   /** Roll the delta log up into a fresh checkpoint every this many
     * commits: bounds a reader's resolution chain (and the one
     * O(index-files) checkpoint write amortizes across the window).
     */
-  private def checkpointEvery: Int =
-    sys.props.get("graft.snapshot.ckpt.every").map(_.toInt)
-      .orElse(sys.env.get("GRAFT_SNAPSHOT_CKPT_EVERY").map(_.toInt))
-      .getOrElse(16)
+  private[graft] def checkpointEvery: Int =
+    knob("graft.snapshot.ckpt.every", "GRAFT_SNAPSHOT_CKPT_EVERY", 16)
+
+  /** A positive integer knob: system property `prop`, else env var `env`,
+    * else `default`; a bad value fails naming whichever knob supplied it.
+    */
+  private def knob(prop: String, env: String, default: Int): Int =
+    graft.Knobs.positiveInt(prop, sys.props.get(prop),
+      graft.Knobs.positiveInt(env, sys.env.get(env), default))
 
   // re-entrancy: compactCommit runs vacuum inside its own lock; track the
   // roots the CURRENT THREAD already holds so nested acquisition is a no-op

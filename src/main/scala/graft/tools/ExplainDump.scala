@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-audit tool: dump `explain("formatted")` for every SparkEntry query
@@ -22,15 +21,7 @@ object ExplainDump {
     // strategies and coalesced exchanges reflect runtime reality, not the
     // pre-execution estimate.
     val exec = args.lift(3).contains("exec")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain-dump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder("graft-explain-dump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val names = graft.SparkEntry.queries.keys.toSeq

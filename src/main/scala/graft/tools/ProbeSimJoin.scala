@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Stage-level perf probe for SimJoin.jaccardJoin (the suite's most
   * expensive legitimate query): times tokenize+freq, prefix build,
   * raw candidate generation, candidate distinct, and the verify rejoin
@@ -13,15 +11,7 @@ object ProbeSimJoin {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val threshold = if (args.length > 1) args(1).toDouble else 0.9
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-probe-simjoin")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder("graft-probe-simjoin").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.write.format("noop").mode("overwrite").save() // warm-up

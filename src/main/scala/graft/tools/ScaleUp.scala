@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** One-off scale-probe data generator: derives an sfN directory from the
@@ -35,14 +35,7 @@ object ScaleUp {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft-sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = math.min(32, Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder("graft-scaleup").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // replica axis: explode a literal 0..factor-1 array — one scan of the

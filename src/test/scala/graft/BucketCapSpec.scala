@@ -51,6 +51,22 @@ class BucketCapSpec extends SparkSpec {
       assert(metrics.nonEmpty, "bucket-cap observed metrics must fire")
       assert(metrics.values.exists(_.getAs[Long]("star_entries") > 0),
         s"star_entries must be positive: $metrics")
+
+      // an empty corpus reports zeros, not nulls (sum/max over no rows).
+      // AQE prunes an all-empty plan before the metric can fire, so run
+      // this one with it off, as a streaming micro-batch does.
+      metrics = Map.empty
+      val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try assert(Dedup.minhashPairs(corpus(0, 0), "doc_id", "text", maxBucket = 50).count() == 0)
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      val emptyDeadline = System.currentTimeMillis() + 10000
+      while (metrics.isEmpty && System.currentTimeMillis() < emptyDeadline) Thread.sleep(100)
+      assert(metrics.nonEmpty, "bucket-cap observed metrics must fire on an empty corpus")
+      metrics.values.foreach { r =>
+        assert(r.get(r.fieldIndex("star_entries")) == 0L && r.get(r.fieldIndex("max_bucket")) == 0L,
+          s"empty-corpus bucket-cap metrics must be 0, not null: $metrics")
+      }
     } finally spark.listenerManager.unregister(listener)
   }
 

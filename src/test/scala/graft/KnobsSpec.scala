@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Snapshots
 import org.scalatest.funsuite.AnyFunSuite
 
 class KnobsSpec extends AnyFunSuite {
@@ -21,5 +22,19 @@ class KnobsSpec extends AnyFunSuite {
     var evaluated = false
     Knobs.positiveInt("k", Some("5"), { evaluated = true; 1 })
     assert(!evaluated)
+  }
+
+  test("snapshot knobs reject a bad system property, naming the knob") {
+    val knobs = Seq[(String, () => Long)](
+      "graft.snapshot.lock.ttl.ms" -> (() => Snapshots.lockTtlMs),
+      "graft.snapshot.lock.wait.ms" -> (() => Snapshots.lockWaitMs),
+      "graft.snapshot.ckpt.every" -> (() => Snapshots.checkpointEvery.toLong))
+    for ((name, read) <- knobs; bad <- Seq("abc", "0", "-5")) {
+      System.setProperty(name, bad)
+      try {
+        val e = intercept[IllegalArgumentException](read())
+        assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally System.clearProperty(name)
+    }
   }
 }

@@ -42,6 +42,17 @@ class RowLambdaSpec extends SparkSpec {
     assert(e2.msg.contains("fallback"))
   }
 
+  test("q_application_fallback builds with the flag but does not leave it set") {
+    val before = spark.conf.getOption(FLAG)
+    val q = SparkEntry.queries("q_application_fallback")(spark, sf0001)
+    assert(spark.conf.getOption(FLAG) == before)
+    // the built frame keeps its RowLambda column after the flag is restored
+    assert(q.limit(3).collect().length == 3)
+    intercept[MiniLambda.CompileError] {
+      run("lambda r: r['s'] or 'default'", Seq("s"))
+    }
+  }
+
   test("truthy or-default and truthy and run under the flag (value-returning)") {
     assert(withFlag { run("lambda r: r['s'] or 'default'", Seq("s")) } ==
       Seq(Some("x"), Some("default"), Some("y")))

@@ -16,6 +16,8 @@ package graft
   *
   * `udf(` is not baselined: it is an unconditional zero (a Scala UDF in
   * the hot path forfeits codegen — the repo's native-Expression doctrine).
+  * Neither is `SparkSession.builder()` outside `graft/Session.scala`: every
+  * driver, tool and test session starts from `graft.Session`.
   */
 class SourceDisciplineSpec extends SparkSpec {
 
@@ -38,6 +40,7 @@ class SourceDisciplineSpec extends SparkSpec {
   test("driver-side construct counts do not grow past the committed baseline") {
     val counts = scala.collection.immutable.TreeMap.newBuilder[String, Int]
     var udfHits = List.empty[String]
+    var builderHits = List.empty[String]
     scalaFiles(root).foreach { f =>
       val text = new String(
         java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
@@ -48,9 +51,14 @@ class SourceDisciplineSpec extends SparkSpec {
       }
       if ("""(?<![.\w])udf\(""".r.findFirstIn(text).isDefined)
         udfHits ::= rel
+      val code = text.linesIterator.filterNot(_.trim.matches("""(//|/?\*).*"""))
+      if (!rel.endsWith("graft/Session.scala") && code.exists(_.contains("SparkSession.builder()")))
+        builderHits ::= rel
     }
     assert(udfHits.isEmpty,
       s"Scala udf() forfeits codegen — use a native Expression: $udfHits")
+    assert(builderHits.isEmpty,
+      s"build sessions with graft.Session, not SparkSession.builder(): $builderHits")
 
     val got = counts.result()
     val f = new java.io.File(baselinePath)

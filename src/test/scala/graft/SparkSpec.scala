@@ -24,13 +24,9 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
+    // 4 cores whatever the host: ShuffleBudgetSpec's baseline depends on it
+    val s = Session.builder("graft-test", cores = 4)
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
