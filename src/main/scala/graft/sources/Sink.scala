@@ -1,9 +1,15 @@
 package graft.sources
 
 import graft.plans.{FileDef, SchemaType}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Output writing. Reference: save_data (main.py:432-480) — projects to
   * exactly the schema columns, in schema declaration order, skipping (with a
@@ -26,8 +32,12 @@ object Sink {
     df.select(kept.map(col): _*)
   }
 
-  /** Write `df` per `fd`. JSON defaults to DISTRIBUTED NDJSON — the safe
-    * library default at any scale; the collected pretty-printed array
+  /** Write `df` per `fd`. A `.csv`, `.parquet` or `.orc` path gets exactly
+    * one file: a `.csv` is written by every partition in parallel and
+    * concatenated (`writeSingleCsv`), a `.parquet`/`.orc` runs as one task
+    * (`writeSingleFile`). Any other path gets Spark's directory of part
+    * files. JSON defaults to DISTRIBUTED NDJSON — the safe library default
+    * at any scale; the collected pretty-printed array
     * (reference byte-parity) is opt-in via `prettyJson = true` and is
     * passed only by the CLI-parity pipeline path (Runner.runOutput),
     * where outputs are reference-scale by construction. A library caller
@@ -40,17 +50,16 @@ object Sink {
         // reference parity: the output is ONE file at exactly this path
         // (main.py writes a single csv). Extension-less paths keep Spark's
         // distributed directory layout — the at-scale mode.
-        writeSingleFile(out, fd.path, "csv",
-          Map("header" -> "true", "dateFormat" -> "yyyy-MM-dd"))
+        writeSingleCsv(out, fd.path, Map("header" -> "true", "dateFormat" -> "yyyy-MM-dd"))
       case "csv" =>
         out.write.mode(SaveMode.Overwrite).option("header", true)
           .option("dateFormat", "yyyy-MM-dd").csv(fd.path)
       case "parquet" if fd.path.toLowerCase.endsWith(".parquet") =>
-        writeSingleFile(out, fd.path, "parquet", Map.empty)
+        writeSingleFile(out, fd.path, "parquet")
       case "parquet" =>
         out.write.mode(SaveMode.Overwrite).parquet(fd.path)
       case "orc" if fd.path.toLowerCase.endsWith(".orc") =>
-        writeSingleFile(out, fd.path, "orc", Map.empty)
+        writeSingleFile(out, fd.path, "orc")
       case "orc" =>
         out.write.mode(SaveMode.Overwrite).orc(fd.path)
       case "json" if !prettyJson =>
@@ -70,32 +79,93 @@ object Sink {
           if (rows.isEmpty) "[]"
           else rows.map(r => "  " + pyJsonObject(names.zip(r.toSeq), 2))
             .mkString("[\n", ",\n", "\n]")
-        val p = java.nio.file.Paths.get(fd.path)
-        if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.writeString(p, body)
+        val p = Paths.get(fd.path)
+        if (p.getParent != null) Files.createDirectories(p.getParent)
+        Files.writeString(p, body)
       case other => throw new IllegalArgumentException(s"unsupported output format '$other'")
     }
   }
 
-  /** Write as exactly one file at `path` (reference-scale outputs):
-    * single-partition write into a temp dir, then move the part file.
+  /** One CSV file at `path`, written by every partition in parallel: each
+    * task writes its part into a temp dir (every part starts with the same
+    * header), then the parts are appended, in partition order, onto the
+    * first one with their header stripped, and that file is moved to
+    * `path`. The bytes are those of a one-partition write of the same
+    * frame, without running the whole plan as one task; the driver-side cost is
+    * one sequential copy of the non-first parts.
     */
-  private def writeSingleFile(df: DataFrame, path: String, format: String,
-                              options: Map[String, String]): Unit = {
+  private def writeSingleCsv(df: DataFrame, path: String,
+                             options: Map[String, String]): Unit = {
     val tmp = path + ".graft-tmp"
-    df.coalesce(1).write.mode(SaveMode.Overwrite).options(options)
-      .format(format).save(tmp)
-    val tmpDir = java.nio.file.Paths.get(tmp)
-    val part = java.nio.file.Files.list(tmpDir).filter(p =>
-      p.getFileName.toString.startsWith("part-")).findFirst()
-      .orElseThrow(() => new IllegalStateException(s"no part file in $tmp"))
-    val target = java.nio.file.Paths.get(path)
-    if (target.getParent != null) java.nio.file.Files.createDirectories(target.getParent)
-    java.nio.file.Files.move(part, target,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    df.write.mode(SaveMode.Overwrite).options(options).csv(tmp)
+    val header = csvHeader(df, options)
+    val parts = partFiles(Paths.get(tmp)).sortBy(partOrder)
+    if (parts.isEmpty) throw new IllegalStateException(s"no part file in $tmp")
+    Using.resource(FileChannel.open(parts.head, StandardOpenOption.APPEND)) { out =>
+      parts.tail.foreach { part =>
+        Using.resource(FileChannel.open(part, StandardOpenOption.READ)) { in =>
+          val head = ByteBuffer.allocate(header.length)
+          while (head.hasRemaining && in.read(head) >= 0) {}
+          if (!java.util.Arrays.equals(head.array, header))
+            throw new IllegalStateException(s"$part does not start with the csv header")
+          var pos = header.length.toLong
+          while (pos < in.size) pos += in.transferTo(pos, in.size - pos, out)
+        }
+      }
+    }
+    moveToTarget(parts.head, tmp, path)
+  }
+
+  /** The header line Spark's CSV writer starts each part with, written by
+    * the same generator with the same options.
+    */
+  private def csvHeader(df: DataFrame, options: Map[String, String]): Array[Byte] = {
+    val spark = df.sparkSession
+    val csvOptions = new CSVOptions(options,
+      spark.conf.get("spark.sql.csv.parser.columnPruning.enabled").toBoolean,
+      spark.conf.get("spark.sql.session.timeZone"))
+    val text = new java.io.StringWriter()
+    val gen = new UnivocityGenerator(df.schema, text, csvOptions)
+    gen.writeHeaders()
+    gen.close()
+    text.toString.getBytes(csvOptions.charset)
+  }
+
+  private val PartName = """part-(\d+)-.*-c(\d+)(\..*)?""".r
+
+  /** (partition number, file number within the partition) of a part file,
+    * parsed as numbers: name order breaks past 99,999 partitions or 999
+    * files per partition, where the zero padding runs out.
+    */
+  private def partOrder(p: Path): (Int, Int) = p.getFileName.toString match {
+    case PartName(partition, file, _) => (partition.toInt, file.toInt)
+    case other => throw new IllegalStateException(s"unexpected part file name $other")
+  }
+
+  private def partFiles(dir: Path): Vector[Path] =
+    Using.resource(Files.list(dir))(_.iterator.asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toVector)
+
+  /** Move `file` to `path`, then delete the temp dir it was written in. */
+  private def moveToTarget(file: Path, tmp: String, path: String): Unit = {
+    val target = Paths.get(path)
+    if (target.getParent != null) Files.createDirectories(target.getParent)
+    Files.move(file, target, StandardCopyOption.REPLACE_EXISTING)
     // clean the temp dir (part crc/_SUCCESS markers)
-    java.nio.file.Files.walk(tmpDir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    Using.resource(Files.walk(Paths.get(tmp)))(_.sorted(java.util.Comparator.reverseOrder())
+      .iterator.asScala.foreach(Files.deleteIfExists))
+  }
+
+  /** Exactly one parquet or orc file at `path`: these formats cannot be
+    * concatenated, so the whole plan is coalesced to ONE task writing into
+    * a temp dir, and its part file is moved.
+    */
+  private def writeSingleFile(df: DataFrame, path: String, format: String): Unit = {
+    val tmp = path + ".graft-tmp"
+    df.coalesce(1).write.mode(SaveMode.Overwrite).format(format).save(tmp)
+    val part = partFiles(Paths.get(tmp)).headOption
+      .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
+    moveToTarget(part, tmp, path)
   }
 
   private def renderDates(df: DataFrame): DataFrame =

@@ -1,7 +1,10 @@
 package graft.sources
 
 import graft.plans.{FileDef, SchemaType}
+import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,32 +26,42 @@ object Source {
   }
 
   /** CSV with declared dtype overrides + inference for undeclared columns.
-    * Two cheap passes: header-only read to discover the column set, then a
-    * full read with an explicit schema (declared types for declared columns,
-    * inferred types for the rest). Keeping the final read schema explicit
-    * means the scan is single-pass over the data at scale.
+    * The scan itself is one read with an explicit schema (declared types for
+    * declared columns, inferred types for the rest), so it stays single-pass
+    * over the data at scale. Resolving that schema costs:
+    *   - a local regular file whose first 1,001 lines are quote-balanced
+    *     (physical lines are records): no Spark job. The header and the
+    *     1000-row inference window are parsed in the driver from those
+    *     lines, with Spark's own CSV parser settings, header rules and type
+    *     inference, so the schema is the one Spark would resolve;
+    *   - anything else (a directory, a glob, a quoted field spanning lines):
+    *     a header-read job, and an inference job over a record-accurate
+    *     sample when a column is undeclared.
     */
   def loadCsv(spark: SparkSession, path: String,
               declared: Seq[(String, SchemaType)]): DataFrame = {
     val declaredMap = declared.toMap
-    val header = spark.read.option("header", true).csv(path).schema.fieldNames
+
+    // The raw line head is only valid when physical lines == records: a
+    // quoted field with an embedded newline splits one record across lines
+    // (the head truncates mid-record), and directory/glob input interleaves
+    // later files' HEADER lines as data. Detect both; fall back to Spark's
+    // reader and a record-accurate sample via the real CSV parser, and read
+    // the full file in multiLine mode when records genuinely span lines.
+    val f = new java.io.File(path)
+    val rawLines = if (f.isFile) headLines(f, InferWindow + 1) else Nil
+    val linesSafe = rawLines.nonEmpty &&
+      rawLines.forall(l => l.count(_ == '"') % 2 == 0)
+    val needsMultiLine = f.isFile && !linesSafe
+    val local = if (linesSafe) Some(new LocalHead(spark, rawLines)) else None
+
+    val header = local.fold(
+      spark.read.option("header", true).csv(path).schema.fieldNames)(_.header)
     val missing = declared.map(_._1).filterNot(header.contains)
     if (missing.nonEmpty)
       System.err.println(s"[source] warning: declared columns absent from $path: ${missing.mkString(", ")}")
 
     val undeclared = header.filterNot(declaredMap.contains)
-
-    // The raw line head is only valid when physical lines == records: a
-    // quoted field with an embedded newline splits one record across lines
-    // (the head truncates mid-record), and directory/glob input interleaves
-    // later files' HEADER lines as data. Detect both; fall back to a
-    // record-accurate sample via the real CSV parser, and read the full
-    // file in multiLine mode when records genuinely span lines.
-    val f = new java.io.File(path)
-    val rawLines = if (f.isFile) headLines(spark, path, 1001) else Nil
-    val linesSafe = rawLines.nonEmpty &&
-      rawLines.forall(l => l.count(_ == '"') % 2 == 0)
-    val needsMultiLine = f.isFile && !linesSafe
 
     val inferredTypes: Map[String, DataType] =
       if (undeclared.isEmpty) Map.empty
@@ -57,11 +70,13 @@ object Source {
         // Inference runs on ONLY the first 1000 data records — a full-file
         // `inferSchema` pass would both scan everything (cost at scale) and
         // infer from rows outside the reference's window (parity drift).
-        val sampleLines = if (linesSafe) rawLines else recordHead(spark, path, 1000)
-        val sampleDs = spark.createDataset(sampleLines)(
-          org.apache.spark.sql.Encoders.STRING)
-        spark.read.option("header", true).option("inferSchema", true)
-          .csv(sampleDs).schema.fields.map(f => f.name -> f.dataType).toMap
+        val fields = local.fold {
+          val sampleDs = spark.createDataset(recordHead(spark, path, InferWindow))(
+            org.apache.spark.sql.Encoders.STRING)
+          spark.read.option("header", true).option("inferSchema", true)
+            .csv(sampleDs).schema.fields
+        }(_.inferred)
+        fields.map(f => f.name -> f.dataType).toMap
       }
 
     val schema = StructType(header.map { name =>
@@ -74,11 +89,50 @@ object Source {
       .option("dateFormat", "yyyy-MM-dd").csv(path)
   }
 
-  /** First `n` lines of a local CSV file — exact head, zero Spark jobs. */
-  private def headLines(spark: SparkSession, path: String, n: Int): Seq[String] = {
-    val src = scala.io.Source.fromFile(new java.io.File(path))
-    try src.getLines().take(n).toList finally src.close()
+  private val InferWindow = 1000
+
+  /** The header and the inferred fields of a CSV whose lines are records,
+    * resolved in the driver exactly as Spark's `csv(Dataset[String])` with
+    * `header` and `inferSchema` resolves them: comment/empty lines dropped,
+    * the first remaining line parsed as the header and made safe
+    * (`_c<i>` for empty names, `<name><i>` for duplicates), every line equal
+    * to it dropped, and the rest folded through `CSVInferSchema`.
+    */
+  private final class LocalHead(spark: SparkSession, lines: Seq[String]) {
+    private val options = new CSVOptions(
+      Map("header" -> "true", "inferSchema" -> "true"),
+      spark.conf.get("spark.sql.csv.parser.columnPruning.enabled").toBoolean,
+      spark.conf.get("spark.sql.session.timeZone"))
+    private val parser = new CsvParser(options.asParserSettings)
+    private val records = CSVUtils.filterCommentAndEmpty(lines.iterator, options).toSeq
+    private val firstLine = records.headOption
+
+    val header: Array[String] = firstLine.flatMap(l => Option(parser.parseLine(l)))
+      .fold(Array.empty[String])(CSVUtils.makeSafeHeader(_,
+        spark.conf.get("spark.sql.caseSensitive").toBoolean, options))
+
+    def inferred: Array[StructField] = firstLine.fold(Array.empty[StructField]) { first =>
+      val inference = new CSVInferSchema(options)
+      val types = CSVUtils.filterHeaderLine(records.iterator, first, options)
+        .map(parser.parseLine)
+        .foldLeft(Array.fill[DataType](header.length)(NullType))(inference.inferRowType)
+      inference.toStructFields(types, header)
+    }
   }
+
+  /** First `n` lines of a local file — exact head, zero Spark jobs. Decoded
+    * as UTF-8, Spark CSV's default encoding (malformed bytes become U+FFFD,
+    * as in Spark's text reader), with the UTF-8 byte-order mark dropped as
+    * Hadoop's line reader drops it.
+    */
+  private def headLines(f: java.io.File, n: Int): List[String] =
+    scala.util.Using.resource(new java.io.BufferedReader(new java.io.InputStreamReader(
+      new java.io.FileInputStream(f), java.nio.charset.StandardCharsets.UTF_8))) { r =>
+      Iterator.continually(r.readLine()).takeWhile(_ != null).take(n).toList match {
+        case first :: rest if first.startsWith("\uFEFF") => first.drop(1) :: rest
+        case lines => lines
+      }
+    }
 
   /** Record-accurate sample head: parse with the real CSV reader (which
     * handles quoted embedded newlines and per-file headers; multiLine for

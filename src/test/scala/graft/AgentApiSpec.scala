@@ -2,8 +2,6 @@ package graft
 
 import graft.operators.Ops
 import graft.plans._
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{lit, rand}
 
@@ -12,22 +10,6 @@ import org.apache.spark.sql.functions.{lit, rand}
   */
 class AgentApiSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      ListenerBusAccess.drain(sc)
-      (out, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def fullSample(df: DataFrame, n: Int): String =
     df.limit(n).toJSON.collect().mkString("[", ",", "]")

@@ -79,6 +79,18 @@ class SinkSourceSpec extends graft.SparkSpec {
     assert(df.filter(org.apache.spark.sql.functions.col("v").isNull).count() == 1)
   }
 
+  test("a non-ASCII csv with an undeclared column loads as UTF-8, whatever the JVM's charset") {
+    val p = s"$tmp/non_ascii.csv"
+    new java.io.File(tmp).mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get(p),
+      "id,city,pop\n1,Zürich,421878\n2,Genève,203856\n3,Köln,1084831\n".getBytes("UTF-8"))
+    val df = Source.loadCsv(spark, p, Seq("city" -> SchemaType.Str))
+    assert(df.schema.map(f => f.name -> f.dataType) ==
+      Seq("id" -> IntegerType, "city" -> StringType, "pop" -> IntegerType))
+    assert(df.orderBy("id").collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSeq ==
+      Seq((1, "Zürich", 421878), (2, "Genève", 203856), (3, "Köln", 1084831)))
+  }
+
   test("quarantine load: bad rows captured raw, good rows typed, nothing lost") {
     val p = "/tmp/graft-test/quarantine.csv"
     val w = new java.io.PrintWriter(p)

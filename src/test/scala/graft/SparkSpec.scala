@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +11,29 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf0001 = "/root/testdata/sf0.001"
+
+  /** Jobs started while `body` runs. */
+  protected def jobsDuring[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val out = listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    })(body)
+    (out, n.get)
+  }
+
+  /** Runs `body` with `l` registered, and returns once every event `body`
+    * caused has reached `l` (Spark delivers them on its own thread).
+    */
+  protected def listening[T](l: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      ListenerBusAccess.drain(sc)
+      out
+    } finally sc.removeSparkListener(l)
+  }
 
   /** Write planted tables as parquet fixtures under `dir` and return it —
     * shared by the planted-ground-truth suites.
