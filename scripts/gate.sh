@@ -21,6 +21,8 @@ if [ $# -eq 0 ]; then
   # tee the summary so stamp_readme.py can pick up the real suite/test
   # counts (round-4 and round-5 both shipped stale hand-edited numbers)
   sbt -batch test | tee target/test-summary.txt
+  # the per-suite timing table (ScalaTest -oD durations), slowest first
+  python3 scripts/suite_times.py target/test-summary.txt
   python3 scripts/stamp_readme.py
 else
   rm -rf "$OUT_DIR"

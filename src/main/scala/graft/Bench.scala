@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * Sampling: the shared host has bursty multi-core CPU steal with degraded
   * windows that can last minutes — back-to-back retries of one query land
   * in the same window and both read slow. The suite therefore runs up to
-  * SPARK_GRAFT_PASSES (default 3) INTERLEAVED whole-suite passes and
+  * SPARK_GRAFT_PASSES (default 2) INTERLEAVED whole-suite passes and
   * reports the per-query MIN across passes: consecutive samples of the
   * same query are separated by a full suite pass (~minutes), so at least
   * one sample lands outside a degraded window with high probability.
@@ -22,9 +22,9 @@ import org.apache.spark.sql.SparkSession
   * round 6 (404 queries × 3 passes) exceeded it and was SIGKILLed with NO
   * summary line on stdout (BENCH_r06 `rc: 124, parsed: null`). Three
   * defenses, in depth:
-  *   1. a wall-clock deadline (SPARK_GRAFT_DEADLINE_SEC, default 900 s,
-  *      measured from main() entry): pass 1 always runs to completion so
-  *      every query gets at least one sample; passes 2+ and the noise
+  *   1. a wall-clock deadline (1240 s, measured from main() entry):
+  *      pass 1 always runs to completion so every query gets at least
+  *      one sample; passes 2+ and the noise
   *      re-probe stop starting new queries once the deadline passes, and
   *      the JSON reports `passes_done` so a reader knows the sampling depth;
   *   2. the compact summary line is printed after EVERY completed pass,
@@ -44,7 +44,7 @@ object Bench {
     val tStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - tStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
+    val passes = Knobs.positiveInt("SPARK_GRAFT_PASSES", sys.env.get("SPARK_GRAFT_PASSES"), 2)
     // Budget math (round-8, rehearsed): a quiet cold pass is ~585 s and a
     // cold-cache second pass costs about the same (the per-query
     // clearCache means pass 2 is not "warm"), so two passes land at
@@ -63,7 +63,7 @@ object Bench {
     // 540.5 s, contended = 577.9 s; both rehearsals finished 2 full
     // passes inside the deadline (BENCH_DETAIL_008/009), so the 1240 s
     // budget still carries the grown suite with margin.
-    val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_DEADLINE_SEC", "1240").toDouble
+    val deadlineSec = 1240.0
     // Absolute stop for ALL post-pass-1 work (pass-2 finish-out AND
     // re-probes): the external kill is ~1350-1500 s and startup is ~10 s,
     // so nothing may start past 1300 s. Two uses: (a) a pass that reaches
@@ -73,8 +73,7 @@ object Bench {
     // the counter's honesty margin; (b) re-probe budgets are clipped to
     // the cap (a full 180 s budget on top of a 1240 s deadline would
     // otherwise straddle the kill line).
-    val hardCapSec = sys.env.getOrElse("SPARK_GRAFT_HARDCAP_SEC", "1300").toDouble
-      .max(deadlineSec)
+    val hardCapSec = 1300.0
     val spark = Session.builder("graft-bench").getOrCreate()
     // ERROR, not WARN: bounded-domain window warnings × 400 queries × 3
     // passes flood the driver's combined-output tail buffer and can push
@@ -290,7 +289,7 @@ object Bench {
     //    the table dominates the total (a 9 s query has read 500 s under
     //    a burst). Re-probing just the K slowest queries buys most of
     //    min-of-N's fidelity at a fraction of a pass, inside its own
-    //    budget (SPARK_GRAFT_REPROBE_SEC, default 240 s) so the external
+    //    budget (180 s) so the external
     //    timeout stays safe.
     // 2. Spread re-probe — a wild spread across passes (max/min > 3× with
     //    a non-trivial min) earns one extra sample; if the host
@@ -301,7 +300,7 @@ object Bench {
     // this job and the remaining wall-clock margin is better left unspent
     // (it sits right next to the external kill line).
     if (passesDone < passes) {
-      val reprobeBudget = sys.env.getOrElse("SPARK_GRAFT_REPROBE_SEC", "180").toDouble
+      val reprobeBudget = 180.0
       // clipped to the hard cap — the budget exists for the EARLY-cut case
       // (pass 1 alone blew the deadline); after a late cut only the cap's
       // own margin is left, and that's the margin that keeps us alive

@@ -43,20 +43,6 @@ import org.apache.spark.sql.types._
   */
 object SimJoin {
 
-  /** Named intermediate frames, exposed for the stage-level perf probe
-    * (tools.ProbeSimJoin) — same single code path as [[jaccardJoin]].
-    */
-  private[graft] case class Stages(toks: DataFrame, prefixes: DataFrame,
-                                   candsRaw: DataFrame, cands: DataFrame,
-                                   result: DataFrame)
-
-  /** All pairs (id_a < id_b) with Jaccard(tokens_a, tokens_b) >= t.
-    * Output: (id_a, id_b, n_a, n_b, inter, uni, jaccard).
-    */
-  def jaccardJoin(df: DataFrame, idCol: String, textCol: String,
-                  threshold: Double): DataFrame =
-    build(df, idCol, textCol, threshold).result
-
   /** Exact asymmetric CONTAINMENT join: all DIRECTED pairs (a, b), a≠b,
     * with |A∩B| ≥ (num/den)·|A| — "document a's token set is mostly
     * inside b's": the quote/subset/boilerplate-inclusion detector that
@@ -127,7 +113,7 @@ object SimJoin {
     // byte-based coalescing would run it near-serial (guide §2)
     val cands = Par.fanOutPairs(candsRaw.distinct(), Seq("id_a", "id_b"))
     // sorted-fingerprint merge-count verify — same tradeoff and same
-    // rationale as jaccard's build() (hash + sort each doc's tokens once;
+    // rationale as jaccardJoin's (hash + sort each doc's tokens once;
     // the inlined intersection evaluations become cheap merge passes)
     val hToks = toks.withColumn("th",
       array_sort(transform(col("toks"), t => xxhash64(t))))
@@ -141,8 +127,11 @@ object SimJoin {
         (col("inter").cast(DoubleType) / col("n_a").cast(DoubleType)).as("containment"))
   }
 
-  private[graft] def build(df: DataFrame, idCol: String, textCol: String,
-                           threshold: Double): Stages = {
+  /** All pairs (id_a < id_b) with Jaccard(tokens_a, tokens_b) >= t.
+    * Output: (id_a, id_b, n_a, n_b, inter, uni, jaccard).
+    */
+  def jaccardJoin(df: DataFrame, idCol: String, textCol: String,
+                  threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, "jaccardJoin: threshold in (0, 1]")
     // NOTE: deliberately NOT persisted — re-tokenizing per consumer costs
     // less than what caching breaks: a persisted relation's in-memory
@@ -207,7 +196,7 @@ object SimJoin {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
     // the pre-verify distinct is LOAD-BEARING: deferring dedup to after
     // the verify filter was measured 9× slower at sf0.1 (72 s vs 7.8 s,
-    // tools.ProbeSimJoin) — without it every duplicate candidate drags
+    // round-4 stage probe) — without it every duplicate candidate drags
     // both full token arrays through the verify join. fanOutPairs: the
     // verify is per-PAIR CPU over byte-tiny pair rows — don't let AQE's
     // byte-based coalescing serialize it (r12 ProbeJobs: 90 s of task
@@ -232,13 +221,12 @@ object SimJoin {
     val withSets = cands
       .join(hToks.select(col("id").as("id_a"), col("th").as("t_a"), col("n").as("n_a")), "id_a")
       .join(hToks.select(col("id").as("id_b"), col("th").as("t_b"), col("n").as("n_b")), "id_b")
-    val result = withSets
+    withSets
       .withColumn("inter", graft.functions.VectorExprs.sortedInterCount(col("t_a"), col("t_b")))
       .withColumn("uni", col("n_a") + col("n_b") - col("inter"))
       .filter(col("uni") > 0 &&
         col("inter").cast(DoubleType) / col("uni").cast(DoubleType) >= threshold)
       .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"), col("inter"), col("uni"),
         (col("inter").cast(DoubleType) / col("uni").cast(DoubleType)).as("jaccard"))
-    Stages(toks, prefixes, candsRaw, cands, result)
   }
 }

@@ -158,14 +158,19 @@ object Sink {
 
   /** Exactly one parquet or orc file at `path`: these formats cannot be
     * concatenated, so the whole plan is coalesced to ONE task writing into
-    * a temp dir, and its part file is moved.
+    * a temp dir, and its part file is moved. `maxRecordsPerFile` 0 (no
+    * limit) overrides the session's `spark.sql.files.maxRecordsPerFile`,
+    * which would otherwise split that task's output over several files.
     */
   private def writeSingleFile(df: DataFrame, path: String, format: String): Unit = {
     val tmp = path + ".graft-tmp"
-    df.coalesce(1).write.mode(SaveMode.Overwrite).format(format).save(tmp)
-    val part = partFiles(Paths.get(tmp)).headOption
-      .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
-    moveToTarget(part, tmp, path)
+    df.coalesce(1).write.mode(SaveMode.Overwrite).format(format)
+      .option("maxRecordsPerFile", "0").save(tmp)
+    partFiles(Paths.get(tmp)) match {
+      case Vector(part) => moveToTarget(part, tmp, path)
+      case parts => throw new IllegalStateException(
+        s"expected one part file in $tmp, found ${parts.size}")
+    }
   }
 
   private def renderDates(df: DataFrame): DataFrame =

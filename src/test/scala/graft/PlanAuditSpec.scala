@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** SCALE.md §8c as an enforced regression test: an unpartitioned window
@@ -73,27 +74,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("no CartesianProduct outside the explicit cross-join surface") {
-    val offenders = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.keys.filterNot(_.startsWith("stream_")).foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sf0001)
-        def walk(p: SparkPlan): Unit = {
-          p match {
-            case _: org.apache.spark.sql.execution.joins.CartesianProductExec =>
-              if (!cartesianWhitelist.contains(name)) offenders += name
-            case _ =>
-          }
-          p.children.foreach(walk)
-          // QueryPlan.subqueries is type-erased: at the sparkPlan stage a
-          // runtime-filter subquery (e.g. the injected bloom_filter_agg)
-          // still holds a LOGICAL subtree, so descend only into physical ones
-          p.subqueries.asInstanceOf[Seq[Any]].foreach {
-            case s: SparkPlan => walk(s)
-            case _            => ()
-          }
-        }
-        walk(df.queryExecution.sparkPlan)
-      } catch { case _: Exception => () } // planning failures caught by the window test
+    // planning failures are caught by the window test
+    val offenders = QueryPlans.planned.collect {
+      case (name, p) if !cartesianWhitelist.contains(name) &&
+          QueryPlans.nodes(p.sparkPlan).exists(_.isInstanceOf[CartesianProductExec]) => name
     }
     assert(offenders.isEmpty,
       s"unexpected CartesianProduct in: ${offenders.distinct.mkString(", ")}")
@@ -154,56 +138,32 @@ class PlanAuditSpec extends SparkSpec {
       case _ => p.children.nonEmpty && p.children.forall(bounded)
     }
 
-    val offenders = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.keys.filterNot(_.startsWith("stream_")).foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sf0001)
-        def walk(p: SparkPlan): Unit = {
-          p match {
+    // planning failures are caught by the window test
+    val offenders = QueryPlans.planned.collect {
+      case (name, p) if !bnljAnchorWhitelist.contains(name) &&
+          QueryPlans.nodes(p.sparkPlan).exists {
             case j: BroadcastNestedLoopJoinExec =>
-              val build = j.buildSide match {
+              !bounded(j.buildSide match {
                 case BuildLeft  => j.left
                 case BuildRight => j.right
-              }
-              if (!bounded(build) && !bnljAnchorWhitelist.contains(name))
-                offenders += name
-            case _ =>
-          }
-          p.children.foreach(walk)
-          p.subqueries.asInstanceOf[Seq[Any]].foreach {
-            case s: SparkPlan => walk(s)
-            case _            => ()
-          }
-        }
-        walk(df.queryExecution.sparkPlan)
-      } catch { case _: Exception => () } // planning failures caught by the window test
+              })
+            case _ => false
+          } => name
     }
     assert(offenders.isEmpty,
       s"unbounded BroadcastNestedLoopJoin build side in: ${offenders.distinct.mkString(", ")}")
   }
 
   test("no unpartitioned WindowExec outside the bounded-domain whitelist") {
-    val offenders = scala.collection.mutable.ListBuffer.empty[String]
-    val skipped = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.keys.filterNot(_.startsWith("stream_")).foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sf0001)
-        def walk(p: SparkPlan): Unit = {
-          p match {
-            case w: WindowExec if w.partitionSpec.isEmpty =>
-              if (!boundedDomainWhitelist.contains(name)) offenders += name
-            case _ =>
-          }
-          p.children.foreach(walk)
-          p.subqueries.asInstanceOf[Seq[Any]].foreach {
-            case s: SparkPlan => walk(s)
-            case _            => () // pre-planned logical subquery (see above)
-          }
-        }
-        walk(df.queryExecution.sparkPlan)
-      } catch {
-        case e: Exception => skipped += s"$name (${e.getClass.getSimpleName})"
-      }
+    val skipped = QueryPlans.all.collect {
+      case (name, Left(e)) => s"$name (${e.getClass.getSimpleName})"
+    }
+    val offenders = QueryPlans.planned.collect {
+      case (name, p) if !boundedDomainWhitelist.contains(name) &&
+          QueryPlans.nodes(p.sparkPlan).exists {
+            case w: WindowExec => w.partitionSpec.isEmpty
+            case _             => false
+          } => name
     }
     assert(skipped.isEmpty, s"queries failed to plan: ${skipped.mkString(", ")}")
     assert(offenders.isEmpty,

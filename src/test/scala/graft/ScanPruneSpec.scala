@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.FileSourceScanExec
 
 /** Column-pruning audit, enforced: at 100 TB a scan that reads every
   * column of a wide table for a narrow projection is the single
@@ -44,40 +44,18 @@ class ScanPruneSpec extends SparkSpec {
   )
 
   test("every wide-table parquet scan prunes columns or documents why not") {
-    val offenders = scala.collection.mutable.ListBuffer.empty[String]
-    val triggered = scala.collection.mutable.Set.empty[(String, String)]
-    val skipped = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.keys.filterNot(_.startsWith("stream_")).foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sf0001)
-        def walk(p: SparkPlan): Unit = {
-          p match {
-            case scan: FileSourceScanExec =>
-              val table = scan.relation.location.rootPaths.headOption
-                .map(_.getName.stripSuffix(".parquet")).getOrElse("")
-              auditedWidths.get(table).foreach { width =>
-                if (scan.requiredSchema.length >= width) {
-                  if (fullRowWhitelist.contains((name, table)))
-                    triggered += ((name, table))
-                  else
-                    offenders += s"$name:$table(${scan.requiredSchema.length}/$width)"
-                }
-              }
-            case _ =>
-          }
-          p.children.foreach(walk)
-          // QueryPlan.subqueries is type-erased: runtime-filter subqueries
-          // can still hold LOGICAL subtrees at this stage (PlanAuditSpec §)
-          p.subqueries.asInstanceOf[Seq[Any]].foreach {
-            case s: SparkPlan => walk(s)
-            case _            => ()
-          }
-        }
-        walk(df.queryExecution.sparkPlan)
-      } catch {
-        case _: Exception => skipped += name // planning failures caught by PlanAuditSpec
-      }
-    }
+    // (query, table, columns read, width) of every full-width audited scan;
+    // planning failures are caught by PlanAuditSpec
+    val full = for {
+      (name, p) <- QueryPlans.planned
+      scan <- QueryPlans.nodes(p.sparkPlan).collect { case s: FileSourceScanExec => s }
+      table = scan.relation.location.rootPaths.headOption
+        .map(_.getName.stripSuffix(".parquet")).getOrElse("")
+      width <- auditedWidths.get(table) if scan.requiredSchema.length >= width
+    } yield (name, table, scan.requiredSchema.length, width)
+    val (allowed, offending) = full.partition { case (n, t, _, _) => fullRowWhitelist((n, t)) }
+    val triggered = allowed.map { case (n, t, _, _) => (n, t) }.toSet
+    val offenders = offending.map { case (n, t, read, width) => s"$n:$t($read/$width)" }
     assert(offenders.isEmpty,
       s"unpruned wide-table scans (query:table(read/width)): ${offenders.distinct.sorted.mkString(", ")}")
     val stale = fullRowWhitelist.diff(triggered)

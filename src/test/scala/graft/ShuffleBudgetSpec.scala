@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Shuffle-budget regression gate — the quantitative companion to
@@ -28,30 +27,13 @@ class ShuffleBudgetSpec extends SparkSpec {
 
   private val baselinePath = "src/test/resources/shuffle_budget.json"
 
-  private def countShuffles(p: SparkPlan): Int = {
-    var n = 0
-    def walk(q: SparkPlan): Unit = {
-      q match { case _: ShuffleExchangeExec => n += 1; case _ => }
-      q.children.foreach(walk)
-    }
-    walk(p)
-    n
-  }
-
   test("no query shuffles more than its committed budget") {
-    val counts = scala.collection.immutable.TreeMap.newBuilder[String, Int]
-    // shuffles are inserted by EnsureRequirements, which runs in the
-    // executedPlan preparations — and AQE would wrap the result in an
-    // opaque AdaptiveSparkPlanExec, so measure with AQE off
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try SparkEntry.queries.keys.filterNot(_.startsWith("stream_")).toSeq.sorted.foreach { name =>
-      try {
-        val plan = SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan
-        counts += name -> countShuffles(plan)
-      } catch { case _: Exception => () } // planning failures are PlanAuditSpec's job
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-    val got = counts.result()
+    // the pre-AQE executedPlan's main tree (QueryPlans); planning failures
+    // are PlanAuditSpec's job
+    val got = scala.collection.immutable.TreeMap.from(QueryPlans.planned.map { case (name, p) =>
+      name -> QueryPlans.nodes(p.executedPlan, subqueries = false)
+        .count(_.isInstanceOf[ShuffleExchangeExec])
+    })
     val f = new java.io.File(baselinePath)
     if (sys.env.contains("GRAFT_REGEN_SHUFFLE_BASELINE") || !f.exists()) {
       val json = got.map { case (k, v) => s"""  "$k": $v""" }

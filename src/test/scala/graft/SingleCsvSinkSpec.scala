@@ -80,6 +80,15 @@ class SingleCsvSinkSpec extends graft.SparkSpec {
       df.write.mode("overwrite").option("header", true).csv(dir)
       assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("part-")) == 16)
       assert(java.util.Arrays.equals(saved(df, "max-records"), want))
+      // the one-task parquet and orc single files keep every row too
+      Seq("parquet", "orc").foreach { format =>
+        val path = s"$tmp/max-records.$format"
+        val cols = df.columns.toSeq.map(_ -> ColumnDef(SchemaType.Str))
+        Sink.save(df, FileDef(path, format, FileSchema("t", cols)))
+        val ids = spark.read.format(format).load(path).select("id").collect()
+          .map(_.get(0).toString.toLong).sorted.toSeq
+        assert(ids == (1L to 40L), s"$format: ${ids.size} of 40 rows read back")
+      }
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
-  lazy val sf0001 = "/root/testdata/sf0.001"
+  lazy val sf0001 = SparkSpec.sf0001
 
   /** Jobs started while `body` runs. */
   protected def jobsDuring[T](body: => T): (T, Int) = {
@@ -48,6 +48,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  val sf0001 = "/root/testdata/sf0.001"
+
   lazy val session: SparkSession = {
     // 4 cores whatever the host: ShuffleBudgetSpec's baseline depends on it
     val s = Session.builder("graft-test", cores = 4)
