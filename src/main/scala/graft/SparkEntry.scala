@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.Ops
 import graft.plans._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
 
@@ -21,6 +21,12 @@ object SparkEntry {
 
   private[graft] def T(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
+
+  /** A daily series row's epoch day, None for the null-date group. The
+    * Holt queries sort that group last (as the oracle's row_number() OVER
+    * (ORDER BY d) does in DuckDB) and emit it with a null `d`.
+    */
+  private def epochDay(r: Row): Option[Int] = if (r.isNullAt(0)) None else Some(r.getInt(0))
 
   /** Scratch root for the persisted-ANN-index queries: deterministic per
     * (sf dir, index name) so every invocation overwrites its own prior
@@ -3761,10 +3767,10 @@ operations:
         .groupBy(col("o_orderdate").cast("date").as("d"))
         .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
         .select(datediff(col("d"), to_date(lit("1970-01-01"))).as("ed"), col("rev_c"))
-        .orderBy("ed")
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
+        .orderBy(col("ed").asc_nulls_last)
+        .collect().map(r => (epochDay(r), r.getLong(1)))
       require(daily.length >= 2, "q_holt: need at least 2 days")
-      val out = Array.newBuilder[(Int, Long, Double, Double)]
+      val out = Array.newBuilder[(Option[Int], Long, Double, Double)]
       var sPrev = daily(0)._2.toDouble
       var bPrev = daily(1)._2.toDouble - daily(0)._2.toDouble
       out += ((daily(0)._1, daily(0)._2, sPrev, bPrev))
@@ -3798,15 +3804,15 @@ operations:
         .groupBy(col("o_orderdate").cast("date").as("d"))
         .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
         .select(datediff(col("d"), to_date(lit("1970-01-01"))).as("ed"), col("rev_c"))
-        .orderBy("ed")
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
+        .orderBy(col("ed").asc_nulls_last)
+        .collect().map(r => (epochDay(r), r.getLong(1)))
       require(daily.length >= 15, "q_holt_winters: need at least 15 days")
       val m1 = daily.take(7).map(_._2).sum.toDouble / 7.0
       val m2 = daily.slice(7, 14).map(_._2).sum.toDouble / 7.0
       var sPrev = m1
       var bPrev = (m2 - m1) / 7.0
       val c = Array.tabulate(7)(k => daily(k)._2.toDouble - m1)
-      val out = Array.newBuilder[(Int, Long, Double, Double, Double)]
+      val out = Array.newBuilder[(Option[Int], Long, Double, Double, Double)]
       var i = 0
       while (i < daily.length) {
         val slot = i % 7

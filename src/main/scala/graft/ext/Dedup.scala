@@ -146,14 +146,6 @@ object Dedup {
 
   // ------------------------------------------------------------ MinHash
 
-  /** k-permutation MinHash signature over a shingle array — a single
-    * native-Expression pass per row (each shingle hashed once, k
-    * multiply-add permutations; see MinHashSigExpr). No explode, no
-    * shuffle, no per-permutation re-hash.
-    */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    Hashing.minhashSig(shingles, k)
-
   /** Estimated Jaccard from two signatures: fraction of agreeing positions. */
   def sigJaccard(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),

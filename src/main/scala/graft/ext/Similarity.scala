@@ -19,12 +19,6 @@ object Vectors {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Pack `nbits` random-hyperplane sign bits into a long bucket id
-    * (deterministic hash-derived hyperplanes).
-    */
-  def hyperplaneSignature(vec: Column, nbits: Int): Column =
-    element_at(graft.functions.VectorExprs.hyperplaneBuckets(vec, nbits, 1), 1)
-
   /** All `tables` LSH bucket ids (OR-construction) as an array<long>. */
   def hyperplaneBuckets(vec: Column, nbits: Int, tables: Int): Column =
     graft.functions.VectorExprs.hyperplaneBuckets(vec, nbits, tables)

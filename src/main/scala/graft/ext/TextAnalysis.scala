@@ -97,9 +97,6 @@ object TextAnalysis {
   def fingerprint(text: Column): Column =
     md5(trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9\\s]", ""), "\\s+", " ")))
 
-  /** 64-bit content hash (xxhash64) — cheap exact-dup key at scale. */
-  def contentHash(text: Column): Column = xxhash64(text)
-
   /** Top-k most frequent tokens across the corpus (vocabulary heavy
     * hitters). Explode → hash aggregate (map-side partial combine keeps
     * the shuffle at #distinct-tokens, not #token-occurrences) → global

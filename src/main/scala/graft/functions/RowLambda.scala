@@ -8,307 +8,40 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-/** INTERPRETED row-lambda fallback for `application` lambdas outside
-  * [[MiniLambda]]'s Column-compilable surface (reference application.py:19
-  * eval's arbitrary Python per row). This is the SURVEY §7.4 escape hatch:
-  * a per-row evaluator over the referenced input columns, packaged as a
-  * native Expression so it plugs into the plan like any other column
-  * (CodegenFallback — it interprets, it does not codegen; that is the
-  * price of arbitrary lambdas and exactly why it sits behind an explicit
-  * opt-in flag, `spark.graft.application.fallback=true`, with
-  * CompileError remaining the default feedback path).
+/** INTERPRETED backend for `application` lambdas outside [[MiniLambda]]'s
+  * Column-lowerable surface (reference application.py:19 eval's arbitrary
+  * Python per row). This is the SURVEY §7.4 escape hatch: it walks the
+  * same [[LambdaSyntax.Ast]] MiniLambda lowers, per row, over the
+  * referenced input columns, packaged as a native Expression so it plugs
+  * into the plan like any other column (CodegenFallback — it interprets,
+  * it does not codegen; that is the price of arbitrary lambdas and exactly
+  * why it sits behind an explicit opt-in flag,
+  * `spark.graft.application.fallback=true`, with CompileError remaining
+  * the default feedback path).
   *
   * The interpreter is DYNAMICALLY typed (Python semantics), which covers
-  * idioms the static Column compiler must reject: mixed-type conditional
-  * branches (`x if c else 0`), string repetition (`s * 3`), truthy
-  * `and`/`or` returning operands, no-separator `split()`, chained
-  * comparisons (`0 < x < 10`), `find`/`count`. The result column's Spark
-  * type is inferred by unifying branch types; irreconcilable branches
-  * unify to string with Python `str()` rendering.
+  * idioms the static lowering must reject: mixed-type conditional
+  * branches (`x if c else 0`), truthy `and`/`or` returning operands,
+  * lenient string + non-string concatenation, list literals, non-literal
+  * slice bounds. The result column's Spark type is inferred by unifying
+  * branch types; irreconcilable branches unify to string with Python
+  * `str()` rendering.
   */
 object RowLambda {
 
-  // ------------------------------------------------------------------ AST
-
-  sealed trait Ast extends Serializable
-  final case class Lit(v: Any) extends Ast
-  final case class ColRef(name: String) extends Ast
-  final case class Cond(c: Ast, t: Ast, f: Ast) extends Ast
-  final case class OrOp(a: Ast, b: Ast) extends Ast
-  final case class AndOp(a: Ast, b: Ast) extends Ast
-  final case class NotOp(a: Ast) extends Ast
-  final case class Cmp(op: String, a: Ast, b: Ast) extends Ast
-  final case class Bin(op: String, a: Ast, b: Ast) extends Ast
-  final case class Neg(a: Ast) extends Ast
-  final case class Method(target: Ast, name: String, args: Seq[Ast]) extends Ast
-  final case class Index(target: Ast, i: Ast) extends Ast
-  final case class Slice(target: Ast, lo: Option[Ast], hi: Option[Ast]) extends Ast
-  final case class InOp(item: Ast, coll: Ast, negated: Boolean) extends Ast
-  final case class IsNone(a: Ast, negated: Boolean) extends Ast
-  final case class Builtin(name: String, args: Seq[Ast]) extends Ast
-  final case class ListLit(items: Seq[Ast]) extends Ast
-
+  import LambdaSyntax._
   import org.apache.spark.sql.graftbridge.Bridge.{column => toCol, expression => toExpr}
 
   /** Parse + type-infer; returns the fallback Column. Throws
     * MiniLambda.CompileError on syntax errors (same feedback channel).
     */
-  def compile(fnStr: String, schema: StructType): Column = {
-    val (ast, names) = parse(fnStr, schema)
-    val dt = widen(infer(ast, schema))
-    toCol(RowLambdaExpr(names.map(n => toExpr(col(n))), names, ast, dt))
-  }
+  def compile(fnStr: String, schema: StructType): Column =
+    interpreted(LambdaSyntax.parse(fnStr, schema), schema)
 
-  private[functions] def parse(fnStr: String, schema: StructType): (Ast, Seq[String]) = {
-    val t = fnStr.trim
-    if (!t.startsWith("lambda"))
-      throw MiniLambda.CompileError(s"expected 'lambda <var>: <expr>', got: $fnStr")
-    val colon = t.indexOf(':')
-    if (colon < 0) throw MiniLambda.CompileError("lambda missing ':'")
-    val rowVar = t.substring("lambda".length, colon).trim
-    val p = new P(Tok.tokenize(t.substring(colon + 1)), rowVar, schema)
-    val ast = p.ternary()
-    p.end()
-    (ast, collectCols(ast).toSeq.sorted)
-  }
-
-  private def collectCols(a: Ast): Set[String] = a match {
-    case ColRef(n) => Set(n)
-    case Lit(_) => Set.empty
-    case Cond(c, t, f) => collectCols(c) ++ collectCols(t) ++ collectCols(f)
-    case OrOp(x, y) => collectCols(x) ++ collectCols(y)
-    case AndOp(x, y) => collectCols(x) ++ collectCols(y)
-    case NotOp(x) => collectCols(x)
-    case Cmp(_, x, y) => collectCols(x) ++ collectCols(y)
-    case Bin(_, x, y) => collectCols(x) ++ collectCols(y)
-    case Neg(x) => collectCols(x)
-    case Method(t, _, as) => collectCols(t) ++ as.flatMap(collectCols)
-    case Index(t, i) => collectCols(t) ++ collectCols(i)
-    case Slice(t, lo, hi) => collectCols(t) ++ lo.toSeq.flatMap(collectCols) ++ hi.toSeq.flatMap(collectCols)
-    case InOp(i, c, _) => collectCols(i) ++ collectCols(c)
-    case IsNone(x, _) => collectCols(x)
-    case Builtin(_, as) => as.flatMap(collectCols).toSet
-    case ListLit(is) => is.flatMap(collectCols).toSet
-  }
-
-  // ------------------------------------------------------------ tokenizer
-
-  private object Tok {
-    sealed trait T
-    final case class Ident(s: String) extends T
-    final case class Num(s: String) extends T
-    final case class Str(s: String) extends T
-    final case class Op(s: String) extends T
-
-    def tokenize(s: String): Vector[T] = {
-      val out = Vector.newBuilder[T]
-      var i = 0
-      while (i < s.length) {
-        val c = s(i)
-        if (c.isWhitespace) i += 1
-        else if (c.isDigit || (c == '.' && i + 1 < s.length && s(i + 1).isDigit)) {
-          val start = i
-          while (i < s.length && (s(i).isDigit || s(i) == '.' || s(i) == 'e' || s(i) == 'E' ||
-            ((s(i) == '+' || s(i) == '-') && i > start && (s(i - 1) == 'e' || s(i - 1) == 'E')))) i += 1
-          out += Num(s.substring(start, i))
-        } else if (c.isLetter || c == '_') {
-          val start = i
-          while (i < s.length && (s(i).isLetterOrDigit || s(i) == '_')) i += 1
-          out += Ident(s.substring(start, i))
-        } else if (c == '\'' || c == '"') {
-          val sb = new StringBuilder
-          var closed = false
-          i += 1
-          while (i < s.length && !closed) {
-            if (s(i) == '\\' && i + 1 < s.length) {
-              sb.append(s(i + 1) match {
-                case 'n' => '\n'; case 't' => '\t'; case 'r' => '\r'
-                case other => other
-              }); i += 2
-            } else if (s(i) == c) { closed = true; i += 1 }
-            else { sb.append(s(i)); i += 1 }
-          }
-          if (!closed) throw MiniLambda.CompileError(s"unterminated string literal")
-          out += Str(sb.toString)
-        } else {
-          val two = if (i + 1 < s.length) s.substring(i, i + 2) else ""
-          if (Set("==", "!=", "<=", ">=", "//", "**").contains(two)) { out += Op(two); i += 2 }
-          else if ("+-*/%<>()[],:.".indexOf(c) >= 0) { out += Op(c.toString); i += 1 }
-          else throw MiniLambda.CompileError(s"unexpected character '$c' in lambda body")
-        }
-      }
-      out.result()
-    }
-  }
-
-  // --------------------------------------------------------------- parser
-
-  private final class P(ts: Vector[Tok.T], rowVar: String, schema: StructType) {
-    import Tok._
-    private var pos = 0
-    private def peek: Option[T] = if (pos < ts.length) Some(ts(pos)) else None
-    private def next(): T = { val t = ts(pos); pos += 1; t }
-    private def acceptOp(o: String): Boolean = peek match {
-      case Some(Op(`o`)) => pos += 1; true; case _ => false
-    }
-    private def acceptIdent(w: String): Boolean = peek match {
-      case Some(Ident(`w`)) => pos += 1; true; case _ => false
-    }
-    private def expectOp(o: String): Unit =
-      if (!acceptOp(o)) throw MiniLambda.CompileError(s"expected '$o' at token $pos")
-    def end(): Unit =
-      if (pos < ts.length) throw MiniLambda.CompileError(s"trailing tokens from position $pos")
-
-    def ternary(): Ast = {
-      val t = orExpr()
-      if (acceptIdent("if")) {
-        val c = orExpr()
-        if (!acceptIdent("else")) throw MiniLambda.CompileError("conditional missing 'else'")
-        Cond(c, t, ternary())
-      } else t
-    }
-    private def orExpr(): Ast = {
-      var a = andExpr()
-      while (acceptIdent("or")) a = OrOp(a, andExpr())
-      a
-    }
-    private def andExpr(): Ast = {
-      var a = notExpr()
-      while (acceptIdent("and")) a = AndOp(a, notExpr())
-      a
-    }
-    private def notExpr(): Ast =
-      if (acceptIdent("not")) {
-        if (acceptIdent("in"))
-          throw MiniLambda.CompileError("'not in' needs a left operand")
-        NotOp(notExpr())
-      } else comparison()
-
-    private def comparison(): Ast = {
-      var a = addSub()
-      var result: Option[Ast] = None
-      var prev = a
-      var done = false
-      while (!done) peek match {
-        case Some(Op(o)) if Set("==", "!=", "<", ">", "<=", ">=").contains(o) =>
-          pos += 1
-          val b = addSub()
-          val link = Cmp(o, prev, b)
-          result = Some(result.map(AndOp(_, link)).getOrElse(link))
-          prev = b
-        case Some(Ident("in")) =>
-          pos += 1
-          val b = addSub()
-          val link = InOp(prev, b, negated = false)
-          result = Some(result.map(AndOp(_, link)).getOrElse(link)); prev = b
-        case Some(Ident("not")) =>
-          pos += 1
-          if (!acceptIdent("in")) throw MiniLambda.CompileError("expected 'in' after 'not'")
-          val b = addSub()
-          val link = InOp(prev, b, negated = true)
-          result = Some(result.map(AndOp(_, link)).getOrElse(link)); prev = b
-        case Some(Ident("is")) =>
-          pos += 1
-          val neg = acceptIdent("not")
-          if (!acceptIdent("None")) throw MiniLambda.CompileError("only 'is [not] None' is supported")
-          val link = IsNone(prev, neg)
-          result = Some(result.map(AndOp(_, link)).getOrElse(link))
-        case _ => done = true
-      }
-      result.getOrElse(a)
-    }
-    private def addSub(): Ast = {
-      var a = mulDiv()
-      var done = false
-      while (!done) peek match {
-        case Some(Op(o @ ("+" | "-"))) => pos += 1; a = Bin(o, a, mulDiv())
-        case _ => done = true
-      }
-      a
-    }
-    private def mulDiv(): Ast = {
-      var a = unary()
-      var done = false
-      while (!done) peek match {
-        case Some(Op(o @ ("*" | "/" | "%" | "//"))) => pos += 1; a = Bin(o, a, unary())
-        case _ => done = true
-      }
-      a
-    }
-    private def unary(): Ast =
-      if (acceptOp("-")) Neg(unary()) else postfix()
-
-    private def postfix(): Ast = {
-      var a = atom()
-      var done = false
-      while (!done) peek match {
-        case Some(Op(".")) =>
-          pos += 1
-          next() match {
-            case Ident(m) =>
-              expectOp("(")
-              val args = Vector.newBuilder[Ast]
-              if (!acceptOp(")")) {
-                args += ternary()
-                while (acceptOp(",")) args += ternary()
-                expectOp(")")
-              }
-              a = Method(a, m, args.result())
-            case t => throw MiniLambda.CompileError(s"expected method name after '.', got $t")
-          }
-        case Some(Op("[")) =>
-          pos += 1
-          if (acceptOp(":")) { // [:hi]
-            val hi = if (acceptOp("]")) None else { val h = ternary(); expectOp("]"); Some(h) }
-            a = Slice(a, None, hi)
-          } else {
-            val first = ternary()
-            if (acceptOp(":")) {
-              val hi = if (acceptOp("]")) None else { val h = ternary(); expectOp("]"); Some(h) }
-              a = Slice(a, Some(first), hi)
-            } else { expectOp("]"); a = Index(a, first) }
-          }
-        case _ => done = true
-      }
-      a
-    }
-    private def atom(): Ast = next() match {
-      case Num(s) =>
-        if (s.contains('.') || s.toLowerCase.contains('e')) Lit(s.toDouble) else Lit(s.toLong)
-      case Str(s) => Lit(s)
-      case Op("(") => val e = ternary(); expectOp(")"); e
-      case Op("[") =>
-        val items = Vector.newBuilder[Ast]
-        if (!acceptOp("]")) {
-          items += ternary()
-          while (acceptOp(",")) items += ternary()
-          expectOp("]")
-        }
-        ListLit(items.result())
-      case Ident("True") => Lit(true)
-      case Ident("False") => Lit(false)
-      case Ident("None") => Lit(null)
-      case Ident(v) if v == rowVar =>
-        expectOp("[")
-        next() match {
-          case Str(colName) =>
-            expectOp("]")
-            if (!schema.fieldNames.contains(colName))
-              throw MiniLambda.CompileError(s"column '$colName' not found in schema")
-            ColRef(colName)
-          case t => throw MiniLambda.CompileError(s"expected column-name string in $rowVar[...], got $t")
-        }
-      case Ident(f) if Set("str", "int", "float", "bool", "len", "abs", "round", "min", "max").contains(f) =>
-        expectOp("(")
-        val args = Vector.newBuilder[Ast]
-        if (!acceptOp(")")) {
-          args += ternary()
-          while (acceptOp(",")) args += ternary()
-          expectOp(")")
-        }
-        Builtin(f, args.result())
-      case t => throw MiniLambda.CompileError(s"unexpected token $t")
-    }
+  /** The interpreted Column for an already parsed lambda. */
+  private[graft] def interpreted(ast: Ast, schema: StructType): Column = {
+    val names = LambdaSyntax.columns(ast)
+    toCol(RowLambdaExpr(names.map(n => toExpr(col(n))), names, ast, widen(infer(ast, schema))))
   }
 
   // ------------------------------------------------------- type inference
@@ -676,7 +409,7 @@ object RowLambda {
   * interpreter and the result converts back to Catalyst form.
   */
 case class RowLambdaExpr(children: Seq[Expression], names: Seq[String],
-                         ast: RowLambda.Ast, resultType: DataType)
+                         ast: LambdaSyntax.Ast, resultType: DataType)
     extends Expression with CodegenFallback {
   override def dataType: DataType = resultType
   override def nullable: Boolean = true

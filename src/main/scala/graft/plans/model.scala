@@ -43,9 +43,6 @@ final case class ColumnDef(tpe: SchemaType, description: Option[String] = None)
 /** models.py:26-28 — ordered: output column order follows declaration order. */
 final case class FileSchema(name: String, columns: Seq[(String, ColumnDef)]) {
   def columnNames: Seq[String] = columns.map(_._1)
-  def typeOf(c: String): Option[SchemaType] = columns.find(_._1 == c).map(_._2.tpe)
-  def toStruct: StructType =
-    StructType(columns.map { case (n, d) => StructField(n, d.tpe.spark, nullable = true) })
 }
 
 /** models.py:32-35. format ∈ csv|json|parquet, default csv; orc is a

@@ -53,4 +53,41 @@ class EdgeCaseSpec extends SparkSpec {
       .select(graft.functions.VectorExprs.norm(col("v"))).head().getDouble(0)
     assert(math.abs(d - 5.0) < 1e-12)
   }
+
+  /** Writes `orders.parquet` (o_orderdate, o_totalprice) under a temp dir;
+    * a None date is a null o_orderdate.
+    */
+  private def ordersDir(name: String, rows: Seq[(Option[String], Double)]): String = {
+    val dir = s"${sys.props("java.io.tmpdir")}/graft-edge/$name"
+    import spark.implicits._
+    rows.toDF("d", "o_totalprice")
+      .select(to_date(col("d")).as("o_orderdate"), col("o_totalprice"))
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    dir
+  }
+
+  /** A Holt query's rows, its date column rendered as a string (null kept). */
+  private def holtRows(query: String, dir: String): Seq[Seq[Any]] = {
+    val out = SparkEntry.queries(query)(spark, dir)
+    out.withColumn("d", col("d").cast("string")).collect().map(_.toSeq).toSeq
+  }
+
+  test("q_holt keeps a null o_orderdate group, last, as the oracle orders it") {
+    val dir = ordersDir("holt-null", Seq(Some("1995-01-01") -> 10.0,
+      Some("1995-01-02") -> 20.0, None -> 5.0, Some("1995-01-03") -> 40.0))
+    assert(holtRows("q_holt", dir) == Seq(
+      Seq("1995-01-01", 1000L, 1000.0, 1000.0),
+      Seq("1995-01-02", 2000L, 2000.0, 1000.0),
+      Seq("1995-01-03", 4000L, 3500.0, 1250.0),
+      Seq(null, 500L, 2625.0, 187.5)))
+  }
+
+  test("q_holt_winters keeps a null o_orderdate group last; the dated rows are unchanged") {
+    val days = (1 to 15).map(i => Some(f"1995-01-$i%02d") -> (10.0 * i + i % 3))
+    val withNull = holtRows("q_holt_winters", ordersDir("hw-null", days :+ (None -> 5.0)))
+    val without = holtRows("q_holt_winters", ordersDir("hw-no-null", days))
+    assert(withNull.length == 16)
+    assert(withNull.last.head == null && withNull.last(1) == 500L)
+    assert(withNull.take(15) == without)
+  }
 }

@@ -28,6 +28,12 @@ class MiniLambdaSpec extends SparkSpec {
     assert(evalOne("lambda r: r['n'] / 2") == Seq(1.5, 5.0))
     assert(evalOne("lambda r: r['n'] // 2") == Seq(1L, 5L))
     assert(evalOne("lambda r: r['n'] % 2") == Seq(1L, 0L))
+    // Python modulo takes the divisor's sign (Spark's % is the remainder)
+    assert(evalOne("lambda r: -7 % 3") == Seq(2L, 2L))
+    assert(evalOne("lambda r: r['n'] % -4") == Seq(-1L, -2L))
+    assert(evalOne("lambda r: -r['x'] % 2") == Seq(1.5, 1.5))
+    // exponent literals are ordinary double literals
+    assert(evalOne("lambda r: r['x'] * 1e3") == Seq(2500.0, 500.0))
   }
 
   test("str()/int()/float() conversions and string + concat") {
@@ -53,6 +59,9 @@ class MiniLambdaSpec extends SparkSpec {
   test("round/abs/min/max") {
     assert(evalOne("lambda r: round(r['x'] * 2, 1)") == Seq(5.0, 1.0))
     assert(evalOne("lambda r: max(r['n'], 5)") == Seq(5L, 10L))
+    // negative ndigits round to tens/hundreds, half-even like CPython
+    assert(evalOne("lambda r: round(r['x'] * 100, -2)") == Seq(200.0, 0.0))
+    assert(evalOne("lambda r: round(r['n'], -1)") == Seq(0L, 10L))
   }
 
   test("membership and None tests: in / not in / is None / is not None") {
@@ -96,6 +105,8 @@ class MiniLambdaSpec extends SparkSpec {
     assert(evalOne("lambda r: 3 <= r['n'] <= 10") == Seq(true, true))
     assert(evalOne("lambda r: 1 < 3 < 5") == Seq(true, true))
     assert(evalOne("lambda r: 3 < 3 <= 3") == Seq(false, false))
+    // membership chains too: a in b in c ≡ (a in b) and (b in c)
+    assert(evalOne("lambda r: 'l' in r['txt'] in 'say hello world'") == Seq(true, false))
   }
 
   test("count/find/isdigit/isalpha/ljust/rjust/strip-chars (CPython parity)") {

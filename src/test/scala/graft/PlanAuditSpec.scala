@@ -21,20 +21,12 @@ class PlanAuditSpec extends SparkSpec {
     "q_pr_curve",        // ≤50 score values
     "q_rolling_corr",    // day domain
     "q_bollinger",       // day domain
-    "q_stl",             // day domain
     "q_runs_test",       // day domain + value histogram
     "ev_flap",           // hour domain
     "ev_funnel_time",    // gap-value histogram
     "q_spearman",        // two value histograms
     "q_lorenz",          // 10-row decile table
-    "q_mad", "q_bins", "q_winsor", "q_wmedian", "q_histogram",
-    "q_abc", "q_gini", "q_cusum", "q_acf", "q_xcorr", "q_holt",
-    "q_holt_winters", "ev_markov_steady", "ev_seasonality", "q_yoy",
-    "q_theilsen", "q_ks", "q_benford", "q_drift", "ev_growth",
-    "ev_interp", "ev_wau", "ev_dau_mau", "ev_trailing_h", "q_moving",
-    "dd_lsh_planner", "ta_zipf", "q_declist", "ev_backtest",
-    "ev_seqmine", "ev_survival", "ev_hazard", "q_auc", "sk_incremental",
-    "ta_langid_eval", "ta_nbc_eval", "q_ntile", "q_pct_rank",
+    "q_cusum", "ta_zipf", "ev_hazard", "q_auc",
     "ta_curriculum",  // 4-row band-offset table only
     "ta_apportion",   // per-source remainder rows (#sources)
     "ta_quota_sample",// per-source quota rows (#sources)
@@ -42,7 +34,6 @@ class PlanAuditSpec extends SparkSpec {
     "q_tcloseness",   // 10-band global distribution frame
     "q_fdr",          // ≤25-row brand panel (BH rank + suffix-min)
     "q_changepoint",  // day-domain prefix sums
-    "q_croston",      // day-domain occurrence indexing
     "srch_ndcg",      // 10-row retrieved frame
     "srch_ap",        // 10-row retrieved frame
     "q_rolling_median", // day-domain 7-value collect
@@ -53,16 +44,15 @@ class PlanAuditSpec extends SparkSpec {
     "q_dw",           // day-domain residual lag
     "q_granger",      // day-domain lag pair
     "q_monotonicity", // bounded quantity panel lag
-    "q_isotonic",     // ≤50-row score-domain prefix sums
     "q_auc_delong",   // bounded score-domain prefix sums (q_auc's shape)
     "q_conformal"     // ≤50-row |score| histogram cumulative (conformal q̂)
   )
 
-  /** Queries allowed a CartesianProductExec: the reference's own
-    * `how: cross` bind, and brute-force scorers whose one side is a
-    * bounded anchor set kept deliberately un-broadcast.
+  /** Queries allowed a CartesianProductExec. None plans one today: the
+    * reference's `how: cross` bind (q_bind_cross) plans a
+    * BroadcastNestedLoopJoin instead.
     */
-  private val cartesianWhitelist = Set("q_bind_cross")
+  private val cartesianWhitelist = Set.empty[String]
 
   test("the oracle-less bucket stays EMPTY: queries and oracleSql keys match") {
     val q = SparkEntry.queries.keySet
@@ -73,14 +63,25 @@ class PlanAuditSpec extends SparkSpec {
       s"orphan oracle entries: ${o.diff(q).toSeq.sorted.mkString(", ")}")
   }
 
+  /** Fails on every query whose plan trips the audit outside `whitelist`,
+    * and on every whitelist entry whose plan no longer trips it: a stale
+    * entry would let its query grow the pattern without a failing test.
+    * Planning failures are caught by the window test.
+    */
+  private def audit(whitelist: Set[String], listName: String, offenderMsg: String)(
+      trips: SparkPlan => Boolean): Unit = {
+    val triggered = QueryPlans.planned.collect { case (name, p) if trips(p.sparkPlan) => name }.toSet
+    val unplanned = QueryPlans.all.collect { case (name, Left(_)) => name }.toSet
+    val offenders = triggered -- whitelist
+    assert(offenders.isEmpty, s"$offenderMsg: ${offenders.toSeq.sorted.mkString(", ")}")
+    val stale = whitelist -- triggered -- unplanned
+    assert(stale.isEmpty, s"stale $listName entries: ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
   test("no CartesianProduct outside the explicit cross-join surface") {
-    // planning failures are caught by the window test
-    val offenders = QueryPlans.planned.collect {
-      case (name, p) if !cartesianWhitelist.contains(name) &&
-          QueryPlans.nodes(p.sparkPlan).exists(_.isInstanceOf[CartesianProductExec]) => name
+    audit(cartesianWhitelist, "cartesianWhitelist", "unexpected CartesianProduct in") { p =>
+      QueryPlans.nodes(p).exists(_.isInstanceOf[CartesianProductExec])
     }
-    assert(offenders.isEmpty,
-      s"unexpected CartesianProduct in: ${offenders.distinct.mkString(", ")}")
   }
 
   /** Queries allowed a BroadcastNestedLoopJoin whose broadcast side is NOT
@@ -103,7 +104,6 @@ class PlanAuditSpec extends SparkSpec {
     "geo_knn",          // probe cohort (bounded anchor set)
     "ta_nbc",           // per-class prior table (#classes = #sources rows)
     "ta_nbc_eval",      // per-class prior table (#classes rows)
-    "ta_bootstrap",     // replicate-index frame (B = 40 literal rows)
     "q_cramers_v",      // contingency margin (flag x status domain)
     "q_kendall",        // day-panel pair frame (bounded day domain)
     "q_mannkendall",    // day-panel pair frame (bounded day domain)
@@ -138,35 +138,30 @@ class PlanAuditSpec extends SparkSpec {
       case _ => p.children.nonEmpty && p.children.forall(bounded)
     }
 
-    // planning failures are caught by the window test
-    val offenders = QueryPlans.planned.collect {
-      case (name, p) if !bnljAnchorWhitelist.contains(name) &&
-          QueryPlans.nodes(p.sparkPlan).exists {
-            case j: BroadcastNestedLoopJoinExec =>
-              !bounded(j.buildSide match {
-                case BuildLeft  => j.left
-                case BuildRight => j.right
-              })
-            case _ => false
-          } => name
+    audit(bnljAnchorWhitelist, "bnljAnchorWhitelist",
+        "unbounded BroadcastNestedLoopJoin build side in") { p =>
+      QueryPlans.nodes(p).exists {
+        case j: BroadcastNestedLoopJoinExec =>
+          !bounded(j.buildSide match {
+            case BuildLeft  => j.left
+            case BuildRight => j.right
+          })
+        case _ => false
+      }
     }
-    assert(offenders.isEmpty,
-      s"unbounded BroadcastNestedLoopJoin build side in: ${offenders.distinct.mkString(", ")}")
   }
 
   test("no unpartitioned WindowExec outside the bounded-domain whitelist") {
     val skipped = QueryPlans.all.collect {
       case (name, Left(e)) => s"$name (${e.getClass.getSimpleName})"
     }
-    val offenders = QueryPlans.planned.collect {
-      case (name, p) if !boundedDomainWhitelist.contains(name) &&
-          QueryPlans.nodes(p.sparkPlan).exists {
-            case w: WindowExec => w.partitionSpec.isEmpty
-            case _             => false
-          } => name
-    }
     assert(skipped.isEmpty, s"queries failed to plan: ${skipped.mkString(", ")}")
-    assert(offenders.isEmpty,
-      s"unpartitioned windows outside the whitelist: ${offenders.distinct.mkString(", ")}")
+    audit(boundedDomainWhitelist, "boundedDomainWhitelist",
+        "unpartitioned windows outside the whitelist") { p =>
+      QueryPlans.nodes(p).exists {
+        case w: WindowExec => w.partitionSpec.isEmpty
+        case _             => false
+      }
+    }
   }
 }
