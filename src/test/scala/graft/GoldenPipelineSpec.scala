@@ -4,6 +4,9 @@ import graft.plans._
 import graft.sources.{Sink, Source}
 import org.apache.spark.sql.functions._
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+
 /** End-to-end: the corrected enriched_orders pipeline (semantics of
   * /root/reference/pipelines/enriched_output_def.yaml with current column
   * names — see SURVEY §5.2 staleness notes) over the reference's own demo
@@ -17,11 +20,13 @@ class GoldenPipelineSpec extends SparkSpec {
 
   private val ref = "/root/reference"
 
-  private val configYaml =
+  /** The reference config.yaml's inputs and enriched output, reading the
+    * three input CSVs from directory `in`. */
+  private def configYaml(in: String) =
     s"""
 inputs:
   orders_input:
-    path: $ref/input_folder/orders.csv
+    path: $in/orders.csv
     file_schema:
       name: OrdersSchema
       columns:
@@ -32,7 +37,7 @@ inputs:
         quantity: { type: integer }
         unit_price: { type: string }
   customers_input:
-    path: $ref/input_folder/customers.csv
+    path: $in/customers.csv
     file_schema:
       name: CustomersSchema
       columns:
@@ -42,7 +47,7 @@ inputs:
         country: { type: string }
         signup_date: { type: string }
   products_input:
-    path: $ref/input_folder/products.csv
+    path: $in/products.csv
     file_schema:
       name: ProductsSchema
       columns:
@@ -152,8 +157,34 @@ operations:
   value: UNKNOWN
 """
 
+  /** Input directory for the bind test, which reads only column names:
+    * the reference's input_folder where it exists, else a temp directory
+    * holding orders.csv and customers.csv with config.yaml's headers and
+    * FIXTURES.md §A's sample rows. */
+  private def bindInputDir(): String = {
+    val refIn = s"$ref/input_folder"
+    if (new java.io.File(s"$refIn/customers.csv").isFile) refIn
+    else {
+      val dir = Files.createTempDirectory("golden-bind")
+      dir.toFile.deleteOnExit()
+      Seq(
+        "orders.csv" -> Seq(
+          "order_id,customer_id,order_date,product_name,quantity,unit_price",
+          "101,1,2024-01-15,Laptop Pro,1,\"$1050.00\""),
+        "customers.csv" -> Seq(
+          "customer_id,customer_name,city,country,signup_date",
+          "1,Alice Smith,New York,USA,2023-05-10")
+      ).foreach { case (name, lines) =>
+        val f = dir.resolve(name)
+        Files.write(f, lines.mkString("", "\n", "\n").getBytes(UTF_8))
+        f.toFile.deleteOnExit()
+      }
+      dir.toString
+    }
+  }
+
   test("corrected enriched pipeline matches the reference golden byte-for-semantics") {
-    val config = Yaml.parseConfig(configYaml)
+    val config = Yaml.parseConfig(configYaml(s"$ref/input_folder"))
     val flow = Yaml.parseFlow(flowYaml)
 
     val src = Source.load(spark, config.inputMap(flow.source))
@@ -198,7 +229,7 @@ operations:
   }
 
   test("bind right-key is dropped, collisions get _right suffix repeatedly until unique") {
-    val config = Yaml.parseConfig(configYaml)
+    val config = Yaml.parseConfig(configYaml(bindInputDir()))
     val src = Source.load(spark, config.inputMap("orders_input"))
     val bindOp = Bind("customers_input",
       Seq("customer_id" -> SchemaType.Int64), "customer_id", "customer_id", "left",
