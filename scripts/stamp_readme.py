@@ -4,8 +4,9 @@
 Round-4 and round-5 both shipped stale hand-edited counts in README
 (the judge flagged it twice); this makes the stamp mechanical:
 
-  queries  — counted from SparkEntry.scala's `"name" -> ((s, dir)` query
-             lambdas (verified == the driver's CORRECTNESS key count)
+  queries  — counted from the `"name" -> Query(` registry entries in
+             src/main/scala/graft/families/ (verified == the driver's
+             CORRECTNESS key count)
   tests    — parsed from the last full `sbt test` log if gate.sh saved
              one (target/test-summary.txt), else the stamp keeps the
              previous value
@@ -18,13 +19,17 @@ import json, os, re, sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 README = os.path.join(ROOT, "README.md")
-ENTRY = os.path.join(ROOT, "src/main/scala/graft/SparkEntry.scala")
+FAMILIES = os.path.join(ROOT, "src/main/scala/graft/families")
 TESTSUM = os.path.join(ROOT, "target/test-summary.txt")
 BENCH = os.path.join(ROOT, "target/bench-sf0.1.json")
 
 def query_count():
-    src = open(ENTRY, encoding="utf-8").read()
-    return len(re.findall(r'"[a-z0-9_]+" -> \(\(s, dir\)', src))
+    n = 0
+    for f in sorted(os.listdir(FAMILIES)):
+        if f.endswith(".scala"):
+            src = open(os.path.join(FAMILIES, f), encoding="utf-8").read()
+            n += len(re.findall(r'"[a-z0-9_]+" -> Query\(', src))
+    return n
 
 def test_counts():
     """(suites, tests) from a saved `sbt test` log, or (None, None)."""

@@ -1,14 +1,15 @@
 package graft
 
-import graft.operators.Ops
-import graft.plans._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.families._
+import graft.plans.FileDef
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.immutable.ListMap
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY §2 (+ extended/beyond-reference operators), each with a DuckDB
-  * oracle in `oracleSql` over the same parquet tables.
+  * oracle in `oracleSql` over the same parquet tables. Both are views over
+  * one registry: each family object in `graft.families` defines a query
+  * and its oracle together.
   *
   * Determinism rules used throughout (driver hash-compares values):
   *  - keys included so every row is unique;
@@ -19,118 +20,30 @@ import scala.collection.immutable.ListMap
   */
 object SparkEntry {
 
-  private[graft] def T(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** A daily series row's epoch day, None for the null-date group. The
-    * Holt queries sort that group last (as the oracle's row_number() OVER
-    * (ORDER BY d) does in DuckDB) and emit it with a null `d`.
-    */
-  private def epochDay(r: Row): Option[Int] = if (r.isNullAt(0)) None else Some(r.getInt(0))
-
-  /** Scratch root for the persisted-ANN-index queries: deterministic per
-    * (sf dir, index name) so every invocation overwrites its own prior
-    * run, outside the repo so round tooling never mistakes it for source.
-    */
-  private[graft] def annIndexPath(dir: String, name: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft-ann/${new java.io.File(dir).getName}/$name"
-
-  /** Oracle-validity guard for the LSH-ledger queries: lshLedgerOracleSql
-    * models NEITHER probePairs' `maxPostings` boilerplate-bucket cap nor
-    * its `pushLimit` fallback. The fallback is result-identical
-    * (spec-proven), but the cap DROPS pairs — provably inert only while
-    * the ledger cohort holds fewer docs than the cap, since no band
-    * bucket can exceed the cohort size. Fail loudly if a grown fixture
-    * ever crosses that line, instead of silently diverging from the
-    * oracle. One count over the (tiny, filtered) cohort per query run.
-    */
-  private def requireLedgerOracleValid(ledgerCohort: org.apache.spark.sql.DataFrame,
-                                       maxPostings: Int = 2000): Unit = {
-    val n = ledgerCohort.count()
-    require(n < maxPostings,
-      s"LSH-ledger oracle invalid: cohort has $n docs >= maxPostings=$maxPostings — " +
-        "probePairs' bucket cap could drop pairs the oracle keeps; raise the cap " +
-        "in the query or model it in lshLedgerOracleSql")
+  private lazy val registry: ListMap[String, Query] = {
+    val all = Seq(RelationalQueries.entries, DataQualityQueries.entries,
+      TimeSeriesQueries.entries, StatisticsQueries.entries, ModelQueries.entries,
+      TextQueries.entries, EventQueries.entries, SimilarityQueries.entries,
+      DedupQueries.entries, StreamQueries.entries, MultimodalQueries.entries,
+      SketchQueries.entries, SearchQueries.entries, GraphQueries.entries,
+      RecQueries.entries, EntityQueries.entries, GeoQueries.entries).flatten
+    val byName = ListMap(all: _*)
+    require(byName.size == all.size, "a query name is defined twice in graft.families")
+    byName
   }
 
-  /** Normalize the events `ts` column to a session-UTC TIMESTAMP whatever
-    * the fixture's physical type (the driver has shipped both): a
-    * TIMESTAMP(NANOS) parquet is read as a nanosecond long (legacy conf)
-    * and narrowed ns→µs by integer division — the same truncation DuckDB
-    * applies; TIMESTAMP_NTZ / TIMESTAMP pass through a cast that is
-    * value-preserving because the session zone is pinned to UTC.
-    */
-  private[graft] def normalizeTs(df: DataFrame): DataFrame =
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ => df.withColumn("ts", col("ts").cast("timestamp"))
-    }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, q) => name -> q.build }
 
-  private[graft] def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(T(s, dir, "events"))
-  }
+  def oracleSql: Map[String, String] = registry.map { case (name, q) => name -> q.oracle }
 
-  private def dirBytes(f: java.io.File): Long =
-    if (f.isFile) f.length
-    else Option(f.listFiles).map(_.map(dirBytes).sum).getOrElse(0L)
+  private[graft] def T(s: SparkSession, dir: String, name: String): DataFrame = Shared.T(s, dir, name)
 
-  /** Shuffle/state-store partition policy for the streaming queries:
-    * sized to the streamed DATA VOLUME (~32 MB of source per partition),
-    * floored at 1 and capped at 4× cluster parallelism, overridable via
-    * SPARK_GRAFT_STREAM_PARTS. The session default
-    * (`shuffle.partitions` = cpus) is the wrong coupling for micro-batch
-    * state: every stateful operator instantiates one state store PER
-    * shuffle partition PER micro-batch, so partitions ∝ cores makes tiny
-    * batches SLOWER on more cores (the r11 driver measured stream_join
-    * 0.45× and the stateful-ingest family 0.6-0.8× going 8→32 cores) —
-    * and a fixed core count is equally wrong at 100 TB/day volumes,
-    * where the cap keeps per-partition state bounded. AQE cannot do this
-    * for streams (coalescing is disabled for stateful plans precisely
-    * because the store count is pinned at first start), so the policy
-    * must be explicit.
-    */
-  private[graft] def streamShufflePartitions(s: SparkSession, dir: String,
-                                             table: String, minParts: Int): Int =
-    Knobs.positiveInt("SPARK_GRAFT_STREAM_PARTS", sys.env.get("SPARK_GRAFT_STREAM_PARTS"), {
-      val bytes = dirBytes(new java.io.File(s"$dir/$table.parquet"))
-      val byData = bytes / (32L << 20) + 1
-      byData.min(s.sparkContext.defaultParallelism.toLong * 4).toInt
-        .max(minParts).max(1)
-    })
+  private[graft] def events(s: SparkSession, dir: String): DataFrame = Shared.events(s, dir)
 
-  /** Run `body` (stream assembly through awaitTermination) under the
-    * streaming partition policy, restoring the session value after. The
-    * conf must cover query START (the stream clones the session conf on
-    * its own thread), hence the whole-body scope.
-    *
-    * `minParts` floors the policy for COMPUTE-bound micro-batches: the
-    * volume term sizes state stores, but a stream whose per-batch plan
-    * does corpus-scale CPU through its shuffles (stream_nbc's token ×
-    * class scoring join) needs cluster-width exchanges regardless of how
-    * few bytes the source holds — the r12 A/B measured stream_nbc
-    * 5.7 s → 14.3 s under the volume-only policy (a 13 s single-partition
-    * sort-merge of the exploded token rows) and back under the floor.
-    */
-  private def withStreamShuffle[T](s: SparkSession, dir: String,
-                                   table: String, minParts: Int = 1)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      streamShufflePartitions(s, dir, table, minParts).toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private[graft] def inputs(dir: String): Map[String, FileDef] = RelationalQueries.inputs(dir)
 
-  private val tableNames = Seq("region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** All testdata tables as engine inputs (parquet FileDefs, self-described
-    * schemas) so `bind`/`set` can resolve named right sides.
-    */
-  private[graft] def inputs(dir: String): Map[String, FileDef] =
-    tableNames.map(n => n -> FileDef(s"$dir/$n.parquet", "parquet", FileSchema(n, Nil))).toMap
-
-  // ------------------------------------------------------------ flagship
+  private[graft] def pipInside(df: DataFrame): DataFrame = GeoQueries.pipInside(df)
 
   /** Flagship: a full YAML flow through the engine (bind + casting +
     * application + switching + concatenation + arithmetic + comparison +
@@ -138,13440 +51,5 @@ object SparkEntry {
     * rows>0.
     */
   def entry(spark: SparkSession): DataFrame =
-    pipelineQuery(spark, "/root/testdata/sf0.001")
-
-  private val flagshipFlow =
-    """
-source: orders
-operations:
-- operation_type: bind
-  right_file_path: customer
-  right_schema_columns: {}
-  left_on: o_custkey
-  right_on: c_custkey
-  how: left
-  columns_to_add: [c_name]
-- operation_type: casting
-  output_column: order_date
-  input_column: o_orderdate
-  target_type: date
-- operation_type: arithmetic
-  output_column: double_price
-  input_columns: [o_totalprice, o_totalprice]
-  operator: '+'
-- operation_type: comparison
-  output_column: big_order
-  input_column: o_totalprice
-  operator: '>'
-  value: 100000.0
-- operation_type: concatenation
-  output_column: status_priority
-  input_columns: [o_orderstatus, o_orderpriority]
-  separator: '-'
-- operation_type: switching
-  output_column: status_label
-  switch_column: o_orderstatus
-  mapping:
-    O: o_orderpriority
-  default_value: CLOSED
-- operation_type: assignation
-  output_column: engine
-  value: graft
-- operation_type: equality
-  output_column: customer_name
-  input_column: c_name
-- operation_type: application
-  output_column: priority_norm
-  input_columns: [o_orderpriority]
-  function_str: 'lambda r: r[''o_orderpriority''].replace(''-'', ''_'').lower()'
-- operation_type: select
-  columns: [o_orderkey, o_custkey, order_date, double_price, big_order,
-            status_priority, status_label, engine, customer_name, priority_norm]
-"""
-
-  private def pipelineQuery(s: SparkSession, dir: String): DataFrame = {
-    val flow = Yaml.parseFlow(flagshipFlow)
-    Runner.applyAll(s, T(s, dir, flow.source), flow.operations, inputs(dir))
-  }
-
-  // ------------------------------------------------------------- queries
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = ListMap(
-
-    // ---- SURVEY §2.1 column transforms ----
-
-    "q_equality" -> ((s, dir) => {
-      val r = Ops.equality(T(s, dir, "lineitem"), Equality("l_quantity", Some("qty_copy")))
-      r.select("l_orderkey", "l_linenumber", "qty_copy")
-    }),
-
-    "q_concatenation" -> ((s, dir) => {
-      val r = Ops.concatenation(T(s, dir, "lineitem"),
-        Concatenation(Seq("l_returnflag", "l_linestatus"), "-", Some("flag_status")))
-      r.select("l_orderkey", "l_linenumber", "flag_status")
-    }),
-
-    "q_application" -> ((s, dir) => {
-      val r = Ops.application(T(s, dir, "part"),
-        Application(Seq("p_name"), "lambda r: r['p_name'].replace(' ', '_').upper()", Some("p_norm")))
-      r.select("p_partkey", "p_norm")
-    }),
-
-    "q_application_fallback" -> ((s, dir) => {
-      // a DYNAMICALLY-typed lambda MiniLambda's static Column compiler
-      // rejects (mixed string/int conditional branches, string
-      // repetition): runs through the interpreted RowLambda fallback
-      // behind its explicit opt-in flag; result renders via Python str().
-      // The flag is read when the column is built, so it is set only for
-      // the build and restored after: the shared session never keeps it.
-      val flag = "spark.graft.application.fallback"
-      val prev = s.conf.getOption(flag)
-      s.conf.set(flag, "true")
-      val r = try Ops.application(T(s, dir, "part"),
-        Application(Seq("p_name", "p_size"),
-          "lambda r: r['p_name'].split(' ')[0] * 2 if r['p_size'] > 25 else len(r['p_name'])",
-          Some("p_dyn")))
-      finally prev.fold(s.conf.unset(flag))(s.conf.set(flag, _))
-      r.select("p_partkey", "p_dyn")
-    }),
-
-    "q_switching" -> ((s, dir) => {
-      val r = Ops.switching(T(s, dir, "orders"),
-        Switching("o_orderstatus", Seq(("O", "o_orderpriority"), ("F", "o_orderstatus")),
-          None, Some("OTHER"), Some("status_label")))
-      r.select("o_orderkey", "status_label")
-    }),
-
-    "q_assignation" -> ((s, dir) => {
-      val r = Ops.assignation(T(s, dir, "lineitem"),
-        Assignation(java.lang.Integer.valueOf(42), Some("const_col")))
-      r.select("l_orderkey", "l_linenumber", "const_col")
-    }),
-
-    "q_casting" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-      val r1 = Ops.casting(li, Casting("l_shipdate", SchemaType.Dt, Some("ship_date")))
-      val r2 = Ops.casting(r1, Casting("l_quantity", SchemaType.Int64, Some("qty_int")))
-      val r3 = Ops.casting(r2, Casting("l_orderkey", SchemaType.Str, Some("okey_str")))
-      r3.select("l_orderkey", "l_linenumber", "ship_date", "qty_int", "okey_str")
-    }),
-
-    "q_arithmetic" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-      val r1 = Ops.arithmetic(li, Arithmetic(Seq("l_extendedprice", "l_discount"), "*", Some("disc_amt")))
-      val r2 = Ops.arithmetic(r1, Arithmetic(Seq("l_extendedprice", "l_quantity"), "/", Some("unit_price")))
-      val r3 = Ops.arithmetic(r2, Arithmetic(Seq("l_quantity", "l_linenumber"), "+", Some("qty_plus_line")))
-      r3.select("l_orderkey", "l_linenumber", "disc_amt", "unit_price", "qty_plus_line")
-    }),
-
-    "q_comparison" -> ((s, dir) => {
-      val r = Ops.comparison(T(s, dir, "lineitem"),
-        Comparison("l_quantity", ">", java.lang.Integer.valueOf(25), Some("big_qty")))
-      r.select("l_orderkey", "l_linenumber", "big_qty")
-    }),
-
-    // ---- SURVEY §2.2 multi-table / reshaping ----
-
-    "q_bind" -> ((s, dir) => {
-      val r = Ops.bind(s, T(s, dir, "orders"),
-        Bind("customer", Nil, "o_custkey", "c_custkey", "inner", Seq("c_name", "c_mktsegment")),
-        inputs(dir))
-      r.select("o_orderkey", "o_custkey", "o_totalprice", "c_name", "c_mktsegment")
-    }),
-
-    "q_bind_outer" -> ((s, dir) => {
-      // full-outer with key coalescing; region↔nation keys overlap partially
-      val r = Ops.bind(s, T(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey"),
-        Bind("region", Nil, "n_regionkey", "r_regionkey", "outer", Seq("r_name")), inputs(dir))
-      r.select("n_nationkey", "n_name", "n_regionkey", "r_name")
-    }),
-
-    "q_bind_cross" -> ((s, dir) => {
-      // how=cross ignores keys; right key column is kept (bind.py parity)
-      Ops.bind(s, T(s, dir, "nation"),
-        Bind("region", Nil, "n_nationkey", "r_regionkey", "cross", Seq("r_name")),
-        inputs(dir))
-    }),
-
-    "q_fold" -> ((s, dir) => {
-      Ops.fold(T(s, dir, "part"),
-        Fold(Seq("p_partkey"), Seq("p_brand", "p_type", "p_size"), "key", "value"))
-    }),
-
-    "q_unfold" -> ((s, dir) => {
-      // (index,key) must be unique for `first`-pivot determinism (the
-      // reference has the same caveat, unfold.py:34) — pre-aggregate.
-      val li = T(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"))
-        .agg(max(col("l_quantity")).as("qty"))
-      Ops.unfold(li, Unfold(Seq("l_orderkey", "l_linenumber"), "l_returnflag", "qty"))
-    }),
-
-    // ---- pipeline-level: full YAML flow through the engine ----
-
-    "q_pipeline" -> ((s, dir) => pipelineQuery(s, dir)),
-
-    // ---- extended: relational operators absent from the reference ----
-
-    "q_agg" -> ((s, dir) => {
-      // TPC-H Q1 shape with scaled-integer monetary sums (determinism note
-      // in the object scaladoc); quantity sums are exact as integral doubles
-      T(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"),
-          sum(round(col("l_extendedprice") * 100).cast("long")).as("sum_base_c"),
-          sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000).cast("long")).as("sum_disc_c"),
-          count(lit(1)).as("n"))
-    }),
-
-    "q_rollup" -> ((s, dir) => {
-      // hierarchical subtotals: (flag, status), (flag), () — one pass
-      Ops.aggregate(T(s, dir, "lineitem"), AggregateOp(
-        Seq("l_returnflag", "l_linestatus"),
-        Seq("sum_qty" -> ("sum", "l_quantity"), "n" -> ("count", "*")),
-        mode = "rollup"))
-    }),
-
-    "q_pct_rank" -> ((s, dir) => {
-      // percent_rank/cume_dist are exact rational divisions — identical
-      // IEEE results on both engines given the same deterministic order
-      val o = T(s, dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")
-      val r1 = Ops.windowOp(o, WindowOp(Seq("o_orderpriority"),
-        Seq(("o_totalprice", true), ("o_orderkey", true)), "percent_rank", None, Some("pct")))
-      Ops.windowOp(r1, WindowOp(Seq("o_orderpriority"),
-        Seq(("o_totalprice", true), ("o_orderkey", true)), "cume_dist", None, Some("cd")))
-    }),
-
-    "q_topk_group" -> ((s, dir) => {
-      // grouped top-3 via the native partial top-k aggregate: bounded
-      // map-side heaps, shuffle ships ≤k rows per partition per key —
-      // never the whole table (a window row_number would)
-      val o = T(s, dir, "orders")
-      o.groupBy(col("o_orderpriority"))
-        .agg(graft.functions.TopKAgg.topK(3, col("o_totalprice"), col("o_orderkey"),
-          struct(col("o_orderkey"), col("o_totalprice"))).as("top"))
-        .select(col("o_orderpriority"), explode(col("top")).as("r"))
-        .select(col("o_orderpriority"),
-          col("r.o_orderkey").as("o_orderkey"),
-          col("r.o_totalprice").as("o_totalprice"))
-    }),
-
-    "q_topk" -> ((s, dir) => {
-      Ops.sortOp(T(s, dir, "orders").select("o_orderkey", "o_totalprice"),
-        SortOp(Seq(("o_totalprice", false), ("o_orderkey", true)), Some(100)))
-    }),
-
-    "q_window" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select("l_suppkey", "l_orderkey", "l_linenumber", "l_shipdate")
-      Ops.windowOp(li, WindowOp(Seq("l_suppkey"),
-        Seq(("l_shipdate", true), ("l_orderkey", true), ("l_linenumber", true)),
-        "row_number", None, Some("rn")))
-    }),
-
-    "q_distinct" -> ((s, dir) => {
-      Ops.distinctOp(T(s, dir, "lineitem").select("l_returnflag", "l_linestatus"), DistinctOp(Nil))
-    }),
-
-    "q_semi_join" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-      val bigParts = T(s, dir, "part").filter(col("p_size") > 40)
-      li.join(bigParts, li("l_partkey") === bigParts("p_partkey"), "left_semi")
-        .select("l_orderkey", "l_linenumber", "l_partkey")
-    }),
-
-    "q_anti_join" -> ((s, dir) => {
-      val c = T(s, dir, "customer")
-      val o = T(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-    }),
-
-    "q_bloom_join" -> ((s, dir) => {
-      // semi-join reduction: broadcast Bloom of the selective dim's key
-      // set prunes the fact scan BEFORE the shuffle (codegen'd probe);
-      // no false negatives + real join after ⇒ result is exactly the
-      // plain join, so the oracle is the plain SQL join
-      val cust = T(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-        .select("c_custkey", "c_name")
-      ext.BloomPrune.prunedJoin(T(s, dir, "orders"), cust,
-        "o_custkey", "c_custkey", expectedItems = 100000)
-        .select("o_orderkey", "o_custkey", "c_name")
-    }),
-
-    "q_union" -> ((s, dir) => {
-      val n = T(s, dir, "nation").select(col("n_nationkey").cast("long").as("k"), col("n_name").as("name"))
-      val r = T(s, dir, "region").select(col("r_regionkey").cast("long").as("k"), col("r_name").as("name"))
-      n.unionByName(r)
-    }),
-
-    // ---- extended: deduplication (LLM-training-data operators) ----
-
-    "dd_exact" -> ((s, dir) => {
-      // exact dedup on the bag-of-words fingerprint — finds the planted
-      // reordered-copy clusters in documents
-      ext.Dedup.exactSummary(T(s, dir, "documents"),
-        ext.Dedup.wordSetFingerprint(col("text")), col("doc_id"))
-    }),
-
-    "dd_exact_rows" -> ((s, dir) => {
-      // representative full rows (min doc_id per fingerprint)
-      ext.Dedup.exactDedup(T(s, dir, "documents"),
-        Seq(ext.Dedup.wordSetFingerprint(col("text"))), col("doc_id"))
-        .select("doc_id", "lang", "source", "n_chars")
-    }),
-
-    "dd_minhash" -> ((s, dir) => {
-      ext.Dedup.minhashPairs(T(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    "dd_simhash" -> ((s, dir) => {
-      graft.functions.Hashing.register(s)
-      ext.Dedup.simhashPairs(T(s, dir, "documents"), "doc_id", "text", maxHamming = 8)
-    }),
-
-    "dd_ngram" -> ((s, dir) => {
-      ext.Dedup.ngramJaccardPairs(T(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    "dd_minhash_dedup" -> ((s, dir) => {
-      // TRANSITIVE dedup: pair edges → connected components → keep the
-      // min-id doc per cluster. Edge-wise removal (drop any doc pairing
-      // with a smaller id) over-keeps on chains a~b~c with no (a,c) edge;
-      // clusterDedup is the production-correct form.
-      val docs = T(s, dir, "documents")
-      ext.Graph.clusterDedup(docs, "doc_id",
-        ext.Dedup.minhashPairs(docs, "doc_id", "text"))
-        .select("doc_id", "lang", "source")
-    }),
-
-    "dd_report" -> ((s, dir) => {
-      // dedup IMPACT report: per-source document counts and how many the
-      // transitive minhash dedup removes — the governance rollup a 100 TB
-      // curation run publishes with its output (which sources shrink, by
-      // how much); composes the components pipeline with one aggregation
-      val docs = T(s, dir, "documents")
-      val kept = ext.Graph.clusterDedup(docs, "doc_id",
-        ext.Dedup.minhashPairs(docs, "doc_id", "text")).select(col("doc_id"))
-      docs.join(kept.withColumn("kept", lit(1L)), Seq("doc_id"), "left")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("kept").isNull, 1L).otherwise(0L)).as("n_dups_removed"))
-    }),
-
-    "dd_incremental" -> ((s, dir) => {
-      // incremental-ingest dedup: an incoming batch (doc_id ≥ 250) checked
-      // against the EXISTING corpus's fingerprint ledger (ids/fps only —
-      // the historical text is never re-read) plus first-wins dedup
-      // within the batch. The anti-join + min-id shape is what a daily
-      // 100 TB ingest runs against its cumulative ledger table.
-      val d = T(s, dir, "documents").withColumn("fp", md5(col("text")))
-      val existing = d.filter(col("doc_id") < 250).select(col("fp")).distinct()
-      val incoming = d.filter(col("doc_id") >= 250)
-      val firstPerFp = incoming.groupBy("fp").agg(min("doc_id").as("doc_id"))
-      incoming.join(existing, Seq("fp"), "left_anti")
-        .join(firstPerFp, Seq("fp", "doc_id"))
-        .select(col("doc_id"), col("fp"))
-    }),
-
-    "dd_semantic" -> ((s, dir) => {
-      // SemDeDup: k-means cells over embeddings + within-cell cosine +
-      // transitive min-id keep — catches paraphrase/translation dups text
-      // hashing can't see. Fixed-point Lloyd training makes the whole
-      // pipeline DuckDB-replayable (unrolled iterations, recursive
-      // components); SemanticSpec holds the exact ground truth too.
-      ext.Semantic.semDedup(T(s, dir, "embeddings"), "vec_id", "embedding",
-        threshold = 0.45, cells = 16)
-        .select("vec_id")
-    }),
-
-    "dd_embed" -> ((s, dir) => {
-      ext.Dedup.embeddingDupPairs(T(s, dir, "embeddings"), "vec_id", "embedding",
-        threshold = 0.45)
-    }),
-
-    "dd_components" -> ((s, dir) => {
-      // transitive duplicate-cluster labeling: run distributed connected
-      // components (large-star/small-star) over a deterministic edge set —
-      // consecutive doc_ids sharing a language chain into runs, so the
-      // result exercises multi-hop transitivity while staying exactly
-      // DuckDB-expressible (gaps-and-islands oracle, no recursion)
-      val d = T(s, dir, "documents")
-      val a = d.select((col("doc_id") + 1).as("nxt"),
-        col("doc_id").as("src"), col("lang").as("lang_a"))
-      val b = d.select(col("doc_id").as("nxt"),
-        col("doc_id").as("dst"), col("lang").as("lang_b"))
-      val edges = a.join(b, Seq("nxt"))
-        .where(col("lang_a") === col("lang_b")).select("src", "dst")
-      ext.Graph.componentsFor(d.select("doc_id"), "doc_id", edges)
-    }),
-
-    // ---- extended: similarity search ----
-
-    "sim_topk" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      ext.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding", 10)
-    }),
-
-    "sim_lid" -> ((s, dir) => {
-      // local intrinsic dimensionality (MLE of Amsaleg et al., KDD
-      // 2015) at each standard query point: LID ≈ −k / Σ ln(d_i/d_k)
-      // over the k nearest cosine distances — the embedding-geometry
-      // audit (high LID ⇒ the neighborhood is noise-dimensional and
-      // ANN recall will suffer there). Rides the exact brute-force
-      // top-10 (bounded-heap shuffle); distances 1 − cos reuse the
-      // bit-identical dot products, each ln rounded once to micro
-      // (ta_entropy discipline), duplicate-distance guards NULL out
-      // degenerate neighborhoods in both engines.
-      val emb = T(s, dir, "embeddings")
-      val knn = ext.Similarity.bruteForceTopK(emb,
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding", 10)
-      val dk = knn.filter(col("rank") === 10)
-        .select(col("query_id"), (lit(1.0) - col("score")).as("dk"))
-      knn.join(broadcast(dk), "query_id")
-        .select(col("query_id"),
-          when(col("score") < 1.0 && col("dk") > 0.0,
-            round(log((lit(1.0) - col("score")) / col("dk")) * 1e6).cast("long"))
-            .as("lnr_micro"))
-        .groupBy("query_id")
-        .agg(count(col("lnr_micro")).as("k"), sum("lnr_micro").as("s_micro"))
-        .select(col("query_id"), col("k"), col("s_micro"),
-          expr("""CASE WHEN s_micro < 0
-                 THEN CAST((k * 1000000000) div (-s_micro) AS BIGINT)
-                 ELSE NULL END""").as("lid_milli"))
-    }),
-
-    "sim_mips" -> ((s, dir) => {
-      // maximum-inner-product top-k (dot-product retrieval scoring —
-      // magnitude-aware, distinct from sim_topk's cosine); brute
-      // baseline with the same broadcast + bounded-heap shuffle shape
-      val emb = T(s, dir, "embeddings")
-      ext.Similarity.mipsTopK(emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding", 10)
-    }),
-
-    "sim_topk_ivf" -> ((s, dir) => {
-      // trained-centroid IVF: k-means cells + nProbe probing (FAISS
-      // IVF-Flat shape as DataFrame ops); fixed-point Lloyd training +
-      // fixed-order float scoring → full DuckDB hash-match (unrolled
-      // iterations); IvfSpec additionally proves nProbe=k == brute force
-      val emb = T(s, dir, "embeddings")
-      val cents = ext.IvfIndex.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val index = ext.IvfIndex.assign(emb, "vec_id", "embedding", cents)
-      ext.IvfIndex.topK(index, emb.filter(col("vec_id") < 8), "vec_id", "embedding",
-        cents, k = 10, nProbe = 3)
-    }),
-
-    "sim_ivf_recall" -> ((s, dir) => {
-      // recall@10 of the IVF tier vs exact brute force — the same
-      // accept/reject eval row sim_recall (LSH) and sim_graph_recall
-      // (graph) carry, completing the per-tier recall ladder: this is
-      // the number that justifies nProbe=3 before an index ships.
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val bf = ext.Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val cents = ext.IvfIndex.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val index = ext.IvfIndex.assign(emb, "vec_id", "embedding", cents)
-      val ann = ext.IvfIndex.topK(index, q, "vec_id", "embedding",
-          cents, k = 10, nProbe = 3)
-        .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
-      val hits = bf.join(ann,
-          col("query_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-      q.select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / lit(10.0)).as("recall_at_10"))
-    }),
-
-    "sim_ivf_persisted" -> ((s, dir) => {
-      // the persisted-index serving path a 100 TB corpus actually runs:
-      // train + assign ONCE, write the inverted lists Hive-partitioned by
-      // cell (+ centroids alongside), then RE-OPEN from disk and probe —
-      // the probe's static `cell IN (…)` predicate prunes unprobed cell
-      // directories at planning time (AnnIndexSpec proves the pruning on
-      // the scan), so query cost is O(probed lists), not O(index). Same
-      // train/probe parameters as sim_topk_ivf ⇒ byte-identical results,
-      // so the existing full-replay oracle hash-checks the whole
-      // write → open → probe loop.
-      val emb = T(s, dir, "embeddings")
-      val cents = ext.IvfIndex.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val path = annIndexPath(dir, "ivf_full")
-      ext.AnnIndex.write(
-        ext.IvfIndex.assign(emb, "vec_id", "embedding", cents), cents, path)
-      ext.AnnIndex.probeTopK(s, path, emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", k = 10, nProbe = 3)
-    }),
-
-    "sim_ivf_incremental" -> ((s, dir) => {
-      // incremental ingest against a persisted index: train on the BASE
-      // cohort only (even vec_ids), persist its lists, then APPEND the
-      // delta cohort (odd vec_ids) assigned under the FROZEN centroids —
-      // no retrain, no rewrite of existing lists, O(delta) ingest (the
-      // FAISS add-after-train contract). The probe then reads the merged
-      // index from disk; the oracle replays k-means-on-evens +
-      // assign-everything exactly.
-      val emb = T(s, dir, "embeddings")
-      val base = emb.filter(col("vec_id") % 2 === 0)
-      val delta = emb.filter(col("vec_id") % 2 === 1)
-      val cents = ext.IvfIndex.train(base, "vec_id", "embedding", k = 8, iters = 2)
-      val path = annIndexPath(dir, "ivf_incr")
-      ext.AnnIndex.write(
-        ext.IvfIndex.assign(base, "vec_id", "embedding", cents), cents, path)
-      ext.AnnIndex.append(delta, "vec_id", "embedding", path)
-      ext.AnnIndex.probeTopK(s, path, emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", k = 10, nProbe = 3)
-    }),
-
-    "sim_ivf_retrain" -> ((s, dir) => {
-      // index MAINTENANCE retrain — the acted-on half of the drift story
-      // sim_ivf_stats detects: build on the even-vec_id cohort, append the
-      // odd cohort under the FROZEN quantizer (sim_ivf_incremental's
-      // state: lists assigned by stale centroids), then RETRAIN on the
-      // index's own stored vectors and rewrite both tiers as one new
-      // generation (single atomic root-pointer commit — probes never pair
-      // new lists with old centroids). Training is deterministic (md5
-      // init over stored ids + integer-grid Lloyd), so append-then-retrain
-      // CONVERGES bit-for-bit to the one-shot build on the full corpus —
-      // the probe shares sim_ivf_persisted's full-replay oracle verbatim
-      // (the convergence law, like dd_lsh_incremental ≡ dd_lsh_persisted).
-      val emb = T(s, dir, "embeddings")
-      val base = emb.filter(col("vec_id") % 2 === 0)
-      val delta = emb.filter(col("vec_id") % 2 === 1)
-      val cents0 = ext.IvfIndex.train(base, "vec_id", "embedding", k = 8, iters = 2)
-      val path = annIndexPath(dir, "ivf_retrain")
-      ext.AnnIndex.write(
-        ext.IvfIndex.assign(base, "vec_id", "embedding", cents0), cents0, path)
-      ext.AnnIndex.append(delta, "vec_id", "embedding", path)
-      ext.AnnIndex.retrain(s, path, k = 8, iters = 2)
-      ext.AnnIndex.probeTopK(s, path, emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", k = 10, nProbe = 3)
-    }),
-
-    "sim_ivf_forget" -> ((s, dir) => {
-      // the erasure path against a persisted index: tombstone a cohort
-      // (vec_id % 7 == 0) — O(deleted) manifest commit, no rewrite — and
-      // probe. Deleted vectors stop being NEIGHBORS immediately (open()'s
-      // broadcast anti-join feeds every consumer); the raw table still
-      // supplies the query set, exactly like a user whose data was erased
-      // can still issue queries. The oracle replays the full IVF build
-      // with the tombstoned cohort excluded from the index side only; the
-      // next retrain/compaction physically drops the rows (AnnIndexSpec
-      // proves purge + clear).
-      val emb = T(s, dir, "embeddings")
-      val cents = ext.IvfIndex.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val path = annIndexPath(dir, "ivf_forget")
-      ext.AnnIndex.write(
-        ext.IvfIndex.assign(emb, "vec_id", "embedding", cents), cents, path)
-      ext.AnnIndex.delete(s, path, emb.filter(col("vec_id") % 7 === 0).select("vec_id"))
-      ext.AnnIndex.probeTopK(s, path, emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", k = 10, nProbe = 3)
-    }),
-
-    "stream_ivf_ingest" -> ((s, dir) => withStreamShuffle(s, dir, "embeddings") {
-      // STREAMING index maintenance — the live-ingest shape of
-      // sim_ivf_incremental: the persisted IVF index absorbs micro-batches
-      // through foreachBatch → AnnIndex.append under the FROZEN persisted
-      // centroids. Cell assignment is stateless and per-row, and appends
-      // only add files, so the on-disk index CONVERGES to the batch-append
-      // index whatever the micro-batch boundaries — the final probe shares
-      // sim_ivf_incremental's oracle verbatim (streaming ≡ batch for index
-      // builds, proven by hash, like stream_nbc ≡ ta_nbc). The base write
-      // (SaveMode.Overwrite, static partition-overwrite) clears any prior
-      // run's lists, and AvailableNow + a fresh temp checkpoint reprocesses
-      // the full delta, so the query is rerun-deterministic.
-      val emb = T(s, dir, "embeddings")
-      val base = emb.filter(col("vec_id") % 2 === 0)
-      val cents = ext.IvfIndex.train(base, "vec_id", "embedding", k = 8, iters = 2)
-      val path = annIndexPath(dir, "ivf_stream")
-      ext.AnnIndex.write(
-        ext.IvfIndex.assign(base, "vec_id", "embedding", cents), cents, path)
-      val stream = s.readStream.schema(emb.schema)
-        .parquet(s"$dir/[e]mbeddings.parquet")
-        .filter(col("vec_id") % 2 === 1)
-      val q = stream.writeStream
-        .foreachBatch((batch: DataFrame, _: Long) =>
-          ext.AnnIndex.append(batch, "vec_id", "embedding", path))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ext.AnnIndex.probeTopK(s, path, emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", k = 10, nProbe = 3)
-    }),
-
-    "dd_lsh_persisted" -> ((s, dir) => {
-      // persisted near-dup LEDGER — the dedup analog of sim_ivf_persisted:
-      // band the HISTORICAL corpus once, write it bkey-range-sorted, then
-      // check an incoming batch against the re-opened ledger without
-      // re-reading any historical text (the FineWeb/RefinedWeb daily-
-      // ingest shape). The probe pushes the batch's bucket keys into the
-      // ledger scan (`bkey IN …` + tight row-group stats ⇒ O(matched
-      // postings), LshIndexSpec proves the pruning); the oracle replays
-      // sig + banding for both cohorts and crosses them.
-      val d = T(s, dir, "documents")
-      val path = annIndexPath(dir, "lsh_ledger")
-      val cohort = d.filter(col("doc_id") < 250)
-      requireLedgerOracleValid(cohort)
-      ext.LshIndex.write(cohort, "doc_id", "text", path)
-      ext.LshIndex.probePairs(s, path, d.filter(col("doc_id") >= 250),
-        "doc_id", "text", threshold = 0.5)
-    }),
-
-    "dd_lsh_incremental" -> ((s, dir) => {
-      // incremental ledger ingest: build on the first cohort, APPEND the
-      // second under the ledger's FROZEN stored params (no rebuild — O(delta)
-      // files only), then probe. Banding is stateless per-row under frozen
-      // params and parquet append only adds files, so append-then-probe
-      // CONVERGES to dd_lsh_persisted's one-shot build — the oracle is
-      // shared verbatim (the convergence proof, like stream_ivf_ingest ≡
-      // sim_ivf_incremental).
-      val d = T(s, dir, "documents")
-      val path = annIndexPath(dir, "lsh_ledger_incr")
-      requireLedgerOracleValid(d.filter(col("doc_id") < 250)) // build + append
-      ext.LshIndex.write(d.filter(col("doc_id") < 150), "doc_id", "text", path)
-      ext.LshIndex.append(d.filter(col("doc_id") >= 150 && col("doc_id") < 250),
-        "doc_id", "text", path)
-      ext.LshIndex.probePairs(s, path, d.filter(col("doc_id") >= 250),
-        "doc_id", "text", threshold = 0.5)
-    }),
-
-    "dd_lsh_stats" -> ((s, dir) => {
-      // ledger health report, read back from the PERSISTED artifact: the
-      // per-band posting/bucket occupancy an ingest pipeline monitors for
-      // boilerplate-bucket drift (max_bucket creeping toward the probe's
-      // maxPostings cap = the point where the cap starts costing recall)
-      // and for banding skew — the sim_ivf_stats of the dedup ledger.
-      // Two mergeable hash aggregates over ids-only postings; no text.
-      val d = T(s, dir, "documents")
-      val path = annIndexPath(dir, "lsh_ledger_stats")
-      ext.LshIndex.write(d.filter(col("doc_id") < 250), "doc_id", "text", path)
-      ext.LshIndex.openBands(s, path)
-        .groupBy("band", "bkey").agg(count(lit(1)).as("sz"))
-        .groupBy("band").agg(
-          sum("sz").as("n_postings"),
-          count(lit(1)).as("n_buckets"),
-          max("sz").as("max_bucket"),
-          sum(when(col("sz") === 1, 1L).otherwise(0L)).as("n_singletons"))
-    }),
-
-    "stream_lsh_ingest" -> ((s, dir) => withStreamShuffle(s, dir, "documents") {
-      // STREAMING ledger maintenance — the live-ingest shape of
-      // dd_lsh_incremental: the persisted band ledger absorbs micro-batches
-      // through foreachBatch → LshIndex.append under the ledger's FROZEN
-      // stored params. Banding is stateless per-row and appends only add
-      // files, so the on-disk ledger CONVERGES to the batch-append ledger
-      // whatever the micro-batch boundaries — the final probe shares
-      // dd_lsh_persisted's oracle verbatim (streaming ≡ batch for index
-      // builds, proven by hash, like stream_ivf_ingest ≡ sim_ivf_incremental).
-      val d = T(s, dir, "documents")
-      val path = annIndexPath(dir, "lsh_ledger_stream")
-      requireLedgerOracleValid(d.filter(col("doc_id") < 250)) // build + stream
-      ext.LshIndex.write(d.filter(col("doc_id") < 150), "doc_id", "text", path)
-      val stream = s.readStream.schema(d.schema)
-        .parquet(s"$dir/[d]ocuments.parquet")
-        .filter(col("doc_id") >= 150 && col("doc_id") < 250)
-      val q = stream.writeStream
-        .foreachBatch((batch: DataFrame, _: Long) =>
-          ext.LshIndex.append(batch, "doc_id", "text", path))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ext.LshIndex.probePairs(s, path, d.filter(col("doc_id") >= 250),
-        "doc_id", "text", threshold = 0.5)
-    }),
-
-    "dd_lsh_forget" -> ((s, dir) => {
-      // the erasure path against the persisted ledger: tombstone every
-      // doc_id % 10 == 0 in the historical cohort — O(deleted) manifest
-      // commit — and probe. Tombstoned docs stop matching IMMEDIATELY
-      // (probePairs anti-joins the pruned postings against the broadcast
-      // tombstone set); the next compact() physically purges postings AND
-      // signatures, then clears the set (LshIndexSpec proves purge ≡
-      // probe). Oracle = the ledger replay minus the deleted cohort.
-      val d = T(s, dir, "documents")
-      val path = annIndexPath(dir, "lsh_ledger_forget")
-      val cohort = d.filter(col("doc_id") < 250)
-      requireLedgerOracleValid(cohort)
-      ext.LshIndex.write(cohort, "doc_id", "text", path)
-      ext.LshIndex.delete(s, path,
-        cohort.filter(col("doc_id") % 10 === 0).select("doc_id"))
-      ext.LshIndex.probePairs(s, path, d.filter(col("doc_id") >= 250),
-        "doc_id", "text", threshold = 0.5)
-    }),
-
-    "srch_persisted" -> ((s, dir) => {
-      // persisted inverted index + BM25 probe — the Lucene-on-Spark
-      // serving path: index the corpus once (tok-range-sorted postings,
-      // doclens, one stats row), then serve the query from the index with
-      // a `tok IN (…)` pushed scan — zero text reads at query time. The
-      // probe shares bm25TopK's exact scoring expression tree (same
-      // doubles bit-for-bit), so srch_bm25's oracle checks the whole
-      // write → open → probe loop.
-      val docs = T(s, dir, "documents")
-      val path = annIndexPath(dir, "bm25_idx")
-      ext.Search.writeIndex(docs, "doc_id", "text", path)
-      ext.Search.probeBm25(s, path, "doc_id", Seq("spark", "dup", "vector"), 25)
-    }),
-
-    "sim_topk_lsh" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      ext.Similarity.lshTopK(emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding", 10)
-    }),
-
-    "sim_recall" -> ((s, dir) => {
-      // ANN index eval loop: recall@10 of multi-probe LSH vs the exact
-      // brute force per anchor — the accept/reject gate before trusting
-      // an approximate index (the ta_nbc_eval of the ANN family).
-      // recall is one IEEE division of an exact count by 10.
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val bf = ext.Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val lsh = ext.Similarity.lshTopK(emb, q, "vec_id", "embedding", 10)
-        .select(col("query_id").as("lq"), col("neighbor_id").as("ln"))
-      val hits = bf.join(lsh,
-          col("query_id") === col("lq") && col("neighbor_id") === col("ln"),
-          "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-      q.select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / lit(10.0)).as("recall_at_10"))
-    }),
-
-    "sim_topk_graph" -> ((s, dir) => {
-      // graph-ANN (NSW/HNSW family): LSH-cobucketed candidate pairs →
-      // bounded-out-degree best-neighbor graph (degree=8) → batched
-      // greedy beam search (4 md5-seeded entries, ef=16, 3 fixed rounds)
-      // — the tier that completes the ANN ladder brute→LSH→IVF→PQ→graph.
-      // Fully deterministic (hash planes, exact cosine, (score, id)
-      // tie-breaks), so index build AND search replay bit-for-bit in the
-      // DuckDB oracle with the rounds unrolled; per-round work is the
-      // broadcast-small beam against the src-partitioned adjacency — the
-      // corpus vectors are read only for beam candidates, never scanned.
-      val emb = T(s, dir, "embeddings")
-      val g = ext.GraphAnn.buildGraph(emb, "vec_id", "embedding", degree = 8)
-      ext.GraphAnn.topK(emb, g, emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", k = 10, ef = 16, rounds = 3, nSeeds = 4)
-    }),
-
-    "sim_graph_persisted" -> ((s, dir) => {
-      // persisted NSW graph index: build the bounded-degree neighbor
-      // graph ONCE, write it src-range-partitioned + src-sorted (every
-      // file a disjoint src range → row-group pruning serves the beam's
-      // adjacency lookups), re-open from disk and beam-search with
-      // sim_topk_graph's exact parameters — byte-identical results, so
-      // the existing unrolled-rounds oracle hash-checks the second index
-      // family's write → open → search loop too (IVF's proof shape).
-      val emb = T(s, dir, "embeddings")
-      val path = annIndexPath(dir, "nsw")
-      ext.AnnIndex.writeGraph(
-        ext.GraphAnn.buildGraph(emb, "vec_id", "embedding", degree = 8), path)
-      ext.GraphAnn.topK(emb, ext.AnnIndex.openGraph(s, path),
-        emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", k = 10, ef = 16, rounds = 3, nSeeds = 4)
-    }),
-
-    "sim_graph_forget" -> ((s, dir) => {
-      // the erasure path against the persisted NSW graph index: tombstone
-      // a cohort AFTER the build — O(deleted) manifest commit, no graph
-      // rewrite — then probe through AnnIndex.probeGraphTopK, which
-      // resolves BOTH the adjacency (either endpoint deleted → edge gone)
-      // and the corpus (seed pool, candidate vectors) through the
-      // tombstone set. Deleted nodes stop being traversed, seeded, or
-      // returned immediately; r9's openGraph bypassed tombstones and
-      // kept serving them. Oracle = the unrolled beam replay with the
-      // same liveness predicate on edges and seeds.
-      val emb = T(s, dir, "embeddings")
-      val path = annIndexPath(dir, "nsw_forget")
-      ext.AnnIndex.writeGraph(
-        ext.GraphAnn.buildGraph(emb, "vec_id", "embedding", degree = 8), path)
-      ext.AnnIndex.delete(s, path,
-        emb.filter(col("vec_id") % 9 === 0 && col("vec_id") >= 8).select("vec_id"))
-      ext.AnnIndex.probeGraphTopK(s, path, emb, emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", k = 10, ef = 16, rounds = 3, nSeeds = 4)
-    }),
-
-    "sim_graph_recall" -> ((s, dir) => {
-      // recall@10 of the graph-ANN tier vs exact brute force — the same
-      // accept/reject eval gate sim_recall runs for LSH, closing the
-      // loop on the beam-search approximation (ef/rounds/degree are the
-      // recall dials; this row is how you'd tune them).
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val bf = ext.Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val g = ext.GraphAnn.buildGraph(emb, "vec_id", "embedding", degree = 8)
-      val ann = ext.GraphAnn.topK(emb, g, q, "vec_id", "embedding",
-          k = 10, ef = 16, rounds = 3, nSeeds = 4)
-        .select(col("query_id").as("gq"), col("neighbor_id").as("gn"))
-      val hits = bf.join(ann,
-          col("query_id") === col("gq") && col("neighbor_id") === col("gn"),
-          "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-      q.select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / lit(10.0)).as("recall_at_10"))
-    }),
-
-    "sim_topk_ivfpq" -> ((s, dir) => {
-      // the composed FAISS IVFPQ tier: coarse cells bound the rows
-      // scanned (nProbe), PQ codes bound the bytes per row, exact refine
-      // bounds full-width reads; fully DuckDB hash-matched (both trained
-      // quantizers replayed); PqSpec adds all-cells+lossless == brute force
-      val emb = T(s, dir, "embeddings")
-      val cents = ext.IvfIndex.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val books = ext.Pq.trainCodebooks(emb, "vec_id", "embedding", m = 4, k = 64, iters = 2)
-      ext.Pq.ivfPqTopK(emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding",
-        cents, books, k = 10, nProbe = 3, shortlist = 50)
-    }),
-
-    "sim_normalize" -> ((s, dir) => {
-      // per-dimension standardization stats for embedding preprocessing
-      // (the mean/var inputs to z-scoring before PCA/k-means): counts and
-      // fixed-point component sums/square-sums on the 2^-20 grid — pure
-      // integer aggregation, order-free, engine-exact. Overflow bound:
-      // squares ≤ 2^40, safe to 2^23 rows/dim at unit scale (coarsen the
-      // grid for larger corpora).
-      val fp = floor(col("x") * graft.ext.IvfIndex.Grid)
-      T(s, dir, "embeddings")
-        .select(posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "x")))
-        .groupBy("dim")
-        .agg(count(lit(1)).as("n"), sum(fp).as("sum_fp"), sum(fp * fp).as("sumsq_fp"))
-    }),
-
-    "sim_mahalanobis" -> ((s, dir) => {
-      // diagonal-covariance Mahalanobis outlier score per embedding —
-      // the OOD/garbage filter a training pipeline runs before
-      // clustering or ANN indexing: per-dimension (n, Σ, Σ²) on the
-      // 2⁻²⁰ grid (sim_normalize's stats, broadcast back as a 64-row
-      // join — no driver collect), per-dimension z² term
-      // (n·x−S)²/(n·SS−S²) micro-rounded ONCE so the 64-term per-vector
-      // sum is an order-free integer; zero-variance dims contribute 0
-      // by the mirrored guard. Score ≈ χ²(d); flagged above 2·d. The
-      // integer products run in DECIMAL(38,0) (HUGEINT in the oracle)
-      // so billion-row stats can't wrap int64.
-      val x = T(s, dir, "embeddings")
-        .select(col("vec_id"),
-          posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "x")))
-        .select(col("vec_id"), col("dim"),
-          floor(col("x") * graft.ext.IvfIndex.Grid).cast("long").as("fp"))
-        .localCheckpoint(true) // feeds the stats AND the probe
-      val stats = x.groupBy("dim")
-        .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum(col("fp").cast("decimal(38,0)")).as("s"),
-          sum(expr("CAST(fp AS DECIMAL(38,0)) * fp")).as("ss"))
-      x.join(broadcast(stats), "dim")
-        .select(col("vec_id"),
-          expr("""CASE WHEN n * ss - s * s = 0 THEN CAST(0 AS BIGINT)
-                 ELSE CAST(round(CAST(n * fp - s AS DOUBLE)
-                   * CAST(n * fp - s AS DOUBLE)
-                   / CAST(n * ss - s * s AS DOUBLE) * 1000000) AS BIGINT)
-                 END""").as("t"))
-        .groupBy("vec_id")
-        .agg(sum("t").as("score_micro"))
-        .select(col("vec_id"), col("score_micro"),
-          (col("score_micro") > lit(128L * 1000000L)).as("is_outlier"))
-    }),
-
-    "sim_ivf_stats" -> ((s, dir) => {
-      // IVF index health report: per-cell occupancy and summed
-      // quantization error (d² to own centroid, micro-rounded per ROW so
-      // the sum is order-free; d² itself is bit-identical across engines
-      // — products and fixed-order folds only, no transcendentals)
-      val emb = T(s, dir, "embeddings")
-      val cents = ext.IvfIndex.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val assigned = ext.IvfIndex.assign(emb, "vec_id", "embedding", cents)
-      val vv = graft.functions.VectorExprs.dot(col("v"), col("v"))
-      def d2(c: Array[Double]): org.apache.spark.sql.Column = {
-        val c2 = { var s0 = 0.0; var i = 0; while (i < c.length) { s0 += c(i) * c(i); i += 1 }; s0 }
-        (vv - lit(2.0) * graft.functions.VectorExprs.dot(col("v"), lit(c))) + lit(c2)
-      }
-      val qerr = cents.tail.foldLeft(
-        when(col("cell") === cents.head._1, d2(cents.head._2))) { case (acc, (cid, c)) =>
-        acc.when(col("cell") === cid, d2(c))
-      }
-      assigned
-        .withColumn("q", round(qerr * 1e6).cast("long"))
-        .groupBy("cell")
-        .agg(count(lit(1)).as("n_vecs"), sum(col("q")).as("qerr_micro"))
-    }),
-
-    "sim_silhouette" -> ((s, dir) => {
-      // simplified silhouette (centroid-based, Hruschka et al.): the
-      // clustering-QA row for the IVF quantizer — per point, a = distance
-      // to OWN centroid, b = distance to the nearest OTHER centroid,
-      // s = (b−a)/max(a,b); averaged per cell. Unlike the classic
-      // silhouette's O(n²) pairwise form, the centroid variant is one
-      // broadcast-k CASE ladder per row — linear, the only formulation
-      // that survives 100 TB. d² uses sim_ivf_stats' exact op order
-      // ((v·v − 2⟨v,c⟩) + ‖c‖², left folds both engines), sqrt is
-      // IEEE-exact, s is micro-rounded per ROW so per-cell sums are
-      // order-free integers (DECIMAL against the 2⁵³ bound at scale).
-      val emb = T(s, dir, "embeddings")
-      val cents = ext.IvfIndex.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val assigned = ext.IvfIndex.assign(emb, "vec_id", "embedding", cents)
-      val vv = graft.functions.VectorExprs.dot(col("v"), col("v"))
-      def d2(c: Array[Double]): org.apache.spark.sql.Column = {
-        val c2 = { var s0 = 0.0; var i = 0; while (i < c.length) { s0 += c(i) * c(i); i += 1 }; s0 }
-        (vv - lit(2.0) * graft.functions.VectorExprs.dot(col("v"), lit(c))) + lit(c2)
-      }
-      val dCols = cents.map { case (cid, c) => cid -> d2(c) }
-      val ownB = dCols.map { case (cid, dc) => (cid, dc) }
-      val own = ownB.tail.foldLeft(when(col("cell") === ownB.head._1, ownB.head._2)) {
-        case (acc, (cid, dc)) => acc.when(col("cell") === cid, dc)
-      }
-      val othB = cents.map { case (cid, _) =>
-        cid -> least(dCols.collect { case (o, dc) if o != cid => dc }: _*)
-      }
-      val other = othB.tail.foldLeft(when(col("cell") === othB.head._1, othB.head._2)) {
-        case (acc, (cid, lc)) => acc.when(col("cell") === cid, lc)
-      }
-      assigned
-        .withColumn("a", sqrt(own))
-        .withColumn("b", sqrt(other))
-        .withColumn("sil",
-          when(greatest(col("a"), col("b")) === 0.0, lit(0L))
-            .otherwise(round((col("b") - col("a"))
-              / greatest(col("a"), col("b")) * 1e6).cast("long")))
-        .groupBy("cell")
-        .agg(count(lit(1)).as("n_vecs"),
-          sum(col("sil").cast("decimal(38,0)")).as("ss"))
-        .select(col("cell"), col("n_vecs"),
-          col("ss").cast("long").as("sil_sum_micro"),
-          expr("CAST(round(CAST(ss AS DOUBLE) / CAST(n_vecs AS DOUBLE)) AS BIGINT)")
-            .as("mean_sil_micro"))
-    }),
-
-    "sim_coreset" -> ((s, dir) => {
-      // greedy k-center coreset (Gonzalez 1985 / Sener-Savarese): 8
-      // maximally spread embeddings — diversity selection for training
-      // budgets, the complement of SemDeDup; deterministic (min-id seed,
-      // exact-comparison nearest-center, (d desc, id) argmax) → fully
-      // DuckDB hash-matched with the 7 selection rounds unrolled
-      ext.Coreset.kCenter(T(s, dir, "embeddings"), "vec_id", "embedding", 8)
-        .select(col("sel_rank"), col("id").as("vec_id"), col("dist"))
-    }),
-
-    "sim_topk_pq" -> ((s, dir) => {
-      // product quantization (Jégou et al. 2011): 24-bit codes (64×
-      // compression) + ADC table-lookup scoring + exact refine of a
-      // 50-candidate shortlist — the memory-bound 100 TB tier; codebook
-      // training and fixed-order ADC scoring are fully DuckDB
-      // hash-matched; PqSpec adds lossless-codebooks == brute force
-      val emb = T(s, dir, "embeddings")
-      val books = ext.Pq.trainCodebooks(emb, "vec_id", "embedding", m = 4, k = 64, iters = 2)
-      val enc = ext.Pq.encode(emb, "vec_id", "embedding", books)
-      ext.Pq.refinedTopK(enc, emb, emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", books, k = 10, shortlist = 50)
-    }),
-
-    "sim_pq_recall" -> ((s, dir) => {
-      // recall@10 of the PQ tier (ADC shortlist-50 + exact refine) vs
-      // brute force — with sim_recall / sim_ivf_recall /
-      // sim_graph_recall this makes every approximate ANN tier carry
-      // its own accept/reject number; the shortlist width is the recall
-      // dial this row tunes.
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val bf = ext.Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val books = ext.Pq.trainCodebooks(emb, "vec_id", "embedding", m = 4, k = 64, iters = 2)
-      val enc = ext.Pq.encode(emb, "vec_id", "embedding", books)
-      val ann = ext.Pq.refinedTopK(enc, emb, q,
-          "vec_id", "embedding", books, k = 10, shortlist = 50)
-        .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
-      val hits = bf.join(ann,
-          col("query_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-      q.select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / lit(10.0)).as("recall_at_10"))
-    }),
-
-    // ---- extended: text analysis ----
-
-    "ta_tokens" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      d.select(col("doc_id"),
-        ext.TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-        ext.TextAnalysis.bpeishTokenCount(col("text")).as("n_bpeish"),
-        length(col("text")).cast("long").as("n_chars"))
-    }),
-
-    "ta_quality" -> ((s, dir) => {
-      // ratios in integer basis points: identical fp computation on both
-      // engines, then an exact integer floor — no rounding-mode divergence
-      val d = T(s, dir, "documents")
-      d.select(col("doc_id"),
-        floor(ext.TextAnalysis.punctuationRatio(col("text")) * 10000).cast("long").as("punct_bp"),
-        floor(ext.TextAnalysis.stopwordRatio(col("text"), "en") * 10000).cast("long").as("stop_bp"),
-        floor(ext.TextAnalysis.meanTokenLength(col("text")) * 100).cast("long").as("mtl_c"))
-    }),
-
-    "ta_curriculum" -> ((s, dir) => {
-      // curriculum ordering (easy→hard training schedules): docs banded
-      // by FIXED quality-bp thresholds (no global quantile sort), ordered
-      // within bands by deterministic hash, and given a global curriculum
-      // position via cross-band offsets (4 scalars, broadcast) — the
-      // ordering pass that feeds sequence packing. Windows sort within
-      // band partitions only; at scale band ≈ shard and the position is
-      // offset + band_rank with no global sort.
-      import org.apache.spark.sql.expressions.Window
-      val d = T(s, dir, "documents")
-        .select(col("doc_id"),
-          floor(ext.TextAnalysis.rawQualityScore(col("text")) * 10000).cast("long").as("qbp"))
-        .withColumn("band",
-          when(col("qbp") >= 8000, 0L).when(col("qbp") >= 6000, 1L)
-            .when(col("qbp") >= 4000, 2L).otherwise(3L))
-      val ranked = d.withColumn("band_rank",
-        row_number().over(Window.partitionBy("band")
-          .orderBy(md5(concat(lit("cur:"), col("doc_id").cast("string"))), col("doc_id"))).cast("long"))
-      val offsets = d.groupBy("band").agg(count(lit(1)).as("bn"))
-        .withColumn("offset", coalesce(sum(col("bn")).over(
-          Window.orderBy("band").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("band"), col("offset"))
-      ranked.join(broadcast(offsets), Seq("band"))
-        .select(col("doc_id"), col("band"), col("band_rank"),
-          (col("offset") + col("band_rank")).as("curriculum_pos"))
-    }),
-
-    "ta_quality_score" -> ((s, dir) => {
-      // integer basis points of the raw composite (identical IEEE double
-      // expression on both engines, then exact integer floor) — the rounded
-      // user-facing qualityScore differs only in presentation
-      val d = T(s, dir, "documents")
-      d.select(col("doc_id"), col("lang"),
-        floor(ext.TextAnalysis.rawQualityScore(col("text")) * 10000).cast("long").as("quality_bp"))
-    }),
-
-    "ta_langid" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      d.select(col("doc_id"), col("lang").as("lang_truth"),
-        ext.TextAnalysis.langId(col("text")).as("lang_guess"))
-    }),
-
-    "ta_fingerprint" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      d.select(col("doc_id"), ext.TextAnalysis.fingerprint(col("text")).as("fp"))
-    }),
-
-    "ta_winnow" -> ((s, dir) => {
-      // rolling-hash (winnowing) fingerprint near-copy pairs
-      ext.Dedup.winnowPairs(T(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    // ---- extended: sampling / splitting / packing ----
-
-    "ta_split" -> ((s, dir) => {
-      // deterministic hash-based train/val/test assignment (80/10/10)
-      ext.Sampling.hashSplit(T(s, dir, "documents"), col("doc_id"))
-        .select("doc_id", "split")
-    }),
-
-    "ta_group_split" -> ((s, dir) => {
-      // leakage-PROOF splitting (vs ta_leakage's after-the-fact audit):
-      // the split unit is the near-duplicate CLUSTER, not the document —
-      // hash the cluster representative (min-id component label from the
-      // minhash pair graph), so every near-dup family lands in ONE split
-      // by construction. Composes minhashPairs + componentsFor +
-      // hashSplit; ids-only shuffles throughout.
-      val docs = T(s, dir, "documents")
-      val comp = ext.Graph.componentsFor(docs.select(col("doc_id")), "doc_id",
-        ext.Dedup.minhashPairs(docs, "doc_id", "text"), "id_a", "id_b")
-      ext.Sampling.hashSplit(
-          comp.select(col("doc_id"), col("component").as("cluster_rep")),
-          col("cluster_rep"))
-        .select("doc_id", "cluster_rep", "split")
-    }),
-
-    "q_ldiv" -> ((s, dir) => {
-      // l-diversity audit (privacy governance beyond q_kanon's group
-      // sizes): per quasi-identifier group of the published join, the
-      // number of DISTINCT sensitive values — a k-anonymous group with
-      // one sensitive value still leaks it (homogeneity attack).
-      // One hash aggregate; count_distinct is exact per group.
-      T(s, dir, "orders")
-        .join(T(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_nationkey"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_rows"),
-          count_distinct(col("o_orderpriority")).as("l_distinct"))
-        .withColumn("ok", col("l_distinct") >= 3)
-    }),
-
-    "ta_leakage" -> ((s, dir) => {
-      // split-leakage audit: NEAR-dup pairs that straddle the
-      // train/val/test boundary — the contamination exact 8-gram
-      // decontam can't see (paraphrases of a test doc inside train).
-      // Composes the minhash pair graph with the split assignment; ids
-      // only ride the join.
-      val d = T(s, dir, "documents")
-      val split = ext.Sampling.hashSplit(d, col("doc_id")).select("doc_id", "split")
-      ext.Dedup.minhashPairs(d, "doc_id", "text")
-        .join(split.select(col("doc_id").as("id_a"), col("split").as("split_a")), Seq("id_a"))
-        .join(split.select(col("doc_id").as("id_b"), col("split").as("split_b")), Seq("id_b"))
-        .filter(col("split_a") =!= col("split_b"))
-        .groupBy("split_a", "split_b")
-        .agg(count(lit(1)).as("n_leaky_pairs"))
-    }),
-
-    "ta_sample" -> ((s, dir) => {
-      // per-language 20% deterministic sample — no RNG, no shuffle
-      ext.Sampling.stratifiedSample(T(s, dir, "documents"),
-        col("lang"), col("doc_id"), 0.2)
-        .select("doc_id", "lang")
-    }),
-
-    "ta_apportion" -> ((s, dir) => {
-      // largest-remainder (Hamilton) apportionment: split a 1000-doc
-      // budget across sources so quotas sum to the budget EXACTLY — all
-      // integer math, windows over the #sources frame only
-      ext.Sampling.apportion(T(s, dir, "documents"), "source", 1000L)
-    }),
-
-    "ta_quota_sample" -> ((s, dir) => {
-      // EXACT budget sampling: Hamilton quotas per source (Σ == 1000
-      // exactly) filled by hash-deterministic per-source rank — the
-      // composition of ta_apportion and md5-ordered selection. The
-      // per-source sort is the price of exact quotas (the md5-threshold
-      // ta_sample is the constant-time approximate alternative).
-      val d = T(s, dir, "documents")
-      val quotas = ext.Sampling.apportion(d, "source", 1000L)
-        .select(col("source"), col("quota"))
-      ext.Ranks.groupedRank(
-          d.select(col("doc_id"), col("source"),
-            md5(concat(lit("qs:"), col("doc_id").cast("string"))).as("__h__")),
-          "source", Seq(col("__h__").asc, col("doc_id").asc), "rk")
-        .join(quotas, Seq("source"))
-        .filter(col("rk") <= col("quota"))
-        .select(col("doc_id"), col("source"), col("rk").as("pick_rank"))
-    }),
-
-    "ta_mix" -> ((s, dir) => {
-      // weighted source mixing: per-stratum keep-fractions (up/down-
-      // sampling rare/common sources deterministically, no RNG)
-      ext.Sampling.stratifiedSample(T(s, dir, "documents"),
-        col("source"), col("doc_id"),
-        Map("src0" -> 0.5, "src1" -> 1.0), default = 0.1)
-        .select("doc_id", "source")
-    }),
-
-    "ta_pack" -> ((s, dir) => {
-      // chunked-concatenation sequence packing into 4096-token windows,
-      // sharded by language (the cumsum window parallelizes across shards)
-      val d = T(s, dir, "documents")
-        .withColumn("n_tokens", ext.TextAnalysis.tokenCount(col("text")))
-      ext.Sampling.packSequences(d, col("lang"), col("doc_id"),
-        col("n_tokens"), 4096)
-        .select("doc_id", "lang", "n_tokens", "bin", "bin_offset", "n_bins")
-    }),
-
-    // ---- extended: multimodal plumbing ----
-
-    "mm_meta" -> ((s, dir) => {
-      val media = ext.Multimodal.mediaFromDocuments(T(s, dir, "documents"))
-      media.select(col("media_id"),
-        length(col("content")).cast("long").as("n_bytes"),
-        ext.Multimodal.sniffFormat(col("content")).as("format"),
-        sha2(col("content"), 256).as("sha"))
-    }),
-
-    "mm_decode" -> ((s, dir) => {
-      // REAL decode round-trip: plant genuine encoder output (ImageIO
-      // png/bmp, AudioSystem wav) whose dims/rates/contents are integer
-      // functions of doc_id, decode it with the JDK codecs, and ALSO parse
-      // the container headers — the oracle recomputes every value from
-      // doc_id alone, so a fake/stub decoder cannot hash-match.
-      implicit val sp: SparkSession = s
-      val media = ext.Multimodal.syntheticMedia(T(s, dir, "documents"))
-      val dec = ext.Multimodal.decode(media).toDF()
-      val hdr = ext.Multimodal.extractMeta(media).toDF()
-        .select(col("media_id"), col("width").as("hdr_width"),
-          col("height").as("hdr_height"), col("sample_rate").as("hdr_rate"))
-      dec.join(hdr, Seq("media_id"))
-    }),
-
-    "mm_frames" -> ((s, dir) => {
-      ext.Multimodal.frameSample(
-        ext.Multimodal.mediaFromDocuments(T(s, dir, "documents")), 64, 8)
-    }),
-
-    "mm_neardup" -> ((s, dir) => {
-      // image near-dup via dHash Hamming banding on planted GRADIENT
-      // images whose dHash is a closed-form md5 function of doc_id
-      // (cluster head ⊕ one member bit): the DuckDB oracle brute-forces
-      // the full pair set from doc_id alone, hash-gating banding recall,
-      // the bucket cap, the REAL PNG decode, and the dHash math at once
-      implicit val sp: SparkSession = s
-      val media = ext.Multimodal.gradientMedia(T(s, dir, "documents"))
-      val hashes = ext.Multimodal.perceptualHash(media).toDF()
-      ext.Multimodal.nearDupImagePairs(hashes, maxHamming = 1)
-    }),
-
-    "mm_curate" -> ((s, dir) => {
-      // composed MULTIMODAL curation — the image twin of ta_curate: decode
-      // (real PNG) → perceptual dHash → banded Hamming pairs → transitive
-      // components → keep one representative per near-dup cluster, with
-      // decoded dims attached; ONE lazy plan over the planted gradient
-      // corpus, every stage reaching the oracle's closed forms
-      implicit val sp: SparkSession = s
-      val docs = T(s, dir, "documents")
-      val media = ext.Multimodal.gradientMedia(docs)
-      val hashes = ext.Multimodal.perceptualHash(media).toDF()
-      val pairs = ext.Multimodal.nearDupImagePairs(hashes, maxHamming = 1)
-        .select(col("id_a"), col("id_b"))
-      val kept = ext.Graph.clusterDedup(docs.select("doc_id"), "doc_id", pairs)
-      val dims = ext.Multimodal.decode(media).toDF()
-        .select(col("media_id").as("doc_id"), col("width"), col("height"))
-      kept.join(dims, Seq("doc_id")).select("doc_id", "width", "height")
-    }),
-
-    "mm_resize" -> ((s, dir) => {
-      // REAL resize round-trip: planted constant-color images resized with
-      // the nearest-neighbor resampler, re-decoded — dims and pixel sums
-      // must equal the integer formulas (constant color survives exactly)
-      implicit val sp: SparkSession = s
-      val media = ext.Multimodal.syntheticMedia(T(s, dir, "documents"))
-        .filter(col("media_id") % 3 =!= 1)
-      val resized = ext.Multimodal.resize(media, 8, 6).toDF()
-        .select(col("media_id"), col("media_type"),
-          lit("resized").as("source"), col("content"))
-      ext.Multimodal.decode(resized).toDF()
-        .select("media_id", "format", "width", "height", "content_sum")
-    }),
-
-    // ---- extended: profiling + skew-safe aggregation ----
-
-    "q_profile" -> ((s, dir) => {
-      ext.Profile.numeric(T(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount"), exactDistinct = true)
-    }),
-
-    "q_refint" -> ((s, dir) => {
-      // referential-integrity audit across the relational schema: orphan
-      // counts per FK edge (orders→customer, lineitem→orders,
-      // customer→nation, supplier→nation) via broadcast-able anti-joins —
-      // the data-quality gate a warehouse runs after every load
-      def orphans(child: DataFrame, key: String, parent: DataFrame,
-                  pkey: String, edge: String): DataFrame =
-        child.select(col(key).as("k"))
-          .join(parent.select(col(pkey).as("k")).distinct(), Seq("k"), "left_anti")
-          .agg(count(lit(1)).as("n_orphans"))
-          .select(lit(edge).as("fk_edge"), col("n_orphans"))
-      orphans(T(s, dir, "orders"), "o_custkey", T(s, dir, "customer"), "c_custkey", "orders.custkey")
-        .unionAll(orphans(T(s, dir, "lineitem"), "l_orderkey", T(s, dir, "orders"), "o_orderkey", "lineitem.orderkey"))
-        .unionAll(orphans(T(s, dir, "customer"), "c_nationkey", T(s, dir, "nation"), "n_nationkey", "customer.nationkey"))
-        .unionAll(orphans(T(s, dir, "supplier"), "s_nationkey", T(s, dir, "nation"), "n_nationkey", "supplier.nationkey"))
-    }),
-
-    "q_kanon" -> ((s, dir) => {
-      // k-anonymity audit (Sweeney 2002): group customers by the
-      // quasi-identifier tuple (segment, nation), flag equivalence
-      // classes smaller than k=5 — the rows a release would need to
-      // suppress or generalize. One hash aggregation; the governance
-      // pass a 100 TB PII review runs before any export.
-      T(s, dir, "customer")
-        .groupBy(col("c_mktsegment"), col("c_nationkey"))
-        .agg(count(lit(1)).as("class_size"))
-        .withColumn("anonymous", col("class_size") >= 5)
-    }),
-
-    "q_histogram" -> ((s, dir) => {
-      // equi-width histogram: two aggregate passes (tiny min/max broadcast
-      // + one bucketing agg), never a sort; bucket math is fixed-order
-      // IEEE so the assignment is engine-exact
-      ext.Profile.histogram(T(s, dir, "lineitem"), "l_extendedprice", 20)
-    }),
-
-    "ta_vocab" -> ((s, dir) => {
-      // vocabulary heavy hitters: top-20 corpus tokens (map-side combined
-      // hash agg + TakeOrdered — no full sort)
-      ext.TextAnalysis.topTokens(T(s, dir, "documents"), col("text"), 20)
-    }),
-
-    "ta_c4_dedup" -> ((s, dir) => {
-      // C4-style cross-document span dedup: duplicated 10-token spans keep
-      // only the globally-first occurrence; docs reassembled from survivors
-      ext.CorpusClean.c4Dedup(T(s, dir, "documents"), "doc_id", "text", 10)
-    }),
-
-    "ta_repetition" -> ((s, dir) => {
-      // Gopher-style repetition signals as exact integer pairs: duplicate
-      // spans within doc + most-repeated-bigram mass
-      ext.CorpusClean.repetitionStats(T(s, dir, "documents"), "doc_id", "text", 10)
-    }),
-
-    "ta_redact" -> ((s, dir) => {
-      // PII redaction round-trip: plant email/phone/IP derived from doc_id,
-      // redact with fixed-order RE2-compatible regexes, count matches
-      val planted = concat(col("text"),
-        lit(" contact user"), col("doc_id").cast("string"), lit("@example.com or +"),
-        lpad((col("doc_id") % 900 + 100).cast("string"), 3, "0"), lit("-555-"),
-        lpad((col("doc_id") % 10000).cast("string"), 4, "0"), lit(" at 10."),
-        (col("doc_id") % 256).cast("string"), lit(".0.1 now"))
-      val (ne, np, ni) = ext.CorpusClean.piiCounts(planted)
-      T(s, dir, "documents")
-        .select(col("doc_id"), ext.CorpusClean.redactPii(planted).as("clean"),
-          ne.as("n_email"), np.as("n_phone"), ni.as("n_ip"))
-    }),
-
-    "ta_pmi" -> ((s, dir) => {
-      // collocation extraction: top-50 bigrams by PMI (min count 5) —
-      // positive-PMI filter is an exact integer predicate, score is
-      // micro-nat fixed point, ties broken lexically ⇒ exact top-k
-      ext.LangModel.collocations(T(s, dir, "documents"), "doc_id", "text",
-        minCount = 5, topK = 50)
-    }),
-
-    "ta_markup" -> ((s, dir) => {
-      // html → text extraction (the WET step): wrap each doc in markup
-      // with a style block, entities and a script block, then strip with
-      // the RE2-compatible chain — oracle replays the identical patterns
-      val html = concat(
-        lit("<html><head><style>p { color: red; }</style></head><body><h1>Doc "),
-        col("doc_id").cast("string"),
-        lit("</h1>\n<p class=\"body\">"), col("text"),
-        lit(" &amp; more &lt;soon&gt;</p>\n<script>var x = 1 && 2;</script></body></html>"))
-      T(s, dir, "documents")
-        .select(col("doc_id"), ext.CorpusClean.stripMarkup(html).as("clean_text"))
-    }),
-
-    "ta_decontam" -> ((s, dir) => {
-      // benchmark decontamination: docs sharing any word 8-gram with the
-      // deterministic 5% hash-sample "benchmark"; bench grams broadcast,
-      // corpus text never shuffles
-      val docs = T(s, dir, "documents")
-      val bench = ext.Sampling.hashSample(docs, col("doc_id"), 0.05)
-      ext.CorpusClean.decontaminate(docs, bench, "doc_id", "text", 8)
-    }),
-
-    "sim_pca" -> ((s, dir) => {
-      // distributed PCA, the exact half: one-pass integer gram/mean
-      // aggregation (GramAgg — milli-quantized, order-free long sums,
-      // hash-matches DuckDB); the d×d eigenproblem runs driver-side
-      // (Pca.topEigen, spec-tested) — data-sized work never leaves the
-      // mergeable aggregate
-      ext.Pca.gramMicro(T(s, dir, "embeddings"), "embedding", 64)
-    }),
-
-    "mm_resample" -> ((s, dir) => {
-      // REAL audio resample round-trip: planted constant-signal WAVs
-      // resampled to 8 kHz by linear interpolation, re-decoded — frame
-      // count and sample sum must equal the integer closed forms
-      // (a constant signal survives any interpolation exactly)
-      implicit val sp: SparkSession = s
-      val media = ext.Multimodal.syntheticMedia(T(s, dir, "documents"))
-        .filter(col("media_id") % 3 === 1)
-      val resampled = ext.Multimodal.resampleAudio(media, 8000).toDF()
-        .select(col("media_id"), col("media_type"),
-          lit("resampled").as("source"), col("content"))
-      ext.Multimodal.decode(resampled).toDF()
-        .select("media_id", "format", "sample_rate", "n_samples", "content_sum")
-    }),
-
-    "ev_interp" -> ((s, dir) => {
-      // time-series gap filling: hourly grid per user, value linearly
-      // interpolated between the surrounding events — two windows (prev/
-      // next carry) over one key shuffle, union-and-carry like asofJoin;
-      // identical input bits + identical fp ops → micro values hash-match
-      import org.apache.spark.sql.expressions.Window
-      val ev = events(s, dir).select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      val b = ev.groupBy("user_id").agg(
-        date_trunc("hour", min(col("ts"))).as("t0"),
-        date_trunc("hour", max(col("ts"))).as("t1"))
-      val grid = b.select(col("user_id"),
-          explode(sequence(col("t0"), col("t1"), expr("INTERVAL 1 HOUR"))).as("t"))
-        .select(col("user_id"), col("t"), lit(1).as("tag"),
-          lit(null).cast("double").as("v"), lit(null).cast("timestamp").as("et"),
-          lit(null).cast("long").as("event_id"))
-      val pts = ev.select(col("user_id"), col("ts").as("t"), lit(0).as("tag"),
-        col("value").as("v"), col("ts").as("et"), col("event_id"))
-      val u = grid.unionByName(pts)
-      val frame = (w: org.apache.spark.sql.expressions.WindowSpec) =>
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAsc = frame(Window.partitionBy("user_id")
-        .orderBy(col("t").asc, col("tag").asc, col("event_id").asc))
-      val wDesc = frame(Window.partitionBy("user_id")
-        .orderBy(col("t").desc, col("tag").asc, col("event_id").desc))
-      val carried = u
-        .withColumn("pt", last(col("et"), ignoreNulls = true).over(wAsc))
-        .withColumn("pv", last(col("v"), ignoreNulls = true).over(wAsc))
-        .withColumn("nt", last(col("et"), ignoreNulls = true).over(wDesc))
-        .withColumn("nv", last(col("v"), ignoreNulls = true).over(wDesc))
-      val interp = when(col("pt").isNull || col("nt").isNull, lit(null).cast("double"))
-        .when(col("pt") === col("nt"), col("pv"))
-        .otherwise(col("pv") + (col("nv") - col("pv")) *
-          ((unix_micros(col("t")) - unix_micros(col("pt"))) /
-            (unix_micros(col("nt")) - unix_micros(col("pt")))))
-      carried.filter(col("tag") === 1)
-        .select(col("user_id"), col("t").as("grid_ts"),
-          round(interp * 10000).cast("long").as("v_micro"))
-    }),
-
-    "q_dq" -> ((s, dir) => {
-      // data-quality expectation suite: each check is one aggregate row
-      // (violations, total, pass) — uniqueness, referential integrity,
-      // null rate, range — the production gate before any pipeline run
-      val li = T(s, dir, "lineitem")
-      val o = T(s, dir, "orders")
-      def row(name: String, violations: DataFrame): DataFrame =
-        violations.select(lit(name).as("check"),
-          col("v").cast("long").as("n_violations"), col("t").cast("long").as("n_total"),
-          (col("v") === 0).as("pass"))
-      val pk = row("pk_unique_lineitem", li.agg(
-        (count(lit(1)) - countDistinct(col("l_orderkey"), col("l_linenumber"))).as("v"),
-        count(lit(1)).as("t")))
-      val fk = row("fk_lineitem_orders", li.join(o,
-          col("l_orderkey") === col("o_orderkey"), "left_anti")
-        .agg(count(lit(1)).as("v"), lit(0L).as("t"))
-        .crossJoin(li.agg(count(lit(1)).as("t2"))).select(col("v"), col("t2").as("t")))
-      val nn = row("notnull_shipdate", li.agg(
-        sum(when(col("l_shipdate").isNull, 1L).otherwise(0L)).as("v"), count(lit(1)).as("t")))
-      val rng = row("range_quantity_1_50", li.agg(
-        sum(when(col("l_quantity") < 1 || col("l_quantity") > 50, 1L).otherwise(0L)).as("v"),
-        count(lit(1)).as("t")))
-      val pos = row("positive_totalprice", o.agg(
-        sum(when(col("o_totalprice") <= 0, 1L).otherwise(0L)).as("v"), count(lit(1)).as("t")))
-      pk.unionByName(fk).unionByName(nn).unionByName(rng).unionByName(pos)
-    }),
-
-    "q_pagerank" -> ((s, dir) => {
-      // integer fixed-point PageRank over the symmetrized customer↔
-      // supplier trade graph (supplier ids offset into their own key
-      // space) — 3 iterations, engine-exact by integral arithmetic
-      val o = T(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), (col("l_suppkey") + 10000000L).as("s"))
-        .distinct()
-      val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-        .union(pairs.select(col("s").as("src"), col("c").as("dst")))
-      ext.Graph.pageRankInt(edges, "src", "dst", iters = 3)
-    }),
-
-    "q_triangles" -> ((s, dir) => {
-      // per-vertex triangle counts on the part co-purchase graph (parts
-      // sharing an order) via degree-oriented compact-forward — wedge
-      // fan-out bounded O(√E) under skew; all-integer output, oracle is
-      // the id-ordered 3-way join
-      val lp = T(s, dir, "lineitem").select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val e = lp.as("x").join(lp.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("src"), col("y.p").as("dst")).distinct()
-      ext.Graph.triangleCounts(e).withColumnRenamed("id", "part_id")
-    }),
-
-    "g_kcore" -> ((s, dir) => {
-      // k-core (k=80) of the part co-purchase graph: iterative peel to
-      // fixpoint (6 rounds at sf0.01); the oracle is a 10-round unrolled
-      // replay — peeling is monotone, so rounds past the fixpoint are
-      // identity and the bounded unroll is exact (kCore fail-fasts if
-      // the fixpoint ever needs more rounds than the unroll covers).
-      // The per-order pair fan-out is quadratic in parts-per-order, so
-      // orders above a fixed width cap are EXCLUDED before the self-
-      // join (the LSH bucket star-cap pattern) — the cap is part of the
-      // operator's definition and the oracle applies the identical
-      // QUALIFY, so the hash stays exact at any fixture; at sf0.01 the
-      // widest order has 7 parts and nothing is dropped.
-      val e = ext.Graph.coOccurrencePairs(
-        T(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-        "l_orderkey", "l_partkey", maxGroupSize = kcoreOrderCap)
-      ext.Graph.kCore(e, k = 80, assertFixpointWithin = Some(10))
-        .withColumnRenamed("id", "part_id")
-    }),
-
-    "g_labelprop" -> ((s, dir) => {
-      // synchronous label propagation (3 rounds, min-label tie-break)
-      // over the symmetrized customer↔supplier trade graph — community
-      // labels are all-integer and the fixed round count makes the
-      // unrolled SQL oracle exact
-      val o = T(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 10000000L).as("dst")).distinct()
-      ext.Graph.labelPropagation(pairs, iters = 3)
-    }),
-
-    "g_hits" -> ((s, dir) => {
-      // HITS hubs & authorities (Kleinberg) over the DIRECTED customer→
-      // supplier trade graph — customers "endorse" the suppliers they
-      // buy from, so hub = breadth of a customer's supplier base and
-      // authority = how much well-connected demand a supplier attracts.
-      // 2 max-normalized integer fixed-point iterations
-      // (ext.Graph.hitsInt); the unrolled-SQL oracle replays them
-      // exactly. Completes the link-analysis family next to q_pagerank.
-      val o = T(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val e = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 10000000L).as("dst"))
-        .distinct()
-      ext.Graph.hitsInt(e, iters = 2)
-    }),
-
-    "ev_variant" -> ((s, dir) => {
-      // semi-structured ingestion via Spark 4 VARIANT: parse the raw JSON
-      // props once into the shredded binary variant encoding, extract a
-      // typed path, aggregate — the open-table-format answer to schema
-      // drift (no schema declared up front, unlike q_json's from_json)
-      events(s, dir)
-        .select(variant_get(parse_json(col("props")), "$.k", "long").as("k"))
-        .groupBy("k").agg(count(lit(1)).as("n"))
-    }),
-
-    "ev_trailing_1h" -> ((s, dir) => {
-      // TIME-based RANGE window frame (trailing 3600 s per user) — the
-      // value-range frame ROWS frames can't express; epoch-second keys
-      // keep the frame boundary identical in both engines
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id")
-        .orderBy(unix_timestamp(col("ts")))
-        .rangeBetween(-3600, 0)
-      events(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("value") * 100).cast("long").as("v_c"))
-        .withColumn("trail_sum", sum(col("v_c")).over(w))
-        .withColumn("trail_n", count(lit(1)).over(w))
-        .drop("ts")
-    }),
-
-    "ev_cohorts" -> ((s, dir) => {
-      // retention cohort analysis: users grouped by first-seen week,
-      // distinct-user counts per week offset — all integer/date math
-      val ev = events(s, dir).select(col("user_id"), col("ts"))
-      val firsts = ev.groupBy("user_id").agg(min(col("ts")).as("first_ts"))
-      ev.join(firsts, "user_id")
-        .select(col("user_id"),
-          to_date(date_trunc("week", col("first_ts"))).as("cohort_week"),
-          expr("datediff(to_date(ts), to_date(date_trunc('week', first_ts))) div 7")
-            .cast("long").as("week_offset"))
-        .groupBy("cohort_week", "week_offset")
-        .agg(countDistinct(col("user_id")).as("n_users"))
-    }),
-
-    "ev_attribution" -> ((s, dir) => {
-      // last-touch attribution: each purchase credits the user's most
-      // recent preceding click (carry-forward window, engine-exact ids)
-      import org.apache.spark.sql.expressions.Window
-      val ev = events(s, dir)
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("last_click",
-          last(when(col("event_type") === "click", col("event_id")), ignoreNulls = true).over(w))
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("last_click"))
-    }),
-
-    "ev_anomaly" -> ((s, dir) => {
-      // trailing-window z-score anomaly flag per user, evaluated as the
-      // division-free integer condition (n·v−s)² > k²·(n·ss−s²) — exact
-      // in both engines where a float stddev window could never hash-match
-      val ev = events(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("value") * 100).cast("long").as("v_c"))
-      ext.Robust.trailingAnomaly(ev, "user_id", Seq("ts", "event_id"), "v_c",
-        lookback = 20, minPrev = 5, kSigma = 3,
-        keep = Seq("event_id", "user_id", "v_c"))
-    }),
-
-    "q_bins" -> ((s, dir) => {
-      // equal-frequency discretization into deciles per return flag —
-      // integer bin ids from the value histogram, engine-exact
-      val li = T(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          round(col("l_extendedprice") * 100).cast("long").as("price_c"))
-      ext.Robust.equiDepthBins(li, "l_returnflag", "price_c", nBins = 10,
-        keep = Seq("l_orderkey", "l_linenumber", "l_returnflag", "price_c"))
-    }),
-
-    "q_bfs" -> ((s, dir) => {
-      // bounded-hop BFS from flagged customers over the symmetrized
-      // trade graph — min hop distance ≤ 3, unrolled-SQL oracle
-      val o = T(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), (col("l_suppkey") + 10000000L).as("p"))
-        .distinct()
-      val edges = pairs.select(col("c").as("src"), col("p").as("dst"))
-        .union(pairs.select(col("p").as("src"), col("c").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_custkey") < 5)
-        .select(col("c_custkey").as("id"))
-      ext.Graph.bfsHops(edges, seeds, maxHops = 3)
-    }),
-
-    "g_harmonic" -> ((s, dir) => {
-      // truncated harmonic centrality (Boldi-Vigna) for flagged customers
-      // over the trade graph: ONE keyed BFS (frontier carries (seed, id)
-      // pairs) instead of a job per seed; scores are exact integer
-      // micro-units (10⁶ div hops) — no float anywhere
-      val o = T(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), (col("l_suppkey") + 10000000L).as("p"))
-        .distinct()
-      val edges = pairs.select(col("c").as("src"), col("p").as("dst"))
-        .union(pairs.select(col("p").as("src"), col("c").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_custkey") < 5)
-        .select(col("c_custkey").as("id"))
-      ext.Graph.harmonicCentrality(edges, seeds, maxHops = 3)
-    }),
-
-    "q_mad" -> ((s, dir) => {
-      // median/MAD robust outliers per return flag — both statistics are
-      // nearest-rank order statistics, the flag a pure integer compare
-      val li = T(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          round(col("l_extendedprice") * 100).cast("long").as("price_c"))
-      ext.Robust.madOutliers(li, "l_returnflag", "price_c", kMad = 3,
-        keep = Seq("l_orderkey", "l_linenumber", "l_returnflag", "price_c"))
-    }),
-
-    "q_regex" -> ((s, dir) => {
-      // regexp extraction surface (RE2-safe patterns: no backrefs or
-      // lookaround, so Java regex and RE2 agree): group extraction,
-      // boolean match, global count
-      val p = T(s, dir, "part")
-      p.select(col("p_partkey"),
-        regexp_extract(col("p_name"), "^([a-z]+) ([a-z]+)", 2).as("second_word"),
-        col("p_name").rlike("^[a-z]+ [a-z]+$").as("two_words"),
-        regexp_count(col("p_name"), lit("[aeiou]")).cast("long").as("n_vowels"))
-    }),
-
-    "q_pivot_multi" -> ((s, dir) => {
-      // pivot with MULTIPLE aggregates per pivot value (beyond unfold's
-      // hard-coded first()): explicit value list keeps columns stable
-      T(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .pivot("l_linestatus", Seq("O", "F"))
-        .agg(sum(col("l_quantity")).as("qty"), count(lit(1)).as("n"))
-    }),
-
-    "q_lift" -> ((s, dir) => {
-      // market-basket association: top part pairs by lift (support ratio),
-      // mirror of the PMI trick — integer lift>1 filter, micro-nat score
-      val lp = T(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val n = lp.select(countDistinct(col("o")).as("n_orders"))
-      val pairs = lp.as("a").join(lp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .groupBy(col("a.p").as("p_a"), col("b.p").as("p_b"))
-        .agg(count(lit(1)).as("c_ab"))
-      val sup = lp.groupBy(col("p").as("pk")).agg(count(lit(1)).as("c"))
-      pairs.filter(col("c_ab") >= 3)
-        .join(sup.select(col("pk").as("p_a"), col("c").as("c_a")), "p_a")
-        .join(sup.select(col("pk").as("p_b"), col("c").as("c_b")), "p_b")
-        .crossJoin(broadcast(n))
-        .filter(col("c_ab").cast("decimal(38,0)") * col("n_orders") >
-          col("c_a").cast("decimal(38,0)") * col("c_b")) // lift > 1, exact
-        .select(col("p_a"), col("p_b"), col("c_ab"),
-          round(log((col("c_ab") * col("n_orders")).cast("double") /
-            (col("c_a") * col("c_b")).cast("double")) * 1e6).cast("long").as("lift_micro"))
-        .orderBy(col("lift_micro").desc, col("p_a"), col("p_b"))
-        .limit(50)
-    }),
-
-    "q_cube" -> ((s, dir) => {
-      // full CUBE lattice (all 4 grouping combinations) — completes the
-      // rollup/grouping-sets family
-      T(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-    }),
-
-    "q_ntile" -> ((s, dir) => {
-      // ntile quartiles per returnflag — but NOT as a 3-partition window
-      // (each flag would single-partition-sort a third of the table):
-      // exact closed-form ntile over range-partitioned ranks with offset
-      // scalars (ext.Ranks.groupedNtile, the ev_rfm pattern generalized)
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), col("l_returnflag"), col("l_extendedprice"))
-      ext.Ranks.groupedNtile(li, "l_returnflag",
-          Seq(col("l_extendedprice").asc, col("l_orderkey").asc,
-            col("l_linenumber").asc), 4, "quartile")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          col("quartile").cast("int").as("quartile"))
-    }),
-
-    "q_winsor" -> ((s, dir) => {
-      // per-group winsorization on NEAREST-RANK order statistics (a value
-      // that exists in the data — engine-exact, unlike interpolated
-      // quantiles whose float blend can't hash-match across engines)
-      val li = T(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          round(col("l_extendedprice") * 100).cast("long").as("price_c"))
-      ext.Robust.winsorize(li, "l_returnflag", "price_c", 0.05, 0.95,
-        keep = Seq("l_orderkey", "l_linenumber", "l_returnflag", "price_c"))
-    }),
-
-    "q_moments" -> ((s, dir) => {
-      // distributed correlation/covariance the ENGINE-EXACT way: emit the
-      // integer-scaled moment sums (cents) as DECIMAL(38) — exact in both
-      // engines, order-free — and let consumers derive corr/covar;
-      // a float corr() aggregate is accumulation-order-dependent and can
-      // never hash-match across engines
-      val li = T(s, dir, "lineitem")
-      val x = round(col("l_extendedprice") * 100).cast("decimal(18,0)")
-      val y = round(col("l_discount") * 100).cast("decimal(18,0)")
-      // sums stay DECIMAL(38,0) internally (overflow-safe), but render as
-      // STRING: the driver's hash canonicalization of wide decimals differs
-      // from DuckDB's, so both engines present the digits as text (r3 fix)
-      li.groupBy("l_returnflag").agg(
-        count(lit(1)).as("n"),
-        sum(x).cast("decimal(38,0)").cast("string").as("sx"),
-        sum(y).cast("decimal(38,0)").cast("string").as("sy"),
-        sum(x * x).cast("decimal(38,0)").cast("string").as("sxx"),
-        sum(y * y).cast("decimal(38,0)").cast("string").as("syy"),
-        sum(x * y).cast("decimal(38,0)").cast("string").as("sxy"))
-    }),
-
-    "q_moving" -> ((s, dir) => {
-      // moving aggregates over a ROWS frame: 5-row trailing sum and count
-      // per supplier in ship order — one (key, time) shuffle, integral
-      // quantities so the frame sum is fp-exact
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("l_suppkey"))
-        .orderBy(col("l_shipdate").asc, col("l_orderkey").asc, col("l_linenumber").asc)
-        .rowsBetween(-4, org.apache.spark.sql.expressions.Window.currentRow)
-      T(s, dir, "lineitem")
-        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-          col("l_shipdate"), col("l_quantity"))
-        .withColumn("mov_qty", sum(col("l_quantity")).over(w))
-        .withColumn("mov_n", count(lit(1)).over(w))
-    }),
-
-    "ta_chunks" -> ((s, dir) => {
-      // RAG-style overlapping chunking: 50-token windows, stride 40 —
-      // pure array expressions, zero shuffles
-      ext.TextAnalysis.chunk(T(s, dir, "documents"), "doc_id", "text",
-        window = 50, stride = 40)
-        .withColumnRenamed("id", "doc_id")
-    }),
-
-    "q_cdc" -> ((s, dir) => {
-      // CDC apply (Delta-MERGE semantics without a table format): base
-      // snapshot + deterministic changelog (upserts ×1.1 on %5 keys at
-      // seq 1, deletes on %7 keys at seq 2, inserts at seq 1) → latest
-      // sequence number per key wins, deletes drop the key. ONE shuffle
-      // (the per-key window); price exposed in exact cents.
-      val o = T(s, dir, "orders").select("o_orderkey", "o_totalprice")
-      val base = o.select(col("o_orderkey").as("k"),
-        col("o_totalprice").as("p"), lit(0L).as("seq"), lit("B").as("op"))
-      val upserts = o.where(col("o_orderkey") % 5 === 0)
-        .select(col("o_orderkey").as("k"), (col("o_totalprice") * 1.1).as("p"),
-          lit(1L).as("seq"), lit("U").as("op"))
-      val inserts = o.where(col("o_orderkey") % 11 === 0)
-        .select((col("o_orderkey") + 30000000L).as("k"), col("o_totalprice").as("p"),
-          lit(1L).as("seq"), lit("I").as("op"))
-      val deletes = o.where(col("o_orderkey") % 7 === 0)
-        .select(col("o_orderkey").as("k"), lit(0.0).as("p"),
-          lit(2L).as("seq"), lit("D").as("op"))
-      val log = base.unionByName(upserts).unionByName(inserts).unionByName(deletes)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("k")).orderBy(col("seq").desc)
-      log.withColumn("__rn__", row_number().over(w))
-        .where(col("__rn__") === 1 && col("op") =!= "D")
-        .select(col("k").as("o_orderkey"),
-          round(col("p") * 100).cast("long").as("price_c"), col("op").as("last_op"))
-    }),
-
-    "q_fuzzy_join" -> ((s, dir) => {
-      // EXACT record linkage: all customer-name pairs within edit distance
-      // 1 via deletion-neighborhood blocking (SymSpell) — candidates join
-      // on xxhash64(variant) ids only, then exact levenshtein verify, so
-      // the result provably equals the DuckDB cross-join oracle
-      ext.FuzzyJoin.editDistanceSelfJoin(
-        T(s, dir, "customer"), "c_custkey", "c_name", maxDist = 1)
-    }),
-
-    "q_fuzzy_join2" -> ((s, dir) => {
-      // edit-distance-2 record linkage (the round-5 judge ask): SymSpell
-      // 2-deletion neighborhoods — O(len²) variants per row, still pure
-      // codegen'd array expressions — blocked by nation so the quadratic
-      // verify stage is bounded per block, exactly the way production ER
-      // deploys d=2 (FuzzyJoinSpec proves block+verify ≡ the naive theta
-      // join; the oracle is the same-nation cross join)
-      ext.FuzzyJoin.editDistanceSelfJoin(
-        T(s, dir, "customer"), "c_custkey", "c_name", maxDist = 2,
-        blockCol = Some("c_nationkey"))
-    }),
-
-    "q_grouping_sets" -> ((s, dir) => {
-      // explicit grouping sets (finer than rollup/cube): per-flag,
-      // per-status, and grand-total rows from ONE pass — Spark expands to
-      // a single Expand + hash aggregate, no re-scan per set
-      T(s, dir, "lineitem").createOrReplaceTempView("graft_li_gs")
-      s.sql("""SELECT l_returnflag, l_linestatus,
-                      sum(l_quantity) AS sum_qty, count(*) AS n
-               FROM graft_li_gs
-               GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""")
-    }),
-
-    "ta_perplexity" -> ((s, dir) => {
-      // CCNet-style LM quality filter: add-k bigram model trained on a
-      // deterministic hash-half of the corpus, every doc scored by total
-      // NLL; terms fixed-pointed to micro-nats so the sum is order-free
-      ext.LangModel.bigramNll(T(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    "dd_jaccard_join" -> ((s, dir) => {
-      // EXACT set-similarity self-join via prefix filtering (AllPairs/
-      // PPJoin): provably equal to the naive all-pairs comparison, so it
-      // carries a full DuckDB cross-join oracle — unlike the LSH family;
-      // candidate shuffle carries (rank, id) pairs only
-      ext.SimJoin.jaccardJoin(T(s, dir, "documents"), "doc_id", "text", 0.9)
-    }),
-
-    "srch_bm25" -> ((s, dir) => {
-      // BM25 keyword ranking as a vocabulary-projected scan: zero data
-      // shuffles, one broadcast stats row, TakeOrdered top-k; scores in
-      // floor-basis-points (ln can differ 1 ulp across engines)
-      ext.Search.bm25TopK(T(s, dir, "documents"), "doc_id", "text",
-        Seq("spark", "dup", "vector"), 25)
-    }),
-
-    "srch_mmr" -> ((s, dir) => {
-      // MMR diversified re-ranking (Carbonell & Goldstein, SIGIR 1998):
-      // greedy top-5 from the BM25 top-20 pool, trading relevance
-      // against max token-set Jaccard to anything already selected
-      // (λ = 0.7 ⇒ score = 7·reln − 3·maxsim in micro ints — exact).
-      // The greedy fold runs on the DRIVER over the collected pool —
-      // the standard re-rank shape: k² similarity lookups over 20 rows,
-      // bounded no matter the corpus size; the corpus-scale work (BM25
-      // scan + top-k heap) stays distributed. Oracle replays the same
-      // five steps as unrolled argmax CTEs.
-      val terms = Seq("spark", "dup", "vector")
-      val pool = ext.Search.bm25TopK(T(s, dir, "documents"), "doc_id", "text",
-          terms, 20).select("doc_id", "score_bp")
-      val toks = T(s, dir, "documents").select(col("doc_id"),
-        array_distinct(ext.Dedup.tokens(col("text"))).as("ts"))
-      val rows = pool.join(toks, "doc_id")
-        .select(col("doc_id"), col("score_bp"), col("ts")).collect()
-      final case class Cand(id: Long, bp: Long, reln: Long, ts: Set[String])
-      // empty / undersized pools degrade to fewer output rows (the oracle
-      // shape), never a driver crash on max/maxBy of an empty collection
-      val maxBp = math.max(rows.map(_.getLong(1)).foldLeft(0L)(math.max), 1L)
-      val cands = rows.map(r => Cand(r.getLong(0), r.getLong(1),
-        r.getLong(1) * 1000000L / maxBp, r.getSeq[String](2).toSet)).sortBy(_.id)
-      def jac(a: Set[String], b: Set[String]): Long = {
-        val inter = (a & b).size.toLong
-        inter * 1000000L / math.max(a.size + b.size - inter, 1L)
-      }
-      val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Cand, Long, Long)]
-      for (rank <- 1L to math.min(5L, cands.length.toLong)) {
-        val chosen = cands.filter(c => !selected.exists(_._2.id == c.id))
-          .map { c =>
-            val ms = if (selected.isEmpty) 0L
-              else selected.map(s => jac(c.ts, s._2.ts)).max
-            (c, ms, 7L * c.reln - 3L * ms)
-          }.maxBy { case (c, _, mmr) => (mmr, -c.id) }
-        selected += ((rank, chosen._1, chosen._2, chosen._3))
-      }
-      val out = selected.toSeq.map { case (rank, c, ms, mmr) =>
-        (rank, c.id, c.bp, c.reln, ms, mmr) }
-      import s.implicits._
-      out.toDF("rank", "doc_id", "score_bp", "rel_norm_micro",
-        "maxsim_micro", "mmr_score")
-    }),
-
-    "srch_hybrid" -> ((s, dir) => {
-      // hybrid RAG retrieval: BM25 keyword pool + cosine vector pool
-      // fused by reciprocal-rank fusion in integer micro-units (one
-      // deterministic division per rank — engine-exact); top-15 of the
-      // fused union
-      ext.Search.hybridTopK(T(s, dir, "documents"), T(s, dir, "embeddings"),
-        "doc_id", "text", "vec_id", "embedding",
-        Seq("spark", "dup", "vector"), queryVecId = 0L, k = 15)
-        .select(col("id").as("doc_id"), col("rrf_micro"), col("kw_rank"), col("vec_rank"))
-    }),
-
-    "ev_scd2" -> ((s, dir) => {
-      // SCD2 history: per-user event_type state runs with half-open
-      // validity; one key shuffle, exchange reused across both windows
-      ext.Relational.scd2(events(s, dir), "user_id", "ts",
-        Seq("event_type"), Seq("event_id"))
-    }),
-
-    "ev_funnel" -> ((s, dir) => {
-      // view → purchase attribution within 1 hour: one (key, time)
-      // shuffle + a RANGE window (tie-deterministic across engines)
-      ext.Relational.funnel(events(s, dir), "user_id", "ts",
-        "view", "purchase", "event_type", withinSeconds = 3600)
-    }),
-
-    "sim_quant" -> ((s, dir) => {
-      // symmetric int8 quantization of embeddings: amax (order-free max of
-      // |x|) + floor(x/amax*127 + 0.5) — fixed-order IEEE, engine-exact
-      val v = col("embedding")
-      val amax = array_max(transform(v, x => abs(x.cast("double"))))
-      T(s, dir, "embeddings")
-        .withColumn("amax", amax)
-        .select(col("vec_id"), col("amax"),
-          array_join(
-            when(col("amax") === 0, array().cast("array<string>"))
-              .otherwise(transform(v, x =>
-                floor(x.cast("double") / col("amax") * 127 + 0.5).cast("string"))),
-            ",").as("q8"))
-    }),
-
-    "q_salted_agg" -> ((s, dir) => {
-      // salted two-phase aggregation must equal the plain aggregate
-      // (l_quantity is integral, so the double partial sums are exact)
-      ext.Skew.saltedSumCount(
-        T(s, dir, "lineitem").select("l_returnflag", "l_quantity"),
-        Seq("l_returnflag"), "l_quantity")
-    }),
-
-    "q_salted_join" -> ((s, dir) => {
-      // salted equi-join (hot-key spreading: left rows row-hash-salted,
-      // small right replicated per salt) must equal the PLAIN join — the
-      // manual skew fallback where AQE skew splitting doesn't fire
-      val li = T(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey").as("suppkey"))
-      val sup = T(s, dir, "supplier")
-        .select(col("s_suppkey").as("suppkey"), col("s_nationkey"))
-      ext.Skew.saltedJoin(li, sup, Seq("suppkey"))
-        .select("l_orderkey", "l_linenumber", "suppkey", "s_nationkey")
-    }),
-
-    // ---- extended: event-time windowing (batch == streaming transform) ----
-
-    "ev_window" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(round(col("value") * 10000).cast("long")).as("value_c"))
-    }),
-
-    // ---- extended: temporal/relational joins Spark lacks natively ----
-
-    "q_asof" -> ((s, dir) => {
-      // for every event, the user's most recent (<=) purchase value —
-      // the classic time-series snapshot join, one shuffle on user_id
-      val ev = events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value").as("last_purchase_value"))
-      ext.Relational.asofJoin(
-        ev.select("event_id", "user_id", "ts", "event_type"), purchases,
-        "user_id", "ts", Seq("last_purchase_value"))
-    }),
-
-    "q_range_join" -> ((s, dir) => {
-      // interval containment via bucketed equi-join; band edges derive
-      // from min/max only (exact in fp — no accumulation-order drift)
-      val ev = events(s, dir)
-      val bands = ev.groupBy(col("event_type").as("band_type"))
-        .agg(min(col("value")).as("lo"),
-          ((min(col("value")) + max(col("value"))) / 2).as("hi"))
-      ext.Relational.rangeJoin(
-        ev.select("event_id", "event_type", "value"), "value",
-        bands, "lo", "hi", width = 16.0)
-        .select("event_id", "event_type", "value", "band_type", "lo", "hi")
-    }),
-
-    "q_range_sql" -> ((s, dir) => {
-      // the SAME interval join as q_range_join but written as a plain SQL
-      // theta join and rewritten by the RangeJoinRule optimizer rule —
-      // BroadcastNestedLoopJoin becomes a bucketed equi-join; conf stays
-      // set because optimization happens when the driver executes the plan
-      if (!s.experimental.extraOptimizations.contains(plans.RangeJoinRule))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ plans.RangeJoinRule
-      s.conf.set(plans.RangeJoinRule.WidthConf, "16")
-      events(s, dir).createOrReplaceTempView("graft_events_rj")
-      s.sql("""WITH bands AS (SELECT event_type AS band_type, min(value) AS lo,
-                                     (min(value) + max(value)) / 2 AS hi
-                              FROM graft_events_rj GROUP BY 1)
-               SELECT e.event_id, e.event_type, e.value, b.band_type, b.lo, b.hi
-               FROM graft_events_rj e JOIN bands b
-               ON e.value >= b.lo AND e.value <= b.hi""")
-    }),
-
-    "ev_sessions" -> ((s, dir) => {
-      // gap-based batch sessionization: 30-minute silence starts a session
-      ext.Relational.sessionize(
-        events(s, dir).select("user_id", "ts", "value"),
-        "user_id", "ts", gapSeconds = 1800, valueCol = Some("value"))
-    }),
-
-    "q_diff" -> ((s, dir) => {
-      // snapshot diff (added/removed/changed) — the "new" snapshot is
-      // derived deterministically so the oracle can rebuild it: every
-      // 7th key deleted, every 11th repriced (×2, fp-exact), every 13th
-      // re-keyed into a fresh id (an add)
-      val o = T(s, dir, "orders").select("o_orderkey", "o_totalprice")
-      val base = o.where(col("o_orderkey") % 7 =!= 0)
-        .select(col("o_orderkey"),
-          when(col("o_orderkey") % 11 === 0, col("o_totalprice") * 2)
-            .otherwise(col("o_totalprice")).as("o_totalprice"))
-      val added = o.where(col("o_orderkey") % 13 === 0)
-        .select((col("o_orderkey") + 10000000L).as("o_orderkey"),
-          col("o_totalprice"))
-      ext.Diff.snapshotDiff(o, base.unionByName(added),
-        Seq("o_orderkey"), Seq("o_totalprice"))
-    }),
-
-    "ta_sample_n" -> ((s, dir) => {
-      // deterministic quota sampling: exactly 5 docs per language by md5
-      // order — the reproducible "n examples per stratum" picker
-      ext.Sampling.sampleNPerStratum(T(s, dir, "documents"),
-        col("lang"), col("doc_id"), 5)
-        .select("doc_id", "lang")
-    }),
-
-    "ta_overlap" -> ((s, dir) => {
-      // cross-source contamination matrix: pairwise shared-8-gram counts
-      // between sources — the "how much did crawl A leak into crawl B"
-      // report. No gram self-join: one groupBy(gram) collects each
-      // gram's sorted source set (≤|sources|) and emits its ordered
-      // pairs inline — pair fan-out bounded by |sources|² per gram, not
-      // by join machinery (round 4 shipped a string self-join here).
-      // Grams ride as 60-bit md5 fingerprints so the distinct + groupBy
-      // shuffle 8-byte longs instead of ~50-byte strings (the oracle
-      // replays the identical slice; distinct grams collide only at
-      // ~2⁻⁶⁰ — the xxhash64-band-key tradeoff, applied to shuffle IO)
-      // fanOut: 8-gram explode + md5-per-gram is the query's CPU (r12
-      // ProbeJobs: 5.6 s single-task stage); no-op at natural parallelism
-      val g = ext.Par.fanOut(T(s, dir, "documents"))
-        .select(col("source"), explode(ext.Dedup.wordNgrams(col("text"), 8)).as("gs"))
-        .select(col("source"),
-          expr("CAST(conv(substring(md5(gs), 1, 15), 16, 10) AS BIGINT)").as("g"))
-        .distinct()
-      g.groupBy("g").agg(array_sort(collect_set(col("source"))).as("ss"))
-        .filter(size(col("ss")) >= 2)
-        .select(explode(expr(
-          "flatten(transform(ss, (x, i) -> transform(slice(ss, i + 2, size(ss)), y -> struct(x AS src_a, y AS src_b))))")).as("p"))
-        .groupBy(col("p.src_a").as("src_a"), col("p.src_b").as("src_b"))
-        .agg(count(lit(1)).as("shared_grams"))
-    }),
-
-    "ta_source_stats" -> ((s, dir) => {
-      // per-source corpus report card: doc count, token volume, integer
-      // quality sums (exact — a float mean could not hash-match)
-      val d = T(s, dir, "documents")
-        .withColumn("quality_bp",
-          floor(ext.TextAnalysis.rawQualityScore(col("text")) * 10000).cast("long"))
-        .withColumn("n_tokens", ext.TextAnalysis.tokenCount(col("text")))
-      d.groupBy("source").agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("total_tokens"),
-        sum(col("quality_bp")).as("quality_bp_sum"),
-        min(col("quality_bp")).as("quality_bp_min"),
-        max(col("quality_bp")).as("quality_bp_max"))
-    }),
-
-    "ta_bleu" -> ((s, dir) => {
-      // corpus BLEU-2 (Papineni et al. 2002) between adjacent document
-      // pairs (even doc = hypothesis, its successor = reference) rolled
-      // up per source — the generation-eval metric next to ta_rouge's
-      // recall overlap. Clipped n-gram counts are exact integers
-      // (Σ min(count_hyp, count_ref) via one grouped join per order, no
-      // pairwise token loops); the brevity penalty is an integer
-      // rational; the only doubles are one ln per precision order per
-      // SOURCE (5 rows), each rounded once to micro-nats — the
-      // ta_entropy discipline. Pairing is an equi-join on doc_id + 1,
-      // not a window: no per-source sort at any scale.
-      // fanOut: the gram explodes over BOTH texts (×3 consumers of `pr`)
-      // are the CPU and ran in the single scan partition (r12 ProbeJobs:
-      // three overlapping ~2.5 s single-task stages)
-      val d = ext.Par.fanOut(T(s, dir, "documents"))
-      val pr = d.filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id").as("pid"), col("source"), col("text").as("htext"))
-        .join(d.select((col("doc_id") - 1).as("pid"), col("text").as("rtext")),
-          "pid")
-      val base = pr.select(col("pid"), col("source"),
-        ext.TextAnalysis.tokenCount(col("htext")).as("c"),
-        ext.TextAnalysis.tokenCount(col("rtext")).as("r"))
-      def grams(n: Int, c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        if (n == 1) ext.Dedup.tokens(c) else ext.Dedup.wordNgrams(c, n)
-      def clipped(n: Int): DataFrame = {
-        val hg = pr.select(col("pid"), explode(grams(n, col("htext"))).as("g"))
-          .groupBy("pid", "g").agg(count(lit(1)).as("ch"))
-        val rg = pr.select(col("pid"), explode(grams(n, col("rtext"))).as("g"))
-          .groupBy("pid", "g").agg(count(lit(1)).as("cr"))
-        hg.groupBy("pid").agg(sum(col("ch")).as(s"p${n}_den"))
-          .join(hg.join(rg, Seq("pid", "g"))
-            .groupBy("pid").agg(sum(least(col("ch"), col("cr"))).as(s"p${n}_num")),
-            Seq("pid"), "left")
-          .na.fill(0L, Seq(s"p${n}_num"))
-      }
-      base.join(clipped(1), Seq("pid"), "left").join(clipped(2), Seq("pid"), "left")
-        .na.fill(0L, Seq("p1_num", "p1_den", "p2_num", "p2_den"))
-        .groupBy("source").agg(count(lit(1)).as("n_pairs"),
-          sum("c").as("c_total"), sum("r").as("r_total"),
-          sum("p1_num").as("p1_num"), sum("p1_den").as("p1_den"),
-          sum("p2_num").as("p2_num"), sum("p2_den").as("p2_den"))
-        .withColumn("bp_micro", expr("""CASE WHEN c_total >= r_total
-             THEN CAST(0 AS BIGINT)
-             ELSE -CAST(((r_total - c_total) * 1000000) div c_total AS BIGINT) END"""))
-        .withColumn("log_bleu_micro", expr(
-          """CASE WHEN p1_num = 0 OR p2_num = 0 OR p1_den = 0 OR p2_den = 0 THEN NULL
-             ELSE bp_micro - ((-(CAST(round(ln(CAST(p1_num AS DOUBLE) / p1_den) * 1000000) AS BIGINT)
-                 + CAST(round(ln(CAST(p2_num AS DOUBLE) / p2_den) * 1000000) AS BIGINT))) div 2) END"""))
-    }),
-
-    "ta_kappa" -> ((s, dir) => {
-      // inter-annotator agreement (Cohen's kappa, 1960) between two
-      // independent curation raters — the reliability check an RLHF /
-      // labeling pipeline runs before trusting its labels. Rater A =
-      // composite quality gate (ta_curate's quality_bp >= 5000), rater
-      // B = length gate (>= 50 tokens). The 2×2 contingency is exact
-      // integers; po, pe and kappa ride micro fixed point with the
-      // N²-scale products in DECIMAL(38,0) (HUGEINT oracle) so a
-      // trillion-doc corpus cannot wrap. kappa can be NEGATIVE (worse
-      // than chance), so the division runs on |numerator| with an
-      // explicit sign — Spark's `div` and DuckDB's `//` agree on
-      // nonnegative operands only.
-      val d = T(s, dir, "documents")
-        .select(
-          (floor(ext.TextAnalysis.rawQualityScore(col("text")) * 10000) >= 5000)
-            .cast("int").as("a"),
-          (ext.TextAnalysis.tokenCount(col("text")) >= 50).cast("int").as("b"))
-      d.agg(
-          count(lit(1)).as("n"),
-          sum(when(col("a") === 1 && col("b") === 1, 1L).otherwise(0L)).as("n11"),
-          sum(when(col("a") === 1 && col("b") === 0, 1L).otherwise(0L)).as("n10"),
-          sum(when(col("a") === 0 && col("b") === 1, 1L).otherwise(0L)).as("n01"),
-          sum(when(col("a") === 0 && col("b") === 0, 1L).otherwise(0L)).as("n00"))
-        // chance-agreement mass pm = Σ marginal products; kappa =
-        // (N·agree − pm) / (N² − pm), all DECIMAL(38,0)
-        .withColumn("pm", expr("""CAST(n11 + n10 AS DECIMAL(38,0)) * (n11 + n01)
-                 + CAST(n01 + n00 AS DECIMAL(38,0)) * (n10 + n00)"""))
-        .withColumn("kn", expr("CAST(n AS DECIMAL(38,0)) * (n11 + n00) - pm"))
-        // kd = N² − pm is 0 iff both raters are constant (pm = N²); the
-        // greatest(…, 1) guard makes that degenerate corpus read kappa = 0
-        // on BOTH engines (Spark non-ANSI would yield NULL, DuckDB // would
-        // raise — they diverge without it); kn = 0 there too, so the guard
-        // never changes a non-degenerate result
-        .withColumn("kd", expr("greatest(CAST(n AS DECIMAL(38,0)) * n - pm, 1)"))
-        .select(col("n").as("n_docs"), col("n11"), col("n10"), col("n01"), col("n00"),
-          expr("CAST((n11 + n00) * 1000000 div n AS BIGINT)").as("po_micro"),
-          expr("CAST((pm * 1000000) div (CAST(n AS DECIMAL(38,0)) * n) AS BIGINT)")
-            .as("pe_micro"),
-          expr("""CAST(CASE WHEN kn >= 0 THEN (kn * 1000000) div kd
-                 ELSE -((-kn * 1000000) div kd) END AS BIGINT)""").as("kappa_micro"))
-    }),
-
-    "ta_curate" -> ((s, dir) => {
-      // the WHOLE curation pipeline as ONE lazy plan — quality gate →
-      // language gate → exact dedup → benchmark decontamination → train
-      // split → sequence packing — every stage individually oracled
-      // elsewhere, composed here and hash-matched END TO END (the "could
-      // a user run their curation on this" proof)
-      val d = T(s, dir, "documents")
-      val gated = d
-        .withColumn("quality_bp",
-          floor(ext.TextAnalysis.rawQualityScore(col("text")) * 10000).cast("long"))
-        .filter(col("quality_bp") >= 5000)
-        .filter(ext.TextAnalysis.langId(col("text")) === "en")
-      val deduped = ext.Dedup.exactDedup(gated, Seq(md5(col("text"))), col("doc_id"))
-      val bench = d.filter(substring(md5(col("doc_id").cast("string")), 1, 8) < "0ccccccd")
-      val clean = deduped.join(
-        ext.CorpusClean.decontaminate(deduped, bench, "doc_id", "text", 8)
-          .filter(!col("contaminated")).select("doc_id"), "doc_id")
-      val train = ext.Sampling.hashSplit(clean, col("doc_id"))
-        .filter(col("split") === "train")
-      val withTok = train.withColumn("n_tokens", ext.TextAnalysis.tokenCount(col("text")))
-      ext.Sampling.packSequences(withTok, col("lang"), col("doc_id"),
-        col("n_tokens"), 2048)
-        .select("doc_id", "lang", "n_tokens", "bin", "bin_offset")
-    }),
-
-    "ta_wordpiece" -> ((s, dir) => {
-      // REAL subword tokenization: greedy longest-match against the
-      // corpus top-200 + [a-z0-9] vocabulary, applied to distinct words
-      // (dictionary encoding); oracle replays the exact greedy walk as a
-      // DuckDB recursive CTE
-      ext.TextAnalysis.wordpieceStats(T(s, dir, "documents"), "doc_id", "text", 200)
-    }),
-
-    "ta_bpe" -> ((s, dir) => {
-      // BPE merge TRAINING (Sennrich 2016): learn the top-8 merge rules
-      // from dictionary-encoded pair statistics; every intermediate
-      // symbol state is bit-identical across engines (sentinel-delimited
-      // replace), so the oracle replays all 8 unrolled steps exactly
-      ext.Bpe.trainMerges(T(s, dir, "documents"), "text", 8)
-    }),
-
-    "ta_entropy" -> ((s, dir) => {
-      // character-entropy quality signal (gibberish/boilerplate detector):
-      // per-doc char histogram → the integer pieces of Shannon entropy
-      // H = ln N − (Σ c·ln c)/N, fixed-pointed per TERM (c · round(ln c
-      // ·10⁶) as long — micro-nat trick from ta_perplexity) so the sums
-      // are order-free and engine-exact; whitespace excluded
-      val d = T(s, dir, "documents")
-      val chars = d.select(col("doc_id"),
-        explode(filter(split(col("text"), ""),
-          x => !(x === "" || x === " " || x === "\t" || x === "\n" || x === "\r"))).as("ch"))
-      val agg = chars.groupBy("doc_id", "ch").agg(count(lit(1)).as("c"))
-        .groupBy("doc_id")
-        .agg(sum(col("c")).as("n_chars"),
-          sum(col("c") * round(log(col("c").cast("double")) * 1e6).cast("long")).as("clnc_micro"))
-      d.select("doc_id").join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("n_chars"), lit(0L)).as("n_chars"),
-          coalesce(col("clnc_micro"), lit(0L)).as("clnc_micro"))
-    }),
-
-    "ta_bpe_apply" -> ((s, dir) => {
-      // the APPLY side of the tokenizer lifecycle: train 8 merges, then
-      // tokenize the whole corpus with them — per-doc word/subword counts
-      // (the compression the tokenizer actually buys); merges fold once
-      // per DISTINCT word (dictionary encoding), not once per token
-      val d = T(s, dir, "documents")
-      val merges = ext.Bpe.learn(d, "text", 8).map { case (l, r, _) => (l, r) }
-      ext.Bpe.tokenize(d, "doc_id", "text", merges)
-    }),
-
-    "ta_feathash" -> ((s, dir) => {
-      // the hashing trick (Weinberger et al. 2009): tokens → fixed 256-dim
-      // sparse counts via md5-derived indices — no vocabulary state at
-      // all, the property that makes it the streaming/100 TB featurizer;
-      // md5 keeps the index computable in both engines
-      val toks = T(s, dir, "documents")
-        .select(col("doc_id"), explode(ext.Dedup.tokens(col("text"))).as("tok"))
-      toks
-        .withColumn("dim",
-          pmod(conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long"), lit(256L)))
-        .groupBy("doc_id", "dim").agg(count(lit(1)).as("cnt"))
-    }),
-
-    "q_features" -> ((s, dir) => {
-      // ML feature assembly: one-hot the category against its sorted
-      // vocabulary + numerics, into one fixed-layout array column
-      val li = T(s, dir, "lineitem")
-      val flags = Seq("A", "N", "R") // sorted l_returnflag vocabulary
-      val oneHot = flags.map(f => when(col("l_returnflag") === f, 1L).otherwise(0L))
-      // render the vector as a joined string: raw array columns crash the
-      // driver's pandas comparator (unhashable ndarray) — same canonical
-      // form q_arrays uses (r3 fix)
-      li.select(col("l_orderkey"), col("l_linenumber"),
-        array_join(array(oneHot :+ col("l_quantity").cast("long") :+
-          round(col("l_extendedprice") * 100).cast("long"): _*)
-          .cast("array<string>"), ",").as("features"))
-    }),
-
-    "ev_wau" -> ((s, dir) => {
-      // rolling 7-day active users per day: each event-day contributes to
-      // the 7 windows ending on d..d+6; exact distinct-user counts
-      val ev = events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-      ev.select(col("user_id"), explode(sequence(col("d"),
-          date_add(col("d"), 6))).as("win_end"))
-        .groupBy("win_end")
-        .agg(countDistinct(col("user_id")).as("wau"))
-    }),
-
-    "ev_pattern" -> ((s, dir) => {
-      // MATCH_RECOGNIZE-lite sequence analytics: per-user event-type
-      // string in (ts, event_id) order, then plain regexes over the
-      // sequence answer funnel questions (view-streak→purchase runs,
-      // signup-before-purchase) with no dedicated operator. One key
-      // shuffle; the sequence is bounded by the user's event count.
-      val ev = events(s, dir)
-      ev.select(col("user_id"),
-          struct(col("ts"), col("event_id"), col("event_type")).as("e"))
-        .groupBy("user_id")
-        .agg(array_join(transform(array_sort(collect_list(col("e"))),
-          e => substring(e.getField("event_type"), 1, 1)), "").as("seq"))
-        .select(col("user_id"), col("seq"),
-          length(col("seq")).cast("long").as("n_events"),
-          regexp_count(col("seq"), lit("v+p")).cast("long").as("n_funnels"),
-          col("seq").rlike("s.*p").as("signup_then_purchase"))
-    }),
-
-    "ev_coverage" -> ((s, dir) => {
-      // interval-union coverage (gaps-and-islands over half-open activity
-      // intervals): each event opens a 5-minute window; overlapping/
-      // touching windows merge per user — islands counted and covered
-      // time summed in integer microseconds, engine-exact
-      import org.apache.spark.sql.expressions.Window
-      val base = events(s, dir).select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("st"),
-        (unix_micros(col("ts")) + lit(300000000L)).as("en"))
-      val ord = Window.partitionBy("user_id")
-        .orderBy(col("st").asc, col("event_id").asc)
-      val isNew = when(col("st") > coalesce(
-        max(col("en")).over(ord.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(-1L)), 1).otherwise(0)
-      base.withColumn("is_new", isNew)
-        .withColumn("island",
-          sum(col("is_new")).over(ord.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy(col("user_id"), col("island"))
-        .agg(min(col("st")).as("ms"), max(col("en")).as("me"),
-          count(lit(1)).as("ne"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_islands"),
-          sum(col("me") - col("ms")).as("covered_us"),
-          sum(col("ne")).as("n_events"))
-    }),
-
-    "q_wmedian" -> ((s, dir) => {
-      // weighted median (lower) per group from a value HISTOGRAM — no
-      // per-group sort of the data; the histogram cumsum itself is now
-      // ext.Ranks.groupedRunningSum (range-partitioned running sums +
-      // carry scalars), so even a high-cardinality value domain never
-      // single-partition-sorts; quantity-weighted, all-integer, exact
-      val li = T(s, dir, "lineitem").select(col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_c"),
-        col("l_quantity").cast("long").as("wt"))
-      val h = li.groupBy("l_returnflag", "price_c").agg(sum(col("wt")).as("w"))
-      val totals = h.groupBy("l_returnflag").agg(sum(col("w")).as("total"))
-      ext.Ranks.groupedRunningSum(h, "l_returnflag",
-          Seq(col("price_c").asc), "w", "cum")
-        .join(broadcast(totals), Seq("l_returnflag"))
-        .filter(col("cum") * 2 >= col("total"))
-        .groupBy("l_returnflag")
-        .agg(min(col("price_c")).as("wmedian_c"), max(col("total")).as("total_wt"))
-    }),
-
-    "ta_shuffle" -> ((s, dir) => {
-      // deterministic training-order shuffle: docs land in 32 shards by
-      // seeded hash, position within shard by hash order — a reproducible
-      // epoch permutation with NO global sort (shard-local ranks only,
-      // the shape that survives 100 TB: shards are the parallel unit)
-      import org.apache.spark.sql.expressions.Window
-      val d = T(s, dir, "documents")
-        .select(col("doc_id"),
-          md5(concat(lit("epoch0:"), col("doc_id").cast("string"))).as("h"))
-        .withColumn("shard",
-          conv(substring(col("h"), 1, 4), 16, 10).cast("long") % 32)
-      val w = Window.partitionBy("shard").orderBy(col("h").asc, col("doc_id").asc)
-      d.select(col("doc_id"), col("shard"),
-        row_number().over(w).cast("long").as("pos"))
-    }),
-
-    "ta_temperature" -> ((s, dir) => {
-      // temperature-weighted source mixing (α = 0.5): per-source quotas
-      // ∝ √n in integer micro fixed point (IEEE sqrt is correctly
-      // rounded, so both engines derive identical quotas), then a
-      // deterministic hash-ordered selection fills each quota exactly.
-      // The per-source selection rank is ext.Ranks.groupedRank (range-
-      // partitioned ranks + offset scalars), so a giant source never
-      // single-partition-sorts — the scale note round 4 left as a TODO.
-      val d = T(s, dir, "documents")
-      val weights = d.groupBy("source").agg(count(lit(1)).as("n"))
-        .withColumn("w_micro",
-          round(sqrt(col("n").cast("double")) * 1e6).cast("long"))
-      val tot = weights.agg(sum(col("w_micro")).as("tw"))
-      val quota = weights.crossJoin(tot)
-        .select(col("source"), expr("(250 * w_micro) div tw").as("quota"))
-      val ranked = ext.Ranks.groupedRank(
-        d.select(col("doc_id"), col("source"),
-          md5(col("doc_id").cast("string")).as("__h__")),
-        "source", Seq(col("__h__").asc, col("doc_id").asc), "rn")
-      ranked.join(quota, "source").filter(col("rn") <= col("quota"))
-        .select(col("doc_id"), col("source"))
-    }),
-
-    "sim_centroids" -> ((s, dir) => {
-      // per-label embedding centroids in integer fixed point: component
-      // sums of round(x·1e6) are order-free BIGINTs, so the 64-dim
-      // centroid table is engine-exact (float→double widening is exact;
-      // a float centroid sum would be accumulation-order-dependent)
-      T(s, dir, "embeddings")
-        .select(col("label").cast("long").as("label"),
-          posexplode(col("embedding")).as(Seq("dim", "x")))
-        .groupBy(col("label"), col("dim").cast("long").as("dim"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("x").cast("double") * 1e6).cast("long")).as("sum_micro"))
-    }),
-
-    "ta_stem" -> ((s, dir) => {
-      // suffix-stripping stemmer-lite as an explicit CASE chain (no
-      // regex dialect risk — exact cross-engine parity): top-50 stems by
-      // corpus frequency, ties broken lexicographically
-      val tok = explode(ext.TextAnalysis.tokens(col("text"))).as("tok")
-      val t = T(s, dir, "documents").select(tok).filter(length(col("tok")) > 0)
-      val stem = when(col("tok").endsWith("ies") && length(col("tok")) > 4,
-          concat(expr("substring(tok, 1, length(tok) - 3)"), lit("y")))
-        .when(col("tok").endsWith("ing") && length(col("tok")) > 5,
-          expr("substring(tok, 1, length(tok) - 3)"))
-        .when(col("tok").endsWith("ed") && length(col("tok")) > 4,
-          expr("substring(tok, 1, length(tok) - 2)"))
-        .when(col("tok").endsWith("ly") && length(col("tok")) > 4,
-          expr("substring(tok, 1, length(tok) - 2)"))
-        .when(col("tok").endsWith("es") && length(col("tok")) > 4,
-          expr("substring(tok, 1, length(tok) - 2)"))
-        .when(col("tok").endsWith("s") && !col("tok").endsWith("ss")
-            && length(col("tok")) > 3,
-          expr("substring(tok, 1, length(tok) - 1)"))
-        .otherwise(col("tok"))
-      t.select(stem.as("stem"))
-        .groupBy("stem").agg(count(lit(1)).as("n_tokens"))
-        .orderBy(col("n_tokens").desc, col("stem").asc)
-        .limit(50)
-    }),
-
-    "ta_wsample" -> ((s, dir) => {
-      // weighted sampling without replacement (Efraimidis–Spirakis
-      // exponential keys), weights = token counts: micro-nat fixed-point
-      // keys + one IEEE division make the top-50 cut engine-exact
-      val d = T(s, dir, "documents")
-        .withColumn("n_tokens", size(ext.Dedup.tokens(col("text"))).cast("long"))
-      ext.Sampling.weightedSampleK(d, "doc_id", col("n_tokens"), 50)
-        .select("doc_id", "n_tokens", "nl_micro")
-    }),
-
-    "q_arrays" -> ((s, dir) => {
-      // array surface: collect per group (sorted — collect order is
-      // nondeterministic by contract), higher-order transform/filter/
-      // aggregate; arrays render as joined strings so the cross-engine
-      // hash compares a canonical form
-      val li = T(s, dir, "lineitem")
-      li.groupBy("l_orderkey")
-        .agg(sort_array(collect_list(col("l_linenumber"))).as("__lines__"),
-          sort_array(collect_set(col("l_returnflag"))).as("__flags__"))
-        .select(col("l_orderkey"),
-          array_join(col("__lines__"), ",").as("lines"),
-          array_join(col("__flags__"), ",").as("flags"),
-          size(col("__lines__")).as("n_lines"),
-          aggregate(col("__lines__"), lit(0L), (acc, x) => acc + x).as("line_sum"),
-          array_join(transform(col("__lines__"), x => (x * 10).cast("string")), ",")
-            .as("lines_x10"),
-          array_join(filter(col("__lines__"), _ % 2 === 0).cast("array<string>"), ",")
-            .as("even_lines"))
-    }),
-
-    "q_json" -> ((s, dir) => {
-      // semi-structured columns: schema'd from_json beats per-row path
-      // evaluation (one parse, codegen'd field access, pruned by Catalyst)
-      val ev = events(s, dir)
-      ev.select(col("event_id"),
-          from_json(col("props"), lit("k BIGINT")).getField("k").as("k"),
-          get_json_object(col("props"), "$.k").cast("long").as("k_path"))
-        .withColumn("k_doubled", col("k") * 2)
-    }),
-
-    "q_dates" -> ((s, dir) => {
-      // date/calendar function surface (exact integer/date semantics on
-      // both engines, incl. add_months end-of-month clamping)
-      val o = T(s, dir, "orders")
-        .withColumn("d", col("o_orderdate").cast("date"))
-      o.select(col("o_orderkey"), col("d"),
-        trunc(col("d"), "month").as("month_start"),
-        add_months(col("d"), 3).as("plus_3m"),
-        last_day(col("d")).as("month_end"),
-        datediff(col("d"), lit("1995-01-01").cast("date")).as("days_since_95"),
-        year(col("d")).as("y"), month(col("d")).as("m"), dayofmonth(col("d")).as("dom"))
-    }),
-
-    "q_strings" -> ((s, dir) => {
-      // string function surface incl. edit distance (exact DP, engine-
-      // independent) and split/position semantics
-      val p = T(s, dir, "part")
-      p.select(col("p_partkey"),
-        upper(col("p_name")).as("uname"),
-        substring(col("p_name"), 1, 5).as("prefix5"),
-        reverse(col("p_name")).as("rname"),
-        levenshtein(col("p_name"), col("p_type")).as("edit_dist"),
-        element_at(split(col("p_name"), " "), 1).as("first_word"),
-        instr(col("p_name"), "a").cast("int").as("pos_a"),
-        length(trim(col("p_name"))).cast("long").as("len_trim"),
-        lpad(col("p_partkey").cast("string"), 10, "0").as("key_padded"))
-    }),
-
-    "q_approx" -> ((s, dir) => {
-      // sketch aggregates, the 100 TB substitutes for exact distinct/
-      // percentile (one pass, bounded memory, mergeable across executors).
-      // Approx values can't hash-match another engine, so the CONTRACT is
-      // oracled instead: emit |approx-exact|/exact <= bound as booleans —
-      // DuckDB asserts literal TRUE, and any sketch drifting out of its
-      // error envelope fails the driver gate.
-      // fanOut: the exact-median sort and quantile sketches are compute-
-      // bound; a bytes-sized single scan partition would serialize them.
-      // The distinct count aggregates SEPARATELY from the sketches: mixing
-      // count(DISTINCT) with other aggregates makes Catalyst's distinct
-      // rewrite run every sketch at (key, distinct-col) granularity —
-      // one QuantileSummaries/HLL buffer PER (flag, partkey) instead of
-      // per flag (measured 26 s vs 1 s at sf0.1). Both branches are 6-row
-      // outputs; the join is free.
-      val li = ext.Par.fanOut(T(s, dir, "lineitem"))
-      val exact = li.groupBy("l_returnflag")
-        .agg(count_distinct(col("l_partkey")).as("exact_nd"))
-      val sketches = li.groupBy("l_returnflag").agg(
-        approx_count_distinct(col("l_partkey"), 0.01).as("__hll__"),
-        median(col("l_extendedprice")).as("__med__"),
-        percentile_approx(col("l_extendedprice"), lit(0.5), lit(10000)).as("__pa__"))
-      exact.join(sketches, Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("exact_nd"),
-          (abs(col("__hll__") - col("exact_nd")) / col("exact_nd") <= 0.05).as("hll_ok"),
-          (abs(col("__pa__") - col("__med__")) / col("__med__") <= 0.01).as("pctl_ok"))
-    }),
-
-    "q_lag_lead" -> ((s, dir) => {
-      // navigation windows: lag/lead/ntile complete the analytic surface
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      T(s, dir, "orders").select(
-        col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"),
-        lag(col("o_orderkey"), 1).over(w).as("prev_key"),
-        lead(col("o_orderkey"), 1).over(w).as("next_key"),
-        ntile(4).over(w).as("quartile"))
-    }),
-
-    "stream_dedup" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // driver-visible STREAMING dedup: dropDuplicatesWithinWatermark over
-      // the file stream; keys projected out, so the surviving-row choice
-      // can't affect the result — equals batch DISTINCT on the keys
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = normalizeTs(s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet"))
-      val deduped = graft.streaming.Streams
-        .dedupWithinWatermark(stream, Seq("user_id", "event_type"), "1 hour")
-        .select("user_id", "event_type")
-      s.catalog.dropTempView("graft_stream_dedup")
-      val q = deduped.writeStream.format("memory").queryName("graft_stream_dedup")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_dedup")
-    }),
-
-    "stream_curate" -> ((s, dir) => withStreamShuffle(s, dir, "documents") {
-      // STREAMING curation — ta_curate's gates on live ingest: stateless
-      // quality gate → stream-static LEFT ANTI against the benchmark's
-      // contaminated fingerprints → stateful exact dedup. Output columns
-      // are all TEXT-derived (fp, quality_bp), so the arbitrary
-      // dedup-winner choice is invisible and the result equals the batch
-      // DISTINCT — determinism by construction, not by arrival order.
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val bench = docs.filter(substring(md5(col("doc_id").cast("string")), 1, 8) < "0ccccccd")
-      val contaminatedFps = ext.CorpusClean.decontaminate(docs, bench, "doc_id", "text")
-        .filter(col("contaminated"))
-        .join(docs.select(col("doc_id"), md5(col("text")).as("fp")), Seq("doc_id"))
-        .select("fp").distinct()
-      val schema = docs.schema
-      val stream = s.readStream.schema(schema).parquet(s"$dir/[d]ocuments.parquet")
-        .withColumn("fp", md5(col("text")))
-        .withColumn("quality_bp",
-          floor(ext.TextAnalysis.rawQualityScore(col("text")) * 10000).cast("long"))
-        .filter(col("quality_bp") >= 5000)
-        .join(contaminatedFps, Seq("fp"), "left_anti")
-        .dropDuplicates("fp")
-        .select("fp", "quality_bp")
-      s.catalog.dropTempView("graft_stream_curate")
-      val q = stream.writeStream.format("memory").queryName("graft_stream_curate")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_curate")
-    }),
-
-    "stream_neardup" -> ((s, dir) => withStreamShuffle(s, dir, "documents") {
-      // STREAMING near-duplicate detection — the live-ingest shape of
-      // dd_minhash: incoming docs are minhash-banded with the SAME
-      // stateless native expression and probed against the static banded
-      // index of the existing corpus (stream-static equi-join, no stream
-      // state beyond the final pair dedup). Result equals the batch
-      // banded pair set, so it shares dd_minhash's DuckDB replay. At
-      // scale the per-band est recompute would move behind an ids-first
-      // distinct exactly as the batch path does.
-      graft.functions.Hashing.register(s)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val k = 64; val bands = 16; val r = k / bands
-      def bandedOf(df: DataFrame): DataFrame = df
-        .select(col("doc_id"),
-          graft.functions.Hashing.textMinhash(col("text"), 3, k).as("sig"))
-        .filter(element_at(col("sig"), 1) =!= lit(Long.MaxValue))
-        .select(col("doc_id"), col("sig"),
-          posexplode(transform(sequence(lit(0), lit(bands - 1)),
-            b => xxhash64(concat_ws(",", slice(col("sig"), b * r + 1, lit(r))), b))))
-        .select(col("doc_id"), col("sig"), col("pos").as("band"), col("col").as("bhash"))
-      // static-side bucket cap (same semantics as Dedup.bucketPairs): an
-      // oversized bucket keeps ONLY its min-id star center on the static
-      // side, so streamed members pair with the center (the batch star
-      // edges) instead of all-pairs exploding on boilerplate clusters
-      val bw = org.apache.spark.sql.expressions.Window.partitionBy("band", "bhash")
-      val staticBanded = bandedOf(s.read.parquet(s"$dir/documents.parquet"))
-      // fail fast if the star cap would actually trigger: the cap-free
-      // dd_minhash oracle replays this result only while every bucket
-      // stays under the cap (true at all test fixtures — 500 docs at
-      // sf0.01); a silent hash mismatch at a bigger fixture would read
-      // as an engine bug when it's an oracle-assumption break
-      val maxBucket = staticBanded.groupBy("band", "bhash")
-        .agg(count(lit(1)).as("n")).agg(max(col("n"))).head.getLong(0)
-      require(maxBucket <= 2000,
-        s"stream_neardup: widest static LSH bucket has $maxBucket rows > " +
-          "2000-row star cap — capped pairs would diverge from the " +
-          "cap-free dd_minhash oracle; add the cap to the oracle or raise it")
-      val static = staticBanded
-        .withColumn("__bsize__", count(lit(1)).over(bw))
-        .withColumn("__bmin__", min(col("doc_id")).over(bw))
-        .filter(col("__bsize__") <= 2000 || col("doc_id") === col("__bmin__"))
-        .select(col("doc_id").as("id_a"), col("sig").as("sig_a"), col("band"), col("bhash"))
-      val stream = bandedOf(s.readStream.schema(schema).parquet(s"$dir/[d]ocuments.parquet"))
-        .select(col("doc_id").as("id_b"), col("sig").as("sig_b"), col("band"), col("bhash"))
-      val pairs = stream.join(static, Seq("band", "bhash"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          ext.Dedup.sigJaccard(col("sig_a"), col("sig_b")).as("est_jaccard"))
-        .filter(col("est_jaccard") >= 0.5)
-        .dropDuplicates("id_a", "id_b")
-      s.catalog.dropTempView("graft_stream_neardup")
-      val q = pairs.writeStream.format("memory").queryName("graft_stream_neardup")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_neardup")
-    }),
-
-    "stream_window" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // driver-visible STREAMING check: the same windowed aggregation run
-      // as a Structured Streaming job (file source → AvailableNow trigger →
-      // memory sink, complete mode) must equal the ev_window batch result.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      // file streaming sources take a directory or glob, not a plain file —
-      // the [e] character-class glob matches only events.parquet but keeps
-      // the path a glob so basePath resolves to the directory
-      val stream = normalizeTs(s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet"))
-      val agg = stream
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(round(col("value") * 10000).cast("long")).as("value_c"))
-        .select(col("window.start").as("hour"), col("event_type"),
-          col("n_events"), col("value_c"))
-      s.catalog.dropTempView("graft_stream_window")
-      val q = agg.writeStream.format("memory").queryName("graft_stream_window")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_window")
-    }),
-
-    "stream_enrich" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // stream-STATIC join: the streaming micro-batch joins a static dim
-      // snapshot read per batch (the broadcast enrichment every event
-      // pipeline does); aggregation keyed by the dim attribute proves the
-      // join ran inside the stream — result equals the batch join oracle
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = normalizeTs(s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet"))
-      val dim = s.read.parquet(s"$dir/customer.parquet")
-        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      val joined = stream.join(broadcast(dim), Seq("user_id"), "inner")
-        .groupBy(col("c_mktsegment"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(round(col("value") * 100).cast("long")).as("value_c"))
-      s.catalog.dropTempView("graft_stream_enrich")
-      val q = joined.writeStream.format("memory").queryName("graft_stream_enrich")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_enrich")
-    }),
-
-    "ev_sessions_typed" -> ((s, dir) => {
-      // the TYPED stateful sessionizer (flatMapGroupsWithState) run in
-      // batch mode — same state machine the stream runs; output limited
-      // to order-free fields (start, count) so the oracle is exact
-      import s.implicits._
-      val ev = events(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"), col("props").cast("string"))
-        .as[streaming.Streams.Event]
-      streaming.Streams.sessionize(ev, gapMinutes = 30)(s)
-        .toDF()
-        .select(col("user_id"), col("session_start"), col("n_events"))
-    }),
-
-    "stream_sessions" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // driver-visible STREAMING sessionization: native session_window
-      // (event-time gap merge in the session state store) over the events
-      // stream, complete mode → memory sink; equals the batch
-      // gaps-and-islands oracle. Boundary: silence == gap still merges
-      // (strictly-greater starts a session) — pinned by StreamingSpec.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = normalizeTs(s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet"))
-        .select("user_id", "ts", "value")
-      val agg = streaming.Streams.sessionWindowAgg(stream)
-      s.catalog.dropTempView("graft_stream_sessions")
-      val q = agg.writeStream.format("memory").queryName("graft_stream_sessions")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_sessions")
-    }),
-
-    "stream_recovery" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // checkpoint RECOVERY as a driver-gated query: half the input is
-      // processed by one streaming query, the query stops (the "crash"
-      // boundary), more files land, and a NEW query object restarts from
-      // the SAME checkpoint — the file source must resume from recorded
-      // offsets (batch ids continue, seen files are skipped; require()
-      // fails the query if the restart began at batch 0), and the final
-      // upsert table must equal the batch latest-per-key oracle exactly
-      import org.apache.spark.sql.streaming.Trigger
-      val base = new java.io.File("/tmp/graft-stream-recovery")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(base)
-      val inDir = s"$base/in"; val tableDir = s"$base/table"; val ckpt = s"$base/ckpt"
-      val ev = events(s, dir).select(col("user_id"), col("event_id"),
-        col("event_type"), round(col("value") * 100).cast("long").as("value_c"))
-      def land(part: Int): Unit =
-        ev.filter(pmod(col("event_id"), lit(4)) === part).repartition(1)
-          .write.mode("append").parquet(inDir)
-      def runOnce(): org.apache.spark.sql.streaming.StreamingQuery = {
-        val schema = s.read.parquet(inDir).schema
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(inDir)
-          .writeStream
-          .foreachBatch(streaming.Streams.upsertSink(tableDir, Seq("user_id"), "event_id") _)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      land(0); land(1)
-      val q1 = runOnce(); q1.awaitTermination(); q1.stop()
-      land(2); land(3)
-      val q2 = runOnce(); q2.awaitTermination(); q2.stop()
-      val ids = q2.recentProgress.map(_.batchId)
-      require(ids.nonEmpty && ids.min >= 1,
-        s"restart did not resume from checkpoint: batch ids ${ids.toSeq}")
-      s.read.parquet(tableDir)
-    }),
-
-    "stream_join" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // driver-visible stream-stream INTERVAL JOIN: views matched to same-
-      // user purchases within the following hour, both sides watermarked
-      // (bounded join state), AvailableNow → memory sink; must equal the
-      // batch self-join oracle exactly
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      def src = normalizeTs(s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet"))
-      val views = src.filter(col("event_type") === "view")
-        .select(col("user_id"), col("event_id").as("view_id"), col("ts").as("view_ts"))
-      val purchases = src.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-          col("ts").as("purchase_ts"), col("value"))
-      val joined = streaming.Streams.intervalJoin(views, purchases,
-        "user_id", "p_user_id", "view_ts", "purchase_ts", "1 HOUR")
-        .select(col("user_id"), col("view_id"), col("purchase_id"),
-          col("view_ts"), col("purchase_ts"),
-          round(col("value") * 10000).cast("long").as("value_c"))
-      s.catalog.dropTempView("graft_stream_join")
-      val q = joined.writeStream.format("memory").queryName("graft_stream_join")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_join")
-    }),
-
-    "stream_asof" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // streaming AS-OF enrichment (Streams.asofEnrich): each view
-      // carries the most recent same-user purchase STRICTLY BEFORE it
-      // in (ts, event_id) order, via flatMapGroupsWithState run as a
-      // real stream — state is ONE carry row per user, so the store is
-      // O(#users) at any event volume. Must equal the batch
-      // last-ignore-nulls window oracle exactly.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      import s.implicits._
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = normalizeTs(s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet"))
-        .filter(col("event_type").isin("view", "purchase"))
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-          round(col("value") * 10000).cast("long").as("value_c"))
-        .as[streaming.Streams.AsofEvent]
-      val out = streaming.Streams.asofEnrich(src)(s).toDF()
-      s.catalog.dropTempView("graft_stream_asof")
-      val q = out.writeStream.format("memory").queryName("graft_stream_asof")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_asof")
-    }),
-
-    "sk_hll" -> ((s, dir) => {
-      // mergeable HyperLogLog registers (functions.SketchAgg): ONE pass,
-      // 1 KiB buffer per group, map-side combine — the 100 TB substitute
-      // for count(DISTINCT) when groups × keys don't fit a shuffle. The
-      // registers are deterministic FNV-1a maxima (order-free), and the
-      // estimate is a fixed-order dyadic fold (2^-rho terms), so the
-      // DOUBLE result is bit-identical to the DuckDB replay. hll_est is
-      // the RAW estimator (valid here: nd >= 2.5m); below that regime the
-      // emitted zero-register count is the linear-counting sufficient
-      // statistic for the caller (m*ln(m/V) uses ln, which is not
-      // bit-stable across engines — SketchSpec covers both regimes).
-      // Exact distinct aggregates SEPARATELY (see q_approx: mixing
-      // distinct with other aggs expands the sketch to per-(flag,key)
-      // granularity).
-      val li = T(s, dir, "lineitem")
-      val p = hllP
-      val m = 1 << p
-      val amm = hllAlphaM2(m)
-      val regs = li.groupBy("l_returnflag").agg(
-        graft.functions.SketchAgg.hllRegisters(col("l_orderkey").cast("string"), p).as("regs"))
-      val exact = li.groupBy("l_returnflag")
-        .agg(count_distinct(col("l_orderkey")).as("exact_nd"))
-      regs.join(exact, Seq("l_returnflag"))
-        .select(col("l_returnflag"),
-          size(filter(col("regs"), x => x === 0)).cast("long").as("zeros"),
-          (lit(amm) / aggregate(col("regs"), lit(0.0),
-            (acc, x) => acc + pow(lit(2.0), -x.cast("double")))).as("hll_est"),
-          col("exact_nd"))
-    }),
-
-    "sk_cms" -> ((s, dir) => {
-      // Count-Min heavy hitters: ONE pass builds a 4×1024-counter matrix
-      // (32 KiB, elementwise-sum merge); the probe side broadcasts the
-      // single sketch row and reads min-of-4 counters per candidate — at
-      // 100 TB the sketch replaces a second full scan when candidate keys
-      // are known (boilerplate/stop-token detection). est >= true_cnt by
-      // construction (one-sided error); collisions of 2000 parts into
-      // 1024 buckets make the overestimate REAL, and the oracle replays
-      // the exact collided counters.
-      val li = T(s, dir, "lineitem")
-      val keys = li.select(col("l_partkey").cast("string").as("g"))
-      val sk = keys.agg(
-        graft.functions.SketchAgg.cmsCounters(col("g"), cmsDepth, cmsLogW).as("cms"))
-      val heavy = keys.groupBy("g").agg(count(lit(1)).as("true_cnt"))
-        .filter(col("true_cnt") >= 45)
-      heavy.join(broadcast(sk))
-        .select(col("g").cast("long").as("l_partkey"), col("true_cnt"),
-          graft.functions.SketchAgg.cmsEstimate(
-            col("cms"), col("g"), cmsDepth, cmsLogW).as("cms_est"))
-    }),
-
-    "q_influence" -> ((s, dir) => {
-      // OLS influence diagnostics (leverage + residual — the pieces of
-      // Cook's distance) for the per-flag regression price ~ quantity:
-      // the outlier/label-noise audit a training pipeline runs before
-      // trusting a fitted relation. EXACT integer route: with the group
-      // Gram sums (n, Σx, Σy, Σx², Σxy) the residual numerator
-      // e·D = y·D − (Sy·Sxx − Sx·Sxy) − (n·Sxy − Sx·Sy)·x and leverage
-      // h = (D + (n·x − Sx)²)/(n·D) are integer rationals over
-      // D = n·Sxx − Sx² — all DECIMAL(38,0) (HUGEINT oracle), micro-
-      // fixed-pointed with the |numerator|-with-sign division. Top-5
-      // per group by |e_micro| ride the bounded-heap TopKAgg (≤5 rows
-      // per key cross the wire, never the table).
-      // fanOut: the per-row DECIMAL(38,0) residual/leverage arithmetic
-      // below runs on BigDecimal (no int128 fast path) — CPU-dense work
-      // that ran inside the near-single-task scan stage (r12 ProbeJobs:
-      // 3.6 s of task time through 3 tasks)
-      val li = ext.Par.fanOut(T(s, dir, "lineitem").select(col("l_returnflag").as("flag"),
-        col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-        col("l_quantity").cast("long").as("x"),
-        round(col("l_extendedprice") * 100).cast("long").as("y_c")))
-      val st = li.groupBy("flag").agg(
-        count(lit(1)).as("n"), sum("x").as("sx"), sum("y_c").as("sy"),
-        sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"),
-        sum(expr("CAST(x AS DECIMAL(38,0)) * y_c")).as("sxy"))
-      li.join(broadcast(st), "flag")
-        // greatest(D, 1): a constant-x group would zero D; keep the
-        // division total (both engines share the guard)
-        .withColumn("d", expr(
-          "greatest(CAST(n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx, CAST(1 AS DECIMAL(38,0)))"))
-        .withColumn("e_num", expr("""CAST(y_c AS DECIMAL(38,0)) * d
-             - (CAST(sy AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sxy)
-             - (CAST(n AS DECIMAL(38,0)) * sxy - CAST(sx AS DECIMAL(38,0)) * sy) * x"""))
-        .withColumn("h_num", expr("""d + (CAST(n AS DECIMAL(38,0)) * x - sx)
-             * (CAST(n AS DECIMAL(38,0)) * x - sx)"""))
-        .withColumn("e_micro", expr("""CAST(CASE WHEN e_num >= 0
-             THEN (e_num * 1000000) div d
-             ELSE -((-e_num * 1000000) div d) END AS BIGINT)"""))
-        .withColumn("h_micro", expr(
-          "CAST((h_num * 1000000) div (CAST(n AS DECIMAL(38,0)) * d) AS BIGINT)"))
-        .groupBy("flag")
-        .agg(graft.functions.TopKAgg.topK(5,
-          abs(col("e_micro")).cast("double"),
-          (col("l_orderkey") * 8 + col("l_linenumber")).cast("double"),
-          struct(col("l_orderkey"), col("l_linenumber"), col("x"), col("y_c"),
-            col("e_micro"), col("h_micro"))).as("top"))
-        .select(col("flag"), posexplode(col("top")))
-        .select(col("flag"), (col("pos") + 1).cast("long").as("rank"),
-          col("col.l_orderkey").as("l_orderkey"),
-          col("col.l_linenumber").as("l_linenumber"),
-          col("col.x").as("x"), col("col.y_c").as("y_c"),
-          col("col.e_micro").as("e_micro"), col("col.h_micro").as("h_micro"))
-    }),
-
-    "q_ols" -> ((s, dir) => {
-      // one-pass distributed least squares: the SAME integer Gram
-      // aggregate that powers PCA (functions.GramAgg — d(d+1)/2+d+1 longs
-      // per partition, elementwise-sum merge) accumulates X^TX | X^Ty |
-      // y^Ty for [1, qty, disc_pct, price_dollars]; the driver solves the
-      // 3×3 normal equations by Cramer's rule — d² work, independent of
-      // n. Integer quantization makes the Gram ENGINE-EXACT; the double
-      // Cramer arithmetic is written in the identical operation order in
-      // the oracle, so the coefficients are bit-identical. Overflow
-      // margin: Σ price² ≈ 1.2e10·n — safe through n ≈ 7e8 rows per the
-      // BIGINT budget; beyond that, pre-aggregate per shard or widen the
-      // buffer to DECIMAL.
-      val li = T(s, dir, "lineitem")
-      val vec = array(lit(1L), col("l_quantity").cast("long"),
-        round(col("l_discount") * 100).cast("long"),
-        round(col("l_extendedprice")).cast("long"))
-      val g = li.agg(graft.functions.GramAgg.gram(vec, 4).as("g"))
-        .head().getSeq[Long](0)
-      // upper-tri row-major for d=4: (0,0)..(0,3),(1,1)..(1,3),(2,2),(2,3),(3,3)
-      val a00 = g(0).toDouble; val a01 = g(1).toDouble; val a02 = g(2).toDouble
-      val b0 = g(3).toDouble
-      val a11 = g(4).toDouble; val a12 = g(5).toDouble; val b1 = g(6).toDouble
-      val a22 = g(7).toDouble; val b2 = g(8).toDouble
-      val n = g(14)
-      val det = a00 * (a11 * a22 - a12 * a12) - a01 * (a01 * a22 - a12 * a02) +
-        a02 * (a01 * a12 - a11 * a02)
-      val beta0 = (b0 * (a11 * a22 - a12 * a12) - a01 * (b1 * a22 - a12 * b2) +
-        a02 * (b1 * a12 - a11 * b2)) / det
-      val beta1 = (a00 * (b1 * a22 - a12 * b2) - b0 * (a01 * a22 - a12 * a02) +
-        a02 * (a01 * b2 - b1 * a02)) / det
-      val beta2 = (a00 * (a11 * b2 - a12 * b1) - a01 * (a01 * b2 - b1 * a02) +
-        b0 * (a01 * a12 - a11 * a02)) / det
-      import s.implicits._
-      Seq((beta0, beta1, beta2, n)).toDF("beta0", "beta1", "beta2", "n")
-    }),
-
-    "stream_hll" -> ((s, dir) => withStreamShuffle(s, dir, "lineitem") {
-      // STREAMING cardinality sketch: the same mergeable HLL registers
-      // aggregated over a file stream (complete mode). Because the merge
-      // is an order-free elementwise max, the streamed state is EQUAL to
-      // the batch registers no matter how the source is sliced into
-      // micro-batches — the property that lets one sketch pipeline serve
-      // both the backfill scan and the live stream. Same oracle as
-      // sk_hll.
-      val schema = s.read.parquet(s"$dir/lineitem.parquet").schema
-      val stream = s.readStream.schema(schema).parquet(s"$dir/[l]ineitem.parquet")
-      val regsS = stream.groupBy("l_returnflag").agg(
-        graft.functions.SketchAgg.hllRegisters(
-          col("l_orderkey").cast("string"), hllP).as("regs"))
-      s.catalog.dropTempView("graft_stream_hll")
-      val q = regsS.writeStream.format("memory").queryName("graft_stream_hll")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val m = 1 << hllP
-      val amm = hllAlphaM2(m)
-      val exact = T(s, dir, "lineitem").groupBy("l_returnflag")
-        .agg(count_distinct(col("l_orderkey")).as("exact_nd"))
-      s.table("graft_stream_hll").join(exact, Seq("l_returnflag"))
-        .select(col("l_returnflag"),
-          size(filter(col("regs"), x => x === 0)).cast("long").as("zeros"),
-          (lit(amm) / aggregate(col("regs"), lit(0.0),
-            (acc, x) => acc + pow(lit(2.0), -x.cast("double")))).as("hll_est"),
-          col("exact_nd"))
-    }),
-
-    "srch_invindex" -> ((s, dir) => {
-      // inverted-index build (the write path behind BM25/boolean search):
-      // token → document-frequency, collection-frequency and a doc_id-
-      // ordered posting list with term frequencies. One (tok, doc) hash
-      // agg then one token agg — both map-side combinable; posting lists
-      // are rendered as canonical strings (sort_array on structs orders
-      // by doc_id) so the artifact is byte-comparable across engines. At
-      // 100 TB the token agg shards by token hash and each posting list
-      // streams through a single reducer — no global sort anywhere.
-      val toks = T(s, dir, "documents").select(col("doc_id"),
-        explode(filter(split(lower(col("text")), "\\s+"), x => x =!= "")).as("tok"))
-      val tf = toks.groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))
-      tf.groupBy("tok").agg(
-        count(lit(1)).as("df"),
-        sum(col("tf")).as("cf"),
-        array_join(transform(
-          sort_array(collect_list(struct(col("doc_id"), col("tf")))),
-          p => concat(p("doc_id").cast("string"), lit(":"), p("tf").cast("string"))),
-          ",").as("postings"))
-    }),
-
-    "q_nth" -> ((s, dir) => {
-      // null-aware navigation windows: first/last/nth_value with IGNORE
-      // NULLS over a running frame — the "carry last known value"
-      // primitive (gap fill, last-good-reading). Nulls planted on a
-      // deterministic key pattern; picked values scaled to cents AFTER
-      // selection, so both engines pick from identical doubles.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_orderpriority")
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      T(s, dir, "orders")
-        .withColumn("v",
-          when(col("o_orderkey") % 7 === 0, lit(null)).otherwise(col("o_totalprice")))
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          round(first(col("v"), ignoreNulls = true).over(w) * 100).cast("long").as("first_c"),
-          round(last(col("v"), ignoreNulls = true).over(w) * 100).cast("long").as("last_c"),
-          round(nth_value(col("v"), 3, ignoreNulls = true).over(w) * 100).cast("long").as("third_c"))
-    }),
-
-    "q_except" -> ((s, dir) => {
-      // bag semantics: EXCEPT ALL / INTERSECT ALL multiset difference and
-      // intersection (multiplicity-aware, unlike the DISTINCT set ops) —
-      // e.g. "customer order slots not yet finalized". Both are one
-      // count-per-key agg + generate in Spark's rewrite: no sort, no
-      // distinct, shuffle only on the key.
-      val a = T(s, dir, "orders").select(col("o_custkey").as("k"))
-      val b = T(s, dir, "orders").filter(col("o_orderstatus") === "F")
-        .select(col("o_custkey").as("k"))
-      a.exceptAll(b).withColumn("op", lit("except_all"))
-        .unionByName(a.intersectAll(b).withColumn("op", lit("intersect_all")))
-    }),
-
-    "sk_hll_union" -> ((s, dir) => {
-      // sketch ALGEBRA: |A ∪ B| from two groups' registers via elementwise
-      // max — no rescan, no exact distinct-union shuffle. This is why
-      // sketches beat exact counts at 100 TB: per-segment sketches roll up
-      // to any union of segments as kilobyte-sized merges. Both sides are
-      // in the raw-estimator regime (nd >= 2.5m; see sk_hll).
-      val li = T(s, dir, "lineitem")
-      val regs = li.groupBy("l_linestatus").agg(
-        graft.functions.SketchAgg.hllRegisters(
-          col("l_orderkey").cast("string"), hllP).as("regs"))
-      val wide = regs.agg(
-        first(when(col("l_linestatus") === "O", col("regs")), ignoreNulls = true).as("ro"),
-        first(when(col("l_linestatus") === "F", col("regs")), ignoreNulls = true).as("rf"))
-      val exact = li.agg(count_distinct(col("l_orderkey")).as("exact_union"))
-      wide.crossJoin(exact).select(
-        hllEstCol(col("ro")).as("hll_o"),
-        hllEstCol(col("rf")).as("hll_f"),
-        hllEstCol(zip_with(col("ro"), col("rf"), (a, b) => greatest(a, b))).as("hll_union"),
-        col("exact_union"))
-    }),
-
-    "q_ratio" -> ((s, dir) => {
-      // ratio-to-report: each line's share of its return-flag revenue.
-      // Numerator and denominator are EXACT integer cents; the share is
-      // one IEEE division of the same two longs on both engines. The
-      // per-flag total comes from a PARALLEL partial aggregate broadcast
-      // back — a `sum OVER (PARTITION BY flag)` window would instead
-      // shuffle every row of the table into 3 partitions (full-partition
-      // windows over low-cardinality keys are the q_winsor trap).
-      val li = T(s, dir, "lineitem")
-        .withColumn("rev_c", round(col("l_extendedprice") * 100).cast("long"))
-      val totals = li.groupBy("l_returnflag")
-        .agg(sum(col("rev_c")).as("flag_rev_c"))
-      li.join(broadcast(totals), Seq("l_returnflag"))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          col("rev_c"), col("flag_rev_c"),
-          (col("rev_c").cast("double") / col("flag_rev_c").cast("double"))
-            .as("rev_share"))
-    }),
-
-    "ev_rfm" -> ((s, dir) => {
-      // RFM segmentation (recency / frequency / monetary quintiles) — the
-      // classic customer scoring pass. Metrics are exact integers (days
-      // since last order vs the corpus max date, order count, spend in
-      // cents). Quintile assignment EQUALS ntile(5) over the total order
-      // (metric, custkey) — which the oracle asserts — but is computed
-      // WITHOUT a single-partition sort: each metric ordering is range-
-      // partitioned, ranked within partitions, and ≤32 per-partition
-      // counts (driver scalars, like ta_curriculum's band offsets) lift
-      // local ranks to exact global ranks; the closed-form ntile formula
-      // (first n%5 tiles get ⌈n/5⌉ rows) maps ranks to tiles. This is
-      // the ta_shuffle / SCALE.md §8b pattern — no unpartitioned Window
-      // sort remains anywhere in the plan.
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
-      val o = T(s, dir, "orders")
-      val mx = o.agg(max(col("o_orderdate").cast("date")).as("mxd"))
-      val per = o.groupBy("o_custkey").agg(
-        max(col("o_orderdate").cast("date")).as("last_d"),
-        count(lit(1)).as("frequency"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("monetary_c"))
-        .crossJoin(broadcast(mx))
-        .select(col("o_custkey"), datediff(col("mxd"), col("last_d")).cast("long").as("recency_d"),
-          col("frequency"), col("monetary_c"))
-        .localCheckpoint(true)
-      val n = per.count()
-      val q = n / 5
-      val r = n % 5
-      def quintile(sort: Seq[org.apache.spark.sql.Column], out: String): DataFrame = {
-        // checkpoint AFTER the range exchange: the offsets collect and
-        // the final ranked run must read the SAME partitioning — range
-        // boundaries are sample-based (rdd-id-seeded), so two separate
-        // executions could split differently and break the offsets
-        val ranged = per.repartitionByRange(32, sort: _*)
-          .withColumn("_pid", spark_partition_id().cast("long"))
-          .localCheckpoint(true)
-        val local = ranged.withColumn("_rn",
-          row_number().over(Window.partitionBy("_pid").orderBy(sort: _*)).cast("long"))
-        var acc = 0L
-        val offRows = ranged.groupBy("_pid").agg(count(lit(1)).as("c"))
-          .collect().map(x => (x.getLong(0), x.getLong(1))).sortBy(_._1)
-          .map { case (p, c) => val o0 = acc; acc += c; (p, o0) }.toSeq
-        val g = local.join(broadcast(offRows.toDF("_pid", "_off")), Seq("_pid"))
-          .withColumn("_g", col("_rn") + col("_off"))
-        // ntile(5) closed form: ranks 1..r(q+1) → ⌈rank/(q+1)⌉, rest →
-        // r + ⌈(rank - r(q+1))/q⌉ (q=0 ⇒ first branch covers all rows)
-        g.select(col("o_custkey"),
-          when(col("_g") <= lit(r * (q + 1)),
-            expr(s"CAST((_g + $q) div ${q + 1} AS BIGINT)"))
-          .otherwise(lit(r) + expr(s"CAST((_g - ${r * (q + 1)} + ${q - 1}) div ${math.max(q, 1L)} AS BIGINT)"))
-          .as(out))
-      }
-      val rs = quintile(Seq(col("recency_d").asc, col("o_custkey").asc), "r_score")
-      val fs = quintile(Seq(col("frequency").desc, col("o_custkey").asc), "f_score")
-      val ms = quintile(Seq(col("monetary_c").desc, col("o_custkey").asc), "m_score")
-      per.join(rs, "o_custkey").join(fs, "o_custkey").join(ms, "o_custkey")
-        .select(col("o_custkey"), col("recency_d"), col("frequency"),
-          col("monetary_c"), col("r_score"), col("f_score"), col("m_score"))
-    }),
-
-    "q_mv_delta" -> ((s, dir) => {
-      // incremental aggregate maintenance (materialized-view delta merge):
-      // a base aggregate (orders before the cutover) merged with the
-      // delta's partial aggregate via full-outer coalesce — count and sum
-      // are ALGEBRAIC, so base + delta equals the full rescan EXACTLY,
-      // which is precisely what the oracle asserts (it aggregates the
-      // whole table). At 100 TB this is the difference between touching
-      // one day and touching five years.
-      val o = T(s, dir, "orders")
-      def aggOf(df: DataFrame) = df.groupBy("o_custkey").agg(
-        count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("spend_c"))
-      val base = aggOf(o.filter(col("o_orderdate") < lit("2000-01-01")))
-      val delta = aggOf(o.filter(col("o_orderdate") >= lit("2000-01-01")))
-      base.as("b").join(delta.as("d"), Seq("o_custkey"), "full_outer")
-        .select(col("o_custkey"),
-          (coalesce(col("b.n_orders"), lit(0L)) + coalesce(col("d.n_orders"), lit(0L))).as("n_orders"),
-          (coalesce(col("b.spend_c"), lit(0L)) + coalesce(col("d.spend_c"), lit(0L))).as("spend_c"))
-    }),
-
-    "q_mask" -> ((s, dir) => {
-      // PII masking with REFERENTIAL CONSISTENCY: keys are replaced by a
-      // salted-hash surrogate token on BOTH sides of the FK, so the
-      // masked tables still join — the property pseudonymized exports
-      // must keep. Stateless expression (no lookup table to secure or
-      // shuffle); the aggregate proves the join survives masking.
-      def token(c: org.apache.spark.sql.Column) =
-        substring(md5(concat(lit("mask:"), c.cast("string"))), 1, 16)
-      val cust = T(s, dir, "customer")
-        .select(token(col("c_custkey")).as("cust_token"), col("c_mktsegment"))
-      val ord = T(s, dir, "orders")
-        .select(token(col("o_custkey")).as("cust_token"),
-          round(col("o_totalprice") * 100).cast("long").as("price_c"))
-      cust.join(ord, Seq("cust_token"))
-        .groupBy("cust_token", "c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"), sum(col("price_c")).as("spend_c"))
-    }),
-
-    "q_forget" -> ((s, dir) => {
-      // deletion-propagation audit (right-to-be-forgotten): a subject
-      // cohort cascades through the FK graph customer→orders→lineitem.
-      // Single pass per big table: customer gets one conditional
-      // aggregate; the deleted order keys are materialized ONCE
-      // (ids-only localCheckpoint, cohort-sized) and lineitem's
-      // delete/retain counts come from one broadcast-probe scan with
-      // count + count(when) — round 4 ran six independent count jobs
-      // and recomputed the order cohort inside the lineitem probe.
-      val custAgg = T(s, dir, "customer").agg(
-        count(lit(1)).as("n"),
-        count(when(col("c_custkey") % 97 === 0, lit(1))).as("d")).head()
-      val subj = T(s, dir, "customer").filter(col("c_custkey") % 97 === 0)
-        .select(col("c_custkey"))
-      val delKeys = T(s, dir, "orders").join(broadcast(subj),
-          col("o_custkey") === col("c_custkey"), "left_semi")
-        .select(col("o_orderkey").as("k")).localCheckpoint(true)
-      val ordN = T(s, dir, "orders").count()
-      val ordD = delKeys.count()
-      val liAgg = T(s, dir, "lineitem").join(broadcast(delKeys),
-          col("l_orderkey") === col("k"), "left")
-        .agg(count(lit(1)).as("n"), count(col("k")).as("d")).head()
-      import s.implicits._
-      val (cn, cd) = (custAgg.getLong(0), custAgg.getLong(1))
-      val (ln2, ld) = (liAgg.getLong(0), liAgg.getLong(1))
-      Seq(("customer", cd, cn - cd), ("orders", ordD, ordN - ordD),
-          ("lineitem", ld, ln2 - ld))
-        .toDF("tbl", "rows_to_delete", "rows_retained")
-    }),
-
-    "q_joinsize" -> ((s, dir) => {
-      // join-cardinality planning stat: |A ⋈ B| on a key decomposes as
-      // Σ_k cntA(k)·cntB(k); the per-key contributions ARE the skew map
-      // (the keys AQE would split). Two count aggregates + a join of the
-      // count tables — the fact tables themselves never join. Output:
-      // top-10 contributing keys plus the exact total each row carries.
-      val a = T(s, dir, "orders").groupBy(col("o_orderkey").as("k"))
-        .agg(count(lit(1)).as("n_a"))
-      val b = T(s, dir, "lineitem").groupBy(col("l_orderkey").as("k"))
-        .agg(count(lit(1)).as("n_b"))
-      val contrib = a.join(b, Seq("k"))
-        .select(col("k"), col("n_a"), col("n_b"), (col("n_a") * col("n_b")).as("contrib"))
-      val total = contrib.agg(sum(col("contrib")).as("join_rows"))
-      contrib.orderBy(col("contrib").desc, col("k").asc).limit(10)
-        .crossJoin(broadcast(total))
-    }),
-
-    "ev_transitions" -> ((s, dir) => {
-      // behavioral Markov transitions: per-user event sequences (ts then
-      // event_id tie-break) → (from, to) counts and row-conditional
-      // probabilities (one IEEE division of exact longs). One keyed
-      // window + one hash agg over 25 type-pairs.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val ev = events(s, dir)
-      val pairs = ev.select(col("user_id"), col("event_type").as("from_type"),
-        lead(col("event_type"), 1).over(w).as("to_type"))
-        .filter(col("to_type").isNotNull)
-      val cnt = pairs.groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
-      val tot = pairs.groupBy("from_type").agg(count(lit(1)).as("n_from"))
-      cnt.join(tot, Seq("from_type"))
-        .select(col("from_type"), col("to_type"), col("n"), col("n_from"),
-          (col("n").cast("double") / col("n_from").cast("double")).as("p"))
-    }),
-
-    "ev_markov_steady" -> ((s, dir) => {
-      // steady-state of the ev_transitions Markov chain: 20 power
-      // iterations of v·P from the uniform start. The transition matrix
-      // is MODEL-sized (|event types|² ≤ 25 rows), so the distributed
-      // work is the pair counting; the iteration runs on the driver and
-      // the oracle replays it with list_reduce folds in the identical
-      // ascending-state order (every + and × in the same sequence —
-      // doubles bit-identical). States with no outgoing transitions
-      // self-loop (deterministic convention, applied in both engines).
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val pairs = events(s, dir).select(col("user_id"),
-          col("event_type").as("from_type"),
-          lead(col("event_type"), 1).over(w).as("to_type"))
-        .filter(col("to_type").isNotNull)
-      val cnt = pairs.groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
-      val tot = pairs.groupBy("from_type").agg(count(lit(1)).as("n_from"))
-      val rows = cnt.join(tot, Seq("from_type"))
-        .select(col("from_type"), col("to_type"), col("n"), col("n_from"))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      val states = rows.flatMap(r => Seq(r._1, r._2)).distinct.sorted
-      val ns = states.length
-      val idx = states.zipWithIndex.toMap
-      val p = Array.ofDim[Double](ns, ns)
-      val hasOut = Array.fill(ns)(false)
-      rows.foreach { case (f, t, n, nf) =>
-        p(idx(f))(idx(t)) = n.toDouble / nf.toDouble
-        hasOut(idx(f)) = true
-      }
-      (0 until ns).foreach(i => if (!hasOut(i)) p(i)(i) = 1.0)
-      var v = Array.fill(ns)(1.0 / ns.toDouble)
-      var it = 0
-      while (it < 20) {
-        v = Array.tabulate(ns) { j =>
-          var acc = 0.0
-          var i = 0
-          while (i < ns) { acc = acc + v(i) * p(i)(j); i += 1 }
-          acc
-        }
-        it += 1
-      }
-      states.zipWithIndex.map { case (st, i) => (st, v(i)) }.toSeq
-        .toDF("event_type", "steady_p")
-    }),
-
-    "q_checksum" -> ((s, dir) => {
-      // order-free table fingerprints (anti-entropy / replication audit):
-      // per-row canonical rendering → 60-bit md5 slice → bit_xor fold.
-      // XOR is commutative+associative, so the checksum is partitioning-
-      // invariant and two replicas compare by exchanging ONE row per
-      // table. Doubles ride as exact cents; dates as ISO strings.
-      val ord = T(s, dir, "orders").select(concat_ws("|",
-        col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        round(col("o_totalprice") * 100).cast("long"),
-        col("o_orderdate").cast("date").cast("string")).as("r"))
-      val cust = T(s, dir, "customer").select(concat_ws("|",
-        col("c_custkey"), col("c_name"), col("c_nationkey"),
-        round(col("c_acctbal") * 100).cast("long"), col("c_mktsegment")).as("r"))
-      val li = T(s, dir, "lineitem").select(concat_ws("|",
-        col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_quantity").cast("long"),
-        round(col("l_extendedprice") * 100).cast("long")).as("r"))
-      def sums(name: String, df: DataFrame) =
-        df.agg(count(lit(1)).as("n_rows"),
-          expr("bit_xor(CAST(conv(substring(md5(r), 1, 15), 16, 10) AS BIGINT))").as("checksum"))
-          .select(lit(name).as("tbl"), col("n_rows"), col("checksum"))
-      sums("orders", ord).unionByName(sums("customer", cust)).unionByName(sums("lineitem", li))
-    }),
-
-    "q_sink_roundtrip" -> ((s, dir) => {
-      // sink/source round-trip under the DRIVER's oracle (the last spec-
-      // only surface): nation is written through graft's own Sink (single-
-      // file csv, distributed NDJSON — the at-scale JSON default; the
-      // collected pretty-array variant is byte-golden-tested in
-      // GoldenPipelineSpec — and single-file parquet), re-read through
-      // graft's Source (declared-type csv inference window, castDeclared
-      // json/parquet), and fingerprinted with the q_checksum order-free
-      // 60-bit md5 XOR. The oracle reads the SAME files with DuckDB's own
-      // readers, so any byte-level format defect (quoting, header, type
-      // rendering, dropped rows) breaks the hash. Deterministic: content
-      // is fixed and the fold is order-free, so rewrites are idempotent.
-      import graft.plans.{ColumnDef, FileDef, FileSchema, SchemaType}
-      val outDir = "/tmp/graft_sink_roundtrip"
-      val schema = FileSchema("nation_rt", Seq(
-        "n_nationkey" -> ColumnDef(SchemaType.Int64),
-        "n_name" -> ColumnDef(SchemaType.Str),
-        "n_regionkey" -> ColumnDef(SchemaType.Int64)))
-      val base = T(s, dir, "nation").select(
-        col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-        col("n_regionkey").cast("long").as("n_regionkey"))
-      val legs = Seq(
-        ("csv", s"$outDir/nation_rt.csv"),       // single-file (extension path)
-        ("json", s"$outDir/nation_rt_json"),     // distributed NDJSON dir
-        ("parquet", s"$outDir/nation_rt.parquet")) // single-file parquet
-      legs.map { case (fmt, path) =>
-        val fd = FileDef(path, fmt, schema)
-        sources.Sink.save(base, fd)
-        sources.Source.load(s, fd)
-          .select(concat_ws("|", col("n_nationkey"), col("n_name"),
-            col("n_regionkey")).as("r"))
-          .agg(count(lit(1)).as("n_rows"),
-            expr("bit_xor(CAST(conv(substring(md5(r), 1, 15), 16, 10) AS BIGINT))")
-              .as("checksum"))
-          .select(lit(fmt).as("fmt"), col("n_rows"), col("checksum"))
-      }.reduce(_ unionByName _)
-    }),
-
-    "q_ridge" -> ((s, dir) => {
-      // ridge regression (L2-regularized least squares) from the SAME
-      // one-pass integer Gram aggregate as q_ols: λ is added to the
-      // non-intercept diagonal of the normal equations on the driver —
-      // zero extra distributed work, d² driver arithmetic. λ = 10⁶
-      // (exactly representable) shrinks β₁/β₂ visibly vs q_ols. The
-      // oracle repeats the identical double expression tree, so the
-      // coefficients are bit-identical.
-      val li = T(s, dir, "lineitem")
-      val vec = array(lit(1L), col("l_quantity").cast("long"),
-        round(col("l_discount") * 100).cast("long"),
-        round(col("l_extendedprice")).cast("long"))
-      val g = li.agg(graft.functions.GramAgg.gram(vec, 4).as("g"))
-        .head().getSeq[Long](0)
-      val lam = 1e6
-      val a00 = g(0).toDouble; val a01 = g(1).toDouble; val a02 = g(2).toDouble
-      val b0 = g(3).toDouble
-      val a11 = g(4).toDouble + lam; val a12 = g(5).toDouble; val b1 = g(6).toDouble
-      val a22 = g(7).toDouble + lam; val b2 = g(8).toDouble
-      val n = g(14)
-      val det = a00 * (a11 * a22 - a12 * a12) - a01 * (a01 * a22 - a12 * a02) +
-        a02 * (a01 * a12 - a11 * a02)
-      val beta0 = (b0 * (a11 * a22 - a12 * a12) - a01 * (b1 * a22 - a12 * b2) +
-        a02 * (b1 * a12 - a11 * b2)) / det
-      val beta1 = (a00 * (b1 * a22 - a12 * b2) - b0 * (a01 * a22 - a12 * a02) +
-        a02 * (a01 * b2 - b1 * a02)) / det
-      val beta2 = (a00 * (a11 * b2 - a12 * b1) - a01 * (a01 * b2 - b1 * a02) +
-        b0 * (a01 * a12 - a11 * a02)) / det
-      import s.implicits._
-      Seq((beta0, beta1, beta2, n)).toDF("beta0", "beta1", "beta2", "n")
-    }),
-
-    "sk_hll_intersect" -> ((s, dir) => {
-      // sketch set algebra, part 2: |A ∩ B| by inclusion-exclusion over
-      // the raw estimates — est(A) + est(B) − est(A ∪ B), with the union
-      // estimate from the elementwise register max (sk_hll_union). Same
-      // 100 TB story: per-segment kilobyte sketches answer any overlap
-      // question without rescanning; the exact column is the test-time
-      // truth (one aggregate over the conditional flags).
-      val li = T(s, dir, "lineitem")
-      val regs = li.groupBy("l_linestatus").agg(
-        graft.functions.SketchAgg.hllRegisters(
-          col("l_orderkey").cast("string"), hllP).as("regs"))
-      val wide = regs.agg(
-        first(when(col("l_linestatus") === "O", col("regs")), ignoreNulls = true).as("ro"),
-        first(when(col("l_linestatus") === "F", col("regs")), ignoreNulls = true).as("rf"))
-      val exact = li.groupBy("l_orderkey").agg(
-          max(when(col("l_linestatus") === "O", lit(1)).otherwise(lit(0))).as("has_o"),
-          max(when(col("l_linestatus") === "F", lit(1)).otherwise(lit(0))).as("has_f"))
-        .filter(col("has_o") === 1 && col("has_f") === 1)
-        .agg(count(lit(1)).as("exact_intersect"))
-      val ru = zip_with(col("ro"), col("rf"), (a, b) => greatest(a, b))
-      wide.crossJoin(exact).select(
-        hllEstCol(col("ro")).as("hll_o"),
-        hllEstCol(col("rf")).as("hll_f"),
-        hllEstCol(ru).as("hll_union"),
-        (hllEstCol(col("ro")) + hllEstCol(col("rf")) - hllEstCol(ru)).as("hll_intersect"),
-        col("exact_intersect"))
-    }),
-
-    "sim_hardneg" -> ((s, dir) => {
-      // contrastive hard-negative mining: per anchor, the 10 most
-      // cosine-similar vectors with a DIFFERENT label (ext.Similarity
-      // .hardNegatives — broadcast anchors, bounded-heap top-k)
-      val emb = T(s, dir, "embeddings")
-      ext.Similarity.hardNegatives(emb, emb.filter(col("vec_id") % 10 === 0),
-        "vec_id", "embedding", "label", 10)
-    }),
-
-    "ta_nbc" -> ((s, dir) =>
-      // Naive Bayes source classifier in integer micro-nats — the corpus
-      // quality/domain-classifier pass (ext.LangModel.naiveBayes)
-      ext.LangModel.naiveBayes(T(s, dir, "documents"), "doc_id", "text", "source")),
-
-    "stream_nbc" -> ((s, dir) => withStreamShuffle(s, dir, "documents",
-      minParts = s.sparkContext.defaultParallelism) {
-      // STREAMING model serving: the NBC model trains ONCE on the static
-      // corpus, and incoming docs are scored by stream-static joins into
-      // the ONE fused stateful aggregate (functions.ArgminAgg) the plan
-      // is allowed — "train offline, classify the firehose". Streamed
-      // scores equal batch ta_nbc exactly (Σ per occurrence == tf-
-      // weighted Σ), so it shares ta_nbc's oracle.
-      val static = s.read.parquet(s"$dir/documents.parquet")
-      val model = ext.LangModel.naiveBayesModel(static, "doc_id", "text", "source")
-      val stream = s.readStream.schema(static.schema)
-        .parquet(s"$dir/[d]ocuments.parquet")
-      val scored = ext.LangModel.naiveBayesScore(stream, "doc_id", "text",
-        "source", model, dedupTf = false)
-      s.catalog.dropTempView("graft_stream_nbc")
-      val q = scored.writeStream.format("memory").queryName("graft_stream_nbc")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_nbc")
-    }),
-
-    "ta_dsir" -> ((s, dir) =>
-      // DSIR data selection: hashed-n-gram importance log-ratios between
-      // the target domain (source = src1) and the raw corpus, top-100 by
-      // integer micro-nat weight (ext.Sampling.dsirSelect)
-      ext.Sampling.dsirSelect(T(s, dir, "documents"), "doc_id", "text",
-        col("source") === "src1", buckets = 4096, k = 100)),
-
-    "q_skyline" -> ((s, dir) => {
-      // Pareto frontier of customers on (total spend, order count) via
-      // the range-partitioned prefix-max sweep (ext.Skyline) — the
-      // oracle is the INDEPENDENT quadratic NOT-EXISTS dominance check,
-      // so engine and oracle agree by theorem, not by construction
-      val per = T(s, dir, "orders").groupBy("o_custkey").agg(
-        sum(round(col("o_totalprice") * 100).cast("long")).as("monetary_c"),
-        count(lit(1)).as("frequency"))
-      ext.Skyline.skyline2D(per, "o_custkey", "monetary_c", "frequency")
-    }),
-
-    "dd_containment" -> ((s, dir) =>
-      // asymmetric containment join at t = 4/5: directed "a's tokens
-      // are ≥80% inside b" pairs — the quote/boilerplate-inclusion
-      // detector Jaccard misses (ext.SimJoin.containmentJoin; exact,
-      // provably equal to the quadratic oracle). Probe side is the
-      // doc_id % 10 audit cohort (the sim_topk anchor convention): this
-      // template corpus is containment-DENSE (~58 % of all directed
-      // pairs clear t=0.8), so the full matrix is output-bound by
-      // definition, not by the algorithm
-      ext.SimJoin.containmentJoin(T(s, dir, "documents"), "doc_id", "text",
-        4, 5, probePred = col("id") % 10 === 0)),
-
-    "er_entities" -> ((s, dir) => {
-      // entity resolution end-to-end: SymSpell-blocked edit-distance-1
-      // name linkage (ext.FuzzyJoin — provably equal to the cross join)
-      // → distributed connected components over the match pairs →
-      // canonical entity id (min member key) + entity size. The dedup
-      // pass identity data actually needs: near-identical records chain
-      // transitively into one entity. Oracle: independent recursive-CTE
-      // transitive closure over the same quadratic pair set.
-      val cust = T(s, dir, "customer")
-      val pairs = ext.FuzzyJoin.editDistanceSelfJoin(
-        cust, "c_custkey", "c_name", maxDist = 1)
-      val comp = ext.Graph.componentsFor(cust.select("c_custkey"), "c_custkey",
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-      val sizes = comp.groupBy("component").agg(count(lit(1)).as("entity_size"))
-      comp.join(sizes, Seq("component"))
-        .select(col("c_custkey"), col("component").as("entity_id"),
-          col("entity_size"))
-    }),
-
-    "q_mv_retract" -> ((s, dir) => {
-      // materialized-view maintenance with RETRACTION: the per-customer
-      // (n_orders, spend_c) view is maintained through q_cdc's changelog
-      // (updates ×1.1 on %5 keys, deletes on %7 keys, inserts on %11
-      // keys) WITHOUT rescanning the final state — deletes retract the
-      // key's pre-delete contribution (updated price if the key was
-      // also updated, else base), updates retract old and apply new,
-      // inserts apply new. count/sum are groups under addition, so
-      // base + Σ deltas EQUALS the independent rescan of the CDC final
-      // state, which is exactly what the oracle computes. At 100 TB the
-      // deltas touch changed keys only; the rescan touches five years.
-      val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("base_c"),
-        round(col("o_totalprice") * lit(1.1) * 100).cast("long").as("upd_c"))
-      def aggOf(df: DataFrame, n: org.apache.spark.sql.Column,
-                s2: org.apache.spark.sql.Column) =
-        df.groupBy("o_custkey").agg(sum(n).as("dn"), sum(s2).as("ds"))
-      val base = aggOf(o, lit(1L), col("base_c"))
-      // update delta on %5 keys (minus old, plus new); delete retracts
-      // the key's CURRENT price (updated if %5 too); insert adds a new
-      // row under a shifted key but the SAME customer
-      val upd = aggOf(o.filter(col("o_orderkey") % 5 === 0),
-        lit(0L), col("upd_c") - col("base_c"))
-      val del = aggOf(o.filter(col("o_orderkey") % 7 === 0),
-        lit(-1L), -when(col("o_orderkey") % 5 === 0, col("upd_c"))
-          .otherwise(col("base_c")))
-      val ins = aggOf(o.filter(col("o_orderkey") % 11 === 0),
-        lit(1L), col("base_c"))
-      val deltas = upd.unionByName(del).unionByName(ins)
-        .groupBy("o_custkey").agg(sum(col("dn")).as("dn"), sum(col("ds")).as("ds"))
-      base.as("b").join(deltas.as("d"), Seq("o_custkey"), "full_outer")
-        .select(col("o_custkey"),
-          (coalesce(col("b.dn"), lit(0L)) + coalesce(col("d.dn"), lit(0L))).as("n_orders"),
-          (coalesce(col("b.ds"), lit(0L)) + coalesce(col("d.ds"), lit(0L))).as("spend_c"))
-        .filter(col("n_orders") > 0)
-    }),
-
-    "ev_growth" -> ((s, dir) => {
-      // weekly growth accounting (new / retained / resurrected /
-      // churned) — the product-analytics identity DAU dashboards are
-      // built on: per (user, week) activity, each week classified
-      // against the user's previous active week via ONE keyed lag
-      // window (user-partitioned — fully parallel), then a calendar-
-      // bounded per-week rollup. churned(w) = users active in w-1 but
-      // not w, counted by shifting each active week forward and
-      // anti-classifying — all exact integers.
-      // weeks are EPOCH-WEEK integers (days since Monday 1970-01-05,
-      // div 7) — no ISO week-of-year arithmetic, so "consecutive week"
-      // is exactly wk−1 even across year boundaries
-      import org.apache.spark.sql.expressions.Window
-      val uw = events(s, dir).select(col("user_id"),
-          expr("CAST(datediff(CAST(ts AS DATE), DATE '1970-01-05') div 7 AS BIGINT)").as("wk"))
-        .distinct()
-      val w = Window.partitionBy("user_id").orderBy(col("wk").asc)
-      val classified = uw.withColumn("prev_wk", lag(col("wk"), 1).over(w))
-        .withColumn("status",
-          when(col("prev_wk").isNull, lit("new"))
-            .when(col("prev_wk") === col("wk") - 1, lit("retained"))
-            .otherwise(lit("resurrected")))
-      val active = classified.groupBy("wk").pivot("status",
-          Seq("new", "retained", "resurrected"))
-        .agg(count(lit(1)))
-        .na.fill(0L, Seq("new", "retained", "resurrected"))
-      // churned in week w = active in w-1 minus retained in w: per-week
-      // active counts shifted one week forward
-      val counts = uw.groupBy("wk").agg(count(lit(1)).as("n_active"))
-      val churn = counts.select((col("wk") + 1).as("wk"),
-        col("n_active").as("prev_active"))
-      active.join(counts, Seq("wk"))
-        .join(churn, Seq("wk"), "left")
-        .select(col("wk"), col("n_active"), col("new"), col("retained"),
-          col("resurrected"),
-          (coalesce(col("prev_active"), lit(0L)) - col("retained")).as("churned"))
-    }),
-
-    "ev_seasonality" -> ((s, dir) => {
-      // day-of-week seasonal profile + seasonally-adjusted daily series:
-      // per-dow revenue means in exact cents (integer div), each day's
-      // seasonal index as one IEEE division of exact longs. Two
-      // aggregates + a 7-row broadcast back onto the calendar-bounded
-      // daily frame — the decomposition pass ahead of q_holt's trend.
-      val daily = T(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
-        .withColumn("dow", dayofweek(col("d")).cast("long"))
-      val prof = daily.groupBy("dow").agg(
-        count(lit(1)).as("n_days"),
-        sum(col("rev_c")).as("dow_rev_c"))
-        .withColumn("dow_mean_c", expr("dow_rev_c div n_days"))
-      daily.join(broadcast(prof.select(col("dow"), col("dow_mean_c"))), Seq("dow"))
-        .select(col("d"), col("dow"), col("rev_c"), col("dow_mean_c"),
-          (col("rev_c").cast("double") / col("dow_mean_c").cast("double"))
-            .as("seasonal_idx"))
-    }),
-
-    "q_yoy" -> ((s, dir) => {
-      // year-over-year growth per month: monthly revenue in exact cents,
-      // joined to the same month one year earlier (an equi-join on the
-      // month key — no window, no sort; the monthly frame is calendar-
-      // bounded). Growth in basis points as an exact integer floor.
-      val monthly = T(s, dir, "orders")
-        .groupBy(year(col("o_orderdate").cast("date")).as("y"),
-          month(col("o_orderdate").cast("date")).as("m"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
-      val prev = monthly.select((col("y") + 1).as("y"), col("m"),
-        col("rev_c").as("prev_rev_c"))
-      monthly.join(prev, Seq("y", "m"))
-        .select(col("y").cast("long").as("y"), col("m").cast("long").as("m"),
-          col("rev_c"), col("prev_rev_c"),
-          expr("((rev_c - prev_rev_c) * 10000) div prev_rev_c").as("yoy_bp"))
-    }),
-
-    "ta_nbc_eval" -> ((s, dir) => {
-      // the classifier eval loop: confusion matrix of the NBC source
-      // classifier on the HELD-OUT hash-half (the docs the model never
-      // saw) — the accuracy gate a production quality-classifier
-      // pipeline runs before trusting a model to filter a corpus
-      val scored = ext.LangModel.naiveBayes(
-        T(s, dir, "documents"), "doc_id", "text", "source")
-      scored
-        .filter(substring(md5(col("doc_id").cast("string")), 1, 8) >= lit("80000000"))
-        .groupBy("cls_truth", "pred_cls")
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    "ta_bootstrap" -> ((s, dir) => {
-      // deterministic Poisson bootstrap (Chamandy et al., "Estimating
-      // uncertainty for massive data streams", Google TR 2012 — the
-      // distributed bootstrap): row i's multiplicity in replicate j is
-      // the Poisson(1) inverse CDF applied to the 32-bit md5 fraction
-      // of (j, id) — NO RNG, so replicas are reproducible under any
-      // partitioning and replayable in the oracle. 40 replicates of the
-      // per-priority mean price; 95% CI from nearest-rank replicate
-      // order statistics (exact small-array ops, no window). Replicate
-      // means are one IEEE division of exact longs; the ×B fan-out is
-      // map-side (no pre-shuffle), and the CI frames are B rows/group.
-      val B = 40
-      // fanOut: the ×B fan-out + per-replicate md5 below is map-side CPU
-      // that would otherwise run entirely in the single scan partition of
-      // a sub-split orders file (r12 ProbeJobs: 7.3 s in ONE task, the
-      // whole query serial); no-op at natural parallelism
-      val r = ext.Par.fanOut(T(s, dir, "orders").select(
-        col("o_orderpriority").as("pri"),
-        round(col("o_totalprice") * 100).cast("long").as("x"),
-        col("o_orderkey").as("id")))
-      val js = s.range(B).select(col("id").as("j"))
-      val u = r.crossJoin(broadcast(js))
-        .withColumn("u32", conv(substring(md5(
-          concat(col("j").cast("string"), lit(":"), col("id").cast("string"))),
-          1, 8), 16, 10).cast("long"))
-      val m = u.withColumn("m", bootPoissonCdf(col("u32")))
-      val rm = m.groupBy("pri", "j")
-        .agg(sum(col("m") * col("x")).as("sx"), sum(col("m")).as("sm"))
-        .filter(col("sm") > 0)
-        .select(col("pri"), (col("sx").cast("double") / col("sm").cast("double")).as("mean"))
-      val ci = rm.groupBy("pri").agg(sort_array(collect_list(col("mean"))).as("ms"))
-        .select(col("pri"), element_at(col("ms"), 1).as("boot_lo"),
-          element_at(col("ms"), B - 1).as("boot_hi"))
-      val point = r.groupBy("pri").agg(count(lit(1)).as("n"),
-        (sum(col("x")).cast("double") / count(lit(1)).cast("double")).as("point_mean"))
-      point.join(ci, Seq("pri"))
-        .select(col("pri").as("o_orderpriority"), col("n"), col("point_mean"),
-          col("boot_lo"), col("boot_hi"))
-    }),
-
-    "q_holt" -> ((s, dir) => {
-      // Holt linear double-exponential smoothing (α=β=1/2) over the
-      // daily revenue series — level + trend per day. The recurrence is
-      // inherently sequential, so the distributed part is the daily
-      // aggregate (the data-volume work); the fold itself runs on the
-      // driver over the CALENDAR-bounded series (≤ #days scalars — the
-      // q_ols Cramer-solve argument: driver work bounded by model size,
-      // never data size). α=β=1/2 keeps every op an exact IEEE halving
-      // and the oracle replays the identical op order in a recursive
-      // CTE, so level/trend doubles are bit-identical.
-      import s.implicits._
-      // the series crosses the driver as EPOCH-DAY INTS, never
-      // java.sql.Date: the Date round trip needed sun.util.calendar
-      // opened (--add-opens), so the query silently depended on the
-      // harness JVM flags (round-11 verdict item). datediff/date_add vs
-      // the epoch are exact integer day arithmetic — same dates out.
-      val daily = T(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
-        .select(datediff(col("d"), to_date(lit("1970-01-01"))).as("ed"), col("rev_c"))
-        .orderBy(col("ed").asc_nulls_last)
-        .collect().map(r => (epochDay(r), r.getLong(1)))
-      require(daily.length >= 2, "q_holt: need at least 2 days")
-      val out = Array.newBuilder[(Option[Int], Long, Double, Double)]
-      var sPrev = daily(0)._2.toDouble
-      var bPrev = daily(1)._2.toDouble - daily(0)._2.toDouble
-      out += ((daily(0)._1, daily(0)._2, sPrev, bPrev))
-      var i = 1
-      while (i < daily.length) {
-        val x = daily(i)._2.toDouble
-        val sCur = 0.5 * x + 0.5 * (sPrev + bPrev)
-        val bCur = 0.5 * (sCur - sPrev) + 0.5 * bPrev
-        out += ((daily(i)._1, daily(i)._2, sCur, bCur))
-        sPrev = sCur; bPrev = bCur
-        i += 1
-      }
-      out.result().toSeq.toDF("ed", "rev_c", "level", "trend")
-        .select(date_add(to_date(lit("1970-01-01")), col("ed")).as("d"),
-          col("rev_c"), col("level"), col("trend"))
-    }),
-
-    "q_holt_winters" -> ((s, dir) => {
-      // additive Holt-Winters (α=β=γ=1/2, weekly period 7) over the
-      // daily revenue series — level + trend + seasonal per day. Same
-      // contract as q_holt: the distributed work is the daily
-      // aggregate; the sequential smoothing folds on the driver over
-      // the calendar-bounded series, and the oracle's recursive CTE
-      // carries the 7 seasonal states and replays the identical IEEE
-      // op order (all halvings + one exact /7.0 in the init), so every
-      // double is bit-identical.
-      import s.implicits._
-      // epoch-day ints across the driver boundary, not java.sql.Date —
-      // same --add-opens-independence fix as q_holt
-      val daily = T(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
-        .select(datediff(col("d"), to_date(lit("1970-01-01"))).as("ed"), col("rev_c"))
-        .orderBy(col("ed").asc_nulls_last)
-        .collect().map(r => (epochDay(r), r.getLong(1)))
-      require(daily.length >= 15, "q_holt_winters: need at least 15 days")
-      val m1 = daily.take(7).map(_._2).sum.toDouble / 7.0
-      val m2 = daily.slice(7, 14).map(_._2).sum.toDouble / 7.0
-      var sPrev = m1
-      var bPrev = (m2 - m1) / 7.0
-      val c = Array.tabulate(7)(k => daily(k)._2.toDouble - m1)
-      val out = Array.newBuilder[(Option[Int], Long, Double, Double, Double)]
-      var i = 0
-      while (i < daily.length) {
-        val slot = i % 7
-        val x = daily(i)._2.toDouble
-        val cp = c(slot)
-        val sNew = 0.5 * (x - cp) + 0.5 * (sPrev + bPrev)
-        val bNew = 0.5 * (sNew - sPrev) + 0.5 * bPrev
-        val cNew = 0.5 * (x - sNew) + 0.5 * cp
-        c(slot) = cNew
-        out += ((daily(i)._1, daily(i)._2, sNew, bNew, cNew))
-        sPrev = sNew; bPrev = bNew
-        i += 1
-      }
-      out.result().toSeq.toDF("ed", "rev_c", "level", "trend", "seasonal")
-        .select(date_add(to_date(lit("1970-01-01")), col("ed")).as("d"),
-          col("rev_c"), col("level"), col("trend"), col("seasonal"))
-    }),
-
-    "q_cusum" -> ((s, dir) => {
-      // CUSUM changepoint statistics over the daily revenue series in
-      // exact integer cents. The textbook recursion S_t = max(0,
-      // S_{t-1} + dev_t) is replaced by the prefix identity S_t = P_t −
-      // min(0, min_{j≤t} P_j) (P = cumulative deviation), so the whole
-      // statistic is two cumulative windows — no sequential recursion.
-      // The windows order the DAILY aggregate, a frame bounded by the
-      // calendar (grows with time span, not data volume), the same
-      // bounded-small-frame argument as ta_curriculum's band offsets.
-      import org.apache.spark.sql.expressions.Window
-      val daily = T(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
-      val tot = daily.agg(sum(col("rev_c")).as("tr"), count(lit(1)).as("nd"))
-      val base = daily.crossJoin(broadcast(tot))
-        .withColumn("mu_c", expr("tr div nd"))
-        .withColumn("k_c", expr("(tr div nd) div 20"))
-      val w = Window.orderBy(col("d").asc)
-        .rowsBetween(Window.unboundedPreceding, 0)
-      base
-        .withColumn("p", sum(col("rev_c") - col("mu_c") - col("k_c")).over(w))
-        .withColumn("pn", sum(col("mu_c") - col("k_c") - col("rev_c")).over(w))
-        .select(col("d"), col("rev_c"),
-          (col("p") - least(lit(0L), min(col("p")).over(w))).as("s_up"),
-          (col("pn") - least(lit(0L), min(col("pn")).over(w))).as("s_dn"),
-          ((col("p") - least(lit(0L), min(col("p")).over(w))) > col("mu_c")).as("alarm_up"),
-          ((col("pn") - least(lit(0L), min(col("pn")).over(w))) > col("mu_c")).as("alarm_dn"))
-    }),
-
-    "dd_spans" -> ((s, dir) => {
-      // exact duplicated-SPAN extraction across documents (the substring-
-      // dedup shape of Lee et al. "Deduplicating Training Data Makes
-      // Language Models Better", at word-gram granularity): positional
-      // 8-gram fingerprints; boilerplate grams dropped by a posting-list
-      // cap (the LSH bucket-cap pattern — a gram seen everywhere would
-      // go quadratic in the match join, and carries no span signal);
-      // cross-doc matches at constant offset merged into MAXIMAL runs
-      // with the islands trick (pos − rank is constant exactly on a
-      // contiguous shared span). Every shuffle is keyed (gram, then
-      // doc-pair+offset) — no global sort, no all-pairs join.
-      import org.apache.spark.sql.expressions.Window
-      // checkpointed: the posting list (8-byte fp + pos + id) is read
-      // three times (cap scan + both sides of the match join) — without
-      // it every read re-runs the md5 over the full gram stream
-      // (measured 20→6 s warm at sf0.1)
-      // fanOut before the checkpoint: the 8-gram posexplode + md5 is the
-      // expensive pass (r12 ProbeJobs: 4.9 s single-task checkpoint
-      // stage) and its materialized partitioning is what every
-      // downstream consumer inherits
-      val posts = ext.Par.fanOut(T(s, dir, "documents"))
-        .select(col("doc_id"),
-          posexplode(ext.Dedup.wordNgrams(col("text"), 8)).as(Seq("p", "gs")))
-        .select(col("doc_id"), col("p").cast("long").as("pos"),
-          expr("CAST(conv(substring(md5(gs), 1, 15), 16, 10) AS BIGINT)").as("g"))
-        .localCheckpoint(true)
-      val busy = posts.groupBy("g").agg(count(lit(1)).as("nf"))
-        .filter(col("nf") > spanPostingCap)
-      val nBusy = busy.count()
-      if (nBusy > 0)
-        System.err.println(s"[dd_spans] dropped $nBusy grams with > $spanPostingCap postings")
-      val kept = posts.join(busy.select("g"), Seq("g"), "left_anti")
-      val m = kept.as("a").join(kept.as("b"),
-          col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-          col("a.pos").as("pa"), col("b.pos").as("pb"),
-          (col("a.pos") - col("b.pos")).as("delta"))
-      val w = Window.partitionBy("doc_a", "doc_b", "delta").orderBy(col("pa"))
-      m.withColumn("grp", col("pa") - row_number().over(w))
-        .groupBy("doc_a", "doc_b", "delta", "grp")
-        .agg(min(col("pa")).as("start_a"), min(col("pb")).as("start_b"),
-          count(lit(1)).as("n_grams"))
-        .filter(col("n_grams") >= 3)
-        .select(col("doc_a"), col("doc_b"), col("start_a"), col("start_b"),
-          col("n_grams"), (col("n_grams") + lit(7L)).as("span_tokens"))
-    }),
-
-    "stream_cms" -> ((s, dir) => withStreamShuffle(s, dir, "lineitem") {
-      // STREAMING heavy-hitter sketch: the same mergeable Count-Min
-      // counter matrix aggregated over a file stream (complete mode).
-      // The merge is an elementwise sum — order- and slicing-free — so
-      // the streamed sketch EQUALS the batch one however the source is
-      // micro-batched, and sk_cms's exact collided-counter oracle
-      // replays it unchanged.
-      val schema = s.read.parquet(s"$dir/lineitem.parquet").schema
-      val stream = s.readStream.schema(schema).parquet(s"$dir/[l]ineitem.parquet")
-      val skS = stream.select(col("l_partkey").cast("string").as("g"))
-        .agg(graft.functions.SketchAgg.cmsCounters(col("g"), cmsDepth, cmsLogW).as("cms"))
-      s.catalog.dropTempView("graft_stream_cms")
-      val q = skS.writeStream.format("memory").queryName("graft_stream_cms")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val keys = T(s, dir, "lineitem").select(col("l_partkey").cast("string").as("g"))
-      val heavy = keys.groupBy("g").agg(count(lit(1)).as("true_cnt"))
-        .filter(col("true_cnt") >= 45)
-      heavy.join(broadcast(s.table("graft_stream_cms")))
-        .select(col("g").cast("long").as("l_partkey"), col("true_cnt"),
-          graft.functions.SketchAgg.cmsEstimate(
-            col("cms"), col("g"), cmsDepth, cmsLogW).as("cms_est"))
-    }),
-
-    "q_theilsen" -> ((s, dir) => {
-      // Theil–Sen robust trend of the daily revenue series: the median
-      // of pairwise slopes, restricted to pairs ≤ 365 days apart so the
-      // pair count grows LINEARLY in the calendar (unwindowed Theil–Sen
-      // is quadratic in days). The date-range pairing is an explode of
-      // bounded integer offsets + an EQUI-join (never an inequality
-      // join's nested loop); slopes are exact micro-cents/day via
-      // integral division (truncation toward zero — verified identical
-      // in both engines, negatives included); the median is picked by
-      // EXACT distributed rank (Ranks.groupedRank — range-partitioned
-      // ranks + offset scalars, no single-partition sort). Slope
-      // numerators are 10⁶·Δcents — bigint-safe through ~10¹² daily
-      // cents; beyond that, downscale the unit (ANSI overflow throws
-      // loudly rather than corrupting).
-      val daily = T(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
-        .localCheckpoint(true)
-      val pairs = daily
-        .withColumn("off", explode(sequence(lit(1), lit(365))))
-        .withColumn("d2", date_add(col("d"), col("off")))
-        .as("a")
-        .join(daily.as("b"), col("b.d") === col("a.d2"))
-        .select(col("a.d").as("da"), col("a.off").as("off"),
-          expr("(1000000 * (b.rev_c - a.rev_c)) div a.off").as("slope_micro"))
-      val ranked = ext.Ranks.groupedRank(
-        pairs.withColumn("__grp__", lit(0)), "__grp__",
-        Seq(col("slope_micro"), col("da"), col("off")), "rn")
-      ranked.filter(expr("rn = (rn_n + 1) div 2"))
-        .select(col("slope_micro").as("median_slope_micro"),
-          col("rn_n").as("n_pairs"))
-    }),
-
-    "q_acf" -> ((s, dir) => {
-      // autocorrelation of the daily revenue series at lags 1..7, the
-      // ENGINE-EXACT way (q_moments' doctrine): deviations are taken
-      // against the integer-truncated mean, the per-lag numerator and
-      // the denominator are EXACT decimal sums (order-free), and the
-      // correlation is presented as a micro-scaled integer via
-      // sign-split integral division (truncation toward zero matches
-      // in both engines on nonnegative operands). The only window is a
-      // row_number over the DAILY aggregate — a calendar-bounded frame
-      // (q_cusum's argument), everything else is keyed shuffles.
-      import org.apache.spark.sql.expressions.Window
-      val daily = T(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
-      val tot = daily.agg(sum(col("rev_c")).as("tr"), count(lit(1)).as("nd"))
-      val mu = tot.select(expr("tr div nd").as("mu_c"), col("nd"))
-      val dev = daily.crossJoin(broadcast(mu))
-        .select(col("d"), (col("rev_c") - col("mu_c")).as("dv"),
-          col("mu_c"), col("nd"))
-        .withColumn("i", row_number().over(Window.orderBy(col("d"))))
-        .localCheckpoint(true)
-      val den = dev.agg(
-        sum(col("dv").cast("decimal(18,0)") * col("dv").cast("decimal(18,0)"))
-          .cast("decimal(38,0)").as("den"))
-      val pairs = (1 to 7).map { k =>
-        dev.as("a").join(dev.as("b"), col("b.i") === col("a.i") + k)
-          .select(lit(k).as("lag_k"), col("a.dv").as("da"), col("b.dv").as("db"))
-      }.reduce(_ union _)
-      val num = pairs.groupBy("lag_k").agg(
-        sum(col("da").cast("decimal(18,0)") * col("db").cast("decimal(18,0)"))
-          .cast("decimal(38,0)").as("num"),
-        count(lit(1)).as("n_pairs"))
-      num.crossJoin(broadcast(den)).crossJoin(broadcast(mu))
-        .select(col("lag_k"), col("nd").as("n_days"), col("n_pairs"), col("mu_c"),
-          col("num").cast("string").as("num"), col("den").cast("string").as("den"),
-          expr("CAST(CASE WHEN num < 0 THEN -1 WHEN num > 0 THEN 1 ELSE 0 END AS BIGINT)" +
-            " * (CAST(abs(num) * 1000000 AS DECIMAL(38,0)) div den)").as("r_micro"))
-    }),
-
-    "q_logreg" -> ((s, dir) => {
-      // distributed logistic regression: 8 unrolled full-batch gradient
-      // steps predicting order status 'F' from (order year, price).
-      // The sigmoid is the rational "fast sigmoid" 0.5 + z/(2(1+|z|)) —
-      // only +,×,÷,|·| — so every per-row double is an identical IEEE
-      // operation tree in both engines (no libm exp to diverge by an
-      // ulp), and each step's gradient is accumulated as EXACT micro-
-      // scaled integers (order-free sum). Per step: ONE mergeable
-      // aggregate over the data; the 3-weight update runs on the driver
-      // (work bounded by model size, the ev_markov/k-means pattern).
-      val base = T(s, dir, "orders").select(
-          when(col("o_orderstatus") === "F", lit(1.0d)).otherwise(lit(0.0d)).as("y"),
-          (year(col("o_orderdate").cast("date")) - lit(1995)).cast("double").as("x1"),
-          (round(col("o_totalprice") * 100).cast("long").cast("double") / lit(1.0e7)).as("x2"))
-        .localCheckpoint(true)
-      val n = base.count()
-      val nD = n.toDouble
-      var w = Array(0.0, 0.0, 0.0)
-      def z = lit(w(0)) + lit(w(1)) * col("x1") + lit(w(2)) * col("x2")
-      def sig = lit(0.5) + z / (lit(2.0) * (lit(1.0) + abs(z)))
-      var step = 0
-      while (step < 8) {
-        val err = sig - col("y")
-        val r = base.agg(
-          sum(round(err * lit(1.0e6)).cast("long")).as("g0"),
-          sum(round(err * col("x1") * lit(1.0e6)).cast("long")).as("g1"),
-          sum(round(err * col("x2") * lit(1.0e6)).cast("long")).as("g2")).collect()(0)
-        w = Array(
-          w(0) - 0.5 * ((r.getLong(0).toDouble / 1.0e6) / nD),
-          w(1) - 0.5 * ((r.getLong(1).toDouble / 1.0e6) / nD),
-          w(2) - 0.5 * ((r.getLong(2).toDouble / 1.0e6) / nD))
-        step += 1
-      }
-      base.agg(count(lit(1)).as("n"),
-          sum(when((sig >= lit(0.5)) === (col("y") === lit(1.0)), lit(1L))
-            .otherwise(lit(0L))).as("n_correct"))
-        .select(lit(w(0)).as("w0"), lit(w(1)).as("w1"), lit(w(2)).as("w2"),
-          col("n"), col("n_correct"))
-    }),
-
-    "ev_assoc" -> ((s, dir) => {
-      // market-basket association rules (Agrawal–Srikant support/
-      // confidence/lift) over order baskets with part BRANDS as items.
-      // Item domain is 25 brands so per-basket pair fan-out is bounded
-      // by C(25,2); the same giant-basket cap as g_kcore guards the
-      // pathological case at scale (a basket wider than the cap would
-      // be dropped with an observed-drop count — never binds here).
-      // All statistics are exact integer counts; support/confidence/
-      // lift are single divisions of those integers with the identical
-      // operation tree in the oracle, so the doubles are bit-identical.
-      val items = T(s, dir, "lineitem")
-        .join(T(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .select(col("l_orderkey").as("o"), col("p_brand").as("item"))
-        .distinct()
-        .localCheckpoint(true) // read by widths, the cap semi-join, and both pair sides
-      val widths = items.groupBy("o").agg(count(lit(1)).as("w"))
-      val dropped = widths.filter(col("w") > assocBasketCap)
-      val nDropped = dropped.count()
-      if (nDropped > 0)
-        System.err.println(s"[ev_assoc] dropped $nDropped baskets wider than $assocBasketCap")
-      val capped = items.join(
-        widths.filter(col("w") <= assocBasketCap).select("o"), Seq("o"), "left_semi")
-        .localCheckpoint(true) // nOrders action + item counts + both pair sides
-      val nOrders = capped.select("o").distinct().count()
-      val itemCnt = capped.groupBy("item").agg(count(lit(1)).as("n_item"))
-      val pairCnt = capped.as("a")
-        .join(capped.as("b"), col("a.o") === col("b.o") && col("a.item") < col("b.item"))
-        .groupBy(col("a.item").as("ia"), col("b.item").as("ib"))
-        .agg(count(lit(1)).as("n_both"))
-        .filter(col("n_both") >= 50)
-      // directed rules both ways from the undirected pair counts
-      val rules = pairCnt
-        .select(col("ia").as("antecedent"), col("ib").as("consequent"), col("n_both"))
-        .union(pairCnt
-          .select(col("ib").as("antecedent"), col("ia").as("consequent"), col("n_both")))
-      rules
-        .join(broadcast(itemCnt.withColumnRenamed("item", "antecedent")
-          .withColumnRenamed("n_item", "n_ante")), Seq("antecedent"))
-        .join(broadcast(itemCnt.withColumnRenamed("item", "consequent")
-          .withColumnRenamed("n_item", "n_cons")), Seq("consequent"))
-        .select(col("antecedent"), col("consequent"),
-          col("n_both"), col("n_ante"), col("n_cons"), lit(nOrders).as("n_orders"),
-          (col("n_both").cast("double") / lit(nOrders).cast("double")).as("support"),
-          (col("n_both").cast("double") / col("n_ante").cast("double")).as("confidence"),
-          ((col("n_both").cast("double") / col("n_ante").cast("double")) /
-            (col("n_cons").cast("double") / lit(nOrders).cast("double"))).as("lift"))
-    }),
-
-    "q_chisq" -> ((s, dir) => {
-      // chi-squared independence test over the market-segment × order-
-      // status contingency table. Observed cells, margins, and the grand
-      // total are exact integer counts from ONE joined hash aggregate
-      // over a bounded 5×3 cell domain; expected counts and per-cell χ²
-      // terms are micro-scaled integers via integral division of
-      // NONNEGATIVE products ((O·N − R·C)² is a square; truncation
-      // toward zero matches in both engines). Envelope: the cross-
-      // product difference is held in DECIMAL(18,0) and its square
-      // ×10⁶ in DECIMAL(38,0), exact through ~10⁸–10⁹ rows; past that
-      // downscale the unit (ANSI overflow throws loudly, never
-      // corrupts).
-      val joined = T(s, dir, "orders")
-        .join(T(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment").as("seg"), col("o_orderstatus").as("status"))
-      val obs = joined.groupBy("seg", "status").agg(count(lit(1)).as("observed"))
-      val rowT = obs.groupBy("seg").agg(sum("observed").as("n_seg"))
-      val colT = obs.groupBy("status").agg(sum("observed").as("n_status"))
-      val tot = obs.agg(sum("observed").as("n_total"))
-      obs.join(broadcast(rowT), Seq("seg"))
-        .join(broadcast(colT), Seq("status"))
-        .crossJoin(broadcast(tot))
-        .select(col("seg"), col("status"), col("observed"),
-          col("n_seg"), col("n_status"), col("n_total"),
-          expr("CAST((CAST(n_seg AS DECIMAL(18,0)) * n_status * 1000000) div n_total AS BIGINT)")
-            .as("expected_micro"),
-          expr("""CAST((
-                    CAST(CAST(observed AS DECIMAL(18,0)) * n_total
-                         - CAST(n_seg AS DECIMAL(18,0)) * n_status AS DECIMAL(18,0))
-                    * CAST(CAST(observed AS DECIMAL(18,0)) * n_total
-                           - CAST(n_seg AS DECIMAL(18,0)) * n_status AS DECIMAL(18,0))
-                    * 1000000)
-                  div (CAST(n_seg AS DECIMAL(18,0)) * n_status * n_total) AS BIGINT)""")
-            .as("term_micro"))
-    }),
-
-    "ev_backtest" -> ((s, dir) => {
-      // rolling-origin forecast backtest over the daily revenue series:
-      // three forecasters (naive d−1, seasonal-naive d−7, trailing
-      // 7-day mean) scored on every day whose full 7-day history
-      // exists. The history pairing is q_theilsen's bounded-offset
-      // explode + EQUI-join (7 offsets — linear in the calendar, never
-      // an inequality join's nested loop); errors are exact cents, the
-      // MA7 forecast an integral div 7, MAE micro-scaled. No windows —
-      // keyed shuffles only, so the backtest shards like any aggregate.
-      val daily = T(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
-        .localCheckpoint(true)
-      val hist = daily.withColumn("off", explode(sequence(lit(1), lit(7))))
-        .select(date_add(col("d"), col("off")).as("dt"), col("off"),
-          col("rev_c").as("past_c"))
-        .join(daily.withColumnRenamed("rev_c", "actual_c"), col("dt") === col("d"))
-      val byDay = hist.groupBy(col("dt"), col("actual_c"))
-        .agg(count(lit(1)).as("n_hist"),
-          max(when(col("off") === 1, col("past_c"))).as("naive_c"),
-          max(when(col("off") === 7, col("past_c"))).as("snaive_c"),
-          sum(col("past_c")).as("sum7_c"))
-        .filter(col("n_hist") === 7) // full window ⇒ all three forecasts defined
-        .withColumn("ma7_c", expr("sum7_c div 7"))
-      val scored = byDay
-        .select(lit("naive").as("model"), abs(col("actual_c") - col("naive_c")).as("ae"))
-        .union(byDay.select(lit("snaive").as("model"),
-          abs(col("actual_c") - col("snaive_c")).as("ae")))
-        .union(byDay.select(lit("ma7").as("model"),
-          abs(col("actual_c") - col("ma7_c")).as("ae")))
-      scored.groupBy("model").agg(count(lit(1)).as("n_days"), sum("ae").as("sae_c"))
-        .withColumn("mae_micro",
-          expr("CAST((CAST(sae_c AS DECIMAL(38,0)) * 1000000) div n_days AS BIGINT)"))
-    }),
-
-    "ta_zipf" -> ((s, dir) => {
-      // Zipf's-law fit over the corpus vocabulary: OLS slope of ln(freq)
-      // on ln(rank) for the top-200 tokens (freq desc, token asc — a
-      // k-bounded TakeOrdered after the map-side-combined token count,
-      // no full sort). Both ln's are micro-nat fixed point on EXACT
-      // integer inputs (ta_entropy's doctrine — the rounding margin of
-      // ln(integer)·10⁶ is proven there), the Gram sums are exact
-      // decimals, and the slope is a sign-split nonnegative integral
-      // division. The only window is a row_number over the 200 retained
-      // rows (srch_hybrid's bounded-pool argument).
-      import org.apache.spark.sql.expressions.Window
-      val top = ext.TextAnalysis.topTokens(T(s, dir, "documents"), col("text"), 200)
-        .withColumn("r",
-          row_number().over(Window.orderBy(col("n").desc, col("token").asc)).cast("long"))
-        .withColumn("x", round(log(col("r").cast("double")) * 1e6).cast("long"))
-        .withColumn("y", round(log(col("n").cast("double")) * 1e6).cast("long"))
-      top.agg(count(lit(1)).as("n_pts"),
-          sum(col("x").cast("decimal(18,0)")).cast("decimal(38,0)").as("sx"),
-          sum(col("y").cast("decimal(18,0)")).cast("decimal(38,0)").as("sy"),
-          sum(col("x").cast("decimal(18,0)") * col("x").cast("decimal(18,0)"))
-            .cast("decimal(38,0)").as("sxx"),
-          sum(col("x").cast("decimal(18,0)") * col("y").cast("decimal(18,0)"))
-            .cast("decimal(38,0)").as("sxy"))
-        .select(col("n_pts"),
-          col("sx").cast("string").as("sx"), col("sy").cast("string").as("sy"),
-          col("sxx").cast("string").as("sxx"), col("sxy").cast("string").as("sxy"),
-          expr("""CASE WHEN n_pts * sxx - sx * sx = 0 THEN CAST(NULL AS BIGINT)
-                  ELSE CAST(CASE WHEN n_pts * sxy - sx * sy < 0 THEN -1
-                            WHEN n_pts * sxy - sx * sy > 0 THEN 1 ELSE 0 END AS BIGINT)
-                  * CAST((abs(n_pts * sxy - sx * sy) * 1000000)
-                         div (n_pts * sxx - sx * sx) AS BIGINT) END""").as("slope_micro"))
-    }),
-
-    "q_stump" -> ((s, dir) => {
-      // histogram decision stump — the split-search kernel of
-      // distributed tree ensembles (XGBoost/LightGBM hist mode):
-      // binned features → ONE bounded (feature × bin) count aggregate
-      // → exact integer Gini scan over cumulative bins. y =
-      // (o_orderstatus = 'F'); features: order year and a 20-bin
-      // fixed-width price binning. Weighted Gini × N reduces to
-      // 2·posL·negL/nL + 2·posR·negR/nR — presented micro-scaled via
-      // nonnegative integral division; the argmin tie-break
-      // (g, feature, threshold) is one broadcast 1-row struct-min.
-      // After the scan everything operates on ≤ ~27 histogram cells;
-      // the windows partition by feature over ≤ 20-row frames.
-      // Candidate generation is the shared stumpCandidates kernel.
-      val base = T(s, dir, "orders").select(
-        when(col("o_orderstatus") === "F", lit(1L)).otherwise(lit(0L)).as("y"),
-        year(col("o_orderdate").cast("date")).cast("long").as("bin_year"),
-        expr("least(CAST(round(o_totalprice * 100) AS BIGINT) div 3000000, 19)")
-          .as("bin_price"))
-      val cand = stumpCandidates(base)
-      val best = cand.agg(min(struct(col("g_micro"), col("feature"), col("threshold"))).as("b"))
-      cand.crossJoin(broadcast(best))
-        .withColumn("is_best", col("g_micro") === col("b.g_micro") &&
-          col("feature") === col("b.feature") && col("threshold") === col("b.threshold"))
-        .drop("b")
-    }),
-
-    "q_tcloseness" -> ((s, dir) => {
-      // t-closeness audit (Li–Li–Venkatasubramanian, ICDE 2007) —
-      // completes the k-anonymity / l-diversity governance trio: per
-      // quasi-identifier class (segment, nation), the Earth Mover's
-      // Distance between the class distribution of an ORDERED sensitive
-      // attribute (10 fixed-width account-balance bands) and the global
-      // distribution. For ordered values with unit ground distance,
-      // EMD = Σ_prefix |cumc/n_c − cumg/N| / (m−1); cross-multiplying
-      // turns every term into the exact integer |cumc·N − cumg·n_c|.
-      // One bounded (class × 10-band) grid; windows only over ≤ 10-row
-      // frames; the global cums ride a 10-row broadcast.
-      import org.apache.spark.sql.expressions.Window
-      val m = 10
-      val bands = T(s, dir, "customer").select(
-        col("c_mktsegment").as("seg"), col("c_nationkey").as("nation"),
-        expr(s"least(greatest((CAST(round(c_acctbal * 100) AS BIGINT) + 100000) div 120000, 0), ${m - 1})")
-          .as("b"))
-      val byClass = bands.groupBy("seg", "nation", "b").agg(count(lit(1)).as("cnt"))
-      val classes = byClass.select("seg", "nation").distinct()
-      val wc = Window.partitionBy("seg", "nation").orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cumC = classes
-        .withColumn("b", explode(sequence(lit(0L), lit(m - 1L))))
-        .join(byClass, Seq("seg", "nation", "b"), "left")
-        .na.fill(0L, Seq("cnt"))
-        .withColumn("cumc", sum("cnt").over(wc))
-      val cumG = s.range(m).select(col("id").as("b"))
-        .join(bands.groupBy("b").agg(count(lit(1)).as("gcnt")), Seq("b"), "left")
-        .na.fill(0L, Seq("gcnt"))
-        .withColumn("cumg", sum("gcnt").over(
-          Window.orderBy("b").rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .select("b", "cumg")
-      val nC = bands.groupBy("seg", "nation").agg(count(lit(1)).as("n_c"))
-      val tot = bands.agg(count(lit(1)).as("n_total"))
-      cumC.filter(col("b") < m - 1) // prefixes 0..m-2
-        .join(broadcast(cumG), Seq("b"))
-        .join(broadcast(nC), Seq("seg", "nation"))
-        .crossJoin(broadcast(tot))
-        .groupBy(col("seg"), col("nation"), col("n_c"), col("n_total"))
-        .agg(sum(abs(col("cumc").cast("decimal(18,0)") * col("n_total")
-          - col("cumg").cast("decimal(18,0)") * col("n_c")))
-          .cast("decimal(38,0)").as("emd_num"))
-        .select(col("seg"), col("nation"), col("n_c"),
-          col("emd_num").cast("long").as("emd_num"),
-          expr(s"""CAST((CAST(emd_num AS DECIMAL(38,0)) * 1000000)
-                   div (CAST(n_c AS DECIMAL(18,0)) * n_total * ${m - 1}) AS BIGINT)""")
-            .as("emd_micro"))
-        .withColumn("tclose", col("emd_micro") <= 200000L)
-    }),
-
-    "sk_theta" -> ((s, dir) => {
-      // KMV / theta sketch (Beyer et al., SIGMOD 2007): bottom-k of the
-      // fnv1a64∘fmix64 key hashes, the mergeable distinct sketch whose
-      // SET ALGEBRA covers what HLL registers cannot — intersection AND
-      // difference estimates from one union sketch. A = order-placing
-      // customers, B = positive-balance customers. Convention shared
-      // with the oracle: if a sketch is not full, θ = 2⁶⁴ and every
-      // hash is retained; if full, θ = the k-th smallest and retained
-      // means strictly below θ. est(X) = |retained ∩ X| · 2⁶⁴ div θ —
-      // all DECIMAL(38,0) integer arithmetic. 100 TB shape: the hash
-      // set is distinct-reduced map-side, the bottom-k is a k-bounded
-      // TakeOrdered, and every later join touches ≤ k rows. Exact
-      // counts ride along as the ground truth (affordable here; at
-      // 100 TB you would publish only the sketch estimates).
-      val k = 256
-      val two64 = "CAST('18446744073709551616' AS DECIMAL(38,0))"
-      def hashes(keys: DataFrame): DataFrame = keys.distinct()
-        .select(graft.functions.Hashing.fnvFmix64(col("g").cast("string")).as("h"))
-        .distinct()
-        .withColumn("u", expr(
-          s"CAST(h AS DECIMAL(38,0)) + CASE WHEN h < 0 THEN $two64 ELSE CAST(0 AS DECIMAL(38,0)) END"))
-      val hA = hashes(T(s, dir, "orders").select(col("o_custkey").as("g")))
-        .localCheckpoint(true)
-      val hB = hashes(T(s, dir, "customer").filter(col("c_acctbal") > 0)
-        .select(col("c_custkey").as("g"))).localCheckpoint(true)
-      def theta(n: Long): org.apache.spark.sql.Column =
-        if (n < k) expr(two64) else expr("max(u)")
-      def sketch(hs: DataFrame): DataFrame = hs.orderBy(col("u")).limit(k)
-      val skA = sketch(hA).localCheckpoint(true)
-      val skB = sketch(hB).localCheckpoint(true)
-      val skU = sketch(hA.union(hB).distinct()).localCheckpoint(true)
-      val nA = skA.count(); val nB = skB.count(); val nU = skU.count()
-      val thA = skA.agg(theta(nA).as("th"))
-      val thB = skB.agg(theta(nB).as("th"))
-      val thU = skU.agg(theta(nU).as("th"))
-      val flagged = skU
-        .join(hA.select(col("h"), lit(1L).as("in_a")), Seq("h"), "left")
-        .join(hB.select(col("h"), lit(1L).as("in_b")), Seq("h"), "left")
-        .na.fill(0L, Seq("in_a", "in_b"))
-      // per-set estimates from each set's own sketch
-      def setEst(sk: DataFrame, th: DataFrame): DataFrame =
-        sk.crossJoin(broadcast(th)).filter(col("u") < col("th"))
-          .agg(count(lit(1)).as("c"), first(col("th")).as("th"))
-          .select(expr(s"CAST((CAST(c AS DECIMAL(38,0)) * $two64) div th AS BIGINT)").as("e"))
-      val eA = setEst(skA, thA).withColumnRenamed("e", "est_a")
-      val eB = setEst(skB, thB).withColumnRenamed("e", "est_b")
-      val eSets = flagged.crossJoin(broadcast(thU)).filter(col("u") < col("th"))
-        .agg(count(lit(1)).as("cu"),
-          sum(when(col("in_a") === 1L && col("in_b") === 1L, 1L).otherwise(0L)).as("ci"),
-          sum(when(col("in_a") === 1L && col("in_b") === 0L, 1L).otherwise(0L)).as("cd"),
-          first(col("th")).as("th"))
-        .select(
-          expr(s"CAST((CAST(cu AS DECIMAL(38,0)) * $two64) div th AS BIGINT)").as("est_union"),
-          expr(s"CAST((CAST(ci AS DECIMAL(38,0)) * $two64) div th AS BIGINT)").as("est_inter"),
-          expr(s"CAST((CAST(cd AS DECIMAL(38,0)) * $two64) div th AS BIGINT)").as("est_diff_ab"))
-      val exact = hA.select(col("h"), lit(1L).as("a"))
-        .join(hB.select(col("h"), lit(1L).as("b")), Seq("h"), "full")
-        .na.fill(0L, Seq("a", "b"))
-        .agg(count(lit(1)).as("exact_union"),
-          sum(when(col("a") === 1L && col("b") === 1L, 1L).otherwise(0L)).as("exact_inter"),
-          sum(when(col("a") === 1L && col("b") === 0L, 1L).otherwise(0L)).as("exact_diff_ab"))
-      eA.crossJoin(eB).crossJoin(eSets).crossJoin(exact)
-        .select(lit(k.toLong).as("k"), lit(nA).as("n_sk_a"), lit(nB).as("n_sk_b"),
-          col("est_a"), col("est_b"), col("est_union"), col("est_inter"),
-          col("est_diff_ab"), col("exact_union"), col("exact_inter"), col("exact_diff_ab"))
-    }),
-
-    "g_linkpred" -> ((s, dir) => {
-      // link prediction (Liben-Nowell–Kleinberg 2003): common-neighbor
-      // and Jaccard scores for ANCHOR vertices of the part co-purchase
-      // graph — the "recommend links for these nodes" shape, which is
-      // what bounds the wedge expansion: only anchor adjacency rows
-      // (deg(a) each) fan through shared middles, so the candidate set
-      // is Σ_b∈N(a) deg(b), not the full quadratic wedge set. Middles
-      // wider than linkpredHubCap are dropped by definition (hubs carry
-      // no signal — the LSH star-cap argument; never binds at the
-      // fixtures, the oracle applies the identical cap). Scores are
-      // exact integers; Jaccard is micro-scaled nonnegative integral
-      // division.
-      val edges = ext.Graph.coOccurrencePairs(
-        T(s, dir, "lineitem"), "l_orderkey", "l_partkey", kcoreOrderCap)
-        .localCheckpoint(true)
-      val sym = edges.select(col("src").as("a"), col("dst").as("b"))
-        .union(edges.select(col("dst").as("a"), col("src").as("b")))
-      val deg = sym.groupBy("a").agg(count(lit(1)).as("d"))
-      val mids = deg.filter(col("d") <= linkpredHubCap)
-        .select(col("a").as("b"), col("d").as("db"))
-      val anchors = sym.filter(col("a") % 199 === 0)
-        .join(mids, Seq("b"), "left_semi")
-      val wedges = anchors.as("x")
-        .join(sym.as("y"), col("x.b") === col("y.b") && col("y.a") =!= col("x.a"))
-        .groupBy(col("x.a").as("u"), col("y.a").as("v"))
-        .agg(count(lit(1)).as("cn"))
-        .filter(col("cn") >= 2)
-      val nonAdj = wedges
-        .join(edges.select(col("src").as("u"), col("dst").as("v")), Seq("u", "v"), "left_anti")
-        .join(edges.select(col("dst").as("u"), col("src").as("v")), Seq("u", "v"), "left_anti")
-      nonAdj
-        .join(deg.select(col("a").as("u"), col("d").as("du")), Seq("u"))
-        .join(deg.select(col("a").as("v"), col("d").as("dv")), Seq("v"))
-        .select(col("u"), col("v"), col("cn"), col("du"), col("dv"),
-          expr("CAST((CAST(cn AS DECIMAL(18,0)) * 1000000) div (du + dv - cn) AS BIGINT)")
-            .as("jaccard_micro"))
-    }),
-
-    "sk_theta_grouped" -> ((s, dir) => {
-      // per-group KMV distinct estimates via the MERGEABLE bottom-k
-      // aggregate (functions.KmvAgg) — the aggregation-shaped theta
-      // sketch: one map-side-combined pass, ≤ k·8 bytes of shuffle per
-      // group, estimates from plain array expressions downstream. Same
-      // domain as sk_hll (distinct orderkeys per returnflag) so the two
-      // sketches' accuracy is directly comparable; exact counts ride
-      // along as fixture ground truth.
-      val sk = T(s, dir, "lineitem").groupBy("l_returnflag")
-        .agg(graft.functions.SketchAgg.kmvBottomK(
-          col("l_orderkey").cast("string"), 256).as("arr"))
-        .select(col("l_returnflag"), size(col("arr")).cast("long").as("n_sk"),
-          expr(kmvEstSql("arr", 256)).as("kmv_est"))
-      val exact = T(s, dir, "lineitem").groupBy("l_returnflag")
-        .agg(countDistinct(col("l_orderkey")).as("exact_nd"))
-      sk.join(exact, Seq("l_returnflag"))
-    }),
-
-    "stream_theta" -> ((s, dir) => withStreamShuffle(s, dir, "lineitem") {
-      // STREAMING KMV: the same bottom-k aggregate over a file stream
-      // (complete mode). Set-union + trim is order-free and idempotent,
-      // so the streamed sketch equals the batch sketch under any
-      // micro-batch slicing — same oracle as sk_theta_grouped (the
-      // stream_hll argument, now for the theta family).
-      val schema = s.read.parquet(s"$dir/lineitem.parquet").schema
-      val stream = s.readStream.schema(schema).parquet(s"$dir/[l]ineitem.parquet")
-      val skS = stream.groupBy("l_returnflag").agg(
-        graft.functions.SketchAgg.kmvBottomK(
-          col("l_orderkey").cast("string"), 256).as("arr"))
-      s.catalog.dropTempView("graft_stream_theta")
-      val q = skS.writeStream.format("memory").queryName("graft_stream_theta")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val exact = T(s, dir, "lineitem").groupBy("l_returnflag")
-        .agg(countDistinct(col("l_orderkey")).as("exact_nd"))
-      s.table("graft_stream_theta")
-        .select(col("l_returnflag"), size(col("arr")).cast("long").as("n_sk"),
-          expr(kmvEstSql("arr", 256)).as("kmv_est"))
-        .join(exact, Seq("l_returnflag"))
-    }),
-
-    "q_dp" -> ((s, dir) => {
-      // ε-differentially-private count release via the geometric
-      // mechanism (Ghosh–Roughgarden–Sundararajan, STOC 2009 — the
-      // discrete Laplace, utility-optimal for counts): noise is the
-      // EXACT inverse CDF of the two-sided geometric(α=½) (ε = ln 2)
-      // applied to the 32-bit md5 fraction of the group key —
-      // derandomized exactly like ta_bootstrap's Poisson multiplicities
-      // (threshold literals computed once in exact BigInt), so the
-      // release is reproducible under any partitioning and replayable
-      // in the oracle. True counts ride along at fixture scale; a real
-      // release would drop them (and the ±8 tail cap adds at most
-      // 2^-8-mass truncation, stated here as part of the mechanism).
-      val cnt = T(s, dir, "orders")
-        .groupBy(col("o_orderpriority").as("pri")).agg(count(lit(1)).as("n"))
-      cnt.withColumn("u32", conv(substring(md5(concat(lit("dp:"), col("pri"))), 1, 8),
-          16, 10).cast("long"))
-        .withColumn("noise", dpGeomNoise(col("u32")))
-        .select(col("pri"), col("n"), col("noise"), (col("n") + col("noise")).as("dp_n"))
-    }),
-
-    "sim_knn" -> ((s, dir) => {
-      // k-NN classification probe over the embedding space: anchors
-      // (vec_id < 8) classified by majority label of their 10 nearest
-      // pool neighbors (vec_id ≥ 8, cosine) — the standard cheap
-      // embedding-quality eval. Reuses the bounded-heap brute-force
-      // top-k (TopKAgg: the shuffle ships ≤ k rows per partition per
-      // anchor, never the full scored cross product); the vote is a
-      // ≤ 10-row-per-anchor aggregate decided by one struct-min with
-      // (votes desc, label asc) tie-break.
-      val emb = T(s, dir, "embeddings")
-      val top = ext.Similarity.bruteForceTopK(emb.filter(col("vec_id") >= 8),
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding", 10)
-      val votes = top
-        .join(emb.select(col("vec_id").as("neighbor_id"), col("label").as("nl")),
-          Seq("neighbor_id"))
-        .groupBy(col("query_id"), col("nl")).agg(count(lit(1)).as("votes"))
-      val pred = votes.groupBy("query_id")
-        .agg(min(struct((-col("votes")).as("nv"), col("nl").as("lbl"))).as("b"))
-        .select(col("query_id"), col("b.lbl").as("pred_label"), (-col("b.nv")).as("n_votes"))
-      pred.join(emb.select(col("vec_id").as("query_id"), col("label").as("truth_label")),
-          Seq("query_id"))
-        .select("query_id", "truth_label", "pred_label", "n_votes")
-    }),
-
-    "q_drift" -> ((s, dir) => {
-      // snapshot drift report — the data-quality gate a daily ingest
-      // runs before publishing: per-column profile metrics of the base
-      // orders snapshot vs the post-CDC state (q_mv_retract's
-      // deterministic update/insert/delete log), joined metric-by-
-      // metric. ONE full-width aggregate per snapshot computes every
-      // metric (count, nulls, distincts over the two bounded enums,
-      // scaled-integer sum and extrema of the price), then a stack()
-      // unpivot to (metric, value) rows — so drift over any column set
-      // costs two scans total, never a scan per metric.
-      def cdcState(base: DataFrame): DataFrame = {
-        val upd = base.filter(col("o_orderkey") % 5 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 1.1)
-          .withColumn("__seq__", lit(1)).withColumn("__op__", lit("U"))
-        val ins = base.filter(col("o_orderkey") % 11 === 0)
-          .withColumn("o_orderkey", col("o_orderkey") + 30000000L)
-          .withColumn("__seq__", lit(1)).withColumn("__op__", lit("I"))
-        val del = base.filter(col("o_orderkey") % 7 === 0)
-          .withColumn("o_totalprice", lit(0.0))
-          .withColumn("__seq__", lit(2)).withColumn("__op__", lit("D"))
-        val log = base.withColumn("__seq__", lit(0)).withColumn("__op__", lit("B"))
-          .unionByName(upd).unionByName(ins).unionByName(del)
-        import org.apache.spark.sql.expressions.Window
-        log.withColumn("__rn__", row_number().over(
-            Window.partitionBy("o_orderkey").orderBy(col("__seq__").desc)))
-          .filter(col("__rn__") === 1 && col("__op__") =!= "D")
-          .drop("__rn__", "__seq__", "__op__")
-      }
-      def profile(df: DataFrame): DataFrame =
-        df.agg(
-          count(lit(1)).as("n_rows"),
-          sum(when(col("o_orderstatus").isNull, 1L).otherwise(0L)).as("null_status"),
-          countDistinct(col("o_orderstatus")).as("nd_status"),
-          countDistinct(col("o_orderpriority")).as("nd_priority"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("sum_price_c"),
-          min(round(col("o_totalprice") * 100).cast("long")).as("min_price_c"),
-          max(round(col("o_totalprice") * 100).cast("long")).as("max_price_c"))
-        .select(expr(
-          """stack(7, 'n_rows', n_rows, 'null_status', null_status,
-             |'nd_status', nd_status, 'nd_priority', nd_priority,
-             |'sum_price_c', sum_price_c, 'min_price_c', min_price_c,
-             |'max_price_c', max_price_c) AS (metric, value)""".stripMargin))
-      val base = T(s, dir, "orders")
-      profile(base).select(col("metric"), col("value").as("value_base"))
-        .join(profile(cdcState(base))
-          .select(col("metric"), col("value").as("value_new")), Seq("metric"))
-        .select(col("metric"), col("value_base"), col("value_new"),
-          (col("value_new") - col("value_base")).as("delta"))
-    }),
-
-    "q_declist" -> ((s, dir) => {
-      // two-stage decision list: the q_stump histogram split-search,
-      // then a SECOND stump trained only on the first stage's
-      // misclassified rows — the residual-refit kernel of boosting.
-      // Each stage is one bounded histogram aggregate; the learned
-      // 1-row model crosses stages via a driver collect (work bounded
-      // by model size — the k-means/ev_markov pattern). Per-side
-      // predictions are integer majorities; every accuracy count is
-      // exact and derived from the same histogram.
-      val base = T(s, dir, "orders").select(
-        when(col("o_orderstatus") === "F", lit(1L)).otherwise(lit(0L)).as("y"),
-        year(col("o_orderdate").cast("date")).cast("long").as("bin_year"),
-        expr("least(CAST(round(o_totalprice * 100) AS BIGINT) div 3000000, 19)")
-          .as("bin_price")).localCheckpoint(true)
-      def bestStump(df: DataFrame): Option[org.apache.spark.sql.Row] =
-        stumpCandidates(df)
-          .orderBy(col("g_micro"), col("feature"), col("threshold")).limit(1)
-          .collect().headOption
-      def stageRow(r: org.apache.spark.sql.Row, stage: Int): DataFrame = {
-        val (nl, pl) = (r.getAs[Long]("n_left"), r.getAs[Long]("pos_left"))
-        val (nr, pr) = (r.getAs[Long]("n_right"), r.getAs[Long]("pos_right"))
-        val predL = if (2 * pl > nl) 1L else 0L
-        val predR = if (2 * pr > nr) 1L else 0L
-        val correct = (if (predL == 1L) pl else nl - pl) + (if (predR == 1L) pr else nr - pr)
-        s.range(1).select(lit(stage.toLong).as("stage"),
-          lit(r.getAs[String]("feature")).as("feature"),
-          lit(r.getAs[Long]("threshold")).as("threshold"),
-          lit(predL).as("pred_left"), lit(predR).as("pred_right"),
-          lit(nl + nr).as("n_train"), lit(correct).as("n_correct"))
-      }
-      val s1 = bestStump(base).get
-      val feat1 = col(if (s1.getAs[String]("feature") == "year") "bin_year" else "bin_price")
-      val predL1 = if (2 * s1.getAs[Long]("pos_left") > s1.getAs[Long]("n_left")) 1L else 0L
-      val predR1 = if (2 * s1.getAs[Long]("pos_right") > s1.getAs[Long]("n_right")) 1L else 0L
-      val pred1 = when(feat1 <= s1.getAs[Long]("threshold"), lit(predL1)).otherwise(lit(predR1))
-      val errors = base.filter(col("y") =!= pred1)
-      val out1 = stageRow(s1, 1)
-      bestStump(errors) match {
-        case Some(s2) => out1.unionByName(stageRow(s2, 2))
-        case None => out1
-      }
-    }),
-
-    "q_xcorr" -> ((s, dir) => {
-      // lead-lag cross-correlation between daily event VOLUME and daily
-      // event VALUE at lags −3..+3 — the "does activity lead value?"
-      // probe. Per lag: exact integer moment sums (n, Σx, Σy, Σxy, Σx²,
-      // Σy²) over the date-aligned pairs via q_theilsen's bounded-offset
-      // EQUI-join; Pearson r is ONE double expression over those exact
-      // integers — identical tree in the oracle, and IEEE sqrt is
-      // correctly rounded, so the doubles are bit-identical (the
-      // sim_topk argument). No windows; keyed shuffles only.
-      val daily = events(s, dir)
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).as("x"),
-          sum(round(col("value") * 10000).cast("long")).as("y"))
-        .localCheckpoint(true)
-      val pairs = daily.select(col("d"), col("x"))
-        .withColumn("lag_k", explode(sequence(lit(-3), lit(3))))
-        .select(col("lag_k"), col("x"), date_add(col("d"), col("lag_k")).as("d2"))
-        .join(daily.select(col("d"), col("y")), col("d2") === col("d"))
-      pairs.groupBy("lag_k").agg(
-          count(lit(1)).as("n_pairs"),
-          sum(col("x").cast("decimal(18,0)")).cast("decimal(38,0)").as("sx"),
-          sum(col("y").cast("decimal(18,0)")).cast("decimal(38,0)").as("sy"),
-          sum(col("x").cast("decimal(18,0)") * col("y").cast("decimal(18,0)"))
-            .cast("decimal(38,0)").as("sxy"),
-          sum(col("x").cast("decimal(18,0)") * col("x").cast("decimal(18,0)"))
-            .cast("decimal(38,0)").as("sxx"),
-          sum(col("y").cast("decimal(18,0)") * col("y").cast("decimal(18,0)"))
-            .cast("decimal(38,0)").as("syy"))
-        .select(col("lag_k"), col("n_pairs"),
-          col("sx").cast("string").as("sx"), col("sy").cast("string").as("sy"),
-          col("sxy").cast("string").as("sxy"),
-          expr("""CAST(CAST(n_pairs AS DECIMAL(38,0)) * sxy - sx * sy AS DOUBLE)
-                  / (sqrt(CAST(CAST(n_pairs AS DECIMAL(38,0)) * sxx - sx * sx AS DOUBLE))
-                     * sqrt(CAST(CAST(n_pairs AS DECIMAL(38,0)) * syy - sy * sy AS DOUBLE)))""")
-            .as("r"))
-    }),
-
-    "ta_novelty" -> ((s, dir) => {
-      // per-document n-gram novelty against the EARLIER corpus (doc_id
-      // order): the share of a doc's distinct token 3-grams whose first
-      // corpus appearance is the doc itself — the streaming-ingest
-      // freshness signal (near-1 docs are new material, near-0 docs are
-      // recombinations). One distinct (gram, doc) aggregate → min-doc
-      // per gram → per-doc ratio; grams join back as strings here for
-      // oracle byte-parity (a 100 TB run would fingerprint them to
-      // 64-bit ids first — dd_spans does exactly that). The gram frame
-      // is the shared wordGramSet kernel.
-      val grams = wordGramSet(T(s, dir, "documents"), 3)
-      val first = grams.groupBy("gram").agg(min(col("doc_id")).as("first_doc"))
-      grams.join(first, Seq("gram"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_grams"),
-          sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
-        .withColumn("novelty_micro",
-          expr("CAST((CAST(n_novel AS DECIMAL(18,0)) * 1000000) div n_grams AS BIGINT)"))
-    }),
-
-    "er_golden" -> ((s, dir) => {
-      // survivorship / golden-record construction — the step AFTER the
-      // transitive match: one canonical row per entity with
-      // deterministic survivorship rules (representative = min member
-      // key, name from the representative, newest balance = max cents,
-      // membership stats). Matching is NATION-BLOCKED (links only
-      // within a nation — the standard ER blocking key, and what keeps
-      // TPC-H's sequential names from chaining the whole table into one
-      // entity); survivorship is one struct-min/max aggregate per
-      // entity — shards by entity id.
-      val cust = T(s, dir, "customer")
-      val pairs = ext.FuzzyJoin.editDistanceSelfJoin(
-        cust, "c_custkey", "c_name", maxDist = 1, blockCol = Some("c_nationkey"))
-      val comp = ext.Graph.componentsFor(cust.select("c_custkey"), "c_custkey",
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-      comp.join(cust, Seq("c_custkey"))
-        .groupBy(col("component").as("entity_id"))
-        .agg(count(lit(1)).as("n_members"),
-          min(struct(col("c_custkey"), col("c_name"))).as("rep"),
-          max(round(col("c_acctbal") * 100).cast("long")).as("max_acctbal_c"),
-          countDistinct(col("c_mktsegment")).as("n_segments"))
-        .select(col("entity_id"), col("n_members"),
-          col("rep.c_custkey").as("rep_custkey"), col("rep.c_name").as("rep_name"),
-          col("max_acctbal_c"), col("n_segments"))
-    }),
-
-    "er_jw" -> ((s, dir) => {
-      // Jaro-Winkler candidate scoring over the nation-blocked pair set —
-      // the classic record-linkage similarity (Winkler 1990) the er_*
-      // ladder was missing next to its edit-distance tier. Native
-      // Catalyst expression (functions/StringSim.scala) whose integer
-      // (m, t, len, prefix) pieces go through the exact double-arithmetic
-      // order DuckDB's jaro_winkler_similarity uses, so floor-micro
-      // values hash-match across all ~44k blocked pairs. Per nation:
-      // pair count, near-matches (jw > 0.97), and the micro-sum (a
-      // value-parity check over every pair). Blocked quadratic — bounded
-      // by block size², the standard ER cost envelope, never all-pairs.
-      val c = T(s, dir, "customer")
-        .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-      c.as("a").join(c.as("b"),
-          col("a.c_nationkey") === col("b.c_nationkey") &&
-            col("a.c_custkey") < col("b.c_custkey"))
-        .select(col("a.c_nationkey").as("nation_id"),
-          graft.functions.StringSim.jaroWinkler(
-            col("a.c_name"), col("b.c_name")).as("jw"))
-        .groupBy("nation_id")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("jw") > 0.97, 1L).otherwise(0L)).as("n_close"),
-          sum(floor(col("jw") * 1e6)).as("jw_micro_sum"))
-    }),
-
-    "er_eval" -> ((s, dir) => {
-      // ER blocking-loss audit — the eval row for er_entities' nation
-      // blocking: candidates that pass exact levenshtein verify are all
-      // true pairs (precision ≡ 1 by construction), so the number that
-      // matters is BLOCKING RECALL — the share of the exact unblocked
-      // d≤1 pair set (q_fuzzy_join's, proven equal to the cross-join
-      // oracle) whose members share a nation. One row; what you read
-      // before accepting blocked ER for a corpus.
-      val cust = T(s, dir, "customer")
-      val pairs = ext.FuzzyJoin.editDistanceSelfJoin(
-        cust, "c_custkey", "c_name", maxDist = 1)
-      val nat = cust.select(col("c_custkey"), col("c_nationkey"))
-      pairs
-        .join(nat.select(col("c_custkey").as("id_a"), col("c_nationkey").as("na")), "id_a")
-        .join(nat.select(col("c_custkey").as("id_b"), col("c_nationkey").as("nb")), "id_b")
-        .agg(count(lit(1)).as("n_true"),
-          sum(when(col("na") === col("nb"), 1L).otherwise(0L)).as("n_blocked"),
-          sum(when(col("na") =!= col("nb"), 1L).otherwise(0L)).as("n_lost"))
-        .select(col("n_true"), col("n_blocked"), col("n_lost"),
-          expr("""CASE WHEN n_true = 0 THEN CAST(1000000 AS BIGINT)
-                 ELSE CAST((n_blocked * 1000000) div n_true AS BIGINT) END""")
-            .as("recall_micro"))
-    }),
-
-    "srch_phrase" -> ((s, dir) => {
-      // exact-phrase retrieval over positional postings: the corpus's
-      // most frequent token bigram (count desc, bigram asc — a 1-row
-      // TakeOrdered, the deterministic "query") matched back to every
-      // document with occurrence count and first position. This is the
-      // read path the srch_invindex postings exist for; both stages are
-      // map-side-combinable aggregates and the probe join broadcasts
-      // the single phrase row.
-      val bi = T(s, dir, "documents").select(col("doc_id"),
-          filter(split(lower(col("text")), "\\s+"), x => x =!= "").as("t"))
-        .filter(size(col("t")) >= 2)
-        .select(col("doc_id"), posexplode(expr(
-          "transform(sequence(0, size(t) - 2), i -> concat(t[i], ' ', t[i + 1]))")))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "bigram")
-        .localCheckpoint(true) // consumed by the top-1 agg AND the probe join
-      val top = bi.groupBy("bigram").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("bigram").asc).limit(1)
-        .select(col("bigram").as("phrase"))
-      bi.join(broadcast(top), col("bigram") === col("phrase"))
-        .groupBy("doc_id", "phrase")
-        .agg(count(lit(1)).as("n_occ"), min(col("p")).cast("long").as("first_pos"))
-    }),
-
-    "dd_lsh_planner" -> ((s, dir) => {
-      // LSH banding planner: the collision S-curves P(candidate | s) =
-      // 1 − (1 − s^r)^b for the SHIPPED MinHash config (k=64: b=16,r=4)
-      // and the tighter alternative (b=8,r=8), tabulated at Jaccard
-      // similarities 5%..95% — the table an operator reads to pick
-      // banding before a 100 TB dedup pass. The powers are generated as
-      // the SAME literal multiply tree in both engines (squaring chains,
-      // no libm pow), so the doubles are bit-identical. Pure literal
-      // compute — the only input is the similarity grid.
-      s.range(1).select(explode(sequence(lit(5), lit(95), lit(5))).as("s_pct"))
-        .select(col("s_pct"),
-          expr(lshCurveSql(4, 16)).as("p_b16_r4"),
-          expr(lshCurveSql(8, 8)).as("p_b8_r8"))
-    }),
-
-    "q_ks" -> ((s, dir) => {
-      // Kolmogorov–Smirnov goodness-of-fit of order prices against the
-      // uniform law on [min, max] — the distribution-drift test to pair
-      // with q_chisq's independence test. ECDF ranks come from the
-      // range-partitioned exact rank (ext.Ranks — no single-partition
-      // sort); the model CDF and both one-sided statistics are micro-
-      // scaled integral divisions of nonnegative cents. Output is the
-      // 1-row (n, D+, D−, D) summary.
-      val base = T(s, dir, "orders").select(
-        round(col("o_totalprice") * 100).cast("long").as("x"),
-        col("o_orderkey").as("id"))
-        .localCheckpoint(true) // consumed by the min/max agg AND the rank
-      val mm = base.agg(min("x").as("mn"), max("x").as("mx"))
-      val ranked = ext.Ranks.groupedRank(
-        base.withColumn("__grp__", lit(0)), "__grp__",
-        Seq(col("x"), col("id")), "rn")
-      ranked.crossJoin(broadcast(mm))
-        .select(col("rn"), col("rn_n").as("n"),
-          expr("""CASE WHEN mx = mn THEN CAST(0 AS BIGINT)
-                  ELSE CAST(((x - mn) * 1000000) div (mx - mn) AS BIGINT) END""").as("f_micro"))
-        .select(col("n"),
-          (expr("CAST(rn * 1000000 div n AS BIGINT)") - col("f_micro")).as("dp"),
-          (col("f_micro") - expr("CAST((rn - 1) * 1000000 div n AS BIGINT)")).as("dm"))
-        .groupBy("n")
-        .agg(max("dp").as("d_plus_micro"), max("dm").as("d_minus_micro"))
-        .withColumn("d_micro", greatest(col("d_plus_micro"), col("d_minus_micro")))
-    }),
-
-    "dd_threshold_sweep" -> ((s, dir) => {
-      // dd_eval generalized to a THRESHOLD SWEEP from one pass: the
-      // banding's precision/recall at five decision thresholds, the
-      // table you read before picking est ≥ t for a corpus (dd_eval
-      // audits the single shipped point; this draws the curve).
-      // Exact side: per anchor pair the division-free test
-      // i·(100+t) ≥ t·(|A|+|B|); predicted side: signature agreement
-      // m/64 ≥ t/100 ⇔ 100·m ≥ 64·t — both integer, per threshold,
-      // via one broadcast 5-row literal table. Candidates stay the
-      // banded set (threshold 0 keeps every banded pair once).
-      val gset = wordGramSet(T(s, dir, "documents"), 3)
-        .withColumnRenamed("gram", "g")
-      val gsz = gset.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      val inter = gset.filter(col("doc_id") % 37 === 0).as("a")
-        .join(gset.as("b"), col("a.g") === col("b.g") && col("a.doc_id") =!= col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"))
-        .agg(count(lit(1)).as("i"))
-      val exact = inter
-        .join(gsz.select(col("doc_id").as("ia"), col("sz").as("sa")), Seq("ia"))
-        .join(gsz.select(col("doc_id").as("ib"), col("sz").as("sb")), Seq("ib"))
-        .select(least(col("ia"), col("ib")).as("pa"),
-          greatest(col("ia"), col("ib")).as("pb"),
-          col("i"), (col("sa") + col("sb")).as("ssum"))
-        .groupBy("pa", "pb").agg(max("i").as("i"), max("ssum").as("ssum"))
-      val lsh = ext.Dedup.minhashPairs(T(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.0)
-        .filter(col("id_a") % 37 === 0 || col("id_b") % 37 === 0)
-        .select(col("id_a").as("pa"), col("id_b").as("pb"),
-          round(col("est_jaccard") * 64).cast("long").as("m64"))
-      val joined = exact.join(lsh, Seq("pa", "pb"), "full")
-        .na.fill(0L, Seq("i", "ssum", "m64"))
-      val ts = s.createDataFrame(Seq(40L, 50L, 60L, 70L, 80L).map(Tuple1(_))).toDF("t")
-      joined.crossJoin(broadcast(ts))
-        .select(col("t"),
-          when(col("i") > 0L && col("i") * (lit(100L) + col("t")) >= col("t") * col("ssum"), 1L)
-            .otherwise(0L).as("e"),
-          when(lit(100L) * col("m64") >= lit(64L) * col("t"), 1L).otherwise(0L).as("p"))
-        .groupBy("t")
-        .agg(sum(when(col("e") === 1L && col("p") === 1L, 1L).otherwise(0L)).as("tp"),
-          sum(when(col("e") === 0L && col("p") === 1L, 1L).otherwise(0L)).as("fp"),
-          sum(when(col("e") === 1L && col("p") === 0L, 1L).otherwise(0L)).as("fn"))
-        .select(col("t"), (col("tp") + col("fn")).as("n_exact"),
-          (col("tp") + col("fp")).as("n_pred"),
-          col("tp"), col("fp"), col("fn"),
-          expr("""CASE WHEN tp + fp = 0 THEN CAST(1000000 AS BIGINT)
-                  ELSE CAST((tp * 1000000) div (tp + fp) AS BIGINT) END""").as("precision_micro"),
-          expr("""CASE WHEN tp + fn = 0 THEN CAST(1000000 AS BIGINT)
-                  ELSE CAST((tp * 1000000) div (tp + fn) AS BIGINT) END""").as("recall_micro"))
-    }),
-
-    "dd_eval" -> ((s, dir) => {
-      // LSH quality audit — precision/recall of the SHIPPED MinHash
-      // banding (k=64, b=16, est ≥ 0.5) against EXACT 3-gram-set
-      // Jaccard ≥ 0.5, ground-truthed on an anchor cohort (doc_id %
-      // 37) so the exact side stays anchors × corpus via gram postings
-      // (the sim_recall pattern — never all-pairs). The threshold
-      // compare is division-free (J ≥ ½ ⇔ 3·|∩| ≥ |A|+|B|); P/R are
-      // micro-scaled integral divisions. This is the audit that says
-      // whether dd_lsh_planner's chosen banding is actually delivering.
-      val gset = wordGramSet(T(s, dir, "documents"), 3)
-        .withColumnRenamed("gram", "g") // shared kernel (already checkpointed)
-      val gsz = gset.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      val inter = gset.filter(col("doc_id") % 37 === 0).as("a")
-        .join(gset.as("b"), col("a.g") === col("b.g") && col("a.doc_id") =!= col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"))
-        .agg(count(lit(1)).as("i"))
-      val exact = inter
-        .join(gsz.select(col("doc_id").as("ia"), col("sz").as("sa")), Seq("ia"))
-        .join(gsz.select(col("doc_id").as("ib"), col("sz").as("sb")), Seq("ib"))
-        .filter(col("i") * 3 >= col("sa") + col("sb"))
-        .select(least(col("ia"), col("ib")).as("pa"), greatest(col("ia"), col("ib")).as("pb"))
-        .distinct()
-      val lsh = ext.Dedup.minhashPairs(T(s, dir, "documents"), "doc_id", "text")
-        .filter(col("id_a") % 37 === 0 || col("id_b") % 37 === 0)
-        .select(col("id_a").as("pa"), col("id_b").as("pb"))
-      val joined = exact.withColumn("e", lit(1L))
-        .join(lsh.withColumn("l", lit(1L)), Seq("pa", "pb"), "full")
-        .na.fill(0L, Seq("e", "l"))
-      // pruned scan: only the doc_id column is read for the anchor count
-      val nAnch = T(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") % 37 === 0).count()
-      joined.agg(
-          sum(when(col("e") === 1L && col("l") === 1L, 1L).otherwise(0L)).as("tp"),
-          sum(when(col("e") === 0L && col("l") === 1L, 1L).otherwise(0L)).as("fp"),
-          sum(when(col("e") === 1L && col("l") === 0L, 1L).otherwise(0L)).as("fn"))
-        .select(lit(nAnch).as("n_anchors"),
-          (col("tp") + col("fn")).as("n_exact"), (col("tp") + col("fp")).as("n_lsh"),
-          col("tp"), col("fp"), col("fn"),
-          expr("""CASE WHEN tp + fp = 0 THEN CAST(1000000 AS BIGINT)
-                  ELSE CAST((tp * 1000000) div (tp + fp) AS BIGINT) END""").as("precision_micro"),
-          expr("""CASE WHEN tp + fn = 0 THEN CAST(1000000 AS BIGINT)
-                  ELSE CAST((tp * 1000000) div (tp + fn) AS BIGINT) END""").as("recall_micro"))
-    }),
-
-    "ta_langid_eval" -> ((s, dir) => {
-      // language-ID confusion matrix — the eval loop for the n-gram
-      // heuristic (mirrors ta_nbc_eval for the Bayes classifier): truth
-      // × guess counts plus per-cell share of the truth row, all exact
-      // integers over one classification pass.
-      val scored = T(s, dir, "documents")
-        .select(col("lang").as("lang_truth"),
-          ext.TextAnalysis.langId(col("text")).as("lang_guess"))
-      val conf = scored.groupBy("lang_truth", "lang_guess").agg(count(lit(1)).as("n"))
-      val tot = conf.groupBy("lang_truth").agg(sum("n").as("n_truth"))
-      conf.join(broadcast(tot), Seq("lang_truth"))
-        .withColumn("share_micro",
-          expr("CAST((n * 1000000) div n_truth AS BIGINT)"))
-    }),
-
-    "ev_dau_mau" -> ((s, dir) => {
-      // DAU/MAU stickiness: daily actives over trailing-30-day actives.
-      // The rolling DISTINCT is exact via the bounded-offset explode —
-      // each (user, day) fact feeds the 30 window-days it belongs to,
-      // then one distinct + count per window-day (no window function,
-      // no approximate distinct); the ratio is a micro-scaled integral
-      // division. The engagement metric every product pipeline ships.
-      val ud = events(s, dir)
-        .select(col("user_id"), col("ts").cast("date").as("d")).distinct()
-        .localCheckpoint(true) // feeds DAU and the MAU fan-out
-      val dau = ud.groupBy("d").agg(count(lit(1)).as("dau"))
-      val mau = ud.withColumn("off", explode(sequence(lit(0), lit(29))))
-        .select(col("user_id"), date_add(col("d"), col("off")).as("wd"))
-        .distinct()
-        .groupBy("wd").agg(count(lit(1)).as("mau"))
-      dau.join(mau, col("d") === col("wd"))
-        .select(col("d"), col("dau"), col("mau"),
-          expr("CAST((dau * 1000000) div mau AS BIGINT)").as("stickiness_micro"))
-    }),
-
-    "q_corr" -> ((s, dir) => {
-      // one-pass correlation MATRIX over the lineitem numerics
-      // (quantity, price-cents, discount-bp, tax-bp): ALL moment sums
-      // (4 sums, 4 sum-of-squares, 6 cross-products) ride ONE
-      // map-side-combined aggregate over exact integers; each pairwise
-      // Pearson r is then a single shared-tree double (IEEE sqrt) —
-      // the feature-screening pass that decides what a model even
-      // sees, at one scan regardless of the pair count.
-      val base = T(s, dir, "lineitem").select(
-        col("l_quantity").cast("long").as("v0"),
-        round(col("l_extendedprice") * 100).cast("long").as("v1"),
-        round(col("l_discount") * 10000).cast("long").as("v2"),
-        round(col("l_tax") * 10000).cast("long").as("v3"))
-      val names = Seq("quantity", "price_c", "discount_bp", "tax_bp")
-      val aggs =
-        (0 to 3).map(i => sum(col(s"v$i").cast("decimal(18,0)")).cast("decimal(38,0)").as(s"s$i")) ++
-        (0 to 3).map(i => sum(col(s"v$i").cast("decimal(18,0)") * col(s"v$i").cast("decimal(18,0)"))
-          .cast("decimal(38,0)").as(s"q$i")) ++
-        (for { i <- 0 to 3; j <- i + 1 to 3 } yield
-          sum(col(s"v$i").cast("decimal(18,0)") * col(s"v$j").cast("decimal(18,0)"))
-            .cast("decimal(38,0)").as(s"p${i}_$j"))
-      val g = base.agg(count(lit(1)).as("n"), aggs: _*).localCheckpoint(true)
-      // constant column ⇒ zero variance ⇒ r undefined: emit NULL rather
-      // than an engine-dependent NaN/Inf (the replay contract covers
-      // finite doubles only)
-      val pairs = for { i <- 0 to 3; j <- i + 1 to 3 } yield
-        g.select(lit(names(i)).as("var_a"), lit(names(j)).as("var_b"), col("n"),
-          expr(s"""CASE WHEN CAST(n AS DECIMAL(38,0)) * q$i - s$i * s$i = 0
-                        OR CAST(n AS DECIMAL(38,0)) * q$j - s$j * s$j = 0
-                   THEN CAST(NULL AS DOUBLE)
-                   ELSE CAST(CAST(n AS DECIMAL(38,0)) * p${i}_$j - s$i * s$j AS DOUBLE)
-                   / (sqrt(CAST(CAST(n AS DECIMAL(38,0)) * q$i - s$i * s$i AS DOUBLE))
-                      * sqrt(CAST(CAST(n AS DECIMAL(38,0)) * q$j - s$j * s$j AS DOUBLE))) END""").as("r"))
-      pairs.reduce(_ unionByName _)
-    }),
-
-    "sim_medoid" -> ((s, dir) => {
-      // per-cluster exemplar selection (1-medoid): for each label, the
-      // vector maximizing the summed dot product to its cluster-mates —
-      // the representative-document pick after clustering. Per-pair
-      // scores are rounded to micro INTEGERS so the per-candidate sum
-      // is order-free (bit-exact under any partitioning); the argmax is
-      // a per-label struct-min. Pairing is label-blocked (quadratic per
-      // LABEL, never corpus-wide) — at larger clusters the coreset/cap
-      // machinery bounds it the usual way.
-      val emb = T(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"), col("embedding"))
-      val pairs = emb.as("a")
-        .join(emb.as("b"), col("a.label") === col("b.label") && col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.label").as("label"), col("a.vec_id").as("cand"),
-          round(ext.Vectors.dot(col("a.embedding"), col("b.embedding")) * 1e6)
-            .cast("long").as("dot_micro"))
-      val scored = pairs.groupBy("label", "cand")
-        .agg(sum("dot_micro").as("score_micro"), count(lit(1)).as("n_mates"))
-      scored.groupBy("label")
-        .agg(min(struct((-col("score_micro")).as("ns"), col("cand").as("id"),
-          col("score_micro").as("sc"), col("n_mates").as("nm"))).as("b"))
-        .select(col("label"), col("b.id").as("medoid_id"),
-          col("b.sc").as("score_micro"), col("b.nm").as("n_mates"))
-    }),
-
-    "q_mi" -> ((s, dir) => {
-      // mutual information of the segment × status table in micro-nats —
-      // the dependence measure to pair with q_chisq: MI = Σ O/N ·
-      // (ln(O·N) − ln(R·C)). Both logs take EXACT INTEGER arguments
-      // (ta_pmi's micro-nat doctrine — the rounding margin of
-      // ln(integer)·10⁶ holds), so each cell contributes the exact
-      // integer O·(ln_micro(O·N) − ln_micro(R·C)) and the total is one
-      // order-free sum presented div N. Same bounded contingency
-      // pipeline as q_chisq.
-      val joined = T(s, dir, "orders")
-        .join(T(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment").as("seg"), col("o_orderstatus").as("status"))
-      val obs = joined.groupBy("seg", "status").agg(count(lit(1)).as("observed"))
-      val rowT = obs.groupBy("seg").agg(sum("observed").as("n_seg"))
-      val colT = obs.groupBy("status").agg(sum("observed").as("n_status"))
-      val tot = obs.agg(sum("observed").as("n_total"))
-      val cells = obs.join(broadcast(rowT), Seq("seg"))
-        .join(broadcast(colT), Seq("status"))
-        .crossJoin(broadcast(tot))
-        .select(col("seg"), col("status"), col("observed"), col("n_total"),
-          (col("observed") * (
-            round(log(col("observed").cast("double") * col("n_total").cast("double")) * 1e6).cast("long")
-            - round(log(col("n_seg").cast("double") * col("n_status").cast("double")) * 1e6).cast("long")
-          )).as("cell_micro_n"))
-      cells.groupBy("n_total")
-        .agg(count(lit(1)).as("n_cells"), sum("cell_micro_n").as("sum_cell"))
-        .select(col("n_total").as("n"), col("n_cells"),
-          expr("""CAST(CASE WHEN sum_cell < 0 THEN -1 WHEN sum_cell > 0 THEN 1 ELSE 0 END AS BIGINT)
-                  * CAST(abs(CAST(sum_cell AS DECIMAL(38,0))) div n_total AS BIGINT)""")
-            .as("mi_micro"))
-    }),
-
-    "ta_readability" -> ((s, dir) => {
-      // readability scoring (Flesch-style, integer form): words,
-      // sentences (terminal punctuation runs), and syllables (vowel
-      // groups — the standard heuristic) are exact regexp counts, and
-      // the score is presented as the micro-scaled pair of rates the
-      // Flesch formula combines (words/sentence, syllables/word) —
-      // integral divisions, no float blend. Pure codegen'd expressions,
-      // one pass, the cheap quality feature every corpus filter stacks.
-      val d = T(s, dir, "documents")
-      d.select(col("doc_id"),
-          size(filter(split(lower(col("text")), "\\s+"), x => x =!= "")).cast("long").as("n_words"),
-          greatest(regexp_count(col("text"), lit("[.!?]+")).cast("long"), lit(1L)).as("n_sentences"),
-          greatest(regexp_count(lower(col("text")), lit("[aeiouy]+")).cast("long"), lit(1L)).as("n_syllables"))
-        .filter(col("n_words") > 0)
-        .select(col("doc_id"), col("n_words"), col("n_sentences"), col("n_syllables"),
-          expr("CAST((n_words * 1000000) div n_sentences AS BIGINT)").as("words_per_sentence_micro"),
-          expr("CAST((n_syllables * 1000000) div n_words AS BIGINT)").as("syllables_per_word_micro"))
-    }),
-
-    "sk_incremental" -> ((s, dir) => {
-      // incremental distinct-ledger update: yesterday's per-source KMV
-      // sketch merged with today's batch sketch WITHOUT rescanning
-      // history — set-union + bottom-k at the ARRAY level (pure codegen
-      // expressions, no re-aggregation), and the merge is proven
-      // in-row equal to the full-corpus sketch (`equal_full`): the
-      // mergeability that makes the daily 100 TB ingest update O(today)
-      // instead of O(history). Sketches ride as unsigned DECIMAL(38,0)
-      // arrays so array_sort gives unsigned hash order.
-      val k = 256
-      val two64 = "CAST('18446744073709551616' AS DECIMAL(38,0))"
-      val docs = T(s, dir, "documents")
-      def sk(part: DataFrame): DataFrame = part.groupBy("source")
-        .agg(graft.functions.SketchAgg.kmvBottomK(col("doc_id").cast("string"), k).as("arr"))
-      def toU(c: String) = expr(
-        s"""transform($c, h -> CAST(h AS DECIMAL(38,0))
-           | + CASE WHEN h < 0 THEN $two64 ELSE CAST(0 AS DECIMAL(38,0)) END)""".stripMargin)
-      val empty = s"CAST(array() AS ARRAY<DECIMAL(38,0)>)"
-      val yday = sk(docs.filter(col("doc_id") < 250)).select(col("source"), toU("arr").as("ua"))
-      val today = sk(docs.filter(col("doc_id") >= 250)).select(col("source"), toU("arr").as("ub"))
-      val full = sk(docs).select(col("source"), toU("arr").as("uf"))
-      yday.join(today, Seq("source"), "full")
-        .withColumn("m", expr(
-          s"slice(array_sort(array_union(coalesce(ua, $empty), coalesce(ub, $empty))), 1, $k)"))
-        .join(full, Seq("source"))
-        .select(col("source"), size(col("m")).cast("long").as("n_merged"),
-          expr(s"""CAST((CAST(CASE WHEN size(m) < $k THEN size(m) ELSE size(m) - 1 END AS DECIMAL(38,0))
-                   | * $two64) div (CASE WHEN size(m) < $k THEN $two64 ELSE element_at(m, -1) END) AS BIGINT)""".stripMargin)
-            .as("kmv_est_merged"),
-          (col("m") === col("uf")).as("equal_full"))
-    }),
-
-    "q_gini" -> ((s, dir) => {
-      // Gini coefficient of customer spend concentration (Lorenz-curve
-      // inequality): G = (2·Σ rn·x − (n+1)·Σx) / (n·Σx) over per-
-      // customer spend ranked ascending — exact decimal sums over exact
-      // ranks (ext.Ranks again), one nonnegative micro-scaled integral
-      // division. The whale-detection statistic for spend, tokens, or
-      // storage per tenant.
-      val spend = T(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("x"))
-      val ranked = ext.Ranks.groupedRank(
-        spend.withColumn("__grp__", lit(0)), "__grp__",
-        Seq(col("x"), col("o_custkey")), "rn")
-      ranked.agg(count(lit(1)).as("n"),
-          sum(col("x").cast("decimal(18,0)")).cast("decimal(38,0)").as("sx"),
-          sum(col("rn").cast("decimal(18,0)") * col("x").cast("decimal(18,0)"))
-            .cast("decimal(38,0)").as("srx"))
-        .select(col("n"), col("sx").cast("long").as("sum_spend_c"),
-          expr("""CASE WHEN sx = 0 THEN CAST(NULL AS BIGINT)
-                  ELSE CAST(((2 * srx - (CAST(n AS DECIMAL(18,0)) + 1) * sx) * 1000000)
-                  div (CAST(n AS DECIMAL(18,0)) * sx) AS BIGINT) END""").as("gini_micro"))
-    }),
-
-    "q_auc" -> ((s, dir) => {
-      // ROC AUC as the tie-aware Mann–Whitney rank-sum — the distributed
-      // classifier-eval primitive (does same-day engagement rank
-      // purchase propensity? units are user-days, so both classes exist
-      // at every fixture): AUC·2PN = Σ_scores (2·negBelow·pos + pos·neg),
-      // computed from per-score COUNTS, never a global row sort — the
-      // score domain (events per user-day) is a BOUNDED integer, so the one
-      // cumulative window runs over the ≤O(max_score) distinct-score
-      // table, not the user frame (the q_chisq bounded-contingency
-      // doctrine). Doubling the numerator keeps tie credit (pos·neg/2)
-      // integral; auc_micro is one integral division with the identical
-      // tree in the oracle.
-      val perUnit = events(s, dir)
-        .groupBy(col("user_id"), to_date(col("ts")).as("day")).agg(
-          sum(when(col("event_type").isin("view", "click"), 1L).otherwise(0L)).as("score"),
-          max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("label"))
-      val byScore = perUnit.groupBy("score").agg(
-        sum(col("label")).as("pos"),
-        sum(lit(1L) - col("label")).as("neg"))
-      val w = org.apache.spark.sql.expressions.Window.orderBy("score")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      val cum = byScore.withColumn("neg_below", coalesce(sum("neg").over(w), lit(0L)))
-      cum.agg(sum(col("pos")).as("p"), sum(col("neg")).as("n"),
-          sum(col("neg_below") * col("pos") * 2 + col("pos") * col("neg")).as("u2"))
-        .select(col("p").as("n_pos"), col("n").as("n_neg"), col("u2").as("u_doubled"),
-          expr("""CASE WHEN p = 0 OR n = 0 THEN CAST(NULL AS BIGINT)
-                  ELSE CAST((u2 * 1000000) div (2 * p * n) AS BIGINT) END""").as("auc_micro"))
-    }),
-
-    "q_auc_delong" -> ((s, dir) => {
-      // DeLong variance + Wald CI for q_auc's Mann–Whitney AUC: the
-      // structural components V10 (per positive) and V01 (per negative)
-      // depend ONLY on the unit's score, so on the bounded score domain
-      // both collapse onto the per-score histogram — V10d(s) =
-      // 2·negBelow + negAt in half-units, V01d(t) = 2·posAbove + posAt —
-      // and the component variances are exact-integer weighted sums of
-      // squares over the ≤O(max_score) score table (DECIMAL/HUGEINT so
-      // the squares never wrap). No per-unit pass beyond q_auc's own
-      // aggregation; float work is one mirrored expression chain at the
-      // end. The CI every AUC point estimate should ship with.
-      import org.apache.spark.sql.expressions.Window
-      val perUnit = events(s, dir)
-        .groupBy(col("user_id"), to_date(col("ts")).as("day")).agg(
-          sum(when(col("event_type").isin("view", "click"), 1L).otherwise(0L)).as("score"),
-          max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("label"))
-      val byScore = perUnit.groupBy("score").agg(
-        sum(col("label")).as("pos"), sum(lit(1L) - col("label")).as("neg"))
-      val w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
-      val cum = byScore
-        .withColumn("neg_below", coalesce(sum("neg").over(w), lit(0L)))
-        .withColumn("pos_below", coalesce(sum("pos").over(w), lit(0L)))
-        .withColumn("tp", sum("pos").over(Window.partitionBy()))
-      val g = cum.agg(
-        sum("pos").as("n1"), sum("neg").as("n0"),
-        sum(expr("pos * (2 * neg_below + neg)")).as("u2"),
-        sum(expr("CAST(pos AS DECIMAL(38,0)) * (2 * neg_below + neg) * (2 * neg_below + neg)")).as("q1"),
-        sum(expr("CAST(neg AS DECIMAL(38,0)) * (2 * (tp - pos_below - pos) + pos) * (2 * (tp - pos_below - pos) + pos)")).as("q0"))
-      g.withColumn("aucd",
-          expr("CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE))"))
-        .withColumn("s10",
-          expr("""(CAST(q1 AS DOUBLE) / (4.0 * CAST(n0 AS DOUBLE) * CAST(n0 AS DOUBLE))
-                 - CAST(n1 AS DOUBLE) * aucd * aucd) / (CAST(n1 AS DOUBLE) - 1.0)"""))
-        .withColumn("s01",
-          expr("""(CAST(q0 AS DOUBLE) / (4.0 * CAST(n1 AS DOUBLE) * CAST(n1 AS DOUBLE))
-                 - CAST(n0 AS DOUBLE) * aucd * aucd) / (CAST(n0 AS DOUBLE) - 1.0)"""))
-        .withColumn("se", expr("sqrt(s10 / CAST(n1 AS DOUBLE) + s01 / CAST(n0 AS DOUBLE))"))
-        .select(col("n1").as("n_pos"), col("n0").as("n_neg"),
-          expr("""CASE WHEN n1 = 0 OR n0 = 0 THEN CAST(NULL AS BIGINT)
-                  ELSE CAST((u2 * 1000000) div (2 * n1 * n0) AS BIGINT) END""").as("auc_micro"),
-          expr("""CASE WHEN n1 < 2 OR n0 < 2 THEN CAST(NULL AS BIGINT)
-                  ELSE CAST(round(se * 1000000) AS BIGINT) END""").as("se_micro"),
-          expr("""CASE WHEN n1 < 2 OR n0 < 2 THEN CAST(NULL AS BIGINT)
-                  ELSE CAST(round((aucd - 1.96 * se) * 1000000) AS BIGINT) END""").as("lo_micro"),
-          expr("""CASE WHEN n1 < 2 OR n0 < 2 THEN CAST(NULL AS BIGINT)
-                  ELSE CAST(round((aucd + 1.96 * se) * 1000000) AS BIGINT) END""").as("hi_micro"))
-    }),
-
-    "q_benford" -> ((s, dir) => {
-      // Benford first-digit audit of order totals (the fraud/data-entry
-      // anomaly screen): observed first-digit counts of the cents
-      // integer vs the Benford expectation, per-digit χ² contributions
-      // in micro units. Expected probabilities log10(1+1/d) ride as
-      // HARDCODED micro-integer literals (the same nine literals in the
-      // oracle — no float log at query time), and the (O·1e6 − E_micro)²
-      // numerator is exact DECIMAL(38,0). One groupBy over a 9-row
-      // domain: trivially map-side combined at any scale.
-      val obs = T(s, dir, "orders")
-        .select(substring(round(col("o_totalprice") * 100).cast("long").cast("string"), 1, 1)
-          .cast("int").as("digit"))
-        .groupBy("digit").agg(count(lit(1)).as("observed"))
-      val tot = obs.agg(sum("observed").as("n_total"))
-      obs.crossJoin(broadcast(tot))
-        .withColumn("p_micro", expr(
-          "element_at(array(301030L,176091L,124939L,96910L,79181L,66947L,57992L,51153L,45757L), digit)"))
-        .withColumn("expected_micro", col("n_total") * col("p_micro"))
-        .withColumn("d_micro", col("observed") * lit(1000000L) - col("expected_micro"))
-        .select(col("digit").cast("long").as("digit"), col("observed"), col("expected_micro"),
-          expr("CAST((CAST(d_micro AS DECIMAL(38,0)) * d_micro) div expected_micro AS BIGINT)")
-            .as("chi2_cell_micro"))
-    }),
-
-    "rec_itemitem" -> ((s, dir) => {
-      // item-item collaborative filtering (the co-purchase recommender):
-      // top-3 neighbors per part ranked by cosine² — (cooc²·1e6) div
-      // (n_i·n_j) — which preserves the cosine ORDER for positive counts
-      // while staying all-integer (no sqrt). Same giant-basket width cap
-      // as g_kcore bounds the per-order pair fan-out; min support 2
-      // prunes the noise tail BEFORE the per-item ranking, which is a
-      // window partitioned by the HIGH-cardinality item key (already
-      // parallel — Ranks would be wrong here).
-      recItemItemRecs(s, dir)
-    }),
-
-    "rec_mrr" -> ((s, dir) => {
-      // leave-last-out evaluation of the item-item recommender — the
-      // accept/reject gate rec_itemitem needs (the ta_nbc_eval pattern
-      // applied to recommendations): each customer's LAST order is held
-      // out, similarities retrain on the remaining baskets only (no
-      // leakage), candidates are each profile item's top-3 neighbors
-      // (the standard bounded candidate-generation fan-out: ≤3·|profile|
-      // rows per user, never the catalog), scored by the exact integer
-      // sum of neighbor scores, top-10 per user. Output per eval user:
-      // held-out size, hits@10, first-hit rank, reciprocal rank —
-      // mean(rr_micro) IS the MRR. All windows partition on
-      // high-cardinality keys (customer / item); ranking ties break
-      // (score desc, id asc) so both engines agree bit-for-bit.
-      import org.apache.spark.sql.expressions.Window
-      val o = T(s, dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-      val wo = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-      val seqo = o.withColumn("rn", row_number().over(wo))
-        .withColumn("no", count(lit(1)).over(Window.partitionBy("o_custkey")))
-        .filter(col("no") >= 2)
-        .localCheckpoint(true) // feeds the train AND test splits
-      val items = T(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-        .localCheckpoint(true) // read by the train-basket, profile and test joins
-      val train = seqo.filter(col("rn") > 1)
-        .select(col("o_orderkey").as("o"), col("o_custkey").as("c"))
-      val test = seqo.filter(col("rn") === 1)
-        .select(col("o_orderkey").as("o"), col("o_custkey").as("c"))
-      val ti = train.join(items, "o").select("c", "p").distinct()
-        .localCheckpoint(true) // profile: candidate fan-out + seen-filter
-      val te = test.join(items, "o").select("c", "p").distinct()
-      // retrain rec_itemitem's similarities on the train baskets only
-      val tb = items.join(train.select("o").distinct(), Seq("o"), "left_semi")
-      val widths = tb.groupBy("o").agg(count(lit(1)).as("w"))
-      val capped = tb.join(
-        widths.filter(col("w") <= kcoreOrderCap).select("o"), Seq("o"), "left_semi")
-        .localCheckpoint(true) // item frequencies + both sides of the pair join
-      val freq = capped.groupBy("p").agg(count(lit(1)).as("n"))
-      val pairs = capped.as("a")
-        .join(capped.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .groupBy(col("a.p").as("i"), col("b.p").as("j")).agg(count(lit(1)).as("cooc"))
-        .filter(col("cooc") >= 2)
-      val directed = pairs.select(col("i"), col("j"), col("cooc"))
-        .union(pairs.select(col("j").as("i"), col("i").as("j"), col("cooc")))
-      val scored = directed
-        .join(freq.select(col("p").as("i"), col("n").as("ni")), Seq("i"))
-        .join(freq.select(col("p").as("j"), col("n").as("nj")), Seq("j"))
-        .withColumn("score_micro",
-          expr("CAST((cooc * cooc * 1000000) div (ni * nj) AS BIGINT)"))
-      // both rankings ride the native bounded-heap aggregate (TopKAgg):
-      // the window row_number spelling shuffles and sorts every scored
-      // row; the k-heap ships ≤k rows per (partition, key). Ordering
-      // matches the old windows exactly — (score desc, j asc), j unique
-      // within each key, so no ties exist for the heap to break
-      // differently.
-      val sims3 = scored.groupBy(col("i"))
-        .agg(graft.functions.TopKAgg.topK(3, col("score_micro").cast("double"),
-          col("j").cast("double"), struct(col("j"), col("score_micro"))).as("top"))
-        .select(col("i"), explode(col("top")).as("e"))
-        .select(col("i"), col("e.j").as("j"), col("e.score_micro").as("score_micro"))
-        .localCheckpoint(true) // truncates the retrain lineage under the fan-out
-      val cand = ti.join(sims3, col("p") === col("i"))
-        .groupBy(col("c"), col("j")).agg(sum("score_micro").as("scsum"))
-      val fresh = cand.join(ti.select(col("c"), col("p").as("j")),
-        Seq("c", "j"), "left_anti")
-      val top10 = fresh.groupBy(col("c"))
-        .agg(graft.functions.TopKAgg.topK(10, col("scsum").cast("double"),
-          col("j").cast("double"), struct(col("j"), col("scsum"))).as("top"))
-        .select(col("c"), posexplode(col("top")))
-        .select(col("c"), col("col.j").as("j"), (col("pos") + 1).as("rk"))
-      val hits = top10.join(te.select(col("c"), col("p").as("j")), Seq("c", "j"))
-        .groupBy("c").agg(count(lit(1)).as("n_hits"), min("rk").as("best_rank"))
-      te.groupBy("c").agg(count(lit(1)).as("n_test"))
-        .join(hits, Seq("c"), "left")
-        .select(col("c").as("customer_id"), col("n_test"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          col("best_rank").cast("long").as("best_rank"),
-          expr("""CAST(CASE WHEN best_rank IS NULL THEN 0
-                 ELSE 1000000 div CAST(best_rank AS BIGINT) END AS BIGINT)""")
-            .as("rr_micro"))
-    }),
-
-    "q_bitmap" -> ((s, dir) => {
-      // bitmap-index membership: per event type, user ids packed into
-      // 32-bit words (word = id div 32, bit = id % 32) with ONE bit_or
-      // aggregate — the roaring-style segment-membership structure:
-      // exact distinct counts become Σ bit_count(word) with NO
-      // count(DISTINCT) re-shuffle of raw ids, and audience overlap
-      // (view ∩ purchase) is a word-aligned AND over the two bitmaps —
-      // |users|/32 rows instead of |events|. 32-bit words keep every
-      // packed value positive so bit-63 sign semantics never differ
-      // between engines.
-      val bm = events(s, dir)
-        .select(col("event_type"), expr("user_id div 32").as("word_id"),
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(user_id % 32 AS INT))").as("bit"))
-        .groupBy("event_type", "word_id").agg(expr("bit_or(bit)").as("bits"))
-      val perType = bm.groupBy("event_type").agg(
-        count(lit(1)).as("n_words"),
-        sum(expr("bit_count(bits)")).cast("long").as("n_users"))
-      val a = bm.filter(col("event_type") === "view")
-        .select(col("word_id"), col("bits").as("a_bits"))
-      val b = bm.filter(col("event_type") === "purchase")
-        .select(col("word_id"), col("bits").as("b_bits"))
-      val overlap = a.join(b, Seq("word_id"))
-        .agg(count(lit(1)).as("n_words"),
-          sum(expr("bit_count(a_bits & b_bits)")).cast("long").as("n_users"))
-        .select(lit("view&purchase").as("event_type"), col("n_words"), col("n_users"))
-      perType.unionByName(overlap)
-    }),
-
-    "ev_seqmine" -> ((s, dir) => {
-      // frequent contiguous behavior trigrams (the contiguous special
-      // case of sequential-pattern mining): per-user streams ordered by
-      // (ts, event_id), trigrams via two leads — windows keyed by the
-      // HIGH-cardinality user key, so the sort is per-user and parallel.
-      // The trigram domain is |event types|³, so the aggregate output is
-      // bounded regardless of data scale; support floor 2 on distinct
-      // users prunes the singleton tail.
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      events(s, dir).select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .withColumn("t2", lead("event_type", 1).over(w))
-        .withColumn("t3", lead("event_type", 2).over(w))
-        .filter(col("t3").isNotNull)
-        .select(col("user_id"),
-          concat_ws(">", col("event_type"), col("t2"), col("t3")).as("trigram"))
-        .groupBy("trigram")
-        .agg(countDistinct("user_id").as("n_users"), count(lit(1)).as("n_occurrences"))
-        .filter(col("n_users") >= 2)
-    }),
-
-    "ev_survival" -> ((s, dir) => {
-      // Kaplan–Meier time-to-conversion: per user, days from first event
-      // to first purchase (censored at the corpus horizon when none).
-      // The survival curve is a SEQUENTIAL product, so it rides the
-      // ev_markov_steady doctrine: the distributed part reduces the data
-      // to a per-DAY (deaths, censored) table — bounded by the
-      // observation window, asserted — and the driver folds S_k =
-      // ⌊S_{k-1}·(n_k−d_k)/n_k⌋ in exact BigInt pico units, replayed by
-      // the oracle's recursive CTE with the identical floor division.
-      val sq = s; import sq.implicits._
-      val ev = events(s, dir)
-      val horizon = ev.agg(max(col("ts")).as("tmax"))
-      val perUser = ev.groupBy("user_id").agg(
-        min(col("ts")).as("t0"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("tp"))
-      val byDay = perUser.crossJoin(broadcast(horizon))
-        .select(
-          expr("""CAST((unix_micros(coalesce(tp, tmax)) - unix_micros(t0))
-                  div 86400000000 AS BIGINT)""").as("dur"),
-          when(col("tp").isNotNull, 1L).otherwise(0L).as("obs"))
-        .groupBy("dur").agg(sum("obs").as("d"), sum(lit(1L) - col("obs")).as("c"))
-      val days = byDay.collect().map(r =>
-        (r.getAs[Long]("dur"), r.getAs[Long]("d"), r.getAs[Long]("c"))).sortBy(_._1)
-      require(days.length <= 100000,
-        s"ev_survival: ${days.length} distinct days exceed the bounded-collect guard")
-      var atRisk = days.map(t => t._2 + t._3).sum
-      var sPico = BigInt(1000000000000L)
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long, Long)]()
-      days.foreach { case (day, d, c) =>
-        if (d > 0) {
-          sPico = sPico * BigInt(atRisk - d) / BigInt(atRisk)
-          out += ((day, atRisk, d, c, sPico.toLong))
-        }
-        atRisk -= (d + c)
-      }
-      out.toSeq.toDF("day", "n_risk", "n_events", "n_censored", "surv_pico")
-    }),
-
-    "ev_hazard" -> ((s, dir) => {
-      // Nelson–Aalen cumulative hazard on ev_survival's risk table —
-      // H(t) = Σ_{t_j ≤ t} d_j/n_j. Unlike Kaplan–Meier's sequential
-      // PRODUCT (which needs the driver fold), the hazard is a cumulative
-      // SUM of per-day terms each micro-rounded ONCE, so the whole curve
-      // stays in SQL: one per-day aggregate, one prior-rows window for
-      // at-risk, one running sum — all over the bounded day domain
-      // (whitelisted), zero collect. The estimator a 100 TB survival
-      // pipeline should prefer for exactly that reason.
-      import org.apache.spark.sql.expressions.Window
-      val ev = events(s, dir)
-      val horizon = ev.agg(max(col("ts")).as("tmax"))
-      val perUser = ev.groupBy("user_id").agg(
-        min(col("ts")).as("t0"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("tp"))
-      val byDay = perUser.crossJoin(broadcast(horizon))
-        .select(
-          expr("""CAST((unix_micros(coalesce(tp, tmax)) - unix_micros(t0))
-                  div 86400000000 AS BIGINT)""").as("dur"),
-          when(col("tp").isNotNull, 1L).otherwise(0L).as("obs"))
-        .groupBy("dur").agg(sum("obs").as("d"), sum(lit(1L) - col("obs")).as("c"))
-      val tot = byDay.agg(sum(expr("d + c")).as("n"))
-      val wPrior = Window.orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wCum = Window.orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      byDay.crossJoin(broadcast(tot))
-        .withColumn("n_risk",
-          col("n") - coalesce(sum(expr("d + c")).over(wPrior), lit(0L)))
-        .withColumn("term",
-          expr("""CASE WHEN d > 0
-                 THEN CAST(CAST(d AS DECIMAL(38,0)) * 1000000 div n_risk AS BIGINT)
-                 ELSE CAST(0 AS BIGINT) END"""))
-        .withColumn("cumhaz_micro", sum("term").over(wCum))
-        .filter(col("d") > 0)
-        .select(col("dur").as("day"), col("n_risk"), col("d").as("n_events"),
-          col("term").as("hazard_micro"), col("cumhaz_micro"))
-    }),
-
-    "ev_logrank" -> ((s, dir) => {
-      // two-sample log-rank test: do the even/odd user arms convert at
-      // the same rate over time? Per death-day k: observed arm-1 deaths
-      // vs hypergeometric expectation d_k·n_1k/n_k and variance
-      // d_k·(n_1k/n_k)(1−n_1k/n_k)(n_k−d_k)/(n_k−1); χ² = (O−E)²/V.
-      // Per-arm at-risk comes from prior-rows windows over the bounded
-      // day×arm GRID (2 partitions of ≤ horizon days — never data-scale);
-      // every term is staged integer division (d·n1·1e6 div n, then
-      // ·(n−n1) div n, then ·(n−d) div (n−1)) so the largest intermediate
-      // stays inside DECIMAL(38,0) even at billion-user arms, and the
-      // oracle replays the identical op order in HUGEINT.
-      import org.apache.spark.sql.expressions.Window
-      val ev = events(s, dir)
-      val horizon = ev.agg(max(col("ts")).as("tmax"))
-      val perUser = ev.groupBy("user_id").agg(
-        min(col("ts")).as("t0"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("tp"))
-      val du = perUser.crossJoin(broadcast(horizon))
-        .select((col("user_id") % 2).cast("long").as("arm"),
-          expr("""CAST((unix_micros(coalesce(tp, tmax)) - unix_micros(t0))
-                  div 86400000000 AS BIGINT)""").as("dur"),
-          when(col("tp").isNotNull, 1L).otherwise(0L).as("obs"))
-      val byDayArm = du.groupBy("dur", "arm")
-        .agg(sum("obs").as("d"), sum(lit(1L) - col("obs")).as("c"))
-      val arms = s.createDataFrame(Seq(Tuple1(0L), Tuple1(1L))).toDF("arm")
-      val grid = byDayArm.select("dur").distinct().crossJoin(broadcast(arms))
-      val full = grid.join(byDayArm, Seq("dur", "arm"), "left")
-        .na.fill(0L, Seq("d", "c"))
-      val wPrior = Window.partitionBy("arm").orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val risk = full.withColumn("n_arm",
-        sum(expr("d + c")).over(Window.partitionBy("arm"))
-          - coalesce(sum(expr("d + c")).over(wPrior), lit(0L)))
-      val byDay = risk.groupBy("dur").agg(
-          sum("d").as("dt"),
-          sum(when(col("arm") === 1L, col("d")).otherwise(0L)).as("d1"),
-          sum("n_arm").as("nt"),
-          sum(when(col("arm") === 1L, col("n_arm")).otherwise(0L)).as("n1"))
-        .filter(col("dt") > 0 && col("nt") > 0)
-      byDay.select(
-          col("d1"),
-          expr("CAST(CAST(dt AS DECIMAL(38,0)) * n1 * 1000000 div nt AS BIGINT)")
-            .as("e1"),
-          expr("""CAST(CASE WHEN nt > 1 THEN
-                 ((CAST(dt AS DECIMAL(38,0)) * n1 * 1000000 div nt) * (nt - n1) div nt)
-                   * (nt - dt) div (nt - 1)
-                 ELSE CAST(0 AS DECIMAL(38,0)) END AS BIGINT)""").as("v1"))
-        .agg(sum("d1").as("o1"), sum("e1").as("e1_micro"), sum("v1").as("v1_micro"))
-        .select(col("o1"), col("e1_micro"), col("v1_micro"),
-          expr("""CASE WHEN v1_micro = 0 THEN NULL
-                 ELSE CAST((CAST(o1 AS DECIMAL(38,0)) * 1000000 - e1_micro)
-                   * (CAST(o1 AS DECIMAL(38,0)) * 1000000 - e1_micro)
-                   div v1_micro AS BIGINT) END""").as("chi2_micro"))
-    }),
-
-    "ta_rake" -> ((s, dir) => {
-      // RAKE keyword extraction (Rose et al. 2010): candidate phrases are
-      // maximal runs between stopwords/punctuation; word score =
-      // degree/freq over phrase co-membership; phrase score = Σ member
-      // word scores — all integer counts and micro-divisions, global
-      // top-15 via TakeOrdered (never a full sort). The whole pipeline is
-      // codegen'd string/array expressions: two regexp passes (delimiter
-      // marking), one split, two explodes, three hash aggregates.
-      val stop = "the|of|and|a|to|in|is|on|for|with|as|by|at|an|be|are|was|it|that|this|from|or"
-      val occ = T(s, dir, "documents").select(explode(expr(
-        s"""filter(transform(split(regexp_replace(regexp_replace(lower(text),
-           |  '[^a-z ]+', '|'), '\\\\b($stop)\\\\b', '|'), '[|]'),
-           |  x -> regexp_replace(trim(x), ' +', ' ')), x -> x != '')""".stripMargin))
-        .as("phrase"))
-        .filter(size(split(col("phrase"), " ")) <= 4)
-      val words = occ.select(col("phrase"),
-          size(split(col("phrase"), " ")).cast("long").as("plen"))
-        .select(col("plen"), explode(split(col("phrase"), " ")).as("word"))
-      val ws = words.groupBy("word").agg(
-        count(lit(1)).as("freq"), sum("plen").as("degree"))
-      val phraseWords = occ.select("phrase").distinct()
-        .select(col("phrase"), explode(split(col("phrase"), " ")).as("word"))
-      val psc = phraseWords.join(ws, Seq("word"))
-        .groupBy("phrase")
-        .agg(sum(expr("(degree * 1000000) div freq")).as("score_micro"))
-      val nOcc = occ.groupBy("phrase").agg(count(lit(1)).as("n_occurrences"))
-      psc.join(nOcc, Seq("phrase"))
-        .select(col("phrase"), size(split(col("phrase"), " ")).cast("long").as("n_words"),
-          col("n_occurrences"), col("score_micro"))
-        .orderBy(col("score_micro").desc, col("phrase").asc)
-        .limit(15)
-    }),
-
-    "q_abc" -> ((s, dir) => {
-      // ABC / Pareto revenue classification (the 80/15/5 inventory
-      // doctrine): parts ranked by revenue descending, classed by exact
-      // integer cumulative-share thresholds (cum·100 ≤ total·80 → A,
-      // ≤ 95 → B, else C). The cumulative sum is ext.Ranks'
-      // range-partitioned running sum — never a single-partition sort —
-      // and the output is the 3-row class summary.
-      val rev = T(s, dir, "lineitem")
-        .groupBy(col("l_partkey"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("rev_c"))
-      val cum = ext.Ranks.groupedRunningSum(
-        rev.withColumn("__grp__", lit(0)), "__grp__",
-        Seq(col("rev_c").desc, col("l_partkey").asc), "rev_c", "cum_c")
-      val tot = rev.agg(sum("rev_c").as("total_c"))
-      cum.crossJoin(broadcast(tot))
-        .withColumn("abc_class",
-          when(col("cum_c") * 100 <= col("total_c") * 80, "A")
-            .when(col("cum_c") * 100 <= col("total_c") * 95, "B")
-            .otherwise("C"))
-        .groupBy("abc_class")
-        .agg(count(lit(1)).as("n_parts"), sum("rev_c").as("revenue_c"),
-          max("total_c").as("total_c"))
-        .select(col("abc_class"), col("n_parts"), col("revenue_c"),
-          expr("CAST((CAST(revenue_c AS DECIMAL(38,0)) * 1000000) div total_c AS BIGINT)")
-            .as("share_micro"))
-    }),
-
-    "stream_bitmap" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // STREAMING bitmap-index distinct: the same 32-bit word packing
-      // aggregated over a file stream (complete mode). bit_or is
-      // order-free and mergeable, so the streamed words are EQUAL to the
-      // batch bitmap however the source is micro-batched — exact
-      // streaming distinct-user counts with |users|/32 state rows per
-      // group, the exact-count sibling of stream_hll. Oracle = the batch
-      // per-type section of q_bitmap.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
-        .select(col("event_type"), expr("user_id div 32").as("word_id"),
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(user_id % 32 AS INT))").as("bit"))
-      val bm = stream.groupBy("event_type", "word_id").agg(expr("bit_or(bit)").as("bits"))
-      s.catalog.dropTempView("graft_stream_bitmap")
-      val q = bm.writeStream.format("memory").queryName("graft_stream_bitmap")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_bitmap")
-        .groupBy("event_type").agg(
-          count(lit(1)).as("n_words"),
-          sum(expr("bit_count(bits)")).cast("long").as("n_users"))
-    }),
-
-    "mm_phash" -> ((s, dir) => {
-      // DCT perceptual hash (pHash) with a REAL decode: planted 32×32
-      // sawtooth PNGs (luma a closed form of doc_id), JDK ImageIO decode,
-      // separable integer DCT over the shared fixed-point cosine basis,
-      // bits against the lower AC median. The oracle recomputes the FULL
-      // 8×8 spectrum from doc_id alone with the SAME 256 cosine integers
-      // (interpolated literals), so a fake decoder, a float DCT, or a
-      // wrong median rank all hash-mismatch. Per-partition decode; one
-      // pass; no shuffle at all until the (tiny) result.
-      implicit val sp: SparkSession = s
-      val media = ext.Multimodal.phashMedia(T(s, dir, "documents"))
-      ext.Multimodal.dctPhash(media).toDF()
-    }),
-
-    "ev_ltv" -> ((s, dir) => {
-      // discounted customer lifetime value: each order's cents credited
-      // at 0.9^(years since the customer's first order), the decay table
-      // a BROADCAST literal of exact micro integers (floor(0.9^dy·1e6))
-      // shared verbatim with the oracle — no libm pow anywhere. One hash
-      // agg for first-year, one broadcast join, one hash agg: the
-      // billions-of-customers shape with no window at all.
-      val o = T(s, dir, "orders").select(col("o_custkey"),
-        year(col("o_orderdate")).as("yr"),
-        round(col("o_totalprice") * 100).cast("long").as("price_c"))
-      val firstYr = o.groupBy("o_custkey").agg(min("yr").as("yr0"))
-      val decay = s.createDataFrame(ltvDecayMicro).toDF("dy", "decay_micro")
-      o.join(firstYr, "o_custkey")
-        .withColumn("dy", (col("yr") - col("yr0")).cast("long"))
-        .join(broadcast(decay), "dy")
-        .groupBy(col("o_custkey").as("custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum("price_c").as("raw_c"),
-          sum(expr("(price_c * decay_micro) div 1000000")).as("ltv_c"))
-    }),
-
-    "ev_gapfill" -> ((s, dir) => {
-      // LOCF daily gap-fill: per-user daily max gauge, a generated date
-      // spine from first to last active day, missing days carried forward
-      // with last(ignoreNulls). The spine explode is bounded by the day
-      // span and the window partitions on user_id (high cardinality) —
-      // every stage is per-user parallel; nothing global.
-      import org.apache.spark.sql.expressions.Window
-      val daily = events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("d"),
-          round(col("value") * 100).cast("long").as("v_c"))
-        .groupBy("user_id", "d").agg(max("v_c").as("v_c"))
-      val spine = daily.groupBy("user_id")
-        .agg(min("d").as("d0"), max("d").as("d1"))
-        .select(col("user_id"), explode(sequence(col("d0"), col("d1"))).as("d"))
-      val w = Window.partitionBy("user_id").orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      spine.join(daily, Seq("user_id", "d"), "left")
-        .select(col("user_id"), col("d"),
-          last(col("v_c"), ignoreNulls = true).over(w).as("v_filled"),
-          col("v_c").isNull.as("is_gap"))
-    }),
-
-    "ev_churn" -> ((s, dir) => {
-      // month-over-month engagement ledger: per month the active-user
-      // count, how many return next month, how many churn, how many are
-      // brand new (first-ever month). Distinct (user, month) then three
-      // keyed self-joins — hash shuffles on high-cardinality keys only.
-      val um = events(s, dir)
-        .select(col("user_id"), to_date(date_trunc("month", col("ts"))).as("m"))
-        .distinct()
-        .localCheckpoint(true) // probed three times below
-      val nxt = um.select(col("user_id"), add_months(col("m"), -1).as("m"))
-        .withColumn("has_next", lit(true))
-      val first = um.groupBy("user_id").agg(min("m").as("first_m"))
-      um.join(nxt, Seq("user_id", "m"), "left")
-        .join(first, "user_id")
-        .groupBy(col("m").as("month"))
-        .agg(count(lit(1)).as("n_active"),
-          sum(when(col("has_next"), 1L).otherwise(0L)).as("n_retained"),
-          sum(when(col("has_next").isNull, 1L).otherwise(0L)).as("n_churned"),
-          sum(when(col("first_m") === col("m"), 1L).otherwise(0L)).as("n_new"))
-    }),
-
-    "q_grouped_ols" -> ((s, dir) => {
-      // per-group least squares — the billions-of-groups regression: one
-      // hash aggregation of DECIMAL(38) Gram sums per brand, slope and
-      // intercept as exact integral divisions (micro units). No window,
-      // no driver solve, no per-group iteration: the massively-grouped
-      // sibling of q_ols (whose single global model collects d² sums).
-      val li = T(s, dir, "lineitem").join(
-        T(s, dir, "part").select(col("p_partkey"), col("p_brand")),
-        col("l_partkey") === col("p_partkey"))
-        .select(col("p_brand"),
-          col("l_quantity").cast("decimal(38,0)").as("x"),
-          round(col("l_extendedprice") * 100).cast("decimal(38,0)").as("y"))
-      li.groupBy("p_brand")
-        .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum("x").as("sx"), sum("y").as("sy"),
-          sum(expr("x * x")).as("sxx"), sum(expr("x * y")).as("sxy"))
-        .select(col("p_brand"), col("n").cast("long").as("n"),
-          col("sx").cast("long").as("sx"), col("sy").cast("long").as("sy"),
-          expr("CAST(((n * sxy - sx * sy) * 1000000) div (n * sxx - sx * sx) AS BIGINT)")
-            .as("slope_micro"),
-          expr("""CAST((sy * 1000000 - ((n * sxy - sx * sy) * 1000000)
-                 div (n * sxx - sx * sx) * sx) div n AS BIGINT)""").as("icept_micro"))
-    }),
-
-    "q_pr_curve" -> ((s, dir) => {
-      // precision–recall curve: quantity as the score ranking, returnflag
-      // 'R' as the positive class. Raw rows collapse to ≤50 per-score
-      // counts FIRST (map-side combined hash agg); the cumulative TP/FP
-      // window then runs over the bounded score domain only — the curve
-      // is never a sort of the raw frame.
-      import org.apache.spark.sql.expressions.Window
-      val perScore = T(s, dir, "lineitem")
-        .select(col("l_quantity").cast("long").as("threshold"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("pos"))
-        .groupBy("threshold")
-        .agg(count(lit(1)).as("n"), sum("pos").as("p"))
-      val w = Window.orderBy(col("threshold").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      perScore
-        .select(col("threshold"),
-          sum("p").over(w).as("tp"),
-          (sum("n").over(w) - sum("p").over(w)).as("fp"),
-          sum("p").over(Window.partitionBy()).as("p_tot"))
-        .select(col("threshold"), col("tp"), col("fp"),
-          expr("(tp * 1000000) div (tp + fp)").as("precision_micro"),
-          expr("(tp * 1000000) div p_tot").as("recall_micro"))
-    }),
-
-    "q_spatial_join" -> ((s, dir) => {
-      // grid-bucketed spatial self-join — the LSH-bucket pattern in 2-D:
-      // customers get deterministic integer coordinates (Knuth
-      // multiplicative residues of the key), are bucketed into cells of
-      // side = radius, and one side explodes its 3×3 neighborhood so the
-      // candidate step is a pure EQUI-join on cell ids (shuffle-keyed,
-      // broadcast-free, skew-cappable). radius ≤ cell side guarantees no
-      // missed pair; the exact integer distance² filter prunes after.
-      val pts = T(s, dir, "customer").select(col("c_custkey").as("id"),
-          expr("(c_custkey * 2654435761) % 1000").as("x"),
-          expr("(c_custkey * 2246822519) % 1000").as("y"))
-        .withColumn("cx", expr("x div 50")).withColumn("cy", expr("y div 50"))
-      val probe = pts.select(col("id").as("b_id"), col("x").as("bx"),
-        col("y").as("by"), col("cx").as("bcx"), col("cy").as("bcy"))
-      val off = explode(expr("array(-1,0,1)"))
-      val build = pts.withColumn("dx", off).withColumn("dy", off)
-        .select(col("id").as("a_id"), col("x").as("ax"), col("y").as("ay"),
-          (col("cx") + col("dx")).as("jcx"), (col("cy") + col("dy")).as("jcy"))
-      build.join(probe, col("jcx") === col("bcx") && col("jcy") === col("bcy"))
-        .filter(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          expr("(ax - bx) * (ax - bx) + (ay - by) * (ay - by)").as("dist2"))
-        .filter(col("dist2") <= 2500)
-    }),
-
-    "g_assortativity" -> ((s, dir) => {
-      // degree assortativity of the customer–supplier trade graph: the
-      // Pearson correlation between endpoint degrees over the distinct
-      // edge set, in DECIMAL(38) Gram sums. The final r uses only
-      // correctly-rounded IEEE ops (÷, ×, sqrt — never libm ln/pow), so
-      // the micro rounding is engine-exact. Two hash aggs + two joins.
-      val e = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sp"))
-        .distinct()
-        .localCheckpoint(true) // degree agg + edge probe read one frame
-      val degC = e.groupBy("c").agg(count(lit(1)).as("dc"))
-      val degS = e.groupBy("sp").agg(count(lit(1)).as("ds"))
-      e.join(degC, "c").join(degS, "sp")
-        .select(col("dc").cast("decimal(38,0)").as("x"),
-          col("ds").cast("decimal(38,0)").as("y"))
-        .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum("x").as("sx"), sum("y").as("sy"), sum(expr("x * x")).as("sxx"),
-          sum(expr("y * y")).as("syy"), sum(expr("x * y")).as("sxy"))
-        .select(col("n").cast("long").as("n_edges"),
-          expr("""CAST(round(CAST(n * sxy - sx * sy AS DOUBLE)
-                 / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                    * sqrt(CAST(n * syy - sy * sy AS DOUBLE))) * 1000000)
-                 AS BIGINT)""").as("r_micro"))
-    }),
-
-    "sk_bloom_planner" -> ((s, dir) => {
-      // Bloom-filter sizing planner: for each source's distinct-doc count
-      // and each target fpp, the optimal bit count m = ceil(n·ln(1/p)/ln²2)
-      // and hash count k = round(m/n·ln2) — the table a 100 TB ingest
-      // reads before building join-pruning filters (q_bloom_join). The
-      // ln constants are pico-scaled INTEGER literals shared with the
-      // oracle; DECIMAL(38) keeps n·1e12 exact at any corpus size.
-      val n = T(s, dir, "documents").groupBy("source")
-        .agg(count(lit(1)).cast("decimal(38,0)").as("n"))
-      val targets = s.createDataFrame(Seq((100L, 4605170185988L), (10L, 6907755278982L)))
-        .toDF("fpp_bp", "ln_inv_p_pico") // ln(1/0.01), ln(1/0.001) ·1e12
-      n.crossJoin(broadcast(targets))
-        .select(col("source"), col("n").cast("long").as("n_items"), col("fpp_bp"),
-          expr("CAST((n * ln_inv_p_pico + 480453013917) div 480453013918 AS BIGINT)")
-            .as("m_bits"), // ceil-div of positives as (a+b−1) div b; ln²2·1e12
-          col("n"), col("ln_inv_p_pico"))
-        .select(col("source"), col("n_items"), col("fpp_bp"), col("m_bits"),
-          expr("""CAST((CAST(m_bits AS DECIMAL(38,0)) * 693147180560
-                 + n * 500000000000) div (n * 1000000000000) AS BIGINT)""")
-            .as("k_hashes"),
-          expr("CAST((CAST(m_bits AS DECIMAL(38,0)) * 1000000) div n AS BIGINT)")
-            .as("bits_per_item_micro"))
-    }),
-
-    "ta_burrows" -> ((s, dir) => {
-      // Burrows' Delta stylometry (Burrows 2002): pairwise source
-      // distance = mean |z_a − z_b| over the top-30 corpus words, where
-      // z is the per-word cross-source z-score of relative frequency.
-      // Everything after the one full-corpus token agg is bounded:
-      // top-30 via TakeOrdered, a 30×#sources dense grid (missing
-      // combos are REAL zeros — a left join + fill, not dropped rows),
-      // and a per-word pair expansion of #sources² rows. Frequencies
-      // are micro ints; z = (n·f − Σf)/√(n·Σf² − (Σf)²) keeps the
-      // numerator exact-integer and is micro-rounded per (word, source)
-      // BEFORE the pair mean (the q_lift discipline), so the distance
-      // matrix is engine-exact. Zero-variance words are excluded by the
-      // same integer test in both engines.
-      val tok = T(s, dir, "documents")
-        .select(col("source"), explode(expr(
-          "filter(split(lower(text), '\\\\s+'), x -> x != '')")).as("w"))
-        .localCheckpoint(true) // top-30 scan + per-source counts share it
-      val topw = tok.groupBy("w").agg(count(lit(1)).as("cw"))
-        .orderBy(col("cw").desc, col("w")).limit(30).select("w")
-      val tot = tok.groupBy("source").agg(count(lit(1)).as("tot"))
-      val cnt = tok.join(topw, "w").groupBy("source", "w").agg(count(lit(1)).as("c"))
-      // micro products and the exact-integer z pieces run in DECIMAL(38,0)
-      // (HUGEINT in the oracle) like the sibling ops — a LongType product
-      // wraps silently where DuckDB BIGINT raises, so engine and oracle
-      // would part ways instead of both staying exact
-      val grid = tot.crossJoin(broadcast(topw))
-        .join(cnt, Seq("source", "w"), "left").na.fill(0L, Seq("c"))
-        .select(col("source"), col("w"),
-          expr("CAST(CAST(c AS DECIMAL(38,0)) * 1000000 div tot AS BIGINT)").as("f"))
-      val stats = grid.groupBy("w").agg(count(lit(1)).as("n"),
-        sum(col("f").cast("decimal(38,0)")).as("s1"),
-        sum(expr("CAST(f AS DECIMAL(38,0)) * f")).as("s2"))
-      val z = grid.join(stats, "w")
-        .filter(expr("n * s2 > s1 * s1")) // zero-variance words carry no signal
-        .select(col("source"), col("w"),
-          expr("""CAST(round((CAST(n AS DECIMAL(38,0)) * f - s1)
-                 / sqrt(CAST(CAST(n AS DECIMAL(38,0)) * s2 - s1 * s1 AS DOUBLE))
-                 * 1000000) AS BIGINT)""").as("z"))
-        .localCheckpoint(true) // both sides of the pair join
-      z.as("a").join(z.as("b"),
-          col("a.w") === col("b.w") && col("a.source") < col("b.source"))
-        .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
-        .agg(count(lit(1)).as("n_words"),
-          expr("CAST(sum(abs(a.z - b.z)) div count(1) AS BIGINT)").as("delta_micro"))
-    }),
-
-    "ta_hapax" -> ((s, dir) => {
-      // lexical-richness profile per source: token count, vocabulary,
-      // hapax legomena (frequency-1 words), type–token ratio and hapax
-      // share in micro units. Two cascaded hash aggs over (source, token)
-      // — the same shape however many sources or tokens there are.
-      val tok = T(s, dir, "documents")
-        .select(col("source"), explode(expr(
-          "filter(split(lower(text), '\\\\s+'), x -> x != '')")).as("w"))
-      tok.groupBy("source", "w").agg(count(lit(1)).as("c"))
-        .groupBy("source")
-        .agg(sum("c").as("n_tokens"), count(lit(1)).as("n_vocab"),
-          sum(when(col("c") === 1L, 1L).otherwise(0L)).as("n_hapax"))
-        .select(col("source"), col("n_tokens"), col("n_vocab"), col("n_hapax"),
-          expr("(n_vocab * 1000000) div n_tokens").as("ttr_micro"),
-          expr("(n_hapax * 1000000) div n_vocab").as("hapax_micro"))
-    }),
-
-    "ta_yule" -> ((s, dir) => {
-      // Yule's characteristic K (Yule 1944) per source — the length-
-      // robust lexical-diversity constant TTR lacks (TTR shrinks as a
-      // corpus grows; K doesn't): K = 10⁴·(Σc² − N)/N² over word
-      // frequencies c. Same two cascaded hash aggs as ta_hapax; Σc²
-      // rides DECIMAL(38,0) (HUGEINT oracle) so web-scale frequencies
-      // cannot wrap; Σc² ≥ N always, so the division is sign-free.
-      val tok = T(s, dir, "documents")
-        .select(col("source"), explode(ext.Dedup.tokens(col("text"))).as("w"))
-      tok.groupBy("source", "w").agg(count(lit(1)).as("c"))
-        .groupBy("source")
-        .agg(sum("c").as("n_tokens"), count(lit(1)).as("n_vocab"),
-          sum(expr("CAST(c AS DECIMAL(38,0)) * c")).as("s2"))
-        .select(col("source"), col("n_tokens"), col("n_vocab"),
-          expr("CAST(s2 AS BIGINT)").as("sum_c2"),
-          expr("""CAST(((s2 - n_tokens) * 10000000)
-                 div (CAST(n_tokens AS DECIMAL(38,0)) * n_tokens) AS BIGINT)""")
-            .as("yule_k_milli"))
-    }),
-
-    "dd_url" -> ((s, dir) => {
-      // URL canonicalization dedup (the CommonCrawl ingest step): four
-      // planted surface variants per target (case, default port,
-      // /index.html, trailing slash, fragment, utm_* params, param
-      // order) normalize to one canonical URL via pure string
-      // expressions, then a hash-group keeps the smallest doc as
-      // canonical. Whole-stage-codegen scalar work + ONE keyed agg.
-      val url = expr(s"""CASE CAST(doc_id % 4 AS INT)
-        WHEN 0 THEN concat('HTTP://Example.COM:80/Shop/', doc_id div 4, '/?utm_source=news&b=2&a=1#frag')
-        WHEN 1 THEN concat('http://example.com/Shop/', doc_id div 4, '?a=1&b=2')
-        WHEN 2 THEN concat('HTTPS://EXAMPLE.com/Shop/', doc_id div 4, '/index.html?b=2&a=1&utm_campaign=sale')
-        ELSE concat('https://example.com:443/Shop/', doc_id div 4, '/index.html?b=2&a=1#top') END""")
-      T(s, dir, "documents").select(col("doc_id"), url.as("url"))
-        .withColumn("u1", regexp_replace(col("url"), "#.*$", ""))
-        .select(col("doc_id"),
-          lower(regexp_extract(col("u1"), "^([A-Za-z]+)://", 1)).as("scheme"),
-          lower(regexp_replace(
-            regexp_extract(col("u1"), "^[A-Za-z]+://([^/?#]+)", 1), ":[0-9]+$", ""))
-            .as("host"),
-          regexp_replace(regexp_replace(
-            regexp_extract(col("u1"), "^[A-Za-z]+://[^/?#]+([^?#]*)", 1),
-            "/index\\.html$", "/"), "/$", "").as("path"),
-          expr("""array_join(array_sort(filter(split(
-            regexp_extract(u1, '\\?([^#]*)', 1), '&'),
-            x -> x != '' AND NOT x RLIKE '^utm_')), '&')""").as("q"))
-        .select(col("doc_id"), concat(col("scheme"), lit("://"), col("host"),
-          col("path"),
-          when(col("q") === "", "").otherwise(concat(lit("?"), col("q")))).as("canonical_url"))
-        .groupBy("canonical_url")
-        .agg(count(lit(1)).as("n_variants"), min("doc_id").as("keeper_doc"))
-    }),
-
-    "ta_boilerplate" -> ((s, dir) => {
-      // cross-document boilerplate line removal (the jusText/trafilatura
-      // step): planted nav/footer lines shared by every page are detected
-      // as lines present in ≥25 % of docs, then stripped; body and
-      // doc-unique lines survive. Line→doc-count is one exact keyed agg;
-      // the boiler SET is tiny by construction (≤ 4/threshold lines per
-      // corpus line budget) and broadcast back; docs reassemble with an
-      // order-preserving sorted collect per doc.
-      val docs = T(s, dir, "documents").select(col("doc_id"),
-        concat(lit("home | products | about | contact\n"), col("text"),
-          lit("\nsubscribe to our newsletter\ndoc "), col("doc_id"),
-          lit(" extras\n© 2024 example corp")).as("page"))
-      val lines = docs.select(col("doc_id"),
-          posexplode(split(col("page"), "\n")).as(Seq("pos", "line")))
-        .localCheckpoint(true) // feeds the boiler agg AND the rebuild
-      val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-      val boiler = lines.groupBy("line")
-        .agg(countDistinct(col("doc_id")).as("nd"))
-        .crossJoin(broadcast(nDocs))
-        .filter(col("nd") * 4 >= col("n_docs"))
-        .select(col("line"), lit(true).as("is_boiler"))
-      lines.join(broadcast(boiler), Seq("line"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_lines"),
-          sum(when(col("is_boiler"), 1L).otherwise(0L)).as("n_boiler"),
-          expr("""array_join(transform(array_sort(collect_list(
-            CASE WHEN is_boiler IS NULL THEN struct(pos, line) END)),
-            x -> x.line), '\n')""").as("clean_text"))
-    }),
-
-    "ta_code_detect" -> ((s, dir) => {
-      // code-vs-prose routing (an LLM-corpus must separate them): symbol
-      // density ({};()=[]) and keyword hits score each doc in micro
-      // units; planted code snippets on every 5th doc must flag, pure
-      // prose scores 0. Scalar expressions only — no shuffle before the
-      // (tiny) result projection.
-      val planted = expr("""CASE WHEN doc_id % 5 = 0
-        THEN concat(text, ' function add(a, b) { return a + b; } var x = []; import os;')
-        ELSE text END""")
-      T(s, dir, "documents").select(col("doc_id"), planted.as("t"))
-        .select(col("doc_id"),
-          length(regexp_replace(col("t"), "[^{};()=<>\\[\\]]", "")).cast("long").as("n_sym"),
-          expr("CAST(size(regexp_extract_all(t, '(function|return|var|import|def)', 1)) AS BIGINT)")
-            .as("n_kw"),
-          length(col("t")).cast("long").as("n_len"))
-        .select(col("doc_id"), col("n_sym"), col("n_kw"),
-          expr("((n_sym + 3 * n_kw) * 1000000) div n_len").as("score_micro"))
-        .withColumn("is_code", col("n_sym") > 0L && col("score_micro") >= 1000L)
-    }),
-
-    "q_mode" -> ((s, dir) => {
-      // per-group mode with a deterministic tie-break (highest count,
-      // then smallest value): two cascaded hash aggs — the value-domain
-      // collapse then a max on (count, −value) structs. Never a sort.
-      T(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_quantity").cast("long").as("qty"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy("l_returnflag")
-        .agg(max(struct(col("c"), (-col("qty")).as("nq"))).as("m"))
-        .select(col("l_returnflag"), (-col("m.nq")).as("mode_qty"),
-          col("m.c").as("mode_n"))
-    }),
-
-    "ev_heatmap" -> ((s, dir) => {
-      // day-of-week × hour activity heatmap with exact integral shares:
-      // one hash agg to the bounded 7×24 domain, total as a broadcast
-      // scalar. dow is 0=Sunday in both engines (Spark's dayofweek−1).
-      val cells = events(s, dir)
-        .groupBy((dayofweek(col("ts")) - 1).cast("long").as("dow"),
-          hour(col("ts")).cast("long").as("hr"))
-        .agg(count(lit(1)).as("n"))
-      val tot = cells.agg(sum("n").as("total"))
-      cells.crossJoin(broadcast(tot))
-        .select(col("dow"), col("hr"), col("n"),
-          expr("(n * 1000000) div total").as("share_micro"))
-    }),
-
-    "q_treeagg" -> ((s, dir) => {
-      // hierarchical subtree rollup WITHOUT iteration: the customer-key
-      // decimal hierarchy (parent = key div 10) is rolled up by
-      // exploding each leaf's ≤8 distinct ancestors and running ONE
-      // keyed agg — the scale-correct replacement for a recursive CTE
-      // (depth joins) on a fixed-depth hierarchy. Contribution is
-      // per-leaf revenue; every node reports subtree leaf count + sum.
-      val rev = T(s, dir, "orders")
-        .groupBy(col("o_custkey").as("c"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
-      rev.select(explode(expr(
-          """array_distinct(array(c, c div 10, c div 100, c div 1000,
-             c div 10000, c div 100000, c div 1000000, c div 10000000))"""))
-          .as("node"), col("rev_c"))
-        .groupBy("node")
-        .agg(count(lit(1)).as("n_desc"), sum("rev_c").as("subtree_rev_c"))
-    }),
-
-    "ev_concurrency" -> ((s, dir) => {
-      // daily peak concurrency by sweep-line, shuffle-bounded: each
-      // event opens a 1 h half-open interval; intervals are clamped to
-      // epoch-day segments (≤2), reduced to ±1 deltas, AGGREGATED to
-      // the ≤86 400-second day grid FIRST, and only then prefix-summed —
-      // the running-sum window is per-day over the bounded grid, never
-      // over raw events. Ends sort before starts at the same second
-      // (half-open semantics) via the (sec, delta) order.
-      import org.apache.spark.sql.expressions.Window
-      val seg = events(s, dir)
-        .select(unix_timestamp(col("ts")).as("es"))
-        .select(expr("es div 86400").as("day"),
-          expr("""CASE WHEN es % 86400 + 3600 <= 86400
-                  THEN array(named_struct('d', CAST(0 AS BIGINT), 'a', es % 86400,
-                                          'b', es % 86400 + 3600))
-                  ELSE array(named_struct('d', CAST(0 AS BIGINT), 'a', es % 86400,
-                                          'b', CAST(86400 AS BIGINT)),
-                             named_struct('d', CAST(1 AS BIGINT), 'a', CAST(0 AS BIGINT),
-                                          'b', es % 86400 + 3600 - 86400))
-                  END""").as("parts"))
-        .select(explode(col("parts")).as("p"), col("day"))
-        .select((col("day") + col("p.d")).as("day"), col("p.a").as("a"), col("p.b").as("b"))
-      val deltas = seg.select(col("day"), col("a").as("sec"), lit(1L).as("delta"))
-        .union(seg.select(col("day"), col("b").as("sec"), lit(-1L).as("delta")))
-        .groupBy("day", "sec", "delta").agg(sum("delta").as("d"))
-      val w = Window.partitionBy("day").orderBy(col("sec"), col("delta"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      deltas.withColumn("run", sum("d").over(w))
-        .groupBy("day").agg(max("run").as("peak"))
-    }),
-
-    "ev_cuped" -> ((s, dir) => {
-      // CUPED variance reduction (the experimentation-platform
-      // adjustment): pre-period value predicts post-period value;
-      // θ = cov(x,y)/var(x) from one global DECIMAL(38) Gram agg
-      // (broadcast scalars), each user's adjusted outcome an exact
-      // integral expression scaled by n to stay in integers:
-      // y_adj = (n·y·1e6 − θµ·(n·x − Σx)) div n.
-      val cut = "2024-01-15 00:00:00"
-      val ux = events(s, dir)
-        .select(col("user_id"), round(col("value") * 100).cast("long").as("v_c"),
-          (col("ts") < lit(cut).cast("timestamp")).as("pre"))
-        .groupBy("user_id")
-        .agg(sum(when(col("pre"), col("v_c")).otherwise(0L)).as("x_c"),
-          sum(when(!col("pre"), col("v_c")).otherwise(0L)).as("y_c"))
-        .localCheckpoint(true) // scalars AND per-user adjustment read it
-      val g = ux.select(col("x_c").cast("decimal(38,0)").as("x"),
-          col("y_c").cast("decimal(38,0)").as("y"))
-        .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum("x").as("sx"), sum("y").as("sy"),
-          sum(expr("x * x")).as("sxx"), sum(expr("x * y")).as("sxy"))
-        .select(col("n"), col("sx"),
-          expr("((n * sxy - sx * sy) * 1000000) div (n * sxx - sx * sx)")
-            .as("theta_micro"))
-      ux.crossJoin(broadcast(g))
-        .select(col("user_id"), col("x_c"), col("y_c"),
-          col("theta_micro").cast("long").as("theta_micro"),
-          expr("""CAST((n * y_c * 1000000 - theta_micro * (n * x_c - sx))
-                 div n AS BIGINT)""").as("y_adj_micro"))
-    }),
-
-    "ev_uplift" -> ((s, dir) => {
-      // uplift/Qini decile table — the causal companion to q_lift:
-      // users split by the deterministic per-user assignment
-      // (user_id % 2 — ev_srm's arm hash is per-event, uplift needs a
-      // stable per-USER arm), ranked by PRE-period activity (the
-      // targeting score a model would produce), cut into exact deciles
-      // by the range-partitioned groupedNtile (no global sort window),
-      // then per-decile treated/control response rates and the
-      // cumulative Qini curve qini = cumR_t − cumR_c·cumN_t/cumN_c in
-      // exact integer micro-units. The cumulative window runs over the
-      // 10-row decile frame only; the rate products go through
-      // DECIMAL(38,0) (HUGEINT oracle) so billion-user cohorts can't
-      // wrap int64.
-      import org.apache.spark.sql.expressions.Window
-      val cut = "2024-01-15 00:00:00"
-      val u = events(s, dir)
-        .select(col("user_id"),
-          (col("ts") < lit(cut).cast("timestamp")).as("pre"),
-          (col("event_type") === "purchase").as("purch"))
-        .groupBy("user_id")
-        .agg(sum(when(col("pre"), 1L).otherwise(0L)).as("pre_n"),
-          max(when(!col("pre") && col("purch"), 1L).otherwise(0L)).as("resp"))
-        .withColumn("treated", (col("user_id") % 2 === 0).cast("long"))
-        .withColumn("g", lit("all"))
-      val dec = ext.Ranks.groupedNtile(u, "g",
-        Seq(col("pre_n").desc, col("user_id").asc), 10, "decile")
-      val byDec = dec.groupBy("decile")
-        .agg(sum(when(col("treated") === 1L, 1L).otherwise(0L)).as("n_t"),
-          sum(when(col("treated") === 0L, 1L).otherwise(0L)).as("n_c"),
-          sum(when(col("treated") === 1L, col("resp")).otherwise(0L)).as("r_t"),
-          sum(when(col("treated") === 0L, col("resp")).otherwise(0L)).as("r_c"))
-      val w = Window.orderBy("decile")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      byDec
-        .withColumn("cn_t", sum("n_t").over(w))
-        .withColumn("cn_c", sum("n_c").over(w))
-        .withColumn("cr_t", sum("r_t").over(w))
-        .withColumn("cr_c", sum("r_c").over(w))
-        .select(col("decile"), col("n_t"), col("n_c"), col("r_t"), col("r_c"),
-          expr("""CASE WHEN n_t = 0 OR n_c = 0 THEN NULL
-                 ELSE CAST(CAST(r_t AS DECIMAL(38,0)) * 1000000 div n_t
-                   - CAST(r_c AS DECIMAL(38,0)) * 1000000 div n_c AS BIGINT)
-                 END""").as("uplift_micro"),
-          expr("""CASE WHEN cn_c = 0 THEN NULL
-                 ELSE CAST(CAST(cr_t AS DECIMAL(38,0)) * 1000000
-                   - (CAST(cr_c AS DECIMAL(38,0)) * cn_t * 1000000) div cn_c
-                   AS BIGINT) END""").as("qini_micro"))
-    }),
-
-    "ev_ipw" -> ((s, dir) => {
-      // stratified inverse-propensity weighting — the observational
-      // sibling of ev_uplift: strata are exact pre-period-activity
-      // deciles (range-partitioned groupedNtile, no global sort window),
-      // the within-stratum propensity is n_t/n_s, and each stratum
-      // contributes the Horvitz-Thompson term r_t·n_s/n_t − r_c·n_s/n_c
-      // (sum over strata / N = the stratified ATE). All products run in
-      // DECIMAL(38,0) (HUGEINT oracle); empty arms yield NULL, the
-      // estimator's honest answer, mirrored in the oracle.
-      val cut = "2024-01-15 00:00:00"
-      val u = events(s, dir)
-        .select(col("user_id"),
-          (col("ts") < lit(cut).cast("timestamp")).as("pre"),
-          (col("event_type") === "purchase").as("purch"))
-        .groupBy("user_id")
-        .agg(sum(when(col("pre"), 1L).otherwise(0L)).as("pre_n"),
-          max(when(!col("pre") && col("purch"), 1L).otherwise(0L)).as("resp"))
-        .withColumn("treated", (col("user_id") % 2 === 0).cast("long"))
-        .withColumn("g", lit("all"))
-      val dec = ext.Ranks.groupedNtile(u, "g",
-        Seq(col("pre_n").desc, col("user_id").asc), 10, "stratum")
-      dec.groupBy("stratum")
-        .agg(count(lit(1)).as("n_s"),
-          sum(when(col("treated") === 1L, 1L).otherwise(0L)).as("n_t"),
-          sum(when(col("treated") === 0L, 1L).otherwise(0L)).as("n_c"),
-          sum(when(col("treated") === 1L, col("resp")).otherwise(0L)).as("r_t"),
-          sum(when(col("treated") === 0L, col("resp")).otherwise(0L)).as("r_c"))
-        .select(col("stratum"), col("n_s"), col("n_t"), col("n_c"),
-          col("r_t"), col("r_c"),
-          expr("CAST(CAST(n_t AS DECIMAL(38,0)) * 1000000 div n_s AS BIGINT)")
-            .as("propensity_micro"),
-          expr("""CASE WHEN n_t = 0 OR n_c = 0 THEN NULL
-                 ELSE CAST(CAST(r_t AS DECIMAL(38,0)) * n_s * 1000000 div n_t
-                   - CAST(r_c AS DECIMAL(38,0)) * n_s * 1000000 div n_c AS BIGINT)
-                 END""").as("ht_term_micro"))
-    }),
-
-    "ev_snips" -> ((s, dir) => {
-      // self-normalized inverse-propensity scoring (SNIPS — Swaminathan
-      // & Joachims 2015) off-policy value of a purchase-skewed target
-      // policy (π_t: purchase 0.6, others 0.1) against the LOGGED event
-      // stream, per user cohort. Logging propensities are the empirical
-      // per-(cohort, action) rates n_ca/N_c, so each cell contributes
-      // the Horvitz-Thompson term π_t(a)·N_c·r_ca/n_ca and the
-      // normalizer Σ π_t(a)·N_c — exact integer rationals, micro-floored
-      // per CELL (deterministic on both engines), DECIMAL(38,0) products
-      // so a trillion-event log cannot wrap. Reward = value > 50.
-      val cells = events(s, dir)
-        .select((col("user_id") % 10).as("cohort"), col("event_type"),
-          when(col("value") > 50, 1L).otherwise(0L).as("r"))
-        .groupBy("cohort", "event_type")
-        .agg(count(lit(1)).as("n_ca"), sum("r").as("r_ca"))
-        .withColumn("pt_micro",
-          when(col("event_type") === "purchase", 600000L).otherwise(100000L))
-      val nc = cells.groupBy("cohort").agg(sum("n_ca").as("n_c"))
-      cells.join(broadcast(nc), "cohort")
-        .withColumn("term",
-          expr("(CAST(pt_micro AS DECIMAL(38,0)) * n_c * r_ca) div n_ca"))
-        .withColumn("wsum", expr("CAST(pt_micro AS DECIMAL(38,0)) * n_c"))
-        .groupBy("cohort")
-        .agg(count(lit(1)).as("n_cells"), sum("n_ca").as("n_events"),
-          sum("term").as("num"), sum("wsum").as("den"))
-        .select(col("cohort"), col("n_cells"), col("n_events"),
-          expr("CAST(num AS BIGINT)").as("num_micro"),
-          expr("CAST(den AS BIGINT)").as("den_micro"),
-          expr("CAST((CAST(num AS DECIMAL(38,0)) * 1000000) div den AS BIGINT)")
-            .as("snips_micro"))
-    }),
-
-    "stream_snips" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // STREAMING off-policy monitor: ev_snips' per-(cohort, action)
-      // cells accumulate over the event file stream (complete mode —
-      // counts and reward sums are order-free and mergeable, so
-      // streamed ≡ batch however the source micro-batches), then the
-      // SNIPS readout runs on the tiny drained cell table. The live
-      // face of the estimator: watch a new policy's value while the
-      // log is still arriving. Same oracle as ev_snips.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
-        .select((col("user_id") % 10).as("cohort"), col("event_type"),
-          when(col("value") > 50, 1L).otherwise(0L).as("r"))
-      val cells = stream.groupBy("cohort", "event_type")
-        .agg(count(lit(1)).as("n_ca"), sum("r").as("r_ca"))
-      s.catalog.dropTempView("graft_stream_snips")
-      val q = cells.writeStream.format("memory").queryName("graft_stream_snips")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val drained = s.table("graft_stream_snips")
-        .withColumn("pt_micro",
-          when(col("event_type") === "purchase", 600000L).otherwise(100000L))
-      // rename the grouping key before re-joining the memory table to
-      // itself — identical attribute ids otherwise collide in the Join
-      val nc = drained.groupBy("cohort").agg(sum("n_ca").as("n_c"))
-        .select(col("cohort").as("__nc_cohort__"), col("n_c"))
-      drained.join(broadcast(nc), col("cohort") === col("__nc_cohort__"))
-        .drop("__nc_cohort__")
-        .withColumn("term",
-          expr("(CAST(pt_micro AS DECIMAL(38,0)) * n_c * r_ca) div n_ca"))
-        .withColumn("wsum", expr("CAST(pt_micro AS DECIMAL(38,0)) * n_c"))
-        .groupBy("cohort")
-        .agg(count(lit(1)).as("n_cells"), sum("n_ca").as("n_events"),
-          sum("term").as("num"), sum("wsum").as("den"))
-        .select(col("cohort"), col("n_cells"), col("n_events"),
-          expr("CAST(num AS BIGINT)").as("num_micro"),
-          expr("CAST(den AS BIGINT)").as("den_micro"),
-          expr("CAST((CAST(num AS DECIMAL(38,0)) * 1000000) div den AS BIGINT)")
-            .as("snips_micro"))
-    }),
-
-    "ev_tost" -> ((s, dir) => {
-      // TOST equivalence test (Schuirmann): is the A/B per-user spend
-      // difference PROVABLY within ±2% of the grand mean — the "safe to
-      // ship, arms are equivalent" claim a plain t-test can never make.
-      // Welch machinery shared with q_ttest (exact DECIMAL Gram sums,
-      // variances as rational pairs, mirrored IEEE expressions); both
-      // one-sided t's reported in micro units, equivalence at the
-      // one-sided 5% level (t > 1.645 for both).
-      val u = events(s, dir)
-        .select(col("user_id"), expr("CAST(round(value * 100) AS BIGINT)").as("vc"))
-        .groupBy("user_id").agg(sum("vc").as("v"))
-        .select((col("user_id") % 2 === 0).as("a"),
-          col("v").cast("decimal(38,0)").as("v"))
-      u.agg(
-          sum(when(col("a"), 1L).otherwise(0L)).cast("decimal(38,0)").as("n1"),
-          sum(when(col("a"), col("v"))).as("s1"),
-          sum(when(col("a"), expr("v * v"))).as("ss1"),
-          sum(when(!col("a"), 1L).otherwise(0L)).cast("decimal(38,0)").as("n2"),
-          sum(when(!col("a"), col("v"))).as("s2"),
-          sum(when(!col("a"), expr("v * v"))).as("ss2"))
-        .select(col("n1"), col("n2"),
-          expr("""CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
-                 - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)""").as("dm"),
-          expr("""abs(CAST(s1 + s2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)) * 0.02""")
-            .as("delta"),
-          expr("""CAST(n1 * ss1 - s1 * s1 AS DOUBLE)
-                 / (CAST(n1 AS DOUBLE) * CAST(n1 AS DOUBLE) * CAST(n1 - 1 AS DOUBLE))""")
-            .as("a1"),
-          expr("""CAST(n2 * ss2 - s2 * s2 AS DOUBLE)
-                 / (CAST(n2 AS DOUBLE) * CAST(n2 AS DOUBLE) * CAST(n2 - 1 AS DOUBLE))""")
-            .as("a2"))
-        .select(col("n1").cast("long").as("n_a"), col("n2").cast("long").as("n_b"),
-          expr("CAST(round(dm * 1000000) AS BIGINT)").as("dm_micro_c"),
-          expr("CAST(round(delta * 1000000) AS BIGINT)").as("delta_micro_c"),
-          expr("CAST(round((dm + delta) / sqrt(a1 + a2) * 1000000) AS BIGINT)")
-            .as("t_lower_micro"),
-          expr("CAST(round((delta - dm) / sqrt(a1 + a2) * 1000000) AS BIGINT)")
-            .as("t_upper_micro"),
-          expr("""least((dm + delta) / sqrt(a1 + a2),
-                 (delta - dm) / sqrt(a1 + a2)) > 1.645""").as("equivalent"))
-    }),
-
-    "ev_gaps" -> ((s, dir) => {
-      // inter-event gap distribution: per-user lag (high-cardinality
-      // partitioned window), then an exact CASE ladder into 7 literal
-      // buckets and a bounded-domain share table — the think-time
-      // histogram behind session-timeout tuning (ev_sessions' 30 min).
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val gaps = events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .withColumn("gap_s",
-          unix_timestamp(col("ts")) - unix_timestamp(lag(col("ts"), 1).over(w)))
-        .filter(col("gap_s").isNotNull)
-        .select(expr("""CASE WHEN gap_s < 1 THEN '0_sub_second'
-          WHEN gap_s < 10 THEN '1_under_10s' WHEN gap_s < 60 THEN '2_under_1m'
-          WHEN gap_s < 600 THEN '3_under_10m' WHEN gap_s < 3600 THEN '4_under_1h'
-          WHEN gap_s < 86400 THEN '5_under_1d' ELSE '6_over_1d' END""").as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as("n"))
-      val tot = gaps.agg(sum("n").as("total"))
-      gaps.crossJoin(broadcast(tot))
-        .select(col("bucket"), col("n"), expr("(n * 1000000) div total").as("share_micro"))
-    }),
-
-    "q_cohend" -> ((s, dir) => {
-      // Cohen's d effect size between returned and kept line items: one
-      // conditional-aggregation pass collapses both groups' exact
-      // integer (n, Σ, Σ²) into a single row; the pooled-sd formula
-      // then uses only correctly-rounded IEEE ops (+ − × ÷ sqrt) over
-      // those integers, so the micro rounding is engine-exact. No
-      // second scan, no join, no window.
-      T(s, dir, "lineitem")
-        .select((col("l_returnflag") === "R").as("r"),
-          round(col("l_extendedprice") * 100).cast("decimal(38,0)").as("v"))
-        .agg(
-          sum(when(col("r"), 1L).otherwise(0L)).cast("decimal(38,0)").as("n1"),
-          sum(when(col("r"), col("v"))).as("s1"),
-          sum(when(col("r"), expr("v * v"))).as("ss1"),
-          sum(when(!col("r"), 1L).otherwise(0L)).cast("decimal(38,0)").as("n2"),
-          sum(when(!col("r"), col("v"))).as("s2"),
-          sum(when(!col("r"), expr("v * v"))).as("ss2"))
-        .select(col("n1").cast("long").as("n_returned"),
-          col("n2").cast("long").as("n_kept"),
-          expr("""CAST(round((CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
-                 - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
-                 / sqrt(((CAST(n1 * ss1 - s1 * s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
-                       + (CAST(n2 * ss2 - s2 * s2 AS DOUBLE) / CAST(n2 AS DOUBLE)))
-                      / CAST(n1 + n2 - 2 AS DOUBLE))
-                 * 1000000) AS BIGINT)""").as("cohen_d_micro"))
-    }),
-
-    "q_rolling_corr" -> ((s, dir) => {
-      // 30-day rolling correlation between daily revenue and daily
-      // quantity: raw rows collapse to the bounded DAY domain first
-      // (one hash agg), then a RANGE window over epoch-day indices
-      // accumulates exact DECIMAL Gram sums — the window runs over
-      // ~2.5k aggregated rows, never the raw frame. Zero-variance
-      // windows yield NULL via the exact integer guard.
-      import org.apache.spark.sql.expressions.Window
-      val daily = T(s, dir, "lineitem")
-        .groupBy(to_date(col("l_shipdate")).as("d"))
-        .agg(sum(col("l_quantity").cast("decimal(38,0)")).as("x"),
-          sum(round(col("l_extendedprice") * 100).cast("decimal(38,0)")).as("y"))
-        .withColumn("dk", datediff(col("d"), lit("1970-01-01").cast("date")).cast("long"))
-      val w = Window.orderBy("dk").rangeBetween(-29, 0)
-      daily
-        .withColumn("n", count(lit(1)).over(w).cast("decimal(38,0)"))
-        .withColumn("sx", sum("x").over(w)).withColumn("sy", sum("y").over(w))
-        .withColumn("sxx", sum(expr("x * x")).over(w))
-        .withColumn("syy", sum(expr("y * y")).over(w))
-        .withColumn("sxy", sum(expr("x * y")).over(w))
-        .select(col("d"), col("n").cast("long").as("n_days"),
-          expr("""CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-                 THEN CAST(round(CAST(n * sxy - sx * sy AS DOUBLE)
-                      / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                         * sqrt(CAST(n * syy - sy * sy AS DOUBLE))) * 1000000) AS BIGINT)
-                 END""").as("corr_micro"))
-    }),
-
-    "ev_entry_exit" -> ((s, dir) => {
-      // session entry→exit path table: 30-minute-gap sessionization
-      // (per-user windows only), first/last event type per session, then
-      // the bounded (entry, exit) transition counts with exact shares —
-      // the landing/bounce analysis over product events.
-      import org.apache.spark.sql.expressions.Window
-      val wUser = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val ev = events(s, dir).select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("gap_s",
-          unix_timestamp(col("ts")) - unix_timestamp(lag(col("ts"), 1).over(wUser)))
-        .withColumn("new_sess",
-          when(col("gap_s").isNull || col("gap_s") > 1800L, 1L).otherwise(0L))
-        .withColumn("sess", sum("new_sess").over(
-          wUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val wSess = Window.partitionBy("user_id", "sess")
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val paths = ev
-        .withColumn("entry", first("event_type").over(wSess))
-        .withColumn("exit", last("event_type").over(wSess))
-        .groupBy("user_id", "sess").agg(first("entry").as("entry"), first("exit").as("exit"))
-        .groupBy("entry", "exit").agg(count(lit(1)).as("n"))
-      val tot = paths.agg(sum("n").as("total"))
-      paths.crossJoin(broadcast(tot))
-        .select(col("entry"), col("exit"), col("n"),
-          expr("(n * 1000000) div total").as("share_micro"))
-    }),
-
-    "ev_baseline_anomaly" -> ((s, dir) => {
-      // seasonal-baseline anomaly audit: each (date, dow, hour) cell is
-      // compared against the all-history (dow, hour) baseline — exact
-      // integral ratio n·n_obs·1e6 div Σn, spike when the ratio predicate
-      // 3·Σn < n·n_obs holds in integers. The baseline is 168 rows,
-      // broadcast; the cell table is one hash agg.
-      val cells = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"),
-          (dayofweek(col("ts")) - 1).cast("long").as("dow"),
-          hour(col("ts")).cast("long").as("hr"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // cells feed the baseline AND the compare
-      val base = cells.groupBy("dow", "hr")
-        .agg(sum("n").as("sum_n"), count(lit(1)).as("n_obs"))
-      cells.join(broadcast(base), Seq("dow", "hr"))
-        .select(col("d"), col("dow"), col("hr"), col("n"), col("sum_n"), col("n_obs"),
-          expr("(n * n_obs * 1000000) div sum_n").as("ratio_micro"),
-          (col("n") * col("n_obs") > col("sum_n") * 3L).as("is_spike"))
-    }),
-
-    "ev_did" -> ((s, dir) => {
-      // difference-in-differences: treatment = odd user ids, period
-      // split at the cutoff; the four cell aggregates collapse in ONE
-      // conditional-aggregation pass and the DID estimate is a pure
-      // integral-micro expression of the four cell means. The
-      // experimentation readout that pairs with ev_cuped.
-      val cut = "2024-01-15 00:00:00"
-      events(s, dir)
-        .select((col("user_id") % 2 === 1).as("treat"),
-          (col("ts") >= lit(cut).cast("timestamp")).as("post"),
-          round(col("value") * 100).cast("long").as("v_c"))
-        .agg(
-          sum(when(col("treat") && col("post"), col("v_c")).otherwise(0L)).as("s_tp"),
-          sum(when(col("treat") && col("post"), 1L).otherwise(0L)).as("n_tp"),
-          sum(when(col("treat") && !col("post"), col("v_c")).otherwise(0L)).as("s_tb"),
-          sum(when(col("treat") && !col("post"), 1L).otherwise(0L)).as("n_tb"),
-          sum(when(!col("treat") && col("post"), col("v_c")).otherwise(0L)).as("s_cp"),
-          sum(when(!col("treat") && col("post"), 1L).otherwise(0L)).as("n_cp"),
-          sum(when(!col("treat") && !col("post"), col("v_c")).otherwise(0L)).as("s_cb"),
-          sum(when(!col("treat") && !col("post"), 1L).otherwise(0L)).as("n_cb"))
-        .select(col("n_tp"), col("n_tb"), col("n_cp"), col("n_cb"),
-          expr("""(s_tp * 1000000) div n_tp - (s_tb * 1000000) div n_tb
-                 - ((s_cp * 1000000) div n_cp - (s_cb * 1000000) div n_cb)""")
-            .as("did_micro"))
-    }),
-
-    "ta_span_corrupt" -> ((s, dir) => {
-      // T5-style span corruption (the denoising-objective data prep):
-      // tokens fold into 3-token groups; a seeded md5 residue selects
-      // every 5th group on average; selected groups collapse to
-      // <extra_id_k> sentinels (k = per-doc rank of the selected group)
-      // in the masked text, and the targets string pairs each sentinel
-      // with the span it swallowed. All windows partition on doc_id
-      // (high cardinality); the hash replays bit-for-bit in the oracle.
-      import org.apache.spark.sql.expressions.Window
-      val toks = T(s, dir, "documents")
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
-        .withColumn("grp", expr("pos div 3"))
-      val grps = toks.select("doc_id", "grp").distinct()
-        .withColumn("sel",
-          conv(substring(md5(concat(col("doc_id"), lit(":"), col("grp"))), 1, 4),
-            16, 10).cast("long") % 5 === 0L)
-      val wSel = Window.partitionBy("doc_id").orderBy("grp")
-      val sids = grps.filter(col("sel"))
-        .withColumn("sid", row_number().over(wSel).cast("long") - 1L)
-      val tk = toks.join(sids.select("doc_id", "grp", "sid"), Seq("doc_id", "grp"), "left")
-        .localCheckpoint(true) // masked + targets read one frame
-      val maskedPieces = tk.filter(col("sid").isNull)
-          .select(col("doc_id"), col("pos"), col("w"))
-        .union(tk.filter(col("sid").isNotNull).groupBy("doc_id", "grp", "sid")
-          .agg(min("pos").as("pos"))
-          .select(col("doc_id"), col("pos"),
-            concat(lit("<extra_id_"), col("sid"), lit(">")).as("w")))
-      val masked = maskedPieces.groupBy("doc_id")
-        .agg(expr("array_join(transform(array_sort(collect_list(struct(pos, w))), x -> x.w), ' ')")
-          .as("masked_text"))
-      val targets = tk.filter(col("sid").isNotNull)
-        .groupBy("doc_id", "grp", "sid")
-        .agg(expr("array_join(transform(array_sort(collect_list(struct(pos, w))), x -> x.w), ' ')")
-          .as("span"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_spans"),
-          expr("""array_join(transform(array_sort(collect_list(struct(grp,
-                 concat('<extra_id_', sid, '> ', span) AS piece))), x -> x.piece), ' ')""")
-            .as("targets"))
-      masked.join(targets, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-          col("masked_text"), coalesce(col("targets"), lit("")).as("targets"))
-    }),
-
-    "q_qq" -> ((s, dir) => {
-      // Q–Q decile table comparing returned vs kept price distributions:
-      // exact per-group deciles from the range-partitioned global rank
-      // (ext.Ranks — no single-partition sort), the decile row picked by
-      // the integral predicate rn = ⌈k·n/10⌉, then a 9-row pivot. The
-      // distribution-compare companion to q_ks's uniform-law test.
-      val base = T(s, dir, "lineitem")
-        .filter(col("l_returnflag").isin("R", "N"))
-        .select(col("l_returnflag").as("g"),
-          round(col("l_extendedprice") * 100).cast("long").as("price_c"),
-          col("l_orderkey"), col("l_linenumber"))
-      val ranked = ext.Ranks.groupedRank(base, "g",
-        Seq(col("price_c"), col("l_orderkey"), col("l_linenumber")), "rn")
-      ranked
-        .withColumn("decile", explode(expr(
-          "filter(sequence(1, 9), k -> rn = (k * rn_n + 9) div 10)")))
-        .groupBy(col("decile").cast("long").as("decile"))
-        .agg(max(when(col("g") === "R", col("price_c"))).as("r_price_c"),
-          max(when(col("g") === "N", col("price_c"))).as("n_price_c"))
-    }),
-
-    "q_power" -> ((s, dir) => {
-      // A/B sample-size planner: per-arm n for 80 % power at α = 5 %
-      // (two-sided) against minimum detectable effects of 1/5/10 dollars
-      // on per-customer spend. (z_{0.975}+z_{0.8})² is the literal
-      // 7 848 886 micro shared with the oracle; the variance enters as
-      // its exact integer numerator/denominator so the whole plan is one
-      // Gram aggregate and a 3-row literal cross join — the planning
-      // table read before launching an experiment (ev_did / ev_cuped).
-      val x = T(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("x_c"))
-        .select(col("x_c").cast("decimal(38,0)").as("x"))
-        .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum("x").as("s"), sum(expr("x * x")).as("ss"))
-      val deltas = s.createDataFrame(Seq(Tuple1(100L), Tuple1(500L), Tuple1(1000L)))
-        .toDF("delta_c")
-      x.crossJoin(broadcast(deltas))
-        .select(col("delta_c"), col("n").cast("long").as("n_customers"),
-          expr("""CAST((2 * 7848886 * (n * ss - s * s)
-                 + (1000000 * delta_c * delta_c * n * (n - 1)) - 1)
-                 div (1000000 * delta_c * delta_c * n * (n - 1)) AS BIGINT)""")
-            .as("n_required"))
-    }),
-
-    "ta_tfidf" -> ((s, dir) => {
-      // TF-IDF top-5 terms per document — the classic vectorizer next
-      // to srch_bm25's retrieval scorer: term frequencies and document
-      // frequencies are two hash aggs, idf is the micro-rounded IEEE ln
-      // (the q_lift precedent), and the per-doc top-5 window partitions
-      // on doc_id (high cardinality). df reaches the doc join pruned to
-      // the distinct (doc, term) pairs — never the token stream twice.
-      import org.apache.spark.sql.expressions.Window
-      val tok = T(s, dir, "documents")
-        .select(col("doc_id"), explode(expr(
-          "filter(split(lower(text), '\\\\s+'), x -> x != '')")).as("term"))
-      val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true) // df agg + scoring read one frame
-      val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val nDocs = tf.select("doc_id").distinct().agg(count(lit(1)).as("n_docs"))
-      val w = Window.partitionBy("doc_id")
-        .orderBy(col("score_micro").desc, col("term").asc)
-      tf.join(df, "term").crossJoin(broadcast(nDocs))
-        .withColumn("idf_micro", expr(
-          "CAST(round(ln(CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)) * 1000000) AS BIGINT)"))
-        .withColumn("score_micro", col("tf") * col("idf_micro"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("doc_id"), col("rank"), col("term"), col("tf"),
-          col("idf_micro"), col("score_micro"))
-    }),
-
-    "sim_reciprocal" -> ((s, dir) => {
-      // mutual-kNN pairs (the contract for high-precision near-dup
-      // merging): vectors that appear in EACH OTHER's cosine top-5.
-      // Both directions come from ONE bounded-heap brute top-k over the
-      // anchor set (TopKAgg — ≤k rows per partition per query shuffle),
-      // then a self-join on the symmetrized pair key. At corpus scale
-      // the same contract runs over the IVF/LSH shortlists
-      // (sim_topk_ivf) — identical downstream shape.
-      val emb = T(s, dir, "embeddings").filter(col("vec_id") < 64)
-      val top = ext.Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
-        .localCheckpoint(true) // probed from both directions
-      top.as("ab").join(top.as("ba"),
-          col("ab.query_id") === col("ba.neighbor_id") &&
-            col("ab.neighbor_id") === col("ba.query_id"))
-        .filter(col("ab.query_id") < col("ab.neighbor_id"))
-        .select(col("ab.query_id").as("a_id"), col("ab.neighbor_id").as("b_id"),
-          col("ab.rank").as("rank_ab"), col("ba.rank").as("rank_ba"))
-    }),
-
-    "q_bollinger" -> ((s, dir) => {
-      // Bollinger bands with an exact breakout test: daily revenue vs
-      // the trailing 20-day mean ± 2σ, where the band predicate is the
-      // division-free integer comparison (n·x − s)²·(n−1) > 4·n·(n·ss − s²)
-      // — no float σ ever materializes. Day-domain agg first; RANGE
-      // window over the bounded day grid only (the q_rolling_corr shape).
-      import org.apache.spark.sql.expressions.Window
-      val daily = T(s, dir, "lineitem")
-        .groupBy(to_date(col("l_shipdate")).as("d"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("decimal(38,0)")).as("x"))
-        .withColumn("dk", datediff(col("d"), lit("1970-01-01").cast("date")).cast("long"))
-      val w = Window.orderBy("dk").rangeBetween(-19, 0)
-      daily
-        .withColumn("n", count(lit(1)).over(w).cast("decimal(38,0)"))
-        .withColumn("s", sum("x").over(w))
-        .withColumn("ss", sum(expr("x * x")).over(w))
-        .select(col("d"), col("x").cast("long").as("rev_c"),
-          col("n").cast("long").as("n_days"),
-          expr("CAST((s * 1000000) div n AS BIGINT)").as("mean_micro"),
-          expr("""CASE WHEN n > 1 THEN
-                 (n * x - s) * (n * x - s) * (n - 1) > 4 * n * (n * ss - s * s)
-                 AND n * x > s ELSE false END""").as("break_upper"),
-          expr("""CASE WHEN n > 1 THEN
-                 (n * x - s) * (n * x - s) * (n - 1) > 4 * n * (n * ss - s * s)
-                 AND n * x < s ELSE false END""").as("break_lower"))
-    }),
-
-    "q_stl" -> ((s, dir) => {
-      // STL-lite seasonal decomposition of daily revenue: trend is the
-      // centered 7-day RANGE mean over the bounded day domain, seasonal
-      // is the per-weekday mean of the detrended series (7-row broadcast
-      // join back), residual closes the identity x·1e6 = trend +
-      // seasonal + resid exactly — every term an integral micro value,
-      // truncating division shared by both engines.
-      import org.apache.spark.sql.expressions.Window
-      val daily = T(s, dir, "lineitem")
-        .groupBy(to_date(col("l_shipdate")).as("d"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("decimal(38,0)")).as("x"))
-        .withColumn("dk", datediff(col("d"), lit("1970-01-01").cast("date")).cast("long"))
-        .withColumn("dow", (dayofweek(col("d")) - 1).cast("long"))
-      val w = Window.orderBy("dk").rangeBetween(-3, 3)
-      val detr = daily
-        .withColumn("n7", count(lit(1)).over(w).cast("decimal(38,0)"))
-        .withColumn("s7", sum("x").over(w))
-        .withColumn("trend_micro", expr("(s7 * 1000000) div n7"))
-        .withColumn("d_micro", expr("x * 1000000 - trend_micro"))
-        .localCheckpoint(true) // seasonal agg + final join read one frame
-      val seas = detr.groupBy("dow")
-        .agg(expr("sum(d_micro) div count(1)").as("seasonal_micro"))
-      detr.join(broadcast(seas), "dow")
-        .select(col("d"), col("x").cast("long").as("rev_c"),
-          col("trend_micro").cast("long").as("trend_micro"),
-          col("seasonal_micro").cast("long").as("seasonal_micro"),
-          expr("CAST(d_micro - seasonal_micro AS BIGINT)").as("resid_micro"))
-    }),
-
-    "ev_funnel_time" -> ((s, dir) => {
-      // time-to-convert quantiles: each user's first view → first
-      // purchase gap, exact median and p90 from the gap-value histogram
-      // (group to the value domain, running count, pick ⌈q·n⌉) — the
-      // q_mad selection pattern on a domain bounded by the number of
-      // converting users. One pass builds both quantiles.
-      import org.apache.spark.sql.expressions.Window
-      val firsts = events(s, dir)
-        .groupBy("user_id")
-        .agg(min(when(col("event_type") === "view", col("ts"))).as("v"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("p"))
-        .filter(col("v").isNotNull && col("p").isNotNull && col("p") >= col("v"))
-        .select((unix_timestamp(col("p")) - unix_timestamp(col("v"))).as("gap_s"))
-      val h = firsts.groupBy("gap_s").agg(count(lit(1)).as("c"))
-      val wc = Window.orderBy("gap_s")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      h.withColumn("cum", sum("c").over(wc))
-        .withColumn("n", sum("c").over(Window.partitionBy()))
-        .agg(max("n").as("n_converted"),
-          min(when(col("cum") * 2 >= col("n"), col("gap_s"))).as("median_s"),
-          min(when(col("cum") * 10 >= col("n") * 9, col("gap_s"))).as("p90_s"))
-    }),
-
-    "ev_slo_burn" -> ((s, dir) => {
-      // error-budget burn rate against a 99 % SLO: hourly error share
-      // over the budget (1 − SLO = 1 %), alert at the standard 14.4×
-      // fast-burn threshold — burn_micro = err·1e8 div n, every term an
-      // exact integer. One hash agg to the hour domain; nothing else.
-      events(s, dir)
-        .groupBy(date_trunc("hour", col("ts")).as("hour"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_err"))
-        .select(col("hour"), col("n"), col("n_err"),
-          expr("(n_err * 1000000) div n").as("err_share_micro"),
-          expr("(n_err * 100000000) div n").as("burn_micro"),
-          (expr("(n_err * 100000000) div n") > 14400000L).as("alert"))
-    }),
-
-    "q_lorenz" -> ((s, dir) => {
-      // Lorenz concentration curve: customers ranked by revenue
-      // ascending into exact deciles via the range-partitioned global
-      // rank (never a single-partition sort), then the 10-row share /
-      // cumulative-share table — the curve q_gini's coefficient
-      // summarizes, and q_abc's 80/15/5 classes read off.
-      import org.apache.spark.sql.expressions.Window
-      val rev = T(s, dir, "orders")
-        .groupBy(col("o_custkey").as("c"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
-      val ranked = ext.Ranks.groupedRank(
-        rev.withColumn("__grp__", lit(0)), "__grp__",
-        Seq(col("rev_c").asc, col("c").asc), "rn")
-      val dec = ranked
-        .withColumn("decile", expr("((rn - 1) * 10) div rn_n + 1"))
-        .groupBy("decile")
-        .agg(count(lit(1)).as("n_customers"), sum("rev_c").as("rev_c"))
-      val tot = dec.agg(sum("rev_c").as("total_c"))
-      val wc = Window.orderBy("decile")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      dec.crossJoin(broadcast(tot))
-        .withColumn("share_micro", expr("(rev_c * 1000000) div total_c"))
-        .withColumn("cum_share_micro",
-          expr("sum((rev_c * 1000000) div total_c) OVER " +
-            "(ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"))
-        .select(col("decile"), col("n_customers"), col("rev_c"),
-          col("share_micro"), col("cum_share_micro"))
-    }),
-
-    "q_cohort_ltv" -> ((s, dir) => {
-      // cohort-level lifetime value: ev_ltv's per-order decayed credits
-      // (same literal decay table) rolled up by first-order-year cohort —
-      // the acquisition-quality readout. Two hash aggs + one broadcast
-      // join; no per-customer intermediate survives the plan.
-      val o = T(s, dir, "orders").select(col("o_custkey"),
-        year(col("o_orderdate")).as("yr"),
-        round(col("o_totalprice") * 100).cast("long").as("price_c"))
-      val firstYr = o.groupBy("o_custkey").agg(min("yr").as("yr0"))
-      val decay = s.createDataFrame(ltvDecayMicro).toDF("dy", "decay_micro")
-      o.join(firstYr, "o_custkey")
-        .withColumn("dy", (col("yr") - col("yr0")).cast("long"))
-        .join(broadcast(decay), "dy")
-        .groupBy(col("yr0").cast("long").as("cohort_year"))
-        .agg(countDistinct(col("o_custkey")).as("n_customers"),
-          sum(expr("(price_c * decay_micro) div 1000000")).as("ltv_c"))
-        .withColumn("avg_ltv_micro", expr("(ltv_c * 1000000) div n_customers"))
-    }),
-
-    "ev_srm" -> ((s, dir) => {
-      // sample-ratio-mismatch audit: the 50/50 A/B arms derived from the
-      // assignment key (k % 2) are chi-square tested against the equal
-      // split — χ² as an exact sum of integral micro terms
-      // Σ (o·v − t)²·1e6 div (t·v), flagged against the df=1 literal
-      // critical value 3 841 459. The guardrail read before trusting any
-      // ev_did / ev_cuped estimate.
-      val arms = events(s, dir)
-        .select((expr("CAST(get_json_object(props, '$.k') AS BIGINT)") % 2).as("arm"))
-        .groupBy("arm").agg(count(lit(1)).as("o"))
-      val tot = arms.agg(sum("o").as("t"), count(lit(1)).as("v"))
-      arms.crossJoin(broadcast(tot))
-        .select(col("arm"), col("o"), col("t"), col("v"),
-          expr("((o * v - t) * (o * v - t) * 1000000) div (t * v)").as("term_micro"))
-        .groupBy()
-        .agg(max("v").as("n_variants"), max("t").as("n_total"),
-          sum("term_micro").as("chi2_micro"))
-        .withColumn("crit_micro", lit(3841459L))
-        .withColumn("srm_detected", col("chi2_micro") > col("crit_micro"))
-    }),
-
-    "q_ewma" -> ((s, dir) => {
-      // EWMA (α = 0.2) WITHOUT the sequential recurrence: the 20-term
-      // truncated kernel w_j = ⌊0.2·0.8^j·1e6⌋ is a literal table
-      // (shared with the oracle), so the moving average becomes a
-      // bounded-kernel convolution — day domain × 20 equi-join on the
-      // lag offset, one keyed agg, edge-normalized by the weights
-      // actually present. The ev_ltv decay-table pattern applied to
-      // smoothing: no window recurrence, no cross-partition state.
-      val daily = T(s, dir, "lineitem")
-        .groupBy(to_date(col("l_shipdate")).as("d"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("decimal(38,0)")).as("x"))
-        .withColumn("dk", datediff(col("d"), lit("1970-01-01").cast("date")).cast("long"))
-        .localCheckpoint(true) // anchor side AND lag side read one frame
-      val w = s.createDataFrame(ewmaKernelMicro).toDF("j", "w")
-      val lags = daily.select(col("dk").as("ldk"), col("x").as("lx"))
-      daily.crossJoin(broadcast(w))
-        .join(lags, col("ldk") === col("dk") - col("j"))
-        .groupBy("d")
-        .agg(sum(expr("w * lx")).as("swx"), sum("w").as("sw"),
-          count(lit(1)).as("n_terms"))
-        .select(col("d"), col("n_terms"),
-          expr("(swx * 1000000) div sw").as("ewma_micro"))
-    }),
-
-    "ta_keyness" -> ((s, dir) => {
-      // distinctive-term detection (keyness): a term is a key term of a
-      // source when its in-source share exceeds 1.25× its corpus-wide
-      // share — the exact integral predicate 4·tf_s·T_g > 5·tf_g·T_s —
-      // reported
-      // as the top-3 ratio-ranked terms per source (min in-source count
-      // 5). Two cascaded hash aggs + a per-source window whose partition
-      // extent is that source's vocabulary.
-      import org.apache.spark.sql.expressions.Window
-      val tok = T(s, dir, "documents")
-        .select(col("source"), explode(expr(
-          "filter(split(lower(text), '\\\\s+'), x -> x != '')")).as("term"))
-      val st = tok.groupBy("source", "term").agg(count(lit(1)).as("tf_s"))
-        .localCheckpoint(true) // per-source totals + global totals + probe
-      val srcTot = st.groupBy("source").agg(sum("tf_s").as("t_s"))
-      val gl = st.groupBy("term").agg(sum("tf_s").as("tf_g"))
-      val gTot = st.agg(sum("tf_s").as("t_g"))
-      val rated = st.join(srcTot, "source").join(gl, "term")
-        .crossJoin(broadcast(gTot))
-        .filter(col("tf_s") >= 5L)
-        .withColumn("ratio_micro",
-          expr("(tf_s * t_g * 1000000) div (tf_g * t_s)"))
-        .filter(expr("4 * tf_s * t_g > 5 * tf_g * t_s"))
-      val w = Window.partitionBy("source")
-        .orderBy(col("ratio_micro").desc, col("term").asc)
-      rated.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 3)
-        .select(col("source"), col("rank"), col("term"), col("tf_s"),
-          col("ratio_micro"))
-    }),
-
-    "q_percentile_cont" -> ((s, dir) => {
-      // exact interpolated quartiles (ANSI percentile_cont semantics)
-      // per group, all-integer: position (n−1)·k/4 splits into a rank
-      // and a /4 remainder, the two straddling rows are picked by an
-      // integral predicate off the range-partitioned exact rank, and
-      // the interpolation (v_lo·(4−rem) + v_hi·rem)·1e6 div 4 never
-      // touches a float. The exact companion to q_approx's sketch.
-      val base = T(s, dir, "lineitem")
-        .select(col("l_returnflag").as("g"),
-          round(col("l_extendedprice") * 100).cast("long").as("v"),
-          col("l_orderkey"), col("l_linenumber"))
-      val ranked = ext.Ranks.groupedRank(base, "g",
-        Seq(col("v"), col("l_orderkey"), col("l_linenumber")), "rn")
-      val ks = s.createDataFrame(Seq(Tuple1(1L), Tuple1(2L), Tuple1(3L))).toDF("k")
-      ranked.crossJoin(broadcast(ks))
-        .withColumn("lo", expr("((rn_n - 1) * k) div 4 + 1"))
-        .withColumn("rem", expr("((rn_n - 1) * k) % 4"))
-        .filter(col("rn") === col("lo") || col("rn") === col("lo") + 1L)
-        .groupBy(col("g").as("l_returnflag"), col("k").as("quartile"))
-        .agg(max(when(col("rn") === col("lo"), col("v"))).as("v_lo"),
-          max(when(col("rn") === col("lo") + 1L, col("v"))).as("v_hi"),
-          max("rem").as("rem"))
-        .select(col("l_returnflag"), col("quartile"),
-          expr("(v_lo * (4 - rem) * 1000000 + coalesce(v_hi, 0) * rem * 1000000) div 4")
-            .as("pct_micro"))
-    }),
-
-    "q_cramers_v" -> ((s, dir) => {
-      // Cramér's V association between return flag and line status: the
-      // contingency χ² as an exact sum of integral micro terms
-      // Σ (o·n − r·c)²·1e6 div (n·r·c), then the only float step is the
-      // final correctly-rounded sqrt. Bounded 3×2 cell domain — one hash
-      // agg plus broadcast marginals.
-      val cells = T(s, dir, "lineitem")
-        .groupBy(col("l_returnflag").as("rf"), col("l_linestatus").as("ls"))
-        .agg(count(lit(1)).as("o"))
-        .localCheckpoint(true) // marginals + terms read one frame
-      val rT = cells.groupBy("rf").agg(sum("o").as("r"))
-      val cT = cells.groupBy("ls").agg(sum("o").as("c"))
-      val nT = cells.agg(sum("o").as("n"),
-        countDistinct("rf").as("nr"), countDistinct("ls").as("nc"))
-      // FULL r×c grid — zero cells carry χ² mass (o=0 term = r·c/n)
-      rT.crossJoin(cT).join(cells, Seq("rf", "ls"), "left")
-        .withColumn("o", coalesce(col("o"), lit(0L)))
-        .crossJoin(broadcast(nT))
-        .select(col("n"), col("nr"), col("nc"),
-          expr("""((CAST(o AS DECIMAL(38,0)) * n - CAST(r AS DECIMAL(38,0)) * c)
-                 * (CAST(o AS DECIMAL(38,0)) * n - CAST(r AS DECIMAL(38,0)) * c)
-                 * 1000000) div (CAST(n AS DECIMAL(38,0)) * r * c)""").as("term_micro"))
-        .groupBy()
-        .agg(max("n").as("n"), sum("term_micro").as("chi2_micro"),
-          max(expr("least(nr - 1, nc - 1)")).as("m"))
-        .select(col("n"), col("chi2_micro"),
-          expr("""CAST(round(sqrt(CAST(chi2_micro AS DOUBLE) / 1000000
-                 / CAST(n * m AS DOUBLE)) * 1000000) AS BIGINT)""").as("v_micro"))
-    }),
-
-    "ev_bounce" -> ((s, dir) => {
-      // daily bounce rate: 30-minute-gap sessions (per-user windows
-      // only), a session bounces when it holds exactly one event;
-      // shares are exact integral micro by session-start day.
-      import org.apache.spark.sql.expressions.Window
-      val wUser = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val sess = events(s, dir).select(col("user_id"), col("ts"), col("event_id"))
-        .withColumn("gap_s",
-          unix_timestamp(col("ts")) - unix_timestamp(lag(col("ts"), 1).over(wUser)))
-        .withColumn("new_sess",
-          when(col("gap_s").isNull || col("gap_s") > 1800L, 1L).otherwise(0L))
-        .withColumn("sess", sum("new_sess").over(
-          wUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id", "sess")
-        .agg(count(lit(1)).as("n_events"), min(col("ts")).as("t0"))
-      sess.groupBy(to_date(col("t0")).as("d"))
-        .agg(count(lit(1)).as("n_sessions"),
-          sum(when(col("n_events") === 1L, 1L).otherwise(0L)).as("n_bounce"))
-        .withColumn("bounce_micro", expr("(n_bounce * 1000000) div n_sessions"))
-    }),
-
-    "q_movers" -> ((s, dir) => {
-      // top-20 revenue movers between 1997 and 1998: one conditional-
-      // aggregation pass per part, absolute-delta ranking via
-      // TakeOrderedAndProject (never a full sort). The YoY drill-down
-      // companion to q_yoy's aggregate view.
-      T(s, dir, "lineitem")
-        .filter(year(col("l_shipdate")).isin(1997, 1998))
-        .groupBy(col("l_partkey"))
-        .agg(sum(when(year(col("l_shipdate")) === 1997,
-            round(col("l_extendedprice") * 100).cast("long")).otherwise(0L)).as("rev97_c"),
-          sum(when(year(col("l_shipdate")) === 1998,
-            round(col("l_extendedprice") * 100).cast("long")).otherwise(0L)).as("rev98_c"))
-        .withColumn("delta_c", col("rev98_c") - col("rev97_c"))
-        .orderBy(abs(col("delta_c")).desc, col("l_partkey").asc)
-        .limit(20)
-    }),
-
-    "stream_srm" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // STREAMING sample-ratio-mismatch guardrail: the per-arm counts
-      // accumulate over a file stream (complete mode; counts are
-      // order-free and mergeable so streamed ≡ batch however the source
-      // micro-batches), and the χ² readout runs on the tiny in-memory
-      // arm table after the stream drains. The continuous face of
-      // ev_srm — the monitor that halts an experiment mid-flight.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
-        .select((expr("CAST(get_json_object(props, '$.k') AS BIGINT)") % 2).as("arm"))
-      val counts = stream.groupBy("arm").agg(count(lit(1)).as("o"))
-      s.catalog.dropTempView("graft_stream_srm")
-      val q = counts.writeStream.format("memory").queryName("graft_stream_srm")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val arms = s.table("graft_stream_srm")
-      val tot = arms.agg(sum("o").as("t"), count(lit(1)).as("v"))
-      arms.crossJoin(broadcast(tot))
-        .select(col("o"), col("t"), col("v"),
-          expr("((o * v - t) * (o * v - t) * 1000000) div (t * v)").as("term_micro"))
-        .groupBy()
-        .agg(max("v").as("n_variants"), max("t").as("n_total"),
-          sum("term_micro").as("chi2_micro"))
-        .withColumn("crit_micro", lit(3841459L))
-        .withColumn("srm_detected", col("chi2_micro") > col("crit_micro"))
-    }),
-
-    "q_calibration" -> ((s, dir) => {
-      // calibration / reliability table: quantity as a score whose
-      // implied probability is qty/50, compared to the observed 'R'
-      // share per score bucket — predicted and observed both exact
-      // integral micro, the gap signed. One hash agg to the ≤50-value
-      // domain; the companion to q_auc (discrimination) and q_pr_curve.
-      T(s, dir, "lineitem")
-        .select(col("l_quantity").cast("long").as("qty"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("pos"))
-        .groupBy("qty")
-        .agg(count(lit(1)).as("n"), sum("pos").as("n_pos"))
-        .select(col("qty"), col("n"), col("n_pos"),
-          (col("qty") * 20000L).as("pred_micro"),
-          expr("(n_pos * 1000000) div n").as("obs_micro"),
-          (col("qty") * 20000L - expr("(n_pos * 1000000) div n")).as("gap_micro"))
-    }),
-
-    "q_isotonic" -> ((s, dir) => {
-      // isotonic (PAVA) calibration of the q_calibration reliability
-      // table, via the exact minimax closed form: on the bounded score
-      // domain (≤50 qty values) the pooled-adjacent-violators fit at
-      // score i equals max_{j≤i} min_{k≥i} mean(obs over [j..k]) — so
-      // three bounded self-joins over a ≤50-row frame replace the
-      // sequential pooling loop, with NO driver fold and nothing that
-      // grows with table size (the only full-data pass is the first
-      // hash agg). Interval means are micro-rounded integer divisions
-      // BEFORE the minimax (the definitional rounding, mirrored in the
-      // oracle), keeping every comparison engine-exact. The calibrator
-      // q_calibration diagnoses and q_monotonicity audits.
-      import org.apache.spark.sql.expressions.Window
-      val cal = T(s, dir, "lineitem")
-        .select(col("l_quantity").cast("long").as("qty"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("pos"))
-        .groupBy("qty")
-        .agg(count(lit(1)).as("n"), sum("pos").as("n_pos"))
-      val w = Window.orderBy("qty")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val pref = cal
-        .withColumn("cn", sum("n").over(w))
-        .withColumn("cp", sum("n_pos").over(w))
-        .localCheckpoint(true) // ≤50 rows, read by both join sides
-      val ivl = pref.as("j").join(pref.as("k"), col("j.qty") <= col("k.qty"))
-        .select(col("j.qty").as("jq"), col("k.qty").as("kq"),
-          (col("k.cp") - col("j.cp") + col("j.n_pos")).cast("decimal(38,0)").as("sp"),
-          (col("k.cn") - col("j.cn") + col("j.n")).as("sn"))
-        .select(col("jq"), col("kq"),
-          expr("CAST(sp * 1000000 div sn AS BIGINT)").as("avg_micro"))
-      val iso = cal.select(col("qty")).as("i")
-        .join(ivl.as("a"), col("a.jq") <= col("i.qty") && col("a.kq") >= col("i.qty"))
-        .groupBy(col("i.qty").as("qty"), col("a.jq").as("jq"))
-        .agg(min("avg_micro").as("mn"))
-        .groupBy("qty").agg(max("mn").as("iso_micro"))
-      cal.join(iso, "qty")
-        .select(col("qty"), col("n"), col("n_pos"),
-          expr("(n_pos * 1000000) div n").as("obs_micro"), col("iso_micro"))
-    }),
-
-    "q_theil" -> ((s, dir) => {
-      // Theil T inequality index over per-customer revenue: each
-      // customer's (x/μ)·ln(x/μ) term is micro-rounded PER ROW (the
-      // q_lift discipline — float work confined to one correctly-
-      // rounded expression per row, then order-free integer summation),
-      // so the aggregate is deterministic under any partitioning.
-      // Completes the inequality family with q_gini and q_lorenz.
-      val rev = T(s, dir, "orders")
-        .groupBy(col("o_custkey").as("c"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("x"))
-        .localCheckpoint(true) // totals + per-row terms read one frame
-      val tot = rev.agg(sum("x").as("xt"), count(lit(1)).as("n"))
-      rev.crossJoin(broadcast(tot))
-        .select(col("n"),
-          expr("""CAST(round(CAST(x AS DOUBLE) * n / xt
-                 * ln(CAST(x AS DOUBLE) * n / xt) * 1000000) AS BIGINT)""")
-            .as("term_micro"))
-        .groupBy()
-        .agg(max("n").as("n_customers"),
-          expr("CAST(sum(term_micro) div max(n) AS BIGINT)").as("theil_micro"))
-    }),
-
-    "q_runs_test" -> ((s, dir) => {
-      // Wald–Wolfowitz runs test on the daily-revenue sign sequence:
-      // above/below the exact histogram median (ties at the median
-      // dropped, per the test's definition), runs counted by one lag
-      // window over the bounded day domain, then the z statistic from
-      // exact integer (n1, n2, R) through mirrored IEEE ops. The
-      // randomness audit that pairs with q_acf's autocorrelation view.
-      import org.apache.spark.sql.expressions.Window
-      val daily = T(s, dir, "lineitem")
-        .groupBy(to_date(col("l_shipdate")).as("d"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("x"))
-        .localCheckpoint(true) // median histogram + sign sequence
-      val h = daily.groupBy("x").agg(count(lit(1)).as("c"))
-      val wch = Window.orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val med = h.withColumn("cum", sum("c").over(wch))
-        .withColumn("n", sum("c").over(Window.partitionBy()))
-        .agg(min(when(col("cum") * 2 >= col("n"), col("x"))).as("med"))
-      val signs = daily.crossJoin(broadcast(med))
-        .filter(col("x") =!= col("med"))
-        .select(col("d"), (col("x") > col("med")).as("up"))
-      val wd = Window.orderBy("d")
-      val runs = signs
-        .withColumn("chg", when(lag(col("up"), 1).over(wd).isNull ||
-          lag(col("up"), 1).over(wd) =!= col("up"), 1L).otherwise(0L))
-        .agg(sum(when(col("up"), 1L).otherwise(0L)).as("n1"),
-          sum(when(!col("up"), 1L).otherwise(0L)).as("n2"),
-          sum("chg").as("r"))
-      runs.select(col("n1"), col("n2"), col("r").as("runs"),
-        expr("""CAST(round((CAST(r AS DOUBLE)
-               - (1.0 + 2.0 * n1 * n2 / (n1 + n2)))
-               / sqrt(2.0 * n1 * n2 * (2.0 * n1 * n2 - (n1 + n2))
-                      / (CAST(n1 + n2 AS DOUBLE) * (n1 + n2) * (n1 + n2 - 1)))
-               * 1000000) AS BIGINT)""").as("z_micro"))
-    }),
-
-    "ev_flap" -> ((s, dir) => {
-      // alert-flap audit over the hourly SLO-burn series: transition
-      // count and the share of alert episodes lasting exactly one hour
-      // (the ones a 2-hour suppression window would swallow). Lag/lead
-      // windows run over the bounded hour domain only.
-      import org.apache.spark.sql.expressions.Window
-      val hourly = events(s, dir)
-        .groupBy(date_trunc("hour", col("ts")).as("hour"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_err"))
-        .withColumn("alert", expr("(n_err * 100000000) div n") > 14400000L)
-      val w = Window.orderBy("hour")
-      hourly
-        .withColumn("p", lag(col("alert"), 1).over(w))
-        .withColumn("nx", lead(col("alert"), 1).over(w))
-        .agg(count(lit(1)).as("n_hours"),
-          sum(when(col("alert"), 1L).otherwise(0L)).as("n_alert_hours"),
-          sum(when(col("p").isNotNull && col("p") =!= col("alert"), 1L)
-            .otherwise(0L)).as("n_transitions"),
-          sum(when(col("alert") &&
-              (col("p").isNull || !col("p")) && (col("nx").isNull || !col("nx")), 1L)
-            .otherwise(0L)).as("n_one_hour_blips"))
-    }),
-
-    "q_trimmed" -> ((s, dir) => {
-      // 5 % trimmed and winsorized means per return flag, all-integer:
-      // k = ⌊0.05·n⌋ rows drop (trim) or clamp (winsorize) at each end,
-      // boundary values picked by rank equality off the range-
-      // partitioned exact rank, and the winsorized sum reassembled as
-      // inner + k·lo + k·hi without a second pass.
-      val base = T(s, dir, "lineitem")
-        .select(col("l_returnflag").as("g"),
-          round(col("l_extendedprice") * 100).cast("long").as("v"),
-          col("l_orderkey"), col("l_linenumber"))
-      val ranked = ext.Ranks.groupedRank(base, "g",
-        Seq(col("v"), col("l_orderkey"), col("l_linenumber")), "rn")
-      ranked.withColumn("k", expr("(rn_n * 5) div 100"))
-        .groupBy(col("g").as("l_returnflag"))
-        .agg(max("rn_n").as("n"), max("k").as("k"),
-          sum(when(col("rn") > col("k") && col("rn") <= col("rn_n") - col("k"),
-            col("v"))).as("inner_sum"),
-          max(when(col("rn") === col("k") + 1L, col("v"))).as("v_lo"),
-          max(when(col("rn") === col("rn_n") - col("k"), col("v"))).as("v_hi"))
-        .select(col("l_returnflag"), col("n"), col("k"),
-          expr("(inner_sum * 1000000) div (n - 2 * k)").as("trimmed_micro"),
-          expr("((inner_sum + k * v_lo + k * v_hi) * 1000000) div n").as("winsor_micro"))
-    }),
-
-    "q_ttest" -> ((s, dir) => {
-      // Welch's two-sample t between returned and kept prices: one
-      // conditional Gram pass (the q_cohend shape), then t and the
-      // Welch–Satterthwaite df from mirrored IEEE expressions over the
-      // exact integer sums — variances enter as their rational
-      // numerator/denominator pairs, never a float accumulation.
-      T(s, dir, "lineitem")
-        .select((col("l_returnflag") === "R").as("r"),
-          round(col("l_extendedprice") * 100).cast("decimal(38,0)").as("v"))
-        .agg(
-          sum(when(col("r"), 1L).otherwise(0L)).cast("decimal(38,0)").as("n1"),
-          sum(when(col("r"), col("v"))).as("s1"),
-          sum(when(col("r"), expr("v * v"))).as("ss1"),
-          sum(when(!col("r"), 1L).otherwise(0L)).cast("decimal(38,0)").as("n2"),
-          sum(when(!col("r"), col("v"))).as("s2"),
-          sum(when(!col("r"), expr("v * v"))).as("ss2"))
-        .select(col("n1"), col("n2"),
-          expr("""CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
-                 - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)""").as("dm"),
-          expr("""CAST(n1 * ss1 - s1 * s1 AS DOUBLE)
-                 / (CAST(n1 AS DOUBLE) * CAST(n1 AS DOUBLE) * CAST(n1 - 1 AS DOUBLE))""")
-            .as("a1"), // v1/n1 — the Welch per-arm variance share
-          expr("""CAST(n2 * ss2 - s2 * s2 AS DOUBLE)
-                 / (CAST(n2 AS DOUBLE) * CAST(n2 AS DOUBLE) * CAST(n2 - 1 AS DOUBLE))""")
-            .as("a2"))
-        .select(col("n1").cast("long").as("n_returned"),
-          col("n2").cast("long").as("n_kept"),
-          expr("CAST(round(dm / sqrt(a1 + a2) * 1000000) AS BIGINT)").as("t_micro"),
-          expr("""CAST(round((a1 + a2) * (a1 + a2)
-                 / (a1 * a1 / CAST(n1 - 1 AS DOUBLE)
-                    + a2 * a2 / CAST(n2 - 1 AS DOUBLE)) * 1000000) AS BIGINT)""")
-            .as("df_micro"))
-    }),
-
-    "q_spearman" -> ((s, dir) => {
-      // Spearman rank correlation between quantity and price with
-      // exact tie handling: average ranks enter as the INTEGER doubled
-      // rank 2·cum − c + 1 (midrank ×2 — Pearson is scale-invariant),
-      // built from per-value histograms + running counts over each
-      // value domain (the q_mad shape), then one DECIMAL Gram pass and
-      // the correctly-rounded final sqrt.
-      import org.apache.spark.sql.expressions.Window
-      val base = T(s, dir, "lineitem")
-        .select(col("l_quantity").cast("long").as("xv"),
-          round(col("l_extendedprice") * 100).cast("long").as("yv"))
-        .localCheckpoint(true) // feeds both histograms AND the probe
-      def dblRanks(col0: String): DataFrame = {
-        val h = base.groupBy(col0).agg(count(lit(1)).as("c"))
-        val wc = Window.orderBy(col0)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        h.withColumn("cum", sum("c").over(wc))
-          .select(col(col0), expr("2 * cum - c + 1").as(s"d_$col0"))
-      }
-      base.join(dblRanks("xv"), "xv").join(dblRanks("yv"), "yv")
-        .select(col("d_xv").cast("decimal(38,0)").as("x"),
-          col("d_yv").cast("decimal(38,0)").as("y"))
-        .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum("x").as("sx"), sum("y").as("sy"), sum(expr("x * x")).as("sxx"),
-          sum(expr("y * y")).as("syy"), sum(expr("x * y")).as("sxy"))
-        .select(col("n").cast("long").as("n"),
-          expr("""CAST(round(CAST(n * sxy - sx * sy AS DOUBLE)
-                 / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                    * sqrt(CAST(n * syy - sy * sy AS DOUBLE))) * 1000000)
-                 AS BIGINT)""").as("rho_micro"))
-    }),
-
-    "ta_kfold" -> ((s, dir) => {
-      // exact stratified k-fold assignment: docs rank within their
-      // source by seeded md5 order (range-partitioned rank — source is
-      // a LOW-cardinality stratum key, so a plain partitioned window
-      // would serialize each stratum), fold = (rank−1) mod 5 — every
-      // stratum splits into folds whose sizes differ by at most one,
-      // reproducibly. The cross-validation face of ta_group_split.
-      val d = T(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          md5(concat(lit("fold0:"), col("doc_id").cast("string"))).as("h"))
-      val ranked = ext.Ranks.groupedRank(d, "source",
-        Seq(col("h").asc, col("doc_id").asc), "rn")
-      ranked.select(col("doc_id"), col("source"),
-        expr("(rn - 1) % 5").as("fold"))
-    }),
-
-    "q_anova" -> ((s, dir) => {
-      // one-way ANOVA F across the three return flags: per-group Gram
-      // sums (one hash agg), then between/within sums of squares as
-      // PER-GROUP micro-rounded integers (the q_lift discipline — the
-      // only float work is one correctly-rounded expression per group,
-      // summed order-free), and F from the integer SS totals. The
-      // k-group extension of q_ttest.
-      val g = T(s, dir, "lineitem")
-        .select(col("l_returnflag").as("grp"),
-          round(col("l_extendedprice") * 100).cast("decimal(38,0)").as("v"))
-        .groupBy("grp")
-        .agg(count(lit(1)).cast("decimal(38,0)").as("ng"),
-          sum("v").as("sg"), sum(expr("v * v")).as("ssg"))
-        .localCheckpoint(true) // totals + per-group terms read one frame
-      val tot = g.agg(sum("ng").as("n"), sum("sg").as("st"),
-        count(lit(1)).cast("decimal(38,0)").as("k"))
-      g.crossJoin(broadcast(tot))
-        .select(col("n"), col("k"),
-          expr("""CAST(round(CAST(ng AS DOUBLE)
-                 * (CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE)
-                    - CAST(st AS DOUBLE) / CAST(n AS DOUBLE))
-                 * (CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE)
-                    - CAST(st AS DOUBLE) / CAST(n AS DOUBLE))) AS BIGINT)""")
-            .as("ssb_c2"), // whole-c² granularity: ×1e6 would overflow
-          expr("""CAST(round(CAST(ssg AS DOUBLE)
-                 - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE))
-                 AS BIGINT)""").as("ssw_c2"))
-        .groupBy()
-        .agg(max(col("n").cast("long")).as("n"), max(col("k").cast("long")).as("k"),
-          sum("ssb_c2").as("ssb_c2"), sum("ssw_c2").as("ssw_c2"))
-        .select(col("n"), col("k"), col("ssb_c2"), col("ssw_c2"),
-          expr("""CAST(round(CAST(ssb_c2 AS DOUBLE) / CAST(k - 1 AS DOUBLE)
-                 / (CAST(ssw_c2 AS DOUBLE) / CAST(n - k AS DOUBLE))
-                 * 1000000) AS BIGINT)""").as("f_micro"))
-    }),
-
-    "q_kruskal" -> ((s, dir) => {
-      // Kruskal–Wallis H (nonparametric one-way ANOVA) of price across
-      // the three return flags: global doubled midranks 2·cum−c+1 from
-      // ONE value histogram (the q_spearman machinery — ties handled
-      // exactly as average ranks ×2), per-group doubled-rank sums as
-      // DECIMAL integers, each group's R²/n term micro-rounded ONCE so
-      // the Σ over groups is order-free (the q_anova discipline), plus
-      // the exact Σ(t³−t) tie correction. The rank-based sibling of
-      // q_anova for when normality can't be assumed.
-      import org.apache.spark.sql.expressions.Window
-      val base = T(s, dir, "lineitem")
-        .select(col("l_returnflag").as("grp"),
-          round(col("l_extendedprice") * 100).cast("long").as("v"))
-        .localCheckpoint(true) // feeds the histogram AND the probe
-      val h = base.groupBy("v").agg(count(lit(1)).as("c"))
-        .localCheckpoint(true) // feeds ranks AND tie correction
-      val wc = Window.orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val d = h.withColumn("cum", sum("c").over(wc))
-        .select(col("v"), expr("2 * cum - c + 1").as("dr"))
-      val g = base.join(d, "v")
-        .groupBy("grp")
-        .agg(count(lit(1)).cast("decimal(38,0)").as("ng"),
-          sum(col("dr").cast("decimal(38,0)")).as("sd"))
-        .select(col("ng"),
-          expr("""CAST(round(CAST(sd AS DOUBLE) * CAST(sd AS DOUBLE) / 4
-                 / CAST(ng AS DOUBLE)) AS BIGINT)""").as("term"))
-      val ties = h.agg(
-        sum(expr("CAST(c AS DECIMAL(38,0)) * c * c - c")).as("t3t"))
-      g.agg(sum(col("ng")).cast("long").as("n"), count(lit(1)).as("k"),
-          sum("term").as("sum_term"))
-        .crossJoin(broadcast(ties))
-        .select(col("n"), col("k"), col("sum_term"),
-          col("t3t").cast("long").as("tie_sum"),
-          expr("""CAST(round((12.0 * CAST(sum_term AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * CAST(n + 1 AS DOUBLE))
-                 - 3.0 * CAST(n + 1 AS DOUBLE)) * 1000000) AS BIGINT)""")
-            .as("h_micro"),
-          expr("""CAST(round((12.0 * CAST(sum_term AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * CAST(n + 1 AS DOUBLE))
-                 - 3.0 * CAST(n + 1 AS DOUBLE))
-                 / (1.0 - CAST(t3t AS DOUBLE)
-                    / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                       - CAST(n AS DOUBLE)))
-                 * 1000000) AS BIGINT)""").as("h_adj_micro"))
-    }),
-
-    "q_levene" -> ((s, dir) => {
-      // Brown–Forsythe variance-equality test (median-centered Levene):
-      // per-group nearest-rank medians from value histograms (the q_mad
-      // machinery — windows run over per-group DISTINCT VALUES, a
-      // bounded domain), absolute deviations, then the q_anova F
-      // machinery on the deviations. "Are price spreads equal across
-      // return flags?" — the homoscedasticity gate read before trusting
-      // any pooled-variance test (q_ttest/q_anova). Per-group SS terms
-      // are rounded once and summed order-free, same as q_anova.
-      import org.apache.spark.sql.expressions.Window
-      val v = T(s, dir, "lineitem")
-        .select(col("l_returnflag").as("grp"),
-          round(col("l_extendedprice") * 100).cast("long").as("v"))
-        .localCheckpoint(true) // feeds the histogram AND the deviations
-      val h1 = v.groupBy("grp", "v").agg(count(lit(1)).as("c"))
-      val wg = Window.partitionBy("grp").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = h1.withColumn("cum", sum("c").over(wg))
-        .withColumn("n", sum("c").over(Window.partitionBy("grp")))
-      val med = cum.groupBy("grp").agg(
-        min(when(expr("cum >= greatest(1, CAST(ceil(CAST(0.5 AS DOUBLE) * n) AS BIGINT))"),
-          col("v"))).as("med"))
-      val g = v.join(med, "grp")
-        .select(col("grp"), abs(col("v") - col("med")).cast("decimal(38,0)").as("d"))
-        .groupBy("grp")
-        .agg(count(lit(1)).cast("decimal(38,0)").as("ng"),
-          sum("d").as("sg"), sum(expr("d * d")).as("ssg"))
-        .localCheckpoint(true) // totals + per-group terms read one frame
-      val tot = g.agg(sum("ng").as("n"), sum("sg").as("st"),
-        count(lit(1)).cast("decimal(38,0)").as("k"))
-      g.crossJoin(broadcast(tot))
-        .select(col("n"), col("k"),
-          expr("""CAST(round(CAST(ng AS DOUBLE)
-                 * (CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE)
-                    - CAST(st AS DOUBLE) / CAST(n AS DOUBLE))
-                 * (CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE)
-                    - CAST(st AS DOUBLE) / CAST(n AS DOUBLE))) AS BIGINT)""")
-            .as("ssb_c2"),
-          expr("""CAST(round(CAST(ssg AS DOUBLE)
-                 - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE))
-                 AS BIGINT)""").as("ssw_c2"))
-        .groupBy()
-        .agg(max(col("n").cast("long")).as("n"), max(col("k").cast("long")).as("k"),
-          sum("ssb_c2").as("ssb_c2"), sum("ssw_c2").as("ssw_c2"))
-        .select(col("n"), col("k"), col("ssb_c2"), col("ssw_c2"),
-          expr("""CAST(round(CAST(ssb_c2 AS DOUBLE) / CAST(k - 1 AS DOUBLE)
-                 / (CAST(ssw_c2 AS DOUBLE) / CAST(n - k AS DOUBLE))
-                 * 1000000) AS BIGINT)""").as("f_micro"))
-    }),
-
-    "q_friedman" -> ((s, dir) => {
-      // Friedman rank test (nonparametric repeated-measures ANOVA): does
-      // any return flag consistently out-earn the others DAY AFTER DAY?
-      // Blocks = ship days with all k flags present (complete blocks
-      // only, the test's requirement), treatment value = the day x flag
-      // revenue cell. Doubled midranks WITHIN each day come from a
-      // per-day value histogram (window partitioned by day — a k-row
-      // frame, never global); rank sums and their squares stay exact
-      // DECIMAL integers (day-domain bound: Rj2² < 2⁵³ even at 100x the
-      // day range), so the only double math is the final statistic.
-      // Tie-corrected variant divides by 1 − Σ(t³−t)/(n·k·(k²−1)),
-      // mirroring q_kruskal's discipline.
-      import org.apache.spark.sql.expressions.Window
-      val cells = T(s, dir, "lineitem")
-        .groupBy(col("l_shipdate").as("d"), col("l_returnflag").as("grp"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("v"))
-      val complete = cells.groupBy("d").agg(count(lit(1)).as("kk"))
-        .filter(col("kk") === 3).select("d")
-      val cc = cells.join(complete, "d").localCheckpoint(true) // hist + probe
-      val h = cc.groupBy("d", "v").agg(count(lit(1)).as("c"))
-      val wd = Window.partitionBy("d").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val dr = h.withColumn("cum", sum("c").over(wd))
-        .select(col("d"), col("v"), expr("2 * cum - c + 1").as("dr"),
-          expr("CAST(c AS DECIMAL(38,0)) * c * c - c").as("t3t"))
-      val g = cc.join(dr.select("d", "v", "dr"), Seq("d", "v"))
-        .groupBy("grp")
-        .agg(sum(col("dr").cast("decimal(38,0)")).as("rj2"))
-        .select(expr("rj2 * rj2").as("rj2sq"))
-      val ties = dr.agg(sum("t3t").as("tsum"))
-      val nb = complete.agg(count(lit(1)).cast("long").as("n"))
-      g.agg(sum("rj2sq").as("sum_rj2sq"), count(lit(1)).as("k"))
-        .crossJoin(broadcast(nb)).crossJoin(broadcast(ties))
-        .select(col("n"), col("k"),
-          col("sum_rj2sq").cast("long").as("sum_rj2sq"),
-          col("tsum").cast("long").as("tie_sum"),
-          expr("""CAST(round((12.0 * (CAST(sum_rj2sq AS DOUBLE) / 4.0)
-                 / (CAST(n AS DOUBLE) * CAST(k AS DOUBLE) * CAST(k + 1 AS DOUBLE))
-                 - 3.0 * CAST(n AS DOUBLE) * CAST(k + 1 AS DOUBLE))
-                 * 1000000) AS BIGINT)""").as("chi2_micro"),
-          expr("""CAST(round((12.0 * (CAST(sum_rj2sq AS DOUBLE) / 4.0)
-                 / (CAST(n AS DOUBLE) * CAST(k AS DOUBLE) * CAST(k + 1 AS DOUBLE))
-                 - 3.0 * CAST(n AS DOUBLE) * CAST(k + 1 AS DOUBLE))
-                 / (1.0 - CAST(tsum AS DOUBLE)
-                    / (CAST(n AS DOUBLE) * CAST(k AS DOUBLE)
-                       * (CAST(k AS DOUBLE) * CAST(k AS DOUBLE) - 1.0)))
-                 * 1000000) AS BIGINT)""").as("chi2_adj_micro"))
-    }),
-
-    "q_partial_corr" -> ((s, dir) => {
-      // partial correlation of quantity and price controlling for
-      // discount: ONE Gram pass yields all three pairwise correlations
-      // (mirrored IEEE over exact DECIMAL sums), then
-      // r_xy·z = (r_xy − r_xz·r_yz)/√((1−r_xz²)(1−r_yz²)). The
-      // multivariate companion to q_corr's matrix.
-      T(s, dir, "lineitem")
-        .select(col("l_quantity").cast("decimal(38,0)").as("x"),
-          round(col("l_extendedprice") * 100).cast("decimal(38,0)").as("y"),
-          round(col("l_discount") * 100).cast("decimal(38,0)").as("z"))
-        .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum("x").as("sx"), sum("y").as("sy"), sum("z").as("sz"),
-          sum(expr("x * x")).as("sxx"), sum(expr("y * y")).as("syy"),
-          sum(expr("z * z")).as("szz"), sum(expr("x * y")).as("sxy"),
-          sum(expr("x * z")).as("sxz"), sum(expr("y * z")).as("syz"))
-        .select(col("n").cast("long").as("n"),
-          expr("""CAST(n * sxy - sx * sy AS DOUBLE)
-                 / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                    * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))""").as("rxy"),
-          expr("""CAST(n * sxz - sx * sz AS DOUBLE)
-                 / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                    * sqrt(CAST(n * szz - sz * sz AS DOUBLE)))""").as("rxz"),
-          expr("""CAST(n * syz - sy * sz AS DOUBLE)
-                 / (sqrt(CAST(n * syy - sy * sy AS DOUBLE))
-                    * sqrt(CAST(n * szz - sz * sz AS DOUBLE)))""").as("ryz"))
-        .select(col("n"),
-          expr("CAST(round(rxy * 1000000) AS BIGINT)").as("rxy_micro"),
-          expr("""CAST(round((rxy - rxz * ryz)
-                 / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz))
-                 * 1000000) AS BIGINT)""").as("rxy_given_z_micro"))
-    }),
-
-    "q_freshness" -> ((s, dir) => {
-      // data-freshness audit against a fixed as-of instant: per feed,
-      // newest event time, staleness, and a breach flag against the
-      // feed's SLA — the landing-zone monitor an orchestrator polls.
-      // One column-pruned max per table; the as-of is a LITERAL so the
-      // audit is replayable (a wall clock would never hash-match).
-      val asof = "1998-12-31 00:00:00"
-      def feed(name: String, df: DataFrame, tsCol: org.apache.spark.sql.Column,
-               slaHours: Long) =
-        df.agg(count(lit(1)).as("n_rows"), max(tsCol).as("max_ts"))
-          .select(lit(name).as("feed"), col("n_rows"), col("max_ts"),
-            (unix_timestamp(lit(asof).cast("timestamp"))
-              - unix_timestamp(col("max_ts"))).as("lag_s"),
-            lit(slaHours * 3600L).as("sla_s"))
-          .withColumn("breached", col("lag_s") > col("sla_s"))
-      feed("orders", T(s, dir, "orders"), col("o_orderdate"), 24L * 200)
-        .unionByName(feed("lineitem", T(s, dir, "lineitem"), col("l_shipdate"), 24L * 200))
-    }),
-
-    "q_checksum_parts" -> ((s, dir) => {
-      // partition-level reconciliation checksums: q_checksum's 60-bit
-      // xor fold keyed by order year, so two replicas locate a divergent
-      // PARTITION by exchanging one row per year instead of rescanning
-      // the table — the incremental face of the anti-entropy audit.
-      T(s, dir, "orders")
-        .select(year(col("o_orderdate")).cast("long").as("part_year"),
-          concat_ws("|", col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-            round(col("o_totalprice") * 100).cast("long"),
-            col("o_orderdate").cast("date").cast("string")).as("r"))
-        .groupBy("part_year")
-        .agg(count(lit(1)).as("n_rows"),
-          expr("bit_xor(CAST(conv(substring(md5(r), 1, 15), 16, 10) AS BIGINT))")
-            .as("checksum"))
-    }),
-
-    "q_histogram2d" -> ((s, dir) => {
-      // 2-D density grid (quantity × price): fixed-width integer bins on
-      // both axes, exact cell shares — one hash agg to the bounded
-      // 10×10 domain, the joint-distribution view whose marginals are
-      // q_histogram. Fixed bin edges, no data-dependent quantiles.
-      val cells = T(s, dir, "lineitem")
-        .select(expr("least(CAST(l_quantity AS BIGINT) div 5, 9)").as("qty_bin"),
-          expr("least(CAST(round(l_extendedprice * 100) AS BIGINT) div 1000000, 9)")
-            .as("price_bin"))
-        .groupBy("qty_bin", "price_bin").agg(count(lit(1)).as("n"))
-      val tot = cells.agg(sum("n").as("total"))
-      cells.crossJoin(broadcast(tot))
-        .select(col("qty_bin"), col("price_bin"), col("n"),
-          expr("(n * 1000000) div total").as("share_micro"))
-    }),
-
-    "q_tukey" -> ((s, dir) => {
-      // Tukey IQR fences per return flag: the exact interpolated
-      // quartiles (q_percentile_cont's machinery) become per-group
-      // fence scalars lo = q1 − 1.5·IQR, hi = q3 + 1.5·IQR in micro
-      // units (1.5 as the integral 3/2), broadcast back over the rows —
-      // the EDA outlier flag whose cutoffs a box plot draws. Output is
-      // the per-group audit summary, not the row stream.
-      val base = T(s, dir, "lineitem")
-        .select(col("l_returnflag").as("g"),
-          round(col("l_extendedprice") * 100).cast("long").as("v"),
-          col("l_orderkey"), col("l_linenumber"))
-        .localCheckpoint(true) // ranks + final flag scan share it
-      val ranked = ext.Ranks.groupedRank(base, "g",
-        Seq(col("v"), col("l_orderkey"), col("l_linenumber")), "rn")
-      val ks = s.createDataFrame(Seq(Tuple1(1L), Tuple1(3L))).toDF("k")
-      val quart = ranked.crossJoin(broadcast(ks))
-        .withColumn("lo", expr("((rn_n - 1) * k) div 4 + 1"))
-        .withColumn("rem", expr("((rn_n - 1) * k) % 4"))
-        .filter(col("rn") === col("lo") || col("rn") === col("lo") + 1L)
-        .groupBy("g", "k")
-        .agg(max(when(col("rn") === col("lo"), col("v"))).as("v_lo"),
-          max(when(col("rn") === col("lo") + 1L, col("v"))).as("v_hi"),
-          max("rem").as("rem"))
-        .select(col("g"), col("k"),
-          expr("(v_lo * (4 - rem) * 1000000 + coalesce(v_hi, 0) * rem * 1000000) div 4")
-            .as("q_micro"))
-      val fences = quart.groupBy("g")
-        .agg(max(when(col("k") === 1L, col("q_micro"))).as("q1"),
-          max(when(col("k") === 3L, col("q_micro"))).as("q3"))
-        .select(col("g"), col("q1"), col("q3"),
-          expr("q1 - (3 * (q3 - q1)) div 2").as("lo_micro"),
-          expr("q3 + (3 * (q3 - q1)) div 2").as("hi_micro"))
-      base.join(broadcast(fences), "g")
-        .groupBy(col("g").as("l_returnflag"))
-        .agg(count(lit(1)).as("n"), max("lo_micro").as("lo_micro"),
-          max("hi_micro").as("hi_micro"),
-          sum(when(col("v") * 1000000L < col("lo_micro"), 1L).otherwise(0L))
-            .as("n_below"),
-          sum(when(col("v") * 1000000L > col("hi_micro"), 1L).otherwise(0L))
-            .as("n_above"))
-    }),
-
-    "ta_cdc_chunk" -> ((s, dir) => {
-      // content-defined chunking (the restic/borg/LBFS dedup primitive):
-      // an 8-char polynomial rolling hash (base 31, integer, no mod
-      // bias) cuts a chunk boundary wherever H % 64 == 0, so chunk
-      // edges survive insertions that shift byte offsets — then chunks
-      // dedup corpus-wide by md5. All boundary math is ONE scalar
-      // array expression per doc (codegen, no shuffle until the chunk
-      // agg); the oracle replays hash, cuts, and chunks list-for-list.
-      // Production note: per-position substring is O(len) for non-ASCII
-      // — a native Expression would stream the codepoints once.
-      cdcChunks(T(s, dir, "documents"))
-        .select(col("chunk"), length(col("chunk")).cast("long").as("len"))
-        .groupBy("chunk").agg(count(lit(1)).as("occ"), max("len").as("len"))
-        .agg(sum("occ").as("n_chunks_total"), count(lit(1)).as("n_chunks_distinct"),
-          sum(expr("occ * len")).as("bytes_total"), sum("len").as("bytes_distinct"))
-        .select(col("n_chunks_total"), col("n_chunks_distinct"),
-          col("bytes_total"), col("bytes_distinct"),
-          expr("(bytes_distinct * 1000000) div bytes_total").as("stored_share_micro"))
-    }),
-
-    "dd_chunk_overlap" -> ((s, dir) => {
-      // chunk-level near-dup pairs — the storage-level detector LSH
-      // doesn't need: docs sharing ≥ 2 content-defined chunks (length
-      // ≥ 12, so a shared boundary word can't alias two docs) pair via
-      // an equi-join on the chunk value with a per-chunk doc cap (the
-      // LSH star-cap; caught-in-100-docs boilerplate chunks would
-      // otherwise go quadratic). Candidates are ids-only.
-      val ch = cdcChunks(T(s, dir, "documents"))
-        .filter(length(col("chunk")) >= 12)
-        .distinct()
-        .localCheckpoint(true) // cap agg + both join sides
-      val cap = ch.groupBy("chunk").agg(count(lit(1)).as("nd"))
-        .filter(col("nd") <= 100L).select("chunk")
-      val keyed = ch.join(cap, Seq("chunk"), "left_semi")
-      keyed.as("a").join(keyed.as("b"), Seq("chunk"))
-        .filter(col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 2L)
-    }),
-
-    "ta_neyman" -> ((s, dir) => {
-      // Neyman optimal stratified allocation: a 1000-doc sampling
-      // budget split ∝ N_h·σ_h of per-source doc lengths — per-stratum
-      // σ via the correctly-rounded sqrt of the exact integer variance,
-      // weights micro-rounded PER STRATUM (order-free), allocation by
-      // integral floor with the remainder reported (ta_apportion holds
-      // the largest-remainder machinery when seats must total exactly).
-      val g = T(s, dir, "documents")
-        .groupBy("source")
-        .agg(count(lit(1)).cast("decimal(38,0)").as("nh"),
-          sum(col("n_chars").cast("decimal(38,0)")).as("sh"),
-          sum(expr("CAST(n_chars AS DECIMAL(38,0)) * n_chars")).as("ssh"))
-        .localCheckpoint(true) // weights + total read one frame
-      val w = g.select(col("source"), col("nh").cast("long").as("n_docs"),
-        expr("""CAST(round(CAST(nh AS DOUBLE)
-               * sqrt(CAST(nh * ssh - sh * sh AS DOUBLE)
-                      / (CAST(nh AS DOUBLE) * CAST(nh - 1 AS DOUBLE)))
-               * 1000000) AS BIGINT)""").as("w_micro"))
-        .localCheckpoint(true)
-      val tot = w.agg(sum("w_micro").as("wt"))
-      w.crossJoin(broadcast(tot))
-        .select(col("source"), col("n_docs"), col("w_micro"),
-          expr("(1000 * w_micro) div wt").as("alloc"),
-          expr("(1000 * w_micro) % wt").as("remainder"))
-    }),
-
-    "ev_tier_migration" -> ((s, dir) => {
-      // customer value-tier migration between eras: per-customer
-      // revenue in 1995–97 vs 1998–2001 classed by FIXED literal
-      // thresholds (no quantile sort anywhere); inactive eras land in
-      // the 'none' tier — the transition matrix a CRM reads. ONE
-      // conditional-agg pass builds both eras; no self-join at all.
-      def tier(c: org.apache.spark.sql.Column) = when(c.isNull || c === 0L, "none")
-        .when(c >= 150000000L, "A").when(c >= 75000000L, "B").otherwise("C")
-      val rev = T(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(when(year(col("o_orderdate")) <= 1997,
-            round(col("o_totalprice") * 100).cast("long")).otherwise(0L)).as("r1"),
-          sum(when(year(col("o_orderdate")) >= 1998,
-            round(col("o_totalprice") * 100).cast("long")).otherwise(0L)).as("r2"))
-      val m = rev.select(tier(col("r1")).as("from_tier"), tier(col("r2")).as("to_tier"))
-        .groupBy("from_tier", "to_tier").agg(count(lit(1)).as("n"))
-      val tot = m.agg(sum("n").as("total"))
-      m.crossJoin(broadcast(tot))
-        .select(col("from_tier"), col("to_tier"), col("n"),
-          expr("(n * 1000000) div total").as("share_micro"))
-    }),
-
-    "ev_streaks" -> ((s, dir) => {
-      // gaps-and-islands activity streaks: consecutive active days
-      // collapse to one island via the classic day_idx − row_number
-      // constant, then per-user streak stats — n_islands, longest and
-      // current streak drive retention features. Per-user windows over
-      // distinct active DAYS only (≤ span days per user, never raw
-      // events).
-      import org.apache.spark.sql.expressions.Window
-      val days = events(s, dir)
-        .select(col("user_id"),
-          expr("unix_timestamp(ts) div 86400").as("day_idx"))
-        .distinct()
-      val w = Window.partitionBy("user_id").orderBy("day_idx")
-      val islands = days
-        .withColumn("isl", col("day_idx") - row_number().over(w))
-        .groupBy("user_id", "isl").agg(count(lit(1)).as("len"))
-      islands.groupBy("user_id")
-        .agg(sum("len").as("n_active_days"), count(lit(1)).as("n_streaks"),
-          max("len").as("longest_streak"))
-    }),
-
-    "ev_abandon" -> ((s, dir) => {
-      // cart abandonment: a click with no purchase by the same user
-      // within the following hour — "next purchase at-or-after" is ONE
-      // forward-looking min window per user (no self-join, no range
-      // join), then a bounded daily rate table.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .withColumn("next_purchase",
-          min(when(col("event_type") === "purchase", col("ts"))).over(w))
-        .filter(col("event_type") === "click")
-        .select(to_date(col("ts")).as("d"),
-          (col("next_purchase").isNull ||
-            unix_timestamp(col("next_purchase")) - unix_timestamp(col("ts")) > 3600L)
-            .as("abandoned"))
-        .groupBy("d")
-        .agg(count(lit(1)).as("n_clicks"),
-          sum(when(col("abandoned"), 1L).otherwise(0L)).as("n_abandoned"))
-        .withColumn("abandon_micro", expr("(n_abandoned * 1000000) div n_clicks"))
-    }),
-
-    "q_wilson" -> ((s, dir) => {
-      // Wilson 95% score interval for the daily purchase rate: the
-      // proportion CI that stays inside [0,1] at small n — closed-form
-      // center ± half-width with z=1.96 as the exact literals 1.9208 /
-      // 0.9604 / 3.8416, each bound rounded ONCE to micro (sqrt is
-      // IEEE-exact, so both engines agree bit-for-bit). ONE date-keyed
-      // hash agg; no window anywhere.
-      events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("np"))
-        .withColumn("rate_micro", expr("(np * 1000000) div n"))
-        .withColumn("lo_micro", expr(
-          """CAST(round((CAST(np AS DOUBLE) / n + 1.9208 / n
-             | - 1.96 * sqrt((CAST(np AS DOUBLE) / n * (1.0 - CAST(np AS DOUBLE) / n) + 0.9604 / n) / n))
-             | / (1.0 + 3.8416 / n) * 1000000) AS BIGINT)""".stripMargin))
-        .withColumn("hi_micro", expr(
-          """CAST(round((CAST(np AS DOUBLE) / n + 1.9208 / n
-             | + 1.96 * sqrt((CAST(np AS DOUBLE) / n * (1.0 - CAST(np AS DOUBLE) / n) + 0.9604 / n) / n))
-             | / (1.0 + 3.8416 / n) * 1000000) AS BIGINT)""".stripMargin))
-    }),
-
-    "q_fdr" -> ((s, dir) => {
-      // Benjamini-Hochberg FDR over per-brand return-rate z-tests: the
-      // normal tail comes from the Abramowitz-Stegun 7.1.26 erf
-      // polynomial (pure literal arithmetic — no erf built-in in either
-      // engine), p-values round ONCE to micro, and the BH step-up
-      // (rank, m·p/i suffix-min, cap at 1) runs entirely in integer
-      // micro units over the ≤25-row brand frame (bounded domain —
-      // PlanAuditSpec whitelisted). The lineitem⋈part join is the only
-      // data-scale shuffle; everything after is a 25-row panel.
-      import org.apache.spark.sql.expressions.Window
-      val g = T(s, dir, "lineitem")
-        .join(T(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("x"))
-        .localCheckpoint(true) // pooled rate + per-brand tests share it
-      val pool = g.agg(sum("n").as("nt"), sum("x").as("xt"))
-      val z = g.crossJoin(broadcast(pool))
-        .withColumn("z", expr(
-          """(CAST(x AS DOUBLE) / n - CAST(xt AS DOUBLE) / nt)
-             | / sqrt(CAST(xt AS DOUBLE) / nt * (1.0 - CAST(xt AS DOUBLE) / nt) / n)""".stripMargin))
-        .withColumn("ax", expr("abs(z) * 0.7071067811865476"))
-        .withColumn("t", expr("1.0 / (1.0 + 0.3275911 * ax)"))
-        .withColumn("p_micro", expr(
-          """CAST(round(t * (0.254829592 + t * (-0.284496736 + t * (1.421413741
-             | + t * (-1.453152027 + t * 1.061405429)))) * exp(-ax * ax) * 1000000) AS BIGINT)"""
-            .stripMargin))
-        .withColumn("z_micro", expr("CAST(round(z * 1000000) AS BIGINT)"))
-      val wOrd = Window.orderBy(col("p_micro"), col("p_brand"))
-      val wSuf = wOrd.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      z.withColumn("rk", row_number().over(wOrd).cast("long"))
-        .withColumn("m", count(lit(1)).over(Window.partitionBy())) // 25-row frame
-        .withColumn("bh_micro",
-          least(lit(1000000L), min(expr("(p_micro * m) div rk")).over(wSuf)))
-        .select(col("p_brand"), col("n"), col("x"), col("z_micro"),
-          col("p_micro"), col("rk"), col("bh_micro"),
-          (col("bh_micro") <= 50000L).as("rejected"))
-    }),
-
-    "ev_sequential" -> ((s, dir) => {
-      // group-sequential A/B monitor: weekly interim looks at the
-      // hash-split two-arm experiment (stream_srm's arm rule), pooled
-      // two-proportion z at each look, against O'Brien-Fleming-shaped
-      // boundaries z_k = 2.04·sqrt(K/k) (K=5 literal looks, sqrt exact)
-      // — the early-stopping discipline that keeps peeking honest.
-      // Cumulative counts are per-arm windows over the ≤5-week frame;
-      // the look panel itself is bounded (PlanAuditSpec whitelisted).
-      import org.apache.spark.sql.expressions.Window
-      val wk = events(s, dir)
-        .select((expr("CAST(get_json_object(props, '$.k') AS BIGINT)") % 2).as("arm"),
-          expr("(dayofmonth(ts) - 1) div 7 + 1").as("look"),
-          when(col("event_type") === "purchase", 1L).otherwise(0L).as("conv"))
-        .groupBy("arm", "look")
-        .agg(count(lit(1)).as("n"), sum("conv").as("x"))
-      val cum = wk
-        .withColumn("cn", sum("n").over(Window.partitionBy("arm").orderBy("look")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("cx", sum("x").over(Window.partitionBy("arm").orderBy("look")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      cum.groupBy("look")
-        .agg(max(when(col("arm") === 0L, col("cn"))).as("n0"),
-          max(when(col("arm") === 0L, col("cx"))).as("x0"),
-          max(when(col("arm") === 1L, col("cn"))).as("n1"),
-          max(when(col("arm") === 1L, col("cx"))).as("x1"))
-        .withColumn("z_micro", expr(
-          """CAST(round((CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0)
-             | / sqrt(CAST(x0 + x1 AS DOUBLE) / (n0 + n1)
-             |        * (1.0 - CAST(x0 + x1 AS DOUBLE) / (n0 + n1))
-             |        * (1.0 / n0 + 1.0 / n1)) * 1000000) AS BIGINT)""".stripMargin))
-        .withColumn("bound_micro",
-          expr("CAST(round(2040000.0 * sqrt(5.0 / look)) AS BIGINT)"))
-        .withColumn("crossed", abs(col("z_micro")) > col("bound_micro"))
-    }),
-
-    "geo_geohash" -> ((s, dir) => {
-      // geohash spatial rollup: synthetic micro-degree coordinates
-      // (Knuth multiplicative hash of the key — pure integer, both
-      // engines replay it), quantized to 15+15 bits, bit-interleaved by
-      // 30 literal-unrolled div/mod terms (one codegen projection, no
-      // shuffle before the cell agg), base32-encoded to a precision-4
-      // cell. The canonical "index points into prefix-joinable cells"
-      // primitive — prefix truncation gives coarser zoom for free.
-      T(s, dir, "customer")
-        .select(col("c_custkey"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_c"),
-          expr(geoLatSql("c_custkey", custLatMul)).as("lat_micro"),
-          expr(geoLonSql("c_custkey", custLonMul)).as("lon_micro"))
-        .withColumn("lat_q", expr("(lat_micro + 90000000) * 32768 div 180000000"))
-        .withColumn("lon_q", expr("(lon_micro + 180000000) * 32768 div 360000000"))
-        .withColumn("v", expr(geoInterleaveSql("div")))
-        .withColumn("cell", expr(geohashCharsSql("v", "div", 4)))
-        .groupBy("cell")
-        .agg(count(lit(1)).as("n_customers"), sum("bal_c").as("sum_bal_c"))
-    }),
-
-    "geo_knn" -> ((s, dir) => {
-      // haversine k-nearest suppliers for a bounded probe set: 20 probe
-      // customers broadcast against the supplier table (BroadcastNested-
-      // Loop — linear in suppliers, the brute tier exactly like
-      // sim_topk), distances rounded ONCE to integer meters, top-5 via
-      // a probe-partitioned rank. The 100 TB path replaces the probe
-      // broadcast with geo_geohash cell pruning (probe cell + ring
-      // neighbors) — same scorer, bucketed candidates.
-      import org.apache.spark.sql.expressions.Window
-      val cust = T(s, dir, "customer").filter(col("c_custkey") <= 20L)
-        .select(col("c_custkey"),
-          expr(geoLatSql("c_custkey", custLatMul)).as("clat"),
-          expr(geoLonSql("c_custkey", custLonMul)).as("clon"))
-      val supp = T(s, dir, "supplier")
-        .select(col("s_suppkey"),
-          expr(geoLatSql("s_suppkey", suppLatMul)).as("slat"),
-          expr(geoLonSql("s_suppkey", suppLonMul)).as("slon"))
-      supp.crossJoin(broadcast(cust))
-        .withColumn("dist_m", expr(haversineSql))
-        .withColumn("rk", row_number().over(Window.partitionBy("c_custkey")
-          .orderBy(col("dist_m"), col("s_suppkey"))).cast("long"))
-        .filter(col("rk") <= 5L)
-        .select(col("c_custkey"), col("s_suppkey"), col("dist_m"), col("rk"))
-    }),
-
-    "geo_cluster" -> ((s, dir) => {
-      // grid-density clustering (DBSCAN without the pairwise distance
-      // scan): occupied 10°-cells holding ≥3 points are core, adjacent
-      // core cells (8-neighborhood, via a broadcast offset table + semi
-      // join — never a spatial self-join) connect into clusters through
-      // the shared large-star/small-star components machinery. Date-line
-      // wrap is deliberately not stitched (cx 0 and 35 stay apart).
-      val cells = T(s, dir, "customer")
-        .select(expr(geoLatSql("c_custkey", custLatMul)).as("lat_micro"),
-          expr(geoLonSql("c_custkey", custLonMul)).as("lon_micro"))
-        .select(expr("(lat_micro + 90000000) div 10000000").as("cy"),
-          expr("(lon_micro + 180000000) div 10000000").as("cx"))
-        .groupBy("cy", "cx").agg(count(lit(1)).as("n"))
-      val core = cells.filter(col("n") >= 3L)
-        .withColumn("cell", expr("cy * 100 + cx"))
-        .localCheckpoint(true) // edge build reads it 3×, components more
-      val offs = s.createDataFrame(Seq((-1L, -1L), (-1L, 0L), (-1L, 1L),
-          (0L, -1L), (0L, 1L), (1L, -1L), (1L, 0L), (1L, 1L)))
-        .toDF("dy", "dx")
-      val nbr = core.crossJoin(broadcast(offs))
-        .select(col("cell").as("src"), expr("(cy + dy) * 100 + (cx + dx)").as("dst"))
-        .join(core.select(col("cell").as("dst")), Seq("dst"), "left_semi")
-      val comp = ext.Graph.componentsFor(core.select("cell"), "cell", nbr)
-      core.join(comp, "cell")
-        .groupBy(col("component").as("cluster"))
-        .agg(count(lit(1)).as("n_cells"), sum("n").as("n_points"))
-    }),
-
-    "q_fd_check" -> ((s, dir) => {
-      // functional-dependency audit (profiling for schema discovery /
-      // DQ rules): for each candidate A→B, the count of A-groups whose
-      // B is not single-valued. Written as the two-level (A,B) agg →
-      // A agg so the distinct is map-side combinable — NEVER
-      // countDistinct inside one wide row at 100 TB.
-      def fd(df: DataFrame, name: String, lhs: String, rhs: String) =
-        df.groupBy(col(lhs)).agg(count_distinct(col(rhs)).as("n_rhs"))
-          .agg(count(lit(1)).as("n_groups"),
-            sum(when(col("n_rhs") > 1L, 1L).otherwise(0L)).as("n_violating"),
-            max("n_rhs").as("max_rhs"))
-          .select(lit(name).as("fd"), col("n_groups"), col("n_violating"),
-            col("max_rhs"))
-      fd(T(s, dir, "customer"), "c_custkey->c_name", "c_custkey", "c_name")
-        .unionByName(fd(T(s, dir, "orders"), "o_custkey->o_orderstatus",
-          "o_custkey", "o_orderstatus"))
-        .unionByName(fd(T(s, dir, "lineitem"), "l_orderkey->l_returnflag",
-          "l_orderkey", "l_returnflag"))
-        .unionByName(fd(T(s, dir, "lineitem"), "l_partkey->l_suppkey",
-          "l_partkey", "l_suppkey"))
-    }),
-
-    "q_inclusion" -> ((s, dir) => {
-      // inclusion-dependency audit (foreign-key discovery): for each
-      // candidate A ⊆ B, distinct A values minus B via distinct +
-      // anti-join — the orphan count q_refint tracks, generalized to a
-      // candidate panel with negative cases. Each check is one keyed
-      // shuffle pair; nothing is collected.
-      def incl(name: String, a: DataFrame, ac: String, b: DataFrame, bc: String) = {
-        val da = a.select(col(ac).as("v")).distinct().localCheckpoint(true)
-        val miss = da.join(b.select(col(bc).as("v")).distinct(), Seq("v"), "left_anti")
-        da.agg(count(lit(1)).as("n_distinct"))
-          .crossJoin(broadcast(miss.agg(count(lit(1)).as("n_missing"))))
-          .select(lit(name).as("candidate"), col("n_distinct"), col("n_missing"),
-            (col("n_missing") === 0L).as("holds"))
-      }
-      val li = T(s, dir, "lineitem"); val o = T(s, dir, "orders")
-      incl("l_orderkey<=o_orderkey", li, "l_orderkey", o, "o_orderkey")
-        .unionByName(incl("o_orderkey<=l_orderkey", o, "o_orderkey", li, "l_orderkey"))
-        .unionByName(incl("o_custkey<=c_custkey", o, "o_custkey",
-          T(s, dir, "customer"), "c_custkey"))
-        .unionByName(incl("p_partkey<=l_partkey", T(s, dir, "part"), "p_partkey",
-          li, "l_partkey"))
-    }),
-
-    "q_changepoint" -> ((s, dir) => {
-      // change-point detection (binary segmentation, one split): the
-      // split of the daily-revenue series maximizing the between-
-      // segment sum-of-squares gain (s₁(n−i) − s₂·i)² / (i(n−i)n) —
-      // exact integers end-to-end (DECIMAL(38,0) for the squared term,
-      // HUGEINT in the oracle), argmax by TakeOrdered(3). Windows run
-      // on the bounded day domain only (whitelisted).
-      import org.apache.spark.sql.expressions.Window
-      val daily = T(s, dir, "lineitem")
-        .groupBy(col("l_shipdate").as("d"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("x"))
-      val w = Window.orderBy("d")
-      val cum = daily
-        .withColumn("i", row_number().over(w).cast("long"))
-        .withColumn("s1", sum("x").over(w.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy()))
-        .withColumn("st", sum("x").over(Window.partitionBy()))
-      cum.filter(col("i") < col("n"))
-        .withColumn("diff", expr(
-          "CAST(s1 AS DECIMAL(38,0)) * (n - i) - CAST(st - s1 AS DECIMAL(38,0)) * i"))
-        // gain in whole dollars² (÷10⁴ folded into the denominator so the
-        // single integral divide stays within BIGINT)
-        .withColumn("gain", expr(
-          "CAST((diff * diff) div (CAST(i * (n - i) * n AS DECIMAL(38,0)) * 10000) AS BIGINT)"))
-        .select(col("d").as("split_after"), col("i").as("n_left"),
-          (col("n") - col("i")).as("n_right"), col("gain"))
-        .orderBy(col("gain").desc, col("split_after"))
-        .limit(3)
-    }),
-
-    "q_croston" -> ((s, dir) => {
-      // Croston's intermittent-demand forecast: sparse daily demand (a
-      // 1-in-211 part slice) → nonzero occurrences indexed k; demand
-      // size AND inter-arrival gap smoothed with the SAME 20-term
-      // truncated EWMA kernel as q_ewma (convolution join on the
-      // occurrence index — no sequential recurrence), forecast ẑ/p̂ per
-      // occurrence in micro units. Occurrence indexing runs on the
-      // bounded day domain (whitelisted).
-      import org.apache.spark.sql.expressions.Window
-      val wd = Window.orderBy("d")
-      val occ = T(s, dir, "lineitem")
-        .filter(col("l_partkey") % 211 === 0)
-        .groupBy(to_date(col("l_shipdate")).as("d"))
-        .agg(sum(col("l_quantity").cast("long")).as("z"))
-        .withColumn("k", row_number().over(wd).cast("long"))
-        .withColumn("gap", coalesce(
-          datediff(col("d"), lag(col("d"), 1).over(wd)).cast("long"), lit(1L)))
-        .localCheckpoint(true) // anchor + lag sides of the convolution
-      val w = s.createDataFrame(ewmaKernelMicro).toDF("j", "w")
-      val lagd = occ.select(col("k").as("lk"), col("z").as("lz"), col("gap").as("lgap"))
-      occ.crossJoin(broadcast(w))
-        .join(lagd, col("lk") === col("k") - col("j"))
-        .groupBy("d", "k", "z", "gap")
-        .agg(sum(expr("w * lz")).as("swz"), sum(expr("w * lgap")).as("swg"),
-          sum("w").as("sw"))
-        .select(col("d"), col("k"), col("z"), col("gap"),
-          expr("(swz * 1000000) div sw").as("z_hat_micro"),
-          expr("(swg * 1000000) div sw").as("p_hat_micro"),
-          expr("(((swz * 1000000) div sw) * 1000000) div ((swg * 1000000) div sw)")
-            .as("croston_micro"))
-    }),
-
-    "ta_blocklist" -> ((s, dir) => {
-      // wordlist content filter (the C4/Gopher "bad words" gate, with
-      // per-term weights): weighted whole-token hits per document,
-      // scored against token count in integer micro units. A pure
-      // projection — no shuffle at all; the list is a literal, so the
-      // 100 TB form is the same plan with a bigger CASE.
-      val occ = blocklistTerms.map { case (t, w) =>
-        size(expr(s"filter(split(lower(text), '\\\\s+'), x -> x = '$t')"))
-          .cast("long") * w
-      }.reduce(_ + _)
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          size(expr("filter(split(lower(text), '\\\\s+'), x -> x != '')"))
-            .cast("long").as("n_tokens"),
-          occ.as("score"))
-        .withColumn("tox_micro", expr(
-          "CASE WHEN n_tokens > 0 THEN (score * 1000000) div n_tokens ELSE 0 END"))
-        .withColumn("flagged", col("tox_micro") > 40000L)
-    }),
-
-    "srch_ndcg" -> ((s, dir) => {
-      // retrieval quality eval: nDCG@10 of the BM25 ranking against
-      // hash-derived graded relevance (md5 → grade 0–3). DCG uses
-      // gain (2^rel − 1) × literal per-rank weights ⌊10⁶/log₂(r+1)⌉
-      // (generated once in Scala, replayed by the oracle), IDCG from
-      // the corpus-wide grade histogram — one single-row agg, a 10-row
-      // rank frame, everything else integer. Windows touch ≤10 rows
-      // (whitelisted).
-      import org.apache.spark.sql.expressions.Window
-      val docs = T(s, dir, "documents")
-      val top = ext.Search.bm25TopK(docs, "doc_id", "text",
-          Seq("spark", "dup", "vector"), 10)
-        .withColumn("r", row_number().over(
-          Window.orderBy(col("score_bp").desc, col("doc_id"))).cast("long"))
-        .withColumn("rel", expr(relGradeSql))
-      val wtab = s.createDataFrame(ndcgWeights).toDF("r", "wr")
-      val dcg = top.join(broadcast(wtab), "r")
-        .agg(sum(expr(
-          "(CASE rel WHEN 3 THEN 7 WHEN 2 THEN 3 WHEN 1 THEN 1 ELSE 0 END) * wr"))
-          .as("dcg_micro"))
-      val cnt = docs.select(expr(relGradeSql).as("rel"))
-        .agg(sum(when(col("rel") === 3L, 1L).otherwise(0L)).as("n3"),
-          sum(when(col("rel") === 2L, 1L).otherwise(0L)).as("n2"),
-          sum(when(col("rel") === 1L, 1L).otherwise(0L)).as("n1"))
-      val idcg = wtab.crossJoin(broadcast(cnt))
-        .select(expr("""(CASE WHEN r <= n3 THEN 7 WHEN r <= n3 + n2 THEN 3
-                       | WHEN r <= n3 + n2 + n1 THEN 1 ELSE 0 END) * wr""".stripMargin)
-          .as("t"))
-        .agg(sum("t").as("idcg_micro"))
-      dcg.crossJoin(broadcast(idcg))
-        .select(lit(10L).as("k"), col("dcg_micro"), col("idcg_micro"),
-          expr("(dcg_micro * 1000000) div idcg_micro").as("ndcg_micro"))
-    }),
-
-    "srch_ap" -> ((s, dir) => {
-      // average precision + reciprocal rank over the same BM25 top-10 —
-      // the binary-relevance companion to srch_ndcg (rel ≥ 2 counts as
-      // relevant; same md5-derived grades both engines). AP = mean over
-      // relevant hit ranks of precision@rank, denominator min(R, 10) —
-      // all exact integer division over the 10-row rank frame
-      // (whitelisted); R comes from one corpus-wide aggregate.
-      import org.apache.spark.sql.expressions.Window
-      val docs = T(s, dir, "documents")
-      val top = ext.Search.bm25TopK(docs, "doc_id", "text",
-          Seq("spark", "dup", "vector"), 10)
-        .withColumn("r", row_number().over(
-          Window.orderBy(col("score_bp").desc, col("doc_id"))).cast("long"))
-        .withColumn("brel", (expr(relGradeSql) >= 2L).cast("long"))
-      val wcum = Window.orderBy("r")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val t = top.withColumn("cumhits", sum("brel").over(wcum))
-      val rtot = docs.select((expr(relGradeSql) >= 2L).cast("long").as("b"))
-        .agg(sum("b").as("n_rel_corpus"))
-      t.crossJoin(broadcast(rtot))
-        .agg(max("n_rel_corpus").as("n_rel_corpus"),
-          sum("brel").as("n_rel_at10"),
-          min(when(col("brel") === 1L, col("r"))).as("first_rel"),
-          sum(when(col("brel") === 1L, expr("cumhits * 1000000 div r"))
-            .otherwise(0L)).as("psum"))
-        .select(col("n_rel_corpus"), col("n_rel_at10"),
-          expr("""CAST(CASE WHEN first_rel IS NULL THEN 0
-                 ELSE 1000000 div first_rel END AS BIGINT)""").as("mrr_micro"),
-          expr("""CASE WHEN least(n_rel_corpus, 10) = 0 THEN CAST(0 AS BIGINT)
-                 ELSE CAST(psum div least(n_rel_corpus, 10) AS BIGINT)
-                 END""").as("ap_micro"))
-    }),
-
-    "q_mannkendall" -> ((s, dir) => {
-      // Mann-Kendall trend test on daily revenue: S = Σ_{i<j}
-      // sign(x_j − x_i) over the bounded day panel (one side broadcast,
-      // so the quadratic stays a BroadcastNestedLoop over ≤n_days²
-      // pairs — never a data-scale pattern), tie-corrected variance in
-      // exact integers, continuity-corrected z rounded once to micro.
-      val daily = T(s, dir, "lineitem")
-        .groupBy(col("l_shipdate").as("d"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("x"))
-        .localCheckpoint(true) // pair join (twice), ties, and n share it
-      val pairs = daily.select(col("d").as("d1"), col("x").as("x1"))
-        .join(broadcast(daily.select(col("d").as("d2"), col("x").as("x2"))),
-          col("d1") < col("d2"))
-        .agg(sum(signum(col("x2") - col("x1")).cast("long")).as("s"))
-      val ties = daily.groupBy("x").agg(count(lit(1)).as("t"))
-        .agg(sum(expr("t * (t - 1) * (2 * t + 5)")).as("tie_term"),
-          count(lit(1)).as("n_values"))
-      val n = daily.agg(count(lit(1)).as("n"))
-      pairs.crossJoin(broadcast(ties)).crossJoin(broadcast(n))
-        .select(col("n"), col("s"),
-          expr("(n * (n - 1) * (2 * n + 5) - tie_term) div 18").as("var_s"),
-          expr("""CAST(round((CAST(s AS DOUBLE) - CAST(sign(s) AS DOUBLE))
-                 | / sqrt(CAST((n * (n - 1) * (2 * n + 5) - tie_term) div 18 AS DOUBLE))
-                 | * 1000000) AS BIGINT)""".stripMargin).as("z_micro"))
-    }),
-
-    "sk_quantile" -> ((s, dir) => {
-      // mergeable quantile sketch by uniform hash sampling: keep rows
-      // whose md5 nibble is 0 (an exact 1/16 Bernoulli that is
-      // order-free and union-mergeable — the sample of a union IS the
-      // union of samples), then nearest-rank quartiles of the sample
-      // per group. The 100 TB substitute for exact global quantiles:
-      // the full sort touches 1/16 of the data, and the sample itself
-      // shrinks with a smaller threshold. Per-group windows only.
-      import org.apache.spark.sql.expressions.Window
-      val sample = T(s, dir, "lineitem")
-        .select(col("l_returnflag").as("g"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("v"),
-          col("l_orderkey"), col("l_linenumber"))
-        .filter(expr(
-          "substr(md5(concat('qs:', CAST(l_orderkey AS STRING), ':', CAST(l_linenumber AS STRING))), 1, 1) = '0'"))
-      val w = Window.partitionBy("g").orderBy(col("v"), col("l_orderkey"), col("l_linenumber"))
-      val ranked = sample
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("ns", count(lit(1)).over(Window.partitionBy("g")))
-      val ks = s.createDataFrame(Seq(Tuple1(1L), Tuple1(2L), Tuple1(3L))).toDF("k")
-      ranked.join(broadcast(ks), col("rn") === expr("(ns * k + 3) div 4"))
-        .select(col("g").as("l_returnflag"), col("k").as("quartile"),
-          col("ns").as("n_sample"), col("v").as("est_c"))
-    }),
-
-    "q_burstiness" -> ((s, dir) => {
-      // burstiness (Fano factor / index of dispersion) per event type:
-      // variance-to-mean of daily counts in exact integer arithmetic —
-      // fano_micro = (n·Σc² − (Σc)²)·10⁶ div (n·Σc). Two cascaded hash
-      // aggs; >1 means bursty (clustered), <1 regular. Zero-event days
-      // are absent by construction (observed-day convention). The
-      // Σc² / (Σc)²·10⁶ products run in DECIMAL(38,0) (HUGEINT on the
-      // oracle) so billion-row daily counts at 100 TB can't wrap int64;
-      // the ratio itself is small, so the BIGINT output is safe.
-      events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_days"), sum("c").as("total"),
-          sum(expr("CAST(c AS DECIMAL(38,0)) * c")).as("ss"))
-        .select(col("event_type"), col("n_days"), col("total"),
-          expr("""CAST(((CAST(n_days AS DECIMAL(38,0)) * ss
-                 |  - CAST(total AS DECIMAL(38,0)) * total) * 1000000)
-                 | div (CAST(n_days AS DECIMAL(38,0)) * total) AS BIGINT)""".stripMargin)
-            .as("fano_micro"))
-    }),
-
-    "sim_radius" -> ((s, dir) => {
-      // radius (ε-ball) similarity search: every corpus vector with
-      // cosine ≥ 0.25 of the 8 probes — the range-query companion to
-      // sim_topk's k-NN. Probes broadcast, ONE codegen pass over the
-      // corpus (native fused dot/norm expressions), score rounded once
-      // to micro so the threshold compares integers. The 100 TB path
-      // swaps the broadcast for IVF cell routing with the same scorer.
-      graft.functions.VectorExprs.register(s)
-      val emb = T(s, dir, "embeddings")
-      val q = broadcast(emb.filter(col("vec_id") < 8L)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-          ext.Vectors.norm(col("embedding")).as("qn")))
-      emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("v"),
-          ext.Vectors.norm(col("embedding")).as("nn"))
-        .crossJoin(q)
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .withColumn("score_micro",
-          round(ext.Vectors.dot(col("v"), col("qv")) / (col("nn") * col("qn"))
-            * 1000000).cast("long"))
-        .filter(col("score_micro") >= 250000L)
-        .select(col("query_id"), col("neighbor_id"), col("score_micro"))
-    }),
-
-    "mm_patches" -> ((s, dir) => {
-      // ViT-style patchify with a REAL decode: the planted 32×32 PNGs
-      // split into a 4×4 grid of 8×8 patches with per-patch luma stats
-      // (sum/min/max) — the deterministic front half of a vision-
-      // transformer ingest. Per-partition codec work, no shuffle; the
-      // oracle recomputes every patch from doc_id's closed-form pixel
-      // grid, so a fake decode mismatches.
-      implicit val sp: SparkSession = s
-      ext.Multimodal.patchGrid(
-        ext.Multimodal.phashMedia(T(s, dir, "documents"))).toDF()
-    }),
-
-    "mm_histogram" -> ((s, dir) => {
-      // per-image luma histogram with a REAL decode (the planted 32×32
-      // PNGs behind mm_phash): 16 bins, all bins emitted (zeros
-      // included). Per-partition codec work, no shuffle at all; the
-      // oracle recomputes every bin count from doc_id's closed-form
-      // pixel grid, so a fake decode mismatches.
-      implicit val sp: SparkSession = s
-      ext.Multimodal.lumaHistogram(
-        ext.Multimodal.phashMedia(T(s, dir, "documents"))).toDF()
-    }),
-
-    "q_effective_n" -> ((s, dir) => {
-      // Kish effective sample size for length-weighted sampling: per
-      // source, eff_n = (Σw)²/Σw² and the design effect n·Σw²/(Σw)² —
-      // how much weighting (w = n_chars, the ta_wsample weights) costs
-      // in variance. Exact DECIMAL(38,0) sums (HUGEINT oracle), one
-      // hash agg.
-      T(s, dir, "documents")
-        .select(col("source"), col("n_chars").cast("long").as("w"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n"),
-          sum(expr("CAST(w AS DECIMAL(38,0))")).as("sw"),
-          sum(expr("CAST(w AS DECIMAL(38,0)) * w")).as("sww"))
-        .select(col("source"), col("n"),
-          expr("CAST((sw * sw * 1000000) div sww AS BIGINT)").as("eff_n_micro"),
-          expr("CAST((n * sww * 1000000) div (sw * sw) AS BIGINT)").as("deff_micro"))
-    }),
-
-    "q_unpivot" -> ((s, dir) => {
-      // unpivot/melt (the wide→long reshape q_pivot_multi inverts):
-      // three measures per lineitem row become (metric, val) rows via
-      // the native stack() generator — a zero-shuffle projection
-      // fan-out — then one hash agg to the 3-row metric panel.
-      T(s, dir, "lineitem")
-        .select(expr(
-          """stack(3,
-            | 'quantity', CAST(l_quantity AS BIGINT),
-            | 'price_c', CAST(round(l_extendedprice * 100) AS BIGINT),
-            | 'discount_c', CAST(round(l_discount * 100) AS BIGINT)) AS (metric, val)"""
-            .stripMargin))
-        .groupBy("metric")
-        .agg(count(lit(1)).as("n"), sum("val").as("total"),
-          min("val").as("vmin"), max("val").as("vmax"))
-    }),
-
-    "stream_quantile" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // STREAMING quantile sketch: sk_quantile's hash-sample rule over a
-      // file stream in APPEND mode — the Bernoulli filter is stateless
-      // and order-free, so the streamed sample EQUALS the batch sample
-      // however the source micro-batches; quartiles then read off the
-      // bounded sample. The streamed half is what runs forever at
-      // 100 TB; the rank step touches 1/16 of the data.
-      import org.apache.spark.sql.expressions.Window
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
-        .filter(expr("substr(md5(concat('sq:', CAST(event_id AS STRING))), 1, 1) = '0'"))
-        .select(col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("v"), col("event_id"))
-      s.catalog.dropTempView("graft_stream_quantile")
-      val q = stream.writeStream.format("memory").queryName("graft_stream_quantile")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val w = Window.partitionBy("event_type").orderBy(col("v"), col("event_id"))
-      val ranked = s.table("graft_stream_quantile")
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("ns", count(lit(1)).over(Window.partitionBy("event_type")))
-      val ks = s.createDataFrame(Seq(Tuple1(1L), Tuple1(2L), Tuple1(3L))).toDF("k")
-      ranked.join(broadcast(ks), col("rn") === expr("(ns * k + 3) div 4"))
-        .select(col("event_type"), col("k").as("quartile"),
-          col("ns").as("n_sample"), col("v").as("est_c"))
-    }),
-
-    "stream_topk" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // STREAMING grouped top-k: the bounded-heap TopKAgg running as a
-      // stateful streaming aggregation (COMPLETE mode) — proof that the
-      // custom TypedImperativeAggregate's serialize/merge contract is
-      // streaming-safe, so the same map-side k-heap that bounds the
-      // batch shuffle also bounds the state store (k rows per key,
-      // however many micro-batches arrive). Result ≡ the batch top-5
-      // per event_type by (value desc, event_id asc), replayed by the
-      // oracle as a window rank.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
-        .select(col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("v"), col("event_id"))
-      val agg = stream.groupBy("event_type")
-        .agg(graft.functions.TopKAgg.topK(5, col("v"),
-          col("event_id").cast("double"),
-          struct(col("event_id"), col("v"))).as("__top__"))
-      s.catalog.dropTempView("graft_stream_topk")
-      val q = agg.writeStream.format("memory").queryName("graft_stream_topk")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_topk")
-        .select(col("event_type"), posexplode(col("__top__")))
-        .select(col("event_type"), (col("pos") + 1).cast("long").as("rnk"),
-          col("col.event_id").as("event_id"), col("col.v").as("v"))
-    }),
-
-    "g_modularity" -> ((s, dir) => {
-      // partition quality of the g_labelprop communities: Newman
-      // modularity Q = Σ_c [m_c/m − (d_c/2m)²] over the same undirected
-      // customer↔supplier trade graph, in exact integer micro units
-      // (DECIMAL(38,0) for d_c², HUGEINT oracle). Edges and labels are
-      // each one keyed shuffle; the community panel is the only small
-      // frame.
-      val o = T(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"), (col("l_suppkey") + 10000000L).as("dst"))
-        .distinct().localCheckpoint(true) // m + internal + degrees
-      val lbl = ext.Graph.labelPropagation(pairs, iters = 3).localCheckpoint(true)
-      val m = pairs.agg(count(lit(1)).as("m"))
-      val internal = pairs
-        .join(lbl.select(col("id").as("src"), col("lbl").as("ls")), "src")
-        .join(lbl.select(col("id").as("dst"), col("lbl").as("ld")), "dst")
-        .filter(col("ls") === col("ld"))
-        .groupBy(col("ls").as("lbl")).agg(count(lit(1)).as("mc"))
-      val dc = pairs.select(col("src").as("id"))
-        .unionAll(pairs.select(col("dst").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("d"))
-        .join(lbl, "id")
-        .groupBy("lbl").agg(sum("d").as("dcv"))
-      val terms = dc.join(internal, Seq("lbl"), "left").na.fill(0L, Seq("mc"))
-        .crossJoin(broadcast(m))
-        .select(col("m"), expr(
-          """(mc * 1000000) div m
-            | - CAST(CAST(dcv AS DECIMAL(38,0)) * dcv * 1000000 AS DECIMAL(38,0))
-            |   div (CAST(4 AS DECIMAL(38,0)) * m * m)""".stripMargin).as("term"))
-      terms.agg(max("m").as("m"), count(lit(1)).as("n_communities"),
-        sum("term").as("q_micro"))
-    }),
-
-    "ev_balance" -> ((s, dir) => {
-      // covariate balance audit (did randomization balance?): the
-      // standardized mean difference (m₁−m₀)/√((v₁+v₀)/2) per covariate
-      // across the hash-split arms — |SMD| > 0.1 is the usual imbalance
-      // flag. Exact integer sums (cents / hours), ONE conditional-agg
-      // pass per covariate, double only at the final rounding.
-      def smd(df: DataFrame, name: String, v: org.apache.spark.sql.Column) =
-        df.select((expr("CAST(get_json_object(props, '$.k') AS BIGINT)") % 2).as("arm"),
-            v.cast("decimal(38,0)").as("v")) // s·s products exceed 2⁶³ at scale
-          .agg(
-            sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("n0"),
-            sum(when(col("arm") === 0L, col("v"))).as("s0"),
-            sum(when(col("arm") === 0L, expr("v * v"))).as("ss0"),
-            sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n1"),
-            sum(when(col("arm") === 1L, col("v"))).as("s1"),
-            sum(when(col("arm") === 1L, expr("v * v"))).as("ss1"))
-          .withColumn("vp", expr( // pooled variance; 0 for constants
-            """((CAST(n1 * ss1 - s1 * s1 AS DOUBLE) / (CAST(n1 AS DOUBLE) * (n1 - 1)))
-               | + (CAST(n0 * ss0 - s0 * s0 AS DOUBLE) / (CAST(n0 AS DOUBLE) * (n0 - 1)))) / 2.0"""
-              .stripMargin))
-          .select(lit(name).as("covariate"), col("n0"), col("n1"),
-            expr("""CASE WHEN vp <= 0.0 THEN CAST(0 AS BIGINT)
-                   | ELSE CAST(round((CAST(s1 AS DOUBLE) / n1 - CAST(s0 AS DOUBLE) / n0)
-                   |   / sqrt(vp) * 1000000) AS BIGINT) END""".stripMargin).as("smd_micro"))
-          .withColumn("imbalanced", abs(col("smd_micro")) > 100000L)
-      val ev = events(s, dir)
-      smd(ev, "value_c", expr("CAST(round(value * 100) AS BIGINT)"))
-        .unionByName(smd(ev, "hour", hour(col("ts")).cast("long")))
-        .unionByName(smd(ev, "is_purchase",
-          when(col("event_type") === "purchase", 1L).otherwise(0L)))
-    }),
-
-    "ev_its" -> ((s, dir) => {
-      // interrupted time series: daily purchase counts fit y = a + b·t
-      // per segment around the literal 2024-01-15 cutoff — closed-form
-      // 2-var OLS in exact integers (slope and intercept land in micro
-      // via ONE integral division each); the level/trend break between
-      // the two rows is the causal read. One day-keyed agg; the fit is
-      // a single-row conditional agg per segment.
-      val daily = events(s, dir)
-        .filter(col("event_type") === "purchase")
-        .groupBy(dayofmonth(col("ts")).cast("long").as("t"))
-        .agg(count(lit(1)).as("y"))
-        .withColumn("seg", when(col("t") < 15L, "pre").otherwise("post"))
-      daily.groupBy("seg")
-        .agg(count(lit(1)).as("n"), sum("t").as("st"), sum("y").as("sy"),
-          sum(expr("t * t")).as("stt"), sum(expr("t * y")).as("sty"))
-        .select(col("seg"), col("n"),
-          expr("((n * sty - st * sy) * 1000000) div (n * stt - st * st)")
-            .as("slope_micro"),
-          expr("(sy * 1000000 - ((n * sty - st * sy) * 1000000) div (n * stt - st * st) * st) div n")
-            .as("intercept_micro"))
-    }),
-
-    "mm_blockiness" -> ((s, dir) => {
-      // JPEG-artifact proxy with a REAL decode: mean |Δluma| across
-      // horizontal 8-px block boundaries vs interior columns — a ratio
-      // near 1 means no blocking. Exact integer diff sums per image
-      // (per-partition codec work, no shuffle); the oracle replays both
-      // sums from the planted closed-form grid.
-      implicit val sp: SparkSession = s
-      ext.Multimodal.blockiness(
-        ext.Multimodal.phashMedia(T(s, dir, "documents"))).toDF()
-    }),
-
-    "ev_features_pit" -> ((s, dir) => {
-      // point-in-time-correct feature extraction (the feature-store
-      // primitive): per user, AS OF the literal 2024-01-20 cutoff —
-      // activity counts in the trailing 7/14-day windows, spend, days
-      // since last event. ONE conditional-agg pass over events strictly
-      // before the cutoff; no window function, no leakage by
-      // construction (nothing ≥ cutoff is read).
-      val cutoff = lit("2024-01-20 00:00:00").cast("timestamp")
-      events(s, dir)
-        .filter(col("ts") < cutoff)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("ts") >= expr("timestamp'2024-01-13 00:00:00'"), 1L)
-            .otherwise(0L)).as("n_7d"),
-          sum(when(col("ts") >= expr("timestamp'2024-01-06 00:00:00'"), 1L)
-            .otherwise(0L)).as("n_14d"),
-          sum(expr("CAST(round(value * 100) AS BIGINT)")).as("spend_c"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("n_purchases"),
-          max(col("ts")).as("last_ts"))
-        .select(col("user_id"), col("n_events"), col("n_7d"), col("n_14d"),
-          col("spend_c"), col("n_purchases"),
-          expr("unix_timestamp(timestamp'2024-01-20 00:00:00') - unix_timestamp(last_ts)")
-            .as("recency_s"))
-    }),
-
-    "ta_token_dropout" -> ((s, dir) => {
-      // deterministic token-dropout augmentation (EDA-style): token i of
-      // doc d drops when md5('do:<d>:<i>') starts with hex '0' — an
-      // exact 1/16 Bernoulli that is reproducible across runs AND
-      // engines (the property augmentation caches need). Pure array
-      // expressions, no shuffle; emits the augmented text + audit
-      // counts. Spark's transform index is 0-based; the oracle shifts
-      // DuckDB's 1-based lambda index to match.
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          expr("filter(split(lower(text), '\\\\s+'), x -> x != '')").as("toks"))
-        .select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"),
-          expr("""filter(transform(toks, (x, i) ->
-                 |  CASE WHEN substr(md5(concat('do:', CAST(doc_id AS STRING), ':', CAST(i AS STRING))), 1, 1) = '0'
-                 |       THEN NULL ELSE x END), x -> x IS NOT NULL)""".stripMargin)
-            .as("kept"))
-        .select(col("doc_id"), col("n_tokens"),
-          size(col("kept")).cast("long").as("n_kept"),
-          expr("array_join(kept, ' ')").as("aug_text"))
-    }),
-
-    "sk_mg" -> ((s, dir) => {
-      // Misra-Gries heavy hitters (k = 2 counters over the return-flag
-      // domain) — the deterministic-guarantee frequency summary that
-      // completes the sketch family (HLL, CMS, theta, KMV, quantile,
-      // Bloom, bitmap): f − n/(k+1) ≤ est ≤ f and every key with
-      // f > n/(k+1) survives ANY merge order. Raw estimates are
-      // merge-order-dependent, so the row exposes only the theorem-level
-      // facts — the guaranteed-hitter count (exact SQL), an engine-
-      // verified presence bit and an engine-verified bound bit — the
-      // sk_hll error-envelope discipline. Buffer is ≤k pairs: a 100 TB
-      // scan ships bytes per partition.
-      val k = 2
-      val li = T(s, dir, "lineitem")
-        .select(expr("ascii(l_returnflag)").cast("long").as("key"))
-      val exact = li.groupBy("key").agg(count(lit(1)).as("f"))
-      val tot = exact.agg(sum("f").as("n_total"))
-      val cand = li.agg(graft.functions.SketchAgg.misraGries(col("key"), k).as("mg"))
-        .select(explode(col("mg")).as("c"))
-        .select(col("c.key").as("key"), col("c.est").as("est"))
-      exact.crossJoin(broadcast(tot)).join(broadcast(cand), Seq("key"), "left")
-        .agg(max("n_total").as("n_total"),
-          sum(when(col("f") * (k + 1) > col("n_total"), 1L).otherwise(0L))
-            .as("n_guaranteed"),
-          min(when(col("f") * (k + 1) > col("n_total"),
-            col("est").isNotNull.cast("int")).otherwise(1)).as("gp"),
-          min(when(col("est").isNotNull,
-            (col("est") <= col("f") &&
-              (col("f") - col("est")) * (k + 1) <= col("n_total")).cast("int"))
-            .otherwise(1)).as("bok"))
-        .select(col("n_total"), lit(k.toLong).as("k"), col("n_guaranteed"),
-          (col("gp") === 1).as("guaranteed_present"),
-          (col("bok") === 1).as("bounds_ok"))
-    }),
-
-    "stream_mg" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // STREAMING Misra-Gries: the ≤k-pair summary accumulates over the
-      // lineitem file stream (complete mode). Estimates are merge-order-
-      // dependent BY DESIGN, but the MG theorems hold under any order —
-      // so the theorem-level readout (guaranteed-hitter presence, bound
-      // bits vs exact batch counts) hash-matches sk_mg's oracle no
-      // matter how the source micro-batches. The live heavy-hitters
-      // monitor: flag a hot key while the log is still arriving.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val k = 2
-      val schema = s.read.parquet(s"$dir/lineitem.parquet").schema
-      val stream = s.readStream.schema(schema).parquet(s"$dir/[l]ineitem.parquet")
-        .select(expr("ascii(l_returnflag)").cast("long").as("key"))
-      val agg = stream.agg(
-        graft.functions.SketchAgg.misraGries(col("key"), k).as("mg"))
-      s.catalog.dropTempView("graft_stream_mg")
-      val q = agg.writeStream.format("memory").queryName("graft_stream_mg")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val cand = s.table("graft_stream_mg")
-        .select(explode(col("mg")).as("c"))
-        .select(col("c.key").as("key"), col("c.est").as("est"))
-      val li = T(s, dir, "lineitem")
-        .select(expr("ascii(l_returnflag)").cast("long").as("key"))
-      val exact = li.groupBy("key").agg(count(lit(1)).as("f"))
-      val tot = exact.agg(sum("f").as("n_total"))
-      exact.crossJoin(broadcast(tot)).join(broadcast(cand), Seq("key"), "left")
-        .agg(max("n_total").as("n_total"),
-          sum(when(col("f") * (k + 1) > col("n_total"), 1L).otherwise(0L))
-            .as("n_guaranteed"),
-          min(when(col("f") * (k + 1) > col("n_total"),
-            col("est").isNotNull.cast("int")).otherwise(1)).as("gp"),
-          min(when(col("est").isNotNull,
-            (col("est") <= col("f") &&
-              (col("f") - col("est")) * (k + 1) <= col("n_total")).cast("int"))
-            .otherwise(1)).as("bok"))
-        .select(col("n_total"), lit(k.toLong).as("k"), col("n_guaranteed"),
-          (col("gp") === 1).as("guaranteed_present"),
-          (col("bok") === 1).as("bounds_ok"))
-    }),
-
-    "sk_bloom_fpr" -> ((s, dir) => {
-      // measured Bloom false-positive rate (the empirical check behind
-      // sk_bloom_planner's math): k=2 md5-derived positions in a 2²¹-bit
-      // filter built from distinct order keys (word/bit_or packing, the
-      // q_bitmap shape), probed with keys shifted +10⁸ (guaranteed
-      // absent). Build and probe are each one keyed shuffle; the filter
-      // is ~64K words.
-      def h(tag: String, c: String) =
-        s"CAST(conv(substr(md5(concat('$tag:', CAST($c AS STRING))), 1, 15), 16, 10) AS BIGINT) % 2097152"
-      val keys = T(s, dir, "orders").select(col("o_orderkey").as("x"))
-        .distinct().localCheckpoint(true) // build + probe sides
-      val words = keys
-        .select(explode(array(expr(h("b1", "x")), expr(h("b2", "x")))).as("pos"))
-        .select(expr("pos div 32").as("word"),
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))").as("bit"))
-        .groupBy("word").agg(expr("bit_or(bit)").as("bits"))
-        .localCheckpoint(true) // probed twice
-      val probes = keys.select((col("x") + 100000000L).as("p"))
-        .withColumn("h1", expr(h("b1", "p")))
-        .withColumn("h2", expr(h("b2", "p")))
-      val looked = probes
-        .join(words.select(col("word").as("w1"), col("bits").as("bb1")),
-          expr("h1 div 32") === col("w1"), "left")
-        .join(words.select(col("word").as("w2"), col("bits").as("bb2")),
-          expr("h2 div 32") === col("w2"), "left")
-        .withColumn("hit", expr(
-          """coalesce(bb1 & shiftleft(CAST(1 AS BIGINT), CAST(h1 % 32 AS INT)), 0) != 0
-            | AND coalesce(bb2 & shiftleft(CAST(1 AS BIGINT), CAST(h2 % 32 AS INT)), 0) != 0"""
-            .stripMargin))
-      looked.agg(count(lit(1)).as("n_probes"),
-          sum(when(col("hit"), 1L).otherwise(0L)).as("n_false_pos"))
-        .crossJoin(broadcast(keys.agg(count(lit(1)).as("n_keys"))))
-        .select(col("n_keys"), lit(2097152L).as("m_bits"), col("n_probes"),
-          col("n_false_pos"),
-          expr("(n_false_pos * 1000000) div n_probes").as("fpr_micro"))
-    }),
-
-    "q_cochran_q" -> ((s, dir) => {
-      // Cochran's Q: did the three engagement behaviors (view / click /
-      // purchase, matched within user) occur at the same rate — the
-      // k-treatment generalization of q_mcnemar (k=2 reduces to it).
-      // Q = (k−1)·[k·ΣC_j² − (ΣC_j)²] / [k·ΣR_i − ΣR_i²]: both sides
-      // exact integers from ONE conditional-agg pass (squares through
-      // DECIMAL so billion-user column totals never wrap), one mirrored
-      // double at the end; χ²₍₂₎ 5% critical value as a literal micro.
-      val f = events(s, dir).groupBy("user_id").agg(
-        max(when(col("event_type") === "view", 1L).otherwise(0L)).as("v"),
-        max(when(col("event_type") === "click", 1L).otherwise(0L)).as("c"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("p"))
-      f.agg(count(lit(1)).as("n_users"),
-          sum("v").as("cv"), sum("c").as("cc"), sum("p").as("cp"),
-          sum(expr("v + c + p")).as("sr"),
-          sum(expr("(v + c + p) * (v + c + p)")).as("sr2"))
-        .select(col("n_users"), col("cv").as("c_view"), col("cc").as("c_click"),
-          col("cp").as("c_purchase"),
-          expr("""3 * (CAST(cv AS DECIMAL(38,0)) * cv + CAST(cc AS DECIMAL(38,0)) * cc
-                 + CAST(cp AS DECIMAL(38,0)) * cp)
-                 - CAST(cv + cc + cp AS DECIMAL(38,0)) * (cv + cc + cp)""").as("num"),
-          (lit(3L) * col("sr") - col("sr2")).as("den"))
-        .select(col("n_users"), col("c_view"), col("c_click"), col("c_purchase"),
-          expr("""CASE WHEN den = 0 THEN CAST(NULL AS BIGINT)
-                  ELSE CAST(round(2.0 * CAST(num AS DOUBLE) / CAST(den AS DOUBLE)
-                    * 1000000) AS BIGINT) END""").as("q_micro"))
-        .withColumn("significant", col("q_micro") > 5991465L)
-    }),
-
-    "q_capture_recapture" -> ((s, dir) => {
-      // Lincoln–Petersen population estimate, Chapman-corrected: how
-      // many users EXIST given two observation windows (first / second
-      // half of the month) — the "how much are we not seeing"
-      // data-quality number. N̂ = (n1+1)(n2+1)/(m+1) − 1 with the exact
-      // product in micro-integer division; Chapman's variance for the
-      // Wald CI is the one mirrored double chain. One distinct-user
-      // pass builds both window flags.
-      val f = events(s, dir).groupBy("user_id").agg(
-        max(when(col("ts") < lit("2024-01-15 00:00:00").cast("timestamp"), 1L)
-          .otherwise(0L)).as("w1"),
-        max(when(col("ts") >= lit("2024-01-15 00:00:00").cast("timestamp"), 1L)
-          .otherwise(0L)).as("w2"))
-      f.agg(sum("w1").as("n1"), sum("w2").as("n2"),
-          sum(expr("w1 * w2")).as("m"))
-        .select(col("n1"), col("n2"), col("m"),
-          expr("""CAST((CAST(n1 + 1 AS DECIMAL(38,0)) * (n2 + 1) * 1000000)
-                 div (m + 1) AS BIGINT) - 1000000""").as("nhat_micro"),
-          expr("""CAST(round(sqrt(CAST(CAST(n1 + 1 AS DECIMAL(38,0)) * (n2 + 1)
-                 * (n1 - m) * (n2 - m) AS DOUBLE)
-                 / (CAST(m + 1 AS DOUBLE) * CAST(m + 1 AS DOUBLE)
-                    * CAST(m + 2 AS DOUBLE))) * 1000000) AS BIGINT)""").as("se_micro"))
-        .select(col("n1"), col("n2"), col("m"), col("nhat_micro"), col("se_micro"),
-          (col("nhat_micro") - expr("CAST(round(1.96 * se_micro) AS BIGINT)")).as("lo_micro"),
-          (col("nhat_micro") + expr("CAST(round(1.96 * se_micro) AS BIGINT)")).as("hi_micro"))
-    }),
-
-    "q_mcnemar" -> ((s, dir) => {
-      // McNemar's paired test: did per-part return behavior CHANGE
-      // between 1997 and 1998? Only the discordant pairs b (returned in
-      // '97 only) and c ('98 only) matter: χ² = (b−c)²/(b+c), exact
-      // integers, the 5% critical value as the same literal micro as
-      // stream_srm. One conditional-agg pass builds both year flags.
-      val flags = T(s, dir, "lineitem")
-        .filter(expr("year(l_shipdate) IN (1997, 1998)"))
-        .groupBy("l_partkey")
-        .agg(max(when(expr("year(l_shipdate) = 1997 AND l_returnflag = 'R'"), 1L)
-            .otherwise(0L)).as("r97"),
-          max(when(expr("year(l_shipdate) = 1998 AND l_returnflag = 'R'"), 1L)
-            .otherwise(0L)).as("r98"),
-          max(when(expr("year(l_shipdate) = 1997"), 1L).otherwise(0L)).as("in97"),
-          max(when(expr("year(l_shipdate) = 1998"), 1L).otherwise(0L)).as("in98"))
-        .filter(col("in97") === 1L && col("in98") === 1L)
-      flags.agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("r97") === 1L && col("r98") === 0L, 1L).otherwise(0L)).as("b"),
-          sum(when(col("r97") === 0L && col("r98") === 1L, 1L).otherwise(0L)).as("c"))
-        .select(col("n_pairs"), col("b"), col("c"),
-          expr("CASE WHEN b + c = 0 THEN 0 ELSE ((b - c) * (b - c) * 1000000) div (b + c) END")
-            .as("chi2_micro"))
-        .withColumn("significant", col("chi2_micro") > 3841459L)
-    }),
-
-    "q_price_index" -> ((s, dir) => {
-      // Laspeyres / Paasche / unit-value price indices 1997→1998 over
-      // matched parts: per-part unit values are cents-rational, rounded
-      // by ONE integral divide per part (order-free), the index is one
-      // more divide over exact sums — the BI price-deflator read.
-      // DECIMAL(38,0) for the cross products.
-      val py = T(s, dir, "lineitem")
-        .filter(expr("year(l_shipdate) IN (1997, 1998)"))
-        .groupBy("l_partkey")
-        .agg(sum(when(expr("year(l_shipdate) = 1997"),
-            expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).otherwise(0L)).as("rev0"),
-          sum(when(expr("year(l_shipdate) = 1997"),
-            expr("CAST(l_quantity AS BIGINT)")).otherwise(0L)).as("q0"),
-          sum(when(expr("year(l_shipdate) = 1998"),
-            expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).otherwise(0L)).as("rev1"),
-          sum(when(expr("year(l_shipdate) = 1998"),
-            expr("CAST(l_quantity AS BIGINT)")).otherwise(0L)).as("q1"))
-        .filter(col("q0") > 0L && col("q1") > 0L)
-      py.agg(count(lit(1)).as("n_parts"),
-          sum(expr("(rev1 * q0) div q1")).as("l_num"), sum("rev0").as("l_den"),
-          sum("rev1").as("p_num"), sum(expr("(rev0 * q1) div q0")).as("p_den"),
-          sum(expr("CAST(rev1 AS DECIMAL(38,0))")).as("r1"),
-          sum(expr("CAST(q1 AS DECIMAL(38,0))")).as("tq1"),
-          sum(expr("CAST(rev0 AS DECIMAL(38,0))")).as("r0"),
-          sum(expr("CAST(q0 AS DECIMAL(38,0))")).as("tq0"))
-        .select(col("n_parts"),
-          expr("(l_num * 1000000) div l_den").as("laspeyres_micro"),
-          expr("(p_num * 1000000) div p_den").as("paasche_micro"),
-          expr("CAST((r1 * tq0 * 1000000) div (tq1 * r0) AS BIGINT)")
-            .as("unit_value_micro"))
-    }),
-
-    "q_key_discovery" -> ((s, dir) => {
-      // candidate-key discovery (the uniqueness half of q_fd_check):
-      // for each column set, distinct combinations vs rows — written as
-      // the two-level combo agg so the distinct is map-side combinable.
-      def kd(df: DataFrame, name: String, cols: Seq[String]) = {
-        val d = df.groupBy(cols.map(col): _*).agg(count(lit(1)).as("c"))
-          .agg(count(lit(1)).as("n_distinct"), sum("c").as("n_rows"),
-            max("c").as("max_dup"))
-        d.select(lit(name).as("candidate"), col("n_rows"), col("n_distinct"),
-          col("max_dup"), (col("n_rows") === col("n_distinct")).as("is_key"))
-      }
-      val o = T(s, dir, "orders"); val li = T(s, dir, "lineitem")
-      kd(o, "orders(o_orderkey)", Seq("o_orderkey"))
-        .unionByName(kd(o, "orders(o_custkey)", Seq("o_custkey")))
-        .unionByName(kd(o, "orders(o_custkey,o_orderdate)",
-          Seq("o_custkey", "o_orderdate")))
-        .unionByName(kd(li, "lineitem(l_orderkey)", Seq("l_orderkey")))
-        .unionByName(kd(li, "lineitem(l_orderkey,l_linenumber)",
-          Seq("l_orderkey", "l_linenumber")))
-    }),
-
-    "q_paired_ttest" -> ((s, dir) => {
-      // paired t on the q_mcnemar panel's continuous outcome: per-part
-      // revenue difference 1998−1997 over matched parts, t = Σd /
-      // √(n(nΣd² − (Σd)²)/(n−1)) computed from exact DECIMAL(38,0)
-      // sums, rounded ONCE to micro. The pairing removes between-part
-      // variance — the right test when the same unit is observed twice.
-      val d = T(s, dir, "lineitem")
-        .filter(expr("year(l_shipdate) IN (1997, 1998)"))
-        .groupBy("l_partkey")
-        .agg(sum(when(expr("year(l_shipdate) = 1998"),
-            expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).otherwise(0L)).as("rev1"),
-          sum(when(expr("year(l_shipdate) = 1997"),
-            expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).otherwise(0L)).as("rev0"),
-          max(when(expr("year(l_shipdate) = 1997"), 1L).otherwise(0L)).as("in97"),
-          max(when(expr("year(l_shipdate) = 1998"), 1L).otherwise(0L)).as("in98"))
-        .filter(col("in97") === 1L && col("in98") === 1L)
-        .select(expr("CAST(rev1 - rev0 AS DECIMAL(38,0))").as("d"))
-      d.agg(count(lit(1)).as("n"), sum("d").as("sd"),
-          sum(expr("d * d")).as("sdd"))
-        .select(col("n"), expr("CAST(sd AS BIGINT)").as("sum_d_c"),
-          expr("""CAST(round(CAST(sd AS DOUBLE)
-                 | / sqrt(CAST(n * sdd - sd * sd AS DOUBLE) / CAST(n - 1 AS DOUBLE))
-                 | * 1000000) AS BIGINT)""".stripMargin).as("t_micro"))
-    }),
-
-    "ev_ratio_delta" -> ((s, dir) => {
-      // ratio-metric inference (spend per event) with the DELTA METHOD:
-      // naive per-user averaging is biased and naive SEs ignore the
-      // denominator's variance — the correct read is R = Σx/Σy with
-      // Var(R) ≈ (s²_x + R²s²_y − 2R·s_xy)/(n·ȳ²). Per-user integer
-      // sums (user-consistent arms via user_id % 2), one double pass at
-      // the end, both micro-rounded once.
-      val per = events(s, dir)
-        .groupBy((col("user_id") % 2).as("arm"), col("user_id"))
-        .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("x"),
-          count(lit(1)).as("y"))
-        .select(col("arm"), expr("CAST(x AS DECIMAL(38,0))").as("x"),
-          expr("CAST(y AS DECIMAL(38,0))").as("y"))
-      per.groupBy("arm")
-        .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
-          sum(expr("x * x")).as("sxx"), sum(expr("y * y")).as("syy"),
-          sum(expr("x * y")).as("sxy"))
-        .select(col("arm"), col("n"),
-          expr("CAST((sx * 1000000) div sy AS BIGINT)").as("ratio_micro"),
-          expr("""CAST(round(sqrt((
-                 |   (CAST(n * sxx - sx * sx AS DOUBLE) / (CAST(n AS DOUBLE) * (n - 1)))
-                 | + (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE)) * (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE))
-                 |   * (CAST(n * syy - sy * sy AS DOUBLE) / (CAST(n AS DOUBLE) * (n - 1)))
-                 | - 2.0 * (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE))
-                 |   * (CAST(n * sxy - sx * sy AS DOUBLE) / (CAST(n AS DOUBLE) * (n - 1)))
-                 | ) / n) / (CAST(sy AS DOUBLE) / n) * 1000000) AS BIGINT)""".stripMargin)
-            .as("se_micro"))
-    }),
-
-    "q_iv" -> ((s, dir) => {
-      // information value / weight of evidence of the quantity feature
-      // against the returned flag — the credit-scoring feature screen.
-      // Laplace +1 smoothing (K = 10 literal bins) keeps every log
-      // argument positive and rational; ln is the only transcendental,
-      // rounded once per bin; the per-bin IV contribution sums
-      // order-free downstream.
-      val bins = T(s, dir, "lineitem")
-        .groupBy(expr("least(CAST(l_quantity AS BIGINT) div 10, 9)").as("bin"))
-        .agg(sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("pos"),
-          sum(when(col("l_returnflag") =!= "R", 1L).otherwise(0L)).as("neg"))
-        .localCheckpoint(true) // totals + per-bin read one frame
-      val tot = bins.agg(sum("pos").as("tp"), sum("neg").as("tn"))
-      bins.crossJoin(broadcast(tot))
-        .select(col("bin"), col("pos"), col("neg"),
-          expr("""CAST(round(ln((CAST(pos + 1 AS DOUBLE) * (tn + 10))
-                 | / (CAST(neg + 1 AS DOUBLE) * (tp + 10))) * 1000000) AS BIGINT)"""
-            .stripMargin).as("woe_micro"),
-          expr("""CAST(round((CAST(pos + 1 AS DOUBLE) / (tp + 10)
-                 | - CAST(neg + 1 AS DOUBLE) / (tn + 10))
-                 | * ln((CAST(pos + 1 AS DOUBLE) * (tn + 10))
-                 |      / (CAST(neg + 1 AS DOUBLE) * (tp + 10))) * 1000000) AS BIGINT)"""
-            .stripMargin).as("iv_micro"))
-    }),
-
-    "ta_rouge" -> ((s, dir) => {
-      // set-ROUGE-1/2 between candidate near-dup pairs (consecutive
-      // same-language docs — the dd_components edge set, so the pair
-      // list is deterministic and bounded by the corpus, never
-      // quadratic): distinct-gram precision/recall/F in integer micro.
-      // The summarization-eval metric applied to dedup verification —
-      // LSH says "maybe dup", ROUGE quantifies how much actually
-      // overlaps.
-      val d = T(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          expr("filter(split(lower(text), '\\\\s+'), x -> x != '')").as("toks"))
-        .select(col("doc_id"), col("lang"),
-          expr("array_distinct(toks)").as("u1"),
-          expr("""array_distinct(transform(slice(toks, 1, greatest(size(toks) - 1, 0)),
-                 |  (x, i) -> concat(x, ' ', element_at(toks, i + 2))))""".stripMargin)
-            .as("u2"))
-        .localCheckpoint(true) // both sides of the consecutive-id join
-      val pairs = d.select((col("doc_id") + 1).as("doc_id"), col("doc_id").as("a_id"),
-          col("lang").as("lang_a"), col("u1").as("a1"), col("u2").as("a2"))
-        .join(d.select(col("doc_id"), col("doc_id").as("b_id"), col("lang").as("lang_b"),
-          col("u1").as("b1"), col("u2").as("b2")), Seq("doc_id"))
-        .filter(col("lang_a") === col("lang_b"))
-      pairs.select(col("a_id"), col("b_id"),
-          expr("size(filter(a1, x -> array_contains(b1, x)))").cast("long").as("o1"),
-          size(col("a1")).cast("long").as("na1"), size(col("b1")).cast("long").as("nb1"),
-          expr("size(filter(a2, x -> array_contains(b2, x)))").cast("long").as("o2"),
-          size(col("a2")).cast("long").as("na2"), size(col("b2")).cast("long").as("nb2"))
-        .select(col("a_id"), col("b_id"),
-          expr("CASE WHEN na1 = 0 THEN 0 ELSE (o1 * 1000000) div na1 END").as("r1_p_micro"),
-          expr("CASE WHEN nb1 = 0 THEN 0 ELSE (o1 * 1000000) div nb1 END").as("r1_r_micro"),
-          expr("CASE WHEN na1 + nb1 = 0 THEN 0 ELSE (2 * o1 * 1000000) div (na1 + nb1) END")
-            .as("r1_f_micro"),
-          expr("CASE WHEN na2 + nb2 = 0 THEN 0 ELSE (2 * o2 * 1000000) div (na2 + nb2) END")
-            .as("r2_f_micro"))
-    }),
-
-    "ev_retention" -> ((s, dir) => {
-      // classic N-day retention curve: each user's cohort is their
-      // first active day; the day-k rate is the share of the cohort
-      // active exactly k days later (k = 1, 3, 7). Distinct (user, day)
-      // first, then ONE join of cohorts to activity and a conditional
-      // agg — no per-user window, no k-way self-join.
-      val days = events(s, dir)
-        .select(col("user_id"), expr("unix_timestamp(ts) div 86400").as("day_idx"))
-        .distinct().localCheckpoint(true) // cohort agg + activity probe
-      val cohort = days.groupBy("user_id").agg(min("day_idx").as("d0"))
-      cohort.join(days, Seq("user_id"))
-        .groupBy(col("d0"))
-        .agg(count_distinct(col("user_id")).as("n_cohort"),
-          sum(when(col("day_idx") === col("d0") + 1L, 1L).otherwise(0L)).as("n_d1"),
-          sum(when(col("day_idx") === col("d0") + 3L, 1L).otherwise(0L)).as("n_d3"),
-          sum(when(col("day_idx") === col("d0") + 7L, 1L).otherwise(0L)).as("n_d7"))
-        .select(col("d0").as("cohort_day"), col("n_cohort"),
-          expr("(n_d1 * 1000000) div n_cohort").as("d1_micro"),
-          expr("(n_d3 * 1000000) div n_cohort").as("d3_micro"),
-          expr("(n_d7 * 1000000) div n_cohort").as("d7_micro"))
-    }),
-
-    "dd_canonical" -> ((s, dir) => {
-      // canonical-record selection: within each duplicate cluster
-      // (dd_components' transitive islands), keep the HIGHEST-QUALITY
-      // copy (longest text, ties → smallest id) instead of the
-      // arbitrary min-id — the survivorship policy real dedup ships
-      // with. Components machinery + ONE per-cluster rank window.
-      import org.apache.spark.sql.expressions.Window
-      val d = T(s, dir, "documents")
-      val a = d.select((col("doc_id") + 1).as("nxt"),
-        col("doc_id").as("src"), col("lang").as("lang_a"))
-      val b = d.select(col("doc_id").as("nxt"),
-        col("doc_id").as("dst"), col("lang").as("lang_b"))
-      val edges = a.join(b, Seq("nxt"))
-        .where(col("lang_a") === col("lang_b")).select("src", "dst")
-      val comp = ext.Graph.componentsFor(d.select("doc_id"), "doc_id", edges)
-      val w = Window.partitionBy("component")
-        .orderBy(col("n_chars").desc, col("doc_id").asc)
-      d.select("doc_id", "n_chars").join(comp, "doc_id")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("component").as("cluster"), col("doc_id").as("canonical_id"),
-          col("n_chars"))
-    }),
-
-    "q_xyz" -> ((s, dir) => {
-      // XYZ demand-variability classes (the q_abc companion): per part,
-      // the coefficient of variation of monthly demand — X (steady,
-      // cv < 0.5), Y (< 1.0), Z (erratic) by literal micro thresholds.
-      // Two cascaded hash aggs + one class panel; parts with a single
-      // observed month are excluded (cv undefined, documented).
-      val monthly = T(s, dir, "lineitem")
-        .groupBy(col("l_partkey"), expr("date_trunc('month', l_shipdate)").as("m"))
-        .agg(sum(expr("CAST(l_quantity AS BIGINT)")).as("q"))
-      val cv = monthly.groupBy("l_partkey")
-        .agg(count(lit(1)).as("n"), sum("q").as("sq"), sum(expr("q * q")).as("sqq"))
-        .filter(col("n") >= 2L)
-        .select(expr("""CAST(round(sqrt(CAST(n * sqq - sq * sq AS DOUBLE)
-                       | / (CAST(n AS DOUBLE) * (n - 1)))
-                       | / (CAST(sq AS DOUBLE) / n) * 1000000) AS BIGINT)""".stripMargin)
-          .as("cv_micro"))
-      cv.select(when(col("cv_micro") < 500000L, "X")
-          .when(col("cv_micro") < 1000000L, "Y").otherwise("Z").as("xyz_class"),
-          col("cv_micro"))
-        .groupBy("xyz_class")
-        .agg(count(lit(1)).as("n_parts"),
-          expr("sum(cv_micro) div count(1)").as("avg_cv_micro"))
-    }),
-
-    "q_rolling_median" -> ((s, dir) => {
-      // 7-day rolling MEDIAN of daily revenue — the robust twin of
-      // q_moving's rolling mean: the bounded window materializes ≤7
-      // values per day (collect over the day domain — whitelisted),
-      // sorted in-row, lower median by integral rank. Integer cents
-      // end-to-end.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.orderBy("d").rowsBetween(-6, Window.currentRow)
-      T(s, dir, "lineitem")
-        .groupBy(col("l_shipdate").as("d"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("x"))
-        .withColumn("win", sort_array(collect_list(col("x")).over(w)))
-        .select(col("d"), col("x"),
-          size(col("win")).cast("long").as("n_win"),
-          expr("element_at(win, CAST((size(win) + 1) div 2 AS INT))").as("med_c"))
-    }),
-
-    "ev_lifecycle" -> ((s, dir) => {
-      // daily growth accounting: each active user-day classified as new
-      // (first ever), retained (active yesterday), returning (gap 2–7
-      // days) or resurrected (gap > 7) — the DAU decomposition growth
-      // teams read. Distinct (user, day), ONE user-partitioned lag,
-      // one day panel agg.
-      import org.apache.spark.sql.expressions.Window
-      val days = events(s, dir)
-        .select(col("user_id"), expr("unix_timestamp(ts) div 86400").as("day_idx"))
-        .distinct()
-      val w = Window.partitionBy("user_id").orderBy("day_idx")
-      days.withColumn("gap", col("day_idx") - lag(col("day_idx"), 1).over(w))
-        .withColumn("cls", when(col("gap").isNull, "new")
-          .when(col("gap") === 1L, "retained")
-          .when(col("gap") <= 7L, "returning").otherwise("resurrected"))
-        .groupBy(col("day_idx"))
-        .agg(count(lit(1)).as("n_active"),
-          sum(when(col("cls") === "new", 1L).otherwise(0L)).as("n_new"),
-          sum(when(col("cls") === "retained", 1L).otherwise(0L)).as("n_retained"),
-          sum(when(col("cls") === "returning", 1L).otherwise(0L)).as("n_returning"),
-          sum(when(col("cls") === "resurrected", 1L).otherwise(0L)).as("n_resurrected"))
-    }),
-
-    "ev_shapley" -> ((s, dir) => {
-      // Shapley-value channel attribution over touch coalitions: v(S) =
-      // observed conversion rate of users whose touched-channel set is
-      // S (view/click/signup → purchase), φ_c = Σ_S |S|!(k−|S|−1)!/k! ·
-      // (v(S∪c) − v(S)) with the k=3 factorial weights as exact sixths
-      // (per-term integral div, order-free sum). ONE user agg → an
-      // 8-row coalition panel → a 12-row literal term table. The
-      // game-theoretic attribution ev_attribution's heuristics
-      // approximate.
-      val users = events(s, dir)
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "view", 1L).otherwise(0L)).as("hv"),
-          max(when(col("event_type") === "click", 2L).otherwise(0L)).as("hc"),
-          max(when(col("event_type") === "signup", 4L).otherwise(0L)).as("hs"),
-          max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
-      val panel = users
-        .groupBy((col("hv") + col("hc") + col("hs")).as("mask"))
-        .agg(count(lit(1)).as("n_users"), sum("conv").as("n_conv"))
-        .select(col("mask"), expr("(n_conv * 1000000) div n_users").as("v_micro"))
-        .localCheckpoint(true) // joined twice by the term table
-      val terms = s.createDataFrame(shapleyTerms)
-        .toDF("channel", "with_mask", "without_mask", "w_num")
-      terms
-        .join(broadcast(panel.select(col("mask").as("with_mask"),
-          col("v_micro").as("v_with"))), Seq("with_mask"), "left")
-        .join(broadcast(panel.select(col("mask").as("without_mask"),
-          col("v_micro").as("v_without"))), Seq("without_mask"), "left")
-        .select(col("channel"),
-          expr("(w_num * (coalesce(v_with, 0) - coalesce(v_without, 0))) div 6")
-            .as("term"))
-        .groupBy("channel").agg(sum("term").as("phi_micro"))
-    }),
-
-    "sim_rproj" -> ((s, dir) => {
-      // Johnson-Lindenstrauss random projection 64→8 with a FIXED ±1
-      // sign matrix (md5-derived at build time, embedded as literals in
-      // both engines): per vector, the projected squared norm /8 vs the
-      // original — the distortion audit that justifies projecting
-      // BEFORE the expensive ANN stages. Pure per-row codegen
-      // arithmetic in one fixed textual order; no shuffle at all.
-      graft.functions.VectorExprs.register(s)
-      val nn = ext.Vectors.dot(col("embedding"), col("embedding"))
-      val base = T(s, dir, "embeddings")
-        .select(col("vec_id") +: nn.as("nn") +:
-          (0 until 8).map(j =>
-            expr(rprojExprSql(j, "element_at(embedding, %d)")).as(s"p$j")): _*)
-      base
-        .withColumn("pn8", expr(
-          (0 until 8).map(j => s"p$j * p$j").mkString("(", " + ", ") / 8.0")))
-        .select(col("vec_id"),
-          expr("CAST(round(nn * 1000000) AS BIGINT)").as("nn_micro"),
-          expr("CAST(round(pn8 * 1000000) AS BIGINT)").as("pn8_micro"),
-          expr("CASE WHEN nn = 0.0 THEN CAST(0 AS BIGINT) ELSE CAST(round(pn8 / nn * 1000000) AS BIGINT) END")
-            .as("ratio_micro"))
-    }),
-
-    "ta_fertility" -> ((s, dir) => {
-      // tokenizer fertility per language: chars per BPE-ish token and
-      // BPE-ish tokens per whitespace word — the standard tokenizer-
-      // efficiency read (high fertility → wasted context budget). One
-      // hash agg over ta_tokens' counting expressions.
-      T(s, dir, "documents")
-        .select(col("lang"),
-          ext.TextAnalysis.tokenCount(col("text")).as("nw"),
-          ext.TextAnalysis.bpeishTokenCount(col("text")).as("nb"),
-          length(col("text")).cast("long").as("nc"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum("nc").as("chars"),
-          sum("nb").as("bpeish"), sum("nw").as("words"))
-        .select(col("lang"), col("n_docs"), col("chars"), col("bpeish"),
-          expr("(chars * 1000000) div bpeish").as("chars_per_tok_micro"),
-          expr("(bpeish * 1000000) div words").as("fertility_micro"))
-    }),
-
-    "q_kendall" -> ((s, dir) => {
-      // Kendall τ-b between the daily revenue and daily quantity series:
-      // concordant−discordant over the bounded day panel (broadcast
-      // side, like q_mannkendall — never a data-scale pattern), tie
-      // corrections per axis in exact integers, ONE double sqrt at the
-      // end. The rank-correlation that tolerates ties better than
-      // Spearman.
-      val daily = T(s, dir, "lineitem")
-        .groupBy(col("l_shipdate").as("d"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("x"),
-          sum(expr("CAST(l_quantity AS BIGINT)")).as("y"))
-        .localCheckpoint(true) // pair join + tie panels + n
-      val cd = daily.select(col("d").as("d1"), col("x").as("x1"), col("y").as("y1"))
-        .join(broadcast(daily.select(col("d").as("d2"), col("x").as("x2"),
-          col("y").as("y2"))), col("d1") < col("d2"))
-        .agg(sum(expr("CAST(sign(x2 - x1) * sign(y2 - y1) AS BIGINT)")).as("s"))
-      val tx = daily.groupBy("x").agg(count(lit(1)).as("t"))
-        .agg(sum(expr("t * (t - 1) div 2")).as("n1"))
-      val ty = daily.groupBy("y").agg(count(lit(1)).as("t"))
-        .agg(sum(expr("t * (t - 1) div 2")).as("n2"))
-      val n = daily.agg(count(lit(1)).as("n"))
-      cd.crossJoin(broadcast(tx)).crossJoin(broadcast(ty)).crossJoin(broadcast(n))
-        .select(col("n"), col("s"), col("n1"), col("n2"),
-          expr("""CAST(round(CAST(s AS DOUBLE)
-                 | / sqrt((CAST(n * (n - 1) div 2 - n1 AS DOUBLE))
-                 |        * (CAST(n * (n - 1) div 2 - n2 AS DOUBLE)))
-                 | * 1000000) AS BIGINT)""".stripMargin).as("tau_micro"))
-    }),
-
-    "ev_session_sensitivity" -> ((s, dir) => {
-      // session-timeout sensitivity sweep: sessions(τ) = users + gaps
-      // exceeding τ — so the τ ∈ {15, 30, 60} min panel needs ONE
-      // user-partitioned lag pass and a conditional agg, not three
-      // sessionizations. The parameter-sweep-as-conditional-agg pattern.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val gaps = events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .withColumn("gap_s",
-          expr("unix_timestamp(ts)") - expr("unix_timestamp(lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id))"))
-      val agg = gaps.agg(
-        count_distinct(col("user_id")).as("n_users"),
-        sum(when(col("gap_s") > 900L, 1L).otherwise(0L)).as("g15"),
-        sum(when(col("gap_s") > 1800L, 1L).otherwise(0L)).as("g30"),
-        sum(when(col("gap_s") > 3600L, 1L).otherwise(0L)).as("g60"))
-      val taus = s.createDataFrame(Seq((900L, "g15"), (1800L, "g30"), (3600L, "g60")))
-        .toDF("tau_s", "gcol")
-      taus.crossJoin(broadcast(agg))
-        .select(col("tau_s"), col("n_users"),
-          (col("n_users") + expr(
-            "CASE gcol WHEN 'g15' THEN g15 WHEN 'g30' THEN g30 ELSE g60 END"))
-            .as("n_sessions"))
-        .withColumn("sessions_per_user_micro",
-          expr("(n_sessions * 1000000) div n_users"))
-    }),
-
-    "mm_entropy" -> ((s, dir) => {
-      // Shannon entropy of each decoded image's 16-bin luma histogram in
-      // micro-nats: per-bin terms −p·ln p are micro-rounded BEFORE the
-      // sum (order-free; ln is the only transcendental). Flat images
-      // score 0; the planted sawtooths land near ln 16. Decode is
-      // per-partition; the agg is 16 rows per image.
-      implicit val sp: SparkSession = s
-      ext.Multimodal.lumaHistogram(
-          ext.Multimodal.phashMedia(T(s, dir, "documents"))).toDF()
-        .filter(col("n_px") > 0L)
-        .withColumn("term", expr(
-          """CAST(round(-(CAST(n_px AS DOUBLE) / 1024.0)
-             | * ln(CAST(n_px AS DOUBLE) / 1024.0) * 1000000) AS BIGINT)""".stripMargin))
-        .groupBy("media_id")
-        .agg(count(lit(1)).as("n_occupied"), sum("term").as("entropy_micronats"))
-    }),
-
-    "q_cpk" -> ((s, dir) => {
-      // process capability Cp / Cpk per return flag against literal
-      // quantity spec limits [5, 45] — the SPC read that complements
-      // q_cusum's drift alarm: exact integer sums, sample σ, ONE double
-      // formula micro-rounded. Cpk < 1 means the process breaches spec.
-      T(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          sum(expr("CAST(l_quantity AS BIGINT)")).as("sq"),
-          sum(expr("CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)")).as("sqq"))
-        .select(col("l_returnflag"), col("n"),
-          expr("""CAST(round((45.0 - 5.0)
-                 | / (6.0 * sqrt(CAST(n * sqq - sq * sq AS DOUBLE)
-                 |               / (CAST(n AS DOUBLE) * (n - 1)))) * 1000000) AS BIGINT)"""
-            .stripMargin).as("cp_micro"),
-          expr("""CAST(round(least(45.0 - CAST(sq AS DOUBLE) / n,
-                 |                 CAST(sq AS DOUBLE) / n - 5.0)
-                 | / (3.0 * sqrt(CAST(n * sqq - sq * sq AS DOUBLE)
-                 |               / (CAST(n AS DOUBLE) * (n - 1)))) * 1000000) AS BIGINT)"""
-            .stripMargin).as("cpk_micro"))
-    }),
-
-    "ev_late" -> ((s, dir) => {
-      // out-of-order arrival audit: with event_id as the arrival order,
-      // an event is LATE when its timestamp precedes the running max of
-      // everything that arrived before it (per user — the partitioned
-      // form of the watermark question streaming cares about). One
-      // user-keyed window; daily panel of late share + worst skew.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"))
-        .withColumn("prev_max", max(col("ts")).over(w))
-        .select(to_date(col("ts")).as("d"),
-          (col("prev_max").isNotNull && col("ts") < col("prev_max")).as("late"),
-          when(col("prev_max").isNotNull && col("ts") < col("prev_max"),
-            expr("unix_timestamp(prev_max) - unix_timestamp(ts)")).otherwise(0L)
-            .as("skew_s"))
-        .groupBy("d")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("late"), 1L).otherwise(0L)).as("n_late"),
-          max("skew_s").as("max_skew_s"))
-        .withColumn("late_micro", expr("(n_late * 1000000) div n_events"))
-    }),
-
-    "q_emd" -> ((s, dir) => {
-      // 1-D earth mover's distance between the returned and kept price
-      // histograms: EMD₁ = Σ_bins |ΔCDF| over the bounded 10-bin domain
-      // (per-bin micro shares first, cumulative over the bin panel —
-      // whitelisted), the drift metric that, unlike PSI/KS, weights HOW
-      // FAR mass moved.
-      import org.apache.spark.sql.expressions.Window
-      val bins = T(s, dir, "lineitem")
-        .groupBy(expr("least(CAST(round(l_extendedprice * 100) AS BIGINT) div 1000000, 9)")
-          .as("bin"))
-        .agg(sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("r"),
-          sum(when(col("l_returnflag") =!= "R", 1L).otherwise(0L)).as("k"))
-        .localCheckpoint(true) // totals + panel
-      val tot = bins.agg(sum("r").as("tr"), sum("k").as("tk"))
-      val w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)
-      bins.crossJoin(broadcast(tot))
-        .withColumn("sr", expr("(r * 1000000) div tr"))
-        .withColumn("sk", expr("(k * 1000000) div tk"))
-        .withColumn("cum_diff", sum(col("sr") - col("sk")).over(w))
-        .agg(count(lit(1)).as("n_bins"),
-          sum(abs(col("cum_diff"))).as("emd_micro"))
-    }),
-
-    "q_hhi" -> ((s, dir) => {
-      // Herfindahl-Hirschman supplier concentration per nation: shares
-      // micro-rounded per supplier (order-free), HHI = Σ share² — the
-      // antitrust metric next to q_gini/q_lorenz. Two cascaded keyed
-      // aggs; > 250000 micro (0.25) is the usual "concentrated" bar.
-      val rev = T(s, dir, "lineitem")
-        .join(T(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_nationkey"), col("s_suppkey"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("rev"))
-        .localCheckpoint(true) // nation totals + shares
-      val nat = rev.groupBy("s_nationkey").agg(sum("rev").as("nrev"))
-      rev.join(nat, "s_nationkey")
-        .withColumn("share_micro", expr("(rev * 1000000) div nrev"))
-        .groupBy(col("s_nationkey").as("nationkey"))
-        .agg(count(lit(1)).as("n_suppliers"),
-          sum(expr("(share_micro * share_micro) div 1000000")).as("hhi_micro"),
-          max("share_micro").as("top_share_micro"))
-        .withColumn("concentrated", col("hhi_micro") > 250000L)
-    }),
-
-    "q_logloss" -> ((s, dir) => {
-      // log-loss of q_calibration's linear risk rule (p = qty·2%,
-      // clamped to [0.01, 0.99]): terms grouped by the BOUNDED
-      // (quantity, outcome) panel first — ≤100 cells — so each −ln term
-      // is computed once, micro-rounded once, and weighted by exact
-      // counts. The proper-scoring-rule companion to q_auc /
-      // q_calibration.
-      val cells = T(s, dir, "lineitem")
-        .groupBy(expr("CAST(l_quantity AS BIGINT)").as("qty"),
-          (col("l_returnflag") === "R").as("y"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("p", expr(
-          "greatest(least(CAST(qty AS DOUBLE) * 0.02, 0.99), 0.01)"))
-        .withColumn("term_micro", expr(
-          """CAST(round(CASE WHEN y THEN -ln(p) ELSE -ln(1.0 - p) END * 1000000)
-             | AS BIGINT)""".stripMargin))
-      cells.agg(sum("n").as("n_rows"),
-          sum(expr("n * term_micro")).as("ll_sum"))
-        .select(col("n_rows"),
-          expr("ll_sum div n_rows").as("logloss_micro"))
-    }),
-
-    "q_volatility" -> ((s, dir) => {
-      // realized volatility per month: daily log-returns of revenue
-      // (micro-rounded once per day — the only ln), monthly vol =
-      // √(Σr²/n) in micro. Return indexing runs on the bounded day
-      // domain (whitelisted); the month panel is tiny.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.orderBy("d")
-      T(s, dir, "lineitem")
-        .groupBy(col("l_shipdate").as("d"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("x"))
-        .withColumn("r_micro", expr(
-          "CAST(round(ln(CAST(x AS DOUBLE) / CAST(lag(x, 1) OVER (ORDER BY d) AS DOUBLE)) * 1000000) AS BIGINT)"))
-        .filter(col("r_micro").isNotNull)
-        .groupBy(expr("date_trunc('month', d)").cast("date").as("month"))
-        .agg(count(lit(1)).as("n_days"),
-          sum("r_micro").as("sum_r_micro"),
-          expr("CAST(round(sqrt(CAST(sum(r_micro * r_micro) AS DOUBLE) / count(1))) AS BIGINT)")
-            .as("vol_micro"))
-    }),
-
-    "q_dense_ids" -> ((s, dir) => {
-      // surrogate-key / dictionary-id assignment: every customer name
-      // gets a dense 0-based id in name order WITHOUT a single-partition
-      // sort — ext.Ranks' range-partitioned rank + offset scalars (the
-      // zipWithIndex replacement that survives 10⁹ keys). The oracle is
-      // the plain row_number the small fixture affords.
-      val base = T(s, dir, "customer")
-        .select(col("c_custkey"), col("c_name"))
-        .withColumn("__one__", lit(1L))
-      ext.Ranks.groupedRank(base, "__one__", Seq(col("c_name")), "rk")
-        .select(col("c_custkey"), col("c_name"), (col("rk") - 1L).as("dense_id"))
-    }),
-
-    "q_residuals" -> ((s, dir) => {
-      // standardized Pearson residuals of the returnflag × linestatus
-      // table — the cell-level diagnostic behind q_chisq's single
-      // statistic: r = (o − e)/√(e(1−rp)(1−cp)), exact integer margins,
-      // ONE double formula per cell micro-rounded. |r| > 2 marks the
-      // driving cells.
-      val cells = T(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("o"))
-        .localCheckpoint(true) // margins + cells
-      val rt = cells.groupBy("l_returnflag").agg(sum("o").as("r"))
-      val ct = cells.groupBy("l_linestatus").agg(sum("o").as("c"))
-      val nt = cells.agg(sum("o").as("n"))
-      cells.join(rt, "l_returnflag").join(ct, "l_linestatus")
-        .crossJoin(broadcast(nt))
-        .select(col("l_returnflag"), col("l_linestatus"), col("o"),
-          // r·c·10⁶ in DECIMAL(38,0): margins in the billions at 100 TB
-          // would wrap the int64 product (e_micro ≤ n·10⁶ still fits BIGINT)
-          expr("CAST((CAST(r AS DECIMAL(38,0)) * c * 1000000) div n AS BIGINT)")
-            .as("e_micro"),
-          expr("""CAST(round((CAST(o AS DOUBLE) - CAST(r AS DOUBLE) * c / n)
-                 | / sqrt(CAST(r AS DOUBLE) * c / n
-                 |        * (1.0 - CAST(r AS DOUBLE) / n)
-                 |        * (1.0 - CAST(c AS DOUBLE) / n)) * 1000000) AS BIGINT)"""
-            .stripMargin).as("resid_micro"))
-        .withColumn("driving", abs(col("resid_micro")) > 2000000L)
-    }),
-
-    "q_dw" -> ((s, dir) => {
-      // Durbin-Watson autocorrelation diagnostic on daily revenue
-      // residuals (mean-detrended): DW = Σ(eₜ−eₜ₋₁)²/Σeₜ², made exact
-      // by scaling through n — numerator Σn²(xₜ−xₜ₋₁)², denominator
-      // Σ(n·xₜ−S)², both DECIMAL(38,0). DW ≈ 2 means independent
-      // residuals; < 1 strong positive autocorrelation. Day-domain lag
-      // (whitelisted).
-      import org.apache.spark.sql.expressions.Window
-      val daily = T(s, dir, "lineitem")
-        .groupBy(col("l_shipdate").as("d"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("x"))
-        .localCheckpoint(true) // totals + lag pass
-      val tot = daily.agg(count(lit(1)).as("n"), sum("x").as("sx"))
-      daily
-        .withColumn("xp", lag(col("x"), 1).over(Window.orderBy("d")))
-        .crossJoin(broadcast(tot))
-        .agg(max("n").as("n_days"),
-          sum(expr(
-            """CASE WHEN xp IS NULL THEN CAST(0 AS DECIMAL(38,0))
-               | ELSE CAST(n AS DECIMAL(38,0)) * n * (x - xp) * (x - xp) END"""
-              .stripMargin)).as("num"),
-          sum(expr(
-            "(CAST(n AS DECIMAL(38,0)) * x - sx) * (CAST(n AS DECIMAL(38,0)) * x - sx)"))
-            .as("den"))
-        .select(col("n_days"),
-          expr("CAST((num * 1000000) div den AS BIGINT)").as("dw_micro"))
-    }),
-
-    "q_granger" -> ((s, dir) => {
-      // Granger causality at lag 1: does yesterday's shipped QUANTITY
-      // improve today's REVENUE forecast beyond yesterday's revenue?
-      // Restricted model y ~ 1 + y₋₁ vs unrestricted y ~ 1 + y₋₁ + x₋₁,
-      // F = (RSS_r − RSS_u) / (RSS_u / (n−3)). ONE pass builds every
-      // Gram entry as an exact DECIMAL(38,0) integer (HUGEINT oracle);
-      // both 2×2 and 3×3 solves and the RSS identities
-      // RSS = Σy² − βᵀ(Xᵀy) are closed-form doubles written in the SAME
-      // operation order in both engines (the q_ols discipline). Day-
-      // domain lag window (whitelisted).
-      import org.apache.spark.sql.expressions.Window
-      val daily = T(s, dir, "lineitem")
-        .groupBy(col("l_shipdate").as("d"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("y"),
-          sum(expr("CAST(l_quantity AS BIGINT)")).as("x"))
-      val wd = Window.orderBy("d")
-      val lagged = daily
-        .withColumn("y1", lag(col("y"), 1).over(wd))
-        .withColumn("x1", lag(col("x"), 1).over(wd))
-        .filter(col("y1").isNotNull)
-      lagged.agg(
-          count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum(col("y1").cast("decimal(38,0)")).as("g01"),
-          sum(col("x1").cast("decimal(38,0)")).as("g02"),
-          sum(col("y").cast("decimal(38,0)")).as("g0y"),
-          sum(expr("CAST(y1 AS DECIMAL(38,0)) * y1")).as("g11"),
-          sum(expr("CAST(y1 AS DECIMAL(38,0)) * x1")).as("g12"),
-          sum(expr("CAST(y1 AS DECIMAL(38,0)) * y")).as("g1y"),
-          sum(expr("CAST(x1 AS DECIMAL(38,0)) * x1")).as("g22"),
-          sum(expr("CAST(x1 AS DECIMAL(38,0)) * y")).as("g2y"),
-          sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"))
-        .selectExpr("CAST(n AS BIGINT) AS n",
-          "CAST(n AS DOUBLE) AS a00", "CAST(g01 AS DOUBLE) AS a01",
-          "CAST(g02 AS DOUBLE) AS a02", "CAST(g0y AS DOUBLE) AS b0",
-          "CAST(g11 AS DOUBLE) AS a11", "CAST(g12 AS DOUBLE) AS a12",
-          "CAST(g1y AS DOUBLE) AS b1", "CAST(g22 AS DOUBLE) AS a22",
-          "CAST(g2y AS DOUBLE) AS b2", "CAST(syy AS DOUBLE) AS syy")
-        .selectExpr("n", "a00", "a01", "a02", "b0", "a11", "a12", "b1",
-          "a22", "b2", "syy",
-          "a00 * (a11 * a22 - a12 * a12) - a01 * (a01 * a22 - a12 * a02) + a02 * (a01 * a12 - a11 * a02) AS det3",
-          "a00 * a11 - a01 * a01 AS det2")
-        .selectExpr("n", "a00", "a01", "a11", "b0", "b1", "b2", "syy", "det2",
-          "(b0 * (a11 * a22 - a12 * a12) - a01 * (b1 * a22 - a12 * b2) + a02 * (b1 * a12 - a11 * b2)) / det3 AS bb0",
-          "(a00 * (b1 * a22 - a12 * b2) - b0 * (a01 * a22 - a12 * a02) + a02 * (a01 * b2 - b1 * a02)) / det3 AS bb1",
-          "(a00 * (a11 * b2 - a12 * b1) - a01 * (a01 * b2 - b1 * a02) + b0 * (a01 * a12 - a11 * a02)) / det3 AS bb2")
-        .selectExpr("n", "a00", "a01", "a11", "b0", "b1", "syy", "det2", "bb2",
-          "syy - ((bb0 * b0 + bb1 * b1) + bb2 * b2) AS rssu")
-        .selectExpr("n", "b0", "b1", "syy", "bb2", "rssu",
-          "(b0 * a11 - a01 * b1) / det2 AS aa0",
-          "(a00 * b1 - a01 * b0) / det2 AS aa1")
-        .selectExpr("n", "bb2", "rssu",
-          "syy - (aa0 * b0 + aa1 * b1) AS rssr")
-        .selectExpr("n",
-          "CAST(round(bb2 * 1000000) AS BIGINT) AS beta_x_micro",
-          "CAST(round((rssr - rssu) / (rssu / CAST(n - 3 AS DOUBLE)) * 1000000) AS BIGINT) AS f_micro")
-    }),
-
-    "q_relative_risk" -> ((s, dir) => {
-      // relative risk + odds ratio with log-normal 95% CIs for the
-      // deep-discount → return 2×2: exact integer cells, the CI bounds
-      // exp(ln OR ± 1.96·√(1/a+1/b+1/c+1/d)) micro-rounded once — the
-      // epidemiology effect-size read next to q_chisq's significance.
-      val g = T(s, dir, "lineitem")
-        .agg(sum(when(expr("l_discount >= 0.05 AND l_returnflag = 'R'"), 1L)
-            .otherwise(0L)).as("a"),
-          sum(when(expr("l_discount >= 0.05 AND l_returnflag != 'R'"), 1L)
-            .otherwise(0L)).as("b"),
-          sum(when(expr("l_discount < 0.05 AND l_returnflag = 'R'"), 1L)
-            .otherwise(0L)).as("c"),
-          sum(when(expr("l_discount < 0.05 AND l_returnflag != 'R'"), 1L)
-            .otherwise(0L)).as("d"))
-      // zero-cell guard: any empty 2×2 cell makes RR/OR (and the log-CI)
-      // undefined — both engines emit NULL for the four derived columns
-      // instead of diverging (Spark NaN/NULL vs DuckDB inf/error)
-      val ok = "a > 0 AND b > 0 AND c > 0 AND d > 0"
-      g.select(col("a"), col("b"), col("c"), col("d"),
-        expr(s"""CASE WHEN $ok THEN CAST(round(CAST(a AS DOUBLE) / (a + b)
-               | / (CAST(c AS DOUBLE) / (c + d)) * 1000000) AS BIGINT) END""".stripMargin)
-          .as("rr_micro"),
-        expr(s"""CASE WHEN $ok THEN CAST(round(CAST(a AS DOUBLE) * d / (CAST(b AS DOUBLE) * c)
-               | * 1000000) AS BIGINT) END""".stripMargin).as("or_micro"),
-        expr(s"""CASE WHEN $ok THEN
-               | CAST(round(exp(ln(CAST(a AS DOUBLE) * d / (CAST(b AS DOUBLE) * c))
-               | - 1.96 * sqrt(1.0/a + 1.0/b + 1.0/c + 1.0/d)) * 1000000) AS BIGINT) END"""
-          .stripMargin).as("or_lo_micro"),
-        expr(s"""CASE WHEN $ok THEN
-               | CAST(round(exp(ln(CAST(a AS DOUBLE) * d / (CAST(b AS DOUBLE) * c))
-               | + 1.96 * sqrt(1.0/a + 1.0/b + 1.0/c + 1.0/d)) * 1000000) AS BIGINT) END"""
-          .stripMargin).as("or_hi_micro"))
-    }),
-
-    "ev_audience_overlap" -> ((s, dir) => {
-      // audience-overlap matrix: Jaccard between the user sets of each
-      // event-type pair — ONE per-user flag agg, then every pairwise
-      // intersection/union as conditional sums over the user frame (no
-      // self-join of users, no 5×5 scan repetition). The
-      // marketing-segment dedup read.
-      val flags = events(s, dir)
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "view", 1L).otherwise(0L)).as("f_view"),
-          max(when(col("event_type") === "click", 1L).otherwise(0L)).as("f_click"),
-          max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("f_purchase"),
-          max(when(col("event_type") === "signup", 1L).otherwise(0L)).as("f_signup"),
-          max(when(col("event_type") === "error", 1L).otherwise(0L)).as("f_error"))
-        .localCheckpoint(true) // one frame, ten pair sums
-      val types = Seq("view", "click", "purchase", "signup", "error")
-      val pairs = for {
-        i <- types.indices; j <- types.indices if i < j
-      } yield (types(i), types(j))
-      pairs.map { case (t1, t2) =>
-        flags.agg(
-          sum(when(col(s"f_$t1") === 1L && col(s"f_$t2") === 1L, 1L).otherwise(0L))
-            .as("n_both"),
-          sum(when(col(s"f_$t1") === 1L || col(s"f_$t2") === 1L, 1L).otherwise(0L))
-            .as("n_either"))
-          .select(lit(t1).as("type_a"), lit(t2).as("type_b"), col("n_both"),
-            col("n_either"),
-            expr("CASE WHEN n_either = 0 THEN 0 ELSE (n_both * 1000000) div n_either END")
-              .as("jaccard_micro"))
-      }.reduce(_ unionByName _)
-    }),
-
-    "q_monotonicity" -> ((s, dir) => {
-      // calibration monotonicity audit: is the empirical return rate
-      // non-decreasing in quantity? Adjacent-bin violations over the
-      // bounded quantity panel (whitelisted lag), reporting the count
-      // and the worst inversion — the cheap isotonic check before
-      // anyone fits PAVA.
-      import org.apache.spark.sql.expressions.Window
-      val bins = T(s, dir, "lineitem")
-        .groupBy(expr("CAST(l_quantity AS BIGINT)").as("qty"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("pos"))
-        .withColumn("rate_micro", expr("(pos * 1000000) div n"))
-      bins
-        .withColumn("prev", lag(col("rate_micro"), 1).over(Window.orderBy("qty")))
-        .agg(count(lit(1)).as("n_bins"),
-          sum(when(col("prev").isNotNull && col("rate_micro") < col("prev"), 1L)
-            .otherwise(0L)).as("n_violations"),
-          max(when(col("prev").isNotNull && col("rate_micro") < col("prev"),
-            col("prev") - col("rate_micro")).otherwise(0L)).as("worst_drop_micro"))
-    }),
-
-    "q_evt" -> ((s, dir) => {
-      // extreme-value (Gumbel) fit on monthly block maxima of daily
-      // revenue via method of moments: β = s√6/π, μ = m̄ − γβ (Euler γ
-      // as a literal), and the 12-block return level μ − β·ln(−ln(1 −
-      // 1/12)) — the tail-risk read behind capacity planning. Exact
-      // integer block maxima; ONE double formula, micro-rounded.
-      val maxima = T(s, dir, "lineitem")
-        .groupBy(col("l_shipdate").as("d"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("x"))
-        .groupBy(expr("date_trunc('month', d)").as("m"))
-        .agg(max("x").as("mx"))
-      maxima.agg(count(lit(1)).as("n_blocks"),
-          sum(expr("CAST(mx AS DECIMAL(38,0))")).as("sm"),
-          sum(expr("CAST(mx AS DECIMAL(38,0)) * mx")).as("smm"))
-        .withColumn("beta", expr(
-          """sqrt(CAST(n_blocks * smm - sm * sm AS DOUBLE)
-             | / (CAST(n_blocks AS DOUBLE) * (n_blocks - 1)))
-             | * 0.7796968012336761""".stripMargin)) // √6/π
-        .withColumn("mu", expr(
-          "CAST(sm AS DOUBLE) / n_blocks - 0.5772156649015329 * beta"))
-        .select(col("n_blocks"),
-          expr("CAST(round(mu) AS BIGINT)").as("mu_c"),
-          expr("CAST(round(beta) AS BIGINT)").as("beta_c"),
-          // −2.4417163988 = ln(−ln(11/12)) as a literal: Spark parses
-          // 1.0/12.0 as DECIMAL(·,6) division (0.083333), not double
-          expr("CAST(round(mu - beta * (-2.441716398881459)) AS BIGINT)")
-            .as("rl12_c"))
-    }),
-
-    "q_mix_shift" -> ((s, dir) => {
-      // mix/rate decomposition (Oaxaca-style) of the 1997→1998 return-
-      // rate change by brand: Δ = Σ(w₁−w₀)·r₀ (mix effect: volume moved
-      // toward different brands) + Σw₁·(r₁−r₀) (rate effect: brands
-      // themselves changed). Shares and rates micro-rounded per brand
-      // (order-free), per-term products ÷10⁶ — the "why did the metric
-      // move" decomposition every KPI review wants.
-      val b = T(s, dir, "lineitem")
-        .filter(expr("year(l_shipdate) IN (1997, 1998)"))
-        .join(T(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(sum(when(expr("year(l_shipdate) = 1997"), 1L).otherwise(0L)).as("n0"),
-          sum(when(expr("year(l_shipdate) = 1997 AND l_returnflag = 'R'"), 1L)
-            .otherwise(0L)).as("x0"),
-          sum(when(expr("year(l_shipdate) = 1998"), 1L).otherwise(0L)).as("n1"),
-          sum(when(expr("year(l_shipdate) = 1998 AND l_returnflag = 'R'"), 1L)
-            .otherwise(0L)).as("x1"))
-        .localCheckpoint(true) // totals + panel
-      val tot = b.agg(sum("n0").as("t0"), sum("n1").as("t1"))
-      b.crossJoin(broadcast(tot))
-        .select(col("p_brand"),
-          expr("(n0 * 1000000) div t0").as("w0_micro"),
-          expr("(n1 * 1000000) div t1").as("w1_micro"),
-          expr("CASE WHEN n0 = 0 THEN 0 ELSE (x0 * 1000000) div n0 END").as("r0_micro"),
-          expr("CASE WHEN n1 = 0 THEN 0 ELSE (x1 * 1000000) div n1 END").as("r1_micro"))
-        .select(col("p_brand"), col("w0_micro"), col("w1_micro"),
-          col("r0_micro"), col("r1_micro"),
-          expr("((w1_micro - w0_micro) * r0_micro) div 1000000").as("mix_term_micro"),
-          expr("(w1_micro * (r1_micro - r0_micro)) div 1000000").as("rate_term_micro"))
-    }),
-
-    "mm_sharpness" -> ((s, dir) => {
-      // blur detection with a REAL decode: the variance of the 4-
-      // neighbor Laplacian over interior pixels — the classic OpenCV
-      // sharpness score, in exact integers ((nΣx²−(Σx)²) div n²).
-      // Per-partition codec work; the oracle replays both sums from the
-      // closed-form grid.
-      implicit val sp: SparkSession = s
-      ext.Multimodal.sharpness(
-        ext.Multimodal.phashMedia(T(s, dir, "documents"))).toDF()
-    }),
-
-    "ta_negsample" -> ((s, dir) => {
-      // word2vec-style negative-sampling table: the unigram distribution
-      // raised to 3/4 (Mikolov's smoothing — rare words get MORE noise
-      // mass), per-token weights micro-rounded before the share divide
-      // so the table is order-free. Two cascaded aggs over the vocab;
-      // at scale the vocab frame is ≪ the corpus.
-      val tf = T(s, dir, "documents")
-        .select(explode(expr("filter(split(lower(text), '\\\\s+'), x -> x != '')"))
-          .as("token"))
-        .groupBy("token").agg(count(lit(1)).as("tf"))
-        .withColumn("w75_micro", expr(
-          "CAST(round(exp(0.75 * ln(CAST(tf AS DOUBLE))) * 1000000) AS BIGINT)"))
-        .localCheckpoint(true) // total + shares
-      val tot = tf.agg(sum("w75_micro").as("wt"))
-      tf.crossJoin(broadcast(tot))
-        .select(col("token"), col("tf"), col("w75_micro"),
-          expr("(w75_micro * 1000000) div wt").as("p_micro"))
-    }),
-
-    "q_eb_shrink" -> ((s, dir) => {
-      // empirical-Bayes rate shrinkage: per-brand return rates pulled
-      // toward the pooled rate with a method-of-moments Beta prior
-      // (α+β from the between-brand variance) — the James-Stein move
-      // that stops small brands from topping every ranking. Exact
-      // integer sufficient stats; the prior solves in ONE double pass
-      // broadcast back over the brand panel.
-      val b = T(s, dir, "lineitem")
-        .join(T(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("x"))
-        .withColumn("rate_micro", expr("(x * 1000000) div n"))
-        .localCheckpoint(true) // moments + panel
-      val mom = b.agg(count(lit(1)).as("k"), sum("rate_micro").as("sr"),
-          sum(expr("rate_micro * rate_micro")).as("srr"))
-        .select(expr("CAST(sr AS DOUBLE) / k / 1000000").as("m"),
-          expr("""CAST(k * srr - sr * sr AS DOUBLE)
-                 | / (CAST(k AS DOUBLE) * (k - 1)) / 1e12""".stripMargin).as("v"))
-        .select(col("m"), col("v"),
-          expr("CASE WHEN v <= 0.0 THEN 1000.0 ELSE m * (m * (1.0 - m) / v - 1.0) END")
-            .as("alpha"),
-          expr("CASE WHEN v <= 0.0 THEN 1000.0 ELSE (1.0 - m) * (m * (1.0 - m) / v - 1.0) END")
-            .as("beta"))
-      b.crossJoin(broadcast(mom))
-        .select(col("p_brand"), col("n"), col("x"), col("rate_micro"),
-          expr("""CAST(round((CAST(x AS DOUBLE) + alpha) / (CAST(n AS DOUBLE) + alpha + beta)
-                 | * 1000000) AS BIGINT)""".stripMargin).as("shrunk_micro"))
-    }),
-
-    "mm_ssim" -> ((s, dir) => {
-      // SSIM between consecutive decoded images (global window): exact
-      // integer pixel sums through the zip of the two REAL-decoded luma
-      // vectors, the standard C1/C2 stabilizers as literals, one double
-      // formula micro-rounded. The pairwise perceptual-similarity
-      // companion to mm_phash's per-image fingerprint.
-      implicit val sp: SparkSession = s
-      val v = ext.Multimodal.lumaVector(
-        ext.Multimodal.phashMedia(T(s, dir, "documents"))).toDF()
-        .localCheckpoint(true) // both sides of the consecutive join
-      val pairs = v.select((col("media_id") + 1).as("media_id"),
-          col("media_id").as("a_id"), col("luma").as("la"))
-        .join(v.select(col("media_id"), col("media_id").as("b_id"),
-          col("luma").as("lb")), Seq("media_id"))
-      pairs.select(col("a_id"), col("b_id"),
-          expr("aggregate(la, 0L, (acc, x) -> acc + x)").as("sx"),
-          expr("aggregate(lb, 0L, (acc, x) -> acc + x)").as("sy"),
-          expr("aggregate(la, 0L, (acc, x) -> acc + x * x)").as("sxx"),
-          expr("aggregate(lb, 0L, (acc, x) -> acc + x * x)").as("syy"),
-          expr("aggregate(zip_with(la, lb, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
-            .as("sxy"))
-        .select(col("a_id"), col("b_id"),
-          expr("""CAST(round(
-                 |  ((2.0 * (CAST(sx AS DOUBLE) / 1024) * (CAST(sy AS DOUBLE) / 1024) + 6.5025)
-                 |   * (2.0 * (CAST(sxy AS DOUBLE) / 1024 - (CAST(sx AS DOUBLE) / 1024) * (CAST(sy AS DOUBLE) / 1024)) + 58.5225))
-                 |  / (((CAST(sx AS DOUBLE) / 1024) * (CAST(sx AS DOUBLE) / 1024) + (CAST(sy AS DOUBLE) / 1024) * (CAST(sy AS DOUBLE) / 1024) + 6.5025)
-                 |     * ((CAST(sxx AS DOUBLE) / 1024 - (CAST(sx AS DOUBLE) / 1024) * (CAST(sx AS DOUBLE) / 1024))
-                 |        + (CAST(syy AS DOUBLE) / 1024 - (CAST(sy AS DOUBLE) / 1024) * (CAST(sy AS DOUBLE) / 1024)) + 58.5225))
-                 |  * 1000000) AS BIGINT)""".stripMargin).as("ssim_micro"))
-    }),
-
-    "ev_feature_drift" -> ((s, dir) => {
-      // training-serving skew audit: PSI of the per-user activity
-      // distribution between the Jan-15 and Jan-25 point-in-time
-      // snapshots (the ev_features_pit windows a model would train and
-      // serve on). Bounded activity bins, Laplace +1 smoothing so no
-      // log blows up, per-bin ln terms micro-rounded (order-free). PSI
-      // > 0.2 is the usual retrain trigger.
-      def snapshot(cutoff: String) = events(s, dir)
-        .filter(col("ts") < lit(cutoff).cast("timestamp"))
-        .groupBy("user_id").agg(count(lit(1)).as("n_events"))
-        .groupBy(expr("least(n_events div 20, 9)").as("bin"))
-        .agg(count(lit(1)).as("n"))
-      val a = snapshot("2024-01-15 00:00:00").select(col("bin"), col("n").as("na"))
-      val b = snapshot("2024-01-25 00:00:00").select(col("bin"), col("n").as("nb"))
-      val j = a.join(b, Seq("bin"), "full")
-        .select(col("bin"), coalesce(col("na"), lit(0L)).as("na"),
-          coalesce(col("nb"), lit(0L)).as("nb"))
-        .localCheckpoint(true) // totals + terms
-      val tot = j.agg(sum("na").as("ta"), sum("nb").as("tb"), count(lit(1)).as("k"))
-      j.crossJoin(broadcast(tot))
-        .select(col("bin"), col("na"), col("nb"),
-          expr("""CAST(round((CAST(nb + 1 AS DOUBLE) / (tb + k) - CAST(na + 1 AS DOUBLE) / (ta + k))
-                 | * ln((CAST(nb + 1 AS DOUBLE) / (tb + k)) / (CAST(na + 1 AS DOUBLE) / (ta + k)))
-                 | * 1000000) AS BIGINT)""".stripMargin).as("psi_term_micro"))
-    }),
-
-    "q_rev_rec" -> ((s, dir) => {
-      // revenue recognition (calendarization): each order's cents spread
-      // over its 3 service months by exact integral allocation — equal
-      // thirds with the remainder cents credited to the earliest months
-      // (largest-remainder, deterministic) — then ONE month rollup. The
-      // finance close process as a projection fan-out; the allocation
-      // provably sums back to the order total.
-      T(s, dir, "orders")
-        .select(expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
-          col("o_orderdate"),
-          explode(expr("sequence(0, 2)")).as("i"))
-        .select(expr("date_trunc('month', add_months(o_orderdate, i))").cast("date")
-          .as("month"),
-          expr("cents div 3 + CASE WHEN i < cents % 3 THEN 1 ELSE 0 END")
-            .as("rec_c"))
-        .groupBy("month")
-        .agg(count(lit(1)).as("n_slices"), sum("rec_c").as("recognized_c"))
-    }),
-
-    "ev_dose" -> ((s, dir) => {
-      // dose-response: conversion rate by prior-view exposure bin with
-      // the Cochran-Armitage TREND test (scores 0..5) — the ordered
-      // alternative q_chisq can't see. Per-user agg → ≤6-row panel →
-      // exact integer sufficient statistics, one double z micro-rounded.
-      val users = events(s, dir)
-        .groupBy("user_id")
-        .agg(sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("views"),
-          max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
-      val panel = users
-        .groupBy(expr("least(views, 5)").as("dose"))
-        .agg(count(lit(1)).as("n"), sum("conv").as("x"))
-        .localCheckpoint(true) // totals + trend terms
-      val g = panel.agg(sum("n").as("nt"), sum("x").as("xt"),
-        sum(expr("dose * n")).as("sn"), sum(expr("dose * x")).as("sx"),
-        sum(expr("dose * dose * n")).as("snn"))
-      panel.crossJoin(broadcast(g))
-        .select(col("dose"), col("n"), col("x"),
-          expr("(x * 1000000) div n").as("rate_micro"),
-          expr("""CASE WHEN xt = 0 OR xt = nt THEN CAST(0 AS BIGINT)
-                 | ELSE CAST(round((CAST(sx AS DOUBLE) - CAST(sn AS DOUBLE) * xt / nt)
-                 |   / sqrt(CAST(xt AS DOUBLE) / nt * (1.0 - CAST(xt AS DOUBLE) / nt)
-                 |          * (CAST(snn AS DOUBLE) - CAST(sn AS DOUBLE) * sn / nt))
-                 |   * 1000000) AS BIGINT) END""".stripMargin).as("trend_z_micro"))
-    }),
-
-    "ta_truncation" -> ((s, dir) => {
-      // context-budget truncation loss: per source, the share of
-      // whitespace tokens falling beyond a 64-token context window —
-      // what a fixed context limit actually throws away, the number
-      // that justifies (or kills) a chunking stage. Pure projection +
-      // one agg.
-      T(s, dir, "documents")
-        .select(col("source"),
-          expr("size(filter(split(lower(text), '\\\\s+'), x -> x != ''))")
-            .cast("long").as("nt"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("nt").as("tokens"),
-          sum(expr("greatest(nt - 64, 0)")).as("beyond"),
-          sum(when(col("nt") > 64L, 1L).otherwise(0L)).as("n_truncated"))
-        .withColumn("loss_micro", expr("(beyond * 1000000) div tokens"))
-    }),
-
-    "ta_oov" -> ((s, dir) => {
-      // out-of-vocabulary rate against the corpus top-20 vocabulary:
-      // vocab via ONE bounded TakeOrdered (ties broken by token), OOV
-      // share per source through a broadcast membership probe — the
-      // closed-vocab coverage read that sizes <unk> damage. Two keyed
-      // aggs + a 20-row broadcast.
-      val tok = T(s, dir, "documents")
-        .select(col("source"),
-          explode(expr("filter(split(lower(text), '\\\\s+'), x -> x != '')"))
-            .as("token"))
-        .localCheckpoint(true) // vocab + probe
-      val vocab = tok.groupBy("token").agg(count(lit(1)).as("tf"))
-        .orderBy(col("tf").desc, col("token")).limit(20)
-        .select(col("token"), lit(1L).as("in_vocab"))
-      tok.join(broadcast(vocab), Seq("token"), "left")
-        .groupBy("source")
-        .agg(count(lit(1)).as("tokens"),
-          sum(when(col("in_vocab").isNull, 1L).otherwise(0L)).as("oov"))
-        .withColumn("oov_micro", expr("(oov * 1000000) div tokens"))
-    }),
-
-    "q_weekday" -> ((s, dir) => {
-      // calendar-effects audit: one-way ANOVA of daily revenue across
-      // the 7 weekdays (0 = Monday both engines: Spark weekday(),
-      // DuckDB isodow−1) — q_anova's machinery pointed at the day
-      // panel. A flat F says billing is weekday-independent.
-      val daily = T(s, dir, "lineitem")
-        .groupBy(col("l_shipdate").as("d"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("x"))
-      val g = daily.groupBy(expr("weekday(d)").cast("long").as("wd"))
-        .agg(count(lit(1)).as("ng"),
-          sum(expr("CAST(x AS DECIMAL(38,0))")).as("sg"),
-          sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("ssg"))
-        .localCheckpoint(true) // totals + terms
-      val t = g.agg(sum("ng").as("n"), sum("sg").as("st"), count(lit(1)).as("k"))
-      g.crossJoin(broadcast(t))
-        .select(col("wd"), col("ng"),
-          expr("CAST((sg * 1000000) div ng AS BIGINT)").as("mean_micro_c"),
-          expr("""CAST(round(CAST(ng AS DOUBLE)
-                 | * (CAST(sg AS DOUBLE) / ng - CAST(st AS DOUBLE) / n)
-                 | * (CAST(sg AS DOUBLE) / ng - CAST(st AS DOUBLE) / n)) AS BIGINT)"""
-            .stripMargin).as("ssb_part"),
-          expr("""CAST(round(CAST(ssg AS DOUBLE)
-                 | - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE) / ng) AS BIGINT)"""
-            .stripMargin).as("ssw_part"))
-    }),
-
-    "q_ece" -> ((s, dir) => {
-      // expected calibration error of the q_calibration risk rule:
-      // 10 equal-width confidence bins, per-bin |accuracy − confidence|
-      // weighted by bin mass — INTEGER micro end-to-end (confidence is
-      // an exact integral mean, accuracy an integral rate). The
-      // one-number calibration read next to q_calibration's table.
-      val b = T(s, dir, "lineitem")
-        .select(expr("least(CAST(l_quantity AS BIGINT) * 20000, 1000000)").as("p"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
-        .groupBy(expr("least(p div 100000, 9)").as("bin"))
-        .agg(count(lit(1)).as("n"), sum("p").as("sp"), sum("y").as("sy"))
-        .localCheckpoint(true) // total + terms
-      val t = b.agg(sum("n").as("nt"))
-      b.crossJoin(broadcast(t))
-        .select(col("bin"), col("n"),
-          expr("sp div n").as("conf_micro"),
-          expr("(sy * 1000000) div n").as("acc_micro"),
-          expr("(n * abs((sy * 1000000) div n - sp div n)) div nt")
-            .as("ece_term_micro"))
-    }),
-
-    "q_brier" -> ((s, dir) => {
-      // Brier score of the same rule: mean squared gap between the
-      // micro probability and the 0/10⁶ outcome — pure integer
-      // arithmetic, no transcendental at all (the quadratic proper
-      // scoring rule; q_logloss is the logarithmic one).
-      T(s, dir, "lineitem")
-        .select(expr("least(CAST(l_quantity AS BIGINT) * 20000, 1000000)").as("p"),
-          when(col("l_returnflag") === "R", 1000000L).otherwise(0L).as("y"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(expr("((p - y) * (p - y)) div 1000000")).as("sq"))
-        .select(col("n_rows"), expr("sq div n_rows").as("brier_micro"))
-    }),
-
-    "q_conformal" -> ((s, dir) => {
-      // Split-conformal prediction interval (Vovk; Lei et al. 2018): a
-      // deterministic three-way orderkey split — quarters 0,1 FIT the
-      // 7-row per-linenumber mean table, quarter 2 CALIBRATES (the fit
-      // and calibration sets must be disjoint or the finite-sample
-      // coverage guarantee does not hold), quarter 3 is the held-out
-      // test set. Nonconformity is |q − ŷ|, q̂ = the ⌈0.9(n+1)⌉-th
-      // order statistic of the calibration scores, then the coverage
-      // of ŷ ± q̂ on the test quarter. The
-      // score domain is BOUNDED (|quantity − mean| ≤ 49) so the order
-      // statistic is an exact histogram quantile: one wide shuffle
-      // produces the ≤100-row (split, score) histogram and every later
-      // step — cumulative counts, q̂, coverage — runs on that frame.
-      // 10·cum ≥ 9·(n+1) is the integer form of cum ≥ ⌈0.9(n+1)⌉.
-      import org.apache.spark.sql.expressions.Window
-      val li = T(s, dir, "lineitem").select(
-        (col("l_orderkey") % 4).as("part"),
-        col("l_linenumber"),
-        col("l_quantity").cast("long").as("q"))
-      val pred = li.filter(col("part") < 2).groupBy("l_linenumber")
-        .agg(expr("sum(q) div count(1)").as("yhat"))
-      val h = li.filter(col("part") >= 2).join(broadcast(pred), Seq("l_linenumber"))
-        .select((col("part") === 3).as("is_test"), abs(col("q") - col("yhat")).as("s"))
-        .groupBy("is_test", "s").agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // ≤100 rows; feeds q̂ AND the coverage pass
-      val cal = h.filter(!col("is_test"))
-      val nCal = cal.agg(sum("n").as("n_cal"))
-      val qhat = cal
-        .withColumn("cume", sum("n").over(Window.orderBy("s"))) // bounded score domain
-        .crossJoin(broadcast(nCal))
-        .filter(col("cume") * 10 >= (col("n_cal") + 1) * 9)
-        .agg(min("s").as("qhat"))
-      h.filter(col("is_test"))
-        .crossJoin(broadcast(qhat)).crossJoin(broadcast(nCal))
-        .agg(first("n_cal").as("n_cal"),
-          sum("n").as("n_test"),
-          sum(when(col("s") <= col("qhat"), col("n")).otherwise(0L)).as("n_cov"),
-          first("qhat").as("qhat"))
-        .select(col("n_cal"), col("n_test"), col("qhat"),
-          (col("qhat") * 2 + 1).as("width"),
-          expr("CAST(CAST(n_cov AS DECIMAL(38,0)) * 1000000 div n_test AS BIGINT)")
-            .as("cov_micro"))
-    }),
-
-    "ta_good_turing" -> ((s, dir) => {
-      // Good–Turing frequency-of-frequencies (Gale–Sampson 1995) over
-      // word trigrams: the N_r table for r ≤ 10, the smoothed count
-      // r* = (r+1)·N_{r+1}/N_r, the observed probability mass r·N_r/N
-      // per bucket, and the unseen-mass estimate P₀ = N₁/N as the r = 0
-      // row — the "how much tail haven't we crawled yet" dial of corpus
-      // curation. Trigram space carries the long tail (the whitespace
-      // unigram vocabulary is ~31 words); two hash aggregations (gram
-      // counts → counts-of-counts) and everything after the second is a
-      // ≤#distinct-counts-row frame. Products run in DECIMAL(38,0)
-      // (HUGEINT in the oracle) so billion-type corpora can't wrap.
-      // fanOut: trigram explode is the query's CPU (r12 ProbeJobs: 5.4 s
-      // single-task stage); no-op at natural parallelism
-      val cnt = ext.Par.fanOut(T(s, dir, "documents"))
-        .select(explode(ext.Dedup.wordNgrams(col("text"), 3)).as("g"))
-        .groupBy("g").agg(count(lit(1)).as("c"))
-        .groupBy("c").agg(count(lit(1)).as("n_r"))
-        .localCheckpoint(true) // tiny; feeds N, the r rows AND the r+1 lookup
-      val tot = cnt.agg(sum(expr("CAST(c AS DECIMAL(38,0)) * n_r")).as("n_tokens"))
-      val nxt = cnt.select((col("c") - 1).as("rj"), col("n_r").as("n_next"))
-      val rows = cnt.filter(col("c") <= 10)
-        .join(broadcast(nxt), col("c") === col("rj"), "left")
-        .crossJoin(broadcast(tot))
-        .select(col("c").cast("long").as("r"), col("n_r"),
-          expr("CAST(CAST(c + 1 AS DECIMAL(38,0)) * coalesce(n_next, 0) * 1000000 div n_r AS BIGINT)")
-            .as("r_star_micro"),
-          expr("CAST(CAST(c AS DECIMAL(38,0)) * n_r * 1000000 div n_tokens AS BIGINT)")
-            .as("mass_micro"))
-      val unseen = cnt.filter(col("c") === 1).crossJoin(broadcast(tot))
-        .select(lit(0L).as("r"), col("n_r"), lit(0L).as("r_star_micro"),
-          expr("CAST(CAST(n_r AS DECIMAL(38,0)) * 1000000 div n_tokens AS BIGINT)")
-            .as("mass_micro"))
-      unseen.unionAll(rows)
-    }),
-
-    "sim_matryoshka" -> ((s, dir) => {
-      // Matryoshka-representation eval (Kusupati et al. 2022): recall@10
-      // of brute-force search over the FIRST 16 of 64 dims vs the
-      // full-dim exact top-10 — the accept/reject number for
-      // prefix-truncated embeddings (¼ the bytes and FLOPs per probe)
-      // before re-indexing at the reduced dimension. Same probe cohort
-      // and bounded-heap shuffle shape as sim_recall; the truncated arm
-      // slices the SAME parquet column in-plan — no second table.
-      val emb = T(s, dir, "embeddings")
-      val bf = ext.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val cut = emb.select(col("vec_id"),
-        slice(col("embedding"), 1, 16).as("embedding"))
-      val mr = ext.Similarity.bruteForceTopK(cut, cut.filter(col("vec_id") < 8),
-          "vec_id", "embedding", 10)
-        .select(col("query_id").as("mq"), col("neighbor_id").as("mn"))
-      val hits = bf.join(mr,
-          col("query_id") === col("mq") && col("neighbor_id") === col("mn"),
-          "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-      emb.filter(col("vec_id") < 8).select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / lit(10.0)).as("recall_at_10"))
-    }),
-
-    "rec_bt" -> ((s, dir) => {
-      // Bradley–Terry preference ranking (the RLHF preference-data
-      // fit; Hunter 2004's MM algorithm): 5 "teams" from deterministic
-      // lineitem keys, a win per row by quantity parity, 20 MM rounds
-      // π_i ← w_i / Σ_j n_ij/(π_i+π_j) with sum-to-5·10⁶ renorm. The
-      // distributed work is ONE pair-count aggregation (≤10 grouped
-      // rows); the iteration folds on the driver in exact BigInt micro
-      // arithmetic — every //, + and × replayed in the identical
-      // ascending-team order by the oracle's recursive CTE (HUGEINT),
-      // so the fixed point matches bit-for-bit. At 10¹² matches the
-      // counts are the only thing that grows; the model stays 5 rows.
-      import s.implicits._
-      val m = T(s, dir, "lineitem").select(
-          (col("l_suppkey") % 5).as("ta"), (col("l_partkey") % 5).as("tb"),
-          (col("l_quantity").cast("long") % 2 === 0).as("a_wins"))
-        .filter(col("ta") =!= col("tb"))
-        .select(least(col("ta"), col("tb")).as("i"),
-          greatest(col("ta"), col("tb")).as("j"),
-          when(col("ta") < col("tb"), col("a_wins")).otherwise(!col("a_wins")).as("i_wins"))
-        .groupBy("i", "j").agg(count(lit(1)).as("n"),
-          sum(when(col("i_wins"), 1L).otherwise(0L)).as("w_i"))
-        .collect().map(r => (r.getAs[Long]("i"), r.getAs[Long]("j"),
-          r.getAs[Long]("n"), r.getAs[Long]("w_i")))
-      val k = 5
-      val n = Array.ofDim[Long](k, k)
-      val w = Array.fill(k)(BigInt(0))
-      m.foreach { case (i, j, nij, wi) =>
-        n(i.toInt)(j.toInt) = nij; n(j.toInt)(i.toInt) = nij
-        w(i.toInt) += wi; w(j.toInt) += (nij - wi)
-      }
-      val one2 = BigInt(1000000) * 1000000
-      var pi = Array.fill(k)(BigInt(1000000))
-      var it = 0
-      while (it < 20) {
-        val next = Array.tabulate(k) { i =>
-          var d = BigInt(0)
-          var j = 0
-          while (j < k) {
-            // max(…, 1): the sum-to-5e6 integer renorm can floor a tiny
-            // score to 0, and a played pair with BOTH endpoints at 0
-            // would otherwise divide by zero (the oracle CTE guards the
-            // same denominator with greatest(…, 1))
-            if (j != i && n(i)(j) > 0)
-              d += (BigInt(n(i)(j)) * one2) / (pi(i) + pi(j)).max(BigInt(1))
-            j += 1
-          }
-          if (d == 0) pi(i) else (w(i) * one2) / d
-        }
-        val s5 = next.foldLeft(BigInt(0))(_ + _)
-        pi = next.map(x => (x * 5000000) / s5)
-        it += 1
-      }
-      (0 until k).map { i =>
-        (i.toLong, n(i).sum, w(i).toLong, pi(i).toLong)
-      }.toDF("team", "n_matches", "n_wins", "pi_micro")
-    }),
-
-    "g_ppr" -> ((s, dir) => {
-      // personalized PageRank (Jeh–Widom 2003) on q_pagerank's
-      // symmetrized customer↔supplier trade graph: teleport mass
-      // returns ONLY to the seed cohort (customers with key % 100 = 0),
-      // so rank concentrates in the seeds' neighborhoods — the "expand
-      // outward from known-good examples" primitive behind seed-based
-      // corpus expansion and audience lookalikes. 3 unrolled integer
-      // iterations, Pregel shape identical to q_pagerank; the oracle
-      // replays them with the seed indicator in every round.
-      val o = T(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), (col("l_suppkey") + 10000000L).as("s"))
-        .distinct()
-      val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-        .union(pairs.select(col("s").as("src"), col("c").as("dst")))
-      val seeds = T(s, dir, "customer")
-        .filter(col("c_custkey") % 100 === 0).select(col("c_custkey").as("id"))
-      ext.Graph.personalizedPageRankInt(edges, seeds, iters = 3)
-    }),
-
-    "ev_hmm" -> ((s, dir) => {
-      // 2-state HMM forward filter (Rabiner 1989) per user over the
-      // time-ordered event stream: P(engaged | obs₁..ₜ) under fixed
-      // integer-micro transition/emission matrices, renormalized every
-      // step (the forward algorithm's scaling trick in exact integer
-      // division — no underflow, no floats). The whole recurrence is
-      // ONE sequential fold over the user's sorted observation array;
-      // both state probabilities ride in a single BIGINT (hmmStepSql),
-      // so the oracle's list_reduce replays the fold bit-exactly.
-      // Scale: one groupBy(user) shuffle; per-user arrays are activity-
-      // bounded like every per-user fold here (ev_gaps, ev_transitions).
-      val seq = events(s, dir)
-        .select(col("user_id"), struct(col("ts"), col("event_id"),
-          when(col("event_type").isin("click", "purchase"), 1L)
-            .otherwise(0L).as("o")).as("x"))
-        .groupBy("user_id").agg(sort_array(collect_list(col("x"))).as("xs"))
-        .select(col("user_id"), size(col("xs")).cast("long").as("n_events"),
-          expr("transform(xs, x -> x.o)").as("obs"))
-      seq.select(col("user_id"), col("n_events"),
-          (expr(s"aggregate(obs, CAST(5000000500000 AS BIGINT), (acc, o) -> " +
-            s"${hmmStepSql("acc", "o", "div")})") % 10000000L)
-            .as("p_engaged_micro"))
-        .withColumn("is_engaged", col("p_engaged_micro") >= 500000L)
-    }),
-
-    "geo_pip" -> ((s, dir) => {
-      // point-in-polygon (ray casting, Shimrat 1962) against a fixed
-      // non-convex 5-gon in integer micro-degrees — the geofence
-      // primitive. The crossing test is division-free integer
-      // arithmetic with per-edge literal slopes (pipCrossSql), ONE
-      // codegen projection per point + one keyed agg; the same planted
-      // coordinates as geo_geohash. At 100 TB the polygon is a
-      // broadcast literal and the scan stays embarrassingly parallel.
-      T(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey").cast("long").as("nation"),
-          expr(geoLatSql("c_custkey", custLatMul)).as("lat"),
-          expr(geoLonSql("c_custkey", custLonMul)).as("lon"))
-        .withColumn("inside", expr(s"(${pipCrossSql("lon", "lat")}) % 2 = 1"))
-        .groupBy("nation", "inside")
-        .agg(count(lit(1)).as("n_customers"))
-    }),
-
-    "q_interval_overlap" -> ((s, dir) => {
-      // interval-OVERLAP join — both sides are intervals, the successor
-      // to q_range_join's point-in-interval: order validity windows
-      // [o_orderdate, +1..30 days] × 6 fixed promotion windows. Scale
-      // shape: each interval explodes into the ≤2 calendar months it
-      // touches (duration-bounded fan-out), month-bucketed equi-join,
-      // exact overlap predicate, distinct — never a nested loop of
-      // orders × promos. Overlap length is exact integer date math.
-      import s.implicits._
-      val promos = promoWindows.toDF("promo_id", "p_start_s", "p_end_s")
-        .select(col("promo_id"), to_date(col("p_start_s")).as("p_start"),
-          to_date(col("p_end_s")).as("p_end"))
-      val pm = promos.select(col("promo_id"), col("p_start"), col("p_end"),
-        explode(sequence(trunc(col("p_start"), "MM"), trunc(col("p_end"), "MM"),
-          expr("INTERVAL 1 MONTH"))).as("m"))
-      val o = T(s, dir, "orders").select(col("o_orderkey"),
-        col("o_orderdate").cast("date").as("o_start"),
-        date_add(col("o_orderdate").cast("date"),
-          expr("CAST(1 + o_orderkey % 30 AS INT)")).as("o_end"))
-      val om = o.select(col("o_orderkey"), col("o_start"), col("o_end"),
-        explode(sequence(trunc(col("o_start"), "MM"), trunc(col("o_end"), "MM"),
-          expr("INTERVAL 1 MONTH"))).as("m"))
-      om.join(broadcast(pm), Seq("m"))
-        .filter(col("o_start") <= col("p_end") && col("p_start") <= col("o_end"))
-        .select("o_orderkey", "promo_id", "o_start", "o_end", "p_start", "p_end")
-        .distinct()
-        .groupBy("promo_id")
-        .agg(count(lit(1)).as("n_orders"),
-          sum((datediff(least(col("o_end"), col("p_end")),
-            greatest(col("o_start"), col("p_start"))) + 1).cast("long"))
-            .as("overlap_days"))
-    }),
-
-    "rec_diversity" -> ((s, dir) => {
-      // recommendation-quality panel over rec_itemitem's top-3 lists:
-      // catalog coverage (how much of the purchasable catalog ever
-      // appears as a recommendation) and exposure concentration (HHI
-      // over the recommended-item distribution — the "popularity echo
-      // chamber" dial), plus list counts. The audit every production
-      // recommender ships next to its accuracy eval (rec_mrr). HHI's
-      // Σc² runs in DECIMAL(38,0) (HUGEINT oracle) so billion-exposure
-      // counts can't wrap.
-      val recs = recItemItemRecs(s, dir).localCheckpoint(true) // 3 consumers
-      val catalog = T(s, dir, "lineitem").agg(
-        countDistinct(col("l_partkey")).as("n_catalog"))
-      val ex = recs.groupBy("rec_part_id").agg(count(lit(1)).as("c"))
-      val tot = recs.agg(countDistinct(col("part_id")).as("n_lists"),
-        count(lit(1)).as("n_recs"), countDistinct(col("rec_part_id")).as("n_rec_items"))
-      ex.agg(sum(expr("CAST(c AS DECIMAL(38,0)) * c")).as("ssq"))
-        .crossJoin(tot).crossJoin(catalog)
-        .select(col("n_lists"), col("n_recs"), col("n_rec_items"),
-          expr("CAST(CAST(n_rec_items AS DECIMAL(38,0)) * 1000000 div n_catalog AS BIGINT)")
-            .as("coverage_micro"),
-          expr("CAST(ssq * 1000000 div (CAST(n_recs AS DECIMAL(38,0)) * n_recs) AS BIGINT)")
-            .as("hhi_micro"))
-    }),
-
-    "mm_loudness" -> ((s, dir) => {
-      // RMS loudness per clip from REAL WAV round-trips — the audio
-      // curation dial next to mm_vad's speech ratio (clips too quiet or
-      // too hot get filtered before transcription). Same planted
-      // square-wave corpus, same JDK encode → AudioSystem parse →
-      // window pipeline; RMS = sqrt(Σv²/n) as ONE double sqrt rounded
-      // once to milli-units, so the oracle's closed form (popcount of
-      // the planted bits) matches bit-for-bit.
-      implicit val sp: SparkSession = s
-      val media = ext.Multimodal.vadMedia(T(s, dir, "documents"))
-      ext.Multimodal.audioWindows(media, 400).toDF()
-        .groupBy("media_id")
-        .agg(sum("n_frames").as("n_frames"), sum("sum_sq").as("sum_sq"))
-        .select(col("media_id"), col("n_frames"), col("sum_sq"),
-          round(sqrt(col("sum_sq").cast("double") / col("n_frames")) * 1000)
-            .cast("long").as("rms_milli"))
-    }),
-
-    "mm_zcr" -> ((s, dir) => {
-      // zero-crossing rate per clip — the third audio-curation dial next
-      // to mm_vad (energy) and mm_loudness (RMS): high ZCR separates
-      // tonal/voiced content from noise and silence. Same REAL WAV
-      // round-trip; a crossing is a strict sign flip between adjacent
-      // samples WITHIN a window (zeros never cross, so silence scores
-      // 0). The planted ±6000 alternating square wave crosses on every
-      // adjacent pair: an active 400-frame window contributes exactly
-      // 399, which is the oracle's closed form over the planted bits.
-      implicit val sp: SparkSession = s
-      val media = ext.Multimodal.vadMedia(T(s, dir, "documents"))
-      ext.Multimodal.audioWindows(media, 400).toDF()
-        .groupBy("media_id")
-        .agg(count(lit(1)).as("n_windows"),
-          sum(when(col("n_zc") > 0, 1L).otherwise(0L)).as("n_active"),
-          sum(col("n_zc")).as("zc_total"))
-    }),
-
-    "mm_goertzel" -> ((s, dir) => {
-      // single-bin DFT tone detector (Goertzel 1958) at the Nyquist bin
-      // — the frequency-domain sibling of mm_zcr: the planted square
-      // wave IS a pure fs/2 tone, so an active window's alternating sum
-      // Σ(−1)^k·v is exactly 400·6000 and silence is 0; a real pipeline
-      // flips the bin coefficient to hunt hums/tones before ASR. All
-      // integer; closed-form oracle from the planted bits.
-      implicit val sp: SparkSession = s
-      val media = ext.Multimodal.vadMedia(T(s, dir, "documents"))
-      ext.Multimodal.audioWindows(media, 400).toDF()
-        .groupBy("media_id")
-        .agg(count(lit(1)).as("n_windows"),
-          sum(when(abs(col("alt_sum")) > 0, 1L).otherwise(0L)).as("n_tonal"),
-          sum(abs(col("alt_sum"))).as("nyquist_mag_total"))
-    }),
-
-    "er_bcubed" -> ((s, dir) => {
-      // B-cubed cluster-quality eval (Bagga–Baldwin 1998; Amigó et al.
-      // 2009) of the nation-BLOCKED entity resolution against the
-      // unblocked gold clustering — the standard ER clustering metric,
-      // completing the eval ladder next to er_eval's blocking recall:
-      // per-record precision |pred∩gold|/|pred| and recall
-      // |pred∩gold|/|gold|, averaged. The per-record sums collapse to
-      // three keyed aggregates over the (pred, gold) cell counts; c²
-      // products run DECIMAL(38,0) (HUGEINT oracle); F1 derives from
-      // the already-floored micro P and R so both engines agree.
-      val cust = T(s, dir, "customer")
-      val gold = ext.Graph.componentsFor(cust.select("c_custkey"), "c_custkey",
-          ext.FuzzyJoin.editDistanceSelfJoin(cust, "c_custkey", "c_name", maxDist = 1)
-            .select(col("id_a").as("src"), col("id_b").as("dst")))
-        .select(col("c_custkey"), col("component").as("g"))
-      val pred = ext.Graph.componentsFor(cust.select("c_custkey"), "c_custkey",
-          ext.FuzzyJoin.editDistanceSelfJoin(cust, "c_custkey", "c_name",
-            maxDist = 1, blockCol = Some("c_nationkey"))
-            .select(col("id_a").as("src"), col("id_b").as("dst")))
-        .select(col("c_custkey"), col("component").as("p"))
-      val m = pred.join(gold, "c_custkey").localCheckpoint(true) // 4 consumers
-      val cells = m.groupBy("p", "g").agg(count(lit(1)).as("c"))
-      val ps = m.groupBy("p").agg(count(lit(1)).as("np"))
-      val gs = m.groupBy("g").agg(count(lit(1)).as("ng"))
-      val n = m.agg(count(lit(1)).as("n"), countDistinct("p").as("n_pred"),
-        countDistinct("g").as("n_gold"))
-      cells.join(ps, "p").join(gs, "g")
-        .select(expr("CAST(c AS DECIMAL(38,0)) * c * 1000000 div np").as("tp"),
-          expr("CAST(c AS DECIMAL(38,0)) * c * 1000000 div ng").as("tr"))
-        .agg(sum("tp").as("sp"), sum("tr").as("sr"))
-        .crossJoin(broadcast(n))
-        .select(col("n").as("n_records"), col("n_pred").as("n_pred_clusters"),
-          col("n_gold").as("n_gold_clusters"),
-          expr("CAST(sp div n AS BIGINT)").as("bcubed_precision_micro"),
-          expr("CAST(sr div n AS BIGINT)").as("bcubed_recall_micro"),
-          expr("""CAST((2 * (sp div n) * (sr div n))
-                 div greatest((sp div n) + (sr div n), 1) AS BIGINT)""")
-            .as("f1_micro"))
-    }),
-
-    "sim_nprobe_sweep" -> ((s, dir) => {
-      // nProbe accuracy ladder for the IVF tier — dd_threshold_sweep's
-      // one-pass-curve idea applied to ANN: ONE candidate
-      // materialization with each candidate tagged by its cell's probe
-      // rank, then recall@10 vs brute force for EVERY nProbe in 1..4 —
-      // the whole cost/accuracy curve for the price of the widest
-      // point plus a ≤4× bounded tag fan-out. This is the dial a
-      // 100 TB index operator actually turns; the sweep is the
-      // evidence for sim_topk_ivf's nProbe = 3.
-      import graft.functions.{TopKAgg, VectorExprs}
-      VectorExprs.register(s)
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val cents = ext.IvfIndex.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val index = ext.IvfIndex.assign(emb, "vec_id", "embedding", cents)
-      val bf = ext.Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val probed = q
-        .select(col("vec_id").as("query_id"), col("embedding").cast("array<double>").as("qv"))
-        .select(col("query_id"), col("qv"),
-          posexplode(VectorExprs.nearestCells(col("qv"), cents, 4)))
-        .select(col("query_id"), col("qv"),
-          (col("pos") + 1).cast("long").as("cell_rank"), col("col").as("cell"))
-      val qb = broadcast(probed.withColumn("qn", VectorExprs.norm(col("qv"))))
-      val cand = index.join(qb, Seq("cell"))
-        .filter(col("id") =!= col("query_id"))
-        .withColumn("score", VectorExprs.dot(col("v"), col("qv")) /
-          (VectorExprs.norm(col("v")) * col("qn")))
-        .select(col("query_id"), col("cell_rank"),
-          col("id").as("neighbor_id"), col("score"))
-      val swept = cand.select(col("query_id"),
-        explode(sequence(col("cell_rank"), lit(4L))).as("nprobe"),
-        col("neighbor_id"), col("score"))
-      val top = swept.groupBy("query_id", "nprobe")
-        .agg(TopKAgg.topK(10, col("score"), col("neighbor_id").cast("double"),
-          struct(col("neighbor_id"))).as("t"))
-        .select(col("query_id"), col("nprobe"), explode(col("t")).as("x"))
-        .select(col("query_id"), col("nprobe"), col("x.neighbor_id").as("an"))
-      val hits = bf.join(top,
-          bf("query_id") === top("query_id") && bf("neighbor_id") === top("an"))
-        .groupBy(top("query_id").as("query_id"), col("nprobe"))
-        .agg(count(lit(1)).as("n_hits"))
-      q.select(col("vec_id").as("query_id"))
-        .crossJoin(s.range(1, 5).select(col("id").as("nprobe")))
-        .join(hits, Seq("query_id", "nprobe"), "left")
-        .select(col("query_id"), col("nprobe"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0).as("recall_at_10"))
-    }),
-
-    "ev_psm_match" -> ((s, dir) => {
-      // propensity-score matching, exact-match variant (Rosenbaum–Rubin
-      // 1983): users pair 1:1 on pre-period activity — within each
-      // pre_n stratum the i-th treated user by id matches the i-th
-      // control — and the ATT is the mean matched-pair response
-      // difference per stratum. Exact matching dominates nearest-
-      // neighbor when the covariate is discrete, and the rank join IS
-      // the matcher: no distance scan, windows partition by
-      // (stratum, arm) so matching parallelizes across strata. The
-      // final mean is a double rounded ONCE (a negative integer
-      // division would part ways between div and // semantics).
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp")
-      val u = events(s, dir)
-        .select(col("user_id"), (col("ts") < cut).as("pre"),
-          when(col("event_type") === "purchase" && col("ts") >= cut, 1L)
-            .otherwise(0L).as("post_resp"))
-        .groupBy("user_id")
-        .agg(sum(when(col("pre"), 1L).otherwise(0L)).as("pre_n"),
-          max(col("post_resp")).as("resp"))
-        .withColumn("treated", col("user_id") % 2 === 0)
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("pre_n", "treated").orderBy("user_id")
-      val r = u.withColumn("rk", row_number().over(w))
-      val t = r.filter(col("treated"))
-        .select(col("pre_n"), col("rk"), col("resp").as("t_resp"))
-      val c = r.filter(!col("treated"))
-        .select(col("pre_n"), col("rk"), col("resp").as("c_resp"))
-      t.join(c, Seq("pre_n", "rk"))
-        .groupBy("pre_n")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("t_resp")).as("resp_t"), sum(col("c_resp")).as("resp_c"))
-        .select(col("pre_n"), col("n_pairs"), col("resp_t"), col("resp_c"),
-          round((col("resp_t").cast("double") - col("resp_c")) /
-            col("n_pairs") * 1e6).cast("long").as("att_micro"))
-    }),
-
-    "ev_event_study" -> ((s, dir) => {
-      // dynamic difference-in-differences / event study: per relative
-      // week k around the 2024-01-15 treatment date, the treated −
-      // control gap in mean spend, normalized to the k = −1 gap (the
-      // pre-trend anchor). Leads (k < 0) test parallel trends, lags
-      // (k ≥ 0) trace the effect — the panel every DiD ships next to
-      // its point estimate (ev_did). One keyed agg; gaps are double
-      // means rounded once per row.
-      val e = events(s, dir).select(
-          (col("user_id") % 2 === 0).as("treated"),
-          floor(datediff(col("ts").cast("date"),
-            lit("2024-01-15").cast("date")) / lit(7.0)).cast("long").as("k"),
-          round(col("value") * 100).cast("long").as("v_c"))
-        .filter(col("k").between(-4L, 4L))
-      val gap = e.groupBy("k").agg(
-          sum(when(col("treated"), 1L).otherwise(0L)).as("n_t"),
-          sum(when(col("treated"), col("v_c")).otherwise(0L)).as("s_t"),
-          sum(when(!col("treated"), 1L).otherwise(0L)).as("n_c"),
-          sum(when(!col("treated"), col("v_c")).otherwise(0L)).as("s_c"))
-        .filter(col("n_t") > 0 && col("n_c") > 0)
-        .withColumn("gap", col("s_t").cast("double") / col("n_t") -
-          col("s_c").cast("double") / col("n_c"))
-        .localCheckpoint(true) // the k = −1 anchor and every row read it
-      // limit(1) states the one-row bound mechanically (k is unique after
-      // the groupBy, so this is semantics-free) — the BNLJ audit then
-      // proves the broadcast side bounded instead of trusting a comment
-      val base = gap.filter(col("k") === -1L).select(col("gap").as("gap0")).limit(1)
-      gap.crossJoin(broadcast(base))
-        .select(col("k"), col("n_t"), col("n_c"),
-          round(col("gap") * 1e6).cast("long").as("gap_micro"),
-          round((col("gap") - col("gap0")) * 1e6).cast("long").as("effect_micro"))
-    }),
-
-    "ta_dunning" -> ((s, dir) => {
-      // collocations by Dunning's log-likelihood ratio (Dunning 1993):
-      // G² over each bigram's 2×2 table — the low-count-robust
-      // complement to ta_pmi (PMI over-rewards rare pairs; G² weighs
-      // evidence). Same bigram-stream aggregates as ta_pmi; decimal
-      // products before the double cast so k·N can't wrap at web scale.
-      ext.LangModel.dunningCollocations(T(s, dir, "documents"),
-        "doc_id", "text", minCount = 5, topK = 25)
-    }),
-
-    "ta_kneser_ney" -> ((s, dir) => {
-      // interpolated Kneser–Ney bigram probabilities (Kneser–Ney 1995;
-      // Chen–Goodman 1999) for the top-25 bigrams: continuation counts
-      // (how many distinct contexts a word follows) replace raw
-      // frequency in the backoff — the smoothing behind production
-      // n-gram LMs and the right novelty statistic for a dedup'd
-      // corpus. Five integer aggregates + one micro-rounded formula.
-      ext.LangModel.kneserNeyBigrams(T(s, dir, "documents"),
-        "doc_id", "text", topK = 25)
-    }),
-
-    "srch_rocchio" -> ((s, dir) => {
-      // Rocchio pseudo-relevance feedback (Rocchio 1971 — the PRF query-
-      // expansion step of every classic IR stack): BM25's top-10 for the
-      // seed terms is ASSUMED relevant, candidate expansion terms are
-      // scored df_fb · idf (how common in the feedback set × how rare in
-      // the corpus) and the top-10 emitted with their statistics. Scale
-      // shape: the feedback set is 10 ids (broadcast semi-join), the
-      // candidates are its bounded vocabulary, and corpus df is ONE
-      // distinct-pair aggregate semi-joined to those candidates — the
-      // corpus is scanned, never shuffled wide. floor(·10⁴) basis
-      // points like bm25TopK (ln is the only transcendental).
-      val docs = T(s, dir, "documents")
-      val terms = Seq("spark", "dup", "vector")
-      val fb = ext.Search.bm25TopK(docs, "doc_id", "text", terms, 10)
-        .select("doc_id")
-      val fbToks = docs.join(broadcast(fb), "doc_id")
-        .select(explode(array_distinct(ext.Dedup.tokens(col("text")))).as("tok"))
-        .filter(!col("tok").isin(terms: _*) && length(col("tok")) >= 3)
-      val dfFb = fbToks.groupBy("tok").agg(count(lit(1)).as("df_fb"))
-        .localCheckpoint(true) // candidate list + final join share it
-      val dfCorpus = docs
-        .select(col("doc_id"), explode(array_distinct(ext.Dedup.tokens(col("text")))).as("tok"))
-        .join(broadcast(dfFb.select("tok")), Seq("tok"), "left_semi")
-        .groupBy("tok").agg(count(lit(1)).as("df_corpus"))
-      val n = docs.agg(count(lit(1)).as("n_docs"))
-      dfFb.join(dfCorpus, "tok").crossJoin(broadcast(n))
-        .select(col("tok"), col("df_fb"), col("df_corpus"),
-          floor(col("df_fb").cast("double") *
-            log((col("n_docs").cast("double") + 1.0) /
-              (col("df_corpus").cast("double") + 1.0)) * 10000)
-            .cast("long").as("weight_bp"))
-        .orderBy(col("weight_bp").desc, col("tok").asc).limit(10)
-    }),
-
-    "stream_hmm" -> ((s, dir) => withStreamShuffle(s, dir, "events") {
-      // streaming ev_hmm (Streams.hmmForward): the forward fold's
-      // BIGINT-encoded probability pair lives in the state store — ONE
-      // (enc, count) pair per user, O(#users) at any event volume —
-      // and each micro-batch advances it through the SAME hmmStepInt
-      // recurrence the batch query folds. The last snapshot per user
-      // must equal ev_hmm exactly, so the two share one oracle:
-      // streaming ≡ batch, proven by hash.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      import s.implicits._
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = normalizeTs(s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet"))
-        .select(col("event_id"), col("ts"), col("user_id"),
-          when(col("event_type").isin("click", "purchase"), 1L)
-            .otherwise(0L).as("obs"))
-        .as[streaming.Streams.HmmEvent]
-      val out = streaming.Streams.hmmForward(src)(s).toDF()
-      s.catalog.dropTempView("graft_stream_hmm")
-      val q = out.writeStream.format("memory").queryName("graft_stream_hmm")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // one snapshot per (user, micro-batch) accumulates in the sink;
-      // the final posterior is the snapshot with the highest count
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("n_events").desc)
-      s.table("graft_stream_hmm")
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select("user_id", "n_events", "p_engaged_micro", "is_engaged")
-    }),
-
-    "mm_vad" -> ((s, dir) => {
-      // energy-threshold voice activity detection over REAL WAV round-
-      // trips: vadMedia plants a speech/silence block pattern (bit b of
-      // md5_64(doc_id) ⇒ 50 ms block b is a ±6000 square wave, else
-      // silence), the JDK WAV writer encodes it, audioWindows re-parses
-      // the container to PCM and frames 400-sample energy windows; a
-      // window is speech iff mean |sample| clears 3000, segments are
-      // speech runs via one lag over the per-clip window index (domain
-      // bounded: 8 windows/clip). The oracle recomputes every value
-      // from doc_id alone — the encode → parse → window → segment
-      // pipeline is hash-gated end to end.
-      implicit val sp: SparkSession = s
-      val media = ext.Multimodal.vadMedia(T(s, dir, "documents"))
-      val w = ext.Multimodal.audioWindows(media, 400).toDF()
-      val lw = org.apache.spark.sql.expressions.Window
-        .partitionBy("media_id").orderBy("win_idx")
-      w.withColumn("speech", col("sum_abs") > col("n_frames") * 3000L)
-        .withColumn("prev", lag(col("speech"), 1).over(lw))
-        .groupBy("media_id")
-        .agg(count(lit(1)).as("n_windows"),
-          sum(when(col("speech"), 1L).otherwise(0L)).as("n_speech"),
-          sum(when(col("speech") && (col("prev").isNull || !col("prev")), 1L)
-            .otherwise(0L)).as("n_segments"))
-        .select(col("media_id"), col("n_windows"), col("n_speech"),
-          col("n_segments"),
-          expr("(n_speech * 1000000) div n_windows").as("speech_ratio_micro"))
-    })
-  )
-
-  /** Shapley factorial-weight term table for k = 3 channels: for channel
-    * bit c and each coalition S of the OTHER two bits, w = w_num/6 with
-    * w_num = 2, 1, 1, 2 for |S| = 0, 1, 1, 2.
-    */
-  private val shapleyTerms: Seq[(String, Long, Long, Long)] = {
-    val bits = Seq("view" -> 1L, "click" -> 2L, "signup" -> 4L)
-    for {
-      (name, b) <- bits
-      others = bits.map(_._2).filterNot(_ == b)
-      sub <- Seq(Seq.empty[Long], Seq(others.head), Seq(others(1)), others)
-    } yield {
-      val mask = sub.sum
-      val wNum = sub.size match { case 0 => 2L; case 1 => 1L; case _ => 2L }
-      (name, mask + b, mask, wNum)
-    }
-  }
-
-  /** ±1 JL sign matrix (8×64), fixed at build time from md5("rp:j:i") —
-    * the SAME literals serve the engine expression and the oracle.
-    */
-  private lazy val rprojSigns: Array[Array[Int]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    Array.tabulate(8, 64) { (j, i) =>
-      val h = md.digest(s"rp:$j:$i".getBytes("UTF-8"))
-      md.reset()
-      if (((h(0) >> 4) & 0xf) < 8) 1 else -1
-    }
-  }
-
-  /** The projection sum for output dim `j` as a fixed-order textual
-    * chain; `elemFmt` renders element access (1-based index).
-    */
-  private def rprojExprSql(j: Int, elemFmt: String): String =
-    (0 until 64).map { i =>
-      val sg = if (rprojSigns(j)(i) == 1) "1.0" else "-1.0"
-      s"($sg * CAST(${elemFmt.format(i + 1)} AS DOUBLE))"
-    }.mkString(" + ")
-
-  /** sim_rproj: the same sign literals, the same left-assoc chains. */
-  private lazy val rprojOracleSql: String = {
-    val ps = (0 until 8).map(j => s"${rprojExprSql(j, "v[%d]")} AS p$j").mkString(", ")
-    val pn8 = (0 until 8).map(j => s"p$j * p$j").mkString("(", " + ", ") / 8.0")
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), b AS (SELECT vec_id, list_dot_product(v, v) AS nn, $ps FROM e), p AS (SELECT vec_id, nn, $pn8 AS pn8 FROM b) SELECT vec_id, CAST(round(nn * 1000000) AS BIGINT) AS nn_micro, CAST(round(pn8 * 1000000) AS BIGINT) AS pn8_micro, CASE WHEN nn = 0.0 THEN CAST(0 AS BIGINT) ELSE CAST(round(pn8 / nn * 1000000) AS BIGINT) END AS ratio_micro FROM p"""
-  }
-
-  /** ev_shapley: coalition panel + the same 12-row factorial-weight term
-    * table rendered as literal VALUES.
-    */
-  private lazy val shapleyOracleSql: String = {
-    val values = shapleyTerms.map { case (c, w, wo, n) => s"('$c', $w, $wo, $n)" }
-      .mkString(", ")
-    s"""WITH users AS (SELECT user_id, CAST(max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS hv, CAST(max(CASE WHEN event_type = 'click' THEN 2 ELSE 0 END) AS BIGINT) AS hc, CAST(max(CASE WHEN event_type = 'signup' THEN 4 ELSE 0 END) AS BIGINT) AS hs, CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS conv FROM events GROUP BY 1), panel AS (SELECT hv + hc + hs AS mask, (CAST(sum(conv) AS BIGINT) * 1000000) // CAST(count(*) AS BIGINT) AS v_micro FROM users GROUP BY 1), t(channel, with_mask, without_mask, w_num) AS (VALUES $values), terms AS (SELECT channel, (w_num * (coalesce(pw.v_micro, 0) - coalesce(po.v_micro, 0))) // 6 AS term FROM t LEFT JOIN panel pw ON pw.mask = t.with_mask LEFT JOIN panel po ON po.mask = t.without_mask) SELECT channel, CAST(sum(term) AS BIGINT) AS phi_micro FROM terms GROUP BY 1"""
-  }
-
-  /** Weighted blocklist for ta_blocklist — shared with its oracle. */
-  private val blocklistTerms: Seq[(String, Long)] =
-    Seq("slow" -> 3L, "crash" -> 5L, "fail" -> 4L, "big" -> 1L, "filter" -> 2L)
-
-  /** Graded relevance 0–3 from md5 — Spark spelling; the oracle uses the
-    * DuckDB hex-cast equivalent of the same 'rel:<id>' input.
-    */
-  private val relGradeSql: String =
-    "CAST(conv(substr(md5(concat('rel:', CAST(doc_id AS STRING))), 1, 2), 16, 10) AS BIGINT) % 4"
-
-  /** nDCG per-rank weights ⌊10⁶/log₂(r+1)⌉ for r = 1..10 — literal table
-    * shared by engine and oracle.
-    */
-  private val ndcgWeights: Seq[(Long, Long)] =
-    (1 to 10).map(r => (r.toLong, math.round(1e6 / (math.log(r + 1.0) / math.log(2.0)))))
-
-  // --- geo helpers ------------------------------------------------------
-  // Synthetic micro-degree coordinates: Knuth/Murmur multiplicative
-  // hashes of the integer key — pure BIGINT arithmetic both engines
-  // replay literal-for-literal (products stay ≤ ~4e17, far under 2^63).
-  /** The rec_itemitem top-3 lists — shared by rec_itemitem (which
-    * returns them directly) and rec_diversity (which audits them).
-    */
-  private def recItemItemRecs(s: SparkSession, dir: String): DataFrame = {
-    val items = T(s, dir, "lineitem")
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val widths = items.groupBy("o").agg(count(lit(1)).as("w"))
-    val capped = items.join(
-      widths.filter(col("w") <= kcoreOrderCap).select("o"), Seq("o"), "left_semi")
-    val freq = capped.groupBy("p").agg(count(lit(1)).as("n"))
-    val pairs = capped.as("a")
-      .join(capped.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .groupBy(col("a.p").as("i"), col("b.p").as("j")).agg(count(lit(1)).as("cooc"))
-      .filter(col("cooc") >= 2)
-    val directed = pairs.select(col("i"), col("j"), col("cooc"))
-      .union(pairs.select(col("j").as("i"), col("i").as("j"), col("cooc")))
-    val scored = directed
-      .join(freq.select(col("p").as("i"), col("n").as("ni")), Seq("i"))
-      .join(freq.select(col("p").as("j"), col("n").as("nj")), Seq("j"))
-      .withColumn("score_micro",
-        expr("CAST((cooc * cooc * 1000000) div (ni * nj) AS BIGINT)"))
-    // top-3 per item via the native bounded-heap aggregate: the window
-    // row_number formulation shuffles and sorts EVERY directed pair; the
-    // k-heap ships ≤3 rows per (partition, item). Ordering identical to
-    // the old window: score_micro desc, j asc (j unique per i, so ties
-    // are impossible and the two spellings agree row-for-row).
-    scored.groupBy(col("i"))
-      .agg(graft.functions.TopKAgg.topK(3, col("score_micro").cast("double"),
-        col("j").cast("double"),
-        struct(col("j"), col("cooc"), col("score_micro"))).as("top"))
-      .select(col("i").as("part_id"), posexplode(col("top")))
-      .select(col("part_id"), (col("pos") + 1).cast("long").as("rnk"),
-        col("col.j").as("rec_part_id"), col("col.cooc").as("cooc"),
-        col("col.score_micro").as("score_micro"))
-  }
-
-  private val custLatMul = 2654435761L
-  private val custLonMul = 2246822519L
-  private val suppLatMul = 1540483477L
-  private val suppLonMul = 1327217885L
-  private def geoLatSql(key: String, mul: Long): String =
-    s"(($key * $mul) % 180000000 - 90000000)"
-  private def geoLonSql(key: String, mul: Long): String =
-    s"(($key * $mul) % 360000000 - 180000000)"
-
-  /** One HMM forward step over the BIGINT-encoded state pair
-    * (a0·10⁷ + a1, both micro, renormalized to a0+a1 = 10⁶ each step):
-    * transition T = [[0.9, 0.1], [0.2, 0.8]], emission P(obs=1|s0)=0.3 /
-    * P(obs=1|s1)=0.8, all in micro ints. `idiv` is `div` (Spark) or `//`
-    * (DuckDB); every operand is nonnegative so the two divisions agree.
-    * Packing both probabilities into one BIGINT keeps the fold free of
-    * struct lambdas, so Spark's `aggregate` and DuckDB's `list_reduce`
-    * replay it bit-for-bit. Max intermediate ≈ 9·10¹¹ — no wrap.
-    */
-  /** The same forward step as [[hmmStepSql]] in plain Scala — the
-    * streaming fold (streaming.Streams.hmmForward) carries this across
-    * micro-batches; all three spellings (Spark SQL, DuckDB, Scala) are
-    * the one recurrence.
-    */
-  private[graft] def hmmStepInt(acc: Long, o: Long): Long = {
-    val a0 = acc / 10000000L
-    val a1 = acc % 10000000L
-    val u0 = (a0 * 900000L + a1 * 200000L) / 1000000L *
-      (if (o == 1L) 300000L else 700000L) / 1000000L
-    val u1 = (a0 * 100000L + a1 * 800000L) / 1000000L *
-      (if (o == 1L) 800000L else 200000L) / 1000000L
-    val na0 = u0 * 1000000L / math.max(u0 + u1, 1L)
-    na0 * 10000000L + (1000000L - na0)
-  }
-
-  /** Initial encoded HMM state: a0 = a1 = 500000 micro. */
-  private[graft] val hmmInit: Long = 5000000500000L
-
-  private def hmmStepSql(acc: String, o: String, idiv: String): String = {
-    val a0 = s"($acc $idiv 10000000)"
-    val a1 = s"($acc % 10000000)"
-    val u0 = s"((($a0 * 900000 + $a1 * 200000) $idiv 1000000) * " +
-      s"(CASE WHEN $o = 1 THEN 300000 ELSE 700000 END)) $idiv 1000000"
-    val u1 = s"((($a0 * 100000 + $a1 * 800000) $idiv 1000000) * " +
-      s"(CASE WHEN $o = 1 THEN 800000 ELSE 200000 END)) $idiv 1000000"
-    val na0 = s"((($u0) * 1000000) $idiv greatest(($u0) + ($u1), 1))"
-    s"($na0 * 10000000 + (1000000 - $na0))"
-  }
-
-  /** Fixed non-convex geofence polygon for geo_pip, (lon, lat) vertices
-    * in micro-degrees — closed implicitly (last → first).
-    */
-  private val pipPolygon: Seq[(Long, Long)] = Seq(
-    (-30000000L, 10000000L), (-10000000L, 40000000L), (20000000L, 25000000L),
-    (45000000L, 50000000L), (30000000L, -5000000L))
-
-  /** Ray-casting crossing COUNT (Shimrat 1962) of the +lon ray from
-    * point (px, py) against [[pipPolygon]], as a sum of per-edge CASE
-    * terms. Each edge's Δlat sign is a compile-time literal, so the
-    * "px left of the edge at height py" test is a pure integer product
-    * comparison — no division, hence bit-identical in both engines.
-    * Products stay ≤ ~6.5·10¹⁶ (micro-degree spans), far from wrap.
-    */
-  private def pipCrossSql(px: String, py: String): String =
-    (pipPolygon :+ pipPolygon.head).sliding(2).map { w =>
-      val ((x1, y1), (x2, y2)) = (w(0), w(1))
-      val dy = y2 - y1
-      require(dy != 0L, "pip polygon must have no horizontal edges")
-      val cmp = if (dy > 0) "<" else ">"
-      s"(CASE WHEN ($y1 > $py) <> ($y2 > $py) AND " +
-        s"(($px - $x1) * $dy) $cmp (($x2 - $x1) * ($py - $y1)) THEN 1 ELSE 0 END)"
-    }.mkString(" + ")
-
-  /** Test hook: the geo_pip crossing-parity projection over (lon, lat)
-    * columns, so Round7OpsSpec can check it against an independent
-    * point-in-polygon implementation.
-    */
-  private[graft] def pipInside(df: DataFrame): DataFrame =
-    df.select(col("lon"), col("lat"),
-      expr(s"(${pipCrossSql("lon", "lat")}) % 2 = 1").as("inside"))
-
-  /** Fixed promotion windows for q_interval_overlap (id, start, end) —
-    * inclusive dates, deliberately overlapping each other and spanning
-    * month boundaries.
-    */
-  private val promoWindows: Seq[(Long, String, String)] = Seq(
-    (1L, "1993-05-15", "1993-07-10"), (2L, "1994-11-20", "1995-01-05"),
-    (3L, "1995-06-01", "1995-06-30"), (4L, "1996-02-10", "1996-04-25"),
-    (5L, "1996-12-15", "1997-02-01"), (6L, "1997-08-05", "1997-09-20"))
-
-  /** 30-bit lon/lat interleave over pre-quantized `lon_q`/`lat_q`
-    * (15 bits each) as literal-unrolled div/mod terms; `idiv` is `div`
-    * (Spark) or `//` (DuckDB).
-    */
-  private def geoInterleaveSql(idiv: String): String =
-    (0 until 15).map { k =>
-      val p = 1 << (14 - k)
-      s"((lon_q $idiv $p) % 2) * ${1L << (29 - 2 * k)} + " +
-        s"((lat_q $idiv $p) % 2) * ${1L << (28 - 2 * k)}"
-    }.mkString(" + ")
-
-  /** First `n` base32 geohash characters of the 30-bit interleave `v`. */
-  private def geohashCharsSql(v: String, idiv: String, n: Int): String =
-    (0 until n).map { i =>
-      val p = 1L << (25 - 5 * i)
-      s"substr('0123456789bcdefghjkmnpqrstuvwxyz', CAST((($v $idiv $p) % 32) AS INT) + 1, 1)"
-    }.mkString("concat(", ", ", ")")
-
-  /** Haversine meters over micro-degree columns clat/clon/slat/slon —
-    * sin/cos/asin/sqrt/round spell identically in Spark SQL and DuckDB,
-    * so the SAME string is both the engine expression and the oracle
-    * fragment. 8.726646e-9 = π/360e6 (half-angle per micro-degree),
-    * 1.745329e-8 = π/180e6, 12742000 = 2·R_earth.
-    */
-  private val haversineSql: String =
-    """CAST(round(12742000.0 * asin(sqrt(
-      |  sin((slat - clat) * 8.726646259971648e-9) * sin((slat - clat) * 8.726646259971648e-9)
-      |  + cos(slat * 1.7453292519943295e-8) * cos(clat * 1.7453292519943295e-8)
-      |    * sin((slon - clon) * 8.726646259971648e-9) * sin((slon - clon) * 8.726646259971648e-9)
-      |))) AS BIGINT)""".stripMargin
-
-  /** Content-defined chunking (8-char base-31 rolling hash, boundary at
-    * H % 64 == 0) as pure array expressions — shared by ta_cdc_chunk
-    * and dd_chunk_overlap; the oracle replays the identical literals. */
-  private def cdcChunks(docs: DataFrame): DataFrame =
-    // fanOut: the rolling-hash boundary scan is ~len(text) integer ops per
-    // row — CPU-bound per-row work that must not inherit a sub-split
-    // file's single scan partition (no-op at natural parallelism)
-    ext.Par.fanOut(docs)
-      .withColumn("codes", expr(
-        "transform(sequence(1, length(text)), i -> CAST(ascii(substring(text, i, 1)) AS BIGINT))"))
-      .withColumn("bpos", expr(
-        """filter(sequence(8, greatest(8, size(codes))), i -> i <= size(codes) AND
-           (element_at(codes, i) + element_at(codes, i-1) * 31
-            + element_at(codes, i-2) * 961 + element_at(codes, i-3) * 29791
-            + element_at(codes, i-4) * 923521 + element_at(codes, i-5) * 28629151
-            + element_at(codes, i-6) * 887503681
-            + element_at(codes, i-7) * 27512614111) % 64 = 0)"""))
-      .withColumn("bounds", expr(
-        """array_sort(array_distinct(concat(array(CAST(0 AS BIGINT)),
-           transform(bpos, x -> CAST(x AS BIGINT)),
-           array(CAST(size(codes) AS BIGINT)))))"""))
-      .select(col("doc_id"), explode(expr(
-        """CASE WHEN size(bounds) >= 2 THEN
-             transform(sequence(1, size(bounds) - 1),
-               j -> substring(text, CAST(element_at(bounds, j) AS INT) + 1,
-                    CAST(element_at(bounds, j + 1) - element_at(bounds, j) AS INT)))
-           ELSE array() END""")).as("chunk"))
-
-  /** ⌊0.2·0.8^j·1e6⌋ for j 0..19 — the truncated EWMA kernel, shared
-    * with the q_ewma oracle as the same literal table. */
-  private val ewmaKernelMicro: Seq[(Long, Long)] = Seq(
-    0L -> 200000L, 1L -> 160000L, 2L -> 128000L, 3L -> 102400L,
-    4L -> 81920L, 5L -> 65536L, 6L -> 52428L, 7L -> 41943L,
-    8L -> 33554L, 9L -> 26843L, 10L -> 21474L, 11L -> 17179L,
-    12L -> 13743L, 13L -> 10995L, 14L -> 8796L, 15L -> 7036L,
-    16L -> 5629L, 17L -> 4503L, 18L -> 3602L, 19L -> 2882L)
-
-  /** Exact floor(0.9^dy · 1e6) for dy 0..10 — shared with the ev_ltv
-    * oracle as the same literal table (no libm pow in either engine). */
-  private val ltvDecayMicro: Seq[(Long, Long)] = Seq(
-    0L -> 1000000L, 1L -> 900000L, 2L -> 810000L, 3L -> 729000L,
-    4L -> 656100L, 5L -> 590490L, 6L -> 531441L, 7L -> 478296L,
-    8L -> 430467L, 9L -> 387420L, 10L -> 348678L)
-
-  /** HLL precision (2^10 registers ≈ 3.2 % σ) shared by query + oracle. */
-  private val hllP = 10
-
-  /** dd_spans boilerplate guard: grams whose corpus-wide posting list
-    * exceeds this are dropped before the positional match join (their
-    * pair fan-out is quadratic in the posting count and they carry no
-    * span signal — same rationale as the LSH bucket caps). The oracle
-    * applies the identical cap.
-    */
-  private val spanPostingCap = 50
-
-  /** ev_assoc giant-basket guard: baskets with more distinct items than
-    * this are dropped (with an observed-drop count) before the pair
-    * expansion — C(cap,2) bounds the per-basket fan-out at scale. The
-    * brand domain is 25, so the cap never binds on the test fixtures;
-    * the oracle applies the same cap.
-    */
-  private val assocBasketCap = 32
-
-  /** Poisson(1) inverse-CDF thresholds on the 32-bit hash fraction,
-    * floor(cdf·2³²) for k = 0..8 — the deterministic Poisson bootstrap's
-    * multiplicity table, shared verbatim between engine and oracle.
-    */
-  private val bootThresholds: Seq[Long] = Seq(1580030168L, 3160060337L,
-    3950075421L, 4213413783L, 4279248373L, 4292415291L, 4294609777L,
-    4294923276L, 4294962463L)
-
-  private def bootPoissonCdf(u32: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    bootThresholds.zipWithIndex.foldRight(
-      lit(9L): org.apache.spark.sql.Column) { case ((t, k), acc) =>
-      when(u32 < t, lit(k.toLong)).otherwise(acc)
-    }
-
-  /** g_kcore's parts-per-order width cap, shared by query + oracle: the
-    * co-purchase pair build is quadratic in order width, so pathological
-    * giant orders are excluded by definition (TPC-H max width is 7 —
-    * nothing drops at test fixtures; at 100 TB this bounds the fan-out
-    * at 64²/2 pairs per order the way the LSH bucket caps bound stars).
-    */
-  private val kcoreOrderCap = 64
-
-  /** g_linkpred's shared-middle degree cap: wedge expansion fans each
-    * anchor adjacency row through its middle vertex's adjacency, so a
-    * hub middle makes the candidate set explode while carrying no link
-    * signal (everything co-occurs with a hub). Middles above the cap
-    * are excluded by definition — shared with the oracle; observed
-    * degrees at the fixtures are ~300, so it never binds there.
-    */
-  private val linkpredHubCap = 1024
-
-  /** Histogram Gini split candidates over a (y, bin_year, bin_price)
-    * frame — the shared kernel of q_stump / q_declist: one bounded
-    * (feature × bin) count aggregate, cumulative windows over ≤ 20-row
-    * per-feature frames, and the exact integer weighted-Gini score
-    * (2·posL·negL/nL + 2·posR·negR/nR, micro-scaled nonnegative
-    * integral division).
-    */
-  private def stumpCandidates(base: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hist = base.select(explode(array(
-        struct(lit("year").as("feature"), col("bin_year").as("bin"), col("y")),
-        struct(lit("price").as("feature"), col("bin_price").as("bin"), col("y")))).as("e"))
-      .select(col("e.feature"), col("e.bin"), col("e.y"))
-      .groupBy("feature", "bin")
-      .agg(count(lit(1)).as("n"), sum("y").as("pos"))
-    val w = Window.partitionBy("feature").orderBy("bin")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = hist.groupBy("feature").agg(sum("n").as("n_tot"), sum("pos").as("pos_tot"))
-    hist
-      .withColumn("n_left", sum("n").over(w))
-      .withColumn("pos_left", sum("pos").over(w))
-      .join(broadcast(tot), Seq("feature"))
-      .filter(col("n_left") < col("n_tot")) // a split must leave a right side
-      .select(col("feature"), col("bin").as("threshold"),
-        col("n_left"), col("pos_left"),
-        (col("n_tot") - col("n_left")).as("n_right"),
-        (col("pos_tot") - col("pos_left")).as("pos_right"))
-      .withColumn("g_micro",
-        expr("""CAST((2 * CAST(pos_left AS DECIMAL(18,0)) * (n_left - pos_left) * 1000000)
-                    div n_left AS BIGINT)
-                + CAST((2 * CAST(pos_right AS DECIMAL(18,0)) * (n_right - pos_right) * 1000000)
-                    div n_right AS BIGINT)"""))
-  }
-
-  /** The LSH collision curve 1 − (1 − s^r)^b as ONE literal expression
-    * string shared verbatim by Spark and DuckDB: s^r as a left-fold
-    * multiply chain, (·)^b as a squaring chain (b a power of two) —
-    * identical rounded-double sequences in both engines, no libm pow.
-    */
-  private def lshCurveSql(r: Int, b: Int): String = {
-    require(b > 0 && (b & (b - 1)) == 0, "lshCurveSql: b must be a power of two")
-    val sD = "(CAST(s_pct AS DOUBLE) / 100.0)"
-    val sr = (2 to r).foldLeft(sD)((acc, _) => s"($acc * $sD)")
-    val q = s"(1.0 - $sr)"
-    val qb = Iterator.iterate(q)(e => s"($e * $e)")
-      .drop(Integer.numberOfTrailingZeros(b)).next()
-    s"(1.0 - $qb)"
-  }
-
-  /** Distinct lowercase-token n-gram set per document — the shared gram
-    * frame of ta_novelty / dd_eval (space-joined word n-grams; docs with
-    * fewer than n tokens emit nothing — the size filter must precede the
-    * explode because sequence(0, m) DESCENDS for m < 0). Checkpointed:
-    * every consumer reads it at least twice.
-    */
-  private def wordGramSet(docs: DataFrame, n: Int): DataFrame = {
-    val gramExpr = (0 until n).map(k => s"t[i + $k]").mkString("concat(", ", ' ', ", ")")
-    docs.select(col("doc_id"),
-        filter(split(lower(col("text")), "\\s+"), x => x =!= "").as("t"))
-      .filter(size(col("t")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(0, size(t) - $n), i -> $gramExpr)")).as("gram"))
-      .distinct()
-      .localCheckpoint(true)
-  }
-
-  /** KMV estimate from a bottom-k array column, as a SQL expression shared
-    * verbatim in spirit with the oracle: θ = 2⁶⁴ when the sketch is not
-    * full (estimate degrades to the exact count), else the unsigned value
-    * of the largest retained hash; retained = strictly below θ. All
-    * DECIMAL(38,0) integer arithmetic, truncating division.
-    */
-  private def kmvEstSql(arr: String, k: Int): String = {
-    val two64 = "CAST('18446744073709551616' AS DECIMAL(38,0))"
-    val last = s"element_at($arr, -1)"
-    val lastU = s"(CAST($last AS DECIMAL(38,0)) + CASE WHEN $last < 0 THEN $two64 ELSE CAST(0 AS DECIMAL(38,0)) END)"
-    s"""CAST((CAST(CASE WHEN size($arr) < $k THEN size($arr) ELSE size($arr) - 1 END AS DECIMAL(38,0))
-       | * $two64) div (CASE WHEN size($arr) < $k THEN $two64 ELSE $lastU END) AS BIGINT)""".stripMargin
-  }
-
-  /** Two-sided geometric(α=½) noise order and exact inverse-CDF
-    * thresholds on the 32-bit hash fraction (BigInt-exact rationals with
-    * denominator 3·2⁸) — q_dp's derandomized discrete Laplace, shared
-    * verbatim between engine and oracle. The exact draw condition is
-    * u32/2³² < cdf, i.e. u32 < ⌈cdf·2³²⌉ — CEILING, not floor: at the
-    * 11 non-divisible boundaries a floored literal would push the
-    * boundary u32 into the next noise bucket, off by one vs the exact
-    * fraction replay in Round5cSpec. Checked in order 0, +1, −1, …,
-    * +8, −8; the untaken tail (mass 2/768) caps at +9.
-    */
-  private val dpNoiseSeq: Seq[Long] = 0L +: (1 to 8).flatMap(k => Seq(k.toLong, -k.toLong))
-  private val dpThresholds: Seq[Long] = {
-    val den = BigInt(3) * BigInt(256) // 3·2^8
-    var num = BigInt(0)
-    dpNoiseSeq.map { n =>
-      val p = if (n == 0L) BigInt(256) else BigInt(1) << (8 - math.abs(n).toInt)
-      num += p
-      ((BigInt(2).pow(32) * num + den - 1) / den).toLong // ⌈·⌉
-    }
-  }
-
-  private def dpGeomNoise(u32: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    dpThresholds.zip(dpNoiseSeq).foldRight(lit(9L): org.apache.spark.sql.Column) {
-      case ((t, n), acc) => when(u32 < t, lit(n)).otherwise(acc)
-    }
-
-  /** α_m·m² computed ONCE in driver doubles and embedded as a literal in
-    * both engines (Double.toString round-trips, so DuckDB parses the
-    * identical bits) — keeps the per-group work to one division.
-    */
-  private def hllAlphaM2(m: Int): Double =
-    0.7213 / (1.0 + 1.079 / m) * m * m
-
-  private val cmsDepth = 4
-  private val cmsLogW = 10
-
-  /** Raw HLL estimate from a register array Column: α·m² divided by the
-    * fixed-order dyadic fold Σ 2^-rho (bit-identical to the oracle's
-    * list_reduce — same IEEE additions in the same order).
-    */
-  private def hllEstCol(regs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    lit(hllAlphaM2(1 << hllP)) / aggregate(regs, lit(0.0),
-      (acc, x) => acc + pow(lit(2.0), -x.cast("double")))
-
-  // ---------------------------------------------------------- oracle SQL
-
-  /** DuckDB replay of the winnowing fingerprint pipeline (k=8, w=16,
-    * minShared=5, maxDocFreq=20 — Dedup.winnowPairs defaults). The JVM
-    * rolling Rabin-Karp hash wraps mod 2^64, so each k-gram hash equals
-    * the direct polynomial Σ byte_j·257^(7-j) mod 2^64 — computed in
-    * HUGEINT and re-signed to BIGINT (the window min compares SIGNED
-    * longs, matching Hashing.winnowLocal). The fixture text is pure
-    * ASCII, so ascii(char) == utf8 byte.
-    */
-  private lazy val winnowOracleSql: String = {
-    val expr = (0 until 8).map(j =>
-      s"CAST(ascii(substr(text, CAST(i AS INTEGER) + ${j + 1}, 1)) AS HUGEINT) * ${BigInt(257).pow(7 - j)}"
-    ).mkString("((", " + ", ") % 18446744073709551616::HUGEINT)")
-    s"""WITH b AS (SELECT doc_id, text, strlen(text) AS nb FROM documents WHERE strlen(text) >= 8),
-       |hs AS (SELECT doc_id, list_transform(range(nb - 7), i ->
-       |  CAST(CASE WHEN $expr >= 9223372036854775808::HUGEINT
-       |       THEN $expr - 18446744073709551616::HUGEINT
-       |       ELSE $expr END AS BIGINT)) AS h FROM b),
-       |mw AS (SELECT doc_id, CASE WHEN len(h) <= 16 THEN [list_min(h)]
-       |  ELSE list_transform(range(len(h) - 15), i -> list_min(h[(CAST(i AS INTEGER)+1):(CAST(i AS INTEGER)+16)])) END AS mins FROM hs),
-       |fps AS (SELECT DISTINCT doc_id, unnest(mins) AS fp FROM mw),
-       |rare AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 20),
-       |kept AS (SELECT doc_id, fp FROM fps JOIN rare USING (fp))
-       |SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(count(*) AS BIGINT) AS n_shared
-       |FROM kept a JOIN kept b USING (fp) WHERE a.doc_id < b.doc_id
-       |GROUP BY 1, 2 HAVING count(*) >= 5""".stripMargin
-  }
-
-  /** 10-round unrolled k-core peel (k=80) over the part co-purchase
-    * graph. MATERIALIZED hints keep DuckDB from re-inlining the chain
-    * (each round references its predecessor three times). Peeling reaches
-    * its fixpoint in 6 rounds at sf0.01; rounds 7-10 are provably
-    * identity (monotone peel), so the unroll equals the true k-core.
-    */
-  private lazy val kcoreOracleSql: String = {
-    val parts = scala.collection.mutable.ArrayBuffer(
-      "lp0 AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem)",
-      s"lp AS MATERIALIZED (SELECT o, p FROM lp0 QUALIFY count(*) OVER (PARTITION BY o) <= $kcoreOrderCap)",
-      "e0 AS MATERIALIZED (SELECT DISTINCT x.p AS src, y.p AS dst FROM lp x JOIN lp y ON x.o = y.o AND x.p <> y.p)")
-    for (r <- 1 to 10) {
-      parts += s"k$r AS MATERIALIZED (SELECT src FROM e${r - 1} GROUP BY src HAVING count(*) >= 80)"
-      parts += s"e$r AS MATERIALIZED (SELECT e.src, e.dst FROM e${r - 1} e JOIN k$r a ON e.src = a.src JOIN k$r b ON e.dst = b.src)"
-    }
-    "WITH " + parts.mkString(", ") +
-      " SELECT src AS part_id, CAST(count(*) AS BIGINT) AS core_deg FROM e10 GROUP BY 1"
-  }
-
-  /** 3-round unrolled synchronous label propagation over the symmetrized
-    * trade graph, min-label tie-break — mirrors Graph.labelPropagation.
-    */
-  /** The label-propagation replay CTE chain (base/e/l0..l3) — shared by
-    * g_labelprop and g_modularity.
-    */
-  private lazy val labelpropCtes: String = {
-    val parts = scala.collection.mutable.ArrayBuffer(
-      "base AS MATERIALIZED (SELECT DISTINCT o_custkey AS c, l_suppkey + 10000000 AS s FROM lineitem JOIN orders ON l_orderkey = o_orderkey)",
-      "e AS MATERIALIZED (SELECT c AS src, s AS dst FROM base UNION SELECT s, c FROM base)",
-      "l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS lbl FROM e)")
-    for (r <- 1 to 3) {
-      parts += s"f$r AS MATERIALIZED (SELECT e.src AS id, l.lbl, count(*) AS c FROM e JOIN l${r - 1} l ON e.dst = l.id GROUP BY 1, 2)"
-      parts += s"p$r AS MATERIALIZED (SELECT id, lbl FROM f$r QUALIFY row_number() OVER (PARTITION BY id ORDER BY c DESC, lbl ASC) = 1)"
-      parts += s"l$r AS MATERIALIZED (SELECT n.id, coalesce(p.lbl, n.lbl) AS lbl FROM l${r - 1} n LEFT JOIN p$r p USING (id))"
-    }
-    parts.mkString(", ")
-  }
-
-  private lazy val labelpropOracleSql: String =
-    "WITH " + labelpropCtes + " SELECT id, CAST(lbl AS BIGINT) AS lbl FROM l3"
-
-  /** ev_balance: one SMD block per covariate, HUGEINT sums (s·s exceeds
-    * 2⁶³ at scale), the identical double formula as the engine side.
-    */
-  private lazy val evBalanceOracleSql: String = {
-    def block(name: String, vexpr: String): String =
-      s"""(WITH x AS (SELECT CAST(props->>'k' AS BIGINT) % 2 AS arm, CAST($vexpr AS HUGEINT) AS v FROM events), g AS (SELECT CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0, sum(CASE WHEN arm = 0 THEN v END) AS s0, sum(CASE WHEN arm = 0 THEN v * v END) AS ss0, CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1, sum(CASE WHEN arm = 1 THEN v END) AS s1, sum(CASE WHEN arm = 1 THEN v * v END) AS ss1 FROM x), p AS (SELECT n0, n1, s0, s1, ((CAST(n1 * ss1 - s1 * s1 AS DOUBLE) / (CAST(n1 AS DOUBLE) * (n1 - 1))) + (CAST(n0 * ss0 - s0 * s0 AS DOUBLE) / (CAST(n0 AS DOUBLE) * (n0 - 1)))) / 2.0 AS vp FROM g) SELECT '$name' AS covariate, n0, n1, CASE WHEN vp <= 0.0 THEN CAST(0 AS BIGINT) ELSE CAST(round((CAST(s1 AS DOUBLE) / n1 - CAST(s0 AS DOUBLE) / n0) / sqrt(vp) * 1000000) AS BIGINT) END AS smd_micro FROM p)"""
-    val u = Seq(
-      block("value_c", "round(value * 100)"),
-      block("hour", "hour(ts)"),
-      block("is_purchase", "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END"))
-      .mkString(" UNION ALL ")
-    s"SELECT covariate, n0, n1, smd_micro, abs(smd_micro) > 100000 AS imbalanced FROM ($u)"
-  }
-
-  /** ev_audience_overlap: the same ten pair blocks over one flag CTE. */
-  private lazy val audienceOverlapOracleSql: String = {
-    val types = Seq("view", "click", "purchase", "signup", "error")
-    val flags = types.map(t =>
-      s"CAST(max(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS f_$t")
-      .mkString(", ")
-    val blocks = (for {
-      i <- types.indices; j <- types.indices if i < j
-    } yield {
-      val (t1, t2) = (types(i), types(j))
-      s"(SELECT '$t1' AS type_a, '$t2' AS type_b, CAST(sum(CASE WHEN f_$t1 = 1 AND f_$t2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_both, CAST(sum(CASE WHEN f_$t1 = 1 OR f_$t2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_either FROM flags)"
-    }).mkString(" UNION ALL ")
-    s"WITH flags AS (SELECT user_id, $flags FROM events GROUP BY 1) SELECT type_a, type_b, n_both, n_either, CAST(CASE WHEN n_either = 0 THEN 0 ELSE (n_both * 1000000) // n_either END AS BIGINT) AS jaccard_micro FROM ($blocks)"
-  }
-
-  /** g_modularity: the labelprop replay plus exact-integer Newman
-    * modularity terms per community (HUGEINT for d_c²·10⁶).
-    */
-  private lazy val modularityOracleSql: String =
-    "WITH " + labelpropCtes + """, deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY 1), mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM base), intr AS (SELECT a.lbl, CAST(count(*) AS BIGINT) AS mc FROM base JOIN l3 a ON a.id = base.c JOIN l3 b ON b.id = base.s WHERE a.lbl = b.lbl GROUP BY 1), dc AS (SELECT l3.lbl, CAST(sum(deg.d) AS BIGINT) AS dcv FROM deg JOIN l3 USING (id) GROUP BY 1), terms AS (SELECT m, (coalesce(mc, 0) * 1000000) // m - (CAST(dcv AS HUGEINT) * dcv * 1000000) // (4::HUGEINT * m * m) AS term FROM dc LEFT JOIN intr USING (lbl) CROSS JOIN mm) SELECT CAST(max(m) AS BIGINT) AS m, CAST(count(*) AS BIGINT) AS n_communities, CAST(sum(term) AS BIGINT) AS q_micro FROM terms"""
-
-  // --- MinHash / SimHash DuckDB replays -------------------------------
-  // The LSH *signatures* are deterministic integer hashing (FNV-1a and
-  // multiply-add permutations wrap mod 2^64), so the banded pair sets are
-  // fully oracle-able: HUGEINT arithmetic replays the wrapping exactly
-  // (split multiplication keeps a·h below 2^127), and bucket keys compare
-  // the raw signature slices (Spark's xxhash64 band key is injective up
-  // to astronomically-unlikely collisions, which would only ADD Spark
-  // candidates). Bucket caps never trigger at sf0.01 (500 docs < 2000).
-
-  private val U64 = "18446744073709551616::HUGEINT"
-
-  /** FNV-1a 64 of a string column `g` (ASCII fixture) via list_reduce. */
-  private val fnvSql: String =
-    "list_reduce(list_prepend(14695981039346656037::HUGEINT, " +
-      "list_transform(range(strlen(g)), i -> CAST(ascii(g[CAST(i AS INTEGER)+1:CAST(i AS INTEGER)+1]) AS HUGEINT))), " +
-      s"(acc, b) -> (xor(acc, b) * 1099511628211::HUGEINT) % $U64)"
-
-  /** CTEs replaying Hashing.textMinhash(text, n, k) into
-    * `sigs(doc_id, sig LIST<BIGINT>)` — tokenize, word n-grams, FNV per
-    * gram, k signed-min multiply-add permutations (vectorized as k min
-    * aggregates over exploded gram hashes).
-    */
-  private def minhashSigCtes(n: Int, k: Int): String = {
-    val (as0, bs0) = graft.functions.Hashing.permConsts(k)
-    val mask = (BigInt(1) << 64) - 1
-    def perm(j: Int): String = {
-      val a = BigInt(as0(j)) & mask
-      val b = BigInt(bs0(j)) & mask
-      val v = s"(($a::HUGEINT * hlo) % $U64 + (($a::HUGEINT * hhi) % 4294967296::HUGEINT) * 4294967296::HUGEINT + $b::HUGEINT) % $U64"
-      s"min(CAST(CASE WHEN $v >= 9223372036854775808::HUGEINT THEN $v - $U64 ELSE $v END AS BIGINT)) AS s$j"
-    }
-    val sigCols = (0 until k).map(perm).mkString(", ")
-    val sigArr = (0 until k).map(j => s"s$j").mkString("[", ", ", "]")
-    s"""toks AS MATERIALIZED (SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t FROM documents),
-       |grams AS MATERIALIZED (SELECT doc_id, unnest(list_transform(range(len(t) - ${n - 1}), i -> array_to_string(t[(CAST(i AS INTEGER)+1):(CAST(i AS INTEGER)+$n)], ' '))) AS g FROM toks WHERE len(t) >= $n),
-       |gh AS MATERIALIZED (SELECT doc_id, h % 4294967296::HUGEINT AS hlo, h // 4294967296::HUGEINT AS hhi FROM (SELECT doc_id, $fnvSql AS h FROM grams)),
-       |sigw AS MATERIALIZED (SELECT doc_id, $sigCols FROM gh GROUP BY doc_id),
-       |sigs AS MATERIALIZED (SELECT doc_id, $sigArr AS sig FROM sigw)""".stripMargin
-  }
-
-  /** Banded candidate pairs + signature-jaccard filter over `sigs` —
-    * mirrors Dedup.minhashPairs' band join and estimate filter.
-    */
-  private def minhashPairSql(k: Int, bands: Int, threshold: Double): String = {
-    val r = k / bands
-    s"""banded AS MATERIALIZED (SELECT doc_id, b, array_to_string(sig[(CAST(b AS INTEGER)*$r+1):(CAST(b AS INTEGER)*$r+$r)], ',') AS bkey FROM sigs, unnest(range($bands)) t(b)),
-       |cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM banded a JOIN banded b ON a.b = b.b AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |est AS MATERIALIZED (SELECT id_a, id_b, CAST(len(list_filter(range($k), i -> sa.sig[CAST(i AS INTEGER)+1] = sb.sig[CAST(i AS INTEGER)+1])) AS DOUBLE) / $k AS est_jaccard FROM cand JOIN sigs sa ON cand.id_a = sa.doc_id JOIN sigs sb ON cand.id_b = sb.doc_id),
-       |mh_pairs AS MATERIALIZED (SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= $threshold)""".stripMargin
-  }
-
-  /** ta_langid / ta_langid_eval shared classification replay. */
-  private lazy val langidOracleSql: String =
-    """WITH base AS (SELECT doc_id, lang AS lang_truth, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks FROM documents), scores AS (SELECT doc_id, lang_truth, 'en' AS lang_guess, CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','was','at','by','be','this'], t))) AS DOUBLE) / len(toks) ELSE 0 END AS score FROM base UNION ALL SELECT doc_id, lang_truth, 'fr', CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['le','la','les','de','des','un','une','et','ou','dans','est','que','pour','sur','avec','au','du','il','elle','ce'], t))) AS DOUBLE) / len(toks) ELSE 0 END FROM base UNION ALL SELECT doc_id, lang_truth, 'de', CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['der','die','das','und','oder','von','zu','in','ist','es','dass','für','auf','mit','als','war','bei','sein','ein','eine'], t))) AS DOUBLE) / len(toks) ELSE 0 END FROM base UNION ALL SELECT doc_id, lang_truth, 'es', CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['el','la','los','las','de','un','una','y','o','en','es','que','para','sobre','con','al','del','se','por','este'], t))) AS DOUBLE) / len(toks) ELSE 0 END FROM base UNION ALL SELECT doc_id, lang_truth, 'it', CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['il','la','le','di','dei','un','una','e','o','in','è','che','per','su','con','al','del','si','da','questo'], t))) AS DOUBLE) / len(toks) ELSE 0 END FROM base) SELECT doc_id, lang_truth, lang_guess FROM (SELECT doc_id, lang_truth, lang_guess, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, lang_guess DESC) AS rn FROM scores) WHERE rn = 1"""
-
-  private lazy val minhashOracleSql: String =
-    s"WITH ${minhashSigCtes(3, 64)}, ${minhashPairSql(64, 16, 0.5)} SELECT id_a, id_b, est_jaccard FROM mh_pairs"
-
-  /** dd_lsh_persisted / dd_lsh_incremental: the same sig + banding replay
-    * as dd_minhash, but candidates CROSS the ledger cohort (doc_id < 250)
-    * with the incoming batch (doc_id ≥ 250) instead of self-joining — the
-    * persisted-ledger probe finds exactly the cross-cohort banded pairs.
-    * Shared by both queries: append-under-frozen-params converges to the
-    * one-shot build, so the incremental run must hash-match this too.
-    */
-  private def lshLedgerOracleSqlWith(ledgerWhere: String): String = {
-    val r = 64 / 16
-    s"""WITH ${minhashSigCtes(3, 64)},
-       |banded AS MATERIALIZED (SELECT doc_id, b, array_to_string(sig[(CAST(b AS INTEGER)*$r+1):(CAST(b AS INTEGER)*$r+$r)], ',') AS bkey FROM sigs, unnest(range(16)) t(b)),
-       |cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS id_old, b.doc_id AS id_new FROM banded a JOIN banded b ON a.b = b.b AND a.bkey = b.bkey WHERE a.doc_id < 250 AND b.doc_id >= 250$ledgerWhere),
-       |est AS (SELECT id_old, id_new, CAST(len(list_filter(range(64), i -> sa.sig[CAST(i AS INTEGER)+1] = sb.sig[CAST(i AS INTEGER)+1])) AS DOUBLE) / 64 AS est_jaccard FROM cand JOIN sigs sa ON cand.id_old = sa.doc_id JOIN sigs sb ON cand.id_new = sb.doc_id)
-       |SELECT id_old, id_new, est_jaccard FROM est WHERE est_jaccard >= 0.5""".stripMargin
-  }
-
-  private lazy val lshLedgerOracleSql: String = lshLedgerOracleSqlWith("")
-
-  /** dd_lsh_forget: the ledger oracle minus the tombstoned cohort —
-    * deleted ids must stop matching, everything else is untouched.
-    */
-  private lazy val lshForgetOracleSql: String =
-    lshLedgerOracleSqlWith(" AND a.doc_id % 10 <> 0")
-
-  /** dd_minhash_dedup: connected components over the minhash pair graph
-    * (recursive min-label propagation — labels only decrease, so the
-    * UNION-dedup recursion terminates), keep the min-id doc per cluster.
-    */
-  private lazy val qualityScoreOracleSql: String =
-    """WITH base AS (SELECT doc_id, lang, text, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks FROM documents), comp AS (SELECT doc_id, lang, CAST(len(toks) AS DOUBLE) AS ntok, CASE WHEN length(text) > 0 THEN (length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g'))) / CAST(length(text) AS DOUBLE) ELSE 0 END AS pr, CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','was','at','by','be','this'], t))) AS DOUBLE) / len(toks) ELSE 0 END AS sr, CASE WHEN len(toks) > 0 THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks) ELSE 0 END AS mtl FROM base) SELECT doc_id, lang, CAST(floor((CAST(CASE WHEN ntok >= 50 AND ntok <= 10000 THEN 1.0 WHEN ntok >= 10 THEN 0.5 ELSE 0.1 END AS DOUBLE) * 0.3 + (1.0 - least(pr * 4, 1.0)) * 0.2 + least(sr * 3, 1.0) * 0.3 + CAST(CASE WHEN mtl >= 3 AND mtl <= 10 THEN 1.0 ELSE 0.3 END AS DOUBLE) * 0.2) * 10000) AS BIGINT) AS quality_bp FROM comp"""
-
-  /** Shared WITH-body: minhash pair graph → connected components
-    * (`comp(id, root)`), the transitive-dedup backbone.
-    */
-  private lazy val minhashCompCtes: String =
-    s"""${minhashSigCtes(3, 64)}, ${minhashPairSql(64, 16, 0.5)},
-       |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM mh_pairs UNION SELECT id_b, id_a FROM mh_pairs),
-       |lab AS (SELECT doc_id AS id, doc_id AS lbl FROM documents UNION SELECT e.dst AS id, lab.lbl FROM lab JOIN edges e ON lab.id = e.src WHERE lab.lbl < e.dst),
-       |comp AS (SELECT id, min(lbl) AS root FROM lab GROUP BY 1)""".stripMargin
-
-  private lazy val minhashDedupOracleSql: String =
-    s"""WITH RECURSIVE $minhashCompCtes
-       |SELECT d.doc_id, d.lang, d.source FROM documents d JOIN comp c ON d.doc_id = c.id WHERE c.root = c.id""".stripMargin
-
-  /** ta_group_split: the minhash component replay labels each doc with
-    * its min-id cluster root; the split thresholds are ta_split's,
-    * applied to the ROOT's hash.
-    */
-  private lazy val groupSplitOracleSql: String =
-    s"""WITH RECURSIVE $minhashCompCtes
-       |SELECT c.id AS doc_id, c.root AS cluster_rep,
-       |  CASE WHEN substr(md5(CAST(c.root AS VARCHAR)), 1, 8) < 'cccccccd' THEN 'train'
-       |       WHEN substr(md5(CAST(c.root AS VARCHAR)), 1, 8) < 'e6666666' THEN 'val'
-       |       ELSE 'test' END AS split
-       |FROM comp c""".stripMargin
-
-  /** dd_report: per-source dedup impact — how many docs the transitive
-    * minhash dedup removes from each source.
-    */
-  private lazy val dedupReportOracleSql: String =
-    s"""WITH RECURSIVE $minhashCompCtes
-       |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(CASE WHEN c.root <> c.id THEN 1 ELSE 0 END) AS BIGINT) AS n_dups_removed
-       |FROM documents d JOIN comp c ON d.doc_id = c.id GROUP BY 1""".stripMargin
-
-  /** dd_ngram: minhash candidates (k=32, est ≥ 0.35 safety margin) then
-    * EXACT distinct-3-gram Jaccard ≥ 0.5 — mirrors Dedup.ngramJaccardPairs.
-    */
-  private lazy val ngramOracleSql: String =
-    s"""WITH ${minhashSigCtes(3, 32)}, ${minhashPairSql(32, 16, 0.35)},
-       |dg AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(len(t) - 2), i -> array_to_string(t[(CAST(i AS INTEGER)+1):(CAST(i AS INTEGER)+3)], ' '))) AS gs FROM toks WHERE len(t) >= 3)
-       |SELECT p.id_a, p.id_b, CAST(len(list_intersect(a.gs, b.gs)) AS DOUBLE) / (len(a.gs) + len(b.gs) - len(list_intersect(a.gs, b.gs))) AS jaccard
-       |FROM mh_pairs p JOIN dg a ON p.id_a = a.doc_id JOIN dg b ON p.id_b = b.doc_id
-       |WHERE CAST(len(list_intersect(a.gs, b.gs)) AS DOUBLE) / (len(a.gs) + len(b.gs) - len(list_intersect(a.gs, b.gs))) >= 0.5""".stripMargin
-
-  /** dd_simhash: replay Hashing.simhash64 (FNV per RAW whitespace token,
-    * ±1 per bit over token occurrences, sign → bit), then the 4×16-bit
-    * band join and Hamming filter. Docs with no tokens hash to 0.
-    */
-  private lazy val simhashOracleSql: String = {
-    val bit = "CAST((h // CAST(power(2, CAST(b AS INTEGER)) AS HUGEINT)) % 2 AS INTEGER)"
-    s"""WITH rt AS MATERIALIZED (SELECT doc_id, unnest(list_filter(string_split_regex(text, '[ \\t\\n\\r]+'), x -> x <> '')) AS g FROM documents),
-       |th AS MATERIALIZED (SELECT doc_id, $fnvSql AS h FROM rt),
-       |bits AS MATERIALIZED (SELECT doc_id, b, sum(CASE WHEN $bit = 1 THEN 1 ELSE -1 END) AS cnt FROM th, unnest(range(64)) t(b) GROUP BY 1, 2),
-       |hu AS MATERIALIZED (SELECT d.doc_id, coalesce((SELECT sum(CASE WHEN cnt > 0 THEN CAST(power(2, CAST(b AS INTEGER)) AS HUGEINT) ELSE 0::HUGEINT END) FROM bits WHERE bits.doc_id = d.doc_id), 0::HUGEINT) AS u FROM documents d),
-       |sh AS MATERIALIZED (SELECT doc_id, u, CAST(CASE WHEN u >= 9223372036854775808::HUGEINT THEN u - $U64 ELSE u END AS BIGINT) AS h FROM hu),
-       |sbanded AS MATERIALIZED (SELECT doc_id, b, CAST((u // CAST(power(2, CAST(b AS INTEGER) * 16) AS HUGEINT)) % 65536 AS BIGINT) AS bkey FROM sh, unnest(range(4)) t(b)),
-       |scand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM sbanded a JOIN sbanded b ON a.b = b.b AND a.bkey = b.bkey AND a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, CAST(bit_count(xor(ha.h, hb.h)) AS BIGINT) AS hamming
-       |FROM scand JOIN sh ha ON scand.id_a = ha.doc_id JOIN sh hb ON scand.id_b = hb.doc_id
-       |WHERE bit_count(xor(ha.h, hb.h)) <= 8""".stripMargin
-  }
-
-  /** dd_embed: replay the hyperplane LSH + exact-cosine verify. The
-    * hyperplane components are hash-derived exact multiples of 1/1000
-    * (emitted as shortest-roundtrip double literals — identical bits in
-    * both engines), and every float op is fixed-order IEEE: left-to-right
-    * dot products (list_reduce ≡ the Expression's index loop), sqrt, one
-    * multiply, one divide — so even the DOUBLE cosine hash-matches.
-    */
-  /** VALUES rows of hash-derived hyperplane components for the given LSH
-    * shape — shortest-roundtrip double literals, identical bits in both
-    * engines (each component is an exact k/1000.0).
-    */
-  private def planeRowsSql(nbits: Int, tables: Int, dim: Int): String =
-    (0 until tables * nbits).map { pid =>
-      val comps = (0 until dim)
-        .map(d => graft.functions.VectorExprs.component(pid / nbits, pid % nbits, d))
-        .mkString("[", ", ", "]")
-      s"($pid, $comps)"
-    }.mkString(", ")
-
-  private lazy val embedOracleSql: String = {
-    val nbits = 4; val tables = 16; val dim = 64
-    val planeRows = planeRowsSql(nbits, tables, dim)
-    val idx = "CAST(i AS INTEGER)+1"
-    val dotVP = s"list_reduce(list_transform(range(len(e)), i -> CAST(e[$idx] AS DOUBLE) * c[$idx]), (a, b) -> a + b)"
-    val dotVV = s"list_reduce(list_transform(range(len(va)), i -> CAST(va[$idx] AS DOUBLE) * CAST(vb[$idx] AS DOUBLE)), (a, b) -> a + b)"
-    val nrm = s"sqrt(list_reduce(list_transform(range(len(e)), i -> CAST(e[$idx] AS DOUBLE) * CAST(e[$idx] AS DOUBLE)), (a, b) -> a + b))"
-    s"""WITH planes(pid, c) AS MATERIALIZED (SELECT * FROM (VALUES $planeRows) t(pid, c)),
-       |v AS MATERIALIZED (SELECT vec_id, embedding AS e FROM embeddings),
-       |dots AS MATERIALIZED (SELECT vec_id, pid, $dotVP AS s FROM v, planes),
-       |buck AS MATERIALIZED (SELECT vec_id, CAST(sum(CASE WHEN s > 0 THEN CAST(power(2, 3 - (pid % $nbits)) AS BIGINT) ELSE 0 END) AS BIGINT) * $tables + (pid // $nbits) AS bucket FROM dots GROUP BY vec_id, pid // $nbits),
-       |cand AS MATERIALIZED (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b FROM buck a JOIN buck b ON a.bucket = b.bucket AND a.vec_id < b.vec_id),
-       |nv AS MATERIALIZED (SELECT vec_id, e, $nrm AS nm FROM v),
-       |ver AS (SELECT id_a, id_b, $dotVV / (na.nm * nb.nm) AS cosine FROM (SELECT c2.id_a, c2.id_b, a.e AS va, b.e AS vb FROM cand c2 JOIN v a ON c2.id_a = a.vec_id JOIN v b ON c2.id_b = b.vec_id) j JOIN nv na ON j.id_a = na.vec_id JOIN nv nb ON j.id_b = nb.vec_id)
-       |SELECT id_a, id_b, cosine FROM ver WHERE cosine >= 0.45""".stripMargin
-  }
-
-  /** sim_topk_lsh: replay the multi-probe hyperplane index (nbits=6,
-    * tables=8, 1-bit-flip probes) with fixed-order IEEE plane dots, then
-    * the same exact-cosine re-rank the sim_topk oracle already verifies
-    * bit-identical on this corpus. Approximate ANN, exact replay.
-    */
-  private lazy val lshTopKOracleSql: String = {
-    val nbits = 6; val tables = 8
-    val idx = "CAST(i AS INTEGER)+1"
-    val dotVP = s"list_reduce(list_transform(range(len(v)), i -> v[$idx] * c[$idx]), (a, b) -> a + b)"
-    s"""WITH planes(pid, c) AS MATERIALIZED (SELECT * FROM (VALUES ${planeRowsSql(nbits, tables, 64)}) t(pid, c)),
-       |e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |dots AS MATERIALIZED (SELECT vec_id, pid, $dotVP AS s FROM e, planes),
-       |sigs AS MATERIALIZED (SELECT vec_id, pid // $nbits AS tbl, CAST(sum(CASE WHEN s > 0 THEN CAST(power(2, ${nbits - 1} - (pid % $nbits)) AS BIGINT) ELSE 0 END) AS BIGINT) AS sig FROM dots GROUP BY 1, 2),
-       |dbuck AS MATERIALIZED (SELECT vec_id, sig * $tables + tbl AS bucket FROM sigs),
-       |qbuck AS MATERIALIZED (SELECT vec_id, (CASE WHEN f = 0 THEN sig ELSE xor(sig, CAST(power(2, CAST(f AS INTEGER) - 1) AS BIGINT)) END) * $tables + tbl AS bucket FROM sigs, unnest(range(${nbits + 1})) t(f) WHERE vec_id < 8),
-       |cand AS MATERIALIZED (SELECT DISTINCT q.vec_id AS query_id, d.vec_id AS neighbor_id FROM qbuck q JOIN dbuck d ON q.bucket = d.bucket AND d.vec_id <> q.vec_id),
-       |scored AS (SELECT query_id, neighbor_id, list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) AS score FROM cand JOIN e d ON cand.neighbor_id = d.vec_id JOIN e q ON cand.query_id = q.vec_id)
-       |SELECT query_id, CAST(rn AS INTEGER) AS rank, neighbor_id, score
-       |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored)
-       |WHERE rn <= 10""".stripMargin
-  }
-
-  /** sim_topk_graph: full bit-for-bit replay of GraphAnn — the same
-    * nbits=6 × tables=8 hyperplane signatures as the LSH oracle feed a
-    * symmetric co-bucket pair set; per-src top-8 by (cosine desc, dst)
-    * is the adjacency; then beam0 (4 md5-ordered seeds) and 3 unrolled
-    * expansion rounds of cand = beam ∪ neighbors(beam), top-ef=16 each;
-    * final top-10 with rank. All scores are the engine's exact fold
-    * (list_dot_product over double-cast lists, proven by sim_topk/lsh).
-    */
-  /** Unrolled graph-ANN beam-search replay, parameterized by a node
-    * LIVENESS predicate (`live(col)` → SQL boolean) so the forget row can
-    * share it: the graph BUILD replays over the full corpus (the index
-    * was built before the deletion), then tombstoned nodes drop from the
-    * surviving edges (either endpoint) and from the seed pool — exactly
-    * what AnnIndex.probeGraphTopK's two tombstone filters do. Candidates
-    * only ever come from live seeds and live adjacency, so no other
-    * stage needs the predicate.
-    */
-  private def graphTopKOracleSqlLive(live: String => String): String = {
-    val nbits = 6; val tables = 8; val degree = 8; val ef = 16
-    val rounds = 3; val nSeeds = 4
-    val idx = "CAST(i AS INTEGER)+1"
-    val dotVP = s"list_reduce(list_transform(range(len(v)), i -> v[$idx] * c[$idx]), (a, b) -> a + b)"
-    val rescore = "list_dot_product(nv.v, q.qv) / (nv.nn * q.qn)"
-    val roundsSql = (1 to rounds).map { t =>
-      s"""cand$t AS MATERIALIZED (SELECT DISTINCT query_id, node FROM (SELECT query_id, node FROM beam${t - 1} UNION ALL SELECT b.query_id, a.dst AS node FROM beam${t - 1} b JOIN adj a ON b.node = a.src) WHERE node <> query_id),
-         |beam$t AS MATERIALIZED (SELECT query_id, node, score FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, node) AS rn FROM (SELECT c.query_id, c.node, $rescore AS score FROM cand$t c JOIN nv ON c.node = nv.node JOIN qs q ON c.query_id = q.query_id)) WHERE rn <= $ef)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH planes(pid, c) AS MATERIALIZED (SELECT * FROM (VALUES ${planeRowsSql(nbits, tables, 64)}) t(pid, c)),
-       |e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |dots AS MATERIALIZED (SELECT vec_id, pid, $dotVP AS s FROM e, planes),
-       |sigs AS MATERIALIZED (SELECT vec_id, pid // $nbits AS tbl, CAST(sum(CASE WHEN s > 0 THEN CAST(power(2, ${nbits - 1} - (pid % $nbits)) AS BIGINT) ELSE 0 END) AS BIGINT) AS sig FROM dots GROUP BY 1, 2),
-       |dbuck AS MATERIALIZED (SELECT vec_id, sig * $tables + tbl AS bucket FROM sigs),
-       |gpair AS MATERIALIZED (SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst FROM dbuck a JOIN dbuck b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-       |nv AS MATERIALIZED (SELECT vec_id AS node, v, sqrt(list_dot_product(v, v)) AS nn FROM e),
-       |gsc AS MATERIALIZED (SELECT src, dst, list_dot_product(ss.v, ds.v) / (ss.nn * ds.nn) AS score FROM gpair JOIN nv ss ON gpair.src = ss.node JOIN nv ds ON gpair.dst = ds.node),
-       |adj AS MATERIALIZED (SELECT src, dst FROM (SELECT *, row_number() OVER (PARTITION BY src ORDER BY score DESC, dst) AS rn FROM gsc) WHERE rn <= $degree AND ${live("src")} AND ${live("dst")}),
-       |seeds AS MATERIALIZED (SELECT vec_id AS node FROM e WHERE ${live("vec_id")} ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT $nSeeds),
-       |qs AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qn FROM e WHERE vec_id < 8),
-       |beam0 AS MATERIALIZED (SELECT query_id, node, score FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, node) AS rn FROM (SELECT q.query_id, s.node, $rescore AS score FROM qs q CROSS JOIN seeds s JOIN nv ON s.node = nv.node WHERE s.node <> q.query_id)) WHERE rn <= $ef),
-       |$roundsSql
-       |SELECT query_id, CAST(rn AS INTEGER) AS rank, node AS neighbor_id, score
-       |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, node) AS rn FROM beam$rounds)
-       |WHERE rn <= 10""".stripMargin
-  }
-
-  private lazy val graphTopKOracleSql: String =
-    graphTopKOracleSqlLive(_ => "TRUE")
-
-  /** sim_graph_forget: the graph replay with `vec_id % 9 = 0 AND
-    * vec_id >= 8` tombstoned after the build (queries stay < 8, so the
-    * query set is untouched; the deleted cohort overlaps the full-corpus
-    * seed pool, exercising the seed path too).
-    */
-  private lazy val graphForgetOracleSql: String =
-    graphTopKOracleSqlLive(c => s"NOT ($c % 9 = 0 AND $c >= 8)")
-
-  private lazy val graphRecallOracleSql: String =
-    s"""WITH bf AS (SELECT query_id, neighbor_id FROM (WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), scored AS (SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id, list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) AS score FROM e d, e q WHERE q.vec_id < 8 AND d.vec_id <> q.vec_id) SELECT query_id, neighbor_id FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored) WHERE rn <= 10)),
-       |ann AS (SELECT query_id, neighbor_id FROM ($graphTopKOracleSql)),
-       |h AS (SELECT bf.query_id, CAST(count(*) AS BIGINT) AS n_hits FROM bf JOIN ann ON bf.query_id = ann.query_id AND bf.neighbor_id = ann.neighbor_id GROUP BY 1),
-       |qq AS (SELECT DISTINCT vec_id AS query_id FROM embeddings WHERE vec_id < 8)
-       |SELECT qq.query_id, CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits, CAST(coalesce(n_hits, 0) AS DOUBLE) / 10.0 AS recall_at_10 FROM qq LEFT JOIN h ON qq.query_id = h.query_id""".stripMargin
-
-  /** sim_ivf_recall: brute-force top-10 ∩ the full IVF replay, per
-    * query — the graphRecall oracle shape applied to the IVF tier.
-    */
-  private lazy val ivfRecallOracleSql: String =
-    s"""WITH bf AS (SELECT query_id, neighbor_id FROM (WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), scored AS (SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id, list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) AS score FROM e d, e q WHERE q.vec_id < 8 AND d.vec_id <> q.vec_id) SELECT query_id, neighbor_id FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored) WHERE rn <= 10)),
-       |ann AS (SELECT query_id, neighbor_id FROM ($ivfTopKOracleSql)),
-       |h AS (SELECT bf.query_id, CAST(count(*) AS BIGINT) AS n_hits FROM bf JOIN ann ON bf.query_id = ann.query_id AND bf.neighbor_id = ann.neighbor_id GROUP BY 1),
-       |qq AS (SELECT DISTINCT vec_id AS query_id FROM embeddings WHERE vec_id < 8)
-       |SELECT qq.query_id, CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits, CAST(coalesce(n_hits, 0) AS DOUBLE) / 10.0 AS recall_at_10 FROM qq LEFT JOIN h ON qq.query_id = h.query_id""".stripMargin
-
-  /** sim_pq_recall: brute-force top-10 ∩ the full PQ replay. */
-  private lazy val pqRecallOracleSql: String =
-    s"""WITH bf AS (SELECT query_id, neighbor_id FROM (WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), scored AS (SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id, list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) AS score FROM e d, e q WHERE q.vec_id < 8 AND d.vec_id <> q.vec_id) SELECT query_id, neighbor_id FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored) WHERE rn <= 10)),
-       |ann AS (SELECT query_id, neighbor_id FROM ($pqTopKOracleSql)),
-       |h AS (SELECT bf.query_id, CAST(count(*) AS BIGINT) AS n_hits FROM bf JOIN ann ON bf.query_id = ann.query_id AND bf.neighbor_id = ann.neighbor_id GROUP BY 1),
-       |qq AS (SELECT DISTINCT vec_id AS query_id FROM embeddings WHERE vec_id < 8)
-       |SELECT qq.query_id, CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits, CAST(coalesce(n_hits, 0) AS DOUBLE) / 10.0 AS recall_at_10 FROM qq LEFT JOIN h ON qq.query_id = h.query_id""".stripMargin
-
-  // --- k-means family DuckDB replays ---------------------------------
-  // IvfIndex.train is now EXACTLY replayable: md5-ordered init, argmin by
-  // the NearestCellsExpr score (‖c‖² − 2⟨v,c⟩, fixed left-to-right double
-  // accumulation — DuckDB's list_dot_product/list_reduce match bit-for-bit,
-  // proven by sim_topk/dd_embed), and fixed-point Lloyd updates whose
-  // BIGINT sums are accumulation-order-free on both engines.
-
-  /** Score of vector `v` against centroid `c` exactly as NearestCellsExpr
-    * computes it (c² left-fold minus twice the left-fold dot).
-    */
-  private def cellScore(v: String, c: String): String =
-    s"list_reduce(list_transform($c, x -> x*x), (a, b) -> a + b) - 2 * list_dot_product($v, $c)"
-
-  /** CTEs replaying IvfIndex.train(embeddings, k, iters) into
-    * `cen$iters(cell, v)`; also defines `e(vec_id, v)` double-cast vectors.
-    */
-  /** `trainWhere` (e.g. "e.vec_id % 2 = 0") restricts the TRAINING set —
-    * init sample and Lloyd assignments — without touching `e` itself,
-    * replaying IvfIndex.train on a base cohort while downstream CTEs
-    * still assign/probe the full corpus (the persisted-index oracles).
-    * Empty (the default) emits exactly the historical full-corpus text.
-    */
-  private def kmeansCtes(k: Int, iters: Int, dim: Int, trainWhere: String = ""): String = {
-    val grid = graft.ext.IvfIndex.Grid
-    val initW = if (trainWhere.isEmpty) "" else s" WHERE $trainWhere"
-    val init =
-      s"""e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |cen0 AS MATERIALIZED (SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS INTEGER) AS cell, v FROM e$initW QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) <= $k)""".stripMargin
-    val steps = (0 until iters).map { t =>
-      s"""asg$t AS MATERIALIZED (SELECT vec_id, v, cell FROM (SELECT e.vec_id, e.v, c.cell, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cellScore("e.v", "c.v")}, c.cell) AS rn FROM e CROSS JOIN cen$t c$initW) WHERE rn = 1),
-         |upd$t AS MATERIALIZED (SELECT cell, j, CAST(sum(CAST(floor(v[CAST(j AS INTEGER)+1] * $grid) AS BIGINT)) AS BIGINT) AS sj, count(*) AS n FROM asg$t, unnest(range($dim)) t(j) GROUP BY 1, 2),
-         |cen${t + 1} AS MATERIALIZED (SELECT p.cell, COALESCE(u.nv, p.v) AS v FROM cen$t p LEFT JOIN (SELECT cell, list(CAST(sj AS DOUBLE) / CAST(n * $grid AS DOUBLE) ORDER BY j) AS nv FROM upd$t GROUP BY cell) u ON p.cell = u.cell)""".stripMargin
-    }
-    (init +: steps).mkString(",\n")
-  }
-
-  /** sim_topk_ivf: trained-centroid IVF (k=8 cells, 2 Lloyd iterations,
-    * nProbe=3) — hard-assign the corpus under the final centroids, probe
-    * each query's 3 nearest cells, exact-cosine re-rank top-10.
-    */
-  private def ivfTopKOracleSqlWith(idxWhere: String): String = {
-    val cos = "list_dot_product(i.v, p.qv) / (sqrt(list_dot_product(i.v, i.v)) * sqrt(list_dot_product(p.qv, p.qv)))"
-    s"""WITH ${kmeansCtes(8, 2, 64)},
-       |idx AS MATERIALIZED (SELECT vec_id, v, cell FROM (SELECT e.vec_id, e.v, c.cell, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cellScore("e.v", "c.v")}, c.cell) AS rn FROM e CROSS JOIN cen2 c) WHERE rn = 1$idxWhere),
-       |prob AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv, cell FROM (SELECT e.vec_id, e.v, c.cell, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cellScore("e.v", "c.v")}, c.cell) AS rn FROM e CROSS JOIN cen2 c WHERE e.vec_id < 8) WHERE rn <= 3),
-       |scored AS (SELECT p.query_id, i.vec_id AS neighbor_id, $cos AS score FROM prob p JOIN idx i ON p.cell = i.cell AND i.vec_id <> p.query_id)
-       |SELECT query_id, CAST(rn AS INTEGER) AS rank, neighbor_id, score
-       |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored)
-       |WHERE rn <= 10""".stripMargin
-  }
-
-  private lazy val ivfTopKOracleSql: String = ivfTopKOracleSqlWith("")
-
-  /** sim_ivf_forget: the IVF full-replay oracle with the tombstoned
-    * cohort excluded from the INDEX side only — deleted vectors stop
-    * being neighbors; the query set (which reads the raw table, not the
-    * index) is untouched.
-    */
-  private lazy val ivfForgetOracleSql: String =
-    ivfTopKOracleSqlWith(" AND vec_id % 7 <> 0")
-
-  /** sim_ivf_incremental: ivfTopKOracleSql with k-means TRAINED on the
-    * even-vec_id base cohort only (the persisted index's frozen
-    * quantizer); assignment and probing still cover the full corpus —
-    * exactly what base-write + frozen-centroid append produces on disk.
-    */
-  private lazy val ivfIncrementalOracleSql: String = {
-    val cos = "list_dot_product(i.v, p.qv) / (sqrt(list_dot_product(i.v, i.v)) * sqrt(list_dot_product(p.qv, p.qv)))"
-    s"""WITH ${kmeansCtes(8, 2, 64, trainWhere = "e.vec_id % 2 = 0")},
-       |idx AS MATERIALIZED (SELECT vec_id, v, cell FROM (SELECT e.vec_id, e.v, c.cell, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cellScore("e.v", "c.v")}, c.cell) AS rn FROM e CROSS JOIN cen2 c) WHERE rn = 1),
-       |prob AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv, cell FROM (SELECT e.vec_id, e.v, c.cell, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cellScore("e.v", "c.v")}, c.cell) AS rn FROM e CROSS JOIN cen2 c WHERE e.vec_id < 8) WHERE rn <= 3),
-       |scored AS (SELECT p.query_id, i.vec_id AS neighbor_id, $cos AS score FROM prob p JOIN idx i ON p.cell = i.cell AND i.vec_id <> p.query_id)
-       |SELECT query_id, CAST(rn AS INTEGER) AS rank, neighbor_id, score
-       |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored)
-       |WHERE rn <= 10""".stripMargin
-  }
-
-  /** sim_nprobe_sweep: ivfTopKOracleSql generalized — probe ranks kept
-    * to 4, candidates replicated per nprobe >= their rank, per-(query,
-    * nprobe) top-10 intersected with the brute-force pool.
-    */
-  private lazy val nprobeSweepOracleSql: String = {
-    val cos = "list_dot_product(i.v, p.qv) / (sqrt(list_dot_product(i.v, i.v)) * sqrt(list_dot_product(p.qv, p.qv)))"
-    s"""WITH ${kmeansCtes(8, 2, 64)},
-       |idx AS MATERIALIZED (SELECT vec_id, v, cell FROM (SELECT e.vec_id, e.v, c.cell, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cellScore("e.v", "c.v")}, c.cell) AS rn FROM e CROSS JOIN cen2 c) WHERE rn = 1),
-       |prob AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv, cell, CAST(rn AS BIGINT) AS cell_rank FROM (SELECT e.vec_id, e.v, c.cell, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cellScore("e.v", "c.v")}, c.cell) AS rn FROM e CROSS JOIN cen2 c WHERE e.vec_id < 8) WHERE rn <= 4),
-       |scored AS MATERIALIZED (SELECT p.query_id, p.cell_rank, i.vec_id AS neighbor_id, $cos AS score FROM prob p JOIN idx i ON p.cell = i.cell AND i.vec_id <> p.query_id),
-       |np AS (SELECT CAST(range + 1 AS BIGINT) AS nprobe FROM range(4)),
-       |sw AS (SELECT s.query_id, np.nprobe, s.neighbor_id, s.score FROM scored s JOIN np ON s.cell_rank <= np.nprobe),
-       |topn AS (SELECT query_id, nprobe, neighbor_id FROM (SELECT *, row_number() OVER (PARTITION BY query_id, nprobe ORDER BY score DESC, neighbor_id) AS rn FROM sw) WHERE rn <= 10),
-       |bf AS (SELECT query_id, neighbor_id FROM (SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id, row_number() OVER (PARTITION BY q.vec_id ORDER BY list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) DESC, d.vec_id) AS rn FROM e d, e q WHERE q.vec_id < 8 AND d.vec_id <> q.vec_id) WHERE rn <= 10),
-       |h AS (SELECT bf.query_id, t.nprobe, CAST(count(*) AS BIGINT) AS n_hits FROM bf JOIN topn t ON bf.query_id = t.query_id AND bf.neighbor_id = t.neighbor_id GROUP BY 1, 2),
-       |qq AS (SELECT DISTINCT vec_id AS query_id FROM embeddings WHERE vec_id < 8),
-       |g AS (SELECT query_id, nprobe FROM qq, np)
-       |SELECT g.query_id, g.nprobe, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits, CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10.0 AS recall_at_10
-       |FROM g LEFT JOIN h ON g.query_id = h.query_id AND g.nprobe = h.nprobe""".stripMargin
-  }
-
-  /** dd_semantic: SemDeDup — 16 trained cells, soft-assign each vector to
-    * its 2 nearest (the nAssign recall dial), all within-cell pairs (the
-    * 2000 bucket cap never binds at 500 rows), exact cosine ≥ 0.45, then
-    * transitive min-label components; keep the component roots.
-    */
-  private lazy val semanticOracleSql: String = {
-    val cos = "list_dot_product(ea.v, eb.v) / (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v)))"
-    s"""WITH RECURSIVE ${kmeansCtes(16, 2, 64)},
-       |asgn AS MATERIALIZED (SELECT vec_id, cell FROM (SELECT e.vec_id, c.cell, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cellScore("e.v", "c.v")}, c.cell) AS rn FROM e CROSS JOIN cen2 c) WHERE rn <= 2),
-       |cpair AS MATERIALIZED (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id < b.vec_id),
-       |spairs AS MATERIALIZED (SELECT id_a, id_b FROM cpair JOIN e ea ON cpair.id_a = ea.vec_id JOIN e eb ON cpair.id_b = eb.vec_id WHERE $cos >= 0.45),
-       |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM spairs UNION SELECT id_b, id_a FROM spairs),
-       |lab AS (SELECT vec_id AS id, vec_id AS lbl FROM embeddings UNION SELECT e2.dst AS id, lab.lbl FROM lab JOIN edges e2 ON lab.id = e2.src WHERE lab.lbl < e2.dst),
-       |comp AS (SELECT id, min(lbl) AS root FROM lab GROUP BY 1)
-       |SELECT id AS vec_id FROM comp WHERE root = id""".stripMargin
-  }
-
-  /** ‖c‖² exactly as the engine's lookup tables compute it (left fold). */
-  private def c2Of(c: String): String =
-    s"list_reduce(list_transform($c, x -> x*x), (a, b) -> a + b)"
-
-  /** CTEs replaying Pq.trainCodebooks(m=4, k=64, iters) into
-    * `bk$iters(m, code, c)` — md5-seeded sliced codebooks, per-subspace
-    * argmin assignment, fixed-point Lloyd updates (empty codes keep their
-    * centroid). Assumes `e(vec_id, v)` is already defined.
-    */
-  private def pqCtes(iters: Int): String = {
-    val grid = graft.ext.IvfIndex.Grid
-    val init =
-      s"""seed AS MATERIALIZED (SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS INTEGER) AS code, v FROM e QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) <= 64),
-         |ms AS MATERIALIZED (SELECT CAST(m AS INTEGER) AS m FROM unnest(range(4)) t(m)),
-         |bk0 AS MATERIALIZED (SELECT ms.m, s.code, s.v[ms.m*16+1 : ms.m*16+16] AS c FROM seed s CROSS JOIN ms),
-         |sv AS MATERIALIZED (SELECT e.vec_id, ms.m, e.v[ms.m*16+1 : ms.m*16+16] AS sv FROM e CROSS JOIN ms)""".stripMargin
-    val steps = (0 until iters).map { t =>
-      s"""pasg$t AS MATERIALIZED (SELECT vec_id, m, sv, code FROM (SELECT s.vec_id, s.m, s.sv, b.code, row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY ${cellScore("s.sv", "b.c")}, b.code) AS rn FROM sv s JOIN bk$t b ON s.m = b.m) WHERE rn = 1),
-         |pupd$t AS MATERIALIZED (SELECT m, code, j, CAST(sum(CAST(floor(sv[CAST(j AS INTEGER)+1] * $grid) AS BIGINT)) AS BIGINT) AS sj, count(*) AS n FROM pasg$t, unnest(range(16)) t(j) GROUP BY 1, 2, 3),
-         |bk${t + 1} AS MATERIALIZED (SELECT p.m, p.code, COALESCE(u.nc, p.c) AS c FROM bk$t p LEFT JOIN (SELECT m, code, list(CAST(sj AS DOUBLE) / CAST(n * $grid AS DOUBLE) ORDER BY j) AS nc FROM pupd$t GROUP BY 1, 2) u ON p.m = u.m AND p.code = u.code)""".stripMargin
-    }
-    (init +: steps).mkString(",\n")
-  }
-
-  /** Encoding CTEs under codebook table `book`: `enc(vec_id, k0..k3,
-    * rnorm)` — per-subspace argmin codes and the exact reconstruction
-    * norm sqrt(((c2₀+c2₁)+c2₂)+c2₃) in the engine's fold order.
-    */
-  private def pqEncCtes(book: String): String =
-    s"""fasg AS MATERIALIZED (SELECT vec_id, m, code FROM (SELECT s.vec_id, s.m, b.code, row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY ${cellScore("s.sv", "b.c")}, b.code) AS rn FROM sv s JOIN $book b ON s.m = b.m) WHERE rn = 1),
-       |encw AS MATERIALIZED (SELECT vec_id, max(CASE WHEN m = 0 THEN code END) AS k0, max(CASE WHEN m = 1 THEN code END) AS k1, max(CASE WHEN m = 2 THEN code END) AS k2, max(CASE WHEN m = 3 THEN code END) AS k3 FROM fasg GROUP BY vec_id),
-       |enc AS MATERIALIZED (SELECT n.vec_id, n.k0, n.k1, n.k2, n.k3, sqrt(((${c2Of("b0.c")} + ${c2Of("b1.c")}) + ${c2Of("b2.c")}) + ${c2Of("b3.c")}) AS rnorm FROM encw n JOIN $book b0 ON b0.m = 0 AND b0.code = n.k0 JOIN $book b1 ON b1.m = 1 AND b1.code = n.k1 JOIN $book b2 ON b2.m = 2 AND b2.code = n.k2 JOIN $book b3 ON b3.m = 3 AND b3.code = n.k3)""".stripMargin
-
-  /** ADC score: Σ_m ⟨q_m, c_{m,code_m}⟩ in the engine's left-fold order,
-    * over qn·rnorm — requires aliases q (query), n (enc row), b0..b3
-    * (codebook rows of n's codes).
-    */
-  private val adcScore: String =
-    "(((list_dot_product(q.qv[1:16], b0.c) + list_dot_product(q.qv[17:32], b1.c)) + list_dot_product(q.qv[33:48], b2.c)) + list_dot_product(q.qv[49:64], b3.c)) / (q.qn * n.rnorm)"
-
-  private val pqBookJoins: String =
-    "JOIN bk2 b0 ON b0.m = 0 AND b0.code = n.k0 JOIN bk2 b1 ON b1.m = 1 AND b1.code = n.k1 JOIN bk2 b2 ON b2.m = 2 AND b2.code = n.k2 JOIN bk2 b3 ON b3.m = 3 AND b3.code = n.k3"
-
-  private val refineTailSql: String = {
-    val cos = "list_dot_product(nb.v, q.qv) / (sqrt(list_dot_product(nb.v, nb.v)) * sqrt(list_dot_product(q.qv, q.qv)))"
-    s"""ref AS (SELECT s.query_id, s.neighbor_id, $cos AS score FROM shortl s JOIN e nb ON s.neighbor_id = nb.vec_id JOIN q ON s.query_id = q.query_id)
-       |SELECT query_id, CAST(rn AS INTEGER) AS rank, neighbor_id, score
-       |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM ref)
-       |WHERE rn <= 10""".stripMargin
-  }
-
-  /** sim_topk_pq: PQ codes (m=4, 64 codes, 2 Lloyd iterations) + ADC
-    * table scoring + top-50 shortlist + exact-cosine refine to top-10.
-    */
-  private lazy val pqTopKOracleSql: String =
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |${pqCtes(2)},
-       |${pqEncCtes("bk2")},
-       |q AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qn FROM e WHERE vec_id < 8),
-       |adc AS MATERIALIZED (SELECT q.query_id, n.vec_id AS neighbor_id, $adcScore AS score FROM q CROSS JOIN enc n $pqBookJoins WHERE n.vec_id <> q.query_id),
-       |shortl AS MATERIALIZED (SELECT query_id, neighbor_id FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM adc) WHERE rn <= 50),
-       |$refineTailSql""".stripMargin
-
-  /** sim_topk_ivfpq: coarse trained cells (k=8, nProbe=3 by driver-side
-    * SQUARED-L2 distance — a different fold than NearestCellsExpr, so it
-    * is replayed as Σ(q−c)², not ‖c‖²−2⟨q,c⟩) bound the rows scanned; PQ
-    * codes bound bytes; exact refine of the 50-candidate shortlist.
-    */
-  private lazy val ivfPqTopKOracleSql: String = {
-    val i1 = "CAST(i AS INTEGER)+1"
-    val l2 = s"list_reduce(list_transform(range(64), i -> (q.qv[$i1] - c.v[$i1]) * (q.qv[$i1] - c.v[$i1])), (a, b) -> a + b)"
-    s"""WITH ${kmeansCtes(8, 2, 64)},
-       |${pqCtes(2)},
-       |${pqEncCtes("bk2")},
-       |idx AS MATERIALIZED (SELECT vec_id, cell FROM (SELECT e.vec_id, c.cell, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cellScore("e.v", "c.v")}, c.cell) AS rn FROM e CROSS JOIN cen2 c) WHERE rn = 1),
-       |q AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qn FROM e WHERE vec_id < 8),
-       |prb AS MATERIALIZED (SELECT query_id, cell FROM (SELECT q.query_id, c.cell, row_number() OVER (PARTITION BY q.query_id ORDER BY $l2, c.cell) AS rn FROM q CROSS JOIN cen2 c) WHERE rn <= 3),
-       |adc AS MATERIALIZED (SELECT q.query_id, n.vec_id AS neighbor_id, $adcScore AS score FROM q JOIN prb ON q.query_id = prb.query_id JOIN idx ON idx.cell = prb.cell JOIN enc n ON n.vec_id = idx.vec_id $pqBookJoins WHERE n.vec_id <> q.query_id),
-       |shortl AS MATERIALIZED (SELECT query_id, neighbor_id FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM adc) WHERE rn <= 50),
-       |$refineTailSql""".stripMargin
-  }
-
-  /** ta_bpe: replay Bpe.trainMerges(text, 8) — 8 unrolled merge steps,
-    * each = count adjacent symbol pairs over the symbol-list states, pick
-    * argmax on (cnt desc, l, r), then apply the merge with a recursive
-    * position walk (classic greedy left-to-right non-overlapping — the
-    * same scan the engine's aggregate-fold implements).
-    */
-  /** WITH-body replaying Bpe.learn's 8 unrolled merge steps: pair stats
-    * (pr/m per step) and recursive classic-greedy walks (wk) producing
-    * the post-merge dictionary state `s8(w, freq, sy)`.
-    */
-  private lazy val bpeCtes: String = {
-    def step(t: Int): String =
-      s"""pr$t AS MATERIALIZED (SELECT freq, unnest(list_transform(range(len(sy) - 1), i -> {'l': sy[CAST(i AS INTEGER)+1], 'r': sy[CAST(i AS INTEGER)+2]})) AS p FROM s$t WHERE len(sy) >= 2),
-         |m$t AS MATERIALIZED (SELECT p.l AS l, p.r AS r, CAST(sum(freq) AS BIGINT) AS cnt FROM pr$t GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-         |wk$t AS (SELECT w, freq, sy, 0 AS i, CAST([] AS VARCHAR[]) AS acc FROM s$t
-         |  UNION ALL
-         |  SELECT w, freq, sy,
-         |    CASE WHEN i < len(sy) - 1 AND sy[i+1] = m.l AND sy[i+2] = m.r THEN i + 2 ELSE i + 1 END,
-         |    CASE WHEN i < len(sy) - 1 AND sy[i+1] = m.l AND sy[i+2] = m.r THEN list_append(acc, m.l || m.r) ELSE list_append(acc, sy[i+1]) END
-         |  FROM wk$t LEFT JOIN m$t m ON true WHERE i < len(sy)),
-         |s${t + 1} AS MATERIALIZED (SELECT w, freq, acc AS sy FROM wk$t WHERE i >= len(sy))""".stripMargin
-    val steps = (0 until 8).map(step).mkString(",\n")
-    s"""w AS MATERIALIZED (SELECT w, count(*) AS freq FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS w FROM documents) GROUP BY 1),
-       |s0 AS MATERIALIZED (SELECT w, freq, list_transform(range(length(w)), i -> w[CAST(i AS INTEGER)+1 : CAST(i AS INTEGER)+1]) AS sy FROM w),
-       |$steps""".stripMargin
-  }
-
-  private lazy val bpeOracleSql: String = {
-    val out = (0 until 8).map(t =>
-      s"SELECT ${t + 1} AS merge_rank, l AS lhs, r AS rhs, cnt AS pair_count FROM m$t").mkString(" UNION ALL ")
-    s"""WITH RECURSIVE $bpeCtes
-       |SELECT CAST(merge_rank AS INTEGER) AS merge_rank, lhs, rhs, pair_count FROM ($out)""".stripMargin
-  }
-
-  /** ta_bpe_apply: the trained dictionary state s8 IS the merge list
-    * applied in order, so per-doc subword counts are a word join plus a
-    * re-aggregation of word frequencies.
-    */
-  private lazy val bpeApplyOracleSql: String =
-    s"""WITH RECURSIVE $bpeCtes,
-       |wc AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS w FROM documents),
-       |j AS (SELECT wc.doc_id, len(s8.sy) AS ns FROM wc JOIN s8 ON wc.w = s8.w)
-       |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words, CAST(sum(ns) AS BIGINT) AS n_subwords FROM j GROUP BY 1""".stripMargin
-
-  /** sim_coreset: replay Coreset.kCenter(embeddings, 8) — min-id seed,
-    * then 7 unrolled rounds each picking the point with max (d desc, id)
-    * where d = exact MIN over selected centers of (‖v‖²−2⟨v,c⟩)+‖c‖².
-    */
-  private lazy val coresetOracleSql: String = {
-    val steps = (2 to 8).map { r =>
-      s"""c$r AS MATERIALIZED (SELECT t.vec_id, t.v, min((t.vv - 2 * list_dot_product(t.v, c.v)) + list_dot_product(c.v, c.v)) AS d FROM t, sel${r - 1} c WHERE t.vec_id NOT IN (SELECT vec_id FROM sel${r - 1}) GROUP BY t.vec_id, t.v ORDER BY d DESC, t.vec_id LIMIT 1),
-         |sel$r AS (SELECT vec_id, v FROM sel${r - 1} UNION ALL SELECT vec_id, v FROM c$r)""".stripMargin
-    }.mkString(",\n")
-    val out = (2 to 8).map(r => s"SELECT $r AS sel_rank, vec_id, d AS dist FROM c$r").mkString(" UNION ALL ")
-    s"""WITH t AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v, list_dot_product(list_transform(embedding, x -> CAST(x AS DOUBLE)), list_transform(embedding, x -> CAST(x AS DOUBLE))) AS vv FROM embeddings),
-       |c1 AS MATERIALIZED (SELECT vec_id, v, CAST(0.0 AS DOUBLE) AS d FROM t ORDER BY vec_id LIMIT 1),
-       |sel1 AS (SELECT vec_id, v FROM c1),
-       |$steps
-       |SELECT CAST(sel_rank AS INTEGER) AS sel_rank, vec_id, dist FROM (SELECT 1 AS sel_rank, vec_id, d AS dist FROM c1 UNION ALL $out)""".stripMargin
-  }
-
-  /** rec_bt replay: pair counts → 5×5 list-of-lists matrix + win vector
-    * (HUGEINT), then the driver fold's 20 MM rounds as a recursive CTE —
-    * every //, + and × in the identical ascending-team order (integer
-    * ops, so associativity is exact and the fixed point matches
-    * bit-for-bit).
-    */
-  /** The ev_hmm replay — list_reduce over the (ts, event_id)-ordered
-    * observations with the identical BIGINT-encoded step. stream_hmm
-    * shares it verbatim: the last state-store snapshot per user must
-    * equal the batch fold.
-    */
-  private lazy val hmmOracleSql: String =
-    s"""WITH seq AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events, list(CASE WHEN event_type IN ('click', 'purchase') THEN 1 ELSE 0 END ORDER BY ts, event_id) AS obs FROM events GROUP BY 1), f AS (SELECT user_id, n_events, list_reduce(list_prepend(CAST(5000000500000 AS BIGINT), obs), (acc, o) -> ${hmmStepSql("acc", "o", "//")}) AS enc FROM seq) SELECT user_id, n_events, CAST(enc % 10000000 AS BIGINT) AS p_engaged_micro, (enc % 10000000) >= 500000 AS is_engaged FROM f"""
-
-  /** The rec_itemitem replay — also the recommendation source inside
-    * rec_diversity's oracle (same discipline as bm25OracleSql reuse).
-    */
-  private lazy val recItemItemOracleSql: String =
-    s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-       capped AS (SELECT o, p FROM items
-         QUALIFY count(*) OVER (PARTITION BY o) <= $kcoreOrderCap),
-       freq AS (SELECT p, CAST(count(*) AS BIGINT) AS n FROM capped GROUP BY 1),
-       pairs AS (SELECT a.p AS i, b.p AS j, CAST(count(*) AS BIGINT) AS cooc
-         FROM capped a JOIN capped b ON a.o = b.o AND a.p < b.p
-         GROUP BY 1, 2 HAVING count(*) >= 2),
-       directed AS (SELECT i, j, cooc FROM pairs UNION ALL SELECT j, i, cooc FROM pairs),
-       scored AS (SELECT d.i, d.j, d.cooc,
-           CAST((d.cooc * d.cooc * 1000000) // (fi.n * fj.n) AS BIGINT) AS score_micro
-         FROM directed d JOIN freq fi ON d.i = fi.p JOIN freq fj ON d.j = fj.p)
-       SELECT i AS part_id,
-         CAST(row_number() OVER (PARTITION BY i ORDER BY score_micro DESC, j) AS BIGINT) AS rnk,
-         j AS rec_part_id, cooc, score_micro
-       FROM scored
-       QUALIFY row_number() OVER (PARTITION BY i ORDER BY score_micro DESC, j) <= 3"""
-
-  private lazy val recBtOracleSql: String = {
-    val dnmInner =
-      "list_reduce(list_prepend(CAST(0 AS HUGEINT), " +
-        "list_transform(range(5), j -> CASE WHEN i = j THEN CAST(0 AS HUGEINT) " +
-        "ELSE (m[CAST(i AS INTEGER) + 1][CAST(j AS INTEGER) + 1] * 1000000000000) // " +
-        "greatest(v[CAST(i AS INTEGER) + 1] + v[CAST(j AS INTEGER) + 1], CAST(1 AS HUGEINT)) END)), " +
-        "(a, b) -> a + b)"
-    val newPi =
-      "list_transform(range(5), i -> CASE WHEN dnm[CAST(i AS INTEGER) + 1] = 0 " +
-        "THEN v[CAST(i AS INTEGER) + 1] " +
-        "ELSE (w[CAST(i AS INTEGER) + 1] * 1000000000000) // dnm[CAST(i AS INTEGER) + 1] END)"
-    s"""WITH RECURSIVE mt AS (SELECT least(l_suppkey % 5, l_partkey % 5) AS i, greatest(l_suppkey % 5, l_partkey % 5) AS j, CASE WHEN l_suppkey % 5 < l_partkey % 5 THEN CAST(l_quantity AS BIGINT) % 2 = 0 ELSE NOT (CAST(l_quantity AS BIGINT) % 2 = 0) END AS i_wins FROM lineitem WHERE l_suppkey % 5 <> l_partkey % 5),
-       |pc AS (SELECT i, j, CAST(count(*) AS BIGINT) AS n, CAST(sum(CASE WHEN i_wins THEN 1 ELSE 0 END) AS BIGINT) AS w_i FROM mt GROUP BY 1, 2),
-       |cells AS (SELECT a.range AS i, b.range AS j FROM range(5) a, range(5) b),
-       |nm0 AS (SELECT c.i, c.j, coalesce(p1.n, p2.n, 0) AS n FROM cells c LEFT JOIN pc p1 ON p1.i = c.i AND p1.j = c.j LEFT JOIN pc p2 ON p2.i = c.j AND p2.j = c.i),
-       |nmr AS (SELECT i, list(CAST(n AS HUGEINT) ORDER BY j) AS nrow FROM nm0 GROUP BY 1),
-       |nm AS (SELECT list(nrow ORDER BY i) AS m FROM nmr),
-       |wv0 AS (SELECT t.range AS i, CAST(coalesce((SELECT sum(w_i) FROM pc WHERE pc.i = t.range), 0) + coalesce((SELECT sum(n - w_i) FROM pc WHERE pc.j = t.range), 0) AS HUGEINT) AS w FROM range(5) t),
-       |wv AS (SELECT list(w ORDER BY i) AS w FROM wv0),
-       |iter(k, v) AS (
-       |  SELECT 0, list_transform(range(5), x -> CAST(1000000 AS HUGEINT))
-       |  UNION ALL
-       |  SELECT k + 1, list_transform(nx, x -> (x * 5000000) // list_reduce(nx, (a, b) -> a + b))
-       |  FROM (SELECT k, w, $newPi AS nx
-       |        FROM (SELECT k, v, w, list_transform(range(5), i -> $dnmInner) AS dnm FROM iter, nm, wv WHERE k < 20)))
-       |SELECT CAST(t.range AS BIGINT) AS team,
-       |       CAST(list_reduce(m[CAST(t.range AS INTEGER) + 1], (a, b) -> a + b) AS BIGINT) AS n_matches,
-       |       CAST(w[CAST(t.range AS INTEGER) + 1] AS BIGINT) AS n_wins,
-       |       CAST(v[CAST(t.range AS INTEGER) + 1] AS BIGINT) AS pi_micro
-       |FROM (SELECT v FROM iter WHERE k = 20), nm, wv, range(5) t""".stripMargin
-  }
-
-  /** ev_snips / stream_snips: the per-(cohort, action) SNIPS cells —
-    * shared because the streamed cell merge is order-free, so both
-    * spellings hash-match the same SQL.
-    */
-  private lazy val snipsOracleSql: String =
-    """WITH cells AS (SELECT user_id % 10 AS cohort, event_type,
-           count(*)::HUGEINT AS n_ca,
-           sum(CASE WHEN value > 50 THEN 1 ELSE 0 END)::HUGEINT AS r_ca,
-           (CASE WHEN event_type = 'purchase' THEN 600000 ELSE 100000 END)::HUGEINT AS pt
-         FROM events GROUP BY 1, 2),
-       nc AS (SELECT cohort, sum(n_ca) AS n_c FROM cells GROUP BY 1),
-       t AS (SELECT c.cohort, c.n_ca, (c.pt * n.n_c * c.r_ca) // c.n_ca AS term,
-           c.pt * n.n_c AS wsum
-         FROM cells c JOIN nc n USING (cohort))
-       SELECT cohort, CAST(count(*) AS BIGINT) AS n_cells,
-         CAST(sum(n_ca) AS BIGINT) AS n_events,
-         CAST(sum(term) AS BIGINT) AS num_micro,
-         CAST(sum(wsum) AS BIGINT) AS den_micro,
-         CAST((sum(term) * 1000000) // sum(wsum) AS BIGINT) AS snips_micro
-       FROM t GROUP BY 1"""
-
-  private lazy val bm25OracleSql: String =
-    """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), base AS (SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl, CAST(len(list_filter(t, x -> x = 'spark')) AS BIGINT) AS tf0, CAST(len(list_filter(t, x -> x = 'dup')) AS BIGINT) AS tf1, CAST(len(list_filter(t, x -> x = 'vector')) AS BIGINT) AS tf2 FROM toks), stats AS (SELECT CAST(count(*) AS DOUBLE) AS nd, CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl, CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0, CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1, CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2 FROM base), scored AS (SELECT doc_id, (CASE WHEN tf0 > 0 THEN 1 ELSE 0 END + CASE WHEN tf1 > 0 THEN 1 ELSE 0 END + CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS n_terms, (tf0 + tf1 + tf2) AS tf_total, (((ln((nd - df0 + CAST(0.5 AS DOUBLE)) / (df0 + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)) * (CAST(tf0 AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE))) / (CAST(tf0 AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + (CAST(0.75 AS DOUBLE) * dl) / avgdl))) + (ln((nd - df1 + CAST(0.5 AS DOUBLE)) / (df1 + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)) * (CAST(tf1 AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE))) / (CAST(tf1 AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + (CAST(0.75 AS DOUBLE) * dl) / avgdl)))) + (ln((nd - df2 + CAST(0.5 AS DOUBLE)) / (df2 + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)) * (CAST(tf2 AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE))) / (CAST(tf2 AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + (CAST(0.75 AS DOUBLE) * dl) / avgdl)))) AS raw FROM base, stats) SELECT doc_id, CAST(n_terms AS BIGINT) AS n_terms, CAST(tf_total AS BIGINT) AS tf_total, CAST(floor(raw * 10000) AS BIGINT) AS score_bp FROM scored WHERE tf_total > 0 ORDER BY score_bp DESC, doc_id ASC LIMIT 25"""
-
-  /** sim_ivf_stats: per-cell occupancy + micro-rounded quantization error
-    * under the same replayed training (d² = (‖v‖²−2⟨v,c⟩)+‖c‖² per row,
-    * bit-identical — so rounding agrees regardless of boundary margins).
-    */
-  private lazy val ivfStatsOracleSql: String =
-    s"""WITH ${kmeansCtes(8, 2, 64)},
-       |idx AS MATERIALIZED (SELECT vec_id, v, cell FROM (SELECT e.vec_id, e.v, c.cell, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cellScore("e.v", "c.v")}, c.cell) AS rn FROM e CROSS JOIN cen2 c) WHERE rn = 1),
-       |st AS (SELECT i.cell, CAST(round(((list_dot_product(i.v, i.v) - 2 * list_dot_product(i.v, c.v)) + list_dot_product(c.v, c.v)) * 1e6) AS BIGINT) AS q FROM idx i JOIN cen2 c ON i.cell = c.cell)
-       |SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs, CAST(sum(q) AS BIGINT) AS qerr_micro FROM st GROUP BY 1""".stripMargin
-
-  /** sim_silhouette: same trained cen2 + hard assignment as
-    * sim_ivf_stats; a/b from the identical d² op order, per-row micro
-    * rounding, per-cell exact sums (HUGEINT mirrors the DECIMAL).
-    */
-  private lazy val silhouetteOracleSql: String =
-    s"""WITH ${kmeansCtes(8, 2, 64)},
-       |idx AS MATERIALIZED (SELECT vec_id, v, cell FROM (SELECT e.vec_id, e.v, c.cell, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cellScore("e.v", "c.v")}, c.cell) AS rn FROM e CROSS JOIN cen2 c) WHERE rn = 1),
-       |dd AS (SELECT i.vec_id, i.cell AS own_cell, c.cell AS cand_cell, (list_dot_product(i.v, i.v) - 2 * list_dot_product(i.v, c.v)) + list_dot_product(c.v, c.v) AS d2 FROM idx i CROSS JOIN cen2 c),
-       |ab AS (SELECT vec_id, own_cell AS cell, sqrt(max(CASE WHEN cand_cell = own_cell THEN d2 END)) AS a, sqrt(min(CASE WHEN cand_cell <> own_cell THEN d2 END)) AS b FROM dd GROUP BY 1, 2),
-       |sl AS (SELECT cell, CASE WHEN greatest(a, b) = 0 THEN CAST(0 AS BIGINT) ELSE CAST(round((b - a) / greatest(a, b) * 1e6) AS BIGINT) END AS sil FROM ab),
-       |g AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs, CAST(sum(sil) AS HUGEINT) AS ss FROM sl GROUP BY 1)
-       |SELECT cell, n_vecs, CAST(ss AS BIGINT) AS sil_sum_micro, CAST(round(CAST(ss AS DOUBLE) / CAST(n_vecs AS DOUBLE)) AS BIGINT) AS mean_sil_micro FROM g""".stripMargin
-
-  def oracleSql: Map[String, String] = ListMap(
-    "ta_winnow" -> winnowOracleSql,
-    "sim_silhouette" -> silhouetteOracleSql,
-    "sim_topk_ivf" -> ivfTopKOracleSql,
-    // identical parameters to sim_topk_ivf — the oracle hash-checks that
-    // the write → re-open → pruned-probe loop loses nothing vs in-memory
-    "sim_ivf_persisted" -> ivfTopKOracleSql,
-    "sim_ivf_incremental" -> ivfIncrementalOracleSql,
-    // append-then-retrain converges to the one-shot full-corpus build
-    // (deterministic init + integer-grid Lloyd over the stored set), so
-    // the retrained index's probe shares the full-replay oracle verbatim
-    "sim_ivf_retrain" -> ivfTopKOracleSql,
-    "sim_ivf_forget" -> ivfForgetOracleSql,
-    // streaming micro-batch append converges to batch append — same oracle
-    "stream_ivf_ingest" -> ivfIncrementalOracleSql,
-    "sim_ivf_recall" -> ivfRecallOracleSql,
-    "sim_pq_recall" -> pqRecallOracleSql,
-    "dd_semantic" -> semanticOracleSql,
-    "sim_topk_pq" -> pqTopKOracleSql,
-    "sim_topk_ivfpq" -> ivfPqTopKOracleSql,
-    "ta_bpe" -> bpeOracleSql,
-    "ta_bpe_apply" -> bpeApplyOracleSql,
-    "sim_coreset" -> coresetOracleSql,
-    "sim_ivf_stats" -> ivfStatsOracleSql,
-    "q_kanon" ->
-      "SELECT c_mktsegment, c_nationkey, count(*) AS class_size, count(*) >= 5 AS anonymous FROM customer GROUP BY 1, 2",
-    "q_salted_join" ->
-      "SELECT l_orderkey, l_linenumber, l_suppkey AS suppkey, s_nationkey FROM lineitem JOIN supplier ON l_suppkey = s_suppkey",
-    // mm_curate: replay the planted dHash pair set (see mm_neardup), close
-    // it transitively, keep component roots; dims are the 9×8 grid
-    "mm_curate" ->
-      """WITH RECURSIVE u AS (SELECT doc_id, CAST('0x' || substr(md5(CAST(doc_id // 10 AS VARCHAR)), 1, 8) AS BIGINT)::HUGEINT * 4294967296::HUGEINT + CAST('0x' || substr(md5(CAST(doc_id // 10 AS VARCHAR)), 9, 8) AS BIGINT)::HUGEINT AS uh, CAST(doc_id % 10 AS INTEGER) AS m FROM documents),
-         |hh AS (SELECT doc_id, CASE WHEN m > 0 THEN xor(h0, 1::BIGINT << (m - 1)) ELSE h0 END AS h FROM (SELECT doc_id, m, CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT THEN uh - 18446744073709551616::HUGEINT ELSE uh END AS BIGINT) AS h0 FROM u)),
-         |mp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM hh a JOIN hh b ON a.doc_id < b.doc_id WHERE bit_count(xor(a.h, b.h)) <= 1),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM mp UNION SELECT id_b, id_a FROM mp),
-         |lab AS (SELECT doc_id AS id, doc_id AS lbl FROM documents UNION SELECT e.dst AS id, lab.lbl FROM lab JOIN edges e ON lab.id = e.src WHERE lab.lbl < e.dst),
-         |comp AS (SELECT id, min(lbl) AS root FROM lab GROUP BY 1)
-         |SELECT id AS doc_id, CAST(9 AS INTEGER) AS width, CAST(8 AS INTEGER) AS height FROM comp WHERE root = id""".stripMargin,
-    "g_harmonic" ->
-      """WITH pairs AS (SELECT DISTINCT o_custkey AS c, l_suppkey + 10000000 AS p FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |ed AS (SELECT c AS src, p AS dst FROM pairs UNION SELECT p, c FROM pairs),
-         |d0 AS (SELECT c_custkey AS seed, c_custkey AS id, 0 AS dist FROM customer WHERE c_custkey < 5),
-         |n1 AS (SELECT DISTINCT d0.seed, ed.dst AS id, 1 AS dist FROM d0 JOIN ed ON d0.id = ed.src),
-         |d1 AS (SELECT seed, id, min(dist) AS dist FROM (SELECT * FROM d0 UNION ALL SELECT * FROM n1) GROUP BY 1, 2),
-         |n2 AS (SELECT DISTINCT d1.seed, ed.dst AS id, 2 AS dist FROM d1 JOIN ed ON d1.id = ed.src WHERE d1.dist = 1),
-         |d2 AS (SELECT seed, id, min(dist) AS dist FROM (SELECT * FROM d1 UNION ALL SELECT * FROM n2) GROUP BY 1, 2),
-         |n3 AS (SELECT DISTINCT d2.seed, ed.dst AS id, 3 AS dist FROM d2 JOIN ed ON d2.id = ed.src WHERE d2.dist = 2),
-         |d3 AS (SELECT seed, id, min(dist) AS dist FROM (SELECT * FROM d2 UNION ALL SELECT * FROM n3) GROUP BY 1, 2)
-         |SELECT seed, CAST(count(*) AS BIGINT) AS n_reached, CAST(sum(1000000 // dist) AS BIGINT) AS harmonic_micro FROM d3 WHERE dist > 0 GROUP BY 1""".stripMargin,
-    "q_refint" ->
-      """SELECT 'orders.custkey' AS fk_edge, (SELECT count(*) FROM orders WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)) AS n_orphans
-         |UNION ALL SELECT 'lineitem.orderkey', (SELECT count(*) FROM lineitem WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders))
-         |UNION ALL SELECT 'customer.nationkey', (SELECT count(*) FROM customer WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation))
-         |UNION ALL SELECT 'supplier.nationkey', (SELECT count(*) FROM supplier WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation))""".stripMargin,
-    "ta_apportion" ->
-      """WITH g AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-         |t AS (SELECT source, n, (SELECT sum(n) FROM g) AS tot FROM g),
-         |r AS (SELECT source, n, (1000 * n) // tot AS base, (1000 * n) % tot AS rem, row_number() OVER (ORDER BY (1000 * n) % tot DESC, source) AS rk FROM t),
-         |l AS (SELECT 1000 - (SELECT sum(base) FROM r) AS leftover)
-         |SELECT source, CAST(n AS BIGINT) AS n, CAST(base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS quota FROM r, l""".stripMargin,
-    "ta_quota_sample" ->
-      """WITH g AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-         |t AS (SELECT source, n, (SELECT sum(n) FROM g) AS tot FROM g),
-         |r AS (SELECT source, n, (1000 * n) // tot AS base, (1000 * n) % tot AS rem, row_number() OVER (ORDER BY (1000 * n) % tot DESC, source) AS rk FROM t),
-         |l AS (SELECT 1000 - (SELECT sum(base) FROM r) AS leftover),
-         |q AS (SELECT source, base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS quota FROM r, l),
-         |p AS (SELECT doc_id, source, row_number() OVER (PARTITION BY source ORDER BY md5('qs:' || CAST(doc_id AS VARCHAR)), doc_id) AS pk FROM documents)
-         |SELECT doc_id, p.source, CAST(pk AS BIGINT) AS pick_rank FROM p JOIN q ON p.source = q.source WHERE pk <= quota""".stripMargin,
-    "ta_curriculum" ->
-      s"""WITH qs AS ($qualityScoreOracleSql),
-         |b AS (SELECT doc_id, CASE WHEN quality_bp >= 8000 THEN 0 WHEN quality_bp >= 6000 THEN 1 WHEN quality_bp >= 4000 THEN 2 ELSE 3 END AS band FROM qs),
-         |rk AS (SELECT doc_id, band, row_number() OVER (PARTITION BY band ORDER BY md5('cur:' || CAST(doc_id AS VARCHAR)), doc_id) AS band_rank FROM b),
-         |off AS (SELECT band, coalesce(sum(bn) OVER (ORDER BY band ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS o FROM (SELECT band, count(*) AS bn FROM b GROUP BY 1))
-         |SELECT doc_id, CAST(rk.band AS BIGINT) AS band, CAST(band_rank AS BIGINT) AS band_rank, CAST(o + band_rank AS BIGINT) AS curriculum_pos
-         |FROM rk JOIN off ON rk.band = off.band""".stripMargin,
-    "sim_normalize" ->
-      """WITH x AS (SELECT CAST(i AS INTEGER) AS dim, CAST(embedding[CAST(i AS INTEGER)+1] AS DOUBLE) AS x FROM embeddings, unnest(range(64)) t(i)),
-         |f AS (SELECT dim, CAST(floor(x * 1048576) AS BIGINT) AS fp FROM x)
-         |SELECT dim, CAST(count(*) AS BIGINT) AS n, CAST(sum(fp) AS BIGINT) AS sum_fp, CAST(sum(fp * fp) AS BIGINT) AS sumsq_fp FROM f GROUP BY 1""".stripMargin,
-    // sim_mahalanobis: sim_normalize's per-dim stats re-joined to every
-    // (vec, dim) cell; the per-dim z² term is rounded once to micro so
-    // the 64-term sum is an order-free integer; HUGEINT mirrors the
-    // engine's DECIMAL(38,0) products, the zero-variance guard matches.
-    "sim_mahalanobis" ->
-      """WITH x AS (SELECT vec_id, CAST(i AS INTEGER) AS dim, CAST(floor(CAST(embedding[CAST(i AS INTEGER)+1] AS DOUBLE) * 1048576) AS BIGINT) AS fp FROM embeddings, unnest(range(64)) t(i)), st AS (SELECT dim, CAST(count(*) AS HUGEINT) AS n, CAST(sum(fp) AS HUGEINT) AS s, sum(CAST(fp AS HUGEINT) * fp) AS ss FROM x GROUP BY 1), t AS (SELECT vec_id, CASE WHEN n * ss - s * s = 0 THEN CAST(0 AS BIGINT) ELSE CAST(round(CAST(n * fp - s AS DOUBLE) * CAST(n * fp - s AS DOUBLE) / CAST(n * ss - s * s AS DOUBLE) * 1000000) AS BIGINT) END AS t FROM x JOIN st USING (dim)) SELECT vec_id, CAST(sum(t) AS BIGINT) AS score_micro, CAST(sum(t) AS BIGINT) > 128000000 AS is_outlier FROM t GROUP BY 1""",
-    // srch_hybrid: nest the full srch_bm25 replay as the keyword pool,
-    // rank a cosine pool for query vec 0, fuse with round(1e6/(60+rank))
-    "srch_hybrid" ->
-      s"""WITH kwp AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score_bp DESC, doc_id) AS INTEGER) AS kw_rank FROM ($bm25OracleSql)),
-         |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |q AS (SELECT v FROM e WHERE vec_id = 0),
-         |vp AS (SELECT vec_id, CAST(row_number() OVER (ORDER BY cos DESC, vec_id) AS INTEGER) AS vec_rank FROM (SELECT d.vec_id, list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) AS cos FROM e d, q WHERE d.vec_id <> 0 ORDER BY cos DESC, d.vec_id LIMIT 25)),
-         |f AS (SELECT coalesce(k.doc_id, v.vec_id) AS doc_id, k.kw_rank, v.vec_rank FROM kwp k FULL OUTER JOIN vp v ON k.doc_id = v.vec_id)
-         |SELECT doc_id, coalesce(CAST(round(1e6 / (60 + kw_rank)) AS BIGINT), 0) + coalesce(CAST(round(1e6 / (60 + vec_rank)) AS BIGINT), 0) AS rrf_micro, kw_rank, vec_rank
-         |FROM f ORDER BY rrf_micro DESC, doc_id LIMIT 15""".stripMargin,
-    // ta_entropy: char extraction replayed positionally (text[i:i] is
-    // character-indexed like Spark's split-by-empty on BMP text); the
-    // micro-nat term rounding agrees because ln() on both engines is
-    // within 1 ulp and no integer count lands near a .5e-6 boundary
-    // (EntropySpec proves the margin for every count up to 200k)
-    "ta_entropy" ->
-      """WITH ch AS (SELECT doc_id, unnest(list_transform(range(length(text)), i -> text[CAST(i AS INTEGER)+1 : CAST(i AS INTEGER)+1])) AS ch FROM documents),
-         |g AS (SELECT doc_id, ch, count(*) AS c FROM ch WHERE ch NOT IN (' ', chr(9), chr(10), chr(13)) GROUP BY 1, 2),
-         |a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_chars, CAST(sum(c * CAST(round(ln(CAST(c AS DOUBLE)) * 1e6) AS BIGINT)) AS BIGINT) AS clnc_micro FROM g GROUP BY 1)
-         |SELECT d.doc_id, coalesce(a.n_chars, 0) AS n_chars, coalesce(a.clnc_micro, 0) AS clnc_micro FROM documents d LEFT JOIN a ON d.doc_id = a.doc_id""".stripMargin,
-    "dd_embed" -> embedOracleSql,
-    "sim_topk_lsh" -> lshTopKOracleSql,
-    "sim_topk_graph" -> graphTopKOracleSql,
-    // persisted-graph search must equal the in-memory build exactly
-    "sim_graph_persisted" -> graphTopKOracleSql,
-    "sim_graph_forget" -> graphForgetOracleSql,
-    "sim_graph_recall" -> graphRecallOracleSql,
-    "q_fuzzy_join2" ->
-      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b, a.c_name AS str_a, b.c_name AS str_b, CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey AND a.c_nationkey = b.c_nationkey AND levenshtein(a.c_name, b.c_name) <= 2""",
-    // sim_recall: nests the exact brute-force and the full LSH replay,
-    // intersects neighbor sets per anchor
-    "sim_recall" -> simRecallOracleSql,
-    "g_kcore" -> kcoreOracleSql,
-    "g_labelprop" -> labelpropOracleSql,
-    "dd_minhash" -> minhashOracleSql,
-    "dd_lsh_persisted" -> lshLedgerOracleSql,
-    "dd_lsh_forget" -> lshForgetOracleSql,
-    "dd_lsh_incremental" -> lshLedgerOracleSql,
-    // stream_lsh_ingest: foreachBatch append under frozen stored params
-    // converges to the batch ledger whatever the micro-batch boundaries
-    "stream_lsh_ingest" -> lshLedgerOracleSql,
-    // dd_lsh_stats: band replay grouped to per-band occupancy; DuckDB
-    // buckets on the raw signature slice where Spark buckets on its
-    // xxhash64 — identical grouping up to hash collisions (see the
-    // minhash replay note above)
-    "dd_lsh_stats" -> {
-      val r = 64 / 16
-      s"""WITH ${minhashSigCtes(3, 64)},
-         |banded AS MATERIALIZED (SELECT doc_id, b, array_to_string(sig[(CAST(b AS INTEGER)*$r+1):(CAST(b AS INTEGER)*$r+$r)], ',') AS bkey FROM sigs, unnest(range(16)) t(b) WHERE doc_id < 250),
-         |bu AS (SELECT b, bkey, CAST(count(*) AS BIGINT) AS sz FROM banded GROUP BY 1, 2)
-         |SELECT CAST(b AS INTEGER) AS band, CAST(sum(sz) AS BIGINT) AS n_postings, CAST(count(*) AS BIGINT) AS n_buckets, CAST(max(sz) AS BIGINT) AS max_bucket, CAST(sum(CASE WHEN sz = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_singletons FROM bu GROUP BY 1""".stripMargin
-    },
-    "dd_incremental" ->
-      """WITH f AS (SELECT doc_id, md5(text) AS fp FROM documents),
-         |inc AS (SELECT doc_id, fp FROM f WHERE doc_id >= 250)
-         |SELECT doc_id, fp FROM inc
-         |WHERE fp NOT IN (SELECT fp FROM f WHERE doc_id < 250)
-         |  AND doc_id = (SELECT min(doc_id) FROM inc i2 WHERE i2.fp = inc.fp)""".stripMargin,
-    // stream_neardup: the streaming probe finds exactly the batch banded
-    // pair set (same expressions both sides) — same replay as dd_minhash
-    "stream_neardup" -> minhashOracleSql,
-    // stream_curate: batch replay of the streamed gates — quality ≥ 5000
-    // bp, not sharing a benchmark 8-gram, DISTINCT text fingerprints
-    "stream_curate" ->
-      s"""WITH qs AS ($qualityScoreOracleSql),
-         |tk AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t FROM documents),
-         |gr AS (SELECT doc_id, unnest(CASE WHEN len(t) >= 8 THEN list_transform(range(len(t)-7), i -> array_to_string(t[(i+1):(i+8)], ' ')) ELSE [] END) AS g FROM tk),
-         |bn AS (SELECT DISTINCT g FROM gr WHERE doc_id IN (SELECT doc_id FROM documents WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '0ccccccd')),
-         |ct AS (SELECT DISTINCT doc_id FROM gr WHERE g IN (SELECT g FROM bn)),
-         |cfp AS (SELECT DISTINCT md5(text) AS fp FROM documents WHERE doc_id IN (SELECT doc_id FROM ct)),
-         |f AS (SELECT d.doc_id, md5(d.text) AS fp, qs.quality_bp FROM documents d JOIN qs ON d.doc_id = qs.doc_id)
-         |SELECT DISTINCT fp, quality_bp FROM f WHERE quality_bp >= 5000 AND fp NOT IN (SELECT fp FROM cfp)""".stripMargin,
-    "dd_minhash_dedup" -> minhashDedupOracleSql,
-    "ta_group_split" -> groupSplitOracleSql,
-    "q_ldiv" ->
-      """SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n_rows,
-                CAST(count(DISTINCT o_orderpriority) AS BIGINT) AS l_distinct,
-                count(DISTINCT o_orderpriority) >= 3 AS ok
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY 1, 2""",
-    "dd_report" -> dedupReportOracleSql,
-    // ta_leakage: minhash pair replay × the md5-threshold split replay
-    "ta_leakage" ->
-      s"""WITH ${minhashSigCtes(3, 64)}, ${minhashPairSql(64, 16, 0.5)},
-         |sp AS (SELECT doc_id, CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'cccccccd' THEN 'train' WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'val' ELSE 'test' END AS split FROM documents)
-         |SELECT a.split AS split_a, b.split AS split_b, CAST(count(*) AS BIGINT) AS n_leaky_pairs
-         |FROM mh_pairs p JOIN sp a ON p.id_a = a.doc_id JOIN sp b ON p.id_b = b.doc_id
-         |WHERE a.split <> b.split GROUP BY 1, 2""".stripMargin,
-    "dd_simhash" -> simhashOracleSql,
-    "dd_ngram" -> ngramOracleSql,
-    // mm_neardup: replay the planted gradient-image dHash (md5_64 of the
-    // ten-doc cluster id, one member bit flipped) and brute-force the
-    // Hamming<=1 pair set — Spark must reach it through decode + banding
-    "mm_neardup" ->
-      """WITH u AS (SELECT doc_id, CAST('0x' || substr(md5(CAST(doc_id // 10 AS VARCHAR)), 1, 8) AS BIGINT)::HUGEINT * 4294967296::HUGEINT + CAST('0x' || substr(md5(CAST(doc_id // 10 AS VARCHAR)), 9, 8) AS BIGINT)::HUGEINT AS uh, CAST(doc_id % 10 AS INTEGER) AS m FROM documents), hh AS (SELECT doc_id, CASE WHEN m > 0 THEN xor(h0, 1::BIGINT << (m - 1)) ELSE h0 END AS h FROM (SELECT doc_id, m, CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT THEN uh - 18446744073709551616::HUGEINT ELSE uh END AS BIGINT) AS h0 FROM u)) SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(bit_count(xor(a.h, b.h)) AS BIGINT) AS hamming FROM hh a JOIN hh b ON a.doc_id < b.doc_id WHERE bit_count(xor(a.h, b.h)) <= 1""",
-    "q_equality" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity AS qty_copy FROM lineitem",
-    "q_concatenation" ->
-      "SELECT l_orderkey, l_linenumber, l_returnflag || '-' || l_linestatus AS flag_status FROM lineitem",
-    "q_application" ->
-      "SELECT p_partkey, upper(replace(p_name, ' ', '_')) AS p_norm FROM part",
-    "q_application_fallback" ->
-      """SELECT p_partkey, CASE WHEN p_size > 25 THEN repeat(string_split(p_name, ' ')[1], 2) ELSE CAST(length(p_name) AS VARCHAR) END AS p_dyn FROM part""",
-    "q_switching" ->
-      """SELECT o_orderkey, CASE WHEN o_orderstatus = 'O' THEN o_orderpriority WHEN o_orderstatus = 'F' THEN o_orderstatus ELSE 'OTHER' END AS status_label FROM orders""",
-    "q_assignation" ->
-      "SELECT l_orderkey, l_linenumber, CAST(42 AS BIGINT) AS const_col FROM lineitem",
-    "q_casting" ->
-      "SELECT l_orderkey, l_linenumber, CAST(l_shipdate AS DATE) AS ship_date, CAST(l_quantity AS BIGINT) AS qty_int, CAST(l_orderkey AS VARCHAR) AS okey_str FROM lineitem",
-    "q_arithmetic" ->
-      "SELECT l_orderkey, l_linenumber, l_extendedprice * l_discount AS disc_amt, l_extendedprice / l_quantity AS unit_price, l_quantity + l_linenumber AS qty_plus_line FROM lineitem",
-    "q_comparison" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity > 25 AS big_qty FROM lineitem",
-    "q_bind" ->
-      "SELECT o_orderkey, o_custkey, o_totalprice, c_name, c_mktsegment FROM orders JOIN customer ON o_custkey = c_custkey",
-    "q_bind_outer" ->
-      "SELECT n_nationkey, n_name, COALESCE(n_regionkey, r_regionkey) AS n_regionkey, r_name FROM nation FULL OUTER JOIN region ON n_regionkey = r_regionkey",
-    "q_bind_cross" ->
-      "SELECT n_nationkey, n_name, n_regionkey, r_regionkey, r_name FROM nation CROSS JOIN region",
-    "q_fold" ->
-      """SELECT p_partkey, key, value FROM (SELECT p_partkey, 'p_brand' AS key, p_brand AS value FROM part UNION ALL SELECT p_partkey, 'p_type', p_type FROM part UNION ALL SELECT p_partkey, 'p_size', CAST(p_size AS VARCHAR) FROM part)""",
-    "q_unfold" ->
-      """SELECT l_orderkey, l_linenumber, max(CASE WHEN l_returnflag = 'A' THEN qty END) AS "A", max(CASE WHEN l_returnflag = 'N' THEN qty END) AS "N", max(CASE WHEN l_returnflag = 'R' THEN qty END) AS "R" FROM (SELECT l_orderkey, l_linenumber, l_returnflag, max(l_quantity) AS qty FROM lineitem GROUP BY 1, 2, 3) GROUP BY l_orderkey, l_linenumber""",
-    "q_pipeline" ->
-      """SELECT o_orderkey, o_custkey, CAST(o_orderdate AS DATE) AS order_date, o_totalprice + o_totalprice AS double_price, o_totalprice > 100000.0 AS big_order, o_orderstatus || '-' || o_orderpriority AS status_priority, CASE WHEN o_orderstatus = 'O' THEN o_orderpriority ELSE 'CLOSED' END AS status_label, 'graft' AS engine, c_name AS customer_name, lower(replace(o_orderpriority, '-', '_')) AS priority_norm FROM orders LEFT JOIN customer ON o_custkey = c_custkey""",
-    "q_agg" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_c, CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) AS sum_disc_c, count(*) AS n FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    "q_topk" ->
-      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 100",
-    "q_topk_group" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice FROM (SELECT o_orderpriority, o_orderkey, o_totalprice, row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey) AS rn FROM orders) WHERE rn <= 3""",
-    "q_rollup" ->
-      "SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty, count(*) AS n FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)",
-    "q_pct_rank" ->
-      "SELECT o_orderkey, o_orderpriority, o_totalprice, percent_rank() OVER w AS pct, cume_dist() OVER w AS cd FROM orders WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)",
-    "q_lag_lead" ->
-      "SELECT o_orderkey, o_orderpriority, o_totalprice, lag(o_orderkey, 1) OVER w AS prev_key, lead(o_orderkey, 1) OVER w AS next_key, CAST(ntile(4) OVER w AS INTEGER) AS quartile FROM orders WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)",
-    "q_approx" ->
-      "SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_nd, TRUE AS hll_ok, TRUE AS pctl_ok FROM lineitem GROUP BY l_returnflag",
-    "q_json" ->
-      "SELECT event_id, CAST(props->>'k' AS BIGINT) AS k, CAST(props->>'k' AS BIGINT) AS k_path, CAST(props->>'k' AS BIGINT) * 2 AS k_doubled FROM events",
-    "q_arrays" ->
-      """SELECT l_orderkey, array_to_string(list_sort(list(l_linenumber)), ',') AS lines, array_to_string(list_sort(list_distinct(list(l_returnflag))), ',') AS flags, CAST(len(list(l_linenumber)) AS INTEGER) AS n_lines, CAST(list_sum(list(l_linenumber)) AS BIGINT) AS line_sum, array_to_string(list_transform(list_sort(list(l_linenumber)), x -> CAST(x * 10 AS VARCHAR)), ',') AS lines_x10, COALESCE(array_to_string(list_filter(list_sort(list(l_linenumber)), x -> x % 2 = 0), ','), '') AS even_lines FROM lineitem GROUP BY l_orderkey""",
-    "q_diff" ->
-      """WITH neu AS (SELECT o_orderkey, CASE WHEN o_orderkey % 11 = 0 THEN o_totalprice * 2 ELSE o_totalprice END AS o_totalprice FROM orders WHERE o_orderkey % 7 <> 0 UNION ALL SELECT o_orderkey + 10000000, o_totalprice FROM orders WHERE o_orderkey % 13 = 0) SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS o_orderkey, CASE WHEN n.o_orderkey IS NULL THEN 'removed' WHEN o.o_orderkey IS NULL THEN 'added' ELSE 'changed' END AS status FROM orders o FULL OUTER JOIN neu n ON o.o_orderkey = n.o_orderkey WHERE n.o_orderkey IS NULL OR o.o_orderkey IS NULL OR o.o_totalprice <> n.o_totalprice""",
-    "ta_sample_n" ->
-      """SELECT doc_id, lang FROM (SELECT doc_id, lang, row_number() OVER (PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM documents) WHERE rn <= 5""",
-    // ta_overlap: grams compare as the same 60-bit md5 slice in both
-    // engines ('0x'||hex replays Spark's conv)
-    "ta_overlap" ->
-      """WITH toks AS (SELECT source, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), gs AS (SELECT source, unnest(CASE WHEN len(t) >= 8 THEN list_transform(range(len(t)-7), i -> array_to_string(t[(i+1):(i+8)], ' ')) ELSE [] END) AS gm FROM toks), g AS (SELECT DISTINCT source, CAST('0x' || substr(md5(gm), 1, 15) AS BIGINT) AS g FROM gs) SELECT a.source AS src_a, b.source AS src_b, CAST(count(*) AS BIGINT) AS shared_grams FROM g a JOIN g b ON a.g = b.g AND a.source < b.source GROUP BY 1, 2""",
-    "ta_source_stats" ->
-      """WITH base AS (SELECT source, text, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks FROM documents), comp AS (SELECT source, CAST(len(toks) AS BIGINT) AS n_tokens, CAST(len(toks) AS DOUBLE) AS ntok, CASE WHEN length(text) > 0 THEN (length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g'))) / CAST(length(text) AS DOUBLE) ELSE 0 END AS pr, CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','was','at','by','be','this'], t))) AS DOUBLE) / len(toks) ELSE 0 END AS sr, CASE WHEN len(toks) > 0 THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks) ELSE 0 END AS mtl FROM base), scored AS (SELECT source, n_tokens, CAST(floor((CAST(CASE WHEN ntok >= 50 AND ntok <= 10000 THEN 1.0 WHEN ntok >= 10 THEN 0.5 ELSE 0.1 END AS DOUBLE) * 0.3 + (1.0 - least(pr * 4, 1.0)) * 0.2 + least(sr * 3, 1.0) * 0.3 + CAST(CASE WHEN mtl >= 3 AND mtl <= 10 THEN 1.0 ELSE 0.3 END AS DOUBLE) * 0.2) * 10000) AS BIGINT) AS quality_bp FROM comp) SELECT source, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens, CAST(sum(quality_bp) AS BIGINT) AS quality_bp_sum, CAST(min(quality_bp) AS BIGINT) AS quality_bp_min, CAST(max(quality_bp) AS BIGINT) AS quality_bp_max FROM scored GROUP BY 1""",
-    "ta_curate" ->
-      """WITH base AS (SELECT doc_id, lang, text, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks FROM documents), comp AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS ntok, CASE WHEN length(text) > 0 THEN (length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g'))) / CAST(length(text) AS DOUBLE) ELSE 0 END AS pr, CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','was','at','by','be','this'], t))) AS DOUBLE) / len(toks) ELSE 0 END AS sr, CASE WHEN len(toks) > 0 THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks) ELSE 0 END AS mtl FROM base), q AS (SELECT doc_id FROM comp WHERE CAST(floor((CAST(CASE WHEN ntok >= 50 AND ntok <= 10000 THEN 1.0 WHEN ntok >= 10 THEN 0.5 ELSE 0.1 END AS DOUBLE) * 0.3 + (1.0 - least(pr * 4, 1.0)) * 0.2 + least(sr * 3, 1.0) * 0.3 + CAST(CASE WHEN mtl >= 3 AND mtl <= 10 THEN 1.0 ELSE 0.3 END AS DOUBLE) * 0.2) * 10000) AS BIGINT) >= 5000), scores AS (SELECT doc_id, 'en' AS lang_guess, CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','was','at','by','be','this'], t))) AS DOUBLE) / len(toks) ELSE 0 END AS score FROM base UNION ALL SELECT doc_id, 'fr', CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['le','la','les','de','des','un','une','et','ou','dans','est','que','pour','sur','avec','au','du','il','elle','ce'], t))) AS DOUBLE) / len(toks) ELSE 0 END FROM base UNION ALL SELECT doc_id, 'de', CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['der','die','das','und','oder','von','zu','in','ist','es','dass','für','auf','mit','als','war','bei','sein','ein','eine'], t))) AS DOUBLE) / len(toks) ELSE 0 END FROM base UNION ALL SELECT doc_id, 'es', CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['el','la','los','las','de','un','una','y','o','en','es','que','para','sobre','con','al','del','se','por','este'], t))) AS DOUBLE) / len(toks) ELSE 0 END FROM base UNION ALL SELECT doc_id, 'it', CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['il','la','le','di','dei','un','una','e','o','in','è','che','per','su','con','al','del','si','da','questo'], t))) AS DOUBLE) / len(toks) ELSE 0 END FROM base), en AS (SELECT doc_id FROM (SELECT doc_id, lang_guess, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, lang_guess DESC) AS rn FROM scores) WHERE rn = 1 AND lang_guess = 'en'), gated AS (SELECT b.doc_id, b.lang, b.text, b.toks FROM base b JOIN q USING (doc_id) JOIN en USING (doc_id)), keep AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(text)), dd AS (SELECT g.* FROM gated g JOIN keep USING (doc_id)), grams AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 8 THEN list_transform(range(len(toks)-7), i -> array_to_string(toks[(i+1):(i+8)], ' ')) ELSE [] END) AS g FROM dd), benchg AS (SELECT DISTINCT g FROM (SELECT doc_id, unnest(CASE WHEN len(toks) >= 8 THEN list_transform(range(len(toks)-7), i -> array_to_string(toks[(i+1):(i+8)], ' ')) ELSE [] END) AS g FROM base WHERE substr(md5(CAST(doc_id AS VARCHAR)),1,8) < '0ccccccd')), contam AS (SELECT DISTINCT doc_id FROM grams WHERE g IN (SELECT g FROM benchg)), train AS (SELECT dd.doc_id, dd.lang, CAST(len(dd.toks) AS BIGINT) AS n_tokens FROM dd WHERE dd.doc_id NOT IN (SELECT doc_id FROM contam) AND substr(md5(CAST(dd.doc_id AS VARCHAR)), 1, 8) < 'cccccccd'), c AS (SELECT doc_id, lang, n_tokens, COALESCE(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM train) SELECT doc_id, lang, n_tokens, CAST(cum // 2048 AS BIGINT) AS bin, CAST(cum % 2048 AS BIGINT) AS bin_offset FROM c""",
-    "ta_wordpiece" ->
-      """WITH RECURSIVE toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), allw AS (SELECT unnest(t) AS w FROM toks), top AS (SELECT w FROM (SELECT w, count(*) AS c FROM allw GROUP BY w) QUALIFY row_number() OVER (ORDER BY c DESC, w) <= 200), vocab AS (SELECT DISTINCT piece FROM (SELECT w AS piece FROM top UNION ALL SELECT unnest(['a','b','c','d','e','f','g','h','i','j','k','l','m','n','o','p','q','r','s','t','u','v','w','x','y','z','0','1','2','3','4','5','6','7','8','9']))), words AS (SELECT DISTINCT w FROM allw), m AS (SELECT w, 1 AS pos, 0 AS n_tok, FALSE AS unk FROM words UNION ALL SELECT w, pos + best_len, n_tok + 1, best_len IS NULL FROM (SELECT m.w, m.pos, m.n_tok, (SELECT max(len(piece)) FROM vocab WHERE piece = substr(m.w, m.pos, len(piece))) AS best_len FROM m WHERE NOT m.unk AND m.pos <= len(m.w))), ws AS (SELECT w, max(CASE WHEN unk THEN -1 ELSE n_tok END) AS n_pieces FROM m WHERE unk OR pos > len(w) GROUP BY w), dw AS (SELECT doc_id, unnest(t) AS w FROM toks), agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words, CAST(sum(CASE WHEN n_pieces < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_unk_words, CAST(sum(CASE WHEN n_pieces > 0 THEN n_pieces ELSE 0 END) AS BIGINT) AS n_pieces FROM dw JOIN ws USING (w) GROUP BY 1) SELECT d.doc_id, coalesce(a.n_words, 0) AS n_words, coalesce(a.n_unk_words, 0) AS n_unk_words, coalesce(a.n_pieces, 0) AS n_pieces FROM documents d LEFT JOIN agg a USING (doc_id)""",
-    "ta_feathash" ->
-      """WITH toks AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS tok FROM documents) SELECT doc_id, CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) % 256 AS dim, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY 1, 2""",
-    "q_features" ->
-      """SELECT l_orderkey, l_linenumber, array_to_string([CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END, CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END, CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END, CAST(l_quantity AS BIGINT), CAST(round(l_extendedprice * 100) AS BIGINT)], ',') AS features FROM lineitem""",
-    "ev_wau" ->
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events), w AS (SELECT user_id, d + CAST(x AS INTEGER) AS win_end FROM ud, unnest(range(7)) AS t(x)) SELECT win_end, CAST(count(DISTINCT user_id) AS BIGINT) AS wau FROM w GROUP BY 1""",
-    "ev_pattern" ->
-      """WITH s AS (SELECT user_id, string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id) AS seq FROM events GROUP BY 1) SELECT user_id, seq, CAST(length(seq) AS BIGINT) AS n_events, CAST(len(regexp_extract_all(seq, 'v+p')) AS BIGINT) AS n_funnels, regexp_matches(seq, 's.*p') AS signup_then_purchase FROM s""",
-    "ev_coverage" ->
-      """WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS st, epoch_us(ts) + 300000000 AS en FROM events), g AS (SELECT *, CASE WHEN st > coalesce(max(en) OVER (PARTITION BY user_id ORDER BY st, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS is_new FROM b), i AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY st, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island FROM g), m AS (SELECT user_id, island, min(st) AS ms, max(en) AS me, count(*) AS ne FROM i GROUP BY 1, 2) SELECT user_id, CAST(count(*) AS BIGINT) AS n_islands, CAST(sum(me - ms) AS BIGINT) AS covered_us, CAST(sum(ne) AS BIGINT) AS n_events FROM m GROUP BY 1""",
-    "q_wmedian" ->
-      """WITH h AS (SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS w FROM lineitem GROUP BY 1, 2), c AS (SELECT *, sum(w) OVER (PARTITION BY l_returnflag ORDER BY price_c ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum, sum(w) OVER (PARTITION BY l_returnflag) AS total FROM h) SELECT l_returnflag, CAST(min(price_c) AS BIGINT) AS wmedian_c, CAST(max(total) AS BIGINT) AS total_wt FROM c WHERE cum * 2 >= total GROUP BY 1""",
-    "ta_shuffle" ->
-      """WITH d AS (SELECT doc_id, md5('epoch0:' || CAST(doc_id AS VARCHAR)) AS h FROM documents), s AS (SELECT doc_id, h, CAST('0x' || substr(h, 1, 4) AS BIGINT) % 32 AS shard FROM d) SELECT doc_id, shard, CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id) AS BIGINT) AS pos FROM s""",
-    "ta_temperature" ->
-      """WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1), w AS (SELECT source, CAST(round(sqrt(CAST(n AS DOUBLE)) * 1000000) AS BIGINT) AS w_micro FROM c), t AS (SELECT CAST(sum(w_micro) AS BIGINT) AS tw FROM w), q AS (SELECT source, (250 * w_micro) // tw AS quota FROM w, t), r AS (SELECT doc_id, source, row_number() OVER (PARTITION BY source ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM documents) SELECT r.doc_id, r.source FROM r JOIN q USING (source) WHERE rn <= quota""",
-    "sim_centroids" ->
-      """SELECT CAST(label AS BIGINT) AS label, CAST(i AS BIGINT) AS dim, CAST(count(*) AS BIGINT) AS n, CAST(sum(CAST(round(CAST(embedding[CAST(i AS INTEGER) + 1] AS DOUBLE) * 1000000) AS BIGINT)) AS BIGINT) AS sum_micro FROM embeddings, unnest(range(len(embedding))) t(i) GROUP BY 1, 2""",
-    "ta_stem" ->
-      """WITH toks AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS tok FROM documents), st AS (SELECT CASE WHEN ends_with(tok, 'ies') AND length(tok) > 4 THEN substr(tok, 1, length(tok) - 3) || 'y' WHEN ends_with(tok, 'ing') AND length(tok) > 5 THEN substr(tok, 1, length(tok) - 3) WHEN ends_with(tok, 'ed') AND length(tok) > 4 THEN substr(tok, 1, length(tok) - 2) WHEN ends_with(tok, 'ly') AND length(tok) > 4 THEN substr(tok, 1, length(tok) - 2) WHEN ends_with(tok, 'es') AND length(tok) > 4 THEN substr(tok, 1, length(tok) - 2) WHEN ends_with(tok, 's') AND NOT ends_with(tok, 'ss') AND length(tok) > 3 THEN substr(tok, 1, length(tok) - 1) ELSE tok END AS stem FROM toks) SELECT stem, CAST(count(*) AS BIGINT) AS n_tokens FROM st GROUP BY 1 ORDER BY n_tokens DESC, stem ASC LIMIT 50""",
-    "ta_wsample" ->
-      """WITH d AS (SELECT doc_id, CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens FROM documents), keyed AS (SELECT doc_id, n_tokens, CAST(round(-ln((CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS DOUBLE) + 0.5) / 4294967296.0) * 1000000) AS BIGINT) AS nl_micro FROM d WHERE n_tokens > 0) SELECT doc_id, n_tokens, nl_micro FROM keyed ORDER BY CAST(nl_micro AS DOUBLE) / n_tokens ASC, doc_id ASC LIMIT 50""",
-    "ta_mix" ->
-      // fraction 1.0 keeps ALL rows (not `< 'ffffffff'`, which drops keys
-      // hashing to exactly ffffffff) — mirrors Sampling.keepFraction
-      """SELECT doc_id, source FROM documents WHERE CASE source WHEN 'src0' THEN substr(md5(source || ':' || CAST(doc_id AS VARCHAR)), 1, 8) < '80000000' WHEN 'src1' THEN TRUE ELSE substr(md5(source || ':' || CAST(doc_id AS VARCHAR)), 1, 8) < '1999999a' END""",
-    "q_dates" ->
-      "SELECT o_orderkey, CAST(o_orderdate AS DATE) AS d, CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS month_start, CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS DATE) AS plus_3m, last_day(CAST(o_orderdate AS DATE)) AS month_end, CAST(datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS INTEGER) AS days_since_95, CAST(year(CAST(o_orderdate AS DATE)) AS INTEGER) AS y, CAST(month(CAST(o_orderdate AS DATE)) AS INTEGER) AS m, CAST(day(CAST(o_orderdate AS DATE)) AS INTEGER) AS dom FROM orders",
-    "q_strings" ->
-      "SELECT p_partkey, upper(p_name) AS uname, substr(p_name, 1, 5) AS prefix5, reverse(p_name) AS rname, CAST(levenshtein(p_name, p_type) AS INTEGER) AS edit_dist, string_split(p_name, ' ')[1] AS first_word, CAST(strpos(p_name, 'a') AS INTEGER) AS pos_a, CAST(length(trim(p_name)) AS BIGINT) AS len_trim, lpad(CAST(p_partkey AS VARCHAR), 10, '0') AS key_padded FROM part",
-    "q_window" ->
-      "SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate, CAST(row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber) AS INTEGER) AS rn FROM lineitem",
-    "q_distinct" ->
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-    "q_semi_join" ->
-      "SELECT l_orderkey, l_linenumber, l_partkey FROM lineitem WHERE EXISTS (SELECT 1 FROM part WHERE p_partkey = l_partkey AND p_size > 40)",
-    "q_anti_join" ->
-      "SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)",
-    "q_bloom_join" ->
-      "SELECT o_orderkey, o_custkey, c_name FROM orders JOIN customer ON o_custkey = c_custkey WHERE c_mktsegment = 'BUILDING'",
-    "q_union" ->
-      "SELECT CAST(n_nationkey AS BIGINT) AS k, n_name AS name FROM nation UNION ALL SELECT CAST(r_regionkey AS BIGINT), r_name FROM region",
-    // ---- extension oracles (duckdb-expressible subset; hash/LSH queries
-    // are deliberately omitted → driver records rows-only checks) ----
-    "dd_exact" ->
-      """SELECT md5(array_to_string(list_sort(list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> ''))), ' ')) AS dup_key, min(doc_id) AS keep_id, count(*) AS n_dups FROM documents GROUP BY 1""",
-    "dd_exact_rows" ->
-      """SELECT doc_id, lang, source, n_chars FROM (SELECT doc_id, lang, source, n_chars, row_number() OVER (PARTITION BY md5(array_to_string(list_sort(list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> ''))), ' ')) ORDER BY doc_id) AS rn FROM documents) WHERE rn = 1""",
-    "dd_components" ->
-      """WITH runs AS (SELECT doc_id, lang, doc_id - ROW_NUMBER() OVER (PARTITION BY lang ORDER BY doc_id) AS grp FROM documents) SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(MIN(doc_id) OVER (PARTITION BY lang, grp) AS BIGINT) AS component FROM runs""",
-    "ta_tokens" ->
-      """SELECT doc_id, CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens, CAST(len(regexp_extract_all(text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\s]')) AS BIGINT) AS n_bpeish, CAST(length(text) AS BIGINT) AS n_chars FROM documents""",
-    "ta_quality" ->
-      """SELECT doc_id, CAST(floor(CASE WHEN length(text) > 0 THEN (length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g'))) / CAST(length(text) AS DOUBLE) ELSE 0 END * 10000) AS BIGINT) AS punct_bp, CAST(floor(CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','was','at','by','be','this'], t))) AS DOUBLE) / len(toks) ELSE 0 END * 10000) AS BIGINT) AS stop_bp, CAST(floor(CASE WHEN len(toks) > 0 THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks) ELSE 0 END * 100) AS BIGINT) AS mtl_c FROM (SELECT doc_id, text, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks FROM documents)""",
-    "ta_fingerprint" ->
-      """SELECT doc_id, md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g'))) AS fp FROM documents""",
-    "mm_meta" ->
-      """SELECT doc_id AS media_id, CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes, 'bin' AS format, sha256(text) AS sha FROM documents""",
-    // mm_decode: every value is an integer function of doc_id (the planted
-    // media's encoder parameters) — a decoder that doesn't actually decode
-    // the real png/bmp/wav payloads cannot reproduce n_samples/content_sum
-    "mm_decode" ->
-      """SELECT doc_id AS media_id,
-           CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'wav' ELSE 'bmp' END AS format,
-           CAST(CASE WHEN doc_id % 3 = 1 THEN 0 ELSE 8 + doc_id % 17 END AS INTEGER) AS width,
-           CAST(CASE WHEN doc_id % 3 = 1 THEN 0 ELSE 8 + doc_id % 13 END AS INTEGER) AS height,
-           CAST(CASE WHEN doc_id % 3 = 1 THEN 8000 + (doc_id % 5) * 2000 ELSE 0 END AS INTEGER) AS sample_rate,
-           CAST(CASE WHEN doc_id % 3 = 1 THEN 64 + doc_id % 64 ELSE (8 + doc_id % 17) * (8 + doc_id % 13) END AS BIGINT) AS n_samples,
-           CAST(CASE WHEN doc_id % 3 = 1 THEN (64 + doc_id % 64) * (doc_id % 2000 - 1000) ELSE (8 + doc_id % 17) * (8 + doc_id % 13) * ((doc_id % 256) + (doc_id * 7 % 256) + (doc_id * 13 % 256)) END AS BIGINT) AS content_sum,
-           CAST(CASE WHEN doc_id % 3 = 1 THEN 0 ELSE 8 + doc_id % 17 END AS INTEGER) AS hdr_width,
-           CAST(CASE WHEN doc_id % 3 = 1 THEN 0 ELSE 8 + doc_id % 13 END AS INTEGER) AS hdr_height,
-           CAST(CASE WHEN doc_id % 3 = 1 THEN 8000 + (doc_id % 5) * 2000 ELSE 0 END AS INTEGER) AS hdr_rate
-         FROM documents""",
-    // mm_frames: documents text is pure ASCII in this corpus (verified:
-    // octet_length == length for every row), so DuckDB's char-based
-    // substring sees the same bytes Spark's binary substring does and
-    // md5 hashes agree
-    "mm_frames" ->
-      """WITH idx AS (SELECT unnest(range(8)) AS i)
-         SELECT doc_id AS media_id, CAST(i AS INTEGER) AS frame_idx,
-                CAST(length(substring(text, CAST(i * 64 + 1 AS BIGINT), 64)) AS INTEGER) AS frame_n_bytes,
-                md5(substring(text, CAST(i * 64 + 1 AS BIGINT), 64)) AS frame_hash
-         FROM documents, idx
-         WHERE i < least(CAST(ceil(length(text) / 64.0) AS BIGINT), 8)""",
-    // sim_topk: the scorer is fixed-order double accumulation over
-    // float→double casts — DuckDB's list_dot_product on double-cast lists
-    // is bit-identical (verified on this corpus), so exact scores and
-    // ranks hash-match; ties (none in practice) break by neighbor_id in
-    // both engines
-    // sim_lid: the same brute top-10 replay, then per-term micro-nat
-    // rounding of ln(d_i/d_k) and the integer MLE readout
-    "sim_lid" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         scored AS (SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
-             list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) AS score
-           FROM e d, e q WHERE q.vec_id < 8 AND d.vec_id <> q.vec_id),
-         top AS (SELECT query_id, score, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-           FROM scored QUALIFY rank <= 10),
-         dk AS (SELECT query_id, 1.0 - score AS dk FROM top WHERE rank = 10),
-         term AS (SELECT t.query_id,
-             CASE WHEN t.score < 1.0 AND d.dk > 0 THEN CAST(round(ln((1.0 - t.score) / d.dk) * 1000000) AS BIGINT) ELSE NULL END AS lnr
-           FROM top t JOIN dk d USING (query_id))
-         SELECT query_id, CAST(count(lnr) AS BIGINT) AS k, CAST(sum(lnr) AS BIGINT) AS s_micro,
-           CASE WHEN sum(lnr) < 0 THEN CAST((count(lnr) * 1000000000) // (-sum(lnr)) AS BIGINT) ELSE NULL END AS lid_milli
-         FROM term GROUP BY 1""",
-    "sim_topk" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         scored AS (
-           SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
-                  list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) AS score
-           FROM e d, e q WHERE q.vec_id < 8 AND d.vec_id <> q.vec_id)
-         SELECT query_id, CAST(rn AS INTEGER) AS rank, neighbor_id, score
-         FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored)
-         WHERE rn <= 10""",
-    // sim_mips: same replay as sim_topk minus the norm division
-    "sim_mips" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         scored AS (
-           SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
-                  list_dot_product(d.v, q.v) AS score
-           FROM e d, e q WHERE q.vec_id < 8 AND d.vec_id <> q.vec_id)
-         SELECT query_id, CAST(rn AS INTEGER) AS rank, neighbor_id, score
-         FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored)
-         WHERE rn <= 10""",
-    "ta_quality_score" -> qualityScoreOracleSql,
-    // ta_bleu: identical clipped-count joins; the two ln-per-source
-    // roundings are the only doubles, same op order
-    "ta_bleu" ->
-      """WITH pr AS (SELECT h.doc_id AS pid, h.source,
-             list_filter(string_split_regex(lower(h.text), '\s+'), x -> x <> '') AS t,
-             list_filter(string_split_regex(lower(r.text), '\s+'), x -> x <> '') AS rt
-           FROM documents h JOIN documents r ON r.doc_id = h.doc_id + 1 WHERE h.doc_id % 2 = 0),
-         base AS (SELECT pid, source, CAST(len(t) AS BIGINT) AS c, CAST(len(rt) AS BIGINT) AS r FROM pr),
-         h1c AS (SELECT pid, g, count(*) AS ch FROM (SELECT pid, unnest(t) AS g FROM pr) GROUP BY 1, 2),
-         r1c AS (SELECT pid, g, count(*) AS cr FROM (SELECT pid, unnest(rt) AS g FROM pr) GROUP BY 1, 2),
-         p1 AS (SELECT pid, CAST(sum(least(h.ch, r.cr)) AS BIGINT) AS p1_num FROM h1c h JOIN r1c r USING (pid, g) GROUP BY 1),
-         d1 AS (SELECT pid, CAST(sum(ch) AS BIGINT) AS p1_den FROM h1c GROUP BY 1),
-         h2c AS (SELECT pid, g, count(*) AS ch FROM (SELECT pid, unnest(CASE WHEN len(t) >= 2 THEN list_transform(range(len(t) - 1), i -> array_to_string(t[(CAST(i AS INTEGER)+1):(CAST(i AS INTEGER)+2)], ' ')) ELSE [] END) AS g FROM pr) GROUP BY 1, 2),
-         r2c AS (SELECT pid, g, count(*) AS cr FROM (SELECT pid, unnest(CASE WHEN len(rt) >= 2 THEN list_transform(range(len(rt) - 1), i -> array_to_string(rt[(CAST(i AS INTEGER)+1):(CAST(i AS INTEGER)+2)], ' ')) ELSE [] END) AS g FROM pr) GROUP BY 1, 2),
-         p2 AS (SELECT pid, CAST(sum(least(h.ch, r.cr)) AS BIGINT) AS p2_num FROM h2c h JOIN r2c r USING (pid, g) GROUP BY 1),
-         d2 AS (SELECT pid, CAST(sum(ch) AS BIGINT) AS p2_den FROM h2c GROUP BY 1),
-         agg AS (SELECT b.source, CAST(count(*) AS BIGINT) AS n_pairs,
-             CAST(sum(b.c) AS BIGINT) AS c_total, CAST(sum(b.r) AS BIGINT) AS r_total,
-             CAST(sum(coalesce(p1.p1_num, 0)) AS BIGINT) AS p1_num,
-             CAST(sum(coalesce(d1.p1_den, 0)) AS BIGINT) AS p1_den,
-             CAST(sum(coalesce(p2.p2_num, 0)) AS BIGINT) AS p2_num,
-             CAST(sum(coalesce(d2.p2_den, 0)) AS BIGINT) AS p2_den
-           FROM base b LEFT JOIN p1 USING (pid) LEFT JOIN d1 USING (pid)
-             LEFT JOIN p2 USING (pid) LEFT JOIN d2 USING (pid) GROUP BY 1),
-         f AS (SELECT *, CASE WHEN c_total >= r_total THEN CAST(0 AS BIGINT)
-             ELSE -CAST(((r_total - c_total) * 1000000) // c_total AS BIGINT) END AS bp_micro FROM agg)
-         SELECT source, n_pairs, c_total, r_total, p1_num, p1_den, p2_num, p2_den, bp_micro,
-           CASE WHEN p1_num = 0 OR p2_num = 0 OR p1_den = 0 OR p2_den = 0 THEN NULL
-             ELSE bp_micro - ((-(CAST(round(ln(CAST(p1_num AS DOUBLE) / p1_den) * 1000000) AS BIGINT)
-                 + CAST(round(ln(CAST(p2_num AS DOUBLE) / p2_den) * 1000000) AS BIGINT))) // 2) END AS log_bleu_micro
-         FROM f""",
-    // ta_kappa: the qualityScoreOracleSql rater vs the 50-token length
-    // rater; same exact-integer contingency, HUGEINT marginal products,
-    // |numerator|-with-sign division so negative kappa agrees
-    "ta_kappa" ->
-      """WITH base AS (SELECT doc_id, text, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks FROM documents),
-         comp AS (SELECT doc_id, len(toks) AS n_toks, CAST(len(toks) AS DOUBLE) AS ntok, CASE WHEN length(text) > 0 THEN (length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g'))) / CAST(length(text) AS DOUBLE) ELSE 0 END AS pr, CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, t -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','was','at','by','be','this'], t))) AS DOUBLE) / len(toks) ELSE 0 END AS sr, CASE WHEN len(toks) > 0 THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks) ELSE 0 END AS mtl FROM base),
-         lab AS (SELECT CASE WHEN floor((CAST(CASE WHEN ntok >= 50 AND ntok <= 10000 THEN 1.0 WHEN ntok >= 10 THEN 0.5 ELSE 0.1 END AS DOUBLE) * 0.3 + (1.0 - least(pr * 4, 1.0)) * 0.2 + least(sr * 3, 1.0) * 0.3 + CAST(CASE WHEN mtl >= 3 AND mtl <= 10 THEN 1.0 ELSE 0.3 END AS DOUBLE) * 0.2) * 10000) >= 5000 THEN 1 ELSE 0 END AS a, CASE WHEN n_toks >= 50 THEN 1 ELSE 0 END AS b FROM comp),
-         c AS (SELECT count(*) AS n, sum(CASE WHEN a = 1 AND b = 1 THEN 1 ELSE 0 END) AS n11, sum(CASE WHEN a = 1 AND b = 0 THEN 1 ELSE 0 END) AS n10, sum(CASE WHEN a = 0 AND b = 1 THEN 1 ELSE 0 END) AS n01, sum(CASE WHEN a = 0 AND b = 0 THEN 1 ELSE 0 END) AS n00 FROM lab),
-         k AS (SELECT n, n11, n10, n01, n00, (n11 + n10)::HUGEINT * (n11 + n01) + (n01 + n00)::HUGEINT * (n10 + n00) AS pm FROM c)
-         SELECT CAST(n AS BIGINT) AS n_docs, CAST(n11 AS BIGINT) AS n11, CAST(n10 AS BIGINT) AS n10, CAST(n01 AS BIGINT) AS n01, CAST(n00 AS BIGINT) AS n00,
-           CAST((n11 + n00) * 1000000 // n AS BIGINT) AS po_micro,
-           CAST((pm * 1000000) // (n::HUGEINT * n) AS BIGINT) AS pe_micro,
-           CAST(CASE WHEN n::HUGEINT * (n11 + n00) - pm >= 0
-                THEN ((n::HUGEINT * (n11 + n00) - pm) * 1000000) // greatest(n::HUGEINT * n - pm, 1)
-                ELSE -((-(n::HUGEINT * (n11 + n00) - pm)) * 1000000) // greatest(n::HUGEINT * n - pm, 1) END AS BIGINT) AS kappa_micro
-         FROM k""",
-    "ta_langid" -> langidOracleSql,
-    "ta_split" ->
-      """SELECT doc_id, CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'cccccccd' THEN 'train' WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'val' ELSE 'test' END AS split FROM documents""",
-    "ta_sample" ->
-      """SELECT doc_id, lang FROM documents WHERE substr(md5(lang || ':' || CAST(doc_id AS VARCHAR)), 1, 8) < '33333333'""",
-    "ta_pack" ->
-      """WITH t AS (SELECT doc_id, lang, CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens FROM documents), c AS (SELECT doc_id, lang, n_tokens, COALESCE(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM t) SELECT doc_id, lang, n_tokens, CAST(cum // 4096 AS BIGINT) AS bin, CAST(cum % 4096 AS BIGINT) AS bin_offset, CAST((cum + greatest(n_tokens, 1) - 1) // 4096 - cum // 4096 + 1 AS BIGINT) AS n_bins FROM c""",
-    "ev_window" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n_events, CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) AS value_c FROM events GROUP BY 1, 2""",
-    "stream_window" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n_events, CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) AS value_c FROM events GROUP BY 1, 2""",
-    "stream_dedup" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
-    // ev_assoc: exact integer counts; support/confidence/lift divisions
-    // mirror the Spark operation tree term for term (bit-identical doubles)
-    "ev_assoc" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey AS o, p_brand AS item
-           FROM lineitem JOIN part ON l_partkey = p_partkey),
-         capped AS (SELECT * FROM items
-           WHERE o IN (SELECT o FROM items GROUP BY o HAVING count(*) <= 32)),
-         n_ord AS (SELECT count(DISTINCT o) AS n_orders FROM capped),
-         ic AS (SELECT item, count(*) AS n_item FROM capped GROUP BY item),
-         pc AS (SELECT a.item AS ia, b.item AS ib, count(*) AS n_both
-           FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-           GROUP BY 1, 2 HAVING count(*) >= 50),
-         rules AS (SELECT ia AS antecedent, ib AS consequent, n_both FROM pc
-           UNION ALL SELECT ib, ia, n_both FROM pc)
-         SELECT antecedent, consequent, n_both,
-                na.n_item AS n_ante, nc.n_item AS n_cons, n_orders,
-                CAST(n_both AS DOUBLE) / CAST(n_orders AS DOUBLE) AS support,
-                CAST(n_both AS DOUBLE) / CAST(na.n_item AS DOUBLE) AS confidence,
-                (CAST(n_both AS DOUBLE) / CAST(na.n_item AS DOUBLE)) /
-                  (CAST(nc.n_item AS DOUBLE) / CAST(n_orders AS DOUBLE)) AS lift
-         FROM rules JOIN ic na ON rules.antecedent = na.item
-                    JOIN ic nc ON rules.consequent = nc.item
-                    CROSS JOIN n_ord""",
-    "q_logreg" -> logregOracleSql,
-    // dd_spans: identical positional fingerprints, identical posting cap,
-    // identical islands grouping — exact replay
-    "dd_spans" ->
-      """WITH toks AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
-           FROM documents),
-         posts AS (SELECT doc_id, CAST(u.i AS BIGINT) AS pos,
-           CAST('0x' || substr(md5(array_to_string(t[(u.i+1):(u.i+8)], ' ')), 1, 15) AS BIGINT) AS g
-           FROM toks, unnest(CASE WHEN len(t) >= 8 THEN range(len(t)-7) ELSE [] END) u(i)),
-         busy AS (SELECT g FROM posts GROUP BY g HAVING count(*) > 50),
-         kept AS (SELECT * FROM posts WHERE g NOT IN (SELECT g FROM busy)),
-         m AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb,
-                 a.pos - b.pos AS delta
-           FROM kept a JOIN kept b ON a.g = b.g AND a.doc_id < b.doc_id),
-         runs AS (SELECT doc_a, doc_b, delta, pa, pb,
-                 pa - row_number() OVER (PARTITION BY doc_a, doc_b, delta ORDER BY pa) AS grp
-           FROM m)
-         SELECT doc_a, doc_b, CAST(min(pa) AS BIGINT) AS start_a,
-                CAST(min(pb) AS BIGINT) AS start_b,
-                CAST(count(*) AS BIGINT) AS n_grams,
-                CAST(count(*) + 7 AS BIGINT) AS span_tokens
-         FROM runs GROUP BY doc_a, doc_b, delta, grp HAVING count(*) >= 3""",
-    // q_theilsen: identical integral-division slopes (truncation toward
-    // zero verified identical in both engines), lower median by exact rank
-    "q_theilsen" ->
-      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c
-           FROM orders GROUP BY 1),
-         pairs AS (SELECT a.d AS da, date_diff('day', a.d, b.d) AS off,
-             (1000000 * (b.rev_c - a.rev_c)) // date_diff('day', a.d, b.d) AS slope_micro
-           FROM daily a JOIN daily b ON b.d > a.d AND b.d <= a.d + INTERVAL 365 DAY),
-         n AS (SELECT count(*) AS n_pairs FROM pairs)
-         SELECT slope_micro AS median_slope_micro, n_pairs
-         FROM (SELECT slope_micro, row_number() OVER (ORDER BY slope_micro, da, off) AS rn
-               FROM pairs), n
-         WHERE rn = (n_pairs + 1) // 2""",
-    // q_acf: exact decimal/HUGEINT sufficient statistics; r_micro via
-    // sign-split integral division (nonnegative operands truncate the
-    // same way in both engines)
-    "q_acf" ->
-      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c
-           FROM orders GROUP BY 1),
-         tot AS (SELECT CAST(sum(rev_c) AS BIGINT) AS tr, count(*) AS nd FROM daily),
-         mu AS (SELECT tr // nd AS mu_c, nd FROM tot),
-         dev AS (SELECT d, rev_c - mu_c AS dv, row_number() OVER (ORDER BY d) AS i
-           FROM daily, mu),
-         den AS (SELECT sum(CAST(dv AS HUGEINT) * dv) AS den FROM dev),
-         lags AS (SELECT CAST(unnest(range(1, 8)) AS INTEGER) AS lag_k),
-         pairs AS (SELECT l.lag_k, a.dv AS da, b.dv AS db
-           FROM lags l CROSS JOIN dev a JOIN dev b ON b.i = a.i + l.lag_k),
-         num AS (SELECT lag_k, sum(CAST(da AS HUGEINT) * db) AS num,
-           count(*) AS n_pairs FROM pairs GROUP BY 1)
-         SELECT lag_k, mu.nd AS n_days, n_pairs, mu.mu_c,
-           CAST(num AS VARCHAR) AS num, CAST(den.den AS VARCHAR) AS den,
-           CAST(CASE WHEN num < 0 THEN -1 WHEN num > 0 THEN 1 ELSE 0 END AS BIGINT) *
-             CAST((abs(num) * 1000000) // den.den AS BIGINT) AS r_micro
-         FROM num, den, mu""",
-    "stream_recovery" ->
-      """WITH r AS (SELECT user_id, event_id, event_type, CAST(round(value * 100) AS BIGINT) AS value_c, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn FROM events) SELECT user_id, event_id, event_type, value_c FROM r WHERE rn = 1""",
-    "stream_enrich" ->
-      """SELECT c_mktsegment, event_type, count(*) AS n_events, CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_c FROM events JOIN customer ON user_id = c_custkey GROUP BY 1, 2""",
-    "ev_sessions_typed" ->
-      """WITH g AS (SELECT user_id, ts, CASE WHEN lag(epoch_us(ts)) OVER w IS NULL OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)), s AS (SELECT user_id, ts, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts) AS sid FROM g) SELECT user_id, min(ts) AS session_start, count(*) AS n_events FROM s GROUP BY user_id, sid""",
-    "stream_sessions" ->
-      """WITH g AS (SELECT user_id, ts, value, CASE WHEN lag(epoch_us(ts)) OVER w IS NULL OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)), s AS (SELECT user_id, ts, value, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts) AS sid FROM g) SELECT user_id, min(ts) AS session_start, max(ts) + INTERVAL 30 MINUTE AS session_end, count(*) AS n_events, CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) AS value_c FROM s GROUP BY user_id, sid""",
-    "stream_join" ->
-      """SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id, v.ts AS view_ts, p.ts AS purchase_ts, CAST(round(p.value * 10000) AS BIGINT) AS value_c FROM events v JOIN events p ON v.event_type = 'view' AND p.event_type = 'purchase' AND p.user_id = v.user_id AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 1 HOUR""",
-    "q_asof" ->
-      """SELECT e.event_id, e.user_id, e.ts, e.event_type, p.value AS last_purchase_value FROM events e ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p ON e.user_id = p.user_id AND e.ts >= p.ts""",
-    // stream_asof: the carry state machine replayed as a strictly-
-    // preceding last-ignore-nulls window in the same (ts, event_id)
-    // per-user order (q_asof's ASOF JOIN is the at-or-before batch
-    // variant; the 1-PRECEDING frame is the streaming carry's order)
-    "stream_asof" ->
-      """WITH s AS (SELECT event_id, ts, user_id, event_type, CAST(round(value * 10000) AS BIGINT) AS value_c FROM events WHERE event_type IN ('view', 'purchase')), c AS (SELECT user_id, event_id, ts, event_type, last_value(CASE WHEN event_type = 'purchase' THEN event_id END IGNORE NULLS) OVER w AS src_id, last_value(CASE WHEN event_type = 'purchase' THEN value_c END IGNORE NULLS) OVER w AS src_value_c FROM s WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)) SELECT user_id, event_id AS view_id, ts AS view_ts, src_id, src_value_c FROM c WHERE event_type = 'view'""",
-    "q_range_join" ->
-      """WITH bands AS (SELECT event_type AS band_type, min(value) AS lo, (min(value) + max(value)) / 2 AS hi FROM events GROUP BY 1) SELECT e.event_id, e.event_type, e.value, b.band_type, b.lo, b.hi FROM events e JOIN bands b ON e.value >= b.lo AND e.value <= b.hi""",
-    "q_range_sql" ->
-      """WITH bands AS (SELECT event_type AS band_type, min(value) AS lo, (min(value) + max(value)) / 2 AS hi FROM events GROUP BY 1) SELECT e.event_id, e.event_type, e.value, b.band_type, b.lo, b.hi FROM events e JOIN bands b ON e.value >= b.lo AND e.value <= b.hi""",
-    "ev_sessions" ->
-      """WITH g AS (SELECT user_id, ts, value, CASE WHEN lag(epoch_us(ts)) OVER w IS NULL OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)), s AS (SELECT user_id, ts, value, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts) AS session_id FROM g) SELECT user_id, CAST(session_id AS BIGINT) AS session_id, count(*) AS n_events, min(ts) AS session_start, max(ts) AS session_end, CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) AS value_c FROM s GROUP BY 1, 2""",
-    "q_profile" ->
-      Seq("l_quantity", "l_extendedprice", "l_discount").map(c =>
-        s"""SELECT '$c' AS "column", count($c) AS n, CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null, count(DISTINCT $c) AS n_distinct, CAST(min($c) AS DOUBLE) AS min_v, CAST(max($c) AS DOUBLE) AS max_v FROM lineitem""")
-        .mkString(" UNION ALL "),
-    "q_salted_agg" ->
-      "SELECT l_returnflag, sum(l_quantity) AS sum_l_quantity, count(*) AS n FROM lineitem GROUP BY l_returnflag",
-    "mm_resize" ->
-      """SELECT doc_id AS media_id, 'png' AS format, CAST(8 AS INTEGER) AS width, CAST(6 AS INTEGER) AS height, CAST(48 * ((doc_id % 256) + (doc_id * 7 % 256) + (doc_id * 13 % 256)) AS BIGINT) AS content_sum FROM documents WHERE doc_id % 3 <> 1""",
-    "q_histogram" ->
-      """WITH mm AS (SELECT CAST(min(l_extendedprice) AS DOUBLE) AS mn, CAST(max(l_extendedprice) AS DOUBLE) AS mx FROM lineitem) SELECT CAST(least(floor((CAST(l_extendedprice AS DOUBLE) - mn) / ((mx - mn) / 20)), 19) AS BIGINT) AS bucket, count(*) AS n FROM lineitem, mm WHERE l_extendedprice IS NOT NULL GROUP BY 1""",
-    "ta_vocab" ->
-      """SELECT token, count(*) AS n FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS token FROM documents) GROUP BY token ORDER BY n DESC, token LIMIT 20""",
-    "ev_funnel" ->
-      """WITH t AS (SELECT user_id, epoch_us(ts) AS tus, event_type FROM events), w AS (SELECT user_id, event_type, tus, max(CASE WHEN event_type = 'view' THEN tus END) OVER (PARTITION BY user_id ORDER BY tus RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_view FROM t) SELECT user_id, CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_target, CAST(sum(CASE WHEN event_type = 'purchase' AND last_view IS NOT NULL AND tus - last_view <= 3600000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_converted FROM w GROUP BY user_id""",
-    "sim_quant" ->
-      """SELECT vec_id, amax, CASE WHEN amax = 0 THEN '' ELSE array_to_string(list_transform(dv, x -> CAST(CAST(floor(x / amax * 127 + 0.5) AS BIGINT) AS VARCHAR)), ',') END AS q8 FROM (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dv, list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS amax FROM embeddings)""",
-    "ta_c4_dedup" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), segs AS (SELECT doc_id, i AS seg_idx, array_to_string(t[(i*10+1):(i*10+10)], ' ') AS seg FROM (SELECT doc_id, t, unnest(range(CAST(ceil(len(t)/10.0) AS BIGINT))) AS i FROM toks)), ranked AS (SELECT doc_id, seg_idx, seg, row_number() OVER (PARTITION BY seg ORDER BY doc_id, seg_idx) AS rn FROM segs), kept AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_seg_kept, string_agg(seg, ' ' ORDER BY seg_idx) AS text_clean FROM ranked WHERE rn = 1 GROUP BY doc_id), tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_seg FROM segs GROUP BY doc_id) SELECT t.doc_id, t.n_seg, coalesce(k.n_seg_kept, 0) AS n_seg_kept, coalesce(k.text_clean, '') AS text_clean FROM tot t LEFT JOIN kept k USING (doc_id)""",
-    "ta_repetition" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), segs AS (SELECT doc_id, list_transform(range(CAST(ceil(len(t)/10.0) AS BIGINT)), i -> array_to_string(t[(i*10+1):(i*10+10)], ' ')) AS sl, CASE WHEN len(t) >= 2 THEN list_transform(range(len(t)-1), i -> array_to_string(t[(i+1):(i+2)], ' ')) ELSE [] END AS g2 FROM toks), gr AS (SELECT doc_id, unnest(g2) AS g FROM segs), top AS (SELECT doc_id, CAST(max(n) AS BIGINT) AS top_gram2_n FROM (SELECT doc_id, g, count(*) AS n FROM gr GROUP BY doc_id, g) GROUP BY doc_id) SELECT s.doc_id, CAST(len(sl) AS BIGINT) AS n_seg, CAST(len(list_distinct(sl)) AS BIGINT) AS n_seg_distinct, CAST(len(g2) AS BIGINT) AS n_gram2, coalesce(top.top_gram2_n, 0) AS top_gram2_n FROM segs s LEFT JOIN top USING (doc_id)""",
-    "ta_redact" ->
-      """WITH planted AS (SELECT doc_id, text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com or +' || lpad(CAST(doc_id % 900 + 100 AS VARCHAR), 3, '0') || '-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' at 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.1 now' AS t FROM documents) SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'), '\+?[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g'), '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g') AS clean, CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email, CAST(len(regexp_extract_all(t, '\+?[0-9]{3}-[0-9]{3}-[0-9]{4}')) AS BIGINT) AS n_phone, CAST(len(regexp_extract_all(t, '([0-9]{1,3}\.){3}[0-9]{1,3}')) AS BIGINT) AS n_ip FROM planted""",
-    "sim_pca" ->
-      """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv FROM embeddings), e AS (SELECT vec_id, i, qv[i + 1] AS v FROM q, (SELECT unnest(range(64)) AS i)), cross_s AS (SELECT a.i AS i, b.i AS j, CAST(sum(a.v * b.v) AS BIGINT) AS s FROM e a JOIN e b ON a.vec_id = b.vec_id AND a.i <= b.i GROUP BY 1, 2), lin AS (SELECT i, CAST(-1 AS BIGINT) AS j, CAST(sum(v) AS BIGINT) AS s FROM e GROUP BY 1), cnt AS (SELECT CAST(-1 AS BIGINT) AS i, CAST(-1 AS BIGINT) AS j, CAST(count(*) AS BIGINT) AS s FROM q) SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j, s FROM cross_s UNION ALL SELECT CAST(i AS BIGINT), j, s FROM lin UNION ALL SELECT i, j, s FROM cnt""",
-    "mm_resample" ->
-      """SELECT doc_id AS media_id, 'wav' AS format, CAST(8000 AS INTEGER) AS sample_rate, CAST((64 + doc_id % 64) * 8000 // (8000 + (doc_id % 5) * 2000) AS BIGINT) AS n_samples, CAST(((64 + doc_id % 64) * 8000 // (8000 + (doc_id % 5) * 2000)) * (doc_id % 2000 - 1000) AS BIGINT) AS content_sum FROM documents WHERE doc_id % 3 = 1""",
-    "ev_interp" ->
-      """WITH ev AS (SELECT user_id, ts, value, event_id FROM events), b AS (SELECT user_id, date_trunc('hour', min(ts)) AS t0, date_trunc('hour', max(ts)) AS t1 FROM ev GROUP BY 1), grid AS (SELECT user_id, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS t FROM b), u AS (SELECT user_id, t, 1 AS tag, CAST(NULL AS DOUBLE) AS v, CAST(NULL AS TIMESTAMP) AS et, CAST(NULL AS BIGINT) AS event_id FROM grid UNION ALL SELECT user_id, ts, 0, value, ts, event_id FROM ev), w1 AS (SELECT *, last_value(et IGNORE NULLS) OVER wa AS pt, last_value(v IGNORE NULLS) OVER wa AS pv FROM u WINDOW wa AS (PARTITION BY user_id ORDER BY t ASC, tag ASC, event_id ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), w2 AS (SELECT *, last_value(et IGNORE NULLS) OVER wd AS nt, last_value(v IGNORE NULLS) OVER wd AS nv FROM w1 WINDOW wd AS (PARTITION BY user_id ORDER BY t DESC, tag ASC, event_id DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) SELECT user_id, t AS grid_ts, CAST(round((CASE WHEN pt IS NULL OR nt IS NULL THEN NULL WHEN pt = nt THEN pv ELSE pv + (nv - pv) * ((epoch_us(t) - epoch_us(pt)) / (epoch_us(nt) - epoch_us(pt))) END) * 10000) AS BIGINT) AS v_micro FROM w2 WHERE tag = 1""",
-    "q_dq" ->
-      """SELECT 'pk_unique_lineitem' AS "check", CAST(count(*) - count(DISTINCT (l_orderkey, l_linenumber)) AS BIGINT) AS n_violations, count(*) AS n_total, count(*) = count(DISTINCT (l_orderkey, l_linenumber)) AS pass FROM lineitem UNION ALL SELECT 'fk_lineitem_orders', CAST((SELECT count(*) FROM lineitem WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)) AS BIGINT), (SELECT count(*) FROM lineitem), (SELECT count(*) FROM lineitem WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)) = 0 UNION ALL SELECT 'notnull_shipdate', CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT), count(*), sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) = 0 FROM lineitem UNION ALL SELECT 'range_quantity_1_50', CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) AS BIGINT), count(*), sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) = 0 FROM lineitem UNION ALL SELECT 'positive_totalprice', CAST(sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) AS BIGINT), count(*), sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) = 0 FROM orders""",
-    "q_triangles" ->
-      """WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem), e AS (SELECT DISTINCT a.p AS u, b.p AS v FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p), deg AS (SELECT id, CAST(count(*) AS BIGINT) AS deg FROM (SELECT u AS id FROM e UNION ALL SELECT v FROM e) GROUP BY 1), tri AS (SELECT a.u AS x, a.v AS y, b.v AS z FROM e a JOIN e b ON b.u = a.u AND a.v < b.v JOIN e c ON c.u = a.v AND c.v = b.v), pv AS (SELECT id, CAST(count(*) AS BIGINT) AS tri_cnt FROM (SELECT x AS id FROM tri UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri) GROUP BY 1) SELECT deg.id AS part_id, deg.deg, coalesce(pv.tri_cnt, 0) AS tri_cnt FROM deg LEFT JOIN pv USING (id)""",
-    "q_pagerank" ->
-      """WITH pairs AS (SELECT DISTINCT o_custkey AS c, l_suppkey + 10000000 AS s FROM lineitem JOIN orders ON l_orderkey = o_orderkey), e AS (SELECT c AS src, s AS dst FROM pairs UNION SELECT s, c FROM pairs), nodes AS (SELECT DISTINCT src AS id FROM e UNION SELECT DISTINCT dst FROM e), deg AS (SELECT src AS id, count(*) AS d FROM e GROUP BY 1), r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes), i1 AS (SELECT e.dst AS id, sum(r0.r // deg.d) AS sc FROM e JOIN r0 ON e.src = r0.id JOIN deg ON deg.id = e.src GROUP BY 1), r1 AS (SELECT n.id, CAST(150000 + (850 * coalesce(i1.sc, 0)) // 1000 AS BIGINT) AS r FROM nodes n LEFT JOIN i1 USING (id)), i2 AS (SELECT e.dst AS id, sum(r1.r // deg.d) AS sc FROM e JOIN r1 ON e.src = r1.id JOIN deg ON deg.id = e.src GROUP BY 1), r2 AS (SELECT n.id, CAST(150000 + (850 * coalesce(i2.sc, 0)) // 1000 AS BIGINT) AS r FROM nodes n LEFT JOIN i2 USING (id)), i3 AS (SELECT e.dst AS id, sum(r2.r // deg.d) AS sc FROM e JOIN r2 ON e.src = r2.id JOIN deg ON deg.id = e.src GROUP BY 1), r3 AS (SELECT n.id, CAST(150000 + (850 * coalesce(i3.sc, 0)) // 1000 AS BIGINT) AS r FROM nodes n LEFT JOIN i3 USING (id)) SELECT id, r AS rank_micro FROM r3""",
-    // g_hits: 2 max-normalized HITS iterations unrolled — every sum/max
-    // is an order-free integer aggregate, so the replay is bit-exact;
-    // the ·1e6 renorm products run in HUGEINT like the engine's DECIMAL.
-    "g_hits" ->
-      """WITH e AS (SELECT DISTINCT o_custkey AS src, l_suppkey + 10000000 AS dst FROM lineitem JOIN orders ON l_orderkey = o_orderkey), nodes AS (SELECT DISTINCT src AS id FROM e UNION SELECT DISTINCT dst FROM e), h0 AS (SELECT id, CAST(1000000 AS BIGINT) AS h FROM nodes), ar1 AS (SELECT e.dst AS id, sum(h0.h) AS raw FROM e JOIN h0 ON e.src = h0.id GROUP BY 1), am1 AS (SELECT max(raw) AS mx FROM ar1), a1 AS (SELECT n.id, CAST(CAST(coalesce(ar1.raw, 0) AS HUGEINT) * 1000000 // am1.mx AS BIGINT) AS a FROM nodes n LEFT JOIN ar1 USING (id) CROSS JOIN am1), hr1 AS (SELECT e.src AS id, sum(a1.a) AS raw FROM e JOIN a1 ON e.dst = a1.id GROUP BY 1), hm1 AS (SELECT max(raw) AS mx FROM hr1), h1 AS (SELECT n.id, CAST(CAST(coalesce(hr1.raw, 0) AS HUGEINT) * 1000000 // hm1.mx AS BIGINT) AS h FROM nodes n LEFT JOIN hr1 USING (id) CROSS JOIN hm1), ar2 AS (SELECT e.dst AS id, sum(h1.h) AS raw FROM e JOIN h1 ON e.src = h1.id GROUP BY 1), am2 AS (SELECT max(raw) AS mx FROM ar2), a2 AS (SELECT n.id, CAST(CAST(coalesce(ar2.raw, 0) AS HUGEINT) * 1000000 // am2.mx AS BIGINT) AS a FROM nodes n LEFT JOIN ar2 USING (id) CROSS JOIN am2), hr2 AS (SELECT e.src AS id, sum(a2.a) AS raw FROM e JOIN a2 ON e.dst = a2.id GROUP BY 1), hm2 AS (SELECT max(raw) AS mx FROM hr2), h2 AS (SELECT n.id, CAST(CAST(coalesce(hr2.raw, 0) AS HUGEINT) * 1000000 // hm2.mx AS BIGINT) AS h FROM nodes n LEFT JOIN hr2 USING (id) CROSS JOIN hm2) SELECT h2.id, h2.h AS hub_micro, a2.a AS auth_micro FROM h2 JOIN a2 USING (id)""",
-    "ev_variant" ->
-      """SELECT CAST(props->>'$.k' AS BIGINT) AS k, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1""",
-    "ev_trailing_1h" ->
-      """SELECT event_id, user_id, v_c, CAST(sum(v_c) OVER w AS BIGINT) AS trail_sum, CAST(count(*) OVER w AS BIGINT) AS trail_n FROM (SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS es, CAST(round(value * 100) AS BIGINT) AS v_c FROM events) WINDOW w AS (PARTITION BY user_id ORDER BY es RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)""",
-    "ev_cohorts" ->
-      """WITH f AS (SELECT user_id, min(ts) AS first_ts FROM events GROUP BY 1) SELECT CAST(date_trunc('week', f.first_ts) AS DATE) AS cohort_week, CAST(datediff('day', CAST(date_trunc('week', f.first_ts) AS DATE), CAST(e.ts AS DATE)) // 7 AS BIGINT) AS week_offset, CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users FROM events e JOIN f USING (user_id) GROUP BY 1, 2""",
-    "ev_attribution" ->
-      """SELECT event_id AS purchase_id, user_id, last_click FROM (SELECT event_id, user_id, event_type, last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_click FROM events) WHERE event_type = 'purchase'""",
-    "ev_anomaly" ->
-      """WITH v AS (SELECT event_id, user_id, ts, CAST(round(value * 100) AS BIGINT) AS v_c FROM events), w AS (SELECT event_id, user_id, v_c, CAST(count(v_c) OVER win AS BIGINT) AS n_prev, CAST(coalesce(sum(v_c) OVER win, 0) AS BIGINT) AS s_prev, CAST(coalesce(sum(v_c * v_c) OVER win, 0) AS BIGINT) AS ss_prev FROM v WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)) SELECT event_id, user_id, v_c, n_prev, s_prev, (n_prev >= 5 AND (n_prev * v_c - s_prev) * (n_prev * v_c - s_prev) > 9 * (n_prev * ss_prev - s_prev * s_prev)) AS is_anomaly FROM w""",
-    "q_regex" ->
-      """SELECT p_partkey, regexp_extract(p_name, '^([a-z]+) ([a-z]+)', 2) AS second_word, regexp_matches(p_name, '^[a-z]+ [a-z]+$') AS two_words, CAST(len(regexp_extract_all(p_name, '[aeiou]')) AS BIGINT) AS n_vowels FROM part""",
-    "q_pivot_multi" ->
-      """SELECT l_returnflag, sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END) AS O_qty, CAST(count(CASE WHEN l_linestatus = 'O' THEN 1 END) AS BIGINT) AS O_n, sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END) AS F_qty, CAST(count(CASE WHEN l_linestatus = 'F' THEN 1 END) AS BIGINT) AS F_n FROM lineitem GROUP BY 1""",
-    "q_lift" ->
-      """WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem), n AS (SELECT CAST(count(DISTINCT o) AS BIGINT) AS n_orders FROM lp), pairs AS (SELECT a.p AS p_a, b.p AS p_b, CAST(count(*) AS BIGINT) AS c_ab FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2), sup AS (SELECT p AS pk, CAST(count(*) AS BIGINT) AS c FROM lp GROUP BY 1) SELECT pr.p_a, pr.p_b, pr.c_ab, CAST(round(ln(CAST(pr.c_ab * n.n_orders AS DOUBLE) / CAST(sa.c * sb.c AS DOUBLE)) * 1000000) AS BIGINT) AS lift_micro FROM pairs pr JOIN sup sa ON sa.pk = pr.p_a JOIN sup sb ON sb.pk = pr.p_b CROSS JOIN n WHERE pr.c_ab >= 3 AND pr.c_ab * n.n_orders > sa.c * sb.c ORDER BY lift_micro DESC, p_a, p_b LIMIT 50""",
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty, CAST(count(*) AS BIGINT) AS n FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
-    "q_ntile" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag, CAST(ntile(4) OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS INTEGER) AS quartile FROM lineitem""",
-    "q_bfs" ->
-      """WITH pairs AS (SELECT DISTINCT o_custkey AS c, l_suppkey + 10000000 AS p FROM lineitem JOIN orders ON l_orderkey = o_orderkey), e AS (SELECT c AS src, p AS dst FROM pairs UNION SELECT p, c FROM pairs), s0 AS (SELECT c_custkey AS id FROM customer WHERE c_custkey < 5), d1 AS (SELECT DISTINCT dst AS id FROM e WHERE src IN (SELECT id FROM s0)), d2 AS (SELECT DISTINCT dst AS id FROM e WHERE src IN (SELECT id FROM d1)), d3 AS (SELECT DISTINCT dst AS id FROM e WHERE src IN (SELECT id FROM d2)), u AS (SELECT id, 0 AS dist FROM s0 UNION ALL SELECT id, 1 FROM d1 UNION ALL SELECT id, 2 FROM d2 UNION ALL SELECT id, 3 FROM d3) SELECT id, CAST(min(dist) AS BIGINT) AS dist FROM u GROUP BY 1""",
-    "q_mad" ->
-      """WITH v AS (SELECT l_orderkey, l_linenumber, l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c FROM lineitem), h1 AS (SELECT l_returnflag, price_c, CAST(count(*) AS BIGINT) AS c FROM v GROUP BY 1, 2), c1 AS (SELECT *, sum(c) OVER (PARTITION BY l_returnflag ORDER BY price_c ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum, sum(c) OVER (PARTITION BY l_returnflag) AS n FROM h1), med AS (SELECT l_returnflag, min(CASE WHEN cum >= greatest(1, CAST(ceil(CAST(0.5 AS DOUBLE) * n) AS BIGINT)) THEN price_c END) AS med FROM c1 GROUP BY 1), d AS (SELECT v.*, med.med, abs(price_c - med) AS dev FROM v JOIN med USING (l_returnflag)), h2 AS (SELECT l_returnflag, dev, CAST(count(*) AS BIGINT) AS c FROM d GROUP BY 1, 2), c2 AS (SELECT *, sum(c) OVER (PARTITION BY l_returnflag ORDER BY dev ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum, sum(c) OVER (PARTITION BY l_returnflag) AS n FROM h2), mad AS (SELECT l_returnflag, min(CASE WHEN cum >= greatest(1, CAST(ceil(CAST(0.5 AS DOUBLE) * n) AS BIGINT)) THEN dev END) AS mad FROM c2 GROUP BY 1) SELECT d.l_orderkey, d.l_linenumber, d.l_returnflag, d.price_c, d.med, mad.mad, d.dev > 3 * mad.mad AS is_outlier FROM d JOIN mad USING (l_returnflag)""",
-    "q_bins" ->
-      """WITH v AS (SELECT l_orderkey, l_linenumber, l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c FROM lineitem), h AS (SELECT l_returnflag, price_c, CAST(count(*) AS BIGINT) AS c FROM v GROUP BY 1, 2), b AS (SELECT l_returnflag, price_c, CAST(10 * coalesce(sum(c) OVER (PARTITION BY l_returnflag ORDER BY price_c ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) // CAST(sum(c) OVER (PARTITION BY l_returnflag) AS BIGINT) AS bin FROM h) SELECT v.l_orderkey, v.l_linenumber, v.l_returnflag, v.price_c, b.bin FROM v JOIN b USING (l_returnflag, price_c)""",
-    "q_winsor" ->
-      """WITH v AS (SELECT l_orderkey, l_linenumber, l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c FROM lineitem), r AS (SELECT *, row_number() OVER (PARTITION BY l_returnflag ORDER BY price_c, l_orderkey, l_linenumber) AS rn, count(*) OVER (PARTITION BY l_returnflag) AS n FROM v), b AS (SELECT l_returnflag, min(CASE WHEN rn = greatest(1, CAST(ceil(CAST(0.05 AS DOUBLE) * n) AS BIGINT)) THEN price_c END) AS lo, min(CASE WHEN rn = greatest(1, CAST(ceil(CAST(0.95 AS DOUBLE) * n) AS BIGINT)) THEN price_c END) AS hi FROM r GROUP BY 1) SELECT r.l_orderkey, r.l_linenumber, r.l_returnflag, r.price_c, b.lo, b.hi, least(greatest(r.price_c, b.lo), b.hi) AS price_c_w, (r.price_c < b.lo OR r.price_c > b.hi) AS is_outlier FROM r JOIN b USING (l_returnflag)""",
-    "ta_pmi" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), bg AS (SELECT t[i+1] AS w1, t[i+2] AS w2 FROM (SELECT t, unnest(range(len(t)-1)) AS i FROM toks WHERE len(t) >= 2)), c12 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12 FROM bg GROUP BY 1, 2), c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM bg GROUP BY 1), c2 AS (SELECT w2, CAST(count(*) AS BIGINT) AS c2 FROM bg GROUP BY 1), n AS (SELECT CAST(count(*) AS BIGINT) AS nb FROM bg) SELECT w1, w2, c12, CAST(round(ln(CAST(c12 * nb AS DOUBLE) / CAST(c1 * c2 AS DOUBLE)) * 1000000) AS BIGINT) AS pmi_micro FROM c12 JOIN c1 USING (w1) JOIN c2 USING (w2) CROSS JOIN n WHERE c12 >= 5 AND c12 * nb > c1 * c2 ORDER BY pmi_micro DESC, w1, w2 LIMIT 50""",
-    "ta_markup" ->
-      """WITH h AS (SELECT doc_id, '<html><head><style>p { color: red; }</style></head><body><h1>Doc ' || CAST(doc_id AS VARCHAR) || '</h1>' || chr(10) || '<p class="body">' || text || ' &amp; more &lt;soon&gt;</p>' || chr(10) || '<script>var x = 1 && 2;</script></body></html>' AS html FROM documents), s AS (SELECT doc_id, regexp_replace(regexp_replace(html, '(?s)<(script|style)[^>]*>.*?</(script|style)>', ' ', 'g'), '<[^>]+>', ' ', 'g') AS t FROM h), d AS (SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(t, '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g'), '&#39;', CHR(39), 'g'), '&nbsp;', ' ', 'g'), '&amp;', '&', 'g') AS t FROM s) SELECT doc_id, trim(regexp_replace(t, '\s+', ' ', 'g')) AS clean_text FROM d""",
-    "q_moments" ->
-      """SELECT l_returnflag, count(*) AS n, CAST(CAST(sum(x) AS DECIMAL(38,0)) AS VARCHAR) AS sx, CAST(CAST(sum(y) AS DECIMAL(38,0)) AS VARCHAR) AS sy, CAST(CAST(sum(x * x) AS DECIMAL(38,0)) AS VARCHAR) AS sxx, CAST(CAST(sum(y * y) AS DECIMAL(38,0)) AS VARCHAR) AS syy, CAST(CAST(sum(x * y) AS DECIMAL(38,0)) AS VARCHAR) AS sxy FROM (SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS DECIMAL(18,0)) AS x, CAST(round(l_discount * 100) AS DECIMAL(18,0)) AS y FROM lineitem) GROUP BY l_returnflag""",
-    "q_moving" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate, l_quantity, sum(l_quantity) OVER w AS mov_qty, count(*) OVER w AS mov_n FROM lineitem WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)""",
-    "ta_chunks" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), c AS (SELECT doc_id, t, unnest(range((len(t) + 39) // 40)) AS i FROM toks WHERE len(t) > 0) SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx, CAST(len(t[(i*40+1):(i*40+50)]) AS BIGINT) AS n_chunk_tokens, array_to_string(t[(i*40+1):(i*40+50)], ' ') AS chunk_text FROM c""",
-    "q_cdc" ->
-      """WITH log AS (SELECT o_orderkey AS k, o_totalprice AS p, 0 AS seq, 'B' AS op FROM orders UNION ALL SELECT o_orderkey, o_totalprice * 1.1, 1, 'U' FROM orders WHERE o_orderkey % 5 = 0 UNION ALL SELECT o_orderkey + 30000000, o_totalprice, 1, 'I' FROM orders WHERE o_orderkey % 11 = 0 UNION ALL SELECT o_orderkey, 0.0, 2, 'D' FROM orders WHERE o_orderkey % 7 = 0), r AS (SELECT k, p, op, row_number() OVER (PARTITION BY k ORDER BY seq DESC) AS rn FROM log) SELECT k AS o_orderkey, CAST(round(p * 100) AS BIGINT) AS price_c, op AS last_op FROM r WHERE rn = 1 AND op <> 'D'""",
-    "q_fuzzy_join" ->
-      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b, a.c_name AS str_a, b.c_name AS str_b, CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey AND levenshtein(a.c_name, b.c_name) <= 1""",
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty, count(*) AS n FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""",
-    "ta_perplexity" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), train AS (SELECT doc_id, t FROM toks WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '80000000'), tbg AS (SELECT t[i+1] AS w1, t[i+2] AS w2 FROM (SELECT t, unnest(range(len(t)-1)) AS i FROM train WHERE len(t) >= 2)), c12 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12 FROM tbg GROUP BY 1, 2), c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM tbg GROUP BY 1), v AS (SELECT greatest(CAST(count(DISTINCT x) AS DOUBLE), 1) AS vsz FROM (SELECT unnest(t) AS x FROM train)), dbg AS (SELECT doc_id, t[i+1] AS w1, t[i+2] AS w2 FROM (SELECT doc_id, t, unnest(range(len(t)-1)) AS i FROM toks WHERE len(t) >= 2)), terms AS (SELECT doc_id, CAST(round(-ln((coalesce(c12.c12, 0) + 0.5) / (coalesce(c1.c1, 0) + 0.5 * v.vsz)) * 1000000) AS BIGINT) AS m FROM dbg LEFT JOIN c12 USING (w1, w2) LEFT JOIN c1 USING (w1) CROSS JOIN v), agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, CAST(sum(m) AS BIGINT) AS nll_micro FROM terms GROUP BY 1) SELECT d.doc_id, coalesce(a.n_bigrams, 0) AS n_bigrams, coalesce(a.nll_micro, 0) AS nll_micro FROM documents d LEFT JOIN agg a USING (doc_id)""",
-    "dd_jaccard_join" ->
-      """WITH t AS (SELECT doc_id AS id, list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS toks FROM documents), s AS (SELECT id, toks, CAST(len(toks) AS BIGINT) AS n FROM t WHERE len(toks) > 0), p AS (SELECT a.id AS id_a, b.id AS id_b, a.n AS n_a, b.n AS n_b, CAST(len(list_intersect(a.toks, b.toks)) AS BIGINT) AS inter FROM s a JOIN s b ON a.id < b.id) SELECT id_a, id_b, n_a, n_b, inter, n_a + n_b - inter AS uni, CAST(inter AS DOUBLE) / CAST(n_a + n_b - inter AS DOUBLE) AS jaccard FROM p WHERE n_a + n_b - inter > 0 AND CAST(inter AS DOUBLE) / CAST(n_a + n_b - inter AS DOUBLE) >= 0.9""",
-    "srch_bm25" -> bm25OracleSql,
-    // srch_persisted: the index probe shares bm25TopK's exact scoring
-    // expression tree, so the scan-path oracle checks the persisted loop
-    "srch_persisted" -> bm25OracleSql,
-    // srch_mmr: the same BM25 pool truncated to 20, integer Jaccard
-    // sims, and the greedy λ=0.7 selection unrolled as five argmax CTEs
-    "srch_mmr" -> s"""WITH dtoks AS (SELECT doc_id, list_distinct(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS ts FROM documents),
-         pool AS (SELECT p.doc_id, p.score_bp, t.ts FROM (SELECT doc_id, score_bp FROM ($bm25OracleSql) ORDER BY score_bp DESC, doc_id LIMIT 20) p JOIN dtoks t USING (doc_id)),
-         rel AS (SELECT doc_id, score_bp, (score_bp * 1000000) // greatest((SELECT max(score_bp) FROM pool), 1) AS reln FROM pool),
-         sims AS (SELECT a.doc_id AS i, b.doc_id AS j, (CAST(len(list_intersect(a.ts, b.ts)) AS BIGINT) * 1000000) // greatest(len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts)), 1) AS jac FROM pool a JOIN pool b ON a.doc_id <> b.doc_id),
-         s1 AS (SELECT doc_id, score_bp, reln, CAST(0 AS BIGINT) AS maxsim, 7 * reln AS mmr FROM rel ORDER BY reln DESC, doc_id LIMIT 1),
-         c2 AS (SELECT r.doc_id, r.score_bp, r.reln, max(s.jac) AS ms FROM rel r JOIN sims s ON s.i = r.doc_id AND s.j IN (SELECT doc_id FROM s1) WHERE r.doc_id NOT IN (SELECT doc_id FROM s1) GROUP BY 1, 2, 3),
-         s2 AS (SELECT doc_id, score_bp, reln, ms AS maxsim, 7 * reln - 3 * ms AS mmr FROM c2 ORDER BY mmr DESC, doc_id LIMIT 1),
-         sel2 AS (SELECT doc_id FROM s1 UNION ALL SELECT doc_id FROM s2),
-         c3 AS (SELECT r.doc_id, r.score_bp, r.reln, max(s.jac) AS ms FROM rel r JOIN sims s ON s.i = r.doc_id AND s.j IN (SELECT doc_id FROM sel2) WHERE r.doc_id NOT IN (SELECT doc_id FROM sel2) GROUP BY 1, 2, 3),
-         s3 AS (SELECT doc_id, score_bp, reln, ms AS maxsim, 7 * reln - 3 * ms AS mmr FROM c3 ORDER BY mmr DESC, doc_id LIMIT 1),
-         sel3 AS (SELECT doc_id FROM sel2 UNION ALL SELECT doc_id FROM s3),
-         c4 AS (SELECT r.doc_id, r.score_bp, r.reln, max(s.jac) AS ms FROM rel r JOIN sims s ON s.i = r.doc_id AND s.j IN (SELECT doc_id FROM sel3) WHERE r.doc_id NOT IN (SELECT doc_id FROM sel3) GROUP BY 1, 2, 3),
-         s4 AS (SELECT doc_id, score_bp, reln, ms AS maxsim, 7 * reln - 3 * ms AS mmr FROM c4 ORDER BY mmr DESC, doc_id LIMIT 1),
-         sel4 AS (SELECT doc_id FROM sel3 UNION ALL SELECT doc_id FROM s4),
-         c5 AS (SELECT r.doc_id, r.score_bp, r.reln, max(s.jac) AS ms FROM rel r JOIN sims s ON s.i = r.doc_id AND s.j IN (SELECT doc_id FROM sel4) WHERE r.doc_id NOT IN (SELECT doc_id FROM sel4) GROUP BY 1, 2, 3),
-         s5 AS (SELECT doc_id, score_bp, reln, ms AS maxsim, 7 * reln - 3 * ms AS mmr FROM c5 ORDER BY mmr DESC, doc_id LIMIT 1)
-         SELECT CAST(rank AS BIGINT) AS rank, doc_id, score_bp, CAST(reln AS BIGINT) AS rel_norm_micro, CAST(maxsim AS BIGINT) AS maxsim_micro, CAST(mmr AS BIGINT) AS mmr_score FROM (
-           SELECT 1 AS rank, * FROM s1 UNION ALL SELECT 2, * FROM s2 UNION ALL SELECT 3, * FROM s3 UNION ALL SELECT 4, * FROM s4 UNION ALL SELECT 5, * FROM s5)""",
-    "ev_scd2" ->
-      """WITH m AS (SELECT user_id, event_type, ts, event_id, lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events), c AS (SELECT user_id, event_type, ts AS valid_from, event_id FROM m WHERE prev IS NULL OR event_type <> prev), v AS (SELECT user_id, event_type, valid_from, lead(valid_from) OVER (PARTITION BY user_id ORDER BY valid_from, event_id) AS valid_to, row_number() OVER (PARTITION BY user_id ORDER BY valid_from, event_id) AS version FROM c) SELECT user_id, event_type, valid_from, valid_to, valid_to IS NULL AS is_current, CAST(version AS BIGINT) AS version FROM v""",
-    "ta_decontam" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), grams AS (SELECT doc_id, unnest(CASE WHEN len(t) >= 8 THEN list_transform(range(len(t)-7), i -> array_to_string(t[(i+1):(i+8)], ' ')) ELSE [] END) AS g FROM toks), bench AS (SELECT DISTINCT g FROM grams WHERE doc_id IN (SELECT doc_id FROM documents WHERE substr(md5(CAST(doc_id AS VARCHAR)),1,8) < '0ccccccd')), hits AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits FROM grams WHERE g IN (SELECT g FROM bench) GROUP BY doc_id) SELECT d.doc_id, coalesce(h.n_hits, 0) AS n_hits, coalesce(h.n_hits, 0) > 0 AS contaminated FROM documents d LEFT JOIN hits h USING (doc_id)""",
-    "sk_hll" -> hllOracleSql,
-    "sk_cms" -> cmsOracleSql,
-    // stream_cms: elementwise-sum merge makes streamed ≡ batch — same oracle
-    "stream_cms" -> cmsOracleSql,
-    "q_ols" -> olsOracleSql,
-    // q_influence: identical integer rationals through HUGEINT; top-5
-    // via the same (|e_micro| desc, okey·8+line) ordering
-    "q_influence" ->
-      """WITH st AS (SELECT l_returnflag AS flag, count(*)::HUGEINT AS n,
-             sum(CAST(l_quantity AS BIGINT))::HUGEINT AS sx,
-             sum(CAST(round(l_extendedprice * 100) AS BIGINT))::HUGEINT AS sy,
-             sum(CAST(l_quantity AS BIGINT)::HUGEINT * CAST(l_quantity AS BIGINT)) AS sxx,
-             sum(CAST(l_quantity AS BIGINT)::HUGEINT * CAST(round(l_extendedprice * 100) AS BIGINT)) AS sxy
-           FROM lineitem GROUP BY 1),
-         r AS (SELECT l.l_returnflag AS flag, l.l_orderkey, CAST(l.l_linenumber AS BIGINT) AS l_linenumber,
-             CAST(l.l_quantity AS BIGINT) AS x, CAST(round(l.l_extendedprice * 100) AS BIGINT) AS y_c,
-             s.n, s.sx, s.sy, s.sxx, s.sxy, greatest(s.n * s.sxx - s.sx * s.sx, 1::HUGEINT) AS d
-           FROM lineitem l JOIN st s ON l.l_returnflag = s.flag),
-         e AS (SELECT *, y_c::HUGEINT * d - (sy * sxx - sx * sxy) - (n * sxy - sx * sy) * x AS e_num,
-             d + (n * x - sx) * (n * x - sx) AS h_num FROM r),
-         m AS (SELECT flag, l_orderkey, l_linenumber, x, y_c,
-             CAST(CASE WHEN e_num >= 0 THEN (e_num * 1000000) // d
-                  ELSE -((-e_num * 1000000) // d) END AS BIGINT) AS e_micro,
-             CAST((h_num * 1000000) // (n * d) AS BIGINT) AS h_micro FROM e),
-         k AS (SELECT *, row_number() OVER (PARTITION BY flag
-             ORDER BY abs(e_micro) DESC, l_orderkey * 8 + l_linenumber) AS rank FROM m)
-         SELECT flag, CAST(rank AS BIGINT) AS rank, l_orderkey, l_linenumber, x, y_c, e_micro, h_micro
-         FROM k WHERE rank <= 5""",
-    // stream_hll: order-free max-merge ⇒ streamed registers equal batch
-    "stream_hll" -> hllOracleSql,
-    "srch_invindex" ->
-      """WITH toks AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS tok FROM documents), tf AS (SELECT tok, doc_id, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2) SELECT tok, CAST(count(*) AS BIGINT) AS df, CAST(sum(tf) AS BIGINT) AS cf, array_to_string(list(CAST(doc_id AS VARCHAR) || ':' || CAST(tf AS VARCHAR) ORDER BY doc_id), ',') AS postings FROM tf GROUP BY tok""",
-    "q_nth" ->
-      """SELECT o_orderkey, o_orderpriority, CAST(round(first_value(v IGNORE NULLS) OVER w * 100) AS BIGINT) AS first_c, CAST(round(last_value(v IGNORE NULLS) OVER w * 100) AS BIGINT) AS last_c, CAST(round(nth_value(v, 3 IGNORE NULLS) OVER w * 100) AS BIGINT) AS third_c FROM (SELECT o_orderkey, o_orderpriority, o_totalprice, CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_totalprice END AS v FROM orders) WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""",
-    "sk_hll_union" -> hllUnionOracleSql,
-    "q_ratio" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag, rev_c, CAST(sum(rev_c) OVER w AS BIGINT) AS flag_rev_c, CAST(rev_c AS DOUBLE) / CAST(CAST(sum(rev_c) OVER w AS BIGINT) AS DOUBLE) AS rev_share FROM (SELECT l_orderkey, l_linenumber, l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS rev_c FROM lineitem) WINDOW w AS (PARTITION BY l_returnflag)""",
-    "ev_rfm" ->
-      """WITH mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS mxd FROM orders), per AS (SELECT o_custkey, max(CAST(o_orderdate AS DATE)) AS last_d, CAST(count(*) AS BIGINT) AS frequency, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS monetary_c FROM orders GROUP BY 1), r AS (SELECT o_custkey, CAST(date_diff('day', last_d, (SELECT mxd FROM mx)) AS BIGINT) AS recency_d, frequency, monetary_c FROM per) SELECT o_custkey, recency_d, frequency, monetary_c, CAST(ntile(5) OVER (ORDER BY recency_d ASC, o_custkey ASC) AS BIGINT) AS r_score, CAST(ntile(5) OVER (ORDER BY frequency DESC, o_custkey ASC) AS BIGINT) AS f_score, CAST(ntile(5) OVER (ORDER BY monetary_c DESC, o_custkey ASC) AS BIGINT) AS m_score FROM r""",
-    "q_mv_delta" ->
-      """SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS spend_c FROM orders GROUP BY 1""",
-    "q_except" ->
-      """SELECT k, 'except_all' AS op FROM (SELECT o_custkey AS k FROM orders EXCEPT ALL SELECT o_custkey FROM orders WHERE o_orderstatus = 'F') UNION ALL SELECT k, 'intersect_all' AS op FROM (SELECT o_custkey AS k FROM orders INTERSECT ALL SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')""",
-    // mask: both engines MD5 the identical "mask:<key>" UTF-8 string, so
-    // the 16-hex-char surrogate tokens agree byte-for-byte and the
-    // masked FK join is replayed exactly
-    "q_mask" ->
-      """WITH cust AS (SELECT substr(md5('mask:' || CAST(c_custkey AS VARCHAR)), 1, 16) AS cust_token, c_mktsegment FROM customer), ord AS (SELECT substr(md5('mask:' || CAST(o_custkey AS VARCHAR)), 1, 16) AS cust_token, CAST(round(o_totalprice * 100) AS BIGINT) AS price_c FROM orders) SELECT cust_token, c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders, CAST(sum(price_c) AS BIGINT) AS spend_c FROM cust JOIN ord USING (cust_token) GROUP BY 1, 2""",
-    "q_forget" ->
-      """WITH subj AS (SELECT c_custkey FROM customer WHERE c_custkey % 97 = 0), co AS (SELECT CAST(count(*) AS BIGINT) AS total, CAST(count(*) FILTER (WHERE c_custkey % 97 = 0) AS BIGINT) AS del FROM customer), oo AS (SELECT CAST(count(*) AS BIGINT) AS total, CAST(count(*) FILTER (WHERE o_custkey IN (SELECT c_custkey FROM subj)) AS BIGINT) AS del FROM orders), delord AS (SELECT o_orderkey FROM orders WHERE o_custkey IN (SELECT c_custkey FROM subj)), ll AS (SELECT CAST(count(*) AS BIGINT) AS total, CAST(count(*) FILTER (WHERE l_orderkey IN (SELECT o_orderkey FROM delord)) AS BIGINT) AS del FROM lineitem) SELECT 'customer' AS tbl, del AS rows_to_delete, total - del AS rows_retained FROM co UNION ALL SELECT 'orders', del, total - del FROM oo UNION ALL SELECT 'lineitem', del, total - del FROM ll""",
-    "q_joinsize" ->
-      """WITH a AS (SELECT o_orderkey AS k, CAST(count(*) AS BIGINT) AS n_a FROM orders GROUP BY 1), b AS (SELECT l_orderkey AS k, CAST(count(*) AS BIGINT) AS n_b FROM lineitem GROUP BY 1), c AS (SELECT k, n_a, n_b, n_a * n_b AS contrib FROM a JOIN b USING (k)), t AS (SELECT CAST(sum(contrib) AS BIGINT) AS join_rows FROM c) SELECT k, n_a, n_b, contrib, join_rows FROM (SELECT * FROM c ORDER BY contrib DESC, k ASC LIMIT 10), t""",
-    // ev_transitions: p is ONE IEEE division of the same two exact longs
-    // on both engines — bit-identical
-    "ev_transitions" ->
-      """WITH pr AS (SELECT user_id, event_type AS from_type, lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type FROM events), f AS (SELECT from_type, to_type FROM pr WHERE to_type IS NOT NULL), cnt AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n FROM f GROUP BY 1, 2), tot AS (SELECT from_type, CAST(count(*) AS BIGINT) AS n_from FROM f GROUP BY 1) SELECT cnt.from_type, to_type, n, n_from, CAST(n AS DOUBLE) / CAST(n_from AS DOUBLE) AS p FROM cnt JOIN tot USING (from_type)""",
-    // checksum: identical '|'-joined canonical render → same md5 → same
-    // 60-bit slice ('0x'||hex cast replays Spark's conv(…,16,10)); XOR
-    // is order-free so the fold agrees under any partitioning
-    "q_checksum" ->
-      """WITH ord AS (SELECT concat_ws('|', o_orderkey, o_custkey, o_orderstatus, CAST(round(o_totalprice * 100) AS BIGINT), CAST(CAST(o_orderdate AS DATE) AS VARCHAR)) AS r FROM orders), cust AS (SELECT concat_ws('|', c_custkey, c_name, c_nationkey, CAST(round(c_acctbal * 100) AS BIGINT), c_mktsegment) AS r FROM customer), li AS (SELECT concat_ws('|', l_orderkey, l_linenumber, l_partkey, CAST(l_quantity AS BIGINT), CAST(round(l_extendedprice * 100) AS BIGINT)) AS r FROM lineitem) SELECT 'orders' AS tbl, CAST(count(*) AS BIGINT) AS n_rows, CAST(bit_xor(CAST(('0x' || substr(md5(r), 1, 15)) AS BIGINT)) AS BIGINT) AS checksum FROM ord UNION ALL SELECT 'customer', CAST(count(*) AS BIGINT), CAST(bit_xor(CAST(('0x' || substr(md5(r), 1, 15)) AS BIGINT)) AS BIGINT) FROM cust UNION ALL SELECT 'lineitem', CAST(count(*) AS BIGINT), CAST(bit_xor(CAST(('0x' || substr(md5(r), 1, 15)) AS BIGINT)) AS BIGINT) FROM li""",
-    // q_sink_roundtrip: DuckDB's OWN readers over the files graft's Sink
-    // just wrote (Verify runs before the oracle, so the files exist) —
-    // independent parsers on both sides make this a real format check
-    "q_sink_roundtrip" ->
-      """WITH c AS (SELECT concat_ws('|', n_nationkey, n_name, n_regionkey) AS r FROM read_csv('/tmp/graft_sink_roundtrip/nation_rt.csv', header=true)), j AS (SELECT concat_ws('|', n_nationkey, n_name, n_regionkey) AS r FROM read_json('/tmp/graft_sink_roundtrip/nation_rt_json/*.json')), p AS (SELECT concat_ws('|', n_nationkey, n_name, n_regionkey) AS r FROM read_parquet('/tmp/graft_sink_roundtrip/nation_rt.parquet')) SELECT 'csv' AS fmt, CAST(count(*) AS BIGINT) AS n_rows, CAST(bit_xor(CAST(('0x' || substr(md5(r), 1, 15)) AS BIGINT)) AS BIGINT) AS checksum FROM c UNION ALL SELECT 'json', CAST(count(*) AS BIGINT), CAST(bit_xor(CAST(('0x' || substr(md5(r), 1, 15)) AS BIGINT)) AS BIGINT) FROM j UNION ALL SELECT 'parquet', CAST(count(*) AS BIGINT), CAST(bit_xor(CAST(('0x' || substr(md5(r), 1, 15)) AS BIGINT)) AS BIGINT) FROM p""",
-    "q_ridge" -> ridgeOracleSql,
-    "sk_hll_intersect" -> hllIntersectOracleSql,
-    // sim_hardneg: same fixed-order dot-product parity as sim_topk; the
-    // label inequality is an exact predicate on both engines
-    "sim_hardneg" ->
-      """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         scored AS (
-           SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
-                  list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) AS score
-           FROM e d, e q WHERE q.vec_id % 10 = 0 AND d.label <> q.label)
-         SELECT query_id, CAST(rn AS INTEGER) AS rank, neighbor_id, score
-         FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored)
-         WHERE rn <= 10""",
-    // ta_nbc: identical -ln micro-nat fixed point as ta_perplexity (same
-    // boundary-margin argument, NbcSpec); priors/likelihoods are exact
-    // integer counts so both engines feed ln the same doubles
-    "ta_nbc" -> nbcOracleSql,
-    // stream_nbc: streamed scoring ≡ batch (order-free integer sums)
-    "stream_nbc" -> nbcOracleSql,
-    // ta_dsir: md5 buckets replay as '0x'||hex; the log-ratio is ONE ln
-    // of the same double ratio on both engines (micro-nat margin as in
-    // ta_nbc/ta_perplexity); tf·lr sums are exact integers
-    "ta_dsir" ->
-      """WITH toks AS (SELECT doc_id, source, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), gr AS (SELECT doc_id, source = 'src1' AS is_t, unnest(t || CASE WHEN len(t) >= 2 THEN list_transform(range(len(t) - 1), i -> array_to_string(t[(i+1):(i+2)], ' ')) ELSE [] END) AS g FROM toks), gb AS (SELECT doc_id, is_t, CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 4096 AS b FROM gr), c AS (SELECT b, CAST(count(*) AS BIGINT) AS cr, CAST(count(*) FILTER (WHERE is_t) AS BIGINT) AS ct FROM gb GROUP BY 1), tot AS (SELECT CAST(sum(cr) AS BIGINT) AS tr, CAST(sum(ct) AS BIGINT) AS tt FROM c), lr AS (SELECT b, CAST(round(ln(((CAST(ct AS DOUBLE) + 1.0) / (CAST(tt AS DOUBLE) + 4096.0)) / ((CAST(cr AS DOUBLE) + 1.0) / (CAST(tr AS DOUBLE) + 4096.0))) * 1000000) AS BIGINT) AS lr FROM c, tot), dg AS (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS tf FROM gb GROUP BY 1, 2), w AS (SELECT doc_id, CAST(sum(tf * lr) AS BIGINT) AS weight_micro FROM dg JOIN lr USING (b) GROUP BY 1) SELECT CAST(rn AS BIGINT) AS rank, doc_id, weight_micro FROM (SELECT doc_id, weight_micro, row_number() OVER (ORDER BY weight_micro DESC, doc_id ASC) AS rn FROM w) WHERE rn <= 100""",
-    // q_skyline: the oracle is a DIFFERENT algorithm (quadratic
-    // dominance NOT EXISTS) — agreement is a theorem about the sweep,
-    // not a replay
-    "q_skyline" ->
-      """WITH per AS (SELECT o_custkey, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS monetary_c, CAST(count(*) AS BIGINT) AS frequency FROM orders GROUP BY 1) SELECT o_custkey, monetary_c, frequency FROM per a WHERE NOT EXISTS (SELECT 1 FROM per b WHERE b.monetary_c >= a.monetary_c AND b.frequency >= a.frequency AND (b.monetary_c > a.monetary_c OR b.frequency > a.frequency))""",
-    "q_cusum" ->
-      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c FROM orders GROUP BY 1), tot AS (SELECT CAST(sum(rev_c) AS BIGINT) AS tr, CAST(count(*) AS BIGINT) AS nd FROM daily), base AS (SELECT d, rev_c, tr // nd AS mu_c, (tr // nd) // 20 AS k_c FROM daily, tot), pp AS (SELECT *, CAST(sum(rev_c - mu_c - k_c) OVER w AS BIGINT) AS p, CAST(sum(mu_c - k_c - rev_c) OVER w AS BIGINT) AS pn FROM base WINDOW w AS (ORDER BY d ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) SELECT d, rev_c, CAST(p - least(0, min(p) OVER w) AS BIGINT) AS s_up, CAST(pn - least(0, min(pn) OVER w) AS BIGINT) AS s_dn, (p - least(0, min(p) OVER w)) > mu_c AS alarm_up, (pn - least(0, min(pn) OVER w)) > mu_c AS alarm_dn FROM pp WINDOW w AS (ORDER BY d ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""",
-    // dd_containment: the quadratic all-pairs oracle — prefix filtering
-    // must lose nothing, and the integer predicate inter·5 ≥ n_a·4 is
-    // division-free on both engines
-    "dd_containment" ->
-      """WITH t AS (SELECT doc_id AS id, list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS toks FROM documents), s AS (SELECT id, toks, CAST(len(toks) AS BIGINT) AS n FROM t WHERE len(toks) > 0), p AS (SELECT a.id AS id_a, b.id AS id_b, a.n AS n_a, b.n AS n_b, CAST(len(list_intersect(a.toks, b.toks)) AS BIGINT) AS inter FROM s a JOIN s b ON a.id <> b.id AND a.id % 10 = 0) SELECT id_a, id_b, n_a, n_b, inter, CAST(inter AS DOUBLE) / CAST(n_a AS DOUBLE) AS containment FROM p WHERE inter * 5 >= n_a * 4""",
-    // ta_bootstrap: multiplicities are integer threshold compares on
-    // the same md5; replicate means are divisions of exact longs
-    "ta_bootstrap" -> bootstrapOracleSql,
-    "ta_nbc_eval" ->
-      s"""SELECT cls_truth, pred_cls, CAST(count(*) AS BIGINT) AS n FROM ($nbcOracleSql) WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) >= '80000000' GROUP BY 1, 2""",
-    // ev_growth: epoch-week integers on both engines; all counts exact
-    "ev_growth" ->
-      """WITH uw AS (SELECT DISTINCT user_id, date_diff('day', DATE '1970-01-05', CAST(ts AS DATE)) // 7 AS wk FROM events), cls AS (SELECT user_id, wk, lag(wk) OVER (PARTITION BY user_id ORDER BY wk) AS prev_wk FROM uw), st AS (SELECT wk, CASE WHEN prev_wk IS NULL THEN 'new' WHEN prev_wk = wk - 1 THEN 'retained' ELSE 'resurrected' END AS status FROM cls), act AS (SELECT wk, CAST(count(*) FILTER (WHERE status = 'new') AS BIGINT) AS "new", CAST(count(*) FILTER (WHERE status = 'retained') AS BIGINT) AS retained, CAST(count(*) FILTER (WHERE status = 'resurrected') AS BIGINT) AS resurrected FROM st GROUP BY 1), cnt AS (SELECT wk, CAST(count(*) AS BIGINT) AS n_active FROM uw GROUP BY 1), ch AS (SELECT wk + 1 AS wk, n_active AS prev_active FROM cnt) SELECT act.wk, n_active, "new", retained, resurrected, CAST(coalesce(prev_active, 0) - retained AS BIGINT) AS churned FROM act JOIN cnt ON act.wk = cnt.wk LEFT JOIN ch ON act.wk = ch.wk""",
-    // ev_seasonality: DuckDB dayofweek is Sunday=0, Spark's Sunday=1 —
-    // the +1 aligns them; integer div and the index division are exact
-    "ev_seasonality" ->
-      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c FROM orders GROUP BY 1), dd AS (SELECT d, rev_c, CAST(dayofweek(d) + 1 AS BIGINT) AS dow FROM daily), prof AS (SELECT dow, CAST(count(*) AS BIGINT) AS n_days, CAST(sum(rev_c) AS BIGINT) AS dow_rev_c FROM dd GROUP BY 1), p2 AS (SELECT dow, dow_rev_c // n_days AS dow_mean_c FROM prof) SELECT d, dd.dow, rev_c, dow_mean_c, CAST(rev_c AS DOUBLE) / CAST(dow_mean_c AS DOUBLE) AS seasonal_idx FROM dd JOIN p2 ON dd.dow = p2.dow""",
-    // q_yoy: DuckDB // truncates toward zero exactly like Spark's div
-    // (verified: -7 // 2 = -3), so negative growth agrees
-    "q_yoy" ->
-      """WITH monthly AS (SELECT CAST(year(CAST(o_orderdate AS DATE)) AS BIGINT) AS y, CAST(month(CAST(o_orderdate AS DATE)) AS BIGINT) AS m, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c FROM orders GROUP BY 1, 2) SELECT a.y, a.m, a.rev_c, b.rev_c AS prev_rev_c, ((a.rev_c - b.rev_c) * 10000) // b.rev_c AS yoy_bp FROM monthly a JOIN monthly b ON a.y = b.y + 1 AND a.m = b.m""",
-    "q_holt_winters" -> holtWintersOracleSql,
-    "ev_markov_steady" -> markovSteadyOracleSql,
-    // q_holt: recursive CTE replays the identical IEEE op order (all
-    // halvings at α=β=1/2) over the same exact daily integers — level
-    // and trend doubles are bit-identical
-    "q_holt" ->
-      """WITH RECURSIVE daily AS (SELECT CAST(o_orderdate AS DATE) AS d, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c FROM orders GROUP BY 1), idx AS (SELECT d, rev_c, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i FROM daily), init AS (SELECT (SELECT CAST(rev_c AS DOUBLE) FROM idx WHERE i = 1) AS x1, (SELECT CAST(rev_c AS DOUBLE) FROM idx WHERE i = 2) AS x2), h(i, s, b) AS (SELECT CAST(1 AS BIGINT), x1, x2 - x1 FROM init UNION ALL SELECT h.i + 1, 0.5 * CAST(idx.rev_c AS DOUBLE) + 0.5 * (h.s + h.b), 0.5 * ((0.5 * CAST(idx.rev_c AS DOUBLE) + 0.5 * (h.s + h.b)) - h.s) + 0.5 * h.b FROM h JOIN idx ON idx.i = h.i + 1) SELECT idx.d, idx.rev_c, h.s AS level, h.b AS trend FROM h JOIN idx ON idx.i = h.i""",
-    // er_entities: independent recursive-CTE transitive closure over the
-    // quadratic levenshtein pair set — a different algorithm from the
-    // engine's large-star/small-star components
-    "er_entities" ->
-      """WITH pairs AS (SELECT a.c_custkey AS s, b.c_custkey AS d FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey AND levenshtein(a.c_name, b.c_name) <= 1), edges AS (SELECT s, d FROM pairs UNION SELECT d AS s, s AS d FROM pairs), reach AS (WITH RECURSIVE rr(id, rid) AS (SELECT c_custkey, c_custkey FROM customer UNION SELECT rr.id, e.d FROM rr JOIN edges e ON rr.rid = e.s) SELECT id, min(rid) AS ent FROM rr GROUP BY 1) SELECT CAST(r.id AS BIGINT) AS c_custkey, CAST(r.ent AS BIGINT) AS entity_id, CAST(cnt.n AS BIGINT) AS entity_size FROM reach r JOIN (SELECT ent, count(*) AS n FROM reach GROUP BY 1) cnt ON r.ent = cnt.ent""",
-    // q_mv_retract: the oracle is the INDEPENDENT full rescan of the CDC
-    // final state — base + retraction deltas must equal it algebraically
-    "q_mv_retract" ->
-      """WITH log AS (SELECT o_orderkey AS k, o_custkey AS c, o_totalprice AS p, 0 AS seq, 'B' AS op FROM orders UNION ALL SELECT o_orderkey, o_custkey, o_totalprice * 1.1, 1, 'U' FROM orders WHERE o_orderkey % 5 = 0 UNION ALL SELECT o_orderkey + 30000000, o_custkey, o_totalprice, 1, 'I' FROM orders WHERE o_orderkey % 11 = 0 UNION ALL SELECT o_orderkey, o_custkey, 0.0, 2, 'D' FROM orders WHERE o_orderkey % 7 = 0), r AS (SELECT k, c, p, op, row_number() OVER (PARTITION BY k ORDER BY seq DESC) AS rn FROM log), fin AS (SELECT k, c, CAST(round(p * 100) AS BIGINT) AS price_c FROM r WHERE rn = 1 AND op <> 'D') SELECT c AS o_custkey, CAST(count(*) AS BIGINT) AS n_orders, CAST(sum(price_c) AS BIGINT) AS spend_c FROM fin GROUP BY 1""",
-    // q_chisq: exact integer contingency table; every division is a
-    // truncating // of nonnegative HUGEINT products — same values as
-    // Spark's decimal div
-    "q_chisq" ->
-      """WITH j AS (SELECT c_mktsegment AS seg, o_orderstatus AS status FROM orders JOIN customer ON o_custkey = c_custkey),
-         obs AS (SELECT seg, status, CAST(count(*) AS BIGINT) AS observed FROM j GROUP BY 1, 2),
-         rt AS (SELECT seg, CAST(sum(observed) AS BIGINT) AS n_seg FROM obs GROUP BY 1),
-         ct AS (SELECT status, CAST(sum(observed) AS BIGINT) AS n_status FROM obs GROUP BY 1),
-         tt AS (SELECT CAST(sum(observed) AS BIGINT) AS n_total FROM obs)
-         SELECT obs.seg, obs.status, observed, n_seg, n_status, n_total,
-           CAST((n_seg::HUGEINT * n_status * 1000000) // n_total AS BIGINT) AS expected_micro,
-           CAST(((observed::HUGEINT * n_total - n_seg::HUGEINT * n_status)
-                 * (observed::HUGEINT * n_total - n_seg::HUGEINT * n_status) * 1000000)
-                // (n_seg::HUGEINT * n_status * n_total) AS BIGINT) AS term_micro
-         FROM obs JOIN rt ON obs.seg = rt.seg JOIN ct ON obs.status = ct.status CROSS JOIN tt""",
-    // ev_backtest: same bounded-offset history pairing; DATE + INTEGER
-    // is day addition in DuckDB like Spark's date_add
-    "ev_backtest" ->
-      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c FROM orders GROUP BY 1),
-         hist AS (SELECT a.d + CAST(t.off AS INTEGER) AS dt, CAST(t.off AS BIGINT) AS off, a.rev_c AS past_c
-                  FROM daily a, (SELECT unnest(range(1, 8)) AS off) t),
-         hj AS (SELECT hist.dt, hist.off, hist.past_c, b.rev_c AS actual_c FROM hist JOIN daily b ON hist.dt = b.d),
-         byday AS (SELECT dt, actual_c, count(*) AS n_hist,
-                     max(CASE WHEN off = 1 THEN past_c END) AS naive_c,
-                     max(CASE WHEN off = 7 THEN past_c END) AS snaive_c,
-                     CAST(sum(past_c) AS BIGINT) // 7 AS ma7_c
-                   FROM hj GROUP BY 1, 2 HAVING count(*) = 7),
-         scored AS (SELECT 'naive' AS model, abs(actual_c - naive_c) AS ae FROM byday
-                    UNION ALL SELECT 'snaive', abs(actual_c - snaive_c) FROM byday
-                    UNION ALL SELECT 'ma7', abs(actual_c - ma7_c) FROM byday)
-         SELECT model, CAST(count(*) AS BIGINT) AS n_days, CAST(sum(ae) AS BIGINT) AS sae_c,
-           CAST((sum(ae)::HUGEINT * 1000000) // count(*) AS BIGINT) AS mae_micro
-         FROM scored GROUP BY 1""",
-    // ta_zipf: identical tokenization + top-200 order as ta_vocab, the
-    // same round(ln(int)·1e6) micro-nats, HUGEINT Gram sums, sign-split
-    // truncating division
-    "ta_zipf" ->
-      """WITH cnt AS (SELECT token, CAST(count(*) AS BIGINT) AS n FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS token FROM documents) GROUP BY token ORDER BY n DESC, token LIMIT 200),
-         rk AS (SELECT n, CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT) AS r FROM cnt),
-         pt AS (SELECT CAST(round(ln(CAST(r AS DOUBLE)) * 1e6) AS BIGINT) AS x,
-                       CAST(round(ln(CAST(n AS DOUBLE)) * 1e6) AS BIGINT) AS y FROM rk),
-         g AS (SELECT CAST(count(*) AS BIGINT) AS n_pts,
-                 sum(x::HUGEINT) AS sx, sum(y::HUGEINT) AS sy,
-                 sum(x::HUGEINT * x) AS sxx, sum(x::HUGEINT * y) AS sxy FROM pt)
-         SELECT n_pts, CAST(sx AS VARCHAR) AS sx, CAST(sy AS VARCHAR) AS sy,
-           CAST(sxx AS VARCHAR) AS sxx, CAST(sxy AS VARCHAR) AS sxy,
-           CASE WHEN n_pts * sxx - sx * sx = 0 THEN CAST(NULL AS BIGINT)
-           ELSE CAST(CASE WHEN n_pts * sxy - sx * sy < 0 THEN -1
-                     WHEN n_pts * sxy - sx * sy > 0 THEN 1 ELSE 0 END AS BIGINT)
-             * CAST((abs(n_pts * sxy - sx * sy) * 1000000) // (n_pts * sxx - sx * sx) AS BIGINT) END
-             AS slope_micro
-         FROM g""",
-    // q_stump: the same histogram → cumulative Gini scan in SQL; the
-    // best flag replays the (g, feature, threshold) struct-min as a
-    // row_number over the ≤ ~27 candidates
-    "q_stump" ->
-      """WITH base AS (SELECT CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y,
-                  CAST(year(CAST(o_orderdate AS DATE)) AS BIGINT) AS bin_year,
-                  least(CAST(round(o_totalprice * 100) AS BIGINT) // 3000000, 19) AS bin_price
-                FROM orders),
-         f AS (SELECT 'year' AS feature, bin_year AS bin, y FROM base
-               UNION ALL SELECT 'price', bin_price, y FROM base),
-         hist AS (SELECT feature, bin, CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS pos FROM f GROUP BY 1, 2),
-         cum AS (SELECT feature, bin,
-                   CAST(sum(n) OVER (PARTITION BY feature ORDER BY bin) AS BIGINT) AS n_left,
-                   CAST(sum(pos) OVER (PARTITION BY feature ORDER BY bin) AS BIGINT) AS pos_left
-                 FROM hist),
-         tot AS (SELECT feature, CAST(sum(n) AS BIGINT) AS n_tot, CAST(sum(pos) AS BIGINT) AS pos_tot FROM hist GROUP BY 1),
-         cand AS (SELECT cum.feature, bin AS threshold, n_left, pos_left,
-                    n_tot - n_left AS n_right, pos_tot - pos_left AS pos_right
-                  FROM cum JOIN tot ON cum.feature = tot.feature WHERE n_left < n_tot),
-         sc AS (SELECT *,
-                  CAST((2::HUGEINT * pos_left * (n_left - pos_left) * 1000000) // n_left AS BIGINT)
-                  + CAST((2::HUGEINT * pos_right * (n_right - pos_right) * 1000000) // n_right AS BIGINT)
-                  AS g_micro FROM cand)
-         SELECT feature, threshold, n_left, pos_left, n_right, pos_right, g_micro,
-           row_number() OVER (ORDER BY g_micro, feature, threshold) = 1 AS is_best
-         FROM sc""",
-    // q_tcloseness: identical fixed-width banding, dense 10-band grid
-    // via range(), cross-multiplied integer EMD prefix terms
-    "q_tcloseness" ->
-      """WITH bands AS (SELECT c_mktsegment AS seg, c_nationkey AS nation,
-                  least(greatest((CAST(round(c_acctbal * 100) AS BIGINT) + 100000) // 120000, 0), 9) AS b
-                FROM customer),
-         byclass AS (SELECT seg, nation, b, CAST(count(*) AS BIGINT) AS cnt FROM bands GROUP BY 1, 2, 3),
-         classes AS (SELECT DISTINCT seg, nation FROM bands),
-         grid AS (SELECT seg, nation, CAST(gb.b AS BIGINT) AS b FROM classes, (SELECT unnest(range(10)) AS b) gb),
-         cumc AS (SELECT grid.seg, grid.nation, grid.b,
-                    CAST(sum(coalesce(cnt, 0)) OVER (PARTITION BY grid.seg, grid.nation ORDER BY grid.b) AS BIGINT) AS cumc
-                  FROM grid LEFT JOIN byclass ON grid.seg = byclass.seg AND grid.nation = byclass.nation AND grid.b = byclass.b),
-         gcnt AS (SELECT b, CAST(count(*) AS BIGINT) AS gcnt FROM bands GROUP BY 1),
-         cumg AS (SELECT CAST(gg.b AS BIGINT) AS b,
-                    CAST(sum(coalesce(gcnt, 0)) OVER (ORDER BY gg.b) AS BIGINT) AS cumg
-                  FROM (SELECT unnest(range(10)) AS b) gg LEFT JOIN gcnt ON gg.b = gcnt.b),
-         nc AS (SELECT seg, nation, CAST(count(*) AS BIGINT) AS n_c FROM bands GROUP BY 1, 2),
-         tt AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM bands),
-         emd AS (SELECT cumc.seg, cumc.nation, n_c,
-                   CAST(sum(abs(cumc::HUGEINT * n_total - cumg::HUGEINT * n_c)) AS BIGINT) AS emd_num,
-                   CAST((sum(abs(cumc::HUGEINT * n_total - cumg::HUGEINT * n_c)) * 1000000)
-                        // (n_c::HUGEINT * n_total * 9) AS BIGINT) AS emd_micro
-                 FROM cumc JOIN cumg ON cumc.b = cumg.b
-                   JOIN nc ON cumc.seg = nc.seg AND cumc.nation = nc.nation
-                   CROSS JOIN tt
-                 WHERE cumc.b < 9
-                 GROUP BY 1, 2, 3, n_total)
-         SELECT seg, nation, n_c, emd_num, emd_micro, emd_micro <= 200000 AS tclose FROM emd""",
-    "sk_theta" -> thetaOracleSql,
-    "g_linkpred" -> linkpredOracleSql,
-    "sk_theta_grouped" -> kmvGroupedOracleSql,
-    "stream_theta" -> kmvGroupedOracleSql,
-    "q_dp" -> dpOracleSql,
-    "sim_knn" -> knnOracleSql,
-    "q_drift" -> driftOracleSql,
-    "q_declist" -> declistOracleSql,
-    // q_xcorr: exact HUGEINT moment sums per lag; the final Pearson r is
-    // one double tree over them (IEEE sqrt is correctly rounded)
-    "q_xcorr" ->
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS x, CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) AS y FROM events GROUP BY 1),
-         pairs AS (SELECT CAST(t.k AS INTEGER) AS lag_k, a.x, b.y
-                   FROM daily a, (SELECT unnest(range(-3, 4)) AS k) t, daily b
-                   WHERE a.d + CAST(t.k AS INTEGER) = b.d),
-         g AS (SELECT lag_k, CAST(count(*) AS BIGINT) AS n_pairs,
-                 sum(x::HUGEINT) AS sx, sum(y::HUGEINT) AS sy,
-                 sum(x::HUGEINT * y) AS sxy, sum(x::HUGEINT * x) AS sxx, sum(y::HUGEINT * y) AS syy
-               FROM pairs GROUP BY 1)
-         SELECT lag_k, n_pairs, CAST(sx AS VARCHAR) AS sx, CAST(sy AS VARCHAR) AS sy, CAST(sxy AS VARCHAR) AS sxy,
-           CAST(n_pairs::HUGEINT * sxy - sx * sy AS DOUBLE)
-           / (sqrt(CAST(n_pairs::HUGEINT * sxx - sx * sx AS DOUBLE))
-              * sqrt(CAST(n_pairs::HUGEINT * syy - sy * sy AS DOUBLE))) AS r
-         FROM g""",
-    // ta_novelty: identical tokenization and 3-gram windows (1-based
-    // list indexing vs Spark's 0-based element_at offsets)
-    "ta_novelty" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents),
-         g0 AS (SELECT doc_id, unnest(list_transform(range(len(t) - 2), i -> t[CAST(i AS INTEGER) + 1] || ' ' || t[CAST(i AS INTEGER) + 2] || ' ' || t[CAST(i AS INTEGER) + 3])) AS gram FROM toks WHERE len(t) >= 3),
-         grams AS (SELECT DISTINCT doc_id, gram FROM g0),
-         fst AS (SELECT gram, min(doc_id) AS first_doc FROM grams GROUP BY 1)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-           CAST(sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-           CAST((sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END)::HUGEINT * 1000000) // count(*) AS BIGINT) AS novelty_micro
-         FROM grams JOIN fst USING (gram) GROUP BY 1""",
-    // er_golden: the er_entities recursive closure + arg_min survivorship
-    // er_eval: the exact unblocked pair set with a same-nation flag;
-    // guard mirrors the Spark CASE for an empty pair set.
-    "er_eval" ->
-      """WITH t AS (SELECT a.c_nationkey = b.c_nationkey AS sn FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey AND levenshtein(a.c_name, b.c_name) <= 1) SELECT CAST(count(*) AS BIGINT) AS n_true, CAST(sum(CASE WHEN sn THEN 1 ELSE 0 END) AS BIGINT) AS n_blocked, CAST(sum(CASE WHEN NOT sn THEN 1 ELSE 0 END) AS BIGINT) AS n_lost, CASE WHEN count(*) = 0 THEN CAST(1000000 AS BIGINT) ELSE CAST((sum(CASE WHEN sn THEN 1 ELSE 0 END) * 1000000) // count(*) AS BIGINT) END AS recall_micro FROM t""",
-    "er_golden" ->
-      """WITH pairs AS (SELECT a.c_custkey AS s, b.c_custkey AS d FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey AND a.c_nationkey = b.c_nationkey AND levenshtein(a.c_name, b.c_name) <= 1),
-         edges AS (SELECT s, d FROM pairs UNION SELECT d AS s, s AS d FROM pairs),
-         reach AS (WITH RECURSIVE rr(id, rid) AS (SELECT c_custkey, c_custkey FROM customer UNION SELECT rr.id, e.d FROM rr JOIN edges e ON rr.rid = e.s) SELECT id, min(rid) AS ent FROM rr GROUP BY 1)
-         SELECT CAST(r.ent AS BIGINT) AS entity_id, CAST(count(*) AS BIGINT) AS n_members,
-           CAST(min(c.c_custkey) AS BIGINT) AS rep_custkey,
-           arg_min(c.c_name, c.c_custkey) AS rep_name,
-           CAST(max(CAST(round(c.c_acctbal * 100) AS BIGINT)) AS BIGINT) AS max_acctbal_c,
-           CAST(count(DISTINCT c.c_mktsegment) AS BIGINT) AS n_segments
-         FROM reach r JOIN customer c ON r.id = c.c_custkey GROUP BY 1""",
-    // er_jw: DuckDB's own jaro_winkler_similarity IS the oracle — the
-    // native expression reproduces its double arithmetic bit-for-bit,
-    // so the floor-micro sum matches over every blocked pair
-    "er_jw" ->
-      """SELECT a.c_nationkey AS nation_id, CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(sum(CASE WHEN jaro_winkler_similarity(a.c_name, b.c_name) > 0.97 THEN 1 ELSE 0 END) AS BIGINT) AS n_close,
-           CAST(sum(CAST(floor(jaro_winkler_similarity(a.c_name, b.c_name) * 1000000) AS BIGINT)) AS BIGINT) AS jw_micro_sum
-         FROM customer a JOIN customer b
-           ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-         GROUP BY 1""",
-    // srch_phrase: same bigram windows, same (count desc, bigram) top-1
-    "srch_phrase" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents),
-         bi0 AS (SELECT doc_id, unnest(list_transform(range(len(t) - 1), i -> {'p': i, 'b': t[CAST(i AS INTEGER) + 1] || ' ' || t[CAST(i AS INTEGER) + 2]})) AS e FROM toks WHERE len(t) >= 2),
-         bi AS (SELECT doc_id, CAST(e.p AS INTEGER) AS p, e.b AS bigram FROM bi0),
-         top AS (SELECT bigram AS phrase FROM (SELECT bigram, count(*) AS n FROM bi GROUP BY 1 ORDER BY n DESC, bigram LIMIT 1))
-         SELECT doc_id, phrase, CAST(count(*) AS BIGINT) AS n_occ, CAST(min(p) AS BIGINT) AS first_pos
-         FROM bi JOIN top ON bi.bigram = top.phrase GROUP BY 1, 2""",
-    // dd_lsh_planner: the identical literal multiply trees (lshCurveSql)
-    "dd_lsh_planner" ->
-      s"""SELECT CAST(s_pct AS INTEGER) AS s_pct,
-         |  ${lshCurveSql(4, 16)} AS p_b16_r4,
-         |  ${lshCurveSql(8, 8)} AS p_b8_r8
-         |FROM (SELECT unnest(range(5, 100, 5)) AS s_pct)""".stripMargin,
-    // q_ks: row_number replays the exact rank; same truncating micro math
-    "q_ks" ->
-      """WITH base AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS x, o_orderkey AS id FROM orders),
-         mm AS (SELECT min(x) AS mn, max(x) AS mx FROM base),
-         rk AS (SELECT x, CAST(row_number() OVER (ORDER BY x, id) AS BIGINT) AS rn, CAST(count(*) OVER () AS BIGINT) AS n FROM base),
-         f AS (SELECT rn, n, CASE WHEN mx = mn THEN 0 ELSE CAST(((x - mn) * 1000000) // (mx - mn) AS BIGINT) END AS f_micro FROM rk, mm),
-         d AS (SELECT n, CAST(rn * 1000000 // n AS BIGINT) - f_micro AS dp, f_micro - CAST((rn - 1) * 1000000 // n AS BIGINT) AS dm FROM f)
-         SELECT n, CAST(max(dp) AS BIGINT) AS d_plus_micro, CAST(max(dm) AS BIGINT) AS d_minus_micro,
-           CAST(greatest(max(dp), max(dm)) AS BIGINT) AS d_micro
-         FROM d GROUP BY n""",
-    // dd_eval: the minhash pipeline replay (sig + band CTEs) joined
-    // against the anchored exact gram-set side; identical division-free
-    // threshold and micro P/R
-    // dd_threshold_sweep: dd_eval's replay with candidates at threshold
-    // 0 (the full banded set), integer m/64 estimates, and the 5-row
-    // literal threshold table; both classification tests division-free.
-    "dd_threshold_sweep" ->
-      s"""WITH ${minhashSigCtes(3, 64)}, ${minhashPairSql(64, 16, 0.0)},
-         |gset AS MATERIALIZED (SELECT DISTINCT doc_id, g FROM grams),
-         |gsz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz FROM gset GROUP BY 1),
-         |inter AS (SELECT a.doc_id AS ia, b.doc_id AS ib, CAST(count(*) AS BIGINT) AS i
-         |          FROM gset a JOIN gset b ON a.g = b.g AND a.doc_id <> b.doc_id
-         |          WHERE a.doc_id % 37 = 0 GROUP BY 1, 2),
-         |ex AS (SELECT least(ia, ib) AS pa, greatest(ia, ib) AS pb, CAST(max(i) AS BIGINT) AS i, CAST(max(sa.sz + sb.sz) AS BIGINT) AS ssum
-         |       FROM inter JOIN gsz sa ON inter.ia = sa.doc_id JOIN gsz sb ON inter.ib = sb.doc_id GROUP BY 1, 2),
-         |lsh AS (SELECT id_a AS pa, id_b AS pb, CAST(round(est_jaccard * 64) AS BIGINT) AS m64 FROM mh_pairs WHERE id_a % 37 = 0 OR id_b % 37 = 0),
-         |j AS (SELECT coalesce(e.i, 0) AS i, coalesce(e.ssum, 0) AS ssum, coalesce(l.m64, 0) AS m64
-         |      FROM ex e FULL JOIN lsh l ON e.pa = l.pa AND e.pb = l.pb),
-         |tt(t) AS (VALUES (CAST(40 AS BIGINT)), (CAST(50 AS BIGINT)), (CAST(60 AS BIGINT)), (CAST(70 AS BIGINT)), (CAST(80 AS BIGINT))),
-         |cl AS (SELECT tt.t, CASE WHEN i > 0 AND i * (100 + tt.t) >= tt.t * ssum THEN 1 ELSE 0 END AS e, CASE WHEN 100 * m64 >= 64 * tt.t THEN 1 ELSE 0 END AS p FROM j CROSS JOIN tt),
-         |c AS (SELECT t, CAST(sum(CASE WHEN e = 1 AND p = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-         |             CAST(sum(CASE WHEN e = 0 AND p = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-         |             CAST(sum(CASE WHEN e = 1 AND p = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fn
-         |      FROM cl GROUP BY 1)
-         |SELECT t, tp + fn AS n_exact, tp + fp AS n_pred, tp, fp, fn,
-         |  CASE WHEN tp + fp = 0 THEN CAST(1000000 AS BIGINT) ELSE CAST((tp * 1000000) // (tp + fp) AS BIGINT) END AS precision_micro,
-         |  CASE WHEN tp + fn = 0 THEN CAST(1000000 AS BIGINT) ELSE CAST((tp * 1000000) // (tp + fn) AS BIGINT) END AS recall_micro
-         |FROM c""".stripMargin,
-    "dd_eval" ->
-      s"""WITH ${minhashSigCtes(3, 64)}, ${minhashPairSql(64, 16, 0.5)},
-         |gset AS MATERIALIZED (SELECT DISTINCT doc_id, g FROM grams),
-         |gsz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz FROM gset GROUP BY 1),
-         |inter AS (SELECT a.doc_id AS ia, b.doc_id AS ib, CAST(count(*) AS BIGINT) AS i
-         |          FROM gset a JOIN gset b ON a.g = b.g AND a.doc_id <> b.doc_id
-         |          WHERE a.doc_id % 37 = 0 GROUP BY 1, 2),
-         |ex AS (SELECT DISTINCT least(ia, ib) AS pa, greatest(ia, ib) AS pb
-         |       FROM inter JOIN gsz sa ON inter.ia = sa.doc_id JOIN gsz sb ON inter.ib = sb.doc_id
-         |       WHERE i * 3 >= sa.sz + sb.sz),
-         |lsh AS (SELECT id_a AS pa, id_b AS pb FROM mh_pairs WHERE id_a % 37 = 0 OR id_b % 37 = 0),
-         |j AS (SELECT e.pa IS NOT NULL AS ine, l.pa IS NOT NULL AS inl
-         |      FROM ex e FULL JOIN lsh l ON e.pa = l.pa AND e.pb = l.pb),
-         |c AS (SELECT CAST(count(*) FILTER (WHERE ine AND inl) AS BIGINT) AS tp,
-         |             CAST(count(*) FILTER (WHERE NOT ine AND inl) AS BIGINT) AS fp,
-         |             CAST(count(*) FILTER (WHERE ine AND NOT inl) AS BIGINT) AS fn FROM j),
-         |na AS (SELECT CAST(count(*) AS BIGINT) AS n_anchors FROM documents WHERE doc_id % 37 = 0)
-         |SELECT n_anchors, tp + fn AS n_exact, tp + fp AS n_lsh, tp, fp, fn,
-         |  CAST(CASE WHEN tp + fp = 0 THEN 1000000 ELSE CAST((tp::HUGEINT * 1000000) // (tp + fp) AS BIGINT) END AS BIGINT) AS precision_micro,
-         |  CAST(CASE WHEN tp + fn = 0 THEN 1000000 ELSE CAST((tp::HUGEINT * 1000000) // (tp + fn) AS BIGINT) END AS BIGINT) AS recall_micro
-         |FROM c, na""".stripMargin,
-    // ta_langid_eval: the shared classification replay grouped to the
-    // confusion matrix with integral row shares
-    "ta_langid_eval" ->
-      s"""WITH scored AS ($langidOracleSql),
-         |conf AS (SELECT lang_truth, lang_guess, CAST(count(*) AS BIGINT) AS n FROM scored GROUP BY 1, 2),
-         |tot AS (SELECT lang_truth, CAST(sum(n) AS BIGINT) AS n_truth FROM conf GROUP BY 1)
-         |SELECT conf.lang_truth, lang_guess, n, n_truth,
-         |  CAST((n::HUGEINT * 1000000) // n_truth AS BIGINT) AS share_micro
-         |FROM conf JOIN tot ON conf.lang_truth = tot.lang_truth""".stripMargin,
-    // ev_dau_mau: same bounded-offset fan-out, exact distinct per window-day
-    "ev_dau_mau" ->
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
-         dau AS (SELECT d, CAST(count(*) AS BIGINT) AS dau FROM ud GROUP BY 1),
-         mau AS (SELECT wd, CAST(count(*) AS BIGINT) AS mau FROM
-           (SELECT DISTINCT user_id, d + CAST(t.off AS INTEGER) AS wd FROM ud, (SELECT unnest(range(30)) AS off) t) GROUP BY 1)
-         SELECT d, dau, mau, CAST((dau::HUGEINT * 1000000) // mau AS BIGINT) AS stickiness_micro
-         FROM dau JOIN mau ON d = wd""",
-    // q_corr: one HUGEINT moment CTE, the same shared-tree Pearson per pair
-    "q_corr" -> corrOracleSql,
-    // sim_medoid: same double dot products rounded to micro ints,
-    // order-free HUGEINT sums, (score desc, cand) argmax replay
-    "sim_medoid" ->
-      """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         p AS (SELECT a.label, a.vec_id AS cand, CAST(round(list_dot_product(a.v, b.v) * 1e6) AS BIGINT) AS dot_micro
-               FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id),
-         sc AS (SELECT label, cand, CAST(sum(dot_micro) AS BIGINT) AS score_micro, CAST(count(*) AS BIGINT) AS n_mates FROM p GROUP BY 1, 2)
-         SELECT label, cand AS medoid_id, score_micro, n_mates FROM sc
-         QUALIFY row_number() OVER (PARTITION BY label ORDER BY score_micro DESC, cand) = 1""",
-    // q_mi: same micro-nat ln(integer) replay, order-free integer sum
-    "q_mi" ->
-      """WITH j AS (SELECT c_mktsegment AS seg, o_orderstatus AS status FROM orders JOIN customer ON o_custkey = c_custkey),
-         obs AS (SELECT seg, status, CAST(count(*) AS BIGINT) AS observed FROM j GROUP BY 1, 2),
-         rt AS (SELECT seg, CAST(sum(observed) AS BIGINT) AS n_seg FROM obs GROUP BY 1),
-         ct AS (SELECT status, CAST(sum(observed) AS BIGINT) AS n_status FROM obs GROUP BY 1),
-         tt AS (SELECT CAST(sum(observed) AS BIGINT) AS n_total FROM obs),
-         cells AS (SELECT observed, n_total,
-             observed * (CAST(round(ln(CAST(observed AS DOUBLE) * n_total) * 1e6) AS BIGINT)
-                         - CAST(round(ln(CAST(n_seg AS DOUBLE) * n_status) * 1e6) AS BIGINT)) AS cell_micro_n
-           FROM obs JOIN rt ON obs.seg = rt.seg JOIN ct ON obs.status = ct.status CROSS JOIN tt)
-         SELECT n_total AS n, CAST(count(*) AS BIGINT) AS n_cells,
-           CAST(CASE WHEN sum(cell_micro_n) < 0 THEN -1 WHEN sum(cell_micro_n) > 0 THEN 1 ELSE 0 END AS BIGINT)
-           * CAST(abs(sum(cell_micro_n)::HUGEINT) // n_total AS BIGINT) AS mi_micro
-         FROM cells GROUP BY n_total""",
-    // ta_readability: identical regexp counts (RE2-safe character
-    // classes) and integral rate divisions
-    "ta_readability" ->
-      """WITH c AS (SELECT doc_id,
-           CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS BIGINT) AS n_words,
-           greatest(CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT), 1) AS n_sentences,
-           greatest(CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT), 1) AS n_syllables
-         FROM documents)
-         SELECT doc_id, n_words, n_sentences, n_syllables,
-           CAST((n_words * 1000000) // n_sentences AS BIGINT) AS words_per_sentence_micro,
-           CAST((n_syllables * 1000000) // n_words AS BIGINT) AS syllables_per_word_micro
-         FROM c WHERE n_words > 0""",
-    // sk_incremental: per-(source, half) fmix bottom-256 via QUALIFY,
-    // list-level union + sort + slice, equality against the full sketch
-    "sk_incremental" ->
-      s"""WITH ${fmixChainCtes(
-           """SELECT source || chr(1) || CASE WHEN doc_id < 250 THEN 'a' ELSE 'b' END AS flag,
-             |              CAST(doc_id AS VARCHAR) AS g FROM documents""".stripMargin)},
-         |sk AS MATERIALIZED (SELECT flag, h FROM fm QUALIFY row_number() OVER (PARTITION BY flag ORDER BY h) <= 256),
-         |sks AS (SELECT string_split(flag, chr(1))[1] AS source, string_split(flag, chr(1))[2] AS half, list(h ORDER BY h) AS arr FROM sk GROUP BY 1, 2),
-         |merged AS (SELECT source,
-         |    list_sort(list_distinct(flatten(list(arr))))[1:256] AS m
-         |  FROM sks GROUP BY 1),
-         |fullk AS (SELECT string_split(flag, chr(1))[1] AS source, h FROM fm),
-         |fsk AS (SELECT source, list(h ORDER BY h) AS uf FROM
-         |  (SELECT source, h FROM (SELECT DISTINCT source, h FROM fullk)
-         |   QUALIFY row_number() OVER (PARTITION BY source ORDER BY h) <= 256) GROUP BY 1)
-         |SELECT merged.source, CAST(len(m) AS BIGINT) AS n_merged,
-         |  CAST((CASE WHEN len(m) < 256 THEN len(m) ELSE len(m) - 1 END::HUGEINT * $U64)
-         |       // (CASE WHEN len(m) < 256 THEN $U64 ELSE m[-1] END) AS BIGINT) AS kmv_est_merged,
-         |  m = uf AS equal_full
-         |FROM merged JOIN fsk ON merged.source = fsk.source""".stripMargin,
-    // q_gini: same exact ranks and HUGEINT Lorenz sums
-    "q_gini" ->
-      """WITH spend AS (SELECT o_custkey, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS x FROM orders GROUP BY 1),
-         rk AS (SELECT x, CAST(row_number() OVER (ORDER BY x, o_custkey) AS BIGINT) AS rn FROM spend),
-         g AS (SELECT CAST(count(*) AS BIGINT) AS n, sum(x::HUGEINT) AS sx, sum(rn::HUGEINT * x) AS srx FROM rk)
-         SELECT n, CAST(sx AS BIGINT) AS sum_spend_c,
-           CASE WHEN sx = 0 THEN CAST(NULL AS BIGINT)
-           ELSE CAST(((2::HUGEINT * srx - (n::HUGEINT + 1) * sx) * 1000000) // (n::HUGEINT * sx) AS BIGINT) END AS gini_micro
-         FROM g""",
-    // q_auc: identical per-score counts, exclusive cumulative, doubled
-    // Mann–Whitney numerator, one integral division
-    // q_auc_delong: the same score histogram with both prefix sums;
-    // structural-component sums of squares through HUGEINT, then the
-    // identical double chain (aucd → s10/s01 → se → CI).
-    "q_auc_delong" ->
-      """WITH pu AS (SELECT user_id, CAST(ts AS DATE) AS day, CAST(sum(CASE WHEN event_type IN ('view','click') THEN 1 ELSE 0 END) AS BIGINT) AS score, CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS label FROM events GROUP BY 1, 2), bs AS (SELECT score, CAST(sum(label) AS BIGINT) AS pos, CAST(sum(1 - label) AS BIGINT) AS neg FROM pu GROUP BY 1), c AS (SELECT score, pos, neg, CAST(coalesce(sum(neg) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS neg_below, CAST(coalesce(sum(pos) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pos_below, CAST(sum(pos) OVER () AS BIGINT) AS tp FROM bs), g AS (SELECT CAST(sum(pos) AS BIGINT) AS n1, CAST(sum(neg) AS BIGINT) AS n0, CAST(sum(pos * (2 * neg_below + neg)) AS BIGINT) AS u2, sum(CAST(pos AS HUGEINT) * (2 * neg_below + neg) * (2 * neg_below + neg)) AS q1, sum(CAST(neg AS HUGEINT) * (2 * (tp - pos_below - pos) + pos) * (2 * (tp - pos_below - pos) + pos)) AS q0 FROM c), a AS (SELECT *, CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)) AS aucd FROM g), v AS (SELECT *, (CAST(q1 AS DOUBLE) / (4.0 * CAST(n0 AS DOUBLE) * CAST(n0 AS DOUBLE)) - CAST(n1 AS DOUBLE) * aucd * aucd) / (CAST(n1 AS DOUBLE) - 1.0) AS s10, (CAST(q0 AS DOUBLE) / (4.0 * CAST(n1 AS DOUBLE) * CAST(n1 AS DOUBLE)) - CAST(n0 AS DOUBLE) * aucd * aucd) / (CAST(n0 AS DOUBLE) - 1.0) AS s01 FROM a), e AS (SELECT *, sqrt(s10 / CAST(n1 AS DOUBLE) + s01 / CAST(n0 AS DOUBLE)) AS se FROM v) SELECT n1 AS n_pos, n0 AS n_neg, CASE WHEN n1 = 0 OR n0 = 0 THEN CAST(NULL AS BIGINT) ELSE CAST((u2 * 1000000) // (2 * n1 * n0) AS BIGINT) END AS auc_micro, CASE WHEN n1 < 2 OR n0 < 2 THEN CAST(NULL AS BIGINT) ELSE CAST(round(se * 1000000) AS BIGINT) END AS se_micro, CASE WHEN n1 < 2 OR n0 < 2 THEN CAST(NULL AS BIGINT) ELSE CAST(round((aucd - 1.96 * se) * 1000000) AS BIGINT) END AS lo_micro, CASE WHEN n1 < 2 OR n0 < 2 THEN CAST(NULL AS BIGINT) ELSE CAST(round((aucd + 1.96 * se) * 1000000) AS BIGINT) END AS hi_micro FROM e""",
-    "q_auc" ->
-      """WITH pu AS (SELECT user_id, CAST(ts AS DATE) AS day,
-           CAST(sum(CASE WHEN event_type IN ('view','click') THEN 1 ELSE 0 END) AS BIGINT) AS score,
-           CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS label
-         FROM events GROUP BY 1, 2),
-         bs AS (SELECT score, CAST(sum(label) AS BIGINT) AS pos, CAST(sum(1 - label) AS BIGINT) AS neg FROM pu GROUP BY 1),
-         c AS (SELECT pos, neg, coalesce(sum(neg) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS neg_below FROM bs),
-         a AS (SELECT CAST(sum(pos) AS BIGINT) AS p, CAST(sum(neg) AS BIGINT) AS n,
-                      CAST(sum(neg_below * pos * 2 + pos * neg) AS BIGINT) AS u2 FROM c)
-         SELECT p AS n_pos, n AS n_neg, u2 AS u_doubled,
-           CASE WHEN p = 0 OR n = 0 THEN CAST(NULL AS BIGINT)
-           ELSE CAST((u2 * 1000000) // (2 * p * n) AS BIGINT) END AS auc_micro
-         FROM a""",
-    // q_benford: the same nine micro-log10 literals, HUGEINT squared
-    // deviation, integral division
-    "q_benford" ->
-      """WITH d AS (SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit FROM orders),
-         obs AS (SELECT digit, CAST(count(*) AS BIGINT) AS observed FROM d GROUP BY 1),
-         t AS (SELECT CAST(sum(observed) AS BIGINT) AS n_total FROM obs),
-         c AS (SELECT digit, observed,
-                 n_total * ([301030,176091,124939,96910,79181,66947,57992,51153,45757])[digit] AS expected_micro
-               FROM obs, t)
-         SELECT CAST(digit AS BIGINT) AS digit, observed, CAST(expected_micro AS BIGINT) AS expected_micro,
-           CAST(((observed * 1000000 - expected_micro)::HUGEINT * (observed * 1000000 - expected_micro))
-                // expected_micro AS BIGINT) AS chi2_cell_micro
-         FROM c""",
-    // rec_itemitem: same width cap, support floor, cosine² integer
-    // score, QUALIFY top-3 per item
-    // rec_mrr: rec_itemitem's similarity replay retrained on train
-    // baskets only (rn > 1 per customer), candidate fan-out through each
-    // profile item's top-3 neighbors, seen-filter, top-10, first-hit
-    // reciprocal rank; all ties (score desc, id asc), nonnegative // ≡ div.
-    "rec_mrr" ->
-      s"""WITH seqo AS (SELECT o_orderkey, o_custkey, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn, count(*) OVER (PARTITION BY o_custkey) AS no FROM orders),
-         el AS (SELECT o_orderkey, o_custkey, rn FROM seqo WHERE no >= 2),
-         items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-         train AS (SELECT o_orderkey AS o, o_custkey AS c FROM el WHERE rn > 1),
-         test AS (SELECT o_orderkey AS o, o_custkey AS c FROM el WHERE rn = 1),
-         ti AS (SELECT DISTINCT c, p FROM train JOIN items USING (o)),
-         te AS (SELECT DISTINCT c, p FROM test JOIN items USING (o)),
-         tb AS (SELECT i.o, i.p FROM items i WHERE i.o IN (SELECT o FROM train)),
-         capped AS (SELECT o, p FROM tb QUALIFY count(*) OVER (PARTITION BY o) <= $kcoreOrderCap),
-         freq AS (SELECT p, CAST(count(*) AS BIGINT) AS n FROM capped GROUP BY 1),
-         pr AS (SELECT a.p AS i, b.p AS j, CAST(count(*) AS BIGINT) AS cooc FROM capped a JOIN capped b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2 HAVING count(*) >= 2),
-         dirp AS (SELECT i, j, cooc FROM pr UNION ALL SELECT j, i, cooc FROM pr),
-         sc AS (SELECT d.i, d.j, CAST((d.cooc * d.cooc * 1000000) // (fi.n * fj.n) AS BIGINT) AS score_micro FROM dirp d JOIN freq fi ON d.i = fi.p JOIN freq fj ON d.j = fj.p),
-         s3 AS (SELECT i, j, score_micro FROM (SELECT *, row_number() OVER (PARTITION BY i ORDER BY score_micro DESC, j) AS rk FROM sc) WHERE rk <= 3),
-         cand AS (SELECT ti.c, s3.j, CAST(sum(score_micro) AS BIGINT) AS scsum FROM ti JOIN s3 ON ti.p = s3.i GROUP BY 1, 2),
-         fresh AS (SELECT cand.c, cand.j, scsum FROM cand LEFT JOIN ti tx ON cand.c = tx.c AND cand.j = tx.p WHERE tx.p IS NULL),
-         t10 AS (SELECT c, j, rk FROM (SELECT *, row_number() OVER (PARTITION BY c ORDER BY scsum DESC, j) AS rk FROM fresh) WHERE rk <= 10),
-         h AS (SELECT t10.c, CAST(count(*) AS BIGINT) AS n_hits, CAST(min(rk) AS BIGINT) AS best_rank FROM t10 JOIN te ON t10.c = te.c AND t10.j = te.p GROUP BY 1),
-         ntst AS (SELECT c, CAST(count(*) AS BIGINT) AS n_test FROM te GROUP BY 1)
-         SELECT ntst.c AS customer_id, n_test, CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits, best_rank, CAST(CASE WHEN best_rank IS NULL THEN 0 ELSE 1000000 // best_rank END AS BIGINT) AS rr_micro FROM ntst LEFT JOIN h ON ntst.c = h.c""",
-    "rec_itemitem" -> recItemItemOracleSql,
-    // q_bitmap: same 32-bit word packing, bit_or bitmaps, bit_count
-    // popcounts, word-aligned AND for the overlap row
-    "q_bitmap" ->
-      """WITH bm AS (SELECT event_type, user_id // 32 AS word_id,
-           bit_or(1::BIGINT << CAST(user_id % 32 AS INTEGER)) AS bits
-         FROM events GROUP BY 1, 2),
-         per_type AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(bit_count(bits)) AS BIGINT) AS n_users FROM bm GROUP BY 1),
-         ov AS (SELECT 'view&purchase' AS event_type, CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(bit_count(a.bits & b.bits)) AS BIGINT) AS n_users
-         FROM bm a JOIN bm b ON a.word_id = b.word_id
-         WHERE a.event_type = 'view' AND b.event_type = 'purchase')
-         SELECT * FROM per_type UNION ALL SELECT * FROM ov""",
-    // ev_seqmine: identical per-user double-lead trigrams and support floor
-    "ev_seqmine" ->
-      """WITH t AS (SELECT user_id, event_type,
-           lead(event_type, 1) OVER w AS t2, lead(event_type, 2) OVER w AS t3
-         FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         tri AS (SELECT user_id, event_type || '>' || t2 || '>' || t3 AS trigram
-           FROM t WHERE t3 IS NOT NULL)
-         SELECT trigram, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(count(*) AS BIGINT) AS n_occurrences
-         FROM tri GROUP BY 1 HAVING count(DISTINCT user_id) >= 2""",
-    // ev_survival: per-day risk table, then the recursive CTE replays the
-    // driver fold's exact HUGEINT floor division day by day
-    "ev_survival" ->
-      """WITH RECURSIVE pu AS (SELECT user_id, min(ts) AS t0,
-           min(CASE WHEN event_type = 'purchase' THEN ts END) AS tp
-         FROM events GROUP BY 1),
-         mx AS (SELECT max(ts) AS tmax FROM events),
-         du AS (SELECT (epoch_us(coalesce(tp, tmax)) - epoch_us(t0)) // 86400000000 AS dur,
-                       CASE WHEN tp IS NULL THEN 0 ELSE 1 END AS obs FROM pu, mx),
-         byday AS (SELECT dur, CAST(sum(obs) AS BIGINT) AS d,
-                          CAST(sum(1 - obs) AS BIGINT) AS c FROM du GROUP BY 1),
-         tot AS (SELECT CAST(sum(d + c) AS BIGINT) AS n FROM byday),
-         ev AS (SELECT dur, d, c, row_number() OVER (ORDER BY dur) AS rn,
-                  n - coalesce(sum(d + c) OVER (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS at_risk
-                FROM byday, tot),
-         km AS (
-           SELECT rn, dur, d, c, at_risk,
-             CASE WHEN d > 0 THEN (1000000000000::HUGEINT * (at_risk - d)) // at_risk
-                  ELSE 1000000000000::HUGEINT END AS s
-           FROM ev WHERE rn = 1
-           UNION ALL
-           SELECT e.rn, e.dur, e.d, e.c, e.at_risk,
-             CASE WHEN e.d > 0 THEN (k.s * (e.at_risk - e.d)) // e.at_risk ELSE k.s END
-           FROM km k JOIN ev e ON e.rn = k.rn + 1)
-         SELECT dur AS day, CAST(at_risk AS BIGINT) AS n_risk, d AS n_events, c AS n_censored,
-           CAST(s AS BIGINT) AS surv_pico
-         FROM km WHERE d > 0""",
-    // ev_hazard: ev_survival's risk table, but the hazard is a running
-    // SUM of once-rounded integer terms — pure window SQL, no recursion.
-    "ev_hazard" ->
-      """WITH pu AS (SELECT user_id, min(ts) AS t0, min(CASE WHEN event_type = 'purchase' THEN ts END) AS tp FROM events GROUP BY 1), mx AS (SELECT max(ts) AS tmax FROM events), du AS (SELECT (epoch_us(coalesce(tp, tmax)) - epoch_us(t0)) // 86400000000 AS dur, CASE WHEN tp IS NULL THEN 0 ELSE 1 END AS obs FROM pu, mx), byday AS (SELECT dur, CAST(sum(obs) AS BIGINT) AS d, CAST(sum(1 - obs) AS BIGINT) AS c FROM du GROUP BY 1), tot AS (SELECT CAST(sum(d + c) AS BIGINT) AS n FROM byday), evt AS (SELECT dur, d, CAST(n - coalesce(sum(d + c) OVER (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n_risk FROM byday, tot), tm AS (SELECT dur, d, n_risk, CASE WHEN d > 0 THEN CAST(CAST(d AS HUGEINT) * 1000000 // n_risk AS BIGINT) ELSE CAST(0 AS BIGINT) END AS term FROM evt), cm AS (SELECT dur, d, n_risk, term, CAST(sum(term) OVER (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cumhaz_micro FROM tm) SELECT dur AS day, n_risk, d AS n_events, term AS hazard_micro, cumhaz_micro FROM cm WHERE d > 0""",
-    // ev_logrank: per-arm at-risk from prior-rows windows over the
-    // day x arm grid; staged HUGEINT divisions in the engine's op order.
-    "ev_logrank" ->
-      """WITH pu AS (SELECT user_id, min(ts) AS t0, min(CASE WHEN event_type = 'purchase' THEN ts END) AS tp FROM events GROUP BY 1), mx AS (SELECT max(ts) AS tmax FROM events), du AS (SELECT user_id % 2 AS arm, (epoch_us(coalesce(tp, tmax)) - epoch_us(t0)) // 86400000000 AS dur, CASE WHEN tp IS NULL THEN 0 ELSE 1 END AS obs FROM pu, mx), bda AS (SELECT dur, arm, CAST(sum(obs) AS BIGINT) AS d, CAST(sum(1 - obs) AS BIGINT) AS c FROM du GROUP BY 1, 2), grid AS (SELECT g.dur, a.arm FROM (SELECT DISTINCT dur FROM bda) g CROSS JOIN (VALUES (CAST(0 AS BIGINT)), (CAST(1 AS BIGINT))) a(arm)), full0 AS (SELECT g.dur, g.arm, coalesce(b.d, 0) AS d, coalesce(b.c, 0) AS c FROM grid g LEFT JOIN bda b ON g.dur = b.dur AND g.arm = b.arm), risk AS (SELECT dur, arm, d, CAST(sum(d + c) OVER (PARTITION BY arm) - coalesce(sum(d + c) OVER (PARTITION BY arm ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n_arm FROM full0), bd AS (SELECT dur, CAST(sum(d) AS BIGINT) AS dt, CAST(sum(CASE WHEN arm = 1 THEN d ELSE 0 END) AS BIGINT) AS d1, CAST(sum(n_arm) AS BIGINT) AS nt, CAST(sum(CASE WHEN arm = 1 THEN n_arm ELSE 0 END) AS BIGINT) AS n1 FROM risk GROUP BY 1 HAVING sum(d) > 0 AND sum(n_arm) > 0), tm AS (SELECT d1, CAST(CAST(dt AS HUGEINT) * n1 * 1000000 // nt AS BIGINT) AS e1, CAST(CASE WHEN nt > 1 THEN ((CAST(dt AS HUGEINT) * n1 * 1000000 // nt) * (nt - n1) // nt) * (nt - dt) // (nt - 1) ELSE CAST(0 AS HUGEINT) END AS BIGINT) AS v1 FROM bd), ag AS (SELECT CAST(sum(d1) AS BIGINT) AS o1, CAST(sum(e1) AS BIGINT) AS e1_micro, CAST(sum(v1) AS BIGINT) AS v1_micro FROM tm) SELECT o1, e1_micro, v1_micro, CASE WHEN v1_micro = 0 THEN NULL ELSE CAST((CAST(o1 AS HUGEINT) * 1000000 - e1_micro) * (CAST(o1 AS HUGEINT) * 1000000 - e1_micro) // v1_micro AS BIGINT) END AS chi2_micro FROM ag""",
-    // ta_rake: identical delimiter-marking regexes (global flag), degree/
-    // freq word scores, phrase-sum scores, deterministic top-15
-    "ta_rake" ->
-      """WITH ph0 AS (SELECT unnest(string_split(
-           regexp_replace(regexp_replace(lower(text), '[^a-z ]+', '|', 'g'),
-             '\b(the|of|and|a|to|in|is|on|for|with|as|by|at|an|be|are|was|it|that|this|from|or)\b', '|', 'g'),
-           '|')) AS rawp FROM documents),
-         ph AS (SELECT regexp_replace(trim(rawp), ' +', ' ', 'g') AS phrase FROM ph0),
-         occ AS (SELECT phrase FROM ph WHERE phrase <> '' AND len(string_split(phrase, ' ')) <= 4),
-         w AS (SELECT CAST(len(string_split(phrase, ' ')) AS BIGINT) AS plen,
-                      unnest(string_split(phrase, ' ')) AS word FROM occ),
-         ws AS (SELECT word, CAST(count(*) AS BIGINT) AS freq,
-                       CAST(sum(plen) AS BIGINT) AS degree FROM w GROUP BY 1),
-         pd AS (SELECT DISTINCT phrase FROM occ),
-         pw AS (SELECT phrase, unnest(string_split(phrase, ' ')) AS word FROM pd),
-         psc AS (SELECT pw.phrase, CAST(sum((ws.degree * 1000000) // ws.freq) AS BIGINT) AS score_micro
-                 FROM pw JOIN ws USING (word) GROUP BY 1),
-         oc AS (SELECT phrase, CAST(count(*) AS BIGINT) AS n_occurrences FROM occ GROUP BY 1)
-         SELECT psc.phrase, CAST(len(string_split(psc.phrase, ' ')) AS BIGINT) AS n_words,
-           oc.n_occurrences, psc.score_micro
-         FROM psc JOIN oc USING (phrase)
-         ORDER BY score_micro DESC, phrase LIMIT 15""",
-    // q_abc: same exact cumulative thresholds over the descending
-    // revenue order
-    "q_abc" ->
-      """WITH rev AS (SELECT l_partkey, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS rev_c FROM lineitem GROUP BY 1),
-         tot AS (SELECT CAST(sum(rev_c) AS BIGINT) AS total_c FROM rev),
-         cum AS (SELECT l_partkey, rev_c, sum(rev_c) OVER (ORDER BY rev_c DESC, l_partkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_c FROM rev),
-         cls AS (SELECT CASE WHEN cum_c * 100 <= total_c * 80 THEN 'A'
-                             WHEN cum_c * 100 <= total_c * 95 THEN 'B'
-                             ELSE 'C' END AS abc_class, rev_c, total_c FROM cum, tot)
-         SELECT abc_class, CAST(count(*) AS BIGINT) AS n_parts,
-           CAST(sum(rev_c) AS BIGINT) AS revenue_c,
-           CAST((sum(rev_c)::HUGEINT * 1000000) // max(total_c) AS BIGINT) AS share_micro
-         FROM cls GROUP BY 1""",
-    // stream_bitmap: the batch per-type bitmap section (streamed bit_or
-    // must equal it exactly)
-    "stream_bitmap" ->
-      """WITH bm AS (SELECT event_type, user_id // 32 AS word_id,
-           bit_or(1::BIGINT << CAST(user_id % 32 AS INTEGER)) AS bits
-         FROM events GROUP BY 1, 2)
-         SELECT event_type, CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(bit_count(bits)) AS BIGINT) AS n_users FROM bm GROUP BY 1""",
-    // mm_phash: full 8×8 DCT spectrum recomputed from doc_id alone with
-    // the identical fixed-point cosine integers (interpolated below)
-    "mm_phash" -> mmPhashOracle,
-    // ev_ltv: the same floor(0.9^dy·1e6) literal decay table, all-integer
-    "ev_ltv" ->
-      """WITH o AS (SELECT o_custkey, year(o_orderdate) AS yr, CAST(round(o_totalprice * 100) AS BIGINT) AS price_c FROM orders), f AS (SELECT o_custkey, min(yr) AS yr0 FROM o GROUP BY 1), d(dy, decay_micro) AS (VALUES (0, 1000000), (1, 900000), (2, 810000), (3, 729000), (4, 656100), (5, 590490), (6, 531441), (7, 478296), (8, 430467), (9, 387420), (10, 348678)) SELECT o.o_custkey AS custkey, CAST(count(*) AS BIGINT) AS n_orders, CAST(sum(price_c) AS BIGINT) AS raw_c, CAST(sum((price_c * decay_micro) // 1000000) AS BIGINT) AS ltv_c FROM o JOIN f USING (o_custkey) JOIN d ON d.dy = o.yr - f.yr0 GROUP BY 1""",
-    "ev_gapfill" ->
-      """WITH daily AS (SELECT user_id, CAST(ts AS DATE) AS d, max(CAST(round(value * 100) AS BIGINT)) AS v_c FROM events GROUP BY 1, 2), sp AS (SELECT user_id, min(d) AS d0, max(d) AS d1 FROM daily GROUP BY 1), spine AS (SELECT user_id, CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS d FROM sp) SELECT s.user_id, s.d, last_value(daily.v_c IGNORE NULLS) OVER (PARTITION BY s.user_id ORDER BY s.d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled, daily.v_c IS NULL AS is_gap FROM spine s LEFT JOIN daily ON daily.user_id = s.user_id AND daily.d = s.d""",
-    "ev_churn" ->
-      """WITH um AS (SELECT DISTINCT user_id, CAST(date_trunc('month', ts) AS DATE) AS m FROM events), f AS (SELECT user_id, min(m) AS first_m FROM um GROUP BY 1), nx AS (SELECT user_id, CAST(m - INTERVAL 1 MONTH AS DATE) AS m, TRUE AS has_next FROM um) SELECT um.m AS month, CAST(count(*) AS BIGINT) AS n_active, CAST(sum(CASE WHEN nx.has_next THEN 1 ELSE 0 END) AS BIGINT) AS n_retained, CAST(sum(CASE WHEN nx.has_next IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_churned, CAST(sum(CASE WHEN f.first_m = um.m THEN 1 ELSE 0 END) AS BIGINT) AS n_new FROM um LEFT JOIN nx ON nx.user_id = um.user_id AND nx.m = um.m JOIN f ON f.user_id = um.user_id GROUP BY 1""",
-    "q_grouped_ols" ->
-      """WITH li AS (SELECT p_brand, CAST(l_quantity AS HUGEINT) AS x, CAST(round(l_extendedprice * 100) AS HUGEINT) AS y FROM lineitem JOIN part ON l_partkey = p_partkey), g AS (SELECT p_brand, CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx, sum(x * y) AS sxy FROM li GROUP BY 1) SELECT p_brand, CAST(n AS BIGINT) AS n, CAST(sx AS BIGINT) AS sx, CAST(sy AS BIGINT) AS sy, CAST(((n * sxy - sx * sy) * 1000000) // (n * sxx - sx * sx) AS BIGINT) AS slope_micro, CAST((sy * 1000000 - ((n * sxy - sx * sy) * 1000000) // (n * sxx - sx * sx) * sx) // n AS BIGINT) AS icept_micro FROM g""",
-    "q_pr_curve" ->
-      """WITH ps AS (SELECT CAST(l_quantity AS BIGINT) AS threshold, CAST(count(*) AS BIGINT) AS n, CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS p FROM lineitem GROUP BY 1), c AS (SELECT threshold, sum(p) OVER w AS tp, sum(n) OVER w - sum(p) OVER w AS fp, sum(p) OVER () AS p_tot FROM ps WINDOW w AS (ORDER BY threshold DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) SELECT threshold, CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp, CAST((tp * 1000000) // (tp + fp) AS BIGINT) AS precision_micro, CAST((tp * 1000000) // p_tot AS BIGINT) AS recall_micro FROM c""",
-    "q_spatial_join" ->
-      """WITH pts AS (SELECT c_custkey AS id, (c_custkey * 2654435761) % 1000 AS x, (c_custkey * 2246822519) % 1000 AS y FROM customer), g AS (SELECT id, x, y, x // 50 AS cx, y // 50 AS cy FROM pts) SELECT a.id AS a_id, b.id AS b_id, CAST((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS BIGINT) AS dist2 FROM g a JOIN g b ON a.id < b.id AND abs(a.cx - b.cx) <= 1 AND abs(a.cy - b.cy) <= 1 WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 2500""",
-    "g_assortativity" ->
-      """WITH e AS (SELECT DISTINCT o_custkey AS c, l_suppkey AS sp FROM lineitem JOIN orders ON l_orderkey = o_orderkey), dc AS (SELECT c, CAST(count(*) AS HUGEINT) AS dc FROM e GROUP BY 1), ds AS (SELECT sp, CAST(count(*) AS HUGEINT) AS ds FROM e GROUP BY 1), j AS (SELECT dc.dc AS x, ds.ds AS y FROM e JOIN dc USING (c) JOIN ds USING (sp)), g AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy FROM j) SELECT CAST(n AS BIGINT) AS n_edges, CAST(round(CAST(n * sxy - sx * sy AS DOUBLE) / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) * sqrt(CAST(n * syy - sy * sy AS DOUBLE))) * 1000000) AS BIGINT) AS r_micro FROM g""",
-    "sk_bloom_planner" ->
-      """WITH n AS (SELECT source, CAST(count(*) AS HUGEINT) AS n FROM documents GROUP BY 1), t(fpp_bp, lnp) AS (VALUES (100, 4605170185988), (10, 6907755278982)), m AS (SELECT source, n, fpp_bp, CAST(lnp AS HUGEINT) AS lnp, (n * lnp + 480453013917) // 480453013918 AS m_bits FROM n, t) SELECT source, CAST(n AS BIGINT) AS n_items, CAST(fpp_bp AS BIGINT) AS fpp_bp, CAST(m_bits AS BIGINT) AS m_bits, CAST((m_bits * 693147180560 + n * 500000000000) // (n * 1000000000000) AS BIGINT) AS k_hashes, CAST((m_bits * 1000000) // n AS BIGINT) AS bits_per_item_micro FROM m""",
-    // ta_burrows: same token agg, TakeOrdered top-30, dense grid with
-    // real zeros, exact-integer z numerator micro-rounded before the
-    // pair mean; zero-variance words excluded by the identical integer
-    // test.
-    "ta_burrows" ->
-      """WITH tok AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS w FROM documents), topw AS (SELECT w FROM (SELECT w, count(*) AS cw FROM tok GROUP BY 1 ORDER BY cw DESC, w LIMIT 30)), tot AS (SELECT source, CAST(count(*) AS BIGINT) AS tot FROM tok GROUP BY 1), cnt AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM tok JOIN topw USING (w) GROUP BY 1, 2), grid AS (SELECT t.source, p.w, CAST((CAST(coalesce(c.c, 0) AS HUGEINT) * 1000000) // t.tot AS BIGINT) AS f FROM tot t CROSS JOIN topw p LEFT JOIN cnt c ON c.source = t.source AND c.w = p.w), stats AS (SELECT w, CAST(count(*) AS HUGEINT) AS n, sum(CAST(f AS HUGEINT)) AS s1, sum(CAST(f AS HUGEINT) * f) AS s2 FROM grid GROUP BY 1), z AS (SELECT g.source, g.w, CAST(round(CAST(s.n * g.f - s.s1 AS DOUBLE) / sqrt(CAST(s.n * s.s2 - s.s1 * s.s1 AS DOUBLE)) * 1000000) AS BIGINT) AS z FROM grid g JOIN stats s USING (w) WHERE s.n * s.s2 > s.s1 * s.s1) SELECT a.source AS source_a, b.source AS source_b, CAST(count(*) AS BIGINT) AS n_words, CAST(sum(abs(a.z - b.z)) // count(*) AS BIGINT) AS delta_micro FROM z a JOIN z b ON a.w = b.w AND a.source < b.source GROUP BY 1, 2""",
-    "ta_hapax" ->
-      """WITH tok AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS w FROM documents), c AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2) SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens, CAST(count(*) AS BIGINT) AS n_vocab, CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax, CAST((count(*) * 1000000) // sum(c) AS BIGINT) AS ttr_micro, CAST((sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 1000000) // count(*) AS BIGINT) AS hapax_micro FROM c GROUP BY 1""",
-    // ta_yule: same (source, word) counts; K scaled to milli
-    // (10⁴·K → ×10⁷ over N²) through HUGEINT
-    "ta_yule" ->
-      """WITH tok AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS w FROM documents), c AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2) SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens, CAST(count(*) AS BIGINT) AS n_vocab, CAST(sum(c::HUGEINT * c) AS BIGINT) AS sum_c2, CAST(((sum(c::HUGEINT * c) - sum(c)) * 10000000) // (sum(c)::HUGEINT * sum(c)) AS BIGINT) AS yule_k_milli FROM c GROUP BY 1""",
-    // dd_url: the same planted variants and the same canonicalization
-    // regex chain, replayed step for step
-    "dd_url" ->
-      """WITH u0 AS (SELECT doc_id, CASE CAST(doc_id % 4 AS INTEGER) WHEN 0 THEN 'HTTP://Example.COM:80/Shop/' || CAST(doc_id // 4 AS VARCHAR) || '/?utm_source=news&b=2&a=1#frag' WHEN 1 THEN 'http://example.com/Shop/' || CAST(doc_id // 4 AS VARCHAR) || '?a=1&b=2' WHEN 2 THEN 'HTTPS://EXAMPLE.com/Shop/' || CAST(doc_id // 4 AS VARCHAR) || '/index.html?b=2&a=1&utm_campaign=sale' ELSE 'https://example.com:443/Shop/' || CAST(doc_id // 4 AS VARCHAR) || '/index.html?b=2&a=1#top' END AS url FROM documents), u1 AS (SELECT doc_id, regexp_replace(url, '#.*$', '') AS u1 FROM u0), p AS (SELECT doc_id, lower(regexp_extract(u1, '^([A-Za-z]+)://', 1)) AS scheme, lower(regexp_replace(regexp_extract(u1, '^[A-Za-z]+://([^/?#]+)', 1), ':[0-9]+$', '')) AS host, regexp_replace(regexp_replace(regexp_extract(u1, '^[A-Za-z]+://[^/?#]+([^?#]*)', 1), '/index\.html$', '/'), '/$', '') AS path, array_to_string(list_sort(list_filter(string_split(regexp_extract(u1, '\?([^#]*)', 1), '&'), x -> x <> '' AND NOT regexp_matches(x, '^utm_'))), '&') AS q FROM u1), c AS (SELECT doc_id, scheme || '://' || host || path || CASE WHEN q = '' THEN '' ELSE '?' || q END AS canonical_url FROM p) SELECT canonical_url, CAST(count(*) AS BIGINT) AS n_variants, CAST(min(doc_id) AS BIGINT) AS keeper_doc FROM c GROUP BY 1""",
-    "ta_boilerplate" ->
-      """WITH docs AS (SELECT doc_id, 'home | products | about | contact' || chr(10) || text || chr(10) || 'subscribe to our newsletter' || chr(10) || 'doc ' || CAST(doc_id AS VARCHAR) || ' extras' || chr(10) || '© 2024 example corp' AS page FROM documents), lines AS (SELECT doc_id, CAST(i AS BIGINT) AS pos, l[i+1] AS line FROM (SELECT doc_id, l, unnest(range(len(l))) AS i FROM (SELECT doc_id, string_split(page, chr(10)) AS l FROM docs))), nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM docs), b AS (SELECT line FROM (SELECT line, CAST(count(DISTINCT doc_id) AS BIGINT) AS ndd FROM lines GROUP BY 1), nd WHERE ndd * 4 >= n_docs) SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines, CAST(sum(CASE WHEN line IN (SELECT line FROM b) THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler, coalesce(string_agg(CASE WHEN line NOT IN (SELECT line FROM b) THEN line END, chr(10) ORDER BY pos), '') AS clean_text FROM lines GROUP BY 1""",
-    "ta_code_detect" ->
-      """WITH t AS (SELECT doc_id, CASE WHEN doc_id % 5 = 0 THEN text || ' function add(a, b) { return a + b; } var x = []; import os;' ELSE text END AS t FROM documents), s AS (SELECT doc_id, CAST(length(regexp_replace(t, '[^{};()=<>\[\]]', '', 'g')) AS BIGINT) AS n_sym, CAST(len(regexp_extract_all(t, '(function|return|var|import|def)', 1)) AS BIGINT) AS n_kw, CAST(length(t) AS BIGINT) AS n_len FROM t) SELECT doc_id, n_sym, n_kw, ((n_sym + 3 * n_kw) * 1000000) // n_len AS score_micro, n_sym > 0 AND ((n_sym + 3 * n_kw) * 1000000) // n_len >= 1000 AS is_code FROM s""",
-    "q_mode" ->
-      """WITH c AS (SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS qty, CAST(count(*) AS BIGINT) AS c FROM lineitem GROUP BY 1, 2) SELECT l_returnflag, qty AS mode_qty, c AS mode_n FROM c QUALIFY row_number() OVER (PARTITION BY l_returnflag ORDER BY c DESC, qty ASC) = 1""",
-    "ev_heatmap" ->
-      """WITH cells AS (SELECT CAST(dayofweek(ts) AS BIGINT) AS dow, CAST(hour(ts) AS BIGINT) AS hr, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2), t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM cells) SELECT dow, hr, n, CAST((n * 1000000) // total AS BIGINT) AS share_micro FROM cells, t""",
-    "q_treeagg" ->
-      """WITH rev AS (SELECT o_custkey AS c, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c FROM orders GROUP BY 1), a AS (SELECT unnest(list_distinct([c, c // 10, c // 100, c // 1000, c // 10000, c // 100000, c // 1000000, c // 10000000])) AS node, rev_c FROM rev) SELECT CAST(node AS BIGINT) AS node, CAST(count(*) AS BIGINT) AS n_desc, CAST(sum(rev_c) AS BIGINT) AS subtree_rev_c FROM a GROUP BY 1""",
-    "ev_concurrency" ->
-      """WITH e AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) AS es FROM events), seg AS (SELECT es // 86400 AS day, es % 86400 AS a, es % 86400 + 3600 AS b FROM e WHERE es % 86400 + 3600 <= 86400 UNION ALL SELECT es // 86400, es % 86400, 86400 FROM e WHERE es % 86400 + 3600 > 86400 UNION ALL SELECT es // 86400 + 1, 0, es % 86400 + 3600 - 86400 FROM e WHERE es % 86400 + 3600 > 86400), del AS (SELECT day, a AS sec, CAST(1 AS BIGINT) AS delta FROM seg UNION ALL SELECT day, b, CAST(-1 AS BIGINT) FROM seg), g AS (SELECT day, sec, delta, CAST(sum(delta) AS BIGINT) AS d FROM del GROUP BY 1, 2, 3), r AS (SELECT day, sum(d) OVER (PARTITION BY day ORDER BY sec, delta ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run FROM g) SELECT CAST(day AS BIGINT) AS day, CAST(max(run) AS BIGINT) AS peak FROM r GROUP BY 1""",
-    "ev_cuped" ->
-      """WITH ux AS (SELECT user_id, CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00' THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS x_c, CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-15 00:00:00' THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS y_c FROM events GROUP BY 1), g AS (SELECT CAST(count(*) AS HUGEINT) AS n, CAST(sum(x_c) AS HUGEINT) AS sx, CAST(sum(y_c) AS HUGEINT) AS sy, CAST(sum(CAST(x_c AS HUGEINT) * x_c) AS HUGEINT) AS sxx, CAST(sum(CAST(x_c AS HUGEINT) * y_c) AS HUGEINT) AS sxy FROM ux), t AS (SELECT n, sx, ((n * sxy - sx * sy) * 1000000) // (n * sxx - sx * sx) AS theta_micro FROM g) SELECT user_id, x_c, y_c, CAST(theta_micro AS BIGINT) AS theta_micro, CAST((n * y_c * 1000000 - theta_micro * (n * x_c - sx)) // n AS BIGINT) AS y_adj_micro FROM ux, t""",
-    // ev_uplift: window ntile(10) is exactly Ranks.groupedNtile's
-    // semantics (RanksSpec-proven); cumulative sums run over the 10-row
-    // decile frame; HUGEINT mirrors the engine's DECIMAL rate products.
-    "ev_uplift" ->
-      """WITH u AS (SELECT user_id, CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00' THEN 1 ELSE 0 END) AS BIGINT) AS pre_n, CAST(max(CASE WHEN ts >= TIMESTAMP '2024-01-15 00:00:00' AND event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS resp FROM events GROUP BY 1), d AS (SELECT user_id, resp, CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS treated, CAST(ntile(10) OVER (ORDER BY pre_n DESC, user_id) AS BIGINT) AS decile FROM u), b AS (SELECT decile, CAST(sum(CASE WHEN treated = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_t, CAST(sum(CASE WHEN treated = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_c, CAST(sum(CASE WHEN treated = 1 THEN resp ELSE 0 END) AS BIGINT) AS r_t, CAST(sum(CASE WHEN treated = 0 THEN resp ELSE 0 END) AS BIGINT) AS r_c FROM d GROUP BY 1), c AS (SELECT *, CAST(sum(n_t) OVER w AS HUGEINT) AS cn_t, CAST(sum(n_c) OVER w AS HUGEINT) AS cn_c, CAST(sum(r_t) OVER w AS HUGEINT) AS cr_t, CAST(sum(r_c) OVER w AS HUGEINT) AS cr_c FROM b WINDOW w AS (ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) SELECT decile, n_t, n_c, r_t, r_c, CASE WHEN n_t = 0 OR n_c = 0 THEN NULL ELSE CAST(CAST(r_t AS HUGEINT) * 1000000 // n_t - CAST(r_c AS HUGEINT) * 1000000 // n_c AS BIGINT) END AS uplift_micro, CASE WHEN cn_c = 0 THEN NULL ELSE CAST(cr_t * 1000000 - (cr_c * cn_t * 1000000) // cn_c AS BIGINT) END AS qini_micro FROM c""",
-    // ev_ipw: ev_uplift's user frame and decile machinery; HUGEINT
-    // mirrors the engine's DECIMAL HT-term products; nonnegative
-    // operands keep // and div identical.
-    "ev_ipw" ->
-      """WITH u AS (SELECT user_id, CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00' THEN 1 ELSE 0 END) AS BIGINT) AS pre_n, CAST(max(CASE WHEN ts >= TIMESTAMP '2024-01-15 00:00:00' AND event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS resp FROM events GROUP BY 1), d AS (SELECT user_id, resp, CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS treated, CAST(ntile(10) OVER (ORDER BY pre_n DESC, user_id) AS BIGINT) AS stratum FROM u), b AS (SELECT stratum, CAST(count(*) AS BIGINT) AS n_s, CAST(sum(CASE WHEN treated = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_t, CAST(sum(CASE WHEN treated = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_c, CAST(sum(CASE WHEN treated = 1 THEN resp ELSE 0 END) AS BIGINT) AS r_t, CAST(sum(CASE WHEN treated = 0 THEN resp ELSE 0 END) AS BIGINT) AS r_c FROM d GROUP BY 1) SELECT stratum, n_s, n_t, n_c, r_t, r_c, CAST(CAST(n_t AS HUGEINT) * 1000000 // n_s AS BIGINT) AS propensity_micro, CASE WHEN n_t = 0 OR n_c = 0 THEN NULL ELSE CAST(CAST(r_t AS HUGEINT) * n_s * 1000000 // n_t - CAST(r_c AS HUGEINT) * n_s * 1000000 // n_c AS BIGINT) END AS ht_term_micro FROM b""",
-    // ev_snips: identical per-(cohort, action) cells, HT terms
-    // micro-floored per cell, HUGEINT products
-    "ev_snips" -> snipsOracleSql,
-    // stream_snips: order-free mergeable cells ⇒ streamed ≡ batch
-    "stream_snips" -> snipsOracleSql,
-    // ev_tost: q_ttest's Welch replay on per-user spend with arms by
-    // parity; margin, t's and the equivalence verdict in the identical
-    // double op order.
-    "ev_tost" ->
-      """WITH u AS (SELECT user_id, CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS v FROM events GROUP BY 1), vv AS (SELECT user_id % 2 = 0 AS a, CAST(v AS HUGEINT) AS v FROM u), g AS (SELECT CAST(sum(CASE WHEN a THEN 1 ELSE 0 END) AS HUGEINT) AS n1, CAST(sum(CASE WHEN a THEN v END) AS HUGEINT) AS s1, CAST(sum(CASE WHEN a THEN v * v END) AS HUGEINT) AS ss1, CAST(sum(CASE WHEN NOT a THEN 1 ELSE 0 END) AS HUGEINT) AS n2, CAST(sum(CASE WHEN NOT a THEN v END) AS HUGEINT) AS s2, CAST(sum(CASE WHEN NOT a THEN v * v END) AS HUGEINT) AS ss2 FROM vv), d AS (SELECT n1, n2, CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS dm, abs(CAST(s1 + s2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)) * 0.02 AS delta, CAST(n1 * ss1 - s1 * s1 AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n1 AS DOUBLE) * CAST(n1 - 1 AS DOUBLE)) AS a1, CAST(n2 * ss2 - s2 * s2 AS DOUBLE) / (CAST(n2 AS DOUBLE) * CAST(n2 AS DOUBLE) * CAST(n2 - 1 AS DOUBLE)) AS a2 FROM g) SELECT CAST(n1 AS BIGINT) AS n_a, CAST(n2 AS BIGINT) AS n_b, CAST(round(dm * 1000000) AS BIGINT) AS dm_micro_c, CAST(round(delta * 1000000) AS BIGINT) AS delta_micro_c, CAST(round((dm + delta) / sqrt(a1 + a2) * 1000000) AS BIGINT) AS t_lower_micro, CAST(round((delta - dm) / sqrt(a1 + a2) * 1000000) AS BIGINT) AS t_upper_micro, least((dm + delta) / sqrt(a1 + a2), (delta - dm) / sqrt(a1 + a2)) > 1.645 AS equivalent FROM d""",
-    "ev_gaps" ->
-      """WITH g AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT) AS gap_s FROM events), b AS (SELECT CASE WHEN gap_s < 1 THEN '0_sub_second' WHEN gap_s < 10 THEN '1_under_10s' WHEN gap_s < 60 THEN '2_under_1m' WHEN gap_s < 600 THEN '3_under_10m' WHEN gap_s < 3600 THEN '4_under_1h' WHEN gap_s < 86400 THEN '5_under_1d' ELSE '6_over_1d' END AS bucket FROM g WHERE gap_s IS NOT NULL), c AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY 1), t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c) SELECT bucket, n, CAST((n * 1000000) // total AS BIGINT) AS share_micro FROM c, t""",
-    // q_cohend / q_rolling_corr: the double expressions are mirrored
-    // term for term — only correctly-rounded IEEE ops touch the floats
-    "q_cohend" ->
-      """WITH v AS (SELECT l_returnflag = 'R' AS r, CAST(round(l_extendedprice * 100) AS HUGEINT) AS v FROM lineitem), g AS (SELECT CAST(sum(CASE WHEN r THEN 1 ELSE 0 END) AS HUGEINT) AS n1, sum(CASE WHEN r THEN v END) AS s1, sum(CASE WHEN r THEN v * v END) AS ss1, CAST(sum(CASE WHEN NOT r THEN 1 ELSE 0 END) AS HUGEINT) AS n2, sum(CASE WHEN NOT r THEN v END) AS s2, sum(CASE WHEN NOT r THEN v * v END) AS ss2 FROM v) SELECT CAST(n1 AS BIGINT) AS n_returned, CAST(n2 AS BIGINT) AS n_kept, CAST(round((CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)) / sqrt(((CAST(n1 * ss1 - s1 * s1 AS DOUBLE) / CAST(n1 AS DOUBLE)) + (CAST(n2 * ss2 - s2 * s2 AS DOUBLE) / CAST(n2 AS DOUBLE))) / CAST(n1 + n2 - 2 AS DOUBLE)) * 1000000) AS BIGINT) AS cohen_d_micro FROM g""",
-    "q_rolling_corr" ->
-      """WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d, CAST(sum(CAST(l_quantity AS HUGEINT)) AS HUGEINT) AS x, CAST(sum(CAST(round(l_extendedprice * 100) AS HUGEINT)) AS HUGEINT) AS y FROM lineitem GROUP BY 1), dk AS (SELECT d, x, y, CAST(datediff('day', DATE '1970-01-01', d) AS BIGINT) AS dk FROM daily), w AS (SELECT d, CAST(count(*) OVER win AS HUGEINT) AS n, sum(x) OVER win AS sx, sum(y) OVER win AS sy, sum(x * x) OVER win AS sxx, sum(y * y) OVER win AS syy, sum(x * y) OVER win AS sxy FROM dk WINDOW win AS (ORDER BY dk RANGE BETWEEN 29 PRECEDING AND CURRENT ROW)) SELECT d, CAST(n AS BIGINT) AS n_days, CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0 THEN CAST(round(CAST(n * sxy - sx * sy AS DOUBLE) / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) * sqrt(CAST(n * syy - sy * sy AS DOUBLE))) * 1000000) AS BIGINT) END AS corr_micro FROM w""",
-    "ev_entry_exit" ->
-      """WITH ev AS (SELECT user_id, ts, event_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT) AS gap_s FROM events), s AS (SELECT user_id, ts, event_id, event_type, sum(CASE WHEN gap_s IS NULL OR gap_s > 1800 THEN 1 ELSE 0 END) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess FROM ev), r AS (SELECT user_id, sess, event_type, row_number() OVER (PARTITION BY user_id, sess ORDER BY ts, event_id) AS rn_a, row_number() OVER (PARTITION BY user_id, sess ORDER BY ts DESC, event_id DESC) AS rn_d FROM s), p AS (SELECT user_id, sess, max(CASE WHEN rn_a = 1 THEN event_type END) AS entry, max(CASE WHEN rn_d = 1 THEN event_type END) AS "exit" FROM r GROUP BY 1, 2), c AS (SELECT entry, "exit", CAST(count(*) AS BIGINT) AS n FROM p GROUP BY 1, 2), t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c) SELECT entry, "exit", n, CAST((n * 1000000) // total AS BIGINT) AS share_micro FROM c, t""",
-    "ev_baseline_anomaly" ->
-      """WITH cells AS (SELECT CAST(ts AS DATE) AS d, CAST(dayofweek(ts) AS BIGINT) AS dow, CAST(hour(ts) AS BIGINT) AS hr, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2, 3), b AS (SELECT dow, hr, CAST(sum(n) AS BIGINT) AS sum_n, CAST(count(*) AS BIGINT) AS n_obs FROM cells GROUP BY 1, 2) SELECT d, dow, hr, n, sum_n, n_obs, CAST((n * n_obs * 1000000) // sum_n AS BIGINT) AS ratio_micro, n * n_obs > sum_n * 3 AS is_spike FROM cells JOIN b USING (dow, hr)""",
-    "ev_did" ->
-      """WITH e AS (SELECT user_id % 2 = 1 AS t, ts >= TIMESTAMP '2024-01-15 00:00:00' AS p, CAST(round(value * 100) AS BIGINT) AS v FROM events), g AS (SELECT CAST(sum(CASE WHEN t AND p THEN v ELSE 0 END) AS BIGINT) AS s_tp, CAST(sum(CASE WHEN t AND p THEN 1 ELSE 0 END) AS BIGINT) AS n_tp, CAST(sum(CASE WHEN t AND NOT p THEN v ELSE 0 END) AS BIGINT) AS s_tb, CAST(sum(CASE WHEN t AND NOT p THEN 1 ELSE 0 END) AS BIGINT) AS n_tb, CAST(sum(CASE WHEN NOT t AND p THEN v ELSE 0 END) AS BIGINT) AS s_cp, CAST(sum(CASE WHEN NOT t AND p THEN 1 ELSE 0 END) AS BIGINT) AS n_cp, CAST(sum(CASE WHEN NOT t AND NOT p THEN v ELSE 0 END) AS BIGINT) AS s_cb, CAST(sum(CASE WHEN NOT t AND NOT p THEN 1 ELSE 0 END) AS BIGINT) AS n_cb FROM e) SELECT n_tp, n_tb, n_cp, n_cb, CAST((s_tp * 1000000) // n_tp - (s_tb * 1000000) // n_tb - ((s_cp * 1000000) // n_cp - (s_cb * 1000000) // n_cb) AS BIGINT) AS did_micro FROM g""",
-    // ta_span_corrupt: the seeded md5 residue, sentinel ranks, and both
-    // reassembled strings replayed with ordered string_agg
-    "ta_span_corrupt" ->
-      """WITH toks AS (SELECT doc_id, CAST(i AS BIGINT) AS pos, l[i+1] AS w, CAST(i // 3 AS BIGINT) AS grp FROM (SELECT doc_id, l, unnest(range(len(l))) AS i FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents))), g AS (SELECT DISTINCT doc_id, grp FROM toks), sel AS (SELECT doc_id, grp FROM g WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(grp AS VARCHAR)), 1, 4) AS BIGINT) % 5 = 0), sids AS (SELECT doc_id, grp, CAST(row_number() OVER (PARTITION BY doc_id ORDER BY grp) AS BIGINT) - 1 AS sid FROM sel), tk AS (SELECT t.doc_id, t.pos, t.w, t.grp, s.sid FROM toks t LEFT JOIN sids s ON s.doc_id = t.doc_id AND s.grp = t.grp), mp AS (SELECT doc_id, pos, w FROM tk WHERE sid IS NULL UNION ALL SELECT doc_id, min(pos), '<extra_id_' || CAST(sid AS VARCHAR) || '>' FROM tk WHERE sid IS NOT NULL GROUP BY doc_id, grp, sid), m AS (SELECT doc_id, string_agg(w, ' ' ORDER BY pos) AS masked_text FROM mp GROUP BY 1), sp AS (SELECT doc_id, grp, sid, string_agg(w, ' ' ORDER BY pos) AS span FROM tk WHERE sid IS NOT NULL GROUP BY 1, 2, 3), tg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans, string_agg('<extra_id_' || CAST(sid AS VARCHAR) || '> ' || span, ' ' ORDER BY grp) AS targets FROM sp GROUP BY 1) SELECT m.doc_id, coalesce(tg.n_spans, 0) AS n_spans, m.masked_text, coalesce(tg.targets, '') AS targets FROM m LEFT JOIN tg USING (doc_id)""",
-    "q_qq" ->
-      """WITH v AS (SELECT l_returnflag AS g, CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c, l_orderkey, l_linenumber FROM lineitem WHERE l_returnflag IN ('R', 'N')), r AS (SELECT g, price_c, CAST(row_number() OVER (PARTITION BY g ORDER BY price_c, l_orderkey, l_linenumber) AS BIGINT) AS rn, CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n FROM v), d AS (SELECT g, price_c, k FROM r, (SELECT unnest(range(1, 10)) AS k) WHERE rn = (k * n + 9) // 10) SELECT CAST(k AS BIGINT) AS decile, max(CASE WHEN g = 'R' THEN price_c END) AS r_price_c, max(CASE WHEN g = 'N' THEN price_c END) AS n_price_c FROM d GROUP BY 1""",
-    "q_power" ->
-      """WITH x AS (SELECT CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS HUGEINT) AS xs FROM orders GROUP BY o_custkey), g AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(xs) AS s, sum(xs * xs) AS ss FROM x), d(delta_c) AS (VALUES (100), (500), (1000)) SELECT CAST(delta_c AS BIGINT) AS delta_c, CAST(n AS BIGINT) AS n_customers, CAST((2 * 7848886 * (n * ss - s * s) + (1000000 * CAST(delta_c AS HUGEINT) * delta_c * n * (n - 1)) - 1) // (1000000 * CAST(delta_c AS HUGEINT) * delta_c * n * (n - 1)) AS BIGINT) AS n_required FROM g, d""",
-    "ta_tfidf" ->
-      """WITH tok AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS term FROM documents), tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2), df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1), nd AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs FROM tf), sc AS (SELECT doc_id, term, tf, CAST(round(ln(CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)) * 1000000) AS BIGINT) AS idf_micro FROM tf JOIN df USING (term), nd), r AS (SELECT doc_id, term, tf, idf_micro, tf * idf_micro AS score_micro, CAST(row_number() OVER (PARTITION BY doc_id ORDER BY tf * idf_micro DESC, term) AS BIGINT) AS rank FROM sc) SELECT doc_id, rank, term, tf, idf_micro, score_micro FROM r WHERE rank <= 5""",
-    // sim_reciprocal: the sim_topk float replay restricted to the anchor
-    // set, then the same symmetrized self-join
-    "sim_reciprocal" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings WHERE vec_id < 64), scored AS (SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id, list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) AS score FROM e d, e q WHERE d.vec_id <> q.vec_id), top AS (SELECT query_id, neighbor_id, CAST(rn AS BIGINT) AS rank FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored) WHERE rn <= 5) SELECT ab.query_id AS a_id, ab.neighbor_id AS b_id, ab.rank AS rank_ab, ba.rank AS rank_ba FROM top ab JOIN top ba ON ab.query_id = ba.neighbor_id AND ab.neighbor_id = ba.query_id WHERE ab.query_id < ab.neighbor_id""",
-    "q_bollinger" ->
-      """WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS HUGEINT) AS x FROM lineitem GROUP BY 1), dk AS (SELECT d, x, CAST(datediff('day', DATE '1970-01-01', d) AS BIGINT) AS dk FROM daily), w AS (SELECT d, x, CAST(count(*) OVER win AS HUGEINT) AS n, sum(x) OVER win AS s, sum(x * x) OVER win AS ss FROM dk WINDOW win AS (ORDER BY dk RANGE BETWEEN 19 PRECEDING AND CURRENT ROW)) SELECT d, CAST(x AS BIGINT) AS rev_c, CAST(n AS BIGINT) AS n_days, CAST((s * 1000000) // n AS BIGINT) AS mean_micro, CASE WHEN n > 1 THEN (n * x - s) * (n * x - s) * (n - 1) > 4 * n * (n * ss - s * s) AND n * x > s ELSE false END AS break_upper, CASE WHEN n > 1 THEN (n * x - s) * (n * x - s) * (n - 1) > 4 * n * (n * ss - s * s) AND n * x < s ELSE false END AS break_lower FROM w""",
-    "q_stl" ->
-      """WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS HUGEINT) AS x FROM lineitem GROUP BY 1), dk AS (SELECT d, x, CAST(datediff('day', DATE '1970-01-01', d) AS BIGINT) AS dk, CAST(dayofweek(d) AS BIGINT) AS dow FROM daily), tr AS (SELECT d, x, dow, CAST(count(*) OVER win AS HUGEINT) AS n7, sum(x) OVER win AS s7 FROM dk WINDOW win AS (ORDER BY dk RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)), de AS (SELECT d, x, dow, (s7 * 1000000) // n7 AS trend_micro, x * 1000000 - (s7 * 1000000) // n7 AS d_micro FROM tr), se AS (SELECT dow, sum(d_micro) // count(*) AS seasonal_micro FROM de GROUP BY 1) SELECT de.d, CAST(de.x AS BIGINT) AS rev_c, CAST(trend_micro AS BIGINT) AS trend_micro, CAST(seasonal_micro AS BIGINT) AS seasonal_micro, CAST(d_micro - seasonal_micro AS BIGINT) AS resid_micro FROM de JOIN se USING (dow)""",
-    "ev_funnel_time" ->
-      """WITH f AS (SELECT user_id, min(CASE WHEN event_type = 'view' THEN ts END) AS v, min(CASE WHEN event_type = 'purchase' THEN ts END) AS p FROM events GROUP BY 1), g AS (SELECT CAST(floor(epoch(p)) AS BIGINT) - CAST(floor(epoch(v)) AS BIGINT) AS gap_s FROM f WHERE v IS NOT NULL AND p IS NOT NULL AND p >= v), h AS (SELECT gap_s, CAST(count(*) AS BIGINT) AS c FROM g GROUP BY 1), cw AS (SELECT gap_s, sum(c) OVER (ORDER BY gap_s ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum, sum(c) OVER () AS n FROM h) SELECT CAST(max(n) AS BIGINT) AS n_converted, CAST(min(CASE WHEN cum * 2 >= n THEN gap_s END) AS BIGINT) AS median_s, CAST(min(CASE WHEN cum * 10 >= n * 9 THEN gap_s END) AS BIGINT) AS p90_s FROM cw""",
-    "ev_slo_burn" ->
-      """WITH h AS (SELECT date_trunc('hour', ts) AS hour, CAST(count(*) AS BIGINT) AS n, CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_err FROM events GROUP BY 1) SELECT hour, n, n_err, CAST((n_err * 1000000) // n AS BIGINT) AS err_share_micro, CAST((n_err * 100000000) // n AS BIGINT) AS burn_micro, (n_err * 100000000) // n > 14400000 AS alert FROM h""",
-    "q_lorenz" ->
-      """WITH rev AS (SELECT o_custkey AS c, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c FROM orders GROUP BY 1), r AS (SELECT c, rev_c, CAST(row_number() OVER (ORDER BY rev_c ASC, c ASC) AS BIGINT) AS rn, CAST(count(*) OVER () AS BIGINT) AS n FROM rev), dec AS (SELECT ((rn - 1) * 10) // n + 1 AS decile, CAST(count(*) AS BIGINT) AS n_customers, CAST(sum(rev_c) AS BIGINT) AS rev_c FROM r GROUP BY 1), t AS (SELECT CAST(sum(rev_c) AS BIGINT) AS total_c FROM dec) SELECT CAST(decile AS BIGINT) AS decile, n_customers, rev_c, CAST((rev_c * 1000000) // total_c AS BIGINT) AS share_micro, CAST(sum((rev_c * 1000000) // total_c) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_share_micro FROM dec, t""",
-    "q_cohort_ltv" ->
-      """WITH o AS (SELECT o_custkey, year(o_orderdate) AS yr, CAST(round(o_totalprice * 100) AS BIGINT) AS price_c FROM orders), f AS (SELECT o_custkey, min(yr) AS yr0 FROM o GROUP BY 1), d(dy, decay_micro) AS (VALUES (0, 1000000), (1, 900000), (2, 810000), (3, 729000), (4, 656100), (5, 590490), (6, 531441), (7, 478296), (8, 430467), (9, 387420), (10, 348678)) SELECT CAST(f.yr0 AS BIGINT) AS cohort_year, CAST(count(DISTINCT o.o_custkey) AS BIGINT) AS n_customers, CAST(sum((price_c * decay_micro) // 1000000) AS BIGINT) AS ltv_c, CAST((sum((price_c * decay_micro) // 1000000) * 1000000) // count(DISTINCT o.o_custkey) AS BIGINT) AS avg_ltv_micro FROM o JOIN f USING (o_custkey) JOIN d ON d.dy = o.yr - f.yr0 GROUP BY 1""",
-    "ev_srm" ->
-      """WITH arms AS (SELECT CAST(props->>'$.k' AS BIGINT) % 2 AS arm, CAST(count(*) AS BIGINT) AS o FROM events GROUP BY 1), tv AS (SELECT CAST(sum(o) AS BIGINT) AS total, CAST(count(*) AS BIGINT) AS v FROM arms), s AS (SELECT ((o * v - total) * (o * v - total) * 1000000) // (total * v) AS term, total, v FROM arms, tv) SELECT CAST(max(v) AS BIGINT) AS n_variants, CAST(max(total) AS BIGINT) AS n_total, CAST(sum(term) AS BIGINT) AS chi2_micro, CAST(3841459 AS BIGINT) AS crit_micro, sum(term) > 3841459 AS srm_detected FROM s""",
-    // q_ewma: the same 20-term truncated kernel as literal VALUES
-    "q_ewma" ->
-      """WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS HUGEINT) AS x FROM lineitem GROUP BY 1), dk AS (SELECT d, x, CAST(datediff('day', DATE '1970-01-01', d) AS BIGINT) AS dk FROM daily), w(j, w) AS (VALUES (0, 200000), (1, 160000), (2, 128000), (3, 102400), (4, 81920), (5, 65536), (6, 52428), (7, 41943), (8, 33554), (9, 26843), (10, 21474), (11, 17179), (12, 13743), (13, 10995), (14, 8796), (15, 7036), (16, 5629), (17, 4503), (18, 3602), (19, 2882)), conv AS (SELECT a.d, CAST(w.w AS HUGEINT) * b.x AS wx, CAST(w.w AS HUGEINT) AS wt FROM dk a CROSS JOIN w JOIN dk b ON b.dk = a.dk - w.j) SELECT d, CAST(count(*) AS BIGINT) AS n_terms, CAST((sum(wx) * 1000000) // sum(wt) AS BIGINT) AS ewma_micro FROM conv GROUP BY 1""",
-    "ta_keyness" ->
-      """WITH tok AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS term FROM documents), st AS (SELECT source, term, CAST(count(*) AS BIGINT) AS tf_s FROM tok GROUP BY 1, 2), stot AS (SELECT source, CAST(sum(tf_s) AS BIGINT) AS t_s FROM st GROUP BY 1), gl AS (SELECT term, CAST(sum(tf_s) AS BIGINT) AS tf_g FROM st GROUP BY 1), gt AS (SELECT CAST(sum(tf_s) AS BIGINT) AS t_g FROM st), rated AS (SELECT st.source, st.term, st.tf_s, (st.tf_s * t_g * 1000000) // (tf_g * t_s) AS ratio_micro FROM st JOIN stot USING (source) JOIN gl USING (term), gt WHERE st.tf_s >= 5 AND 4 * st.tf_s * t_g > 5 * tf_g * t_s), r AS (SELECT source, term, tf_s, ratio_micro, CAST(row_number() OVER (PARTITION BY source ORDER BY ratio_micro DESC, term) AS BIGINT) AS rank FROM rated) SELECT source, rank, term, tf_s, CAST(ratio_micro AS BIGINT) AS ratio_micro FROM r WHERE rank <= 3""",
-    "q_percentile_cont" ->
-      """WITH v AS (SELECT l_returnflag AS g, CAST(round(l_extendedprice * 100) AS BIGINT) AS v, l_orderkey, l_linenumber FROM lineitem), r AS (SELECT g, v, CAST(row_number() OVER (PARTITION BY g ORDER BY v, l_orderkey, l_linenumber) AS BIGINT) AS rn, CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n FROM v), k(k) AS (VALUES (1), (2), (3)), p AS (SELECT g, CAST(k AS BIGINT) AS k, v, rn, ((n - 1) * k) // 4 + 1 AS lo, ((n - 1) * k) % 4 AS rem FROM r, k WHERE rn = ((n - 1) * k) // 4 + 1 OR rn = ((n - 1) * k) // 4 + 2) SELECT g AS l_returnflag, k AS quartile, CAST((max(CASE WHEN rn = lo THEN v END) * (4 - max(rem)) * 1000000 + coalesce(max(CASE WHEN rn = lo + 1 THEN v END), 0) * max(rem) * 1000000) // 4 AS BIGINT) AS pct_micro FROM p GROUP BY 1, 2""",
-    "q_cramers_v" ->
-      """WITH cells AS (SELECT l_returnflag AS rf, l_linestatus AS ls, CAST(count(*) AS BIGINT) AS o FROM lineitem GROUP BY 1, 2), rt AS (SELECT rf, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY 1), ct AS (SELECT ls, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY 1), nt AS (SELECT CAST(sum(o) AS BIGINT) AS n, CAST(count(DISTINCT rf) AS BIGINT) AS nr, CAST(count(DISTINCT ls) AS BIGINT) AS nc FROM cells), grid AS (SELECT rt.rf, ct.ls, rt.r, ct.c, coalesce(cells.o, 0) AS o FROM rt CROSS JOIN ct LEFT JOIN cells ON cells.rf = rt.rf AND cells.ls = ct.ls), terms AS (SELECT n, least(nr - 1, nc - 1) AS m, ((CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c) * (CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c) * 1000000) // (CAST(n AS HUGEINT) * r * c) AS term FROM grid, nt) SELECT CAST(max(n) AS BIGINT) AS n, CAST(sum(term) AS BIGINT) AS chi2_micro, CAST(round(sqrt(CAST(sum(term) AS DOUBLE) / 1000000 / CAST(max(n) * max(m) AS DOUBLE)) * 1000000) AS BIGINT) AS v_micro FROM terms""",
-    "ev_bounce" ->
-      """WITH ev AS (SELECT user_id, ts, event_id, CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT) AS gap_s FROM events), s AS (SELECT user_id, ts, sum(CASE WHEN gap_s IS NULL OR gap_s > 1800 THEN 1 ELSE 0 END) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess FROM ev), g AS (SELECT user_id, sess, CAST(count(*) AS BIGINT) AS n_events, min(ts) AS t0 FROM s GROUP BY 1, 2), d AS (SELECT CAST(t0 AS DATE) AS d, CAST(count(*) AS BIGINT) AS n_sessions, CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounce FROM g GROUP BY 1) SELECT d, n_sessions, n_bounce, CAST((n_bounce * 1000000) // n_sessions AS BIGINT) AS bounce_micro FROM d""",
-    "q_movers" ->
-      """WITH g AS (SELECT l_partkey, CAST(sum(CASE WHEN year(l_shipdate) = 1997 THEN CAST(round(l_extendedprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS rev97_c, CAST(sum(CASE WHEN year(l_shipdate) = 1998 THEN CAST(round(l_extendedprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS rev98_c FROM lineitem WHERE year(l_shipdate) IN (1997, 1998) GROUP BY 1) SELECT l_partkey, rev97_c, rev98_c, rev98_c - rev97_c AS delta_c FROM g ORDER BY abs(rev98_c - rev97_c) DESC, l_partkey LIMIT 20""",
-    // stream_srm: streamed counts ≡ batch counts, so the batch SRM
-    // replay is the oracle verbatim
-    "stream_srm" ->
-      """WITH arms AS (SELECT CAST(props->>'$.k' AS BIGINT) % 2 AS arm, CAST(count(*) AS BIGINT) AS o FROM events GROUP BY 1), tv AS (SELECT CAST(sum(o) AS BIGINT) AS total, CAST(count(*) AS BIGINT) AS v FROM arms), s AS (SELECT ((o * v - total) * (o * v - total) * 1000000) // (total * v) AS term, total, v FROM arms, tv) SELECT CAST(max(v) AS BIGINT) AS n_variants, CAST(max(total) AS BIGINT) AS n_total, CAST(sum(term) AS BIGINT) AS chi2_micro, CAST(3841459 AS BIGINT) AS crit_micro, sum(term) > 3841459 AS srm_detected FROM s""",
-    "q_calibration" ->
-      """WITH b AS (SELECT CAST(l_quantity AS BIGINT) AS qty, CAST(count(*) AS BIGINT) AS n, CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_pos FROM lineitem GROUP BY 1) SELECT qty, n, n_pos, qty * 20000 AS pred_micro, CAST((n_pos * 1000000) // n AS BIGINT) AS obs_micro, CAST(qty * 20000 - (n_pos * 1000000) // n AS BIGINT) AS gap_micro FROM b""",
-    // q_isotonic: the same minimax replay — prefix sums over the qty
-    // domain, interval means micro-rounded BEFORE min/max (HUGEINT
-    // product mirrors the decimal(38,0) side), j<=i<=k expansion.
-    "q_isotonic" ->
-      """WITH cal AS (SELECT CAST(l_quantity AS BIGINT) AS qty, CAST(count(*) AS BIGINT) AS n, CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_pos FROM lineitem GROUP BY 1), pref AS (SELECT qty, n, n_pos, sum(n) OVER (ORDER BY qty ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cn, sum(n_pos) OVER (ORDER BY qty ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cp FROM cal), ivl AS (SELECT j.qty AS jq, k.qty AS kq, CAST((CAST(k.cp - j.cp + j.n_pos AS HUGEINT) * 1000000) // (k.cn - j.cn + j.n) AS BIGINT) AS avg_micro FROM pref j JOIN pref k ON j.qty <= k.qty), mn AS (SELECT i.qty AS qty, a.jq, min(a.avg_micro) AS m FROM cal i JOIN ivl a ON a.jq <= i.qty AND a.kq >= i.qty GROUP BY 1, 2), iso AS (SELECT qty, CAST(max(m) AS BIGINT) AS iso_micro FROM mn GROUP BY 1) SELECT c.qty, c.n, c.n_pos, CAST((c.n_pos * 1000000) // c.n AS BIGINT) AS obs_micro, iso.iso_micro FROM cal c JOIN iso USING (qty)""",
-    "q_theil" ->
-      """WITH rev AS (SELECT o_custkey AS c, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS x FROM orders GROUP BY 1), t AS (SELECT CAST(sum(x) AS BIGINT) AS xt, CAST(count(*) AS BIGINT) AS n FROM rev), s AS (SELECT n, CAST(round(CAST(x AS DOUBLE) * n / xt * ln(CAST(x AS DOUBLE) * n / xt) * 1000000) AS BIGINT) AS term FROM rev, t) SELECT CAST(max(n) AS BIGINT) AS n_customers, CAST(sum(term) // max(n) AS BIGINT) AS theil_micro FROM s""",
-    "q_runs_test" ->
-      """WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS x FROM lineitem GROUP BY 1), h AS (SELECT x, CAST(count(*) AS BIGINT) AS c FROM daily GROUP BY 1), cw AS (SELECT x, sum(c) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum, sum(c) OVER () AS n FROM h), med AS (SELECT min(CASE WHEN cum * 2 >= n THEN x END) AS med FROM cw), sg AS (SELECT d, x > med AS up FROM daily, med WHERE x <> med), ch AS (SELECT up, CASE WHEN lag(up, 1) OVER (ORDER BY d) IS NULL OR lag(up, 1) OVER (ORDER BY d) <> up THEN 1 ELSE 0 END AS chg FROM sg), g AS (SELECT CAST(sum(CASE WHEN up THEN 1 ELSE 0 END) AS BIGINT) AS n1, CAST(sum(CASE WHEN NOT up THEN 1 ELSE 0 END) AS BIGINT) AS n2, CAST(sum(chg) AS BIGINT) AS r FROM ch) SELECT n1, n2, r AS runs, CAST(round((CAST(r AS DOUBLE) - (1.0 + 2.0 * n1 * n2 / (n1 + n2))) / sqrt(2.0 * n1 * n2 * (2.0 * n1 * n2 - (n1 + n2)) / (CAST(n1 + n2 AS DOUBLE) * (n1 + n2) * (n1 + n2 - 1))) * 1000000) AS BIGINT) AS z_micro FROM g""",
-    "ev_flap" ->
-      """WITH h AS (SELECT date_trunc('hour', ts) AS hour, CAST(count(*) AS BIGINT) AS n, CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_err FROM events GROUP BY 1), a AS (SELECT hour, (n_err * 100000000) // n > 14400000 AS alert FROM h), x AS (SELECT alert, lag(alert, 1) OVER (ORDER BY hour) AS p, lead(alert, 1) OVER (ORDER BY hour) AS nx FROM a) SELECT CAST(count(*) AS BIGINT) AS n_hours, CAST(sum(CASE WHEN alert THEN 1 ELSE 0 END) AS BIGINT) AS n_alert_hours, CAST(sum(CASE WHEN p IS NOT NULL AND p <> alert THEN 1 ELSE 0 END) AS BIGINT) AS n_transitions, CAST(sum(CASE WHEN alert AND (p IS NULL OR NOT p) AND (nx IS NULL OR NOT nx) THEN 1 ELSE 0 END) AS BIGINT) AS n_one_hour_blips FROM x""",
-    "q_trimmed" ->
-      """WITH v AS (SELECT l_returnflag AS g, CAST(round(l_extendedprice * 100) AS BIGINT) AS v, l_orderkey, l_linenumber FROM lineitem), r AS (SELECT g, v, CAST(row_number() OVER (PARTITION BY g ORDER BY v, l_orderkey, l_linenumber) AS BIGINT) AS rn, CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n FROM v), a AS (SELECT g, n, (n * 5) // 100 AS k, rn, v FROM r), gagg AS (SELECT g AS l_returnflag, max(n) AS n, max(k) AS k, sum(CASE WHEN rn > k AND rn <= n - k THEN v END) AS inner_sum, max(CASE WHEN rn = k + 1 THEN v END) AS v_lo, max(CASE WHEN rn = n - k THEN v END) AS v_hi FROM a GROUP BY 1) SELECT l_returnflag, CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k, CAST((inner_sum * 1000000) // (n - 2 * k) AS BIGINT) AS trimmed_micro, CAST(((inner_sum + k * v_lo + k * v_hi) * 1000000) // n AS BIGINT) AS winsor_micro FROM gagg""",
-    "q_ttest" ->
-      """WITH v AS (SELECT l_returnflag = 'R' AS r, CAST(round(l_extendedprice * 100) AS HUGEINT) AS v FROM lineitem), g AS (SELECT CAST(sum(CASE WHEN r THEN 1 ELSE 0 END) AS HUGEINT) AS n1, sum(CASE WHEN r THEN v END) AS s1, sum(CASE WHEN r THEN v * v END) AS ss1, CAST(sum(CASE WHEN NOT r THEN 1 ELSE 0 END) AS HUGEINT) AS n2, sum(CASE WHEN NOT r THEN v END) AS s2, sum(CASE WHEN NOT r THEN v * v END) AS ss2 FROM v), i AS (SELECT n1, n2, CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS dm, CAST(n1 * ss1 - s1 * s1 AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n1 AS DOUBLE) * CAST(n1 - 1 AS DOUBLE)) AS a1, CAST(n2 * ss2 - s2 * s2 AS DOUBLE) / (CAST(n2 AS DOUBLE) * CAST(n2 AS DOUBLE) * CAST(n2 - 1 AS DOUBLE)) AS a2 FROM g) SELECT CAST(n1 AS BIGINT) AS n_returned, CAST(n2 AS BIGINT) AS n_kept, CAST(round(dm / sqrt(a1 + a2) * 1000000) AS BIGINT) AS t_micro, CAST(round((a1 + a2) * (a1 + a2) / (a1 * a1 / CAST(n1 - 1 AS DOUBLE) + a2 * a2 / CAST(n2 - 1 AS DOUBLE)) * 1000000) AS BIGINT) AS df_micro FROM i""",
-    "q_spearman" ->
-      """WITH base AS (SELECT CAST(l_quantity AS BIGINT) AS xv, CAST(round(l_extendedprice * 100) AS BIGINT) AS yv FROM lineitem), hx AS (SELECT xv, CAST(count(*) AS BIGINT) AS c FROM base GROUP BY 1), dx AS (SELECT xv, 2 * sum(c) OVER (ORDER BY xv ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c + 1 AS d_xv FROM hx), hy AS (SELECT yv, CAST(count(*) AS BIGINT) AS c FROM base GROUP BY 1), dy AS (SELECT yv, 2 * sum(c) OVER (ORDER BY yv ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c + 1 AS d_yv FROM hy), j AS (SELECT CAST(d_xv AS HUGEINT) AS x, CAST(d_yv AS HUGEINT) AS y FROM base JOIN dx USING (xv) JOIN dy USING (yv)), g AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy FROM j) SELECT CAST(n AS BIGINT) AS n, CAST(round(CAST(n * sxy - sx * sy AS DOUBLE) / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) * sqrt(CAST(n * syy - sy * sy AS DOUBLE))) * 1000000) AS BIGINT) AS rho_micro FROM g""",
-    "ta_kfold" ->
-      """WITH d AS (SELECT doc_id, source, md5('fold0:' || CAST(doc_id AS VARCHAR)) AS h FROM documents), r AS (SELECT doc_id, source, CAST(row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS BIGINT) AS rn FROM d) SELECT doc_id, source, (rn - 1) % 5 AS fold FROM r""",
-    "q_anova" ->
-      """WITH v AS (SELECT l_returnflag AS grp, CAST(round(l_extendedprice * 100) AS HUGEINT) AS v FROM lineitem), g AS (SELECT grp, CAST(count(*) AS HUGEINT) AS ng, sum(v) AS sg, sum(v * v) AS ssg FROM v GROUP BY 1), t AS (SELECT CAST(sum(ng) AS HUGEINT) AS n, CAST(sum(sg) AS HUGEINT) AS st, CAST(count(*) AS HUGEINT) AS k FROM g), terms AS (SELECT n, k, CAST(round(CAST(ng AS DOUBLE) * (CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE) - CAST(st AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE) - CAST(st AS DOUBLE) / CAST(n AS DOUBLE))) AS BIGINT) AS ssb, CAST(round(CAST(ssg AS DOUBLE) - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE)) AS BIGINT) AS ssw FROM g, t), agg AS (SELECT CAST(max(n) AS BIGINT) AS n, CAST(max(k) AS BIGINT) AS k, CAST(sum(ssb) AS BIGINT) AS ssb_c2, CAST(sum(ssw) AS BIGINT) AS ssw_c2 FROM terms) SELECT n, k, ssb_c2, ssw_c2, CAST(round(CAST(ssb_c2 AS DOUBLE) / CAST(k - 1 AS DOUBLE) / (CAST(ssw_c2 AS DOUBLE) / CAST(n - k AS DOUBLE)) * 1000000) AS BIGINT) AS f_micro FROM agg""",
-    // q_kruskal: global doubled midranks (q_spearman's CTE shape), each
-    // group's R²/n term rounded once so the group Σ is order-free; the
-    // only doubles are casts of exact integers, op order mirrored.
-    "q_kruskal" ->
-      """WITH base AS (SELECT l_returnflag AS grp, CAST(round(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem), h AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM base GROUP BY 1), d AS (SELECT v, 2 * sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c + 1 AS dr FROM h), g AS (SELECT grp, CAST(count(*) AS HUGEINT) AS ng, CAST(sum(dr) AS HUGEINT) AS sd FROM base JOIN d USING (v) GROUP BY 1), t AS (SELECT ng, CAST(round(CAST(sd AS DOUBLE) * CAST(sd AS DOUBLE) / 4 / CAST(ng AS DOUBLE)) AS BIGINT) AS term FROM g), ties AS (SELECT sum(CAST(c AS HUGEINT) * c * c - c) AS t3t FROM h), s AS (SELECT CAST(sum(ng) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k, CAST(sum(term) AS BIGINT) AS sum_term FROM t) SELECT n, k, sum_term, CAST(t3t AS BIGINT) AS tie_sum, CAST(round((12.0 * CAST(sum_term AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n + 1 AS DOUBLE)) - 3.0 * CAST(n + 1 AS DOUBLE)) * 1000000) AS BIGINT) AS h_micro, CAST(round((12.0 * CAST(sum_term AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n + 1 AS DOUBLE)) - 3.0 * CAST(n + 1 AS DOUBLE)) / (1.0 - CAST(t3t AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - CAST(n AS DOUBLE))) * 1000000) AS BIGINT) AS h_adj_micro FROM s CROSS JOIN ties""",
-    // q_friedman: per-day doubled midranks from day-partitioned value
-    // histograms; rank-sum squares stay exact HUGEINT integers (mirroring
-    // the engine's DECIMAL), so only the final statistic touches doubles.
-    "q_friedman" ->
-      """WITH cells AS (SELECT l_shipdate AS d, l_returnflag AS grp, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS v FROM lineitem GROUP BY 1, 2), complete AS (SELECT d FROM cells GROUP BY 1 HAVING count(*) = 3), cc AS (SELECT cells.d, cells.grp, cells.v FROM cells JOIN complete USING (d)), h AS (SELECT d, v, CAST(count(*) AS BIGINT) AS c FROM cc GROUP BY 1, 2), dr AS (SELECT d, v, 2 * sum(c) OVER (PARTITION BY d ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c + 1 AS dr, CAST(c AS HUGEINT) * c * c - c AS t3t FROM h), g AS (SELECT grp, CAST(sum(dr) AS HUGEINT) AS rj2 FROM cc JOIN dr USING (d, v) GROUP BY 1), gs AS (SELECT CAST(sum(rj2 * rj2) AS BIGINT) AS sum_rj2sq, CAST(count(*) AS BIGINT) AS k FROM g), ties AS (SELECT CAST(sum(t3t) AS BIGINT) AS tsum FROM dr), nb AS (SELECT CAST(count(*) AS BIGINT) AS n FROM complete) SELECT n, k, sum_rj2sq, tsum AS tie_sum, CAST(round((12.0 * (CAST(sum_rj2sq AS DOUBLE) / 4.0) / (CAST(n AS DOUBLE) * CAST(k AS DOUBLE) * CAST(k + 1 AS DOUBLE)) - 3.0 * CAST(n AS DOUBLE) * CAST(k + 1 AS DOUBLE)) * 1000000) AS BIGINT) AS chi2_micro, CAST(round((12.0 * (CAST(sum_rj2sq AS DOUBLE) / 4.0) / (CAST(n AS DOUBLE) * CAST(k AS DOUBLE) * CAST(k + 1 AS DOUBLE)) - 3.0 * CAST(n AS DOUBLE) * CAST(k + 1 AS DOUBLE)) / (1.0 - CAST(tsum AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(k AS DOUBLE) * (CAST(k AS DOUBLE) * CAST(k AS DOUBLE) - 1.0))) * 1000000) AS BIGINT) AS chi2_adj_micro FROM gs CROSS JOIN ties CROSS JOIN nb""",
-    // q_levene: q_mad's nearest-rank group medians feeding q_anova's F
-    // replay on the absolute deviations — both CTE shapes already proven.
-    "q_levene" ->
-      """WITH vv AS (SELECT l_returnflag AS grp, CAST(round(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem), h1 AS (SELECT grp, v, CAST(count(*) AS BIGINT) AS c FROM vv GROUP BY 1, 2), c1 AS (SELECT *, sum(c) OVER (PARTITION BY grp ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum, sum(c) OVER (PARTITION BY grp) AS n FROM h1), med AS (SELECT grp, min(CASE WHEN cum >= greatest(1, CAST(ceil(CAST(0.5 AS DOUBLE) * n) AS BIGINT)) THEN v END) AS med FROM c1 GROUP BY 1), dv AS (SELECT vv.grp, CAST(abs(vv.v - med.med) AS HUGEINT) AS d FROM vv JOIN med USING (grp)), g AS (SELECT grp, CAST(count(*) AS HUGEINT) AS ng, sum(d) AS sg, sum(d * d) AS ssg FROM dv GROUP BY 1), t AS (SELECT CAST(sum(ng) AS HUGEINT) AS n, CAST(sum(sg) AS HUGEINT) AS st, CAST(count(*) AS HUGEINT) AS k FROM g), terms AS (SELECT n, k, CAST(round(CAST(ng AS DOUBLE) * (CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE) - CAST(st AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE) - CAST(st AS DOUBLE) / CAST(n AS DOUBLE))) AS BIGINT) AS ssb, CAST(round(CAST(ssg AS DOUBLE) - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE)) AS BIGINT) AS ssw FROM g, t), agg AS (SELECT CAST(max(n) AS BIGINT) AS n, CAST(max(k) AS BIGINT) AS k, CAST(sum(ssb) AS BIGINT) AS ssb_c2, CAST(sum(ssw) AS BIGINT) AS ssw_c2 FROM terms) SELECT n, k, ssb_c2, ssw_c2, CAST(round(CAST(ssb_c2 AS DOUBLE) / CAST(k - 1 AS DOUBLE) / (CAST(ssw_c2 AS DOUBLE) / CAST(n - k AS DOUBLE)) * 1000000) AS BIGINT) AS f_micro FROM agg""",
-    "q_partial_corr" ->
-      """WITH v AS (SELECT CAST(l_quantity AS HUGEINT) AS x, CAST(round(l_extendedprice * 100) AS HUGEINT) AS y, CAST(round(l_discount * 100) AS HUGEINT) AS z FROM lineitem), g AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy, sum(z) AS sz, sum(x * x) AS sxx, sum(y * y) AS syy, sum(z * z) AS szz, sum(x * y) AS sxy, sum(x * z) AS sxz, sum(y * z) AS syz FROM v), r AS (SELECT CAST(n AS BIGINT) AS n, CAST(n * sxy - sx * sy AS DOUBLE) / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) * sqrt(CAST(n * syy - sy * sy AS DOUBLE))) AS rxy, CAST(n * sxz - sx * sz AS DOUBLE) / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) * sqrt(CAST(n * szz - sz * sz AS DOUBLE))) AS rxz, CAST(n * syz - sy * sz AS DOUBLE) / (sqrt(CAST(n * syy - sy * sy AS DOUBLE)) * sqrt(CAST(n * szz - sz * sz AS DOUBLE))) AS ryz FROM g) SELECT n, CAST(round(rxy * 1000000) AS BIGINT) AS rxy_micro, CAST(round((rxy - rxz * ryz) / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz)) * 1000000) AS BIGINT) AS rxy_given_z_micro FROM r""",
-    "q_freshness" ->
-      """WITH o AS (SELECT 'orders' AS feed, CAST(count(*) AS BIGINT) AS n_rows, max(o_orderdate) AS max_ts FROM orders), l AS (SELECT 'lineitem' AS feed, CAST(count(*) AS BIGINT) AS n_rows, max(l_shipdate) AS max_ts FROM lineitem), u AS (SELECT * FROM o UNION ALL SELECT * FROM l), f AS (SELECT feed, n_rows, max_ts, CAST(floor(epoch(TIMESTAMP '1998-12-31 00:00:00')) AS BIGINT) - CAST(floor(epoch(max_ts)) AS BIGINT) AS lag_s, CAST(CASE WHEN feed = 'orders' THEN 17280000 ELSE 17280000 END AS BIGINT) AS sla_s FROM u) SELECT feed, n_rows, max_ts, lag_s, sla_s, lag_s > sla_s AS breached FROM f""",
-    "q_checksum_parts" ->
-      """WITH r AS (SELECT CAST(year(o_orderdate) AS BIGINT) AS part_year, concat_ws('|', o_orderkey, o_custkey, o_orderstatus, CAST(round(o_totalprice * 100) AS BIGINT), CAST(CAST(o_orderdate AS DATE) AS VARCHAR)) AS r FROM orders) SELECT part_year, CAST(count(*) AS BIGINT) AS n_rows, CAST(bit_xor(CAST(('0x' || substr(md5(r), 1, 15)) AS BIGINT)) AS BIGINT) AS checksum FROM r GROUP BY 1""",
-    "q_histogram2d" ->
-      """WITH cells AS (SELECT least(CAST(l_quantity AS BIGINT) // 5, 9) AS qty_bin, least(CAST(round(l_extendedprice * 100) AS BIGINT) // 1000000, 9) AS price_bin, CAST(count(*) AS BIGINT) AS n FROM lineitem GROUP BY 1, 2), t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM cells) SELECT qty_bin, price_bin, n, CAST((n * 1000000) // total AS BIGINT) AS share_micro FROM cells, t""",
-    "q_tukey" ->
-      """WITH v AS (SELECT l_returnflag AS g, CAST(round(l_extendedprice * 100) AS BIGINT) AS v, l_orderkey, l_linenumber FROM lineitem), r AS (SELECT g, v, CAST(row_number() OVER (PARTITION BY g ORDER BY v, l_orderkey, l_linenumber) AS BIGINT) AS rn, CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n FROM v), k(k) AS (VALUES (1), (3)), p AS (SELECT g, CAST(k AS BIGINT) AS k, v, rn, ((n - 1) * k) // 4 + 1 AS lo, ((n - 1) * k) % 4 AS rem FROM r, k WHERE rn = ((n - 1) * k) // 4 + 1 OR rn = ((n - 1) * k) // 4 + 2), q AS (SELECT g, k, (max(CASE WHEN rn = lo THEN v END) * (4 - max(rem)) * 1000000 + coalesce(max(CASE WHEN rn = lo + 1 THEN v END), 0) * max(rem) * 1000000) // 4 AS q_micro FROM p GROUP BY 1, 2), f AS (SELECT g, max(CASE WHEN k = 1 THEN q_micro END) AS q1, max(CASE WHEN k = 3 THEN q_micro END) AS q3 FROM q GROUP BY 1), fe AS (SELECT g, q1 - (3 * (q3 - q1)) // 2 AS lo_micro, q3 + (3 * (q3 - q1)) // 2 AS hi_micro FROM f) SELECT v.g AS l_returnflag, CAST(count(*) AS BIGINT) AS n, CAST(max(lo_micro) AS BIGINT) AS lo_micro, CAST(max(hi_micro) AS BIGINT) AS hi_micro, CAST(sum(CASE WHEN v.v * 1000000 < lo_micro THEN 1 ELSE 0 END) AS BIGINT) AS n_below, CAST(sum(CASE WHEN v.v * 1000000 > hi_micro THEN 1 ELSE 0 END) AS BIGINT) AS n_above FROM v JOIN fe USING (g) GROUP BY 1""",
-    // ta_cdc_chunk: the rolling hash, boundary cuts, and chunk substrings
-    // replayed list-for-list with the same base-31 power literals
-    "ta_cdc_chunk" ->
-      """WITH c AS (SELECT doc_id, text, list_transform(range(1, length(text) + 1), i -> CAST(ascii(substr(text, i, 1)) AS BIGINT)) AS codes FROM documents), b AS (SELECT doc_id, text, codes, list_filter(range(8, greatest(8, len(codes)) + 1), i -> i <= len(codes) AND (codes[i] + codes[i-1] * 31 + codes[i-2] * 961 + codes[i-3] * 29791 + codes[i-4] * 923521 + codes[i-5] * 28629151 + codes[i-6] * 887503681 + codes[i-7] * 27512614111) % 64 = 0) AS bpos FROM c), bd AS (SELECT doc_id, text, list_sort(list_distinct(list_concat(list_concat([CAST(0 AS BIGINT)], list_transform(bpos, x -> CAST(x AS BIGINT))), [CAST(length(text) AS BIGINT)]))) AS bounds FROM b), ch AS (SELECT doc_id, unnest(list_transform(range(1, len(bounds)), j -> substr(text, CAST(bounds[j] AS INTEGER) + 1, CAST(bounds[j+1] - bounds[j] AS INTEGER)))) AS chunk FROM bd), g AS (SELECT chunk, CAST(count(*) AS BIGINT) AS occ, CAST(max(length(chunk)) AS BIGINT) AS len FROM ch GROUP BY 1), t AS (SELECT CAST(sum(occ) AS BIGINT) AS n_chunks_total, CAST(count(*) AS BIGINT) AS n_chunks_distinct, CAST(sum(occ * len) AS BIGINT) AS bytes_total, CAST(sum(len) AS BIGINT) AS bytes_distinct FROM g) SELECT n_chunks_total, n_chunks_distinct, bytes_total, bytes_distinct, CAST((bytes_distinct * 1000000) // bytes_total AS BIGINT) AS stored_share_micro FROM t""",
-    "dd_chunk_overlap" ->
-      """WITH c AS (SELECT doc_id, text, list_transform(range(1, length(text) + 1), i -> CAST(ascii(substr(text, i, 1)) AS BIGINT)) AS codes FROM documents), b AS (SELECT doc_id, text, codes, list_filter(range(8, greatest(8, len(codes)) + 1), i -> i <= len(codes) AND (codes[i] + codes[i-1] * 31 + codes[i-2] * 961 + codes[i-3] * 29791 + codes[i-4] * 923521 + codes[i-5] * 28629151 + codes[i-6] * 887503681 + codes[i-7] * 27512614111) % 64 = 0) AS bpos FROM c), bd AS (SELECT doc_id, text, list_sort(list_distinct(list_concat(list_concat([CAST(0 AS BIGINT)], list_transform(bpos, x -> CAST(x AS BIGINT))), [CAST(length(text) AS BIGINT)]))) AS bounds FROM b), chx AS (SELECT doc_id, unnest(list_transform(range(1, len(bounds)), j -> substr(text, CAST(bounds[j] AS INTEGER) + 1, CAST(bounds[j+1] - bounds[j] AS INTEGER)))) AS chunk FROM bd), ch AS (SELECT DISTINCT doc_id, chunk FROM chx WHERE length(chunk) >= 12), cap AS (SELECT chunk FROM (SELECT chunk, count(*) AS nd FROM ch GROUP BY 1) WHERE nd <= 100), k AS (SELECT ch.doc_id, ch.chunk FROM ch JOIN cap USING (chunk)) SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS n_shared FROM k a JOIN k b ON a.chunk = b.chunk AND a.doc_id < b.doc_id GROUP BY 1, 2 HAVING count(*) >= 2""",
-    "ta_neyman" ->
-      """WITH g AS (SELECT source, CAST(count(*) AS HUGEINT) AS nh, CAST(sum(CAST(n_chars AS HUGEINT)) AS HUGEINT) AS sh, CAST(sum(CAST(n_chars AS HUGEINT) * n_chars) AS HUGEINT) AS ssh FROM documents GROUP BY 1), w AS (SELECT source, CAST(nh AS BIGINT) AS n_docs, CAST(round(CAST(nh AS DOUBLE) * sqrt(CAST(nh * ssh - sh * sh AS DOUBLE) / (CAST(nh AS DOUBLE) * CAST(nh - 1 AS DOUBLE))) * 1000000) AS BIGINT) AS w_micro FROM g), t AS (SELECT CAST(sum(w_micro) AS BIGINT) AS wt FROM w) SELECT source, n_docs, w_micro, CAST((1000 * w_micro) // wt AS BIGINT) AS alloc, CAST((1000 * w_micro) % wt AS BIGINT) AS remainder FROM w, t""",
-    "ev_tier_migration" ->
-      """WITH rev AS (SELECT o_custkey, CAST(sum(CASE WHEN year(o_orderdate) <= 1997 THEN CAST(round(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS r1, CAST(sum(CASE WHEN year(o_orderdate) >= 1998 THEN CAST(round(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS r2 FROM orders GROUP BY 1), m AS (SELECT CASE WHEN r1 IS NULL OR r1 = 0 THEN 'none' WHEN r1 >= 150000000 THEN 'A' WHEN r1 >= 75000000 THEN 'B' ELSE 'C' END AS from_tier, CASE WHEN r2 IS NULL OR r2 = 0 THEN 'none' WHEN r2 >= 150000000 THEN 'A' WHEN r2 >= 75000000 THEN 'B' ELSE 'C' END AS to_tier, CAST(count(*) AS BIGINT) AS n FROM rev GROUP BY 1, 2), t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM m) SELECT from_tier, to_tier, n, CAST((n * 1000000) // total AS BIGINT) AS share_micro FROM m, t""",
-    "ev_streaks" ->
-      """WITH days AS (SELECT DISTINCT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day_idx FROM events), i AS (SELECT user_id, day_idx, day_idx - CAST(row_number() OVER (PARTITION BY user_id ORDER BY day_idx) AS BIGINT) AS isl FROM days), g AS (SELECT user_id, isl, CAST(count(*) AS BIGINT) AS len FROM i GROUP BY 1, 2) SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days, CAST(count(*) AS BIGINT) AS n_streaks, CAST(max(len) AS BIGINT) AS longest_streak FROM g GROUP BY 1""",
-    "ev_abandon" ->
-      """WITH e AS (SELECT user_id, ts, event_id, event_type, min(CASE WHEN event_type = 'purchase' THEN ts END) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS np FROM events), c AS (SELECT CAST(ts AS DATE) AS d, (np IS NULL OR CAST(floor(epoch(np)) AS BIGINT) - CAST(floor(epoch(ts)) AS BIGINT) > 3600) AS abandoned FROM e WHERE event_type = 'click'), g AS (SELECT d, CAST(count(*) AS BIGINT) AS n_clicks, CAST(sum(CASE WHEN abandoned THEN 1 ELSE 0 END) AS BIGINT) AS n_abandoned FROM c GROUP BY 1) SELECT d, n_clicks, n_abandoned, CAST((n_abandoned * 1000000) // n_clicks AS BIGINT) AS abandon_micro FROM g""",
-    "q_wilson" ->
-      """WITH g AS (SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS n, CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS np FROM events GROUP BY 1) SELECT d, n, np, CAST((np * 1000000) // n AS BIGINT) AS rate_micro, CAST(round((CAST(np AS DOUBLE) / n + 1.9208 / n - 1.96 * sqrt((CAST(np AS DOUBLE) / n * (1.0 - CAST(np AS DOUBLE) / n) + 0.9604 / n) / n)) / (1.0 + 3.8416 / n) * 1000000) AS BIGINT) AS lo_micro, CAST(round((CAST(np AS DOUBLE) / n + 1.9208 / n + 1.96 * sqrt((CAST(np AS DOUBLE) / n * (1.0 - CAST(np AS DOUBLE) / n) + 0.9604 / n) / n)) / (1.0 + 3.8416 / n) * 1000000) AS BIGINT) AS hi_micro FROM g""",
-    // q_fdr: the A&S 7.1.26 erf polynomial replayed literal-for-literal;
-    // BH step-up compares only integer micro values, so the one
-    // transcendental (exp) is rounded once before any ordering matters
-    "q_fdr" ->
-      """WITH g AS (SELECT p_brand, CAST(count(*) AS BIGINT) AS n, CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS x FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1), tot AS (SELECT CAST(sum(n) AS BIGINT) AS nt, CAST(sum(x) AS BIGINT) AS xt FROM g), z AS (SELECT p_brand, n, x, (CAST(x AS DOUBLE) / n - CAST(xt AS DOUBLE) / nt) / sqrt(CAST(xt AS DOUBLE) / nt * (1.0 - CAST(xt AS DOUBLE) / nt) / n) AS z FROM g, tot), e AS (SELECT p_brand, n, x, z, abs(z) * 0.7071067811865476 AS ax FROM z), e2 AS (SELECT p_brand, n, x, z, ax, 1.0 / (1.0 + 0.3275911 * ax) AS t FROM e), p AS (SELECT p_brand, n, x, CAST(round(z * 1000000) AS BIGINT) AS z_micro, CAST(round(t * (0.254829592 + t * (-0.284496736 + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429)))) * exp(-ax * ax) * 1000000) AS BIGINT) AS p_micro FROM e2), r AS (SELECT p_brand, n, x, z_micro, p_micro, CAST(row_number() OVER (ORDER BY p_micro, p_brand) AS BIGINT) AS rk, CAST(count(*) OVER () AS BIGINT) AS m FROM p), b AS (SELECT p_brand, n, x, z_micro, p_micro, rk, least(1000000, min((p_micro * m) // rk) OVER (ORDER BY p_micro, p_brand ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)) AS bh_micro FROM r) SELECT p_brand, n, x, z_micro, p_micro, rk, CAST(bh_micro AS BIGINT) AS bh_micro, bh_micro <= 50000 AS rejected FROM b""",
-    "ev_sequential" ->
-      """WITH e AS (SELECT CAST(props->>'k' AS BIGINT) % 2 AS arm, (day(ts) - 1) // 7 + 1 AS look, CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv FROM events), wk AS (SELECT arm, look, CAST(count(*) AS BIGINT) AS n, CAST(sum(conv) AS BIGINT) AS x FROM e GROUP BY 1, 2), c AS (SELECT arm, look, sum(n) OVER (PARTITION BY arm ORDER BY look ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cn, sum(x) OVER (PARTITION BY arm ORDER BY look ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cx FROM wk), l AS (SELECT look, max(CASE WHEN arm = 0 THEN cn END) AS n0, max(CASE WHEN arm = 0 THEN cx END) AS x0, max(CASE WHEN arm = 1 THEN cn END) AS n1, max(CASE WHEN arm = 1 THEN cx END) AS x1 FROM c GROUP BY 1), f AS (SELECT CAST(look AS BIGINT) AS look, CAST(n0 AS BIGINT) AS n0, CAST(x0 AS BIGINT) AS x0, CAST(n1 AS BIGINT) AS n1, CAST(x1 AS BIGINT) AS x1, CAST(round((CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0) / sqrt(CAST(x0 + x1 AS DOUBLE) / (n0 + n1) * (1.0 - CAST(x0 + x1 AS DOUBLE) / (n0 + n1)) * (1.0 / n0 + 1.0 / n1)) * 1000000) AS BIGINT) AS z_micro, CAST(round(2040000.0 * sqrt(5.0 / look)) AS BIGINT) AS bound_micro FROM l) SELECT look, n0, x0, n1, x1, z_micro, bound_micro, abs(z_micro) > bound_micro AS crossed FROM f""",
-    // geo_*: coordinates, quantization, bit interleave and haversine all
-    // come from the same Scala-generated literals as the engine side
-    "geo_geohash" ->
-      s"""WITH c AS (SELECT c_custkey, CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c, ${geoLatSql("c_custkey", custLatMul)} AS lat_micro, ${geoLonSql("c_custkey", custLonMul)} AS lon_micro FROM customer), q AS (SELECT bal_c, (lat_micro + 90000000) * 32768 // 180000000 AS lat_q, (lon_micro + 180000000) * 32768 // 360000000 AS lon_q FROM c), iv AS (SELECT bal_c, ${geoInterleaveSql("//")} AS v FROM q), g AS (SELECT bal_c, ${geohashCharsSql("v", "//", 4)} AS cell FROM iv) SELECT cell, CAST(count(*) AS BIGINT) AS n_customers, CAST(sum(bal_c) AS BIGINT) AS sum_bal_c FROM g GROUP BY 1""",
-    "geo_knn" ->
-      s"""WITH c AS (SELECT c_custkey, ${geoLatSql("c_custkey", custLatMul)} AS clat, ${geoLonSql("c_custkey", custLonMul)} AS clon FROM customer WHERE c_custkey <= 20), sp AS (SELECT s_suppkey, ${geoLatSql("s_suppkey", suppLatMul)} AS slat, ${geoLonSql("s_suppkey", suppLonMul)} AS slon FROM supplier), d AS (SELECT c_custkey, s_suppkey, $haversineSql AS dist_m FROM c, sp), r AS (SELECT c_custkey, s_suppkey, dist_m, CAST(row_number() OVER (PARTITION BY c_custkey ORDER BY dist_m, s_suppkey) AS BIGINT) AS rk FROM d) SELECT c_custkey, s_suppkey, dist_m, rk FROM r WHERE rk <= 5""",
-    "geo_cluster" ->
-      s"""WITH RECURSIVE pts AS (SELECT ${geoLatSql("c_custkey", custLatMul)} AS lat_micro, ${geoLonSql("c_custkey", custLonMul)} AS lon_micro FROM customer), cells AS (SELECT (lat_micro + 90000000) // 10000000 AS cy, (lon_micro + 180000000) // 10000000 AS cx, CAST(count(*) AS BIGINT) AS n FROM pts GROUP BY 1, 2), core AS (SELECT cy, cx, n, cy * 100 + cx AS cell FROM cells WHERE n >= 3), offs(dy, dx) AS (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),(0,1),(1,-1),(1,0),(1,1)), e AS (SELECT a.cell AS src, b.cell AS dst FROM core a JOIN offs o ON TRUE JOIN core b ON b.cell = (a.cy + o.dy) * 100 + (a.cx + o.dx)), lbl(cell, comp) AS (SELECT cell, cell FROM core UNION SELECT e.src, l.comp FROM lbl l JOIN e ON e.dst = l.cell), r AS (SELECT cell, min(comp) AS component FROM lbl GROUP BY 1) SELECT CAST(r.component AS BIGINT) AS cluster, CAST(count(*) AS BIGINT) AS n_cells, CAST(sum(core.n) AS BIGINT) AS n_points FROM core JOIN r USING (cell) GROUP BY 1""",
-    "q_fd_check" ->
-      """WITH f1 AS (SELECT c_custkey AS l, CAST(count(DISTINCT c_name) AS BIGINT) AS n_rhs FROM customer GROUP BY 1), f2 AS (SELECT o_custkey AS l, CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS n_rhs FROM orders GROUP BY 1), f3 AS (SELECT l_orderkey AS l, CAST(count(DISTINCT l_returnflag) AS BIGINT) AS n_rhs FROM lineitem GROUP BY 1), f4 AS (SELECT l_partkey AS l, CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_rhs FROM lineitem GROUP BY 1) SELECT 'c_custkey->c_name' AS fd, CAST(count(*) AS BIGINT) AS n_groups, CAST(sum(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating, CAST(max(n_rhs) AS BIGINT) AS max_rhs FROM f1 UNION ALL SELECT 'o_custkey->o_orderstatus', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT), CAST(max(n_rhs) AS BIGINT) FROM f2 UNION ALL SELECT 'l_orderkey->l_returnflag', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT), CAST(max(n_rhs) AS BIGINT) FROM f3 UNION ALL SELECT 'l_partkey->l_suppkey', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT), CAST(max(n_rhs) AS BIGINT) FROM f4""",
-    "q_inclusion" ->
-      """WITH c1 AS (SELECT 'l_orderkey<=o_orderkey' AS candidate, CAST(count(*) AS BIGINT) AS n_distinct, CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = x.v) THEN 1 ELSE 0 END) AS BIGINT) AS n_missing FROM (SELECT DISTINCT l_orderkey AS v FROM lineitem) x), c2 AS (SELECT 'o_orderkey<=l_orderkey', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM lineitem li WHERE li.l_orderkey = x.v) THEN 1 ELSE 0 END) AS BIGINT) FROM (SELECT DISTINCT o_orderkey AS v FROM orders) x), c3 AS (SELECT 'o_custkey<=c_custkey', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = x.v) THEN 1 ELSE 0 END) AS BIGINT) FROM (SELECT DISTINCT o_custkey AS v FROM orders) x), c4 AS (SELECT 'p_partkey<=l_partkey', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM lineitem li WHERE li.l_partkey = x.v) THEN 1 ELSE 0 END) AS BIGINT) FROM (SELECT DISTINCT p_partkey AS v FROM part) x), u AS (SELECT * FROM c1 UNION ALL SELECT * FROM c2 UNION ALL SELECT * FROM c3 UNION ALL SELECT * FROM c4) SELECT candidate, n_distinct, n_missing, n_missing = 0 AS holds FROM u""",
-    "q_changepoint" ->
-      """WITH daily AS (SELECT l_shipdate AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS x FROM lineitem GROUP BY 1), c AS (SELECT d, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i, sum(x) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s1, CAST(count(*) OVER () AS BIGINT) AS n, sum(x) OVER () AS st FROM daily), g AS (SELECT d, i, n, CAST(s1 AS HUGEINT) * (n - i) - CAST(st - s1 AS HUGEINT) * i AS diff FROM c WHERE i < n) SELECT d AS split_after, i AS n_left, n - i AS n_right, CAST((diff * diff) // (CAST(i * (n - i) * n AS HUGEINT) * 10000) AS BIGINT) AS gain FROM g ORDER BY gain DESC, split_after LIMIT 3""",
-    // q_croston: the q_ewma kernel literals replayed over the occurrence
-    // index, for both the size and the inter-arrival series
-    "q_croston" ->
-      s"""WITH occ AS (SELECT CAST(l_shipdate AS DATE) AS d, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS z FROM lineitem WHERE l_partkey % 211 = 0 GROUP BY 1), ix AS (SELECT d, z, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS k, coalesce(CAST(datediff('day', lag(d, 1) OVER (ORDER BY d), d) AS BIGINT), 1) AS gap FROM occ), w(j, w) AS (VALUES ${ewmaKernelMicro.map { case (j, v) => s"($j, $v)" }.mkString(", ")}), conv AS (SELECT a.d, a.k, a.z, a.gap, CAST(w.w AS BIGINT) * b.z AS wz, CAST(w.w AS BIGINT) * b.gap AS wg, CAST(w.w AS BIGINT) AS wt FROM ix a CROSS JOIN w JOIN ix b ON b.k = a.k - w.j) SELECT d, k, z, gap, CAST((sum(wz) * 1000000) // sum(wt) AS BIGINT) AS z_hat_micro, CAST((sum(wg) * 1000000) // sum(wt) AS BIGINT) AS p_hat_micro, CAST((((sum(wz) * 1000000) // sum(wt)) * 1000000) // ((sum(wg) * 1000000) // sum(wt)) AS BIGINT) AS croston_micro FROM conv GROUP BY 1, 2, 3, 4""",
-    "ta_blocklist" ->
-      s"""WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks FROM documents), s AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, CAST(${blocklistTerms.map { case (t, w) => s"$w * len(list_filter(toks, x -> x = '$t'))" }.mkString(" + ")} AS BIGINT) AS score FROM t) SELECT doc_id, n_tokens, score, CAST(CASE WHEN n_tokens > 0 THEN (score * 1000000) // n_tokens ELSE 0 END AS BIGINT) AS tox_micro, (CASE WHEN n_tokens > 0 THEN (score * 1000000) // n_tokens ELSE 0 END) > 40000 AS flagged FROM s""",
-    "q_mannkendall" ->
-      """WITH daily AS (SELECT l_shipdate AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS x FROM lineitem GROUP BY 1), p AS (SELECT CAST(sum(CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1 ELSE 0 END) AS BIGINT) AS s FROM daily a JOIN daily b ON a.d < b.d), ti AS (SELECT CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term FROM (SELECT CAST(count(*) AS BIGINT) AS t FROM daily GROUP BY x)), nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM daily) SELECT n, s, (n * (n - 1) * (2 * n + 5) - tie_term) // 18 AS var_s, CAST(round((CAST(s AS DOUBLE) - CAST(sign(s) AS DOUBLE)) / sqrt(CAST((n * (n - 1) * (2 * n + 5) - tie_term) // 18 AS DOUBLE)) * 1000000) AS BIGINT) AS z_micro FROM p, ti, nn""",
-    "sk_quantile" ->
-      """WITH sample AS (SELECT l_returnflag AS g, CAST(round(l_extendedprice * 100) AS BIGINT) AS v, l_orderkey, l_linenumber FROM lineitem WHERE substr(md5('qs:' || CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)), 1, 1) = '0'), r AS (SELECT g, v, CAST(row_number() OVER (PARTITION BY g ORDER BY v, l_orderkey, l_linenumber) AS BIGINT) AS rn, CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS ns FROM sample), k(k) AS (VALUES (1), (2), (3)) SELECT g AS l_returnflag, CAST(k AS BIGINT) AS quartile, ns AS n_sample, v AS est_c FROM r JOIN k ON rn = (ns * k + 3) // 4""",
-    "q_burstiness" ->
-      """WITH dc AS (SELECT event_type, CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2), g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days, CAST(sum(c) AS BIGINT) AS total, sum(CAST(c AS HUGEINT) * c) AS ss FROM dc GROUP BY 1) SELECT event_type, n_days, total, CAST(((CAST(n_days AS HUGEINT) * ss - CAST(total AS HUGEINT) * total) * 1000000) // (CAST(n_days AS HUGEINT) * total) AS BIGINT) AS fano_micro FROM g""",
-    "sim_radius" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 8), sc AS (SELECT q.query_id, e.vec_id AS neighbor_id, CAST(round(list_dot_product(e.v, q.qv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))) * 1000000) AS BIGINT) AS score_micro FROM e, q WHERE e.vec_id <> q.query_id) SELECT query_id, neighbor_id, score_micro FROM sc WHERE score_micro >= 250000""",
-    // mm_histogram: every bin count recomputed from doc_id's planted
-    // closed-form pixel grid (zeros included via the bin grid)
-    // mm_patches: the closed-form pixel grid grouped by the 8×8 patch
-    // coordinates; every stat recomputed from doc_id alone.
-    "mm_patches" ->
-      """WITH px AS (SELECT d.doc_id, x.range AS x, y.range AS y, ((1 + d.doc_id % 7) * x.range + (1 + d.doc_id % 5) * y.range + d.doc_id % 256) % 256 AS luma FROM documents d, range(32) x, range(32) y) SELECT doc_id AS media_id, CAST(x // 8 AS BIGINT) AS px, CAST(y // 8 AS BIGINT) AS py, CAST(count(*) AS BIGINT) AS n_px, CAST(sum(luma) AS BIGINT) AS sum_luma, CAST(min(luma) AS BIGINT) AS min_luma, CAST(max(luma) AS BIGINT) AS max_luma FROM px GROUP BY 1, 2, 3""",
-    "mm_histogram" ->
-      """WITH px AS (SELECT d.doc_id, ((1 + d.doc_id % 7) * x.range + (1 + d.doc_id % 5) * y.range + d.doc_id % 256) % 256 AS luma FROM documents d, range(32) x, range(32) y), c AS (SELECT doc_id, luma // 16 AS bin, CAST(count(*) AS BIGINT) AS n_px FROM px GROUP BY 1, 2), grid AS (SELECT doc_id, b.range AS bin FROM documents, range(16) b) SELECT grid.doc_id AS media_id, CAST(grid.bin AS BIGINT) AS bin, coalesce(c.n_px, CAST(0 AS BIGINT)) AS n_px FROM grid LEFT JOIN c ON c.doc_id = grid.doc_id AND c.bin = grid.bin""",
-    "q_effective_n" ->
-      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n, CAST(sum(CAST(n_chars AS HUGEINT)) AS HUGEINT) AS sw, CAST(sum(CAST(n_chars AS HUGEINT) * n_chars) AS HUGEINT) AS sww FROM documents GROUP BY 1) SELECT source, n, CAST((sw * sw * 1000000) // sww AS BIGINT) AS eff_n_micro, CAST((n * sww * 1000000) // (sw * sw) AS BIGINT) AS deff_micro FROM g""",
-    "q_unpivot" ->
-      """WITH u AS (SELECT 'quantity' AS metric, CAST(l_quantity AS BIGINT) AS val FROM lineitem UNION ALL SELECT 'price_c', CAST(round(l_extendedprice * 100) AS BIGINT) FROM lineitem UNION ALL SELECT 'discount_c', CAST(round(l_discount * 100) AS BIGINT) FROM lineitem) SELECT metric, CAST(count(*) AS BIGINT) AS n, CAST(sum(val) AS BIGINT) AS total, CAST(min(val) AS BIGINT) AS vmin, CAST(max(val) AS BIGINT) AS vmax FROM u GROUP BY 1""",
-    // stream_quantile: streamed sample ≡ batch sample (stateless
-    // order-free filter), so the batch replay is the oracle verbatim
-    "stream_quantile" ->
-      """WITH sample AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v, event_id FROM events WHERE substr(md5('sq:' || CAST(event_id AS VARCHAR)), 1, 1) = '0'), r AS (SELECT event_type, v, event_id, CAST(row_number() OVER (PARTITION BY event_type ORDER BY v, event_id) AS BIGINT) AS rn, CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS ns FROM sample), k(k) AS (VALUES (1), (2), (3)) SELECT event_type, CAST(k AS BIGINT) AS quartile, ns AS n_sample, v AS est_c FROM r JOIN k ON rn = (ns * k + 3) // 4""",
-    // stream_topk: the streamed bounded-heap equals a plain batch
-    // window rank — (v desc, event_id asc), top 5 per type.
-    "stream_topk" ->
-      """SELECT event_type, CAST(rnk AS BIGINT) AS rnk, event_id, v FROM (SELECT event_type, event_id, CAST(round(value * 100) AS BIGINT) AS v, row_number() OVER (PARTITION BY event_type ORDER BY CAST(round(value * 100) AS BIGINT) DESC, event_id) AS rnk FROM events) WHERE rnk <= 5""",
-    "g_modularity" -> modularityOracleSql,
-    "ev_balance" -> evBalanceOracleSql,
-    "ev_its" ->
-      """WITH daily AS (SELECT CAST(day(ts) AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS y FROM events WHERE event_type = 'purchase' GROUP BY 1), seg AS (SELECT CASE WHEN t < 15 THEN 'pre' ELSE 'post' END AS seg, t, y FROM daily), g AS (SELECT seg, CAST(count(*) AS BIGINT) AS n, CAST(sum(t) AS BIGINT) AS st, CAST(sum(y) AS BIGINT) AS sy, CAST(sum(t * t) AS BIGINT) AS stt, CAST(sum(t * y) AS BIGINT) AS sty FROM seg GROUP BY 1) SELECT seg, n, ((n * sty - st * sy) * 1000000) // (n * stt - st * st) AS slope_micro, (sy * 1000000 - ((n * sty - st * sy) * 1000000) // (n * stt - st * st) * st) // n AS intercept_micro FROM g""",
-    "ev_features_pit" ->
-      """WITH e AS (SELECT user_id, ts, event_type, value FROM events WHERE ts < TIMESTAMP '2024-01-20 00:00:00') SELECT user_id, CAST(count(*) AS BIGINT) AS n_events, CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-13 00:00:00' THEN 1 ELSE 0 END) AS BIGINT) AS n_7d, CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-06 00:00:00' THEN 1 ELSE 0 END) AS BIGINT) AS n_14d, CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS spend_c, CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchases, CAST(floor(epoch(TIMESTAMP '2024-01-20 00:00:00')) AS BIGINT) - CAST(floor(epoch(max(ts))) AS BIGINT) AS recency_s FROM e GROUP BY 1""",
-    // ta_token_dropout: DuckDB's lambda index is 1-based — shifted to
-    // match Spark's 0-based transform index
-    "ta_token_dropout" ->
-      """WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks FROM documents), k AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, list_filter(list_transform(toks, (x, i) -> CASE WHEN substr(md5('do:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)), 1, 1) = '0' THEN NULL ELSE x END), x -> x IS NOT NULL) AS kept FROM t) SELECT doc_id, n_tokens, CAST(len(kept) AS BIGINT) AS n_kept, coalesce(list_aggregate(kept, 'string_agg', ' '), '') AS aug_text FROM k""",
-    // sk_mg: the two exact facts recomputed in SQL; the two booleans are
-    // MG theorems the ENGINE verifies against exact counts (they can
-    // only be false if the aggregate is buggy) — sk_hll envelope style
-    "sk_mg" ->
-      """WITH f AS (SELECT ascii(l_returnflag) AS key, count(*) AS f FROM lineitem GROUP BY 1),
-         t AS (SELECT CAST(sum(f) AS BIGINT) AS n_total FROM f)
-         SELECT n_total, CAST(2 AS BIGINT) AS k,
-           CAST((SELECT count(*) FROM f WHERE f * 3 > t.n_total) AS BIGINT) AS n_guaranteed,
-           TRUE AS guaranteed_present, TRUE AS bounds_ok
-         FROM t""",
-    // stream_mg: the MG theorems hold under ANY merge order, so the
-    // streamed summary passes the identical theorem-level oracle
-    "stream_mg" ->
-      """WITH f AS (SELECT ascii(l_returnflag) AS key, count(*) AS f FROM lineitem GROUP BY 1),
-         t AS (SELECT CAST(sum(f) AS BIGINT) AS n_total FROM f)
-         SELECT n_total, CAST(2 AS BIGINT) AS k,
-           CAST((SELECT count(*) FROM f WHERE f * 3 > t.n_total) AS BIGINT) AS n_guaranteed,
-           TRUE AS guaranteed_present, TRUE AS bounds_ok
-         FROM t""",
-    "sk_bloom_fpr" ->
-      """WITH keys AS (SELECT DISTINCT o_orderkey AS x FROM orders), pos AS (SELECT CAST(('0x' || substr(md5('b1:' || CAST(x AS VARCHAR)), 1, 15)) AS BIGINT) % 2097152 AS p FROM keys UNION ALL SELECT CAST(('0x' || substr(md5('b2:' || CAST(x AS VARCHAR)), 1, 15)) AS BIGINT) % 2097152 FROM keys), words AS (SELECT p // 32 AS word, CAST(bit_or(1::BIGINT << CAST(p % 32 AS INTEGER)) AS BIGINT) AS bits FROM pos GROUP BY 1), probes AS (SELECT x + 100000000 AS pr FROM keys), ph AS (SELECT pr, CAST(('0x' || substr(md5('b1:' || CAST(pr AS VARCHAR)), 1, 15)) AS BIGINT) % 2097152 AS h1, CAST(('0x' || substr(md5('b2:' || CAST(pr AS VARCHAR)), 1, 15)) AS BIGINT) % 2097152 AS h2 FROM probes), looked AS (SELECT pr, coalesce(w1.bits & (1::BIGINT << CAST(h1 % 32 AS INTEGER)), 0) <> 0 AND coalesce(w2.bits & (1::BIGINT << CAST(h2 % 32 AS INTEGER)), 0) <> 0 AS hit FROM ph LEFT JOIN words w1 ON w1.word = h1 // 32 LEFT JOIN words w2 ON w2.word = h2 // 32), agg AS (SELECT CAST(count(*) AS BIGINT) AS n_probes, CAST(sum(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT) AS n_false_pos FROM looked), nk AS (SELECT CAST(count(*) AS BIGINT) AS n_keys FROM keys) SELECT n_keys, CAST(2097152 AS BIGINT) AS m_bits, n_probes, n_false_pos, (n_false_pos * 1000000) // n_probes AS fpr_micro FROM agg, nk""",
-    // q_cochran_q: the same matched-flag pass; column-total squares
-    // through HUGEINT, the identical final double.
-    "q_cochran_q" ->
-      """WITH f AS (SELECT user_id, CAST(max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS v, CAST(max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS c, CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS p FROM events GROUP BY 1), g AS (SELECT CAST(count(*) AS BIGINT) AS n_users, CAST(sum(v) AS BIGINT) AS cv, CAST(sum(c) AS BIGINT) AS cc, CAST(sum(p) AS BIGINT) AS cp, CAST(sum(v + c + p) AS BIGINT) AS sr, CAST(sum((v + c + p) * (v + c + p)) AS BIGINT) AS sr2 FROM f), h AS (SELECT n_users, cv AS c_view, cc AS c_click, cp AS c_purchase, 3 * (CAST(cv AS HUGEINT) * cv + CAST(cc AS HUGEINT) * cc + CAST(cp AS HUGEINT) * cp) - CAST(cv + cc + cp AS HUGEINT) * (cv + cc + cp) AS num, 3 * sr - sr2 AS den FROM g), q AS (SELECT n_users, c_view, c_click, c_purchase, CASE WHEN den = 0 THEN CAST(NULL AS BIGINT) ELSE CAST(round(2.0 * CAST(num AS DOUBLE) / CAST(den AS DOUBLE) * 1000000) AS BIGINT) END AS q_micro FROM h) SELECT n_users, c_view, c_click, c_purchase, q_micro, q_micro > 5991465 AS significant FROM q""",
-    // q_capture_recapture: the same window-flag pass; Chapman estimate
-    // and variance with HUGEINT products, identical double chain.
-    "q_capture_recapture" ->
-      """WITH f AS (SELECT user_id, CAST(max(CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00' THEN 1 ELSE 0 END) AS BIGINT) AS w1, CAST(max(CASE WHEN ts >= TIMESTAMP '2024-01-15 00:00:00' THEN 1 ELSE 0 END) AS BIGINT) AS w2 FROM events GROUP BY 1), g AS (SELECT CAST(sum(w1) AS BIGINT) AS n1, CAST(sum(w2) AS BIGINT) AS n2, CAST(sum(w1 * w2) AS BIGINT) AS m FROM f), h AS (SELECT n1, n2, m, CAST((CAST(n1 + 1 AS HUGEINT) * (n2 + 1) * 1000000) // (m + 1) AS BIGINT) - 1000000 AS nhat_micro, CAST(round(sqrt(CAST(CAST(n1 + 1 AS HUGEINT) * (n2 + 1) * (n1 - m) * (n2 - m) AS DOUBLE) / (CAST(m + 1 AS DOUBLE) * CAST(m + 1 AS DOUBLE) * CAST(m + 2 AS DOUBLE))) * 1000000) AS BIGINT) AS se_micro FROM g) SELECT n1, n2, m, nhat_micro, se_micro, nhat_micro - CAST(round(1.96 * se_micro) AS BIGINT) AS lo_micro, nhat_micro + CAST(round(1.96 * se_micro) AS BIGINT) AS hi_micro FROM h""",
-    "q_mcnemar" ->
-      """WITH f AS (SELECT l_partkey, CAST(max(CASE WHEN year(l_shipdate) = 1997 AND l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS r97, CAST(max(CASE WHEN year(l_shipdate) = 1998 AND l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS r98, max(CASE WHEN year(l_shipdate) = 1997 THEN 1 ELSE 0 END) AS in97, max(CASE WHEN year(l_shipdate) = 1998 THEN 1 ELSE 0 END) AS in98 FROM lineitem WHERE year(l_shipdate) IN (1997, 1998) GROUP BY 1), p AS (SELECT * FROM f WHERE in97 = 1 AND in98 = 1), g AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs, CAST(sum(CASE WHEN r97 = 1 AND r98 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS b, CAST(sum(CASE WHEN r97 = 0 AND r98 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c FROM p) SELECT n_pairs, b, c, CAST(CASE WHEN b + c = 0 THEN 0 ELSE ((b - c) * (b - c) * 1000000) // (b + c) END AS BIGINT) AS chi2_micro, (CASE WHEN b + c = 0 THEN 0 ELSE ((b - c) * (b - c) * 1000000) // (b + c) END) > 3841459 AS significant FROM g""",
-    "q_price_index" ->
-      """WITH py AS (SELECT l_partkey, CAST(sum(CASE WHEN year(l_shipdate) = 1997 THEN CAST(round(l_extendedprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS rev0, CAST(sum(CASE WHEN year(l_shipdate) = 1997 THEN CAST(l_quantity AS BIGINT) ELSE 0 END) AS BIGINT) AS q0, CAST(sum(CASE WHEN year(l_shipdate) = 1998 THEN CAST(round(l_extendedprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS rev1, CAST(sum(CASE WHEN year(l_shipdate) = 1998 THEN CAST(l_quantity AS BIGINT) ELSE 0 END) AS BIGINT) AS q1 FROM lineitem WHERE year(l_shipdate) IN (1997, 1998) GROUP BY 1 HAVING q0 > 0 AND q1 > 0), g AS (SELECT CAST(count(*) AS BIGINT) AS n_parts, CAST(sum((rev1 * q0) // q1) AS BIGINT) AS l_num, CAST(sum(rev0) AS BIGINT) AS l_den, CAST(sum(rev1) AS BIGINT) AS p_num, CAST(sum((rev0 * q1) // q0) AS BIGINT) AS p_den, CAST(sum(CAST(rev1 AS HUGEINT)) AS HUGEINT) AS r1, CAST(sum(CAST(q1 AS HUGEINT)) AS HUGEINT) AS tq1, CAST(sum(CAST(rev0 AS HUGEINT)) AS HUGEINT) AS r0, CAST(sum(CAST(q0 AS HUGEINT)) AS HUGEINT) AS tq0 FROM py) SELECT n_parts, (l_num * 1000000) // l_den AS laspeyres_micro, (p_num * 1000000) // p_den AS paasche_micro, CAST((r1 * tq0 * 1000000) // (tq1 * r0) AS BIGINT) AS unit_value_micro FROM g""",
-    "q_key_discovery" ->
-      """WITH k1 AS (SELECT CAST(count(*) AS BIGINT) AS nd, CAST(sum(c) AS BIGINT) AS nr, CAST(max(c) AS BIGINT) AS md FROM (SELECT count(*) AS c FROM orders GROUP BY o_orderkey)), k2 AS (SELECT CAST(count(*) AS BIGINT) AS nd, CAST(sum(c) AS BIGINT) AS nr, CAST(max(c) AS BIGINT) AS md FROM (SELECT count(*) AS c FROM orders GROUP BY o_custkey)), k3 AS (SELECT CAST(count(*) AS BIGINT) AS nd, CAST(sum(c) AS BIGINT) AS nr, CAST(max(c) AS BIGINT) AS md FROM (SELECT count(*) AS c FROM orders GROUP BY o_custkey, o_orderdate)), k4 AS (SELECT CAST(count(*) AS BIGINT) AS nd, CAST(sum(c) AS BIGINT) AS nr, CAST(max(c) AS BIGINT) AS md FROM (SELECT count(*) AS c FROM lineitem GROUP BY l_orderkey)), k5 AS (SELECT CAST(count(*) AS BIGINT) AS nd, CAST(sum(c) AS BIGINT) AS nr, CAST(max(c) AS BIGINT) AS md FROM (SELECT count(*) AS c FROM lineitem GROUP BY l_orderkey, l_linenumber)) SELECT 'orders(o_orderkey)' AS candidate, nr AS n_rows, nd AS n_distinct, md AS max_dup, nr = nd AS is_key FROM k1 UNION ALL SELECT 'orders(o_custkey)', nr, nd, md, nr = nd FROM k2 UNION ALL SELECT 'orders(o_custkey,o_orderdate)', nr, nd, md, nr = nd FROM k3 UNION ALL SELECT 'lineitem(l_orderkey)', nr, nd, md, nr = nd FROM k4 UNION ALL SELECT 'lineitem(l_orderkey,l_linenumber)', nr, nd, md, nr = nd FROM k5""",
-    "q_paired_ttest" ->
-      """WITH f AS (SELECT l_partkey, CAST(sum(CASE WHEN year(l_shipdate) = 1998 THEN CAST(round(l_extendedprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS rev1, CAST(sum(CASE WHEN year(l_shipdate) = 1997 THEN CAST(round(l_extendedprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS rev0, max(CASE WHEN year(l_shipdate) = 1997 THEN 1 ELSE 0 END) AS in97, max(CASE WHEN year(l_shipdate) = 1998 THEN 1 ELSE 0 END) AS in98 FROM lineitem WHERE year(l_shipdate) IN (1997, 1998) GROUP BY 1), d AS (SELECT CAST(rev1 - rev0 AS HUGEINT) AS d FROM f WHERE in97 = 1 AND in98 = 1), g AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(d) AS sd, sum(d * d) AS sdd FROM d) SELECT CAST(n AS BIGINT) AS n, CAST(sd AS BIGINT) AS sum_d_c, CAST(round(CAST(sd AS DOUBLE) / sqrt(CAST(n * sdd - sd * sd AS DOUBLE) / CAST(n - 1 AS DOUBLE)) * 1000000) AS BIGINT) AS t_micro FROM g""",
-    "ev_ratio_delta" ->
-      """WITH per AS (SELECT user_id % 2 AS arm, CAST(sum(CAST(round(value * 100) AS BIGINT)) AS HUGEINT) AS x, CAST(count(*) AS HUGEINT) AS y FROM events GROUP BY arm, user_id), g AS (SELECT arm, CAST(count(*) AS BIGINT) AS n, sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy FROM per GROUP BY 1) SELECT arm, n, CAST((sx * 1000000) // sy AS BIGINT) AS ratio_micro, CAST(round(sqrt(((CAST(n * sxx - sx * sx AS DOUBLE) / (CAST(n AS DOUBLE) * (n - 1))) + (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE)) * (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE)) * (CAST(n * syy - sy * sy AS DOUBLE) / (CAST(n AS DOUBLE) * (n - 1))) - 2.0 * (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE)) * (CAST(n * sxy - sx * sy AS DOUBLE) / (CAST(n AS DOUBLE) * (n - 1)))) / n) / (CAST(sy AS DOUBLE) / n) * 1000000) AS BIGINT) AS se_micro FROM g""",
-    "q_iv" ->
-      """WITH bins AS (SELECT least(CAST(l_quantity AS BIGINT) // 10, 9) AS bin, CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS pos, CAST(sum(CASE WHEN l_returnflag <> 'R' THEN 1 ELSE 0 END) AS BIGINT) AS neg FROM lineitem GROUP BY 1), t AS (SELECT CAST(sum(pos) AS BIGINT) AS tp, CAST(sum(neg) AS BIGINT) AS tn FROM bins) SELECT bin, pos, neg, CAST(round(ln((CAST(pos + 1 AS DOUBLE) * (tn + 10)) / (CAST(neg + 1 AS DOUBLE) * (tp + 10))) * 1000000) AS BIGINT) AS woe_micro, CAST(round((CAST(pos + 1 AS DOUBLE) / (tp + 10) - CAST(neg + 1 AS DOUBLE) / (tn + 10)) * ln((CAST(pos + 1 AS DOUBLE) * (tn + 10)) / (CAST(neg + 1 AS DOUBLE) * (tp + 10))) * 1000000) AS BIGINT) AS iv_micro FROM bins, t""",
-    // ta_rouge: 1-based DuckDB lambda index pairs token j with toks[j+1],
-    // matching Spark's 0-based (x, i) -> element_at(toks, i + 2)
-    "ta_rouge" ->
-      """WITH t0 AS (SELECT doc_id, lang, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks FROM documents), d AS (SELECT doc_id, lang, list_distinct(toks) AS u1, list_distinct(list_transform(list_slice(toks, 1, greatest(len(toks) - 1, 0)), (x, i) -> concat(x, ' ', toks[i + 1]))) AS u2 FROM t0), p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.u1 AS a1, a.u2 AS a2, b.u1 AS b1, b.u2 AS b2 FROM d a JOIN d b ON b.doc_id = a.doc_id + 1 AND a.lang = b.lang), o AS (SELECT a_id, b_id, CAST(len(list_filter(a1, x -> list_contains(b1, x))) AS BIGINT) AS o1, CAST(len(a1) AS BIGINT) AS na1, CAST(len(b1) AS BIGINT) AS nb1, CAST(len(list_filter(a2, x -> list_contains(b2, x))) AS BIGINT) AS o2, CAST(len(a2) AS BIGINT) AS na2, CAST(len(b2) AS BIGINT) AS nb2 FROM p) SELECT a_id, b_id, CAST(CASE WHEN na1 = 0 THEN 0 ELSE (o1 * 1000000) // na1 END AS BIGINT) AS r1_p_micro, CAST(CASE WHEN nb1 = 0 THEN 0 ELSE (o1 * 1000000) // nb1 END AS BIGINT) AS r1_r_micro, CAST(CASE WHEN na1 + nb1 = 0 THEN 0 ELSE (2 * o1 * 1000000) // (na1 + nb1) END AS BIGINT) AS r1_f_micro, CAST(CASE WHEN na2 + nb2 = 0 THEN 0 ELSE (2 * o2 * 1000000) // (na2 + nb2) END AS BIGINT) AS r2_f_micro FROM o""",
-    "ev_retention" ->
-      """WITH days AS (SELECT DISTINCT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day_idx FROM events), c AS (SELECT user_id, min(day_idx) AS d0 FROM days GROUP BY 1), j AS (SELECT c.d0, c.user_id, days.day_idx FROM c JOIN days USING (user_id)), g AS (SELECT d0, CAST(count(DISTINCT user_id) AS BIGINT) AS n_cohort, CAST(sum(CASE WHEN day_idx = d0 + 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_d1, CAST(sum(CASE WHEN day_idx = d0 + 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_d3, CAST(sum(CASE WHEN day_idx = d0 + 7 THEN 1 ELSE 0 END) AS BIGINT) AS n_d7 FROM j GROUP BY 1) SELECT d0 AS cohort_day, n_cohort, (n_d1 * 1000000) // n_cohort AS d1_micro, (n_d3 * 1000000) // n_cohort AS d3_micro, (n_d7 * 1000000) // n_cohort AS d7_micro FROM g""",
-    // dd_canonical: the dd_components islands + a quality-ranked pick
-    "dd_canonical" ->
-      """WITH runs AS (SELECT doc_id, n_chars, lang, doc_id - ROW_NUMBER() OVER (PARTITION BY lang ORDER BY doc_id) AS grp FROM documents), lbl AS (SELECT doc_id, n_chars, CAST(MIN(doc_id) OVER (PARTITION BY lang, grp) AS BIGINT) AS cluster FROM runs), r AS (SELECT cluster, doc_id, n_chars, row_number() OVER (PARTITION BY cluster ORDER BY n_chars DESC, doc_id ASC) AS rk FROM lbl) SELECT cluster, doc_id AS canonical_id, CAST(n_chars AS BIGINT) AS n_chars FROM r WHERE rk = 1""",
-    "q_xyz" ->
-      """WITH monthly AS (SELECT l_partkey, date_trunc('month', l_shipdate) AS m, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q FROM lineitem GROUP BY 1, 2), agg AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS n, CAST(sum(q) AS BIGINT) AS sq, CAST(sum(q * q) AS BIGINT) AS sqq FROM monthly GROUP BY 1), cv AS (SELECT CAST(round(sqrt(CAST(n * sqq - sq * sq AS DOUBLE) / (CAST(n AS DOUBLE) * (n - 1))) / (CAST(sq AS DOUBLE) / n) * 1000000) AS BIGINT) AS cv_micro FROM agg WHERE n >= 2), c AS (SELECT CASE WHEN cv_micro < 500000 THEN 'X' WHEN cv_micro < 1000000 THEN 'Y' ELSE 'Z' END AS xyz_class, cv_micro FROM cv) SELECT xyz_class, CAST(count(*) AS BIGINT) AS n_parts, CAST(sum(cv_micro) // count(*) AS BIGINT) AS avg_cv_micro FROM c GROUP BY 1""",
-    "q_rolling_median" ->
-      """WITH daily AS (SELECT l_shipdate AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS x FROM lineitem GROUP BY 1), w AS (SELECT d, x, list_sort(list(x) OVER (ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)) AS win FROM daily) SELECT d, x, CAST(len(win) AS BIGINT) AS n_win, CAST(win[CAST((len(win) + 1) // 2 AS INTEGER)] AS BIGINT) AS med_c FROM w""",
-    "ev_lifecycle" ->
-      """WITH days AS (SELECT DISTINCT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day_idx FROM events), g AS (SELECT user_id, day_idx, day_idx - lag(day_idx, 1) OVER (PARTITION BY user_id ORDER BY day_idx) AS gap FROM days), c AS (SELECT day_idx, CASE WHEN gap IS NULL THEN 'new' WHEN gap = 1 THEN 'retained' WHEN gap <= 7 THEN 'returning' ELSE 'resurrected' END AS cls FROM g) SELECT day_idx, CAST(count(*) AS BIGINT) AS n_active, CAST(sum(CASE WHEN cls = 'new' THEN 1 ELSE 0 END) AS BIGINT) AS n_new, CAST(sum(CASE WHEN cls = 'retained' THEN 1 ELSE 0 END) AS BIGINT) AS n_retained, CAST(sum(CASE WHEN cls = 'returning' THEN 1 ELSE 0 END) AS BIGINT) AS n_returning, CAST(sum(CASE WHEN cls = 'resurrected' THEN 1 ELSE 0 END) AS BIGINT) AS n_resurrected FROM c GROUP BY 1""",
-    "ev_shapley" -> shapleyOracleSql,
-    "sim_rproj" -> rprojOracleSql,
-    "ta_fertility" ->
-      """WITH c AS (SELECT lang, CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS BIGINT) AS nw, CAST(len(regexp_extract_all(text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\s]')) AS BIGINT) AS nb, CAST(length(text) AS BIGINT) AS nc FROM documents), g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(nc) AS BIGINT) AS chars, CAST(sum(nb) AS BIGINT) AS bpeish, CAST(sum(nw) AS BIGINT) AS words FROM c GROUP BY 1) SELECT lang, n_docs, chars, bpeish, (chars * 1000000) // bpeish AS chars_per_tok_micro, (bpeish * 1000000) // words AS fertility_micro FROM g""",
-    "q_kendall" ->
-      """WITH daily AS (SELECT l_shipdate AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS x, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS y FROM lineitem GROUP BY 1), cd AS (SELECT CAST(sum(CAST(sign(b.x - a.x) * sign(b.y - a.y) AS BIGINT)) AS BIGINT) AS s FROM daily a JOIN daily b ON a.d < b.d), tx AS (SELECT CAST(sum(t * (t - 1) // 2) AS BIGINT) AS n1 FROM (SELECT CAST(count(*) AS BIGINT) AS t FROM daily GROUP BY x)), ty AS (SELECT CAST(sum(t * (t - 1) // 2) AS BIGINT) AS n2 FROM (SELECT CAST(count(*) AS BIGINT) AS t FROM daily GROUP BY y)), nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM daily) SELECT n, s, n1, n2, CAST(round(CAST(s AS DOUBLE) / sqrt((CAST(n * (n - 1) // 2 - n1 AS DOUBLE)) * (CAST(n * (n - 1) // 2 - n2 AS DOUBLE))) * 1000000) AS BIGINT) AS tau_micro FROM cd, tx, ty, nn""",
-    "ev_session_sensitivity" ->
-      """WITH g AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT) AS gap_s FROM events), a AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users, CAST(sum(CASE WHEN gap_s > 900 THEN 1 ELSE 0 END) AS BIGINT) AS g15, CAST(sum(CASE WHEN gap_s > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS g30, CAST(sum(CASE WHEN gap_s > 3600 THEN 1 ELSE 0 END) AS BIGINT) AS g60 FROM g), t(tau_s, gcol) AS (VALUES (900, 'g15'), (1800, 'g30'), (3600, 'g60')) SELECT CAST(tau_s AS BIGINT) AS tau_s, n_users, n_users + (CASE gcol WHEN 'g15' THEN g15 WHEN 'g30' THEN g30 ELSE g60 END) AS n_sessions, ((n_users + (CASE gcol WHEN 'g15' THEN g15 WHEN 'g30' THEN g30 ELSE g60 END)) * 1000000) // n_users AS sessions_per_user_micro FROM t, a""",
-    // mm_entropy: the closed-form grid histogram + the same per-bin
-    // micro-rounded −p·ln p terms
-    "mm_entropy" ->
-      """WITH px AS (SELECT d.doc_id, ((1 + d.doc_id % 7) * x.range + (1 + d.doc_id % 5) * y.range + d.doc_id % 256) % 256 AS luma FROM documents d, range(32) x, range(32) y), c AS (SELECT doc_id, luma // 16 AS bin, CAST(count(*) AS BIGINT) AS n_px FROM px GROUP BY 1, 2), t AS (SELECT doc_id, CAST(round(-(CAST(n_px AS DOUBLE) / 1024.0) * ln(CAST(n_px AS DOUBLE) / 1024.0) * 1000000) AS BIGINT) AS term FROM c WHERE n_px > 0) SELECT doc_id AS media_id, CAST(count(*) AS BIGINT) AS n_occupied, CAST(sum(term) AS BIGINT) AS entropy_micronats FROM t GROUP BY 1""",
-    "q_cpk" ->
-      """WITH g AS (SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sq, CAST(sum(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS BIGINT) AS sqq FROM lineitem GROUP BY 1) SELECT l_returnflag, n, CAST(round((45.0 - 5.0) / (6.0 * sqrt(CAST(n * sqq - sq * sq AS DOUBLE) / (CAST(n AS DOUBLE) * (n - 1)))) * 1000000) AS BIGINT) AS cp_micro, CAST(round(least(45.0 - CAST(sq AS DOUBLE) / n, CAST(sq AS DOUBLE) / n - 5.0) / (3.0 * sqrt(CAST(n * sqq - sq * sq AS DOUBLE) / (CAST(n AS DOUBLE) * (n - 1)))) * 1000000) AS BIGINT) AS cpk_micro FROM g""",
-    "ev_late" ->
-      """WITH p AS (SELECT user_id, event_id, ts, max(ts) OVER (PARTITION BY user_id ORDER BY event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max FROM events), c AS (SELECT CAST(ts AS DATE) AS d, (prev_max IS NOT NULL AND ts < prev_max) AS late, CASE WHEN prev_max IS NOT NULL AND ts < prev_max THEN CAST(floor(epoch(prev_max)) AS BIGINT) - CAST(floor(epoch(ts)) AS BIGINT) ELSE 0 END AS skew_s FROM p) SELECT d, CAST(count(*) AS BIGINT) AS n_events, CAST(sum(CASE WHEN late THEN 1 ELSE 0 END) AS BIGINT) AS n_late, CAST(max(skew_s) AS BIGINT) AS max_skew_s, (CAST(sum(CASE WHEN late THEN 1 ELSE 0 END) AS BIGINT) * 1000000) // CAST(count(*) AS BIGINT) AS late_micro FROM c GROUP BY 1""",
-    "q_emd" ->
-      """WITH bins AS (SELECT least(CAST(round(l_extendedprice * 100) AS BIGINT) // 1000000, 9) AS bin, CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS r, CAST(sum(CASE WHEN l_returnflag <> 'R' THEN 1 ELSE 0 END) AS BIGINT) AS k FROM lineitem GROUP BY 1), t AS (SELECT CAST(sum(r) AS BIGINT) AS tr, CAST(sum(k) AS BIGINT) AS tk FROM bins), c AS (SELECT bin, (r * 1000000) // tr AS sr, (k * 1000000) // tk AS sk FROM bins, t), cc AS (SELECT bin, sum(sr - sk) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_diff FROM c) SELECT CAST(count(*) AS BIGINT) AS n_bins, CAST(sum(abs(cum_diff)) AS BIGINT) AS emd_micro FROM cc""",
-    "q_hhi" ->
-      """WITH rev AS (SELECT s_nationkey, s_suppkey, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS rev FROM lineitem JOIN supplier ON l_suppkey = s_suppkey GROUP BY 1, 2), nat AS (SELECT s_nationkey, CAST(sum(rev) AS BIGINT) AS nrev FROM rev GROUP BY 1), sh AS (SELECT rev.s_nationkey, (rev.rev * 1000000) // nrev AS share_micro FROM rev JOIN nat USING (s_nationkey)), g AS (SELECT s_nationkey AS nationkey, CAST(count(*) AS BIGINT) AS n_suppliers, CAST(sum((share_micro * share_micro) // 1000000) AS BIGINT) AS hhi_micro, CAST(max(share_micro) AS BIGINT) AS top_share_micro FROM sh GROUP BY 1) SELECT nationkey, n_suppliers, hhi_micro, top_share_micro, hhi_micro > 250000 AS concentrated FROM g""",
-    "q_logloss" ->
-      """WITH cells AS (SELECT CAST(l_quantity AS BIGINT) AS qty, l_returnflag = 'R' AS y, CAST(count(*) AS BIGINT) AS n FROM lineitem GROUP BY 1, 2), t AS (SELECT n, CAST(round(CASE WHEN y THEN -ln(greatest(least(CAST(qty AS DOUBLE) * 0.02, 0.99), 0.01)) ELSE -ln(1.0 - greatest(least(CAST(qty AS DOUBLE) * 0.02, 0.99), 0.01)) END * 1000000) AS BIGINT) AS term_micro FROM cells) SELECT CAST(sum(n) AS BIGINT) AS n_rows, CAST(sum(n * term_micro) AS BIGINT) // CAST(sum(n) AS BIGINT) AS logloss_micro FROM t""",
-    "q_volatility" ->
-      """WITH daily AS (SELECT l_shipdate AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS x FROM lineitem GROUP BY 1), r AS (SELECT d, CAST(round(ln(CAST(x AS DOUBLE) / CAST(lag(x, 1) OVER (ORDER BY d) AS DOUBLE)) * 1000000) AS BIGINT) AS r_micro FROM daily) SELECT CAST(date_trunc('month', d) AS DATE) AS month, CAST(count(*) AS BIGINT) AS n_days, CAST(sum(r_micro) AS BIGINT) AS sum_r_micro, CAST(round(sqrt(CAST(sum(r_micro * r_micro) AS DOUBLE) / count(*))) AS BIGINT) AS vol_micro FROM r WHERE r_micro IS NOT NULL GROUP BY 1""",
-    "q_dense_ids" ->
-      """SELECT c_custkey, c_name, CAST(row_number() OVER (ORDER BY c_name) - 1 AS BIGINT) AS dense_id FROM customer""",
-    "q_residuals" ->
-      """WITH cells AS (SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS o FROM lineitem GROUP BY 1, 2), rt AS (SELECT l_returnflag, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY 1), ct AS (SELECT l_linestatus, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY 1), nt AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM cells), j AS (SELECT cells.l_returnflag, cells.l_linestatus, o, r, c, n FROM cells JOIN rt USING (l_returnflag) JOIN ct USING (l_linestatus) CROSS JOIN nt) SELECT l_returnflag, l_linestatus, o, CAST((CAST(r AS HUGEINT) * c * 1000000) // n AS BIGINT) AS e_micro, CAST(round((CAST(o AS DOUBLE) - CAST(r AS DOUBLE) * c / n) / sqrt(CAST(r AS DOUBLE) * c / n * (1.0 - CAST(r AS DOUBLE) / n) * (1.0 - CAST(c AS DOUBLE) / n)) * 1000000) AS BIGINT) AS resid_micro, abs(CAST(round((CAST(o AS DOUBLE) - CAST(r AS DOUBLE) * c / n) / sqrt(CAST(r AS DOUBLE) * c / n * (1.0 - CAST(r AS DOUBLE) / n) * (1.0 - CAST(c AS DOUBLE) / n)) * 1000000) AS BIGINT)) > 2000000 AS driving FROM j""",
-    "q_dw" ->
-      """WITH daily AS (SELECT l_shipdate AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS x FROM lineitem GROUP BY 1), t AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx FROM daily), l AS (SELECT x, lag(x, 1) OVER (ORDER BY d) AS xp FROM daily), g AS (SELECT CAST(max(n) AS BIGINT) AS n_days, sum(CASE WHEN xp IS NULL THEN 0::HUGEINT ELSE CAST(n AS HUGEINT) * n * (x - xp) * (x - xp) END) AS num, sum((CAST(n AS HUGEINT) * x - sx) * (CAST(n AS HUGEINT) * x - sx)) AS den FROM l, t) SELECT n_days, CAST((num * 1000000) // den AS BIGINT) AS dw_micro FROM g""",
-    // q_granger: Gram entries exact HUGEINT (mirrors the engine's
-    // DECIMAL), Cramer solves and RSS identities in the SAME double op
-    // order via staged CTEs mirroring the engine's staged selects.
-    "q_granger" ->
-      """WITH daily AS (SELECT l_shipdate AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS y, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS x FROM lineitem GROUP BY 1), lagged AS (SELECT y, lag(y) OVER (ORDER BY d) AS y1, lag(x) OVER (ORDER BY d) AS x1 FROM daily), flt AS (SELECT y, y1, x1 FROM lagged WHERE y1 IS NOT NULL), g AS (SELECT CAST(count(*) AS HUGEINT) AS n, CAST(sum(y1) AS HUGEINT) AS g01, CAST(sum(x1) AS HUGEINT) AS g02, CAST(sum(y) AS HUGEINT) AS g0y, sum(CAST(y1 AS HUGEINT) * y1) AS g11, sum(CAST(y1 AS HUGEINT) * x1) AS g12, sum(CAST(y1 AS HUGEINT) * y) AS g1y, sum(CAST(x1 AS HUGEINT) * x1) AS g22, sum(CAST(x1 AS HUGEINT) * y) AS g2y, sum(CAST(y AS HUGEINT) * y) AS syy FROM flt), d0 AS (SELECT CAST(n AS BIGINT) AS n, CAST(n AS DOUBLE) AS a00, CAST(g01 AS DOUBLE) AS a01, CAST(g02 AS DOUBLE) AS a02, CAST(g0y AS DOUBLE) AS b0, CAST(g11 AS DOUBLE) AS a11, CAST(g12 AS DOUBLE) AS a12, CAST(g1y AS DOUBLE) AS b1, CAST(g22 AS DOUBLE) AS a22, CAST(g2y AS DOUBLE) AS b2, CAST(syy AS DOUBLE) AS syy FROM g), d1 AS (SELECT *, a00 * (a11 * a22 - a12 * a12) - a01 * (a01 * a22 - a12 * a02) + a02 * (a01 * a12 - a11 * a02) AS det3, a00 * a11 - a01 * a01 AS det2 FROM d0), d2 AS (SELECT n, a00, a01, a11, b0, b1, b2, syy, det2, (b0 * (a11 * a22 - a12 * a12) - a01 * (b1 * a22 - a12 * b2) + a02 * (b1 * a12 - a11 * b2)) / det3 AS bb0, (a00 * (b1 * a22 - a12 * b2) - b0 * (a01 * a22 - a12 * a02) + a02 * (a01 * b2 - b1 * a02)) / det3 AS bb1, (a00 * (a11 * b2 - a12 * b1) - a01 * (a01 * b2 - b1 * a02) + b0 * (a01 * a12 - a11 * a02)) / det3 AS bb2 FROM d1), d3 AS (SELECT n, a00, a01, a11, b0, b1, syy, det2, bb2, syy - ((bb0 * b0 + bb1 * b1) + bb2 * b2) AS rssu FROM d2), d4 AS (SELECT n, b0, b1, syy, bb2, rssu, (b0 * a11 - a01 * b1) / det2 AS aa0, (a00 * b1 - a01 * b0) / det2 AS aa1 FROM d3), d5 AS (SELECT n, bb2, rssu, syy - (aa0 * b0 + aa1 * b1) AS rssr FROM d4) SELECT n, CAST(round(bb2 * 1000000) AS BIGINT) AS beta_x_micro, CAST(round((rssr - rssu) / (rssu / CAST(n - 3 AS DOUBLE)) * 1000000) AS BIGINT) AS f_micro FROM d5""",
-    "q_relative_risk" ->
-      """WITH g AS (SELECT CAST(sum(CASE WHEN l_discount >= 0.05 AND l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS a, CAST(sum(CASE WHEN l_discount >= 0.05 AND l_returnflag <> 'R' THEN 1 ELSE 0 END) AS BIGINT) AS b, CAST(sum(CASE WHEN l_discount < 0.05 AND l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS c, CAST(sum(CASE WHEN l_discount < 0.05 AND l_returnflag <> 'R' THEN 1 ELSE 0 END) AS BIGINT) AS d FROM lineitem) SELECT a, b, c, d, CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN CAST(round(CAST(a AS DOUBLE) / (a + b) / (CAST(c AS DOUBLE) / (c + d)) * 1000000) AS BIGINT) END AS rr_micro, CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN CAST(round(CAST(a AS DOUBLE) * d / (CAST(b AS DOUBLE) * c) * 1000000) AS BIGINT) END AS or_micro, CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN CAST(round(exp(ln(CAST(a AS DOUBLE) * d / (CAST(b AS DOUBLE) * c)) - 1.96 * sqrt(1.0/a + 1.0/b + 1.0/c + 1.0/d)) * 1000000) AS BIGINT) END AS or_lo_micro, CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN CAST(round(exp(ln(CAST(a AS DOUBLE) * d / (CAST(b AS DOUBLE) * c)) + 1.96 * sqrt(1.0/a + 1.0/b + 1.0/c + 1.0/d)) * 1000000) AS BIGINT) END AS or_hi_micro FROM g""",
-    "ev_audience_overlap" -> audienceOverlapOracleSql,
-    "q_monotonicity" ->
-      """WITH bins AS (SELECT CAST(l_quantity AS BIGINT) AS qty, CAST(count(*) AS BIGINT) AS n, CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS pos FROM lineitem GROUP BY 1), r AS (SELECT qty, (pos * 1000000) // n AS rate_micro FROM bins), l AS (SELECT rate_micro, lag(rate_micro, 1) OVER (ORDER BY qty) AS prev FROM r) SELECT CAST(count(*) AS BIGINT) AS n_bins, CAST(sum(CASE WHEN prev IS NOT NULL AND rate_micro < prev THEN 1 ELSE 0 END) AS BIGINT) AS n_violations, CAST(max(CASE WHEN prev IS NOT NULL AND rate_micro < prev THEN prev - rate_micro ELSE 0 END) AS BIGINT) AS worst_drop_micro FROM l""",
-    "q_evt" ->
-      """WITH daily AS (SELECT l_shipdate AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS x FROM lineitem GROUP BY 1), mx AS (SELECT date_trunc('month', d) AS m, CAST(max(x) AS HUGEINT) AS mx FROM daily GROUP BY 1), g AS (SELECT CAST(count(*) AS BIGINT) AS n_blocks, sum(mx) AS sm, sum(mx * mx) AS smm FROM mx), f AS (SELECT n_blocks, sqrt(CAST(n_blocks * smm - sm * sm AS DOUBLE) / (CAST(n_blocks AS DOUBLE) * (n_blocks - 1))) * 0.7796968012336761 AS beta, CAST(sm AS DOUBLE) / n_blocks AS mean FROM g) SELECT n_blocks, CAST(round(mean - 0.5772156649015329 * beta) AS BIGINT) AS mu_c, CAST(round(beta) AS BIGINT) AS beta_c, CAST(round((mean - 0.5772156649015329 * beta) - beta * (-2.441716398881459)) AS BIGINT) AS rl12_c FROM f""",
-    "q_mix_shift" ->
-      """WITH b AS (SELECT p_brand, CAST(sum(CASE WHEN year(l_shipdate) = 1997 THEN 1 ELSE 0 END) AS BIGINT) AS n0, CAST(sum(CASE WHEN year(l_shipdate) = 1997 AND l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS x0, CAST(sum(CASE WHEN year(l_shipdate) = 1998 THEN 1 ELSE 0 END) AS BIGINT) AS n1, CAST(sum(CASE WHEN year(l_shipdate) = 1998 AND l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS x1 FROM lineitem JOIN part ON l_partkey = p_partkey WHERE year(l_shipdate) IN (1997, 1998) GROUP BY 1), t AS (SELECT CAST(sum(n0) AS BIGINT) AS t0, CAST(sum(n1) AS BIGINT) AS t1 FROM b), sh AS (SELECT p_brand, (n0 * 1000000) // t0 AS w0_micro, (n1 * 1000000) // t1 AS w1_micro, CASE WHEN n0 = 0 THEN 0 ELSE (x0 * 1000000) // n0 END AS r0_micro, CASE WHEN n1 = 0 THEN 0 ELSE (x1 * 1000000) // n1 END AS r1_micro FROM b, t) SELECT p_brand, w0_micro, w1_micro, r0_micro, r1_micro, CAST(((w1_micro - w0_micro) * r0_micro) // 1000000 AS BIGINT) AS mix_term_micro, CAST((w1_micro * (r1_micro - r0_micro)) // 1000000 AS BIGINT) AS rate_term_micro FROM sh""",
-    "ta_negsample" ->
-      """WITH tok AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS token FROM documents), tf AS (SELECT token, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1), w AS (SELECT token, tf, CAST(round(exp(0.75 * ln(CAST(tf AS DOUBLE))) * 1000000) AS BIGINT) AS w75_micro FROM tf), t AS (SELECT CAST(sum(w75_micro) AS BIGINT) AS wt FROM w) SELECT token, tf, w75_micro, (w75_micro * 1000000) // wt AS p_micro FROM w, t""",
-    "q_eb_shrink" ->
-      """WITH b AS (SELECT p_brand, CAST(count(*) AS BIGINT) AS n, CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS x FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1), r AS (SELECT p_brand, n, x, (x * 1000000) // n AS rate_micro FROM b), mom AS (SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(rate_micro) AS BIGINT) AS sr, CAST(sum(rate_micro * rate_micro) AS BIGINT) AS srr FROM r), pr AS (SELECT CAST(sr AS DOUBLE) / k / 1000000 AS m, CAST(k * srr - sr * sr AS DOUBLE) / (CAST(k AS DOUBLE) * (k - 1)) / 1e12 AS v FROM mom), ab AS (SELECT CASE WHEN v <= 0.0 THEN 1000.0 ELSE m * (m * (1.0 - m) / v - 1.0) END AS alpha, CASE WHEN v <= 0.0 THEN 1000.0 ELSE (1.0 - m) * (m * (1.0 - m) / v - 1.0) END AS beta FROM pr) SELECT p_brand, n, x, rate_micro, CAST(round((CAST(x AS DOUBLE) + alpha) / (CAST(n AS DOUBLE) + alpha + beta) * 1000000) AS BIGINT) AS shrunk_micro FROM r, ab""",
-    // mm_ssim: paired pixel sums replayed from the closed-form grids of
-    // consecutive doc ids; the SSIM formula text matches the engine's
-    "mm_ssim" ->
-      """WITH px AS (SELECT d.doc_id, x.range AS x, y.range AS y, ((1 + d.doc_id % 7) * x.range + (1 + d.doc_id % 5) * y.range + d.doc_id % 256) % 256 AS luma FROM documents d, range(32) x, range(32) y), p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.luma AS xa, b.luma AS xb FROM px a JOIN px b ON b.doc_id = a.doc_id + 1 AND b.x = a.x AND b.y = a.y), g AS (SELECT a_id, b_id, CAST(sum(xa) AS BIGINT) AS sx, CAST(sum(xb) AS BIGINT) AS sy, CAST(sum(xa * xa) AS BIGINT) AS sxx, CAST(sum(xb * xb) AS BIGINT) AS syy, CAST(sum(xa * xb) AS BIGINT) AS sxy FROM p GROUP BY 1, 2) SELECT a_id, b_id, CAST(round(((2.0 * (CAST(sx AS DOUBLE) / 1024) * (CAST(sy AS DOUBLE) / 1024) + 6.5025) * (2.0 * (CAST(sxy AS DOUBLE) / 1024 - (CAST(sx AS DOUBLE) / 1024) * (CAST(sy AS DOUBLE) / 1024)) + 58.5225)) / (((CAST(sx AS DOUBLE) / 1024) * (CAST(sx AS DOUBLE) / 1024) + (CAST(sy AS DOUBLE) / 1024) * (CAST(sy AS DOUBLE) / 1024) + 6.5025) * ((CAST(sxx AS DOUBLE) / 1024 - (CAST(sx AS DOUBLE) / 1024) * (CAST(sx AS DOUBLE) / 1024)) + (CAST(syy AS DOUBLE) / 1024 - (CAST(sy AS DOUBLE) / 1024) * (CAST(sy AS DOUBLE) / 1024)) + 58.5225)) * 1000000) AS BIGINT) AS ssim_micro FROM g""",
-    "ev_feature_drift" ->
-      """WITH a AS (SELECT least(n_events // 20, 9) AS bin, CAST(count(*) AS BIGINT) AS na FROM (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events FROM events WHERE ts < TIMESTAMP '2024-01-15 00:00:00' GROUP BY 1) GROUP BY 1), b AS (SELECT least(n_events // 20, 9) AS bin, CAST(count(*) AS BIGINT) AS nb FROM (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events FROM events WHERE ts < TIMESTAMP '2024-01-25 00:00:00' GROUP BY 1) GROUP BY 1), j AS (SELECT coalesce(a.bin, b.bin) AS bin, coalesce(na, 0) AS na, coalesce(nb, 0) AS nb FROM a FULL JOIN b ON a.bin = b.bin), t AS (SELECT CAST(sum(na) AS BIGINT) AS ta, CAST(sum(nb) AS BIGINT) AS tb, CAST(count(*) AS BIGINT) AS k FROM j) SELECT bin, CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb, CAST(round((CAST(nb + 1 AS DOUBLE) / (tb + k) - CAST(na + 1 AS DOUBLE) / (ta + k)) * ln((CAST(nb + 1 AS DOUBLE) / (tb + k)) / (CAST(na + 1 AS DOUBLE) / (ta + k))) * 1000000) AS BIGINT) AS psi_term_micro FROM j, t""",
-    "q_rev_rec" ->
-      """WITH sl AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents, o_orderdate, i.range AS i FROM orders, range(3) i), r AS (SELECT CAST(date_trunc('month', o_orderdate + to_months(CAST(i AS INTEGER))) AS DATE) AS month, cents // 3 + CASE WHEN i < cents % 3 THEN 1 ELSE 0 END AS rec_c FROM sl) SELECT month, CAST(count(*) AS BIGINT) AS n_slices, CAST(sum(rec_c) AS BIGINT) AS recognized_c FROM r GROUP BY 1""",
-    "ev_dose" ->
-      """WITH users AS (SELECT user_id, CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS views, CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS conv FROM events GROUP BY 1), panel AS (SELECT least(views, 5) AS dose, CAST(count(*) AS BIGINT) AS n, CAST(sum(conv) AS BIGINT) AS x FROM users GROUP BY 1), g AS (SELECT CAST(sum(n) AS BIGINT) AS nt, CAST(sum(x) AS BIGINT) AS xt, CAST(sum(dose * n) AS BIGINT) AS sn, CAST(sum(dose * x) AS BIGINT) AS sx, CAST(sum(dose * dose * n) AS BIGINT) AS snn FROM panel) SELECT dose, n, x, (x * 1000000) // n AS rate_micro, CAST(CASE WHEN xt = 0 OR xt = nt THEN 0 ELSE CAST(round((CAST(sx AS DOUBLE) - CAST(sn AS DOUBLE) * xt / nt) / sqrt(CAST(xt AS DOUBLE) / nt * (1.0 - CAST(xt AS DOUBLE) / nt) * (CAST(snn AS DOUBLE) - CAST(sn AS DOUBLE) * sn / nt)) * 1000000) AS BIGINT) END AS BIGINT) AS trend_z_micro FROM panel, g""",
-    "ta_truncation" ->
-      """WITH d AS (SELECT source, CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS BIGINT) AS nt FROM documents) SELECT source, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(nt) AS BIGINT) AS tokens, CAST(sum(greatest(nt - 64, 0)) AS BIGINT) AS beyond, CAST(sum(CASE WHEN nt > 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_truncated, (CAST(sum(greatest(nt - 64, 0)) AS BIGINT) * 1000000) // CAST(sum(nt) AS BIGINT) AS loss_micro FROM d GROUP BY 1""",
-    "ta_oov" ->
-      """WITH tok AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS token FROM documents), vocab AS (SELECT token FROM (SELECT token, count(*) AS tf FROM tok GROUP BY 1) ORDER BY tf DESC, token LIMIT 20) SELECT source, CAST(count(*) AS BIGINT) AS tokens, CAST(sum(CASE WHEN vocab.token IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS oov, (CAST(sum(CASE WHEN vocab.token IS NULL THEN 1 ELSE 0 END) AS BIGINT) * 1000000) // CAST(count(*) AS BIGINT) AS oov_micro FROM tok LEFT JOIN vocab ON tok.token = vocab.token GROUP BY 1""",
-    "q_weekday" ->
-      """WITH daily AS (SELECT l_shipdate AS d, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS x FROM lineitem GROUP BY 1), g AS (SELECT CAST(isodow(d) - 1 AS BIGINT) AS wd, CAST(count(*) AS BIGINT) AS ng, CAST(sum(CAST(x AS HUGEINT)) AS HUGEINT) AS sg, CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS ssg FROM daily GROUP BY 1), t AS (SELECT CAST(sum(ng) AS BIGINT) AS n, CAST(sum(sg) AS HUGEINT) AS st, CAST(count(*) AS BIGINT) AS k FROM g) SELECT wd, ng, CAST((sg * 1000000) // ng AS BIGINT) AS mean_micro_c, CAST(round(CAST(ng AS DOUBLE) * (CAST(sg AS DOUBLE) / ng - CAST(st AS DOUBLE) / n) * (CAST(sg AS DOUBLE) / ng - CAST(st AS DOUBLE) / n)) AS BIGINT) AS ssb_part, CAST(round(CAST(ssg AS DOUBLE) - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE) / ng) AS BIGINT) AS ssw_part FROM g, t""",
-    "q_ece" ->
-      """WITH c AS (SELECT least(CAST(l_quantity AS BIGINT) * 20000, 1000000) AS p, CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y FROM lineitem), b AS (SELECT least(p // 100000, 9) AS bin, CAST(count(*) AS BIGINT) AS n, CAST(sum(p) AS BIGINT) AS sp, CAST(sum(y) AS BIGINT) AS sy FROM c GROUP BY 1), t AS (SELECT CAST(sum(n) AS BIGINT) AS nt FROM b) SELECT bin, n, sp // n AS conf_micro, (sy * 1000000) // n AS acc_micro, (n * abs((sy * 1000000) // n - sp // n)) // nt AS ece_term_micro FROM b, t""",
-    "q_brier" ->
-      """WITH c AS (SELECT least(CAST(l_quantity AS BIGINT) * 20000, 1000000) AS p, CASE WHEN l_returnflag = 'R' THEN 1000000 ELSE 0 END AS y FROM lineitem), g AS (SELECT CAST(count(*) AS BIGINT) AS n_rows, CAST(sum(((p - y) * (p - y)) // 1000000) AS BIGINT) AS sq FROM c) SELECT n_rows, sq // n_rows AS brier_micro FROM g""",
-    // mm_sharpness: Laplacian sums replayed from the planted grid
-    "mm_sharpness" ->
-      """WITH px AS (SELECT d.doc_id, x.range AS x, y.range AS y, ((1 + d.doc_id % 7) * x.range + (1 + d.doc_id % 5) * y.range + d.doc_id % 256) % 256 AS luma FROM documents d, range(32) x, range(32) y), lap AS (SELECT c.doc_id, 4 * c.luma - lft.luma - rgt.luma - up.luma - dn.luma AS v FROM px c JOIN px lft ON lft.doc_id = c.doc_id AND lft.y = c.y AND lft.x = c.x - 1 JOIN px rgt ON rgt.doc_id = c.doc_id AND rgt.y = c.y AND rgt.x = c.x + 1 JOIN px up ON up.doc_id = c.doc_id AND up.x = c.x AND up.y = c.y - 1 JOIN px dn ON dn.doc_id = c.doc_id AND dn.x = c.x AND dn.y = c.y + 1 WHERE c.x BETWEEN 1 AND 30 AND c.y BETWEEN 1 AND 30) SELECT doc_id AS media_id, CAST(count(*) AS BIGINT) AS n_px, CAST((count(*) * sum(v * v) - sum(v) * sum(v)) // (count(*) * count(*)) AS BIGINT) AS lap_var FROM lap GROUP BY 1""",
-    // mm_blockiness: both diff sums replayed from the planted grid
-    "mm_blockiness" ->
-      """WITH px AS (SELECT d.doc_id, x.range AS x, y.range AS y, ((1 + d.doc_id % 7) * x.range + (1 + d.doc_id % 5) * y.range + d.doc_id % 256) % 256 AS luma FROM documents d, range(32) x, range(32) y), dfs AS (SELECT a.doc_id, a.x % 8 = 7 AS bdry, abs(b.luma - a.luma) AS dv FROM px a JOIN px b ON b.doc_id = a.doc_id AND b.y = a.y AND b.x = a.x + 1 WHERE a.x < 31), g AS (SELECT doc_id, CAST(sum(CASE WHEN bdry THEN dv ELSE 0 END) AS BIGINT) AS bsum, CAST(sum(CASE WHEN NOT bdry THEN dv ELSE 0 END) AS BIGINT) AS isum FROM dfs GROUP BY 1) SELECT doc_id AS media_id, bsum, isum, CAST(CASE WHEN isum = 0 THEN 0 ELSE (bsum * 28 * 1000000) // (isum * 3) END AS BIGINT) AS blockiness_micro FROM g""",
-    // srch_ap: same BM25 replay, binary relevance rel >= 2, integer
-    // precision@rank sums over the 10-row frame, min(R,10) denominator.
-    "srch_ap" ->
-      s"""WITH top AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score_bp DESC, doc_id) AS BIGINT) AS r FROM ($bm25OracleSql)), g AS (SELECT r, CASE WHEN CAST(('0x' || substr(md5('rel:' || CAST(doc_id AS VARCHAR)), 1, 2)) AS INT) % 4 >= 2 THEN 1 ELSE 0 END AS brel FROM top WHERE r <= 10), c AS (SELECT r, brel, CAST(sum(brel) OVER (ORDER BY r ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cumhits FROM g), rt AS (SELECT CAST(sum(CASE WHEN CAST(('0x' || substr(md5('rel:' || CAST(doc_id AS VARCHAR)), 1, 2)) AS INT) % 4 >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_rel_corpus FROM documents), ag AS (SELECT CAST(sum(brel) AS BIGINT) AS n_rel_at10, min(CASE WHEN brel = 1 THEN r END) AS first_rel, CAST(sum(CASE WHEN brel = 1 THEN cumhits * 1000000 // r ELSE 0 END) AS BIGINT) AS psum FROM c) SELECT n_rel_corpus, n_rel_at10, CAST(CASE WHEN first_rel IS NULL THEN 0 ELSE 1000000 // first_rel END AS BIGINT) AS mrr_micro, CASE WHEN least(n_rel_corpus, 10) = 0 THEN CAST(0 AS BIGINT) ELSE CAST(psum // least(n_rel_corpus, 10) AS BIGINT) END AS ap_micro FROM ag, rt""",
-    // srch_ndcg: the full BM25 replay re-ranked to 10, the same md5
-    // grade rule, and the identical Scala-generated weight literals
-    "srch_ndcg" ->
-      s"""WITH top AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score_bp DESC, doc_id) AS BIGINT) AS r FROM ($bm25OracleSql)), g AS (SELECT r, CAST(('0x' || substr(md5('rel:' || CAST(doc_id AS VARCHAR)), 1, 2)) AS INT) % 4 AS rel FROM top WHERE r <= 10), w(r, wr) AS (VALUES ${ndcgWeights.map { case (r, v) => s"($r, $v)" }.mkString(", ")}), dcg AS (SELECT CAST(sum((CASE rel WHEN 3 THEN 7 WHEN 2 THEN 3 WHEN 1 THEN 1 ELSE 0 END) * wr) AS BIGINT) AS dcg_micro FROM g JOIN w USING (r)), cnt AS (SELECT CAST(sum(CASE WHEN rel = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n3, CAST(sum(CASE WHEN rel = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2, CAST(sum(CASE WHEN rel = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1 FROM (SELECT CAST(('0x' || substr(md5('rel:' || CAST(doc_id AS VARCHAR)), 1, 2)) AS INT) % 4 AS rel FROM documents)), idcg AS (SELECT CAST(sum((CASE WHEN r <= n3 THEN 7 WHEN r <= n3 + n2 THEN 3 WHEN r <= n3 + n2 + n1 THEN 1 ELSE 0 END) * wr) AS BIGINT) AS idcg_micro FROM w, cnt) SELECT CAST(10 AS BIGINT) AS k, dcg_micro, idcg_micro, CAST((dcg_micro * 1000000) // idcg_micro AS BIGINT) AS ndcg_micro FROM dcg, idcg""",
-    // q_conformal: same disjoint fit(0,1)/calibrate(2)/test(3) split,
-    // 7-row mean table, bounded-score histogram; 10·cum >= 9·(n+1) is
-    // the integer ceil condition.
-    "q_conformal" ->
-      """WITH li AS (SELECT l_orderkey % 4 AS part, l_linenumber, CAST(l_quantity AS BIGINT) AS q FROM lineitem), pred AS (SELECT l_linenumber, CAST(sum(q) // count(*) AS BIGINT) AS yhat FROM li WHERE part < 2 GROUP BY 1), h AS (SELECT li.part = 3 AS is_test, abs(li.q - p.yhat) AS s, CAST(count(*) AS BIGINT) AS n FROM li JOIN pred p USING (l_linenumber) WHERE li.part >= 2 GROUP BY 1, 2), ncal AS (SELECT CAST(sum(n) AS BIGINT) AS n_cal FROM h WHERE NOT is_test), cum AS (SELECT s, sum(n) OVER (ORDER BY s) AS cume FROM h WHERE NOT is_test), qh AS (SELECT CAST(min(s) AS BIGINT) AS qhat FROM cum, ncal WHERE 10 * cume >= 9 * (n_cal + 1)), tst AS (SELECT CAST(sum(n) AS BIGINT) AS n_test, CAST(sum(CASE WHEN s <= qhat THEN n ELSE 0 END) AS BIGINT) AS n_cov FROM h, qh WHERE is_test) SELECT n_cal, n_test, qhat, CAST(2 * qhat + 1 AS BIGINT) AS width, CAST(CAST(n_cov AS HUGEINT) * 1000000 // n_test AS BIGINT) AS cov_micro FROM ncal, tst, qh""",
-    // ta_good_turing: same trigram rule, counts-of-counts, HUGEINT
-    // products mirroring the Spark DECIMAL(38,0) route.
-    "ta_good_turing" ->
-      """WITH toks AS (SELECT list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), tri AS (SELECT array_to_string(t[(CAST(i AS INTEGER)+1):(CAST(i AS INTEGER)+3)], ' ') AS g FROM (SELECT t, unnest(range(len(t) - 2)) AS i FROM toks WHERE len(t) >= 3)), cnt AS (SELECT g, CAST(count(*) AS BIGINT) AS c FROM tri GROUP BY 1), ff AS (SELECT c AS r, CAST(count(*) AS BIGINT) AS n_r FROM cnt GROUP BY 1), tot AS (SELECT CAST(sum(CAST(r AS HUGEINT) * n_r) AS HUGEINT) AS n_tokens FROM ff), rr AS (SELECT f.r, f.n_r, coalesce(nx.n_r, 0) AS n_next FROM ff f LEFT JOIN ff nx ON nx.r = f.r + 1 WHERE f.r <= 10) SELECT CAST(0 AS BIGINT) AS r, f.n_r, CAST(0 AS BIGINT) AS r_star_micro, CAST(CAST(f.n_r AS HUGEINT) * 1000000 // t.n_tokens AS BIGINT) AS mass_micro FROM ff f, tot t WHERE f.r = 1 UNION ALL SELECT CAST(r AS BIGINT), n_r, CAST(CAST(r + 1 AS HUGEINT) * n_next * 1000000 // n_r AS BIGINT), CAST(CAST(r AS HUGEINT) * n_r * 1000000 // t.n_tokens AS BIGINT) FROM rr, tot t""",
-    // sim_matryoshka: the sim_recall brute-force replay twice — full
-    // 64-dim arm vs the v[1:16] prefix arm — identical tie-breaks.
-    "sim_matryoshka" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), bf AS (SELECT query_id, neighbor_id FROM (SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id, row_number() OVER (PARTITION BY q.vec_id ORDER BY list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) DESC, d.vec_id) AS rn FROM e d, e q WHERE q.vec_id < 8 AND d.vec_id <> q.vec_id) WHERE rn <= 10), ec AS (SELECT vec_id, v[1:16] AS v FROM e), mr AS (SELECT query_id, neighbor_id FROM (SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id, row_number() OVER (PARTITION BY q.vec_id ORDER BY list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) DESC, d.vec_id) AS rn FROM ec d, ec q WHERE q.vec_id < 8 AND d.vec_id <> q.vec_id) WHERE rn <= 10), h AS (SELECT bf.query_id, CAST(count(*) AS BIGINT) AS n_hits FROM bf JOIN mr ON bf.query_id = mr.query_id AND bf.neighbor_id = mr.neighbor_id GROUP BY 1), qq AS (SELECT DISTINCT vec_id AS query_id FROM embeddings WHERE vec_id < 8) SELECT qq.query_id, CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits, CAST(coalesce(n_hits, 0) AS DOUBLE) / 10.0 AS recall_at_10 FROM qq LEFT JOIN h ON qq.query_id = h.query_id""",
-    "rec_bt" -> recBtOracleSql,
-    // g_ppr: q_pagerank's unrolled replay with the teleport term gated
-    // on the seed indicator in r0 and every round.
-    "g_ppr" ->
-      """WITH pairs AS (SELECT DISTINCT o_custkey AS c, l_suppkey + 10000000 AS s FROM lineitem JOIN orders ON l_orderkey = o_orderkey), e AS (SELECT c AS src, s AS dst FROM pairs UNION SELECT s, c FROM pairs), nodes AS (SELECT DISTINCT src AS id FROM e UNION SELECT DISTINCT dst FROM e), ns AS (SELECT id, CASE WHEN id < 10000000 AND id % 100 = 0 THEN 1 ELSE 0 END AS seed FROM nodes), deg AS (SELECT src AS id, count(*) AS d FROM e GROUP BY 1), r0 AS (SELECT id, CAST(seed * 1000000 AS BIGINT) AS r FROM ns), i1 AS (SELECT e.dst AS id, sum(r0.r // deg.d) AS sc FROM e JOIN r0 ON e.src = r0.id JOIN deg ON deg.id = e.src GROUP BY 1), r1 AS (SELECT n.id, CAST(n.seed * 150000 + (850 * coalesce(i1.sc, 0)) // 1000 AS BIGINT) AS r FROM ns n LEFT JOIN i1 USING (id)), i2 AS (SELECT e.dst AS id, sum(r1.r // deg.d) AS sc FROM e JOIN r1 ON e.src = r1.id JOIN deg ON deg.id = e.src GROUP BY 1), r2 AS (SELECT n.id, CAST(n.seed * 150000 + (850 * coalesce(i2.sc, 0)) // 1000 AS BIGINT) AS r FROM ns n LEFT JOIN i2 USING (id)), i3 AS (SELECT e.dst AS id, sum(r2.r // deg.d) AS sc FROM e JOIN r2 ON e.src = r2.id JOIN deg ON deg.id = e.src GROUP BY 1), r3 AS (SELECT n.id, CAST(n.seed * 150000 + (850 * coalesce(i3.sc, 0)) // 1000 AS BIGINT) AS r FROM ns n LEFT JOIN i3 USING (id)) SELECT id, r AS ppr_micro FROM r3""",
-    // ev_hmm: the identical BIGINT-encoded forward fold, replayed by
-    // list_reduce over the same (ts, event_id)-ordered observations.
-    "ev_hmm" -> hmmOracleSql,
-    // stream_hmm: the last state-store snapshot per user IS the full
-    // batch fold — the same oracle proves streaming ≡ batch.
-    "stream_hmm" -> hmmOracleSql,
-    // geo_pip: the same planted coordinates and the same Scala-generated
-    // per-edge crossing terms (literal slopes — division-free).
-    "geo_pip" ->
-      s"""WITH c AS (SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nation, ${geoLatSql("c_custkey", custLatMul)} AS lat, ${geoLonSql("c_custkey", custLonMul)} AS lon FROM customer) SELECT nation, ((${pipCrossSql("lon", "lat")}) % 2 = 1) AS inside, CAST(count(*) AS BIGINT) AS n_customers FROM c GROUP BY 1, 2""",
-    // q_interval_overlap: the plain theta join the bucketed engine plan
-    // must equal — promos as the same literal VALUES.
-    "q_interval_overlap" ->
-      s"""WITH o AS (SELECT o_orderkey, CAST(o_orderdate AS DATE) AS o_start, CAST(o_orderdate AS DATE) + CAST((1 + o_orderkey % 30) AS INTEGER) AS o_end FROM orders), p(promo_id, p_start, p_end) AS (VALUES ${promoWindows.map { case (id, a, b) => s"($id, DATE '$a', DATE '$b')" }.mkString(", ")}), j AS (SELECT o.o_orderkey, p.promo_id, o.o_start, o.o_end, p.p_start, p.p_end FROM o JOIN p ON o.o_start <= p.p_end AND p.p_start <= o.o_end) SELECT CAST(promo_id AS BIGINT) AS promo_id, CAST(count(*) AS BIGINT) AS n_orders, CAST(sum(datediff('day', greatest(o_start, p_start), least(o_end, p_end)) + 1) AS BIGINT) AS overlap_days FROM j GROUP BY 1""",
-    // rec_diversity: the full rec_itemitem replay audited — coverage vs
-    // the distinct-part catalog, HHI over exposures in HUGEINT.
-    "rec_diversity" ->
-      s"""WITH r AS ($recItemItemOracleSql), cat AS (SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_catalog FROM lineitem), ex AS (SELECT rec_part_id, CAST(count(*) AS HUGEINT) AS c FROM r GROUP BY 1), t AS (SELECT CAST(count(DISTINCT part_id) AS BIGINT) AS n_lists, CAST(count(*) AS BIGINT) AS n_recs, CAST(count(DISTINCT rec_part_id) AS BIGINT) AS n_rec_items FROM r), sq AS (SELECT sum(c * c) AS ssq FROM ex) SELECT n_lists, n_recs, n_rec_items, CAST(CAST(n_rec_items AS HUGEINT) * 1000000 // n_catalog AS BIGINT) AS coverage_micro, CAST(ssq * 1000000 // (CAST(n_recs AS HUGEINT) * n_recs) AS BIGINT) AS hhi_micro FROM sq, t, cat""",
-    // sim_nprobe_sweep: the IVF replay with probe rank kept (rn <= 4),
-    // swept per nprobe against the brute-force pool.
-    "sim_nprobe_sweep" -> nprobeSweepOracleSql,
-    // mm_loudness: closed form from the planted bits — Σv² is
-    // popcount(low byte)·400·6000², one double sqrt rounded once.
-    "mm_loudness" ->
-      """WITH h AS (SELECT doc_id, CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 15, 2) AS BIGINT) AS lb FROM documents), s AS (SELECT doc_id, CAST(bit_count(lb) AS BIGINT) AS k FROM h) SELECT doc_id AS media_id, CAST(3200 AS BIGINT) AS n_frames, CAST(k * 400 * 36000000 AS BIGINT) AS sum_sq, CAST(round(sqrt(CAST(k * 400 * 36000000 AS DOUBLE) / 3200) * 1000) AS BIGINT) AS rms_milli FROM s""",
-    // mm_zcr: closed form from the planted bits — an active window's
-    // ±6000 alternation crosses on all 399 adjacent pairs, silence never
-    "mm_zcr" ->
-      """WITH h AS (SELECT doc_id, CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 15, 2) AS BIGINT) AS lb FROM documents), s AS (SELECT doc_id, CAST(bit_count(lb) AS BIGINT) AS k FROM h) SELECT doc_id AS media_id, CAST(8 AS BIGINT) AS n_windows, k AS n_active, CAST(k * 399 AS BIGINT) AS zc_total FROM s""",
-    // mm_goertzel: closed form — each active window is a pure Nyquist
-    // tone with alternating sum 400·6000
-    "mm_goertzel" ->
-      """WITH h AS (SELECT doc_id, CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 15, 2) AS BIGINT) AS lb FROM documents), s AS (SELECT doc_id, CAST(bit_count(lb) AS BIGINT) AS k FROM h) SELECT doc_id AS media_id, CAST(8 AS BIGINT) AS n_windows, k AS n_tonal, CAST(k * 2400000 AS BIGINT) AS nyquist_mag_total FROM s""",
-    // er_bcubed: both transitive closures (er_entities' unblocked gold,
-    // er_golden's nation-blocked pred) composed, then the three cell
-    // aggregates with HUGEINT c² products mirroring the engine DECIMAL.
-    "er_bcubed" ->
-      """WITH up AS (SELECT a.c_custkey AS s, b.c_custkey AS d FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey AND levenshtein(a.c_name, b.c_name) <= 1), ue AS (SELECT s, d FROM up UNION SELECT d, s FROM up), gold AS (WITH RECURSIVE rr(id, rid) AS (SELECT c_custkey, c_custkey FROM customer UNION SELECT rr.id, e.d FROM rr JOIN ue e ON rr.rid = e.s) SELECT id, min(rid) AS g FROM rr GROUP BY 1), bp AS (SELECT a.c_custkey AS s, b.c_custkey AS d FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey AND a.c_nationkey = b.c_nationkey AND levenshtein(a.c_name, b.c_name) <= 1), be AS (SELECT s, d FROM bp UNION SELECT d, s FROM bp), pred AS (WITH RECURSIVE rr(id, rid) AS (SELECT c_custkey, c_custkey FROM customer UNION SELECT rr.id, e.d FROM rr JOIN be e ON rr.rid = e.s) SELECT id, min(rid) AS p FROM rr GROUP BY 1), m AS (SELECT pred.id, pred.p, gold.g FROM pred JOIN gold ON pred.id = gold.id), cells AS (SELECT p, g, CAST(count(*) AS HUGEINT) AS c FROM m GROUP BY 1, 2), ps AS (SELECT p, CAST(count(*) AS HUGEINT) AS np FROM m GROUP BY 1), gs AS (SELECT g, CAST(count(*) AS HUGEINT) AS ng FROM m GROUP BY 1), nn AS (SELECT CAST(count(*) AS HUGEINT) AS n, CAST(count(DISTINCT p) AS BIGINT) AS n_pred, CAST(count(DISTINCT g) AS BIGINT) AS n_gold FROM m), t AS (SELECT sum(c * c * 1000000 // np) AS sp, sum(c * c * 1000000 // ng) AS sr FROM cells JOIN ps USING (p) JOIN gs USING (g)) SELECT CAST(n AS BIGINT) AS n_records, n_pred AS n_pred_clusters, n_gold AS n_gold_clusters, CAST(sp // n AS BIGINT) AS bcubed_precision_micro, CAST(sr // n AS BIGINT) AS bcubed_recall_micro, CAST((2 * (sp // n) * (sr // n)) // greatest((sp // n) + (sr // n), CAST(1 AS HUGEINT)) AS BIGINT) AS f1_micro FROM t, nn""",
-    // ev_psm_match: ev_uplift's user frame, the identical rank-join
-    // matcher, double ATT rounded once.
-    "ev_psm_match" ->
-      """WITH u AS (SELECT user_id, CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00' THEN 1 ELSE 0 END) AS BIGINT) AS pre_n, CAST(max(CASE WHEN ts >= TIMESTAMP '2024-01-15 00:00:00' AND event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS resp FROM events GROUP BY 1), r AS (SELECT user_id, pre_n, resp, user_id % 2 = 0 AS treated, CAST(row_number() OVER (PARTITION BY pre_n, user_id % 2 = 0 ORDER BY user_id) AS BIGINT) AS rk FROM u), t AS (SELECT pre_n, rk, resp AS t_resp FROM r WHERE treated), c AS (SELECT pre_n, rk, resp AS c_resp FROM r WHERE NOT treated), j AS (SELECT t.pre_n, t.t_resp, c.c_resp FROM t JOIN c USING (pre_n, rk)) SELECT pre_n, CAST(count(*) AS BIGINT) AS n_pairs, CAST(sum(t_resp) AS BIGINT) AS resp_t, CAST(sum(c_resp) AS BIGINT) AS resp_c, CAST(round((CAST(sum(t_resp) AS DOUBLE) - sum(c_resp)) / count(*) * 1000000) AS BIGINT) AS att_micro FROM j GROUP BY 1""",
-    // ev_event_study: the same weekly panel, gap and anchor replayed in
-    // the identical double op order.
-    "ev_event_study" ->
-      """WITH e AS (SELECT user_id % 2 = 0 AS treated, CAST(floor(datediff('day', DATE '2024-01-15', CAST(ts AS DATE)) / 7.0) AS BIGINT) AS k, CAST(round(value * 100) AS BIGINT) AS v_c FROM events), f AS (SELECT * FROM e WHERE k BETWEEN -4 AND 4), g AS (SELECT k, CAST(sum(CASE WHEN treated THEN 1 ELSE 0 END) AS BIGINT) AS n_t, CAST(sum(CASE WHEN treated THEN v_c ELSE 0 END) AS BIGINT) AS s_t, CAST(sum(CASE WHEN NOT treated THEN 1 ELSE 0 END) AS BIGINT) AS n_c, CAST(sum(CASE WHEN NOT treated THEN v_c ELSE 0 END) AS BIGINT) AS s_c FROM f GROUP BY 1), gg AS (SELECT k, n_t, n_c, CAST(s_t AS DOUBLE) / n_t - CAST(s_c AS DOUBLE) / n_c AS gap FROM g WHERE n_t > 0 AND n_c > 0), b AS (SELECT gap AS gap0 FROM gg WHERE k = -1) SELECT k, n_t, n_c, CAST(round(gap * 1000000) AS BIGINT) AS gap_micro, CAST(round((gap - gap0) * 1000000) AS BIGINT) AS effect_micro FROM gg, b""",
-    // ta_dunning: ta_pmi's bigram CTEs; each G² term multiplies counts
-    // in HUGEINT before the double cast and the four terms sum in the
-    // engine's fixed textual order.
-    "ta_dunning" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), bg AS (SELECT t[i+1] AS w1, t[i+2] AS w2 FROM (SELECT t, unnest(range(len(t)-1)) AS i FROM toks WHERE len(t) >= 2)), c12 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12 FROM bg GROUP BY 1, 2), c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM bg GROUP BY 1), c2 AS (SELECT w2, CAST(count(*) AS BIGINT) AS c2 FROM bg GROUP BY 1), n AS (SELECT CAST(count(*) AS BIGINT) AS nb FROM bg), f AS (SELECT w1, w2, c12, c1, c2, nb, c1 - c12 AS k12, c2 - c12 AS k21, nb - c1 - c2 + c12 AS k22 FROM c12 JOIN c1 USING (w1) JOIN c2 USING (w2), n WHERE c12 >= 5) SELECT w1, w2, c12, CAST(round((CASE WHEN c12 > 0 THEN CAST(c12 AS DOUBLE) * ln(CAST(CAST(c12 AS HUGEINT) * nb AS DOUBLE) / CAST(CAST(c1 AS HUGEINT) * c2 AS DOUBLE)) ELSE 0.0 END + CASE WHEN k12 > 0 THEN CAST(k12 AS DOUBLE) * ln(CAST(CAST(k12 AS HUGEINT) * nb AS DOUBLE) / CAST(CAST(c1 AS HUGEINT) * (nb - c2) AS DOUBLE)) ELSE 0.0 END + CASE WHEN k21 > 0 THEN CAST(k21 AS DOUBLE) * ln(CAST(CAST(k21 AS HUGEINT) * nb AS DOUBLE) / CAST(CAST(nb - c1 AS HUGEINT) * c2 AS DOUBLE)) ELSE 0.0 END + CASE WHEN k22 > 0 THEN CAST(k22 AS DOUBLE) * ln(CAST(CAST(k22 AS HUGEINT) * nb AS DOUBLE) / CAST(CAST(nb - c1 AS HUGEINT) * (nb - c2) AS DOUBLE)) ELSE 0.0 END) * 2.0 * 1000000) AS BIGINT) AS g2_micro FROM f ORDER BY g2_micro DESC, w1, w2 LIMIT 25""",
-    // ta_kneser_ney: the same bigram CTEs plus continuation counts over
-    // the distinct-pair set; the probability replays the identical
-    // three-double-op order before the single micro-round.
-    "ta_kneser_ney" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), bg AS (SELECT t[i+1] AS w1, t[i+2] AS w2 FROM (SELECT t, unnest(range(len(t)-1)) AS i FROM toks WHERE len(t) >= 2)), c12 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12 FROM bg GROUP BY 1, 2), c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM bg GROUP BY 1), dis AS (SELECT DISTINCT w1, w2 FROM bg), fol AS (SELECT w1, CAST(count(*) AS BIGINT) AS n_follow FROM dis GROUP BY 1), prc AS (SELECT w2, CAST(count(*) AS BIGINT) AS n_prec FROM dis GROUP BY 1), ty AS (SELECT CAST(count(*) AS BIGINT) AS n_types FROM dis) SELECT w1, w2, c12, c1, n_follow, n_prec, n_types, CAST(round(((CAST(c12 AS DOUBLE) - 0.75) / CAST(c1 AS DOUBLE) + (0.75 * CAST(n_follow AS DOUBLE) / CAST(c1 AS DOUBLE)) * (CAST(n_prec AS DOUBLE) / CAST(n_types AS DOUBLE))) * 1000000) AS BIGINT) AS pkn_micro FROM c12 JOIN c1 USING (w1) JOIN fol USING (w1) JOIN prc USING (w2), ty ORDER BY c12 DESC, w1, w2 LIMIT 25""",
-    // srch_rocchio: the full BM25 replay truncated to 10, the same
-    // distinct-token dfs and the same floor(df_fb·idf·10⁴) weights.
-    "srch_rocchio" ->
-      s"""WITH top AS (SELECT doc_id FROM (SELECT doc_id, row_number() OVER (ORDER BY score_bp DESC, doc_id) AS r FROM ($bm25OracleSql)) WHERE r <= 10), toks AS (SELECT doc_id, unnest(list_distinct(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> ''))) AS tok FROM documents), fb AS (SELECT tok, CAST(count(*) AS BIGINT) AS df_fb FROM toks JOIN top USING (doc_id) WHERE tok NOT IN ('spark', 'dup', 'vector') AND length(tok) >= 3 GROUP BY 1), dfc AS (SELECT tok, CAST(count(*) AS BIGINT) AS df_corpus FROM toks WHERE tok IN (SELECT tok FROM fb) GROUP BY 1), n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents) SELECT tok, df_fb, df_corpus, CAST(floor(CAST(df_fb AS DOUBLE) * ln((CAST(n_docs AS DOUBLE) + 1.0) / (CAST(df_corpus AS DOUBLE) + 1.0)) * 10000) AS BIGINT) AS weight_bp FROM fb JOIN dfc USING (tok), n ORDER BY weight_bp DESC, tok LIMIT 10""",
-    // mm_vad: every value recomputed from doc_id alone — bit b of the
-    // md5_64 low byte IS window b's speech flag (see Multimodal.vadBits),
-    // segments via the same lag-over-window-index rule.
-    "mm_vad" ->
-      """WITH h AS (SELECT doc_id, CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 15, 2) AS BIGINT) AS lb FROM documents), b AS (SELECT doc_id, CAST(t.range AS BIGINT) AS win_idx, ((lb >> CAST(t.range AS INTEGER)) & 1) = 1 AS speech FROM h, range(8) t), l AS (SELECT doc_id, win_idx, speech, lag(speech) OVER (PARTITION BY doc_id ORDER BY win_idx) AS prev FROM b) SELECT doc_id AS media_id, CAST(count(*) AS BIGINT) AS n_windows, CAST(sum(CASE WHEN speech THEN 1 ELSE 0 END) AS BIGINT) AS n_speech, CAST(sum(CASE WHEN speech AND (prev IS NULL OR NOT prev) THEN 1 ELSE 0 END) AS BIGINT) AS n_segments, CAST(sum(CASE WHEN speech THEN 1 ELSE 0 END) * 1000000 // count(*) AS BIGINT) AS speech_ratio_micro FROM l GROUP BY 1"""
-  )
-
-  /** The mm_phash replay: pixel grid from the planted closed form, the
-    * SAME 8×32 cosine table as ext.Multimodal.dctCos (interpolated as
-    * literals, so there is exactly one basis), per-(u,v) integer sums,
-    * lower-median AC threshold, and the 64-bit assembly through HUGEINT
-    * with an explicit two's-complement wrap.
-    */
-  private def mmPhashOracle: String = {
-    val cos = ext.Multimodal.dctCos.map(_.mkString("[", ",", "]"))
-      .mkString("[", ",", "]")
-    val pow2 = (0 to 63).map(k => s"${BigInt(1) << k}::HUGEINT")
-      .mkString("[", ",", "]")
-    s"""WITH px AS (SELECT d.doc_id, x.range AS x, y.range AS y,
-       |    ((1 + d.doc_id % 7) * x.range + (1 + d.doc_id % 5) * y.range + d.doc_id % 256) % 256 AS luma
-       |  FROM documents d, range(32) x, range(32) y),
-       |co AS (SELECT u.range AS u, x.range AS x,
-       |    ($cos)[CAST(u.range AS INTEGER) + 1][CAST(x.range AS INTEGER) + 1] AS c
-       |  FROM range(8) u, range(32) x),
-       |f AS (SELECT p.doc_id, cu.u AS u, cv.u AS v,
-       |    CAST(sum(cu.c * cv.c * p.luma) AS BIGINT) AS coeff
-       |  FROM px p JOIN co cu ON cu.x = p.x JOIN co cv ON cv.x = p.y
-       |  GROUP BY 1, 2, 3),
-       |med AS (SELECT doc_id, coeff AS med FROM
-       |  (SELECT doc_id, coeff, row_number() OVER (PARTITION BY doc_id ORDER BY coeff, u * 8 + v) AS rn
-       |   FROM f WHERE NOT (u = 0 AND v = 0)) WHERE rn = 32),
-       |bits AS (SELECT f.doc_id, CAST(f.u * 8 + f.v AS INTEGER) AS k,
-       |    CASE WHEN f.coeff > med.med THEN 1 ELSE 0 END AS b
-       |  FROM f JOIN med USING (doc_id)),
-       |hu AS (SELECT doc_id, sum(CASE WHEN b = 1 THEN ($pow2)[k + 1] ELSE 0::HUGEINT END) AS h
-       |  FROM bits GROUP BY 1),
-       |dc AS (SELECT doc_id, coeff AS dc_coeff FROM f WHERE u = 0 AND v = 0)
-       |SELECT hu.doc_id AS media_id,
-       |  CAST(CASE WHEN hu.h >= 9223372036854775808::HUGEINT
-       |            THEN hu.h - 18446744073709551616::HUGEINT ELSE hu.h END AS BIGINT) AS phash64,
-       |  dc.dc_coeff, med.med AS median_ac
-       |FROM hu JOIN dc USING (doc_id) JOIN med USING (doc_id)""".stripMargin
-  }
-
-  // --- sketch replays -------------------------------------------------
-  // HLL registers and CMS counters are deterministic integer state (FNV
-  // maxima / bucket sums), so DuckDB rebuilds them exactly; the only
-  // doubles are the fixed-order HLL dyadic fold and one division, both
-  // bit-identical across engines (same IEEE ops, same order).
-
-  /** CTE chain replaying HLL registers for a `keys(flag, g)` relation:
-    * fnv1a64∘fmix64, idx = h >>> (64-p), rho = first-1-bit position of
-    * the remaining bits, per-(flag, idx) max → `vec(flag, regs)`.
-    */
-  private def hllVecCtes(keysSql: String): String = {
-    val p = hllP
-    val m = 1 << p
-    val pow64mp = BigInt(1) << (64 - p) // 2^(64-p) for idx/payload split
-    // fmix64 replay: >>>33 is unsigned // 2^33; the two 64x64 multiplies
-    // split as lo/hi 32-bit halves so products stay below 2^96 (HUGEINT)
-    def mul64(c: BigInt): String =
-      s"($c::HUGEINT * (u % 4294967296::HUGEINT) + (($c::HUGEINT * (u // 4294967296::HUGEINT)) % 4294967296::HUGEINT) * 4294967296::HUGEINT) % $U64"
-    val c1 = BigInt("ff51afd7ed558ccd", 16)
-    val c2 = BigInt("c4ceb9fe1a85ec53", 16)
-    s"""keys AS ($keysSql),
-       |dk AS MATERIALIZED (SELECT DISTINCT flag, g FROM keys),
-       |hh AS (SELECT flag, $fnvSql AS u FROM dk),
-       |f1 AS (SELECT flag, xor(u, u // 8589934592::HUGEINT) AS u FROM hh),
-       |f2 AS (SELECT flag, ${mul64(c1)} AS u FROM f1),
-       |f3 AS (SELECT flag, xor(u, u // 8589934592::HUGEINT) AS u FROM f2),
-       |f4 AS (SELECT flag, ${mul64(c2)} AS u FROM f3),
-       |fm AS (SELECT flag, xor(u, u // 8589934592::HUGEINT) AS h FROM f4),
-       |ir AS (SELECT flag, CAST(h // $pow64mp::HUGEINT AS BIGINT) AS idx, CAST(h % $pow64mp::HUGEINT AS BIGINT) AS payload FROM fm),
-       |rr AS (SELECT flag, idx, coalesce(list_min(list_filter(list_transform(range(1, ${64 - p + 1}), r -> CASE WHEN (payload // CAST(power(2, ${64 - p} - CAST(r AS INTEGER)) AS BIGINT)) % 2 = 1 THEN CAST(r AS INTEGER) ELSE NULL END), x -> x IS NOT NULL)), ${64 - p + 1}) AS rho FROM ir),
-       |mx AS (SELECT flag, idx, max(rho) AS mr FROM rr GROUP BY 1, 2),
-       |grid AS (SELECT flag, CAST(i AS BIGINT) AS idx FROM (SELECT DISTINCT flag FROM keys) f, unnest(range($m)) t(i)),
-       |reg AS (SELECT grid.flag, grid.idx, coalesce(mx.mr, 0) AS r FROM grid LEFT JOIN mx ON grid.flag = mx.flag AND grid.idx = mx.idx),
-       |vec AS (SELECT flag, list(r ORDER BY idx) AS regs FROM reg GROUP BY flag)""".stripMargin
-  }
-
-  /** Raw-estimator SQL over a register list: the same fixed-order dyadic
-    * fold as the Spark `aggregate` HOF, divided into the α·m² literal.
-    */
-  private def hllEstSql(regs: String): String =
-    s"CAST('${hllAlphaM2(1 << hllP)}' AS DOUBLE) / list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform($regs, x -> power(2.0, -x))), (acc, x) -> acc + x)"
-
-  private lazy val hllOracleSql: String =
-    s"""WITH ${hllVecCtes("SELECT l_returnflag AS flag, CAST(l_orderkey AS VARCHAR) AS g FROM lineitem")},
-       |ex AS (SELECT l_returnflag AS flag, count(DISTINCT l_orderkey) AS exact_nd FROM lineitem GROUP BY 1)
-       |SELECT vec.flag AS l_returnflag,
-       |  CAST(len(list_filter(regs, x -> x = 0)) AS BIGINT) AS zeros,
-       |  ${hllEstSql("regs")} AS hll_est,
-       |  exact_nd
-       |FROM vec JOIN ex ON vec.flag = ex.flag""".stripMargin
-
-  /** sk_hll_union: |A ∪ B| from the elementwise register max. */
-  private lazy val hllUnionOracleSql: String = {
-    val m = 1 << hllP
-    s"""WITH ${hllVecCtes("SELECT l_linestatus AS flag, CAST(l_orderkey AS VARCHAR) AS g FROM lineitem")},
-       |o AS (SELECT regs AS ro FROM vec WHERE flag = 'O'),
-       |f AS (SELECT regs AS rf FROM vec WHERE flag = 'F'),
-       |u AS (SELECT ro, rf, list_transform(range($m), i -> greatest(ro[CAST(i AS INTEGER) + 1], rf[CAST(i AS INTEGER) + 1])) AS ru FROM o, f),
-       |ex AS (SELECT count(DISTINCT l_orderkey) AS exact_union FROM lineitem)
-       |SELECT ${hllEstSql("ro")} AS hll_o, ${hllEstSql("rf")} AS hll_f, ${hllEstSql("ru")} AS hll_union, exact_union FROM u, ex""".stripMargin
-  }
-
-  /** sk_cms: per-row counters are bucket-collision counts; the estimate
-    * joins each heavy key's 4 buckets back to those counts.
-    */
-  private lazy val cmsOracleSql: String = {
-    val (cas, cbs) = graft.functions.Hashing.permConsts(cmsDepth)
-    val mask = (BigInt(1) << 64) - 1
-    val shift = BigInt(1) << (64 - cmsLogW)
-    def bucket(j: Int): String = {
-      val a = BigInt(cas(j)) & mask
-      val b = BigInt(cbs(j)) & mask
-      s"CAST(((($a::HUGEINT * hlo) % $U64 + (($a::HUGEINT * hhi) % 4294967296::HUGEINT) * 4294967296::HUGEINT + $b::HUGEINT) % $U64) // $shift::HUGEINT AS BIGINT) AS b$j"
-    }
-    val buckets = (0 until cmsDepth).map(bucket).mkString(", ")
-    val counterCtes = (0 until cmsDepth).map(j =>
-      s"ci$j AS (SELECT b$j AS b, CAST(sum(c) AS BIGINT) AS cc FROM bk JOIN cnt USING (g) GROUP BY 1)").mkString(",\n")
-    val counterJoins = (0 until cmsDepth).map(j =>
-      s"JOIN ci$j ON bk.b$j = ci$j.b").mkString(" ")
-    val leastArgs = (0 until cmsDepth).map(j => s"ci$j.cc").mkString(", ")
-    s"""WITH keys AS (SELECT CAST(l_partkey AS VARCHAR) AS g FROM lineitem),
-       |dk AS MATERIALIZED (SELECT DISTINCT g FROM keys),
-       |hh AS (SELECT g, $fnvSql AS h FROM dk),
-       |hs AS (SELECT g, h % 4294967296::HUGEINT AS hlo, h // 4294967296::HUGEINT AS hhi FROM hh),
-       |bk AS MATERIALIZED (SELECT g, $buckets FROM hs),
-       |cnt AS MATERIALIZED (SELECT g, CAST(count(*) AS BIGINT) AS c FROM keys GROUP BY g),
-       |$counterCtes,
-       |heavy AS (SELECT g, c AS true_cnt FROM cnt WHERE c >= 45)
-       |SELECT CAST(heavy.g AS BIGINT) AS l_partkey, true_cnt, least($leastArgs) AS cms_est
-       |FROM heavy JOIN bk USING (g) $counterJoins""".stripMargin
-  }
-
-  /** sk_hll_intersect: inclusion-exclusion over the same three raw
-    * estimates as sk_hll_union, in the identical left-associated order.
-    */
-  private lazy val hllIntersectOracleSql: String = {
-    val m = 1 << hllP
-    s"""WITH ${hllVecCtes("SELECT l_linestatus AS flag, CAST(l_orderkey AS VARCHAR) AS g FROM lineitem")},
-       |o AS (SELECT regs AS ro FROM vec WHERE flag = 'O'),
-       |f AS (SELECT regs AS rf FROM vec WHERE flag = 'F'),
-       |u AS (SELECT ro, rf, list_transform(range($m), i -> greatest(ro[CAST(i AS INTEGER) + 1], rf[CAST(i AS INTEGER) + 1])) AS ru FROM o, f),
-       |ex AS (SELECT CAST(count(*) AS BIGINT) AS exact_intersect FROM (SELECT l_orderkey FROM lineitem WHERE l_linestatus = 'O' INTERSECT SELECT l_orderkey FROM lineitem WHERE l_linestatus = 'F'))
-       |SELECT ${hllEstSql("ro")} AS hll_o, ${hllEstSql("rf")} AS hll_f, ${hllEstSql("ru")} AS hll_union, ${hllEstSql("ro")} + ${hllEstSql("rf")} - ${hllEstSql("ru")} AS hll_intersect, exact_intersect FROM u, ex""".stripMargin
-  }
-
-  /** sim_recall replay: exact brute-force top-10 ∩ the full LSH replay
-    * per anchor, counted and divided by 10.
-    */
-  private lazy val simRecallOracleSql: String =
-    s"""WITH bf AS (SELECT query_id, neighbor_id FROM (WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), scored AS (SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id, list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) AS score FROM e d, e q WHERE q.vec_id < 8 AND d.vec_id <> q.vec_id) SELECT query_id, neighbor_id FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored) WHERE rn <= 10)),
-       |lsh AS (SELECT query_id, neighbor_id FROM ($lshTopKOracleSql)),
-       |h AS (SELECT bf.query_id, CAST(count(*) AS BIGINT) AS n_hits FROM bf JOIN lsh ON bf.query_id = lsh.query_id AND bf.neighbor_id = lsh.neighbor_id GROUP BY 1),
-       |qq AS (SELECT DISTINCT vec_id AS query_id FROM embeddings WHERE vec_id < 8)
-       |SELECT qq.query_id, CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits, CAST(coalesce(n_hits, 0) AS DOUBLE) / 10.0 AS recall_at_10 FROM qq LEFT JOIN h ON qq.query_id = h.query_id""".stripMargin
-
-  /** ev_markov_steady replay: the matrix as ordered list-of-lists, the
-    * power iteration as a recursive CTE whose inner products are
-    * list_reduce folds in ascending state order — the driver loop's
-    * exact op sequence.
-    */
-  private lazy val markovSteadyOracleSql: String =
-    """WITH RECURSIVE pr AS (SELECT user_id, event_type AS from_type, lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type FROM events),
-      |f AS (SELECT from_type, to_type FROM pr WHERE to_type IS NOT NULL),
-      |cnt AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n FROM f GROUP BY 1, 2),
-      |tot AS (SELECT from_type, CAST(count(*) AS BIGINT) AS n_from FROM f GROUP BY 1),
-      |st AS (SELECT list_sort(list(DISTINCT s)) AS sts FROM (SELECT from_type AS s FROM f UNION SELECT to_type FROM f)),
-      |grid AS (SELECT fi.i AS fi, tj.i AS tj, sts[fi.i + 1] AS fs, sts[tj.i + 1] AS ts2 FROM st, unnest(range(len(sts))) fi(i), unnest(range(len(sts))) tj(i)),
-      |pm0 AS (SELECT g.fi, g.tj, CASE WHEN tot.n_from IS NULL THEN (CASE WHEN g.fi = g.tj THEN 1.0 ELSE 0.0 END) ELSE coalesce(CAST(cnt.n AS DOUBLE) / CAST(tot.n_from AS DOUBLE), 0.0) END AS p FROM grid g LEFT JOIN tot ON g.fs = tot.from_type LEFT JOIN cnt ON g.fs = cnt.from_type AND g.ts2 = cnt.to_type),
-      |pm AS (SELECT fi, list(p ORDER BY tj) AS prow FROM pm0 GROUP BY 1),
-      |mat AS (SELECT list(prow ORDER BY fi) AS m FROM pm),
-      |ns AS (SELECT len(sts) AS n FROM st),
-      |iter(k, v) AS (
-      |  SELECT 0, list_transform(range(n), x -> 1.0 / CAST(n AS DOUBLE)) FROM ns
-      |  UNION ALL
-      |  SELECT k + 1, list_transform(range(n), j -> list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(n), i -> v[CAST(i AS INTEGER) + 1] * m[CAST(i AS INTEGER) + 1][CAST(j AS INTEGER) + 1])), (a, b) -> a + b)) FROM iter, mat, ns WHERE k < 20)
-      |SELECT sts[CAST(i AS INTEGER) + 1] AS event_type, v[CAST(i AS INTEGER) + 1] AS steady_p FROM (SELECT v FROM iter WHERE k = 20), st, unnest(range(len(sts))) t(i)""".stripMargin
-
-  /** q_holt_winters replay: recursive CTE carrying the 7 seasonal
-    * states; every arithmetic op written in the driver fold's order.
-    */
-  private lazy val holtWintersOracleSql: String = {
-    val cp = "(CASE (h.i % 7) + 1 " +
-      (1 to 7).map(k => s"WHEN $k THEN h.c$k").mkString(" ") + " END)"
-    val x = "CAST(idx.rev_c AS DOUBLE)"
-    val sNew = s"0.5 * ($x - $cp) + 0.5 * (h.s + h.b)"
-    val bNew = s"0.5 * (($sNew) - h.s) + 0.5 * h.b"
-    val cNew = s"0.5 * ($x - ($sNew)) + 0.5 * $cp"
-    val cCols = (1 to 7).map(k =>
-      s"CASE WHEN (h.i % 7) + 1 = $k THEN ($cNew) ELSE h.c$k END").mkString(", ")
-    val cInit = (1 to 7).map(k =>
-      s"(SELECT CAST(rev_c AS DOUBLE) FROM idx WHERE i = $k) - m1").mkString(", ")
-    s"""WITH RECURSIVE daily AS (SELECT CAST(o_orderdate AS DATE) AS d, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c FROM orders GROUP BY 1),
-       |idx AS (SELECT d, rev_c, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i FROM daily),
-       |init AS (SELECT CAST((SELECT sum(rev_c) FROM idx WHERE i <= 7) AS DOUBLE) / 7.0 AS m1, CAST((SELECT sum(rev_c) FROM idx WHERE i > 7 AND i <= 14) AS DOUBLE) / 7.0 AS m2),
-       |h(i, s, b, cs, c1, c2, c3, c4, c5, c6, c7) AS (
-       |  SELECT CAST(0 AS BIGINT), m1, (m2 - m1) / 7.0, CAST(0 AS DOUBLE), $cInit FROM init
-       |  UNION ALL
-       |  SELECT h.i + 1, $sNew, $bNew, $cNew, $cCols FROM h JOIN idx ON idx.i = h.i + 1)
-       |SELECT idx.d, idx.rev_c, h.s AS level, h.b AS trend, h.cs AS seasonal FROM h JOIN idx ON idx.i = h.i WHERE h.i >= 1""".stripMargin
-  }
-
-  /** ta_bootstrap replay: identical multiplicity table, identical exact
-    * sums, nearest-rank CI from the sorted replicate-mean list.
-    */
-  private lazy val bootstrapOracleSql: String = {
-    val cases = bootThresholds.zipWithIndex
-      .map { case (t, k) => s"WHEN u32 < $t THEN $k" }.mkString(" ")
-    s"""WITH jj AS (SELECT unnest(range(40)) AS j), r AS (SELECT o_orderpriority AS pri, CAST(round(o_totalprice * 100) AS BIGINT) AS x, o_orderkey AS id FROM orders), u AS (SELECT pri, x, j, CAST('0x' || substr(md5(CAST(j AS VARCHAR) || ':' || CAST(id AS VARCHAR)), 1, 8) AS BIGINT) AS u32 FROM r, jj), m AS (SELECT pri, j, x, CASE $cases ELSE 9 END AS m FROM u), rm AS (SELECT pri, j, CAST(sum(m * x) AS BIGINT) AS sx, CAST(sum(m) AS BIGINT) AS sm FROM m GROUP BY 1, 2), means AS (SELECT pri, CAST(sx AS DOUBLE) / CAST(sm AS DOUBLE) AS mean FROM rm WHERE sm > 0), ci AS (SELECT pri, (list_sort(list(mean)))[1] AS boot_lo, (list_sort(list(mean)))[39] AS boot_hi FROM means GROUP BY 1), pt AS (SELECT pri, CAST(count(*) AS BIGINT) AS n, CAST(CAST(sum(x) AS BIGINT) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS point_mean FROM r GROUP BY 1) SELECT pt.pri AS o_orderpriority, n, point_mean, boot_lo, boot_hi FROM pt JOIN ci ON pt.pri = ci.pri"""
-  }
-
-  /** ta_nbc / stream_nbc shared replay: full NBC train + score
-    * (priors, add-one likelihoods, micro-nat terms, argmin QUALIFY).
-    */
-  private lazy val nbcOracleSql: String =
-    """WITH toks AS (SELECT doc_id, source AS cls, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t FROM documents), train AS (SELECT * FROM toks WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '80000000'), pri AS (SELECT cls, CAST(count(*) AS BIGINT) AS nd FROM train GROUP BY 1), tot AS (SELECT CAST(sum(nd) AS BIGINT) AS n FROM pri), pr AS (SELECT cls, CAST(round(-ln(CAST(nd AS DOUBLE) / CAST(n AS DOUBLE)) * 1000000) AS BIGINT) AS prior_micro FROM pri, tot), tw AS (SELECT cls, unnest(t) AS w FROM train), cw AS (SELECT cls, w, CAST(count(*) AS BIGINT) AS cwc FROM tw GROUP BY 1, 2), tc AS (SELECT cls, CAST(count(*) AS BIGINT) AS totc FROM tw GROUP BY 1), v AS (SELECT CAST(count(DISTINCT w) AS DOUBLE) AS vsz FROM tw), dt AS (SELECT doc_id, unnest(t) AS w FROM toks), dc AS (SELECT doc_id, w, cls FROM dt, (SELECT cls FROM pri)), terms AS (SELECT doc_id, dc.cls, CAST(round(-ln((CAST(coalesce(cwc, 0) AS DOUBLE) + 1.0) / (CAST(totc AS DOUBLE) + vsz)) * 1000000) AS BIGINT) AS m FROM dc LEFT JOIN cw ON dc.cls = cw.cls AND dc.w = cw.w JOIN tc ON dc.cls = tc.cls CROSS JOIN v), ds AS (SELECT doc_id, cls, CAST(sum(m) AS BIGINT) AS ts FROM terms GROUP BY 1, 2), base AS (SELECT d.doc_id, d.cls AS cls_truth, p.cls, p.prior_micro + coalesce(ds.ts, 0) AS score FROM (SELECT doc_id, cls FROM toks) d CROSS JOIN pr p LEFT JOIN ds ON ds.doc_id = d.doc_id AND ds.cls = p.cls) SELECT doc_id, cls_truth, cls AS pred_cls, CAST(score AS BIGINT) AS nll_micro FROM base QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY score ASC, cls ASC) = 1"""
-
-  /** q_ridge: q_ols's Gram replay with λ=10⁶ added to the non-intercept
-    * diagonal in the same (double + double) order as the driver.
-    */
-  private lazy val ridgeOracleSql: String =
-    """WITH q AS (SELECT CAST(1 AS BIGINT) AS c0, CAST(l_quantity AS BIGINT) AS c1, CAST(round(l_discount * 100) AS BIGINT) AS c2, CAST(round(l_extendedprice) AS BIGINT) AS c3 FROM lineitem),
-      |g AS (SELECT CAST(sum(c0*c0) AS BIGINT) AS g0, CAST(sum(c0*c1) AS BIGINT) AS g1, CAST(sum(c0*c2) AS BIGINT) AS g2, CAST(sum(c0*c3) AS BIGINT) AS g3, CAST(sum(c1*c1) AS BIGINT) AS g4, CAST(sum(c1*c2) AS BIGINT) AS g5, CAST(sum(c1*c3) AS BIGINT) AS g6, CAST(sum(c2*c2) AS BIGINT) AS g7, CAST(sum(c2*c3) AS BIGINT) AS g8, count(*) AS n FROM q),
-      |d AS (SELECT CAST(g0 AS DOUBLE) AS a00, CAST(g1 AS DOUBLE) AS a01, CAST(g2 AS DOUBLE) AS a02, CAST(g3 AS DOUBLE) AS b0, CAST(g4 AS DOUBLE) + 1000000.0 AS a11, CAST(g5 AS DOUBLE) AS a12, CAST(g6 AS DOUBLE) AS b1, CAST(g7 AS DOUBLE) + 1000000.0 AS a22, CAST(g8 AS DOUBLE) AS b2, n FROM g),
-      |s AS (SELECT *, a00 * (a11 * a22 - a12 * a12) - a01 * (a01 * a22 - a12 * a02) + a02 * (a01 * a12 - a11 * a02) AS det FROM d)
-      |SELECT
-      |  (b0 * (a11 * a22 - a12 * a12) - a01 * (b1 * a22 - a12 * b2) + a02 * (b1 * a12 - a11 * b2)) / det AS beta0,
-      |  (a00 * (b1 * a22 - a12 * b2) - b0 * (a01 * a22 - a12 * a02) + a02 * (a01 * b2 - b1 * a02)) / det AS beta1,
-      |  (a00 * (a11 * b2 - a12 * b1) - a01 * (a01 * b2 - b1 * a02) + b0 * (a01 * a12 - a11 * a02)) / det AS beta2,
-      |  n FROM s""".stripMargin
-
-  /** q_logreg replay: 8 unrolled gradient steps. The rational fast
-    * sigmoid keeps every per-row double an identical IEEE operation
-    * tree, and each step's gradient is an exact micro-scaled integer
-    * sum (order-free), so the weight trajectory — and therefore the
-    * final weights and accuracy count — is bit-identical to the
-    * driver loop's.
-    */
-  private lazy val logregOracleSql: String = {
-    def errExpr(w: String) =
-      s"((0.5 + ($w.w0 + $w.w1 * b.x1 + $w.w2 * b.x2) / " +
-        s"(2.0 * (1.0 + abs($w.w0 + $w.w1 * b.x1 + $w.w2 * b.x2)))) - b.y)"
-    val steps = (1 to 8).map { k =>
-      val p = s"w${k - 1}"
-      val e = errExpr(p)
-      s"""g$k AS (SELECT sum(CAST(round($e * 1000000.0) AS BIGINT)) AS g0,
-         |  sum(CAST(round($e * b.x1 * 1000000.0) AS BIGINT)) AS g1,
-         |  sum(CAST(round($e * b.x2 * 1000000.0) AS BIGINT)) AS g2
-         |  FROM base b CROSS JOIN $p),
-         |w$k AS (SELECT
-         |  $p.w0 - 0.5 * ((CAST(g$k.g0 AS DOUBLE) / 1000000.0) / nr.nd) AS w0,
-         |  $p.w1 - 0.5 * ((CAST(g$k.g1 AS DOUBLE) / 1000000.0) / nr.nd) AS w1,
-         |  $p.w2 - 0.5 * ((CAST(g$k.g2 AS DOUBLE) / 1000000.0) / nr.nd) AS w2
-         |  FROM $p, g$k, nr)""".stripMargin
-    }.mkString(",\n")
-    val sigF = "(0.5 + (w8.w0 + w8.w1 * b.x1 + w8.w2 * b.x2) / " +
-      "(2.0 * (1.0 + abs(w8.w0 + w8.w1 * b.x1 + w8.w2 * b.x2))))"
-    s"""WITH base AS (SELECT
-       |    CASE WHEN o_orderstatus = 'F' THEN 1.0 ELSE 0.0 END AS y,
-       |    CAST(year(CAST(o_orderdate AS DATE)) - 1995 AS DOUBLE) AS x1,
-       |    CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS DOUBLE) / 10000000.0 AS x2
-       |  FROM orders),
-       |nr AS (SELECT CAST(count(*) AS DOUBLE) AS nd FROM base),
-       |w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2),
-       |$steps,
-       |fin AS (SELECT $sigF AS sig, b.y FROM base b CROSS JOIN w8)
-       |SELECT w8.w0 AS w0, w8.w1 AS w1, w8.w2 AS w2,
-       |  (SELECT count(*) FROM base) AS n,
-       |  CAST((SELECT sum(CASE WHEN (sig >= 0.5) = (y = 1.0) THEN 1 ELSE 0 END)
-       |        FROM fin) AS BIGINT) AS n_correct
-       |FROM w8""".stripMargin
-  }
-
-  /** sk_theta: the full KMV replay — fnv1a64∘fmix64 in HUGEINT (the
-    * hllVecCtes finalizer chain), unsigned bottom-256 per set and for
-    * the union, the shared θ convention (2⁶⁴ when not full, else the
-    * k-th smallest; retained = strictly below θ), and HUGEINT
-    * truncating division for every estimate.
-    */
-  /** CTE chain `keys → … → fm(flag, h)` replaying fnv1a64∘fmix64 over a
-    * `keys(flag, g)` relation to the DISTINCT unsigned HUGEINT hash —
-    * the hllVecCtes finalizer without the register split, shared by the
-    * theta/KMV oracles.
-    */
-  private def fmixChainCtes(keysSql: String): String = {
-    def mul64(c: BigInt): String =
-      s"($c::HUGEINT * (u % 4294967296::HUGEINT) + (($c::HUGEINT * (u // 4294967296::HUGEINT)) % 4294967296::HUGEINT) * 4294967296::HUGEINT) % $U64"
-    val c1 = BigInt("ff51afd7ed558ccd", 16)
-    val c2 = BigInt("c4ceb9fe1a85ec53", 16)
-    s"""keys AS ($keysSql),
-       |dk AS MATERIALIZED (SELECT DISTINCT flag, g FROM keys),
-       |hh AS (SELECT flag, $fnvSql AS u FROM dk),
-       |f1 AS (SELECT flag, xor(u, u // 8589934592::HUGEINT) AS u FROM hh),
-       |f2 AS (SELECT flag, ${mul64(c1)} AS u FROM f1),
-       |f3 AS (SELECT flag, xor(u, u // 8589934592::HUGEINT) AS u FROM f2),
-       |f4 AS (SELECT flag, ${mul64(c2)} AS u FROM f3),
-       |fm AS MATERIALIZED (SELECT DISTINCT flag, xor(u, u // 8589934592::HUGEINT) AS h FROM f4)""".stripMargin
-  }
-
-  private lazy val thetaOracleSql: String = {
-    s"""WITH ${fmixChainCtes(
-        """SELECT 'A' AS flag, CAST(o_custkey AS VARCHAR) AS g FROM orders
-          |              UNION ALL SELECT 'B', CAST(c_custkey AS VARCHAR) FROM customer WHERE c_acctbal > 0""".stripMargin)},
-       |ha AS MATERIALIZED (SELECT h FROM fm WHERE flag = 'A'),
-       |hb AS MATERIALIZED (SELECT h FROM fm WHERE flag = 'B'),
-       |ska AS MATERIALIZED (SELECT h FROM ha ORDER BY h LIMIT 256),
-       |skb AS MATERIALIZED (SELECT h FROM hb ORDER BY h LIMIT 256),
-       |sku AS MATERIALIZED (SELECT h FROM (SELECT h FROM ha UNION SELECT h FROM hb) ORDER BY h LIMIT 256),
-       |tha AS (SELECT CASE WHEN count(*) < 256 THEN $U64 ELSE max(h) END AS th, count(*) AS n_sk FROM ska),
-       |thb AS (SELECT CASE WHEN count(*) < 256 THEN $U64 ELSE max(h) END AS th, count(*) AS n_sk FROM skb),
-       |thu AS (SELECT CASE WHEN count(*) < 256 THEN $U64 ELSE max(h) END AS th FROM sku),
-       |ea AS (SELECT CAST((count(*)::HUGEINT * $U64) // th AS BIGINT) AS est_a FROM ska, tha WHERE h < th GROUP BY th),
-       |eb AS (SELECT CAST((count(*)::HUGEINT * $U64) // th AS BIGINT) AS est_b FROM skb, thb WHERE h < th GROUP BY th),
-       |fl AS (SELECT sku.h, (a.h IS NOT NULL) AS in_a, (b.h IS NOT NULL) AS in_b
-       |       FROM sku LEFT JOIN ha a ON sku.h = a.h LEFT JOIN hb b ON sku.h = b.h),
-       |eu AS (SELECT CAST((count(*)::HUGEINT * $U64) // th AS BIGINT) AS est_union,
-       |              CAST((count(*) FILTER (WHERE in_a AND in_b)::HUGEINT * $U64) // th AS BIGINT) AS est_inter,
-       |              CAST((count(*) FILTER (WHERE in_a AND NOT in_b)::HUGEINT * $U64) // th AS BIGINT) AS est_diff_ab
-       |       FROM fl, thu WHERE h < th GROUP BY th),
-       |ex AS (SELECT CAST(count(*) AS BIGINT) AS exact_union,
-       |              CAST(count(*) FILTER (WHERE a.h IS NOT NULL AND b.h IS NOT NULL) AS BIGINT) AS exact_inter,
-       |              CAST(count(*) FILTER (WHERE a.h IS NOT NULL AND b.h IS NULL) AS BIGINT) AS exact_diff_ab
-       |       FROM ha a FULL JOIN hb b ON a.h = b.h)
-       |SELECT CAST(256 AS BIGINT) AS k, CAST(tha.n_sk AS BIGINT) AS n_sk_a, CAST(thb.n_sk AS BIGINT) AS n_sk_b,
-       |       est_a, est_b, est_union, est_inter, est_diff_ab,
-       |       exact_union, exact_inter, exact_diff_ab
-       |FROM ea, eb, eu, ex, tha, thb""".stripMargin
-  }
-
-  /** sk_theta_grouped / stream_theta: per-flag fmix replay → unsigned
-    * bottom-256 via QUALIFY → the same θ convention and truncating
-    * division as kmvEstSql (not-full sketches degrade to exact counts).
-    */
-  private lazy val kmvGroupedOracleSql: String =
-    s"""WITH ${fmixChainCtes("SELECT l_returnflag AS flag, CAST(l_orderkey AS VARCHAR) AS g FROM lineitem")},
-       |sk AS MATERIALIZED (SELECT flag, h FROM fm QUALIFY row_number() OVER (PARTITION BY flag ORDER BY h) <= 256),
-       |st AS (SELECT flag, CAST(count(*) AS BIGINT) AS n_sk, max(h) AS mx FROM sk GROUP BY 1),
-       |est AS (SELECT flag, n_sk,
-       |          CASE WHEN n_sk < 256 THEN n_sk
-       |               ELSE CAST(((n_sk - 1)::HUGEINT * $U64) // mx AS BIGINT) END AS kmv_est
-       |        FROM st),
-       |ex AS (SELECT l_returnflag AS flag, count(DISTINCT l_orderkey) AS exact_nd FROM lineitem GROUP BY 1)
-       |SELECT est.flag AS l_returnflag, n_sk, CAST(kmv_est AS BIGINT) AS kmv_est, exact_nd
-       |FROM est JOIN ex ON est.flag = ex.flag""".stripMargin
-
-  /** q_dp: identical md5 fraction + the identical literal threshold chain
-    * (exact BigInt CDF of the two-sided geometric, computed once).
-    */
-  private lazy val dpOracleSql: String = {
-    val cases = dpThresholds.zip(dpNoiseSeq)
-      .map { case (t, n) => s"WHEN u32 < $t THEN $n" }.mkString(" ")
-    s"""WITH c AS (SELECT o_orderpriority AS pri, CAST(count(*) AS BIGINT) AS n FROM orders GROUP BY 1),
-       |u AS (SELECT pri, n, CAST('0x' || substr(md5('dp:' || pri), 1, 8) AS BIGINT) AS u32 FROM c)
-       |SELECT pri, n, CAST(CASE $cases ELSE 9 END AS BIGINT) AS noise,
-       |  n + CAST(CASE $cases ELSE 9 END AS BIGINT) AS dp_n FROM u""".stripMargin
-  }
-
-  /** sim_knn: the sim_topk cosine replay restricted to the disjoint
-    * anchor/pool split, then the (votes desc, label asc) majority vote.
-    */
-  private lazy val knnOracleSql: String =
-    """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-      |scored AS (SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
-      |    list_dot_product(d.v, q.v) / (sqrt(list_dot_product(d.v, d.v)) * sqrt(list_dot_product(q.v, q.v))) AS score
-      |  FROM e d, e q WHERE q.vec_id < 8 AND d.vec_id >= 8),
-      |top AS (SELECT query_id, neighbor_id FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn FROM scored) WHERE rn <= 10),
-      |votes AS (SELECT query_id, l.label AS nl, CAST(count(*) AS BIGINT) AS votes
-      |  FROM top JOIN embeddings l ON top.neighbor_id = l.vec_id GROUP BY 1, 2),
-      |pred AS (SELECT query_id, nl, votes FROM votes QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, nl ASC) = 1)
-      |SELECT p.query_id, t.label AS truth_label, p.nl AS pred_label, p.votes AS n_votes
-      |FROM pred p JOIN embeddings t ON p.query_id = t.vec_id""".stripMargin
-
-  /** q_corr: the one-pass moment CTE (HUGEINT sums of the same exact
-    * integers) and the identical per-pair Pearson double tree.
-    */
-  private lazy val corrOracleSql: String = {
-    val names = Seq("quantity", "price_c", "discount_bp", "tax_bp")
-    val moments =
-      (0 to 3).map(i => s"sum(v$i::HUGEINT) AS s$i") ++
-      (0 to 3).map(i => s"sum(v$i::HUGEINT * v$i) AS q$i") ++
-      (for { i <- 0 to 3; j <- i + 1 to 3 } yield s"sum(v$i::HUGEINT * v$j) AS p${i}_$j")
-    val sel = (for { i <- 0 to 3; j <- i + 1 to 3 } yield
-      s"""SELECT '${names(i)}' AS var_a, '${names(j)}' AS var_b, n,
-         |  CASE WHEN n::HUGEINT * q$i - s$i * s$i = 0 OR n::HUGEINT * q$j - s$j * s$j = 0
-         |  THEN CAST(NULL AS DOUBLE)
-         |  ELSE CAST(n::HUGEINT * p${i}_$j - s$i * s$j AS DOUBLE)
-         |  / (sqrt(CAST(n::HUGEINT * q$i - s$i * s$i AS DOUBLE))
-         |     * sqrt(CAST(n::HUGEINT * q$j - s$j * s$j AS DOUBLE))) END AS r
-         |FROM g""".stripMargin).mkString("\nUNION ALL\n")
-    s"""WITH b AS (SELECT CAST(l_quantity AS BIGINT) AS v0,
-       |    CAST(round(l_extendedprice * 100) AS BIGINT) AS v1,
-       |    CAST(round(l_discount * 10000) AS BIGINT) AS v2,
-       |    CAST(round(l_tax * 10000) AS BIGINT) AS v3 FROM lineitem),
-       |g AS (SELECT CAST(count(*) AS BIGINT) AS n, ${moments.mkString(", ")} FROM b)
-       |$sel""".stripMargin
-  }
-
-  /** q_drift: the q_mv_retract CDC log carried through with all profiled
-    * columns, then the identical 7-metric profile of each snapshot.
-    */
-  private lazy val driftOracleSql: String = {
-    def prof(src: String): String =
-      s"""SELECT 'n_rows' AS metric, CAST(count(*) AS BIGINT) AS value FROM $src
-         | UNION ALL SELECT 'null_status', CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM $src
-         | UNION ALL SELECT 'nd_status', CAST(count(DISTINCT o_orderstatus) AS BIGINT) FROM $src
-         | UNION ALL SELECT 'nd_priority', CAST(count(DISTINCT o_orderpriority) AS BIGINT) FROM $src
-         | UNION ALL SELECT 'sum_price_c', CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) FROM $src
-         | UNION ALL SELECT 'min_price_c', CAST(min(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) FROM $src
-         | UNION ALL SELECT 'max_price_c', CAST(max(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) FROM $src""".stripMargin
-    s"""WITH log AS (
-       |  SELECT o_orderkey, o_orderstatus, o_orderpriority, o_totalprice, 0 AS seq, 'B' AS op FROM orders
-       |  UNION ALL SELECT o_orderkey, o_orderstatus, o_orderpriority, o_totalprice * 1.1, 1, 'U' FROM orders WHERE o_orderkey % 5 = 0
-       |  UNION ALL SELECT o_orderkey + 30000000, o_orderstatus, o_orderpriority, o_totalprice, 1, 'I' FROM orders WHERE o_orderkey % 11 = 0
-       |  UNION ALL SELECT o_orderkey, o_orderstatus, o_orderpriority, 0.0, 2, 'D' FROM orders WHERE o_orderkey % 7 = 0),
-       |fin AS (SELECT o_orderkey, o_orderstatus, o_orderpriority, o_totalprice FROM
-       |  (SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY seq DESC) AS rn FROM log)
-       |  WHERE rn = 1 AND op <> 'D'),
-       |pb AS (${prof("orders")}),
-       |pn AS (${prof("fin")})
-       |SELECT pb.metric, pb.value AS value_base, pn.value AS value_new,
-       |  pn.value - pb.value AS delta
-       |FROM pb JOIN pn ON pb.metric = pn.metric""".stripMargin
-  }
-
-  /** q_declist: the q_stump candidate scan replayed twice — stage 2 over
-    * the rows stage 1's best stump misclassifies (scalar-joined model).
-    */
-  private lazy val declistOracleSql: String = {
-    def stump(src: String, p: String): String =
-      s"""${p}f AS (SELECT 'year' AS feature, bin_year AS bin, y FROM $src
-         |       UNION ALL SELECT 'price', bin_price, y FROM $src),
-         |${p}hist AS (SELECT feature, bin, CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS pos FROM ${p}f GROUP BY 1, 2),
-         |${p}cum AS (SELECT feature, bin, CAST(sum(n) OVER (PARTITION BY feature ORDER BY bin) AS BIGINT) AS n_left, CAST(sum(pos) OVER (PARTITION BY feature ORDER BY bin) AS BIGINT) AS pos_left FROM ${p}hist),
-         |${p}tot AS (SELECT feature, CAST(sum(n) AS BIGINT) AS n_tot, CAST(sum(pos) AS BIGINT) AS pos_tot FROM ${p}hist GROUP BY 1),
-         |${p}cand AS (SELECT c.feature, bin AS threshold, n_left, pos_left, n_tot - n_left AS n_right, pos_tot - pos_left AS pos_right
-         |  FROM ${p}cum c JOIN ${p}tot t ON c.feature = t.feature WHERE n_left < n_tot),
-         |${p}sc AS (SELECT *,
-         |  CAST((2::HUGEINT * pos_left * (n_left - pos_left) * 1000000) // n_left AS BIGINT)
-         |  + CAST((2::HUGEINT * pos_right * (n_right - pos_right) * 1000000) // n_right AS BIGINT) AS g_micro FROM ${p}cand),
-         |${p}best AS (SELECT * FROM ${p}sc QUALIFY row_number() OVER (ORDER BY g_micro, feature, threshold) = 1),
-         |${p}row AS (SELECT feature, threshold,
-         |  CAST(CASE WHEN 2 * pos_left > n_left THEN 1 ELSE 0 END AS BIGINT) AS pred_left,
-         |  CAST(CASE WHEN 2 * pos_right > n_right THEN 1 ELSE 0 END AS BIGINT) AS pred_right,
-         |  n_left + n_right AS n_train,
-         |  (CASE WHEN 2 * pos_left > n_left THEN pos_left ELSE n_left - pos_left END)
-         |  + (CASE WHEN 2 * pos_right > n_right THEN pos_right ELSE n_right - pos_right END) AS n_correct
-         |  FROM ${p}best)""".stripMargin
-    s"""WITH base AS (SELECT CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y,
-       |    CAST(year(CAST(o_orderdate AS DATE)) AS BIGINT) AS bin_year,
-       |    least(CAST(round(o_totalprice * 100) AS BIGINT) // 3000000, 19) AS bin_price FROM orders),
-       |${stump("base", "s1")},
-       |err AS (SELECT b.* FROM base b, s1row r
-       |  WHERE b.y <> CASE WHEN (CASE WHEN r.feature = 'year' THEN b.bin_year ELSE b.bin_price END) <= r.threshold
-       |               THEN r.pred_left ELSE r.pred_right END),
-       |${stump("err", "s2")}
-       |SELECT CAST(1 AS BIGINT) AS stage, feature, threshold, pred_left, pred_right, n_train, n_correct FROM s1row
-       |UNION ALL
-       |SELECT CAST(2 AS BIGINT), feature, threshold, pred_left, pred_right, n_train, n_correct FROM s2row""".stripMargin
-  }
-
-  /** g_linkpred: identical capped co-purchase edges, the same anchor +
-    * hub-cap wedge expansion, NOT-EXISTS adjacency exclusion, HUGEINT
-    * truncating Jaccard.
-    */
-  private lazy val linkpredOracleSql: String =
-    s"""WITH lp0 AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-       |lp AS MATERIALIZED (SELECT o, p FROM lp0 QUALIFY count(*) OVER (PARTITION BY o) <= $kcoreOrderCap),
-       |e AS MATERIALIZED (SELECT DISTINCT x.p AS src, y.p AS dst FROM lp x JOIN lp y ON x.o = y.o AND x.p < y.p),
-       |sym AS MATERIALIZED (SELECT src AS a, dst AS b FROM e UNION ALL SELECT dst, src FROM e),
-       |deg AS MATERIALIZED (SELECT a, CAST(count(*) AS BIGINT) AS d FROM sym GROUP BY 1),
-       |mids AS (SELECT a AS b FROM deg WHERE d <= $linkpredHubCap),
-       |anc AS (SELECT sym.a, sym.b FROM sym JOIN mids USING (b) WHERE sym.a % 199 = 0),
-       |w AS (SELECT x.a AS u, y.a AS v, CAST(count(*) AS BIGINT) AS cn
-       |      FROM anc x JOIN sym y ON x.b = y.b AND y.a <> x.a GROUP BY 1, 2 HAVING count(*) >= 2),
-       |na AS (SELECT w.* FROM w WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.src = w.u AND e.dst = w.v)
-       |                           AND NOT EXISTS (SELECT 1 FROM e WHERE e.src = w.v AND e.dst = w.u))
-       |SELECT u, v, cn, du.d AS du, dv.d AS dv,
-       |  CAST((cn::HUGEINT * 1000000) // (du.d + dv.d - cn) AS BIGINT) AS jaccard_micro
-       |FROM na JOIN deg du ON na.u = du.a JOIN deg dv ON na.v = dv.a""".stripMargin
-
-  /** q_ols: identical integer Gram sums, then the IDENTICAL double Cramer
-    * expression tree (each *, -, + in the same order as the driver code).
-    */
-  private lazy val olsOracleSql: String =
-    """WITH q AS (SELECT CAST(1 AS BIGINT) AS c0, CAST(l_quantity AS BIGINT) AS c1, CAST(round(l_discount * 100) AS BIGINT) AS c2, CAST(round(l_extendedprice) AS BIGINT) AS c3 FROM lineitem),
-      |g AS (SELECT CAST(sum(c0*c0) AS BIGINT) AS g0, CAST(sum(c0*c1) AS BIGINT) AS g1, CAST(sum(c0*c2) AS BIGINT) AS g2, CAST(sum(c0*c3) AS BIGINT) AS g3, CAST(sum(c1*c1) AS BIGINT) AS g4, CAST(sum(c1*c2) AS BIGINT) AS g5, CAST(sum(c1*c3) AS BIGINT) AS g6, CAST(sum(c2*c2) AS BIGINT) AS g7, CAST(sum(c2*c3) AS BIGINT) AS g8, count(*) AS n FROM q),
-      |d AS (SELECT CAST(g0 AS DOUBLE) AS a00, CAST(g1 AS DOUBLE) AS a01, CAST(g2 AS DOUBLE) AS a02, CAST(g3 AS DOUBLE) AS b0, CAST(g4 AS DOUBLE) AS a11, CAST(g5 AS DOUBLE) AS a12, CAST(g6 AS DOUBLE) AS b1, CAST(g7 AS DOUBLE) AS a22, CAST(g8 AS DOUBLE) AS b2, n FROM g),
-      |s AS (SELECT *, a00 * (a11 * a22 - a12 * a12) - a01 * (a01 * a22 - a12 * a02) + a02 * (a01 * a12 - a11 * a02) AS det FROM d)
-      |SELECT
-      |  (b0 * (a11 * a22 - a12 * a12) - a01 * (b1 * a22 - a12 * b2) + a02 * (b1 * a12 - a11 * b2)) / det AS beta0,
-      |  (a00 * (b1 * a22 - a12 * b2) - b0 * (a01 * a22 - a12 * a02) + a02 * (a01 * b2 - b1 * a02)) / det AS beta1,
-      |  (a00 * (a11 * b2 - a12 * b1) - a01 * (a01 * b2 - b1 * a02) + b0 * (a01 * a12 - a11 * a02)) / det AS beta2,
-      |  n FROM s""".stripMargin
+    RelationalQueries.pipelineQuery(spark, "/root/testdata/sf0.001")
 }

@@ -187,10 +187,7 @@ object AnnIndex {
                   targetBytes: Long = 128L << 20): (Long, Long) =
     graft.sources.Snapshots.compactCommit(spark,
       s"${liveRoot(spark, path)}/cells",
-      // match the cell's files in BOTH layouts: flat hive paths
-      // (`cell=N/part…`) and zero-copy commit trees
-      // (`commit-<tag>/cell=N/part…`)
-      rel => rel.startsWith(s"cell=$cell/") || rel.contains(s"/cell=$cell/"),
+      rel => rel.startsWith(s"cell=$cell/"),
       targetBytes,
       partitionBy = Seq("cell"),
       // physically purge this cell's tombstoned rows on the way through;

@@ -78,7 +78,14 @@ object MiniLambda {
       case NotOp(x) => Typed(!go(x).col, BooleanType)
       case Cmp(op, x, y) =>
         val (l, r) = (go(x), go(y))
-        Typed(op match {
+        // a str never equals a bool or number in Python, and ordering them
+        // raises TypeError; a cast here would throw under ANSI instead
+        if (strVsScalar(l.dt, r.dt) || strVsScalar(r.dt, l.dt)) op match {
+          case "==" => Typed(lit(false), BooleanType)
+          case "!=" => Typed(lit(true), BooleanType)
+          case _ => throw CompileError(s"'$op' between ${l.dt.simpleString} and " +
+            s"${r.dt.simpleString} is a TypeError in Python")
+        } else Typed(op match {
           case "==" => l.col === r.col
           case "!=" => l.col =!= r.col
           case "<"  => l.col < r.col
@@ -109,6 +116,9 @@ object MiniLambda {
     }
     go(a)
   }
+
+  private def strVsScalar(a: DataType, b: DataType): Boolean =
+    a == StringType && (b == BooleanType || b.isInstanceOf[NumericType])
 
   private def requireBoolean(l: Typed, r: Typed, op: String): Unit =
     if (l.dt != BooleanType || r.dt != BooleanType)
@@ -242,14 +252,22 @@ object MiniLambda {
       case ("find", Seq(_)) => Typed((instr(c, strArg("find")) - 1).cast(LongType), LongType)
       case ("isdigit", Nil) => Typed(c.rlike("^[0-9]+$"), BooleanType)
       case ("isalpha", Nil) => Typed(c.rlike("^[A-Za-z]+$"), BooleanType)
-      case ("ljust", Seq(_)) => Typed(rpad(c, width(argAsts.head), " "), StringType)
-      case ("rjust", Seq(_)) => Typed(lpad(c, width(argAsts.head), " "), StringType)
+      case ("ljust", Seq(_)) =>
+        val w = width(argAsts.head)
+        Typed(padded(c, w, rpad(c, w, " ")), StringType)
+      case ("rjust", Seq(_)) =>
+        val w = width(argAsts.head)
+        Typed(padded(c, w, lpad(c, w, " ")), StringType)
       case ("title", Nil)      => Typed(initcap(c), StringType)
       case ("capitalize", Nil) =>
         Typed(concat(upper(substring(c, 1, 1)), lower(substring(c, 2, Int.MaxValue))), StringType)
       case ("startswith", Seq(p)) => Typed(startswith(c, p.col), BooleanType)
       case ("endswith", Seq(p))   => Typed(endswith(c, p.col), BooleanType)
-      case ("zfill", Seq(_))      => Typed(lpad(c, width(argAsts.head), "0"), StringType)
+      case ("zfill", Seq(_)) => // zeros go after a leading sign
+        val w = width(argAsts.head)
+        val signed = c.startsWith("-") || c.startsWith("+")
+        Typed(padded(c, w, when(signed, concat(substring(c, 1, 1),
+          lpad(substring(c, 2, Int.MaxValue), w - 1, "0"))).otherwise(lpad(c, w, "0"))), StringType)
       case _ => throw CompileError(s"unsupported string method .$name/${args.length}")
     }
   }
@@ -262,6 +280,12 @@ object MiniLambda {
     */
   private def width(a: Ast): Int =
     intLit(a).filter(_ >= 0).getOrElse(throw CompileError("expected integer literal argument"))
+
+  /** `pad` where `c` is shorter than `w`, else `c` as is: Python never
+    * shortens a string it pads, where lpad/rpad truncate to the width.
+    */
+  private def padded(c: Column, w: Int, pad: Column): Column =
+    when(length(c) >= w, c).otherwise(pad)
 
   private def applyBuiltin(fn: String, argAsts: Seq[Ast], args: Seq[Typed]): Typed = (fn, args) match {
     case ("str", Seq(a))   => Typed(a.col.cast(StringType), StringType)

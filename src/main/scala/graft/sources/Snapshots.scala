@@ -42,16 +42,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Layout, per dataset rooted at `root` (e.g. `…/ledger/bands`):
   *   - `root/…parquet`                    — data files (hive subdirs ok)
-  *   - `root/commit-<tag>/…parquet`       — zero-copy commit trees (see
-  *     [[appendCommit]]'s `zeroCopy`)
   *   - `root/_snapshots/v…txt`            — the commit log. Manifests are
   *     written via temp file + rename (no overwrite), so a half-written
   *     one is never visible under a final name. Underscore-prefixed, so
   *     legacy plain-directory readers ignore it.
   *
-  * Readers load the file list with `basePath = root` (per commit tree for
-  * zero-copy commits), so hive partition columns (`cell=N`) and their
-  * planning-time pruning survive exactly as with a directory scan.
+  * Readers load the file list with `basePath = root`, so hive partition
+  * columns (`cell=N`) and their planning-time pruning survive exactly as
+  * with a directory scan.
   *
   * Concurrency contract: ONE maintenance writer at a time per root
   * (append/compact/vacuum are ingest-pipeline jobs) — ENFORCED as an
@@ -263,9 +261,8 @@ object Snapshots {
   /** Test hook: receives (op, root, amount) for every manifest byte
     * written ("manifest-write"), manifest body byte read
     * ("manifest-read"), and per-file data move ("rename"). ManifestLogSpec
-    * installs a recorder to PROVE commits write O(delta) bytes,
-    * fingerprint checks read zero manifest bodies, and zero-copy commits
-    * perform zero renames.
+    * installs a recorder to PROVE commits write O(delta) bytes and
+    * fingerprint checks read zero manifest bodies.
     */
   @volatile private[graft] var manifestIoProbe: (String, String, Long) => Unit = null
   private def probeIo(op: String, root: String, n: Long): Unit = {
@@ -489,16 +486,11 @@ object Snapshots {
     }
 
   /** Build a DataFrame over an explicit manifest file list (root-relative
-    * paths). Zero-copy commit trees (`commit-<tag>/…`) get their OWN
-    * `basePath` group — each tree is one flat hive layout, and reading
-    * mixed depths under a single basePath is exactly what Spark's
-    * partition inference rejects (CONFLICTING_DIRECTORY_STRUCTURES); the
-    * per-depth groups union back together with identical partition
-    * columns and per-branch pushdown/pruning.
+    * paths), all under `basePath = root`.
     *
-    * Within a group, above 32 root paths Spark switches to a PARALLEL
-    * listing job (`spark.sql.sources.parallelPartitionDiscovery
-    * .threshold`) — right for an object store, where thousands of
+    * Above 32 root paths Spark switches to a PARALLEL listing job
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`) — right
+    * for an object store, where thousands of
     * sequential driver HEADs would dwarf one fleet job, but a pure
     * ~1.2 s scheduling tax on a local filesystem whose stats cost
     * microseconds. Sidestep it for local roots WITHOUT touching session
@@ -512,23 +504,16 @@ object Snapshots {
     */
   private def readRelFiles(spark: SparkSession, root: String,
                            rels: Seq[String]): DataFrame = {
-    def one(base: String, paths: Seq[String]): DataFrame = {
-      val (fs, _) = fsFor(spark, base)
-      val local = fs.getScheme == "file"
-      if (!local || paths.size <= 32)
-        spark.read.option("basePath", base).parquet(paths: _*)
-      else if (paths.size <= 512)
-        paths.grouped(32)
-          .map(g => spark.read.option("basePath", base).parquet(g: _*))
-          .reduce(_ unionByName _)
-      else spark.read.option("basePath", base).parquet(paths: _*)
-    }
-    val groups = rels.groupBy(r =>
-      if (r.startsWith("commit-")) r.takeWhile(_ != '/') else "")
-    groups.toSeq.sortBy(_._1).map { case (dir, fs) =>
-      val base = if (dir.isEmpty) root else s"$root/$dir"
-      one(base, fs.map(f => s"$root/$f"))
-    }.reduce(_ unionByName _)
+    val paths = rels.map(f => s"$root/$f")
+    val (fs, _) = fsFor(spark, root)
+    val local = fs.getScheme == "file"
+    if (!local || paths.size <= 32)
+      spark.read.option("basePath", root).parquet(paths: _*)
+    else if (paths.size <= 512)
+      paths.grouped(32)
+        .map(g => spark.read.option("basePath", root).parquet(g: _*))
+        .reduce(_ unionByName _)
+    else spark.read.option("basePath", root).parquet(paths: _*)
   }
 
   /** Read the live snapshot of `root`. None when the live file set is
@@ -561,16 +546,6 @@ object Snapshots {
     else Some(spark.read.parquet(root))
   }
 
-  /** Default for [[appendCommit]]'s `zeroCopy` (env-switchable so a bench
-    * A/B can flip the whole ingest family without a code change). Flat
-    * stays the default: on local/HDFS the per-file rename is free, and
-    * one flat hive tree keeps single-basePath reads and simplest vacuums.
-    */
-  private[graft] def zeroCopyDefault: Boolean =
-    sys.props.get("graft.snapshot.zerocopy").map(_ == "1")
-      .orElse(sys.env.get("GRAFT_SNAPSHOT_ZEROCOPY").map(_ == "1"))
-      .getOrElse(false)
-
   /** Incremental append, O(delta) end to end: run `write` against a
     * fresh staging directory (the function receives its path and must
     * write ONE parquet dataset there — hive partition subdirs fine), list
@@ -588,57 +563,34 @@ object Snapshots {
     * wrote also can't resurrect crash-orphaned data files into the live
     * set).
     *
-    * Two physical layouts:
-    *   - `zeroCopy = false` (default): staging lives under
-    *     `root/_staging-<uuid>` — underscore-hidden, so readers and
-    *     [[listParquet]] never see half-written files — and each file is
-    *     RENAMED into its final home under `root` (unique part-file
-    *     names — Spark embeds the write job's UUID — so moves cannot
-    *     collide). Free on local/HDFS; a copy of the just-written delta's
-    *     bytes on S3A.
-    *   - `zeroCopy = true`: the commit writes DIRECTLY into its own
-    *     `root/commit-<tag>/` tree and the manifest references the files
-    *     in place — zero renames, so on S3A the append is metadata-only.
-    *     The tree is not underscore-hidden (Spark's readers drop hidden
-    *     path components), but it is invisible anyway: readers resolve
-    *     the manifest, which names it only after the commit. Readers
-    *     union per-commit-tree basePath groups (see [[readRelFiles]]) —
-    *     Spark's flat hive inference cannot span mixed depths under one
-    *     basePath (CONFLICTING_DIRECTORY_STRUCTURES), which is why v1
-    *     documented this as blocked; the grouped read is the unblock.
+    * Staging lives under `root/_staging-<uuid>` — underscore-hidden, so
+    * readers and [[listParquet]] never see half-written files — and each
+    * file is RENAMED into its final home under `root` (unique part-file
+    * names — Spark embeds the write job's UUID — so moves cannot
+    * collide). Free on local/HDFS; a copy of the just-written delta's
+    * bytes on an object store.
     *
-    * Crash safety (both layouts): a crash before the manifest commit
-    * leaves only unreferenced files ([[vacuum]] removes them and any
-    * stray staging/commit trees); the commit itself is the same single
-    * rename as ever.
+    * Crash safety: a crash before the manifest commit leaves only
+    * unreferenced files ([[vacuum]] removes them and any stray staging
+    * trees); the commit itself is the same single rename as ever.
     */
-  def appendCommit(spark: SparkSession, root: String,
-                   zeroCopy: Boolean = zeroCopyDefault)
-                  (write: String => Unit): Long =
+  def appendCommit(spark: SparkSession, root: String)(write: String => Unit): Long =
       withWriterLock(spark, root) {
     if (currentVersion(spark, root).isEmpty) bootstrap(spark, root)
     val (fs, rootP) = fsFor(spark, root)
-    if (zeroCopy) {
-      val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      val tree = new Path(rootP, s"commit-$tag")
-      write(tree.toString)
-      val written = listParquet(spark, tree.toString)
-      commitDelta(spark, root, adds = written.map(f => s"commit-$tag/$f"))
-    } else {
-      val staging = new Path(rootP, s"_staging-${java.util.UUID.randomUUID()}")
-      write(staging.toString)
-      val written = listParquet(spark, staging.toString)
-      written.foreach { rel =>
-        val dst = new Path(rootP, rel)
-        val parent = dst.getParent
-        if (!fs.exists(parent)) fs.mkdirs(parent)
-        probeIo("rename", root, 1L)
-        require(fs.rename(new Path(staging, rel), dst),
-          s"snapshot append move failed: $staging/$rel -> $dst")
-      }
-      fs.delete(staging, true)
-      commitDelta(spark, root, adds = written)
+    val staging = new Path(rootP, s"_staging-${java.util.UUID.randomUUID()}")
+    write(staging.toString)
+    val written = listParquet(spark, staging.toString)
+    written.foreach { rel =>
+      val dst = new Path(rootP, rel)
+      val parent = dst.getParent
+      if (!fs.exists(parent)) fs.mkdirs(parent)
+      probeIo("rename", root, 1L)
+      require(fs.rename(new Path(staging, rel), dst),
+        s"snapshot append move failed: $staging/$rel -> $dst")
     }
+    fs.delete(staging, true)
+    commitDelta(spark, root, adds = written)
   }
 
   /** Compact the live files matching `subset` into ⌈bytes/targetBytes⌉
@@ -783,17 +735,10 @@ object Snapshots {
     fs.listStatus(snapP).foreach(st =>
       if (st.getPath.getName.startsWith(".tmp-")) fs.delete(st.getPath, false))
     // stray staging trees from crashed appendCommits (hidden from
-    // readers) and zero-copy commit trees whose every file is dead (a
-    // crashed zero-copy append, or a fully-vacuumed old commit): safe to
-    // remove here — vacuum is a maintenance call, and the
-    // single-maintenance-writer contract means no append is in flight
+    // readers): safe to remove here — vacuum is a maintenance call, and
+    // the single-maintenance-writer contract means no append is in flight
     fs.listStatus(rootP).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("_staging-"))
-        fs.delete(st.getPath, true)
-      else if (st.isDirectory && n.startsWith("commit-") &&
-               !referenced.exists(_.startsWith(n + "/")) &&
-               listParquet(spark, st.getPath.toString).isEmpty)
+      if (st.isDirectory && st.getPath.getName.startsWith("_staging-"))
         fs.delete(st.getPath, true)
     }
     deleted

@@ -200,7 +200,7 @@ object Streams {
     * pair, so the store is O(#users) at any event volume (the
     * bounded-state discipline every stream op here follows). Each
     * micro-batch sorts its per-user slice by (ts, event_id), folds it
-    * through graft.SparkEntry.hmmStepInt — the SAME recurrence the batch
+    * through graft.families.Shared.hmmStepInt — the SAME recurrence the batch
     * query and the DuckDB oracle run — and emits one updated snapshot;
     * the last snapshot per user therefore equals the batch fold
     * exactly. Ordering contract across batches is asofEnrich's:
@@ -214,8 +214,8 @@ object Streams {
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, it: Iterator[HmmEvent], state: GroupState[(Long, Long)]) =>
           val sorted = it.toList.sortBy(e => (e.ts.getTime, e.event_id))
-          var (enc, n) = state.getOption.getOrElse((graft.SparkEntry.hmmInit, 0L))
-          sorted.foreach { e => enc = graft.SparkEntry.hmmStepInt(enc, e.obs); n += 1 }
+          var (enc, n) = state.getOption.getOrElse((graft.families.Shared.hmmInit, 0L))
+          sorted.foreach { e => enc = graft.families.Shared.hmmStepInt(enc, e.obs); n += 1 }
           if (sorted.isEmpty) Iterator.empty
           else {
             state.update((enc, n))

@@ -12,11 +12,11 @@ import java.io.{ByteArrayOutputStream, PrintStream}
   * ScalaTest can make without DuckDB), and (c) where the query logs its
   * observed drop count, the log line fired.
   *
-  * Caps under test (SparkEntry.scala):
-  *   assocBasketCap = 32   — ev_assoc giant-basket guard
-  *   spanPostingCap = 50   — dd_spans boilerplate-gram guard
-  *   linkpredHubCap = 1024 — g_linkpred hub-middle guard
-  *   kcoreOrderCap  = 64   — g_kcore / coOccurrencePairs width guard
+  * Caps under test (in src/main/scala/graft/families/):
+  *   assocBasketCap = 32   — ev_assoc giant-basket guard (EventQueries)
+  *   spanPostingCap = 50   — dd_spans boilerplate-gram guard (DedupQueries)
+  *   linkpredHubCap = 1024 — g_linkpred hub-middle guard (GraphQueries)
+  *   kcoreOrderCap  = 64   — g_kcore / coOccurrencePairs width guard (Shared)
   */
 class CapRegressionSpec extends SparkSpec {
   import spark.implicits._

@@ -7,9 +7,8 @@ import graft.sources.{SnapCache, Snapshots}
   * COMMIT LOG (deltas + periodic checkpoint rollups), commits write bytes
   * proportional to their delta, fingerprint checks read zero manifest
   * bodies, compaction discovers its output by staging (never a tree
-  * walk), vacuum is log-driven, the writer lock heartbeats its lease and
-  * steals atomically, and zero-copy commits reference their files in
-  * place with zero renames. Every assertion here counts real I/O through
+  * walk), vacuum is log-driven, and the writer lock heartbeats its lease
+  * and steals atomically. Every assertion here counts real I/O through
   * the [[Snapshots.manifestIoProbe]] / [[Snapshots.listProbe]] hooks —
   * mechanism proofs, not vibes.
   */
@@ -194,46 +193,6 @@ class ManifestLogSpec extends SparkSpec {
     assert(Snapshots.read(spark, root).get.count() == 6)
   }
 
-  test("zero-copy append: files referenced in place, zero renames, same reads") {
-    val flat = tmp("zc-flat"); val zc = tmp("zc-nested")
-    def build(root: String, zeroCopy: Boolean): List[(String, String, Long)] = {
-      Seq((1L, 0), (2L, 1)).toDF("id", "cell").write.partitionBy("cell").parquet(root)
-      Snapshots.bootstrap(spark, root)
-      val (_, ev) = recordIo {
-        for (i <- 0 until 3)
-          Snapshots.appendCommit(spark, root, zeroCopy = zeroCopy) { staging =>
-            Seq((10L + i, 0), (20L + i, 2)).toDF("id", "cell")
-              .write.partitionBy("cell").parquet(staging)
-          }
-      }
-      ev
-    }
-    val evFlat = build(flat, zeroCopy = false)
-    val evZc = build(zc, zeroCopy = true)
-    assert(evFlat.count(_._1 == "rename") > 0, "flat appends move files")
-    assert(evZc.count(_._1 == "rename") == 0,
-      s"zero-copy appends must perform ZERO per-file renames, got: $evZc")
-    // identical logical content, hive partition column intact, pruning live
-    def rows(root: String) = Snapshots.read(spark, root).get
-      .select("id", "cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(rows(flat) == rows(zc))
-    val pruned = Snapshots.read(spark, zc).get.filter(col("cell") === 2)
-    assert(pruned.count() == 3)
-    // zero-copy trees live under visible commit-<tag>/ dirs, named by the manifest
-    val files = Snapshots.currentFiles(spark, zc).get
-    assert(files.exists(_.startsWith("commit-")), s"expected commit trees in: $files")
-    // a crashed (uncommitted) zero-copy tree is invisible and deep-vacuumed
-    Seq((99L, 0)).toDF("id", "cell").write.partitionBy("cell")
-      .parquet(s"$zc/commit-deadbeef")
-    assert(rows(zc).forall(_._1 != 99L), "uncommitted commit trees must be invisible")
-    Snapshots.vacuum(spark, zc, grace = 0)
-    val fs = new org.apache.hadoop.fs.Path(zc)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$zc/commit-deadbeef")),
-      "deep vacuum must clear crashed zero-copy trees")
-    assert(rows(flat) == rows(zc))
-  }
-
   test("a reader racing a rollup+vacuum that drops its listed chain re-resolves, not dies") {
     // lock-free probes race vacuum's manifest retention: list the log,
     // then — before the chain body reads finish — a concurrent writer
@@ -285,104 +244,54 @@ class ManifestLogSpec extends SparkSpec {
       if (failAt.decrementAndGet() < 0) throw new InjectedCrash
     def countEvents(body: => Unit): Int = recordIo(body)._2.size
 
-    for (zeroCopy <- Seq(false, true)) {
-      def freshRoot(tag: String): String = {
-        val r = tmp(s"crash-sweep-$tag")
-        Seq((1L, 0), (2L, 1)).toDF("id", "cell").write.partitionBy("cell").parquet(r)
-        Snapshots.bootstrap(spark, r)
-        r
-      }
-      def append(root: String): Unit =
-        Snapshots.appendCommit(spark, root, zeroCopy = zeroCopy) { staging =>
-          Seq((3L, 0), (4L, 2)).toDF("id", "cell")
-            .write.partitionBy("cell").parquet(staging)
-        }
-      val countRoot = freshRoot(s"count-$zeroCopy") // outside the counter
-      val nAppend = countEvents(append(countRoot))
-      assert(nAppend >= 2, s"expected multiple I/O events, got $nAppend")
-      for (k <- 0 until nAppend) {
-        val root = freshRoot(s"a$zeroCopy-$k")
-        failAt.set(k); inject()
-        val crashed =
-          try { append(root); false } catch { case _: InjectedCrash => true }
-        finally Snapshots.manifestIoProbe = null
-        assert(crashed, s"event $k must be reachable")
-        assert(Snapshots.read(spark, root).get.select("id")
-          .collect().map(_.getLong(0)).toSet == Set(1L, 2L),
-          s"a crash at I/O event $k of append must leave the old state readable")
-        Snapshots.vacuum(spark, root, grace = 0)
-        append(root) // clean retry after the crash + vacuum
-        assert(Snapshots.read(spark, root).get.count() == 4,
-          s"retry after a crash at event $k must land the append")
-      }
-      // compaction: same sweep (flat only — its rewrite is always staged)
-      if (!zeroCopy) {
-        def compact(root: String): Unit = {
-          Snapshots.compactCommit(spark, root, _ => true, targetBytes = 1L << 30)
-          ()
-        }
-        val cRoot = freshRoot("count-compact"); append(cRoot)
-        val nCompact = countEvents(compact(cRoot))
-        for (k <- 0 until nCompact) {
-          val root = freshRoot(s"c-$k"); append(root)
-          failAt.set(k); inject()
-          try compact(root) catch { case _: InjectedCrash => () }
-          finally Snapshots.manifestIoProbe = null
-          val rows = Snapshots.read(spark, root).get.count()
-          assert(rows == 4,
-            s"a crash at I/O event $k of compaction must never lose rows, saw $rows")
-          Snapshots.vacuum(spark, root, grace = 0)
-          compact(root)
-          assert(Snapshots.read(spark, root).get.count() == 4)
-        }
-      }
+    def freshRoot(tag: String): String = {
+      val r = tmp(s"crash-sweep-$tag")
+      Seq((1L, 0), (2L, 1)).toDF("id", "cell").write.partitionBy("cell").parquet(r)
+      Snapshots.bootstrap(spark, r)
+      r
     }
-  }
-
-  test("zero-copy mode runs the REAL index families end to end, same results") {
-    // the A/B above proves the raw layer; this proves the whole stack — a
-    // mixed layout (flat one-shot build + zero-copy appends + zero-copy
-    // tombstones + a staged compaction over both) through LshIndex and
-    // AnnIndex, bit-compared against the default flat run
-    val docs = (0L until 120L)
-      .map(i => (i, s"alpha bravo charlie delta echo ${i % 12} tail ${i % 5}"))
-      .toDF("doc_id", "text")
-    val incoming = docs.filter(col("doc_id") >= 100)
-    def lshPairs(root: String): Set[(Long, Long)] = {
-      ext.LshIndex.write(docs.filter(col("doc_id") < 60), "doc_id", "text", root, files = 2)
-      ext.LshIndex.append(docs.filter(col("doc_id") >= 60 && col("doc_id") < 100),
-        "doc_id", "text", root)
-      ext.LshIndex.delete(spark, root, Seq(7L).toDF("id"))
-      ext.LshIndex.compact(spark, root)
-      ext.LshIndex.probePairs(spark, root, incoming, "doc_id", "text", 0.2)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def append(root: String): Unit =
+      Snapshots.appendCommit(spark, root) { staging =>
+        Seq((3L, 0), (4L, 2)).toDF("id", "cell")
+          .write.partitionBy("cell").parquet(staging)
+      }
+    val countRoot = freshRoot("count") // outside the counter
+    val nAppend = countEvents(append(countRoot))
+    assert(nAppend >= 2, s"expected multiple I/O events, got $nAppend")
+    for (k <- 0 until nAppend) {
+      val root = freshRoot(s"a-$k")
+      failAt.set(k); inject()
+      val crashed =
+        try { append(root); false } catch { case _: InjectedCrash => true }
+      finally Snapshots.manifestIoProbe = null
+      assert(crashed, s"event $k must be reachable")
+      assert(Snapshots.read(spark, root).get.select("id")
+        .collect().map(_.getLong(0)).toSet == Set(1L, 2L),
+        s"a crash at I/O event $k of append must leave the old state readable")
+      Snapshots.vacuum(spark, root, grace = 0)
+      append(root) // clean retry after the crash + vacuum
+      assert(Snapshots.read(spark, root).get.count() == 4,
+        s"retry after a crash at event $k must land the append")
     }
-    // +1 offsets keep every vector away from the zero vector (cosine
-    // against a zero norm is a legitimate ANSI divide-by-zero)
-    val vecs = (0L until 80L).map(i =>
-      (i, Array(i.toDouble % 7 + 1, (i % 3).toDouble + 1))).toDF("id", "v")
-    val queries = (0L until 5L).map(i =>
-      (1000L + i, Array(i.toDouble % 7 + 1, (i % 3).toDouble + 1))).toDF("id", "v")
-    def annTop(root: String): Set[String] = {
-      val cents = ext.IvfIndex.train(vecs.filter(col("id") < 50), "id", "v", k = 4)
-      ext.AnnIndex.write(
-        ext.IvfIndex.assign(vecs.filter(col("id") < 50), "id", "v", cents), cents, root)
-      ext.AnnIndex.append(vecs.filter(col("id") >= 50), "id", "v", root)
-      ext.AnnIndex.delete(spark, root, Seq(11L).toDF("id"))
-      ext.AnnIndex.compactCell(spark, root, cell = 1)
-      ext.AnnIndex.probeTopK(spark, root, queries, "id", "v", k = 3)
-        .collect().map(r => (0 until r.length).map(i => String.valueOf(r.get(i)))
-          .mkString("|")).toSet
+    // compaction: same sweep
+    def compact(root: String): Unit = {
+      Snapshots.compactCommit(spark, root, _ => true, targetBytes = 1L << 30)
+      ()
     }
-    val flatLsh = lshPairs(tmp("zc-e2e-lsh-flat"))
-    val flatAnn = annTop(tmp("zc-e2e-ann-flat"))
-    assert(flatLsh.nonEmpty && flatAnn.nonEmpty, "fixtures must produce matches")
-    java.lang.System.setProperty("graft.snapshot.zerocopy", "1")
-    val (zcLsh, zcAnn) =
-      try (lshPairs(tmp("zc-e2e-lsh-zc")), annTop(tmp("zc-e2e-ann-zc")))
-      finally java.lang.System.clearProperty("graft.snapshot.zerocopy")
-    assert(zcLsh == flatLsh, "zero-copy LSH ledger must probe identically to flat")
-    assert(zcAnn == flatAnn, "zero-copy ANN index must probe identically to flat")
+    val cRoot = freshRoot("count-compact"); append(cRoot)
+    val nCompact = countEvents(compact(cRoot))
+    for (k <- 0 until nCompact) {
+      val root = freshRoot(s"c-$k"); append(root)
+      failAt.set(k); inject()
+      try compact(root) catch { case _: InjectedCrash => () }
+      finally Snapshots.manifestIoProbe = null
+      val rows = Snapshots.read(spark, root).get.count()
+      assert(rows == 4,
+        s"a crash at I/O event $k of compaction must never lose rows, saw $rows")
+      Snapshots.vacuum(spark, root, grace = 0)
+      compact(root)
+      assert(Snapshots.read(spark, root).get.count() == 4)
+    }
   }
 
   test("no mutation path walks an index tree: append, compact, retrain, forget") {

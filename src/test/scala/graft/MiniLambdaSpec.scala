@@ -48,6 +48,11 @@ class MiniLambdaSpec extends SparkSpec {
   test("comparisons, and/or, startswith") {
     assert(evalOne("lambda r: r['n'] > 2 and r['x'] < 1.0") == Seq(false, true))
     assert(evalOne("lambda r: r['price'].startswith('$')") == Seq(true, true))
+    // a str never equals a bool or number (CPython parity)
+    assert(evalOne("lambda r: r['txt'] == True") == Seq(false, false))
+    assert(evalOne("lambda r: r['txt'] != True") == Seq(true, true))
+    assert(evalOne("lambda r: 3 == r['price']") == Seq(false, false))
+    assert(evalOne("lambda r: 'o' in r['txt'] == True") == Seq(false, false))
   }
 
   test("slicing and len") {
@@ -118,6 +123,12 @@ class MiniLambdaSpec extends SparkSpec {
     assert(evalOne("lambda r: r['txt'].isalpha()") == Seq(false, true))
     assert(evalOne("lambda r: 'ab'.ljust(4) + '|'") == Seq("ab  |", "ab  |"))
     assert(evalOne("lambda r: 'ab'.rjust(4) + '|'") == Seq("  ab|", "  ab|"))
+    // never shorter than the input, and zfill's zeros go after the sign
+    assert(evalOne("lambda r: 'abc'.ljust(2)") == Seq("abc", "abc"))
+    assert(evalOne("lambda r: 'abc'.rjust(2)") == Seq("abc", "abc"))
+    assert(evalOne("lambda r: 'hello'.zfill(3)") == Seq("hello", "hello"))
+    assert(evalOne("lambda r: '-5'.zfill(3)") == Seq("-05", "-05"))
+    assert(evalOne("lambda r: r['txt'].zfill(5)") == Seq("hello world", "00FOO"))
     assert(evalOne("lambda r: 'xxhixx'.strip('x')") == Seq("hi", "hi"))
   }
 
@@ -130,6 +141,10 @@ class MiniLambdaSpec extends SparkSpec {
   test("string + non-string is a compile error (Python TypeError parity)") {
     intercept[MiniLambda.CompileError] {
       MiniLambda.compile("lambda r: r['txt'] + r['n']", base.schema)
+    }
+    // so is ordering a str against a bool or number
+    Seq("r['txt'] < 3", "r['n'] >= 'a'", "r['txt'] <= False").foreach { e =>
+      intercept[MiniLambda.CompileError](MiniLambda.compile(s"lambda r: $e", base.schema))
     }
   }
 
