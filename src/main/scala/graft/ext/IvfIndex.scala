@@ -132,12 +132,6 @@ object IvfIndex {
       .withColumn("score",
         Vectors.dot(col("v"), col("__qv__")) / (Vectors.norm(col("v")) * col("__qn__")))
       .select(col("query_id"), col("id").as("neighbor_id"), col("score"))
-    scored.groupBy("query_id")
-      .agg(graft.functions.TopKAgg.topK(k, col("score"),
-        col("neighbor_id").cast("double"),
-        struct(col("neighbor_id"), col("score"))).as("__top__"))
-      .select(col("query_id"), posexplode(col("__top__")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("col.neighbor_id").as("neighbor_id"), col("col.score").as("score"))
+    Similarity.topKPerQuery(scored, k)
   }
 }

@@ -1,6 +1,12 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import javax.imageio.ImageIO
+import javax.sound.sampled.{AudioInputStream, UnsupportedAudioFileException}
+import javax.sound.sampled.spi.AudioFileReader
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,6 +23,11 @@ import org.apache.spark.sql.types._
   * zero codec involvement — the cheap path when only dimensions are
   * needed. Only genuinely unrecognized payloads fall back to a
   * deterministic stub (clearly marked with `content_sum = -1`).
+  *
+  * Each codec step is written once — [[readImage]], [[luma32]],
+  * [[writeImage]], [[openAudio]], [[pcm16]], [[pcm16Wav]] — and every
+  * kernel is one typed per-record pass ([[perRecord]], or [[plant]] for
+  * the planted-media generators) that calls them.
   */
 object Multimodal {
 
@@ -52,6 +63,34 @@ object Multimodal {
       col("source"),
       col("text").cast(BinaryType).as("content"))
 
+  /** The typed stage every planted-media generator runs: one
+    * mapPartitions over (doc_id, source), each row's payload a pure
+    * function of its id.
+    */
+  private def plant(docs: DataFrame, mediaType: Long => String)(bytes: Long => Array[Byte])
+                   (implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    // fanOut: the per-row encoders are the CPU (see mediaFromDocuments)
+    Par.fanOut(docs).select(col("doc_id"), col("source")).as[(Long, String)]
+      .mapPartitions(_.map { case (id, source) =>
+        MediaRecord(id, mediaType(id), source, bytes(id))
+      }).toDF()
+  }
+
+  /** The typed stage every decode kernel runs: one mapPartitions over
+    * the media rows, so a kernel adds one stage and no exchange; `f`
+    * emits zero or more rows per record. A null payload reads as empty.
+    */
+  private def perRecord[T: Encoder](media: DataFrame)
+                                   (f: MediaRecord => IterableOnce[T]): Dataset[T] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
+      .mapPartitions(_.flatMap { rec =>
+        f(if (rec.content == null) rec.copy(content = Array.emptyByteArray) else rec)
+      })
+  }
+
   /** Deterministic REAL media planted from doc ids — every payload is a
     * genuine encoder's output (JDK ImageIO png/bmp, AudioSystem wav), with
     * dimensions/rates/contents that are pure integer functions of the id.
@@ -62,23 +101,16 @@ object Multimodal {
     * is 16-bit mono at 8000+(id%5)*2000 Hz, 64+id%64 frames of constant
     * sample value id%2000-1000.
     */
-  def syntheticMedia(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    // fanOut: the per-row ImageIO/AudioSystem encoders below are the CPU
-    Par.fanOut(docs).select(col("doc_id"), col("source")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, source) =>
-          val bytes = (id % 3) match {
-            case 1 => encodeWav(8000 + (id % 5).toInt * 2000,
-              64 + (id % 64).toInt, (id % 2000 - 1000).toInt)
-            case k => encodeImage(if (k == 0) "png" else "bmp",
-              8 + (id % 17).toInt, 8 + (id % 13).toInt,
-              (id % 256).toInt, (id * 7 % 256).toInt, (id * 13 % 256).toInt)
-          }
-          MediaRecord(id, if (id % 3 == 1) "audio/wav" else "image", source, bytes)
-        }
-      }.toDF()
-  }
+  def syntheticMedia(docs: DataFrame)(implicit spark: SparkSession): DataFrame =
+    plant(docs, id => if (id % 3 == 1) "audio/wav" else "image") { id =>
+      (id % 3) match {
+        case 1 => encodeWav(8000 + (id % 5).toInt * 2000,
+          64 + (id % 64).toInt, (id % 2000 - 1000).toInt)
+        case k => encodeImage(if (k == 0) "png" else "bmp",
+          8 + (id % 17).toInt, 8 + (id % 13).toInt,
+          (id % 256).toInt, (id * 7 % 256).toInt, (id * 13 % 256).toInt)
+      }
+    }
 
   /** Deterministic GRADIENT images whose dHash is a closed-form function
     * of the id — the non-degenerate twin of [[syntheticMedia]] (whose
@@ -91,21 +123,9 @@ object Multimodal {
     * which hash-gates the banding recall, the bucket cap, the real PNG
     * round-trip, and the dHash math at once.
     */
-  def gradientMedia(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    // fanOut: per-row PNG encode is the CPU (see syntheticMedia)
-    Par.fanOut(docs).select(col("doc_id"), col("source")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, source) =>
-          MediaRecord(id, "image", source, encodeGradientPng(plantedDHash(id)))
-        }
-      }.toDF()
-  }
+  def gradientMedia(docs: DataFrame)(implicit spark: SparkSession): DataFrame =
+    plant(docs, _ => "image")(id => encodeGradientPng(plantedDHash(id)))
 
-  /** The closed-form hash [[gradientMedia]] plants (mirrored by the
-    * DuckDB oracle): unsigned 64-bit parse of the first 16 md5 hex chars
-    * of the cluster id, one member bit flipped.
-    */
   /** Per-thread MD5 instance: `MessageDigest.getInstance` funnels every
     * call through the synchronized JCA provider lookup, which turned the
     * fanned-out per-row generators into a lock convoy (r12 ProbeJobs:
@@ -117,58 +137,88 @@ object Multimodal {
       java.security.MessageDigest.getInstance("MD5")
   }
 
+  /** md5_64 as the planters' DuckDB oracles compute it: the unsigned
+    * 64-bit parse of md5(s)'s first 16 hex chars, i.e. its first 8 bytes
+    * big-endian.
+    */
+  private def md5_64(s: String): Long =
+    java.nio.ByteBuffer.wrap(md5Local.get()
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))).getLong
+
+  /** The closed-form hash [[gradientMedia]] plants (mirrored by the
+    * DuckDB oracle): md5_64 of the cluster id, one member bit flipped.
+    */
   private[graft] def plantedDHash(id: Long): Long = {
-    val hex = md5Local.get()
-      .digest((id / 10).toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map(b => f"$b%02x").mkString
-    val base = java.lang.Long.parseUnsignedLong(hex.substring(0, 16), 16)
+    val base = md5_64((id / 10).toString)
     val m = (id % 10).toInt
     if (m > 0) base ^ (1L << (m - 1)) else base
   }
 
+  private def gray(v: Int): Int = (v << 16) | (v << 8) | v
+
   /** 9×8 grayscale PNG whose dHash64 is exactly `h`: at grid size the
     * downscale sampling is the identity, and per row the pixel value
     * steps up by 1 leftward exactly where the corresponding hash bit is
-    * set (bit (y·8+x) ⇔ luma(x,y) > luma(x+1,y)).
+    * set (bit (y·8+x) ⇔ luma(x,y) > luma(x+1,y)), i.e. luma(x,y) is 128
+    * plus the set bits among row y's hash bits x..7.
     */
-  private[graft] def encodeGradientPng(h: Long): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(9, 8,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < 8) {
-      val v = new Array[Int](9)
-      v(8) = 128
-      var x = 7
-      while (x >= 0) {
-        v(x) = v(x + 1) + (((h >>> (y * 8 + x)) & 1L)).toInt
-        x -= 1
-      }
-      var xx = 0
-      while (xx < 9) {
-        val p = v(xx)
-        img.setRGB(xx, y, (p << 16) | (p << 8) | p)
-        xx += 1
-      }
-      y += 1
+  private[graft] def encodeGradientPng(h: Long): Array[Byte] =
+    writeImage("png", 9, 8) { (x, y) =>
+      gray(128 + java.lang.Long.bitCount(((h >>> (y * 8)) & 0xffL) >>> x))
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.setUseCache(false)
-    require(javax.imageio.ImageIO.write(img, "png", bos), "no ImageIO writer for png")
-    bos.toByteArray
-  }
 
   private[ext] def encodeImage(format: String, w: Int, h: Int,
                                r: Int, g: Int, b: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
     val rgb = (r << 16) | (g << 8) | b
+    writeImage(format, w, h)((_, _) => rgb)
+  }
+
+  /** ImageIO's disk-backed stream cache, switched off once per JVM before
+    * the first read or write: every stream here is an in-memory array.
+    */
+  private lazy val imageIO: Unit = ImageIO.setUseCache(false)
+
+  /** The one JDK image decode (png/jpeg/gif/bmp readers ship with the
+    * JRE). None when no reader accepts the bytes.
+    */
+  private def readImage(bytes: Array[Byte]): Option[BufferedImage] = {
+    imageIO
+    try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
+    catch { case _: Exception => None }
+  }
+
+  /** The one JDK image encode: a w×h RGB image with pixel (x, y) =
+    * `rgb(x, y)`, written as `format`; fails if the JRE has no writer.
+    */
+  private def writeImage(format: String, w: Int, h: Int)(rgb: (Int, Int) => Int): Array[Byte] = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
     var y = 0
-    while (y < h) { var x = 0; while (x < w) { img.setRGB(x, y, rgb); x += 1 }; y += 1 }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.setUseCache(false)
-    require(javax.imageio.ImageIO.write(img, format, bos), s"no ImageIO writer for $format")
+    while (y < h) { var x = 0; while (x < w) { img.setRGB(x, y, rgb(x, y)); x += 1 }; y += 1 }
+    imageIO
+    val bos = new ByteArrayOutputStream()
+    require(ImageIO.write(img, format, bos), s"no ImageIO writer for $format")
     bos.toByteArray
   }
+
+  /** The decoded 32×32 grid every 32×32 kernel reads: the red channel
+    * (the luma of the planted gray images), row-major (y·32+x). None for
+    * undecodable payloads and any other size — those kernels drop them,
+    * since their features are defined on the normalized grid.
+    */
+  private def luma32(bytes: Array[Byte]): Option[Array[Long]] =
+    readImage(bytes).flatMap { img =>
+      if (img.getWidth != 32 || img.getHeight != 32) None
+      else {
+        val lum = new Array[Long](1024)
+        var y = 0
+        while (y < 32) {
+          var x = 0
+          while (x < 32) { lum(y * 32 + x) = ((img.getRGB(x, y) >> 16) & 0xff).toLong; x += 1 }
+          y += 1
+        }
+        Some(lum)
+      }
+    }
 
   /** Canonical RIFF/WAVE container for 16-bit signed little-endian mono
     * PCM — BYTE-IDENTICAL to what `AudioSystem.write(..., WAVE, out)`
@@ -200,16 +250,23 @@ object Multimodal {
     out
   }
 
-  private[ext] def encodeWav(rate: Int, nFrames: Int, value: Int): Array[Byte] = {
-    val data = new Array[Byte](nFrames * 2)
+  /** The one 16-bit PCM encode: `n` mono samples, sample i =
+    * `sample(i)` mod 2¹⁶, packed little-endian into a [[pcmWavBytes]] WAV.
+    */
+  private def pcm16Wav(rate: Int, n: Int)(sample: Int => Int): Array[Byte] = {
+    val data = new Array[Byte](n * 2)
     var i = 0
-    while (i < nFrames) {
-      data(2 * i) = (value & 0xff).toByte
-      data(2 * i + 1) = ((value >> 8) & 0xff).toByte
+    while (i < n) {
+      val v = sample(i)
+      data(2 * i) = (v & 0xff).toByte
+      data(2 * i + 1) = ((v >> 8) & 0xff).toByte
       i += 1
     }
     pcmWavBytes(rate, data)
   }
+
+  private[ext] def encodeWav(rate: Int, nFrames: Int, value: Int): Array[Byte] =
+    pcm16Wav(rate, nFrames)(_ => value)
 
   /** Speech-pattern WAVs whose active blocks are a closed-form function
     * of the id — [[gradientMedia]]'s plant-and-replay idea applied to
@@ -220,47 +277,22 @@ object Multimodal {
     * and the segment count from doc_id alone, which hash-gates the REAL
     * encode → container-parse → PCM-windowing pipeline end to end.
     */
-  def vadMedia(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    // fanOut: per-row WAV encode is the CPU (see syntheticMedia)
-    Par.fanOut(docs).select(col("doc_id"), col("source")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, source) =>
-          MediaRecord(id, "audio/wav", source, encodeVadWav(id))
-        }
-      }.toDF()
-  }
+  def vadMedia(docs: DataFrame)(implicit spark: SparkSession): DataFrame =
+    plant(docs, _ => "audio/wav")(encodeVadWav)
 
-  /** The 8 planted speech bits for [[vadMedia]]: the LOW byte of the
-    * unsigned 64-bit parse of md5(doc_id)'s first 16 hex chars — the
-    * DuckDB mirror is `CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
-    * 15, 2) AS BIGINT)` (hex chars 15–16 ARE bits 0..7 of that value).
+  /** The 8 planted speech bits for [[vadMedia]]: the LOW byte of
+    * md5_64(doc_id) — the DuckDB mirror is `CAST('0x' ||
+    * substr(md5(CAST(doc_id AS VARCHAR)), 15, 2) AS BIGINT)` (hex chars
+    * 15–16 ARE bits 0..7 of that value).
     */
-  private[graft] def vadBits(id: Long): Int = {
-    val hex = md5Local.get()
-      .digest(id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map(b => f"$b%02x").mkString
-    (java.lang.Long.parseUnsignedLong(hex.substring(0, 16), 16) & 0xffL).toInt
-  }
+  private[graft] def vadBits(id: Long): Int =
+    (md5_64(id.toString) & 0xffL).toInt
 
   private[ext] def encodeVadWav(id: Long): Array[Byte] = {
     val bits = vadBits(id)
-    val data = new Array[Byte](8 * 400 * 2)
-    var b = 0
-    while (b < 8) {
-      if (((bits >> b) & 1) == 1) {
-        var i = 0
-        while (i < 400) {
-          val v = if (i % 2 == 0) 6000 else -6000
-          val off = (b * 400 + i) * 2
-          data(off) = (v & 0xff).toByte
-          data(off + 1) = ((v >> 8) & 0xff).toByte
-          i += 1
-        }
-      }
-      b += 1
+    pcm16Wav(8000, 8 * 400) { i => // block i / 400
+      if (((bits >> (i / 400)) & 1) == 0) 0 else if (i % 2 == 0) 6000 else -6000
     }
-    pcmWavBytes(8000, data) // byte-identical to the AudioSystem path
   }
 
   /** One fixed-length energy window of decoded PCM. `sum_abs` feeds the
@@ -316,10 +348,9 @@ object Multimodal {
     * convoy (r12 ProbeJobs: ~35 s of task time for ~2.5 s of CPU on
     * every audio query). The reader instances are stateless parsers.
     */
-  private lazy val audioReaders: List[javax.sound.sampled.spi.AudioFileReader] = {
-    val it = java.util.ServiceLoader
-      .load(classOf[javax.sound.sampled.spi.AudioFileReader]).iterator()
-    val b = List.newBuilder[javax.sound.sampled.spi.AudioFileReader]
+  private[ext] lazy val audioReaders: List[AudioFileReader] = {
+    val it = java.util.ServiceLoader.load(classOf[AudioFileReader]).iterator()
+    val b = List.newBuilder[AudioFileReader]
     while (it.hasNext) b += it.next()
     // WAV first, the MIDI prober LAST: SoftMidiAudioFileReader's accept
     // check itself walks the synchronized MIDI provider registry per call
@@ -332,40 +363,44 @@ object Multimodal {
 
   /** Registry-free AudioSystem.getAudioInputStream: first accepting
     * reader wins (same semantics — every reader rejects foreign bytes
-    * with UnsupportedAudioFileException).
+    * with UnsupportedAudioFileException). Each reader gets a fresh
+    * stream, so a rejecting reader cannot leave a consumed prefix or a
+    * moved mark for the next one. `readers` is a test seam.
     */
-  private[ext] def openAudio(bytes: Array[Byte]): javax.sound.sampled.AudioInputStream = {
-    val in = new java.io.ByteArrayInputStream(bytes)
-    audioReaders.foreach { r =>
-      try return r.getAudioInputStream(in)
-      catch {
-        case _: javax.sound.sampled.UnsupportedAudioFileException => in.reset()
+  private[ext] def openAudio(bytes: Array[Byte],
+                             readers: Seq[AudioFileReader] = audioReaders): AudioInputStream =
+    readers.iterator.flatMap { r =>
+      try Some(r.getAudioInputStream(new ByteArrayInputStream(bytes)))
+      catch { case _: UnsupportedAudioFileException => None }
+    }.nextOption().getOrElse(
+      throw new UnsupportedAudioFileException("no reader accepted the stream"))
+
+  /** The one 16-bit PCM decode: an opened stream's mono samples in the
+    * stream's byte order. None for any other sample size or channel count.
+    */
+  private def pcm16(ais: AudioInputStream): Option[Array[Short]] = {
+    val fmt = ais.getFormat
+    if (fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1) None
+    else {
+      val data = ais.readAllBytes()
+      val out = new Array[Short](data.length / 2)
+      var i = 0
+      while (i < out.length) {
+        out(i) =
+          if (fmt.isBigEndian) ((data(2 * i) << 8) | (data(2 * i + 1) & 0xff)).toShort
+          else ((data(2 * i + 1) << 8) | (data(2 * i) & 0xff)).toShort
+        i += 1
       }
+      Some(out)
     }
-    throw new javax.sound.sampled.UnsupportedAudioFileException(
-      "no reader accepted the stream")
   }
 
   /** REAL PCM extraction via the JRE audio readers: the decoded 16-bit
     * mono sample array, or None when no reader accepts the bytes.
     */
   private[ext] def decodePcm(bytes: Array[Byte]): Option[Array[Short]] =
-    try {
-      val ais = openAudio(bytes)
-      val fmt = ais.getFormat
-      if (fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1) {
-        val data = ais.readAllBytes()
-        val out = new Array[Short](data.length / 2)
-        var i = 0
-        while (i + 1 < data.length) {
-          out(i / 2) =
-            if (fmt.isBigEndian) ((data(i) << 8) | (data(i + 1) & 0xff)).toShort
-            else ((data(i + 1) << 8) | (data(i) & 0xff)).toShort
-          i += 2
-        }
-        Some(out)
-      } else None
-    } catch { case _: Exception => None }
+    try pcm16(openAudio(bytes))
+    catch { case _: Exception => None }
 
   /** Container-format sniff from magic bytes — real logic (PNG/JPEG/RIFF/
     * PDF/GZIP), pure Column expression.
@@ -384,30 +419,24 @@ object Multimodal {
       .otherwise("bin")
   }
 
-  /** REAL image decode via the JDK's ImageIO (png/jpeg/gif/bmp readers ship
-    * with the JRE): (width, height, Σ(r+g+b) over all pixels). None when no
-    * reader accepts the bytes.
+  /** REAL image decode via the JDK's ImageIO: (width, height, Σ(r+g+b)
+    * over all pixels). None when no reader accepts the bytes.
     */
   private[ext] def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Long)] =
-    try {
-      javax.imageio.ImageIO.setUseCache(false)
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      if (img == null) None
-      else {
-        var s = 0L
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val rgb = img.getRGB(x, y)
-            s += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-            x += 1
-          }
-          y += 1
+    readImage(bytes).map { img =>
+      var s = 0L
+      var y = 0
+      while (y < img.getHeight) {
+        var x = 0
+        while (x < img.getWidth) {
+          val rgb = img.getRGB(x, y)
+          s += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
+          x += 1
         }
-        Some((img.getWidth, img.getHeight, s))
+        y += 1
       }
-    } catch { case _: Exception => None }
+      (img.getWidth, img.getHeight, s)
+    }
 
   /** REAL audio decode via javax.sound.sampled (wav/aiff/au readers ship
     * with the JRE): (sampleRate, frames, Σ samples) for 16-bit PCM; frame
@@ -415,24 +444,10 @@ object Multimodal {
     */
   private[ext] def decodeAudio(bytes: Array[Byte]): Option[(Int, Long, Long)] =
     try {
-      val ais = openAudio(bytes) // registry-free, see audioReaders
-      val fmt = ais.getFormat
+      val ais = openAudio(bytes)
       val frames = ais.getFrameLength
-      val sum =
-        if (fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1) {
-          val data = ais.readAllBytes()
-          var s = 0L
-          var i = 0
-          while (i + 1 < data.length) {
-            val v =
-              if (fmt.isBigEndian) ((data(i) << 8) | (data(i + 1) & 0xff)).toShort
-              else ((data(i + 1) << 8) | (data(i) & 0xff)).toShort
-            s += v
-            i += 2
-          }
-          s
-        } else 0L
-      Some((fmt.getSampleRate.toInt, frames, sum))
+      val sum = pcm16(ais).fold(0L)(_.foldLeft(0L)(_ + _))
+      Some((ais.getFormat.getSampleRate.toInt, frames, sum))
     } catch { case _: Exception => None }
 
   /** Deterministic STUB for unrecognized payloads only: fake dimensions
@@ -454,34 +469,31 @@ object Multimodal {
     */
   def decode(media: DataFrame)(implicit spark: SparkSession): Dataset[DecodedMedia] = {
     import spark.implicits._
-    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
-      .mapPartitions { it =>
-        it.map { rec =>
-          val bytes = if (rec.content == null) Array.emptyByteArray else rec.content
-          val fmt = sniffName(bytes)
-          fmt match {
-            case "png" | "jpeg" | "gif" | "bmp" =>
-              decodeImage(bytes) match {
-                case Some((w, h, sum)) =>
-                  DecodedMedia(rec.media_id, fmt, w, h, 0, w.toLong * h, sum)
-                case None =>
-                  val (w, h, _) = decodeStub(bytes)
-                  DecodedMedia(rec.media_id, fmt, w, h, 0, 0L, -1L)
-              }
-            case "wav" =>
-              decodeAudio(bytes) match {
-                case Some((rate, frames, sum)) =>
-                  DecodedMedia(rec.media_id, fmt, 0, 0, rate, frames, sum)
-                case None =>
-                  val (_, _, sr) = decodeStub(bytes)
-                  DecodedMedia(rec.media_id, fmt, 0, 0, sr, 0L, -1L)
-              }
-            case other =>
+    perRecord(media) { rec =>
+      val bytes = rec.content
+      val fmt = sniffName(bytes)
+      Some(fmt match {
+        case "png" | "jpeg" | "gif" | "bmp" =>
+          decodeImage(bytes) match {
+            case Some((w, h, sum)) =>
+              DecodedMedia(rec.media_id, fmt, w, h, 0, w.toLong * h, sum)
+            case None =>
               val (w, h, _) = decodeStub(bytes)
-              DecodedMedia(rec.media_id, other, w, h, 0, 0L, -1L)
+              DecodedMedia(rec.media_id, fmt, w, h, 0, 0L, -1L)
           }
-        }
-      }
+        case "wav" =>
+          decodeAudio(bytes) match {
+            case Some((rate, frames, sum)) =>
+              DecodedMedia(rec.media_id, fmt, 0, 0, rate, frames, sum)
+            case None =>
+              val (_, _, sr) = decodeStub(bytes)
+              DecodedMedia(rec.media_id, fmt, 0, 0, sr, 0L, -1L)
+          }
+        case other =>
+          val (w, h, _) = decodeStub(bytes)
+          DecodedMedia(rec.media_id, other, w, h, 0, 0L, -1L)
+      })
+    }
   }
 
   /** Decode/feature-extract metadata WITHOUT touching pixel data: container
@@ -492,15 +504,12 @@ object Multimodal {
     */
   def extractMeta(media: DataFrame)(implicit spark: SparkSession): Dataset[MediaMeta] = {
     import spark.implicits._
-    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
-      .mapPartitions { it =>
-        it.map { rec =>
-          val bytes = if (rec.content == null) Array.emptyByteArray else rec.content
-          val (w, h, sr) = parseHeader(bytes).getOrElse(decodeStub(bytes))
-          MediaMeta(rec.media_id, rec.media_type, bytes.length.toLong,
-            sniffName(bytes), w, h, sr)
-        }
-      }
+    perRecord(media) { rec =>
+      val bytes = rec.content
+      val (w, h, sr) = parseHeader(bytes).getOrElse(decodeStub(bytes))
+      Some(MediaMeta(rec.media_id, rec.media_type, bytes.length.toLong,
+        sniffName(bytes), w, h, sr))
+    }
   }
 
   /** JVM-side magic sniff (same table as sniffFormat, for the typed path). */
@@ -595,51 +604,27 @@ object Multimodal {
   def resampleAudio(media: DataFrame, targetRate: Int)
                    (implicit spark: SparkSession): Dataset[ResampledMedia] = {
     import spark.implicits._
-    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
-      .mapPartitions { it =>
-        it.map { rec =>
-          val bytes = if (rec.content == null) Array.emptyByteArray else rec.content
-          val out =
-            try {
-              val ais = openAudio(bytes) // registry-free, see audioReaders
-              val fmt = ais.getFormat
-              if (fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1) {
-                val data = ais.readAllBytes()
-                val n = data.length / 2
-                val samples = new Array[Short](n)
-                var i = 0
-                while (i < n) {
-                  samples(i) =
-                    if (fmt.isBigEndian)
-                      ((data(2 * i) << 8) | (data(2 * i + 1) & 0xff)).toShort
-                    else ((data(2 * i + 1) << 8) | (data(2 * i) & 0xff)).toShort
-                  i += 1
-                }
-                val src = fmt.getSampleRate.toInt
-                val outN = math.max(1, (n.toLong * targetRate / src).toInt)
-                val resampled = new Array[Byte](outN * 2)
-                var k = 0
-                while (k < outN) {
-                  val pos = k.toDouble * src / targetRate
-                  val i0 = math.min(pos.toInt, n - 1)
-                  val i1 = math.min(i0 + 1, n - 1)
-                  val v = Math.round(
-                    samples(i0) + (pos - i0) * (samples(i1) - samples(i0))).toInt
-                  resampled(2 * k) = (v & 0xff).toByte
-                  resampled(2 * k + 1) = ((v >> 8) & 0xff).toByte
-                  k += 1
-                }
-                // byte-identical to the AudioSystem.write path (spec-
-                // asserted) without the per-call writer-registry lock
-                pcmWavBytes(targetRate, resampled)
-              } else bytes
-            } catch { case _: Exception => bytes }
-          ResampledMedia(rec.media_id, rec.media_type, targetRate, out)
-        }
-      }
+    perRecord(media) { rec =>
+      val bytes = rec.content
+      val out =
+        try {
+          val ais = openAudio(bytes)
+          pcm16(ais).fold(bytes) { samples =>
+            val n = samples.length
+            val src = ais.getFormat.getSampleRate.toInt
+            val outN = math.max(1, (n.toLong * targetRate / src).toInt)
+            pcm16Wav(targetRate, outN) { k =>
+              val pos = k.toDouble * src / targetRate
+              val i0 = math.min(pos.toInt, n - 1)
+              val i1 = math.min(i0 + 1, n - 1)
+              Math.round(samples(i0) + (pos - i0) * (samples(i1) - samples(i0))).toInt
+            }
+          }
+        } catch { case _: Exception => bytes }
+      Some(ResampledMedia(rec.media_id, rec.media_type, targetRate, out))
+    }
   }
 
-  /** Resized media record. */
   /** 64-bit difference hash (dHash, the standard perceptual image
     * fingerprint): nearest-neighbor downscale to a 9×8 integer-luma grid,
     * bit (y·8+x) set when luma(x,y) > luma(x+1,y). Invariant to uniform
@@ -687,21 +672,16 @@ object Multimodal {
     */
   def perceptualHash(media: DataFrame)(implicit spark: SparkSession): Dataset[MediaHash] = {
     import spark.implicits._
-    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.map { rec =>
-          val bytes = if (rec.content == null) Array.emptyByteArray else rec.content
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          if (img != null)
-            MediaHash(rec.media_id, rec.media_type, dHash64(img), decodable = true)
-          else
-            MediaHash(rec.media_id, rec.media_type,
-              graft.functions.Hashing.fnv1a64(bytes, 0, bytes.length), decodable = false)
-        }
-      }
+    perRecord(media) { rec =>
+      Some(readImage(rec.content) match {
+        case Some(img) =>
+          MediaHash(rec.media_id, rec.media_type, dHash64(img), decodable = true)
+        case None =>
+          MediaHash(rec.media_id, rec.media_type,
+            graft.functions.Hashing.fnv1a64(rec.content, 0, rec.content.length),
+            decodable = false)
+      })
+    }
   }
 
   // ---- DCT perceptual hash (pHash) ----
@@ -727,33 +707,12 @@ object Multimodal {
     * genuinely distinct spectrum; brightness-shift invariance is proven
     * in the spec on wrap-free images instead.)
     */
-  def phashMedia(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    // fanOut: per-row image synthesis + dct is the CPU (see syntheticMedia)
-    Par.fanOut(docs).select(col("doc_id"), col("source")).as[(Long, String)]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.map { case (id, source) =>
-          val a = 1 + (id % 7).toInt; val b = 1 + (id % 5).toInt
-          val c = (id % 256).toInt
-          val img = new java.awt.image.BufferedImage(32, 32,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < 32) {
-            var x = 0
-            while (x < 32) {
-              val v = (a * x + b * y + c) % 256
-              img.setRGB(x, y, (v << 16) | (v << 8) | v)
-              x += 1
-            }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          require(javax.imageio.ImageIO.write(img, "png", bos), "no png writer")
-          MediaRecord(id, "image", source, bos.toByteArray)
-        }
-      }.toDF()
-  }
+  def phashMedia(docs: DataFrame)(implicit spark: SparkSession): DataFrame =
+    plant(docs, _ => "image") { id =>
+      val a = 1 + (id % 7).toInt; val b = 1 + (id % 5).toInt
+      val c = (id % 256).toInt
+      writeImage("png", 32, 32)((x, y) => gray((a * x + b * y + c) % 256))
+    }
 
   /** DCT-II perceptual hash (pHash, the dHash upgrade that survives
     * rescaling/blur): REAL decode → 32×32 luma → separable integer DCT
@@ -767,68 +726,49 @@ object Multimodal {
     */
   def dctPhash(media: DataFrame)(implicit spark: SparkSession): Dataset[DctHash] = {
     import spark.implicits._
-    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.flatMap { rec =>
-          val bytes = if (rec.content == null) Array.emptyByteArray else rec.content
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          if (img == null || img.getWidth != 32 || img.getHeight != 32) None
-          else {
-            val lum = Array.ofDim[Long](32, 32) // lum(x)(y)
-            var y = 0
-            while (y < 32) {
-              var x = 0
-              while (x < 32) {
-                lum(x)(y) = (img.getRGB(x, y) >> 16) & 0xff
-                x += 1
-              }
-              y += 1
-            }
-            val t = Array.ofDim[Long](8, 32) // T(u)(y)
-            var u = 0
-            while (u < 8) {
-              y = 0
-              while (y < 32) {
-                var s = 0L; var x = 0
-                while (x < 32) { s += dctCos(u)(x) * lum(x)(y); x += 1 }
-                t(u)(y) = s
-                y += 1
-              }
-              u += 1
-            }
-            val f = Array.ofDim[Long](8, 8)
-            u = 0
-            while (u < 8) {
-              var v = 0
-              while (v < 8) {
-                var s = 0L; y = 0
-                while (y < 32) { s += dctCos(v)(y) * t(u)(y); y += 1 }
-                f(u)(v) = s
-                v += 1
-              }
-              u += 1
-            }
-            val ac = new Array[Long](63)
-            var k = 0; var i = 0
-            while (i < 64) {
-              if (i != 0) { ac(k) = f(i / 8)(i % 8); k += 1 }
-              i += 1
-            }
-            java.util.Arrays.sort(ac)
-            val med = ac(31)
-            var h = 0L
-            i = 0
-            while (i < 64) {
-              if (f(i / 8)(i % 8) > med) h |= 1L << i
-              i += 1
-            }
-            Some(DctHash(rec.media_id, h, f(0)(0), med))
+    perRecord(media) { rec =>
+      luma32(rec.content).map { lum =>
+        val t = Array.ofDim[Long](8, 32) // T(u)(y)
+        var u = 0
+        while (u < 8) {
+          var y = 0
+          while (y < 32) {
+            var s = 0L; var x = 0
+            while (x < 32) { s += dctCos(u)(x) * lum(y * 32 + x); x += 1 }
+            t(u)(y) = s
+            y += 1
           }
+          u += 1
         }
+        val f = Array.ofDim[Long](8, 8)
+        u = 0
+        while (u < 8) {
+          var v = 0
+          while (v < 8) {
+            var s = 0L; var y = 0
+            while (y < 32) { s += dctCos(v)(y) * t(u)(y); y += 1 }
+            f(u)(v) = s
+            v += 1
+          }
+          u += 1
+        }
+        val ac = new Array[Long](63)
+        var k = 0; var i = 0
+        while (i < 64) {
+          if (i != 0) { ac(k) = f(i / 8)(i % 8); k += 1 }
+          i += 1
+        }
+        java.util.Arrays.sort(ac)
+        val med = ac(31)
+        var h = 0L
+        i = 0
+        while (i < 64) {
+          if (f(i / 8)(i % 8) > med) h |= 1L << i
+          i += 1
+        }
+        DctHash(rec.media_id, h, f(0)(0), med)
       }
+    }
   }
 
   case class LumaHist(media_id: Long, bin: Long, n_px: Long)
@@ -841,30 +781,13 @@ object Multimodal {
     */
   def lumaHistogram(media: DataFrame)(implicit spark: SparkSession): Dataset[LumaHist] = {
     import spark.implicits._
-    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.flatMap { rec =>
-          val bytes = if (rec.content == null) Array.emptyByteArray else rec.content
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          if (img == null || img.getWidth != 32 || img.getHeight != 32) Nil
-          else {
-            val counts = new Array[Long](16)
-            var y = 0
-            while (y < 32) {
-              var x = 0
-              while (x < 32) {
-                counts(((img.getRGB(x, y) >> 16) & 0xff) / 16) += 1
-                x += 1
-              }
-              y += 1
-            }
-            (0 until 16).map(b => LumaHist(rec.media_id, b.toLong, counts(b)))
-          }
-        }
+    perRecord(media) { rec =>
+      luma32(rec.content).toSeq.flatMap { lum =>
+        val counts = new Array[Long](16)
+        lum.foreach(l => counts((l / 16).toInt) += 1)
+        (0 until 16).map(b => LumaHist(rec.media_id, b.toLong, counts(b)))
       }
+    }
   }
 
   case class Patch(media_id: Long, px: Long, py: Long, n_px: Long,
@@ -883,35 +806,26 @@ object Multimodal {
                (implicit spark: SparkSession): Dataset[Patch] = {
     import spark.implicits._
     require(patch > 0 && 32 % patch == 0, s"patch $patch must divide 32")
-    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.flatMap { rec =>
-          val bytes = if (rec.content == null) Array.emptyByteArray else rec.content
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          if (img == null || img.getWidth != 32 || img.getHeight != 32) Nil
-          else {
-            val g = 32 / patch
-            for { py <- 0 until g; px <- 0 until g } yield {
-              var sum = 0L; var mn = 255L; var mx = 0L
-              var y = py * patch
-              while (y < (py + 1) * patch) {
-                var x = px * patch
-                while (x < (px + 1) * patch) {
-                  val l = ((img.getRGB(x, y) >> 16) & 0xff).toLong
-                  sum += l; if (l < mn) mn = l; if (l > mx) mx = l
-                  x += 1
-                }
-                y += 1
-              }
-              Patch(rec.media_id, px.toLong, py.toLong,
-                (patch * patch).toLong, sum, mn, mx)
+    val g = 32 / patch
+    perRecord(media) { rec =>
+      luma32(rec.content).toSeq.flatMap { lum =>
+        for { py <- 0 until g; px <- 0 until g } yield {
+          var sum = 0L; var mn = 255L; var mx = 0L
+          var y = py * patch
+          while (y < (py + 1) * patch) {
+            var x = px * patch
+            while (x < (px + 1) * patch) {
+              val l = lum(y * 32 + x)
+              sum += l; if (l < mn) mn = l; if (l > mx) mx = l
+              x += 1
             }
+            y += 1
           }
+          Patch(rec.media_id, px.toLong, py.toLong,
+            (patch * patch).toLong, sum, mn, mx)
         }
       }
+    }
   }
 
   case class Blockiness(media_id: Long, bsum: Long, isum: Long, blockiness_micro: Long)
@@ -923,34 +837,24 @@ object Multimodal {
     */
   def blockiness(media: DataFrame)(implicit spark: SparkSession): Dataset[Blockiness] = {
     import spark.implicits._
-    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.flatMap { rec =>
-          val bytes = if (rec.content == null) Array.emptyByteArray else rec.content
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          if (img == null || img.getWidth != 32 || img.getHeight != 32) None
-          else {
-            var bsum = 0L; var isum = 0L
-            var y = 0
-            while (y < 32) {
-              var x = 0
-              while (x < 31) {
-                val d = math.abs(((img.getRGB(x + 1, y) >> 16) & 0xff)
-                  - ((img.getRGB(x, y) >> 16) & 0xff)).toLong
-                if (x % 8 == 7) bsum += d else isum += d
-                x += 1
-              }
-              y += 1
-            }
-            // boundary columns: 3 of 31; interior: 28 of 31 (n per col = 32)
-            val ratio = if (isum == 0L) 0L else (bsum * 28L * 1000000L) / (isum * 3L)
-            Some(Blockiness(rec.media_id, bsum, isum, ratio))
+    perRecord(media) { rec =>
+      luma32(rec.content).map { lum =>
+        var bsum = 0L; var isum = 0L
+        var y = 0
+        while (y < 32) {
+          var x = 0
+          while (x < 31) {
+            val d = math.abs(lum(y * 32 + x + 1) - lum(y * 32 + x))
+            if (x % 8 == 7) bsum += d else isum += d
+            x += 1
           }
+          y += 1
         }
+        // boundary columns: 3 of 31; interior: 28 of 31 (n per col = 32)
+        val ratio = if (isum == 0L) 0L else (bsum * 28L * 1000000L) / (isum * 3L)
+        Blockiness(rec.media_id, bsum, isum, ratio)
       }
+    }
   }
 
   case class LumaVec(media_id: Long, luma: Array[Long])
@@ -960,27 +864,7 @@ object Multimodal {
     */
   def lumaVector(media: DataFrame)(implicit spark: SparkSession): Dataset[LumaVec] = {
     import spark.implicits._
-    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.flatMap { rec =>
-          val bytes = if (rec.content == null) Array.emptyByteArray else rec.content
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          if (img == null || img.getWidth != 32 || img.getHeight != 32) None
-          else {
-            val a = new Array[Long](1024)
-            var y = 0
-            while (y < 32) {
-              var x = 0
-              while (x < 32) { a(y * 32 + x) = ((img.getRGB(x, y) >> 16) & 0xff).toLong; x += 1 }
-              y += 1
-            }
-            Some(LumaVec(rec.media_id, a))
-          }
-        }
-      }
+    perRecord(media)(rec => luma32(rec.content).map(LumaVec(rec.media_id, _)))
   }
 
   case class Sharpness(media_id: Long, n_px: Long, lap_var: Long)
@@ -990,32 +874,23 @@ object Multimodal {
     */
   def sharpness(media: DataFrame)(implicit spark: SparkSession): Dataset[Sharpness] = {
     import spark.implicits._
-    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.flatMap { rec =>
-          val bytes = if (rec.content == null) Array.emptyByteArray else rec.content
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          if (img == null || img.getWidth != 32 || img.getHeight != 32) None
-          else {
-            def l(x: Int, y: Int): Long = ((img.getRGB(x, y) >> 16) & 0xff).toLong
-            var s = 0L; var ss = 0L; var n = 0L
-            var y = 1
-            while (y < 31) {
-              var x = 1
-              while (x < 31) {
-                val v = 4 * l(x, y) - l(x - 1, y) - l(x + 1, y) - l(x, y - 1) - l(x, y + 1)
-                s += v; ss += v * v; n += 1
-                x += 1
-              }
-              y += 1
-            }
-            Some(Sharpness(rec.media_id, n, (n * ss - s * s) / (n * n)))
+    perRecord(media) { rec =>
+      luma32(rec.content).map { lum =>
+        def l(x: Int, y: Int): Long = lum(y * 32 + x)
+        var s = 0L; var ss = 0L; var n = 0L
+        var y = 1
+        while (y < 31) {
+          var x = 1
+          while (x < 31) {
+            val v = 4 * l(x, y) - l(x - 1, y) - l(x + 1, y) - l(x, y - 1) - l(x, y + 1)
+            s += v; ss += v * v; n += 1
+            x += 1
           }
+          y += 1
         }
+        Sharpness(rec.media_id, n, (n * ss - s * s) / (n * n))
       }
+    }
   }
 
   /** Image near-dup pairs by dHash Hamming distance ≤ `maxHamming`,
@@ -1059,40 +934,21 @@ object Multimodal {
             (implicit spark: SparkSession): Dataset[ResizedMedia] = {
     import spark.implicits._
     val budget = targetW * targetH
-    media.select("media_id", "media_type", "source", "content").as[MediaRecord]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.map { rec =>
-          val bytes = if (rec.content == null) Array.emptyByteArray else rec.content
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          val out =
-            if (img != null) {
-              val dst = new java.awt.image.BufferedImage(targetW, targetH,
-                java.awt.image.BufferedImage.TYPE_INT_RGB)
-              var y = 0
-              while (y < targetH) {
-                val sy = (y.toLong * img.getHeight / targetH).toInt
-                var x = 0
-                while (x < targetW) {
-                  val sx = (x.toLong * img.getWidth / targetW).toInt
-                  dst.setRGB(x, y, img.getRGB(sx, sy) & 0xffffff)
-                  x += 1
-                }
-                y += 1
-              }
-              val bos = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(dst, "png", bos)
-              bos.toByteArray
-            } else if (bytes.length <= budget) bytes
-            else {
-              val step = bytes.length.toDouble / budget
-              Array.tabulate(budget)(i => bytes((i * step).toInt))
-            }
-          ResizedMedia(rec.media_id, rec.media_type, targetW, targetH, out)
-        }
+    perRecord(media) { rec =>
+      val bytes = rec.content
+      val out = readImage(bytes) match {
+        case Some(img) =>
+          writeImage("png", targetW, targetH) { (x, y) =>
+            img.getRGB((x.toLong * img.getWidth / targetW).toInt,
+              (y.toLong * img.getHeight / targetH).toInt) & 0xffffff
+          }
+        case None if bytes.length <= budget => bytes
+        case None =>
+          val step = bytes.length.toDouble / budget
+          Array.tabulate(budget)(i => bytes((i * step).toInt))
       }
+      Some(ResizedMedia(rec.media_id, rec.media_type, targetW, targetH, out))
+    }
   }
 
   /** Frame sampling plumbing: split the payload into fixed-size windows

@@ -130,6 +130,39 @@ object Pq {
     withCodes.select(col("id"), col("codes"), sqrt(rnorm2).as("rnorm"))
   }
 
+  /** The ADC lookup for one query: the flat M×K table of partial dots
+    * table(m·K + j) = ⟨q_m, c_{m,j}⟩, and ‖q‖.
+    */
+  private def adcTable(qv: Array[Double], books: Codebooks): (Array[Double], Double) = {
+    val m = books.size
+    val kk = books.head.length
+    val sd = books.head.head.length
+    val table = new Array[Double](m * kk)
+    var mm = 0
+    while (mm < m) {
+      var j = 0
+      while (j < kk) {
+        val c = books(mm)(j); var s = 0.0; var i = 0
+        while (i < sd) { s += qv(mm * sd + i) * c(i); i += 1 }
+        table(mm * kk + j) = s; j += 1
+      }
+      mm += 1
+    }
+    var qn = 0.0; qv.foreach(x => qn += x * x)
+    (table, math.sqrt(qn))
+  }
+
+  /** The approximate dot of a row's `codes` with the query whose table is
+    * `__tbl__`: M table lookups summed.
+    */
+  private def adcDot(books: Codebooks): Column = {
+    val kk = books.head.length
+    aggregate(
+      zip_with(col("codes"), sequence(lit(0), lit(books.size - 1)),
+        (code, mm) => element_at(col("__tbl__"), mm * kk + code + 1)),
+      lit(0.0), (acc, x) => acc + x)
+  }
+
   /** ADC top-k cosine: approximate score = Σ_m table[m·K + code_m]
     * / (‖q‖ · rnorm). Queries ride as driver-computed flat tables
     * (M×K doubles each) broadcast to the scan; ranking shuffles ≤k rows
@@ -139,45 +172,37 @@ object Pq {
               books: Codebooks, k: Int): DataFrame = {
     val spark = encoded.sparkSession
     import spark.implicits._
-    val m = books.size
-    val kk = books.head.length
-    val sd = books.head.head.length
     val qRows = queries
       .select(col(idCol).cast("long").as("qid"), col(vecCol).cast("array<double>").as("qv"))
       .collect()
       .map { r =>
-        val qid = r.getLong(0)
-        val qv = r.getSeq[Double](1).toArray
-        val table = new Array[Double](m * kk)
-        var mm = 0
-        while (mm < m) {
-          var j = 0
-          while (j < kk) {
-            val c = books(mm)(j); var s = 0.0; var i = 0
-            while (i < sd) { s += qv(mm * sd + i) * c(i); i += 1 }
-            table(mm * kk + j) = s; j += 1
-          }
-          mm += 1
-        }
-        var qn = 0.0; qv.foreach(x => qn += x * x)
-        (qid, table, math.sqrt(qn))
+        val (table, qn) = adcTable(r.getSeq[Double](1).toArray, books)
+        (r.getLong(0), table, qn)
       }.toSeq
     val q = broadcast(qRows.toDF("query_id", "__tbl__", "__qn__"))
-    val adcDot = aggregate(
-      zip_with(col("codes"), sequence(lit(0), lit(m - 1)),
-        (code, mm) => element_at(col("__tbl__"), mm * kk + code + 1)),
-      lit(0.0), (acc, x) => acc + x)
     val scored = encoded.crossJoin(q)
       .filter(col("id") =!= col("query_id"))
-      .withColumn("score", adcDot / (col("__qn__") * col("rnorm")))
+      .withColumn("score", adcDot(books) / (col("__qn__") * col("rnorm")))
       .select(col("query_id"), col("id").as("neighbor_id"), col("score"))
-    scored.groupBy("query_id")
-      .agg(graft.functions.TopKAgg.topK(k, col("score"),
-        col("neighbor_id").cast("double"),
-        struct(col("neighbor_id"), col("score"))).as("__top__"))
-      .select(col("query_id"), posexplode(col("__top__")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("col.neighbor_id").as("neighbor_id"), col("col.score").as("score"))
+    Similarity.topKPerQuery(scored, k)
+  }
+
+  /** Exact cosine top-k over (query_id, neighbor_id) candidates: only the
+    * candidates' full vectors are read.
+    */
+  private def exactRefine(cand: DataFrame, data: DataFrame, queries: DataFrame,
+                          idCol: String, vecCol: String, k: Int): DataFrame = {
+    val full = data.select(col(idCol).as("neighbor_id"),
+      col(vecCol).cast("array<double>").as("__nv__"))
+    val q = broadcast(queries.select(col(idCol).as("query_id"),
+      col(vecCol).cast("array<double>").as("__qv__")))
+    val rescored = cand.join(full, "neighbor_id").join(q, "query_id")
+      .withColumn("score",
+        graft.functions.VectorExprs.dot(col("__nv__"), col("__qv__")) /
+          (graft.functions.VectorExprs.norm(col("__nv__")) *
+            graft.functions.VectorExprs.norm(col("__qv__"))))
+      .select(col("query_id"), col("neighbor_id"), col("score"))
+    Similarity.topKPerQuery(rescored, k)
   }
 
   /** The composed IVF+PQ index (FAISS `IVFx,PQy`): coarse k-means cells
@@ -197,9 +222,6 @@ object Pq {
                 k: Int, nProbe: Int, shortlist: Int = 50): DataFrame = {
     val spark = data.sparkSession
     import spark.implicits._
-    val m = books.size
-    val kk = books.head.length
-    val sd = books.head.head.length
     // compressed, cell-partitioned index: (cell, id, codes, rnorm)
     val index = IvfIndex.assign(data, idCol, vecCol, centroids)
       .join(encode(data, idCol, vecCol, books), "id")
@@ -211,37 +233,21 @@ object Pq {
       .select(col(idCol).cast("long").as("qid"), col(vecCol).cast("array<double>").as("qv"))
       .collect()
       .map { r =>
-        val qid = r.getLong(0)
         val qv = r.getSeq[Double](1).toArray
-        val table = new Array[Double](m * kk)
-        var mm = 0
-        while (mm < m) {
-          var j = 0
-          while (j < kk) {
-            val c = books(mm)(j); var s = 0.0; var i = 0
-            while (i < sd) { s += qv(mm * sd + i) * c(i); i += 1 }
-            table(mm * kk + j) = s; j += 1
-          }
-          mm += 1
-        }
-        var qn = 0.0; qv.foreach(x => qn += x * x)
+        val (table, qn) = adcTable(qv, books)
         val probed = cents.map { case (cid, c) =>
           var d = 0.0; var i = 0
           while (i < c.length) { val t = qv(i) - c(i); d += t * t; i += 1 }
           (d, cid)
         }.sortBy(identity).take(math.min(nProbe, cents.length)).map(_._2)
-        (qid, table, math.sqrt(qn), probed)
+        (r.getLong(0), table, qn, probed)
       }.toSeq
     val q = broadcast(qRows.toDF("query_id", "__tbl__", "__qn__", "__cells__")
       .select(col("query_id"), col("__tbl__"), col("__qn__"),
         explode(col("__cells__")).as("cell")))
-    val adcDot = aggregate(
-      zip_with(col("codes"), sequence(lit(0), lit(m - 1)),
-        (code, mm) => element_at(col("__tbl__"), mm * kk + code + 1)),
-      lit(0.0), (acc, x) => acc + x)
     val scored = index.join(q, Seq("cell"))
       .filter(col("id") =!= col("query_id"))
-      .withColumn("score", adcDot / (col("__qn__") * col("rnorm")))
+      .withColumn("score", adcDot(books) / (col("__qn__") * col("rnorm")))
       .select(col("query_id"), col("id").as("neighbor_id"), col("score"))
     val cand = scored.groupBy("query_id")
       .agg(graft.functions.TopKAgg.topK(shortlist, col("score"),
@@ -249,24 +255,7 @@ object Pq {
         struct(col("neighbor_id"), col("score"))).as("__top__"))
       .select(col("query_id"), explode(col("__top__")).as("c"))
       .select(col("query_id"), col("c.neighbor_id").as("neighbor_id"))
-    // exact refine of the shortlist
-    val full = data.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("__nv__"))
-    val qv = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("__qv__")))
-    val rescored = cand.join(full, "neighbor_id").join(qv, "query_id")
-      .withColumn("score",
-        graft.functions.VectorExprs.dot(col("__nv__"), col("__qv__")) /
-          (graft.functions.VectorExprs.norm(col("__nv__")) *
-            graft.functions.VectorExprs.norm(col("__qv__"))))
-      .select(col("query_id"), col("neighbor_id"), col("score"))
-    rescored.groupBy("query_id")
-      .agg(graft.functions.TopKAgg.topK(k, col("score"),
-        col("neighbor_id").cast("double"),
-        struct(col("neighbor_id"), col("score"))).as("__top__"))
-      .select(col("query_id"), posexplode(col("__top__")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("col.neighbor_id").as("neighbor_id"), col("col.score").as("score"))
+    exactRefine(cand, data, queries, idCol, vecCol, k)
   }
 
   /** ADC shortlist + exact re-rank (the FAISS `IVFPQ,Refine` shape):
@@ -280,22 +269,6 @@ object Pq {
                   k: Int, shortlist: Int = 50): DataFrame = {
     val cand = adcTopK(encoded, queries, idCol, vecCol, books, shortlist)
       .select(col("query_id"), col("neighbor_id"))
-    val full = data.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("__nv__"))
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("__qv__")))
-    val rescored = cand.join(full, "neighbor_id").join(q, "query_id")
-      .withColumn("score",
-        graft.functions.VectorExprs.dot(col("__nv__"), col("__qv__")) /
-          (graft.functions.VectorExprs.norm(col("__nv__")) *
-            graft.functions.VectorExprs.norm(col("__qv__"))))
-      .select(col("query_id"), col("neighbor_id"), col("score"))
-    rescored.groupBy("query_id")
-      .agg(graft.functions.TopKAgg.topK(k, col("score"),
-        col("neighbor_id").cast("double"),
-        struct(col("neighbor_id"), col("score"))).as("__top__"))
-      .select(col("query_id"), posexplode(col("__top__")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("col.neighbor_id").as("neighbor_id"), col("col.score").as("score"))
+    exactRefine(cand, data, queries, idCol, vecCol, k)
   }
 }

@@ -62,7 +62,7 @@ object Similarity {
     * rank window would shuffle EVERY scored pair (|data| × |queries| rows
     * for the brute-force scorer) just to discard all but k.
     */
-  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
+  private[ext] def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
     scored.groupBy("query_id")
       .agg(graft.functions.TopKAgg.topK(k, col("score"),
         col("neighbor_id").cast("double"),

@@ -17,7 +17,8 @@ package graft
   * `udf(` is not baselined: it is an unconditional zero (a Scala UDF in
   * the hot path forfeits codegen — the repo's native-Expression doctrine).
   * Neither is `SparkSession.builder()` outside `graft/Session.scala`: every
-  * driver, tool and test session starts from `graft.Session`.
+  * driver, tool and test session starts from `graft.Session`. Nor are the
+  * media codec entry points: each is called once, in `ext/Multimodal.scala`.
   */
 class SourceDisciplineSpec extends SparkSpec {
 
@@ -37,23 +38,31 @@ class SourceDisciplineSpec extends SparkSpec {
     if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
     else if (f.getName.endsWith(".scala")) Seq(f) else Nil
 
+  private def read(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
+  private def rel(f: java.io.File): String = f.getPath.replace('\\', '/')
+
+  /** The lines of `text` that are not `//` or scaladoc/block comment lines. */
+  private def codeLines(text: String): Iterator[String] =
+    text.linesIterator.filterNot(_.trim.matches("""(//|/?\*).*"""))
+
   test("driver-side construct counts do not grow past the committed baseline") {
     val counts = scala.collection.immutable.TreeMap.newBuilder[String, Int]
     var udfHits = List.empty[String]
     var builderHits = List.empty[String]
     scalaFiles(root).foreach { f =>
-      val text = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      val rel = f.getPath.replace('\\', '/')
+      val text = read(f)
+      val path = rel(f)
       patterns.foreach { case (label, re) =>
         val n = re.findAllMatchIn(text).size
-        if (n > 0) counts += s"$rel#$label" -> n
+        if (n > 0) counts += s"$path#$label" -> n
       }
       if ("""(?<![.\w])udf\(""".r.findFirstIn(text).isDefined)
-        udfHits ::= rel
-      val code = text.linesIterator.filterNot(_.trim.matches("""(//|/?\*).*"""))
-      if (!rel.endsWith("graft/Session.scala") && code.exists(_.contains("SparkSession.builder()")))
-        builderHits ::= rel
+        udfHits ::= path
+      if (!path.endsWith("graft/Session.scala") &&
+        codeLines(text).exists(_.contains("SparkSession.builder()")))
+        builderHits ::= path
     }
     assert(udfHits.isEmpty,
       s"Scala udf() forfeits codegen — use a native Expression: $udfHits")
@@ -81,6 +90,23 @@ class SourceDisciplineSpec extends SparkSpec {
         "driver-side construct count grew — argue boundedness in the commit " +
           "and regen with GRAFT_REGEN_DISCIPLINE_BASELINE=1: " +
           grew.mkString(", "))
+    }
+  }
+
+  test("each media codec entry point is called exactly once, in ext/Multimodal.scala") {
+    // one image decoder, one image encoder, one audio-reader loop: a
+    // second call site is a second copy of a codec step
+    val entryPoints = Seq("ImageIO.read(", "ImageIO.write(", "getAudioInputStream(")
+    val home = "src/main/scala/graft/ext/Multimodal.scala"
+    val files = scalaFiles(root).map(f => rel(f) -> codeLines(read(f)).toList)
+    entryPoints.foreach { call =>
+      val sites = for {
+        (path, lines) <- files
+        line <- lines
+        _ <- 1 until line.split(java.util.regex.Pattern.quote(call), -1).length
+      } yield path
+      assert(sites == Seq(home),
+        s"$call must appear once, in $home; found at: ${sites.mkString(", ")}")
     }
   }
 }
