@@ -403,15 +403,17 @@ object Multimodal {
     catch { case _: Exception => None }
 
   /** Container-format sniff from magic bytes — real logic (PNG/JPEG/RIFF/
-    * PDF/GZIP), pure Column expression.
+    * AU/AIFF/PDF/GZIP), pure Column expression.
     */
   def sniffFormat(content: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val magic8 = upper(hex(substring(content, 1, 4)))
+    val form8 = upper(hex(substring(content, 9, 4)))
     when(magic8.startsWith("89504E47"), "png")
       .when(magic8.startsWith("FFD8"), "jpeg")
-      .when(magic8.startsWith("52494646") &&
-        upper(hex(substring(content, 9, 4))) === "57415645", "wav")
+      .when(magic8.startsWith("52494646") && form8 === "57415645", "wav")
       .when(magic8.startsWith("52494646"), "riff")
+      .when(magic8.startsWith("2E736E64"), "au")
+      .when(magic8.startsWith("464F524D") && form8.isin("41494646", "41494643"), "aiff")
       .when(magic8.startsWith("47494638"), "gif")
       .when(magic8.startsWith("424D"), "bmp")
       .when(magic8.startsWith("25504446"), "pdf")
@@ -481,7 +483,7 @@ object Multimodal {
               val (w, h, _) = decodeStub(bytes)
               DecodedMedia(rec.media_id, fmt, w, h, 0, 0L, -1L)
           }
-        case "wav" =>
+        case "wav" | "au" | "aiff" =>
           decodeAudio(bytes) match {
             case Some((rate, frames, sum)) =>
               DecodedMedia(rec.media_id, fmt, 0, 0, rate, frames, sum)
@@ -497,7 +499,7 @@ object Multimodal {
   }
 
   /** Decode/feature-extract metadata WITHOUT touching pixel data: container
-    * headers (PNG IHDR, JPEG SOF, GIF, BMP, WAV fmt) parsed directly from
+    * headers (PNG IHDR, JPEG SOF, GIF, BMP, WAV fmt, AU) parsed directly from
     * the bytes. The cheap path when only dimensions/rates are needed — at
     * 100 TB you never run a full decoder to learn a width. Unrecognized
     * payloads get stub values.
@@ -519,6 +521,9 @@ object Multimodal {
     else if (b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
       b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E') "wav"
     else if (b.length >= 4 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F') "riff"
+    else if (b.length >= 4 && b(0) == '.' && b(1) == 's' && b(2) == 'n' && b(3) == 'd') "au"
+    else if (b.length >= 12 && b(0) == 'F' && b(1) == 'O' && b(2) == 'R' && b(3) == 'M' &&
+      b(8) == 'A' && b(9) == 'I' && b(10) == 'F' && (b(11) == 'F' || b(11) == 'C')) "aiff"
     else if (b.length >= 6 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8') "gif"
     else if (b.length >= 2 && b(0) == 'B' && b(1) == 'M') "bmp"
     else if (b.length >= 4 && b(0) == '%' && b(1) == 'P' && b(2) == 'D' && b(3) == 'F') "pdf"
@@ -539,7 +544,8 @@ object Multimodal {
   /** REAL container-header parsing — (width, height, sampleRate) from the
     * actual bytes, zero codecs: PNG IHDR (big-endian dims at offset 16),
     * JPEG SOFn marker scan, GIF logical screen descriptor, BMP info
-    * header, WAV fmt chunk scan. Returns None for unrecognized payloads.
+    * header, WAV fmt chunk scan, AU header. Returns None for unrecognized
+    * payloads (and for AIFF, whose rate is an 80-bit float).
     */
   private[ext] def parseHeader(b: Array[Byte]): Option[(Int, Int, Int)] =
     sniffName(b) match {
@@ -572,6 +578,10 @@ object Multimodal {
         Some((le16(b, 6), le16(b, 8), 0))
       case "bmp" if b.length >= 26 =>
         Some((le32(b, 18), le32(b, 22), 0))
+      case "au" if b.length >= 20 =>
+        // .snd header: magic, data offset, data size, encoding, then the
+        // sample rate as a big-endian 32-bit word
+        Some((0, 0, be32(b, 16)))
       case "wav" =>
         // walk RIFF chunks for "fmt ": [id 4B][size 4B LE][data…];
         // sample rate is 4B LE at fmt data offset 4

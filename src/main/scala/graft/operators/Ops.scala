@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** One entry point per operation. Every operation is a pure
   * DataFrame → DataFrame transform: nothing here triggers an action, so a
@@ -235,7 +236,7 @@ object Ops {
       } else r
     }
 
-    val rightSide = if (shouldBroadcast(spark, op, inputs)) broadcast(renamed) else renamed
+    val rightSide = if (shouldBroadcast(op, inputs)) broadcast(renamed) else renamed
 
     op.how match {
       case "cross" =>
@@ -266,10 +267,10 @@ object Ops {
   /** Broadcast when the right side is provably small: a local file under
     * the auto-broadcast threshold. At cluster scale the same rule applies
     * per-file via the FS; unknown sizes fall through to AQE's runtime
-    * broadcast decision.
+    * broadcast decision. `AgentApi` reads it too: a broadcast bind streams
+    * its left side in order.
     */
-  private def shouldBroadcast(spark: SparkSession, op: Bind,
-                              inputs: Map[String, FileDef]): Boolean = {
+  private[graft] def shouldBroadcast(op: Bind, inputs: Map[String, FileDef]): Boolean = {
     val path = inputs.get(op.rightFilePath).map(_.path).getOrElse(op.rightFilePath)
     val threshold = 64L * 1024 * 1024
     try {
@@ -277,7 +278,7 @@ object Ops {
       if (f.isFile) f.length < threshold
       else if (f.isDirectory) f.listFiles().map(_.length).sum < threshold
       else false
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
   }
 
   // --------------------------------------------------------------- 10 fold
@@ -322,38 +323,52 @@ object Ops {
     * first-appearance order of the keys (Polars parity; Spark sorts unless
     * the key list is passed explicitly).
     *
-    * Scale note: the distinct-key discovery is one small aggregation over
-    * the key column only (column-pruned scan); Spark's own pivot would run
-    * the same job internally. `first` is order-sensitive — at scale callers
-    * needing determinism should ensure (index,key) uniqueness upstream
+    * Scale note: key discovery is not cheap. Its eager `localCheckpoint`
+    * runs the whole upstream flow (scans, binds, everything before the
+    * unfold) once and keeps the result in executor blocks; the key
+    * aggregation and its driver `collect` then run over that snapshot, and
+    * the pivot reads it again. `AgentApi` skips all of it where the plan
+    * proves the keys (a fold's key column over a non-empty input) and
+    * passes them as `staticKeys`: the pivot is then the only pass over the
+    * input. `first` is order-sensitive — at scale callers needing
+    * determinism should ensure (index,key) uniqueness upstream
     * (DistinctOp), exactly as with the reference.
     */
-  def unfold(df: DataFrame, op: Unfold): DataFrame = {
+  def unfold(df: DataFrame, op: Unfold): DataFrame = unfold(df, op, None)
+
+  /** `staticKeys`: the key column's values in first-appearance order, as
+    * the caller proved them; None discovers them from the data.
+    */
+  private[graft] def unfold(df: DataFrame, op: Unfold, staticKeys: Option[Seq[Any]]): DataFrame = {
     requireCols(df, op.indexColumns ++ Seq(op.keyColumn, op.valueColumn), "unfold")
-    // pivot needs the distinct keys up front, so the input runs twice
-    // (discovery + pivot); snapshot with an EAGER localCheckpoint so an
-    // expensive upstream (a whole pipeline) runs exactly once, and —
-    // unlike persist() — the blocks are released by the ContextCleaner as
-    // soon as the result frame becomes unreachable: a library user who
-    // never calls spark.catalog.clearCache() accumulates nothing.
-    // Guard the driver collect: a high-cardinality key column would both
-    // blow the driver and produce an unusable million-column frame.
+    // Guard the key list: a high-cardinality key column would both blow
+    // the driver and produce an unusable million-column frame.
     val maxKeys = graft.Knobs.positiveInt("graft.unfold.maxKeys",
       sys.props.get("graft.unfold.maxKeys"), 10000)
-    val cached = df.localCheckpoint()
-    val keysInOrder: Seq[Any] = cached
-      .select(col(op.keyColumn))
-      .withColumn("__rid__", monotonically_increasing_id())
-      .groupBy(col(op.keyColumn)).agg(min(col("__rid__")).as("__rid__"))
-      .orderBy(col("__rid__"))
-      .limit(maxKeys + 1)
-      .collect().map(_.get(0)).toSeq
+    val (input, keysInOrder) = staticKeys match {
+      case Some(keys) => (df, keys)
+      case None =>
+        // pivot needs the distinct keys up front, so the input runs twice
+        // (discovery + pivot); snapshot with an EAGER localCheckpoint so an
+        // expensive upstream (a whole pipeline) runs exactly once, and —
+        // unlike persist() — the blocks are released by the ContextCleaner
+        // as soon as the result frame becomes unreachable: a library user
+        // who never calls spark.catalog.clearCache() accumulates nothing.
+        val cached = df.localCheckpoint()
+        (cached, cached
+          .select(col(op.keyColumn))
+          .withColumn("__rid__", monotonically_increasing_id())
+          .groupBy(col(op.keyColumn)).agg(min(col("__rid__")).as("__rid__"))
+          .orderBy(col("__rid__"))
+          .limit(maxKeys + 1)
+          .collect().map(_.get(0)).toSeq)
+    }
     if (keysInOrder.size > maxKeys)
       throw new IllegalArgumentException(
         s"unfold: key column '${op.keyColumn}' has more than $maxKeys distinct values; " +
           s"pivoting would create that many columns — reduce cardinality upstream or raise " +
           s"-Dgraft.unfold.maxKeys")
-    cached.groupBy(op.indexColumns.map(col): _*)
+    input.groupBy(op.indexColumns.map(col): _*)
       .pivot(op.keyColumn, keysInOrder)
       .agg(first(col(op.valueColumn), ignoreNulls = false))
   }

@@ -3,6 +3,9 @@ package graft.plans
 import graft.operators.Ops
 import graft.sources.{Sink, Source}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Attribute, IntegerLiteral, InterpretedProjection, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, Limit, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.apache.spark.sql.types._
 
@@ -92,20 +95,35 @@ object SchemaValidator {
   * frame and shows the model `head(3)` of the result (main.py:136-137, 255).
   * Here every frame stays lazy, and each trial remembers the `sampleRows`
   * rows it collected, weakly keyed by the identity of the frame it returned
-  * (no frame is retained):
+  * (no frame is retained). On a frame with remembered rows, a step whose
+  * first rows follow, in order, from its input's first rows is evaluated on
+  * those rows alone:
   *   - a row-local step (one deterministic `withColumn`: equality,
   *     concatenation, application, switching, assignation, casting,
-  *     arithmetic, comparison) on a frame with remembered rows is evaluated
-  *     on those rows alone. Catalyst folds a projection over a
-  *     `LocalRelation` at optimization time, so the step starts no Spark job.
-  *     This equals the full-frame head because head(f(df)) = f(head(df)) for
-  *     a 1:1 deterministic projection;
-  *   - every other step (bind, fold, unfold, the extended ops, a frame with
-  *     no remembered rows, a nondeterministic plan) runs one bounded
-  *     `limit(sampleRows)` job over the whole lazy plan;
-  *   - `sampleJson` serves a trial's rows without starting a job.
-  * Either way the step is first built on the full lazy frame, so analysis
-  * errors surface exactly as in a pipeline run.
+  *     arithmetic, comparison). head(f(df)) = f(head(df)) for a 1:1
+  *     deterministic projection, and Catalyst folds a projection over a
+  *     `LocalRelation` at optimization time, so it starts no Spark job;
+  *   - a fold. It is a per-row `Expand` that emits each input row's melted
+  *     rows in place, so the first rows of fold(head) are the full plan's
+  *     first rows. Its projections are evaluated on the driver: no job;
+  *   - a left or inner bind whose right side `Ops.shouldBroadcast` accepts.
+  *     The full plan is then a broadcast hash join that streams its left
+  *     side in order, so the head joined with the same right side gives the
+  *     same first rows in the same order, matches of a duplicate right key
+  *     included (both plans build the same hash relation from the same
+  *     right input). It runs the join's jobs over the right input, not over
+  *     the lazy prefix. An inner bind whose head matches fewer than
+  *     `sampleRows` rows proves nothing about the rows after the head, and
+  *     takes the full path.
+  * An unfold on a frame with remembered, non-empty rows whose key column is
+  * a fold's literal key (see [[foldKeys]]) pivots on the fold's value
+  * column names directly: no eager `localCheckpoint` and no key `collect`,
+  * only the trial's job. Every other step (cross and outer binds, a bind
+  * that is not broadcast, the extended ops, a frame with no remembered
+  * rows, a nondeterministic plan) runs one bounded `limit(sampleRows)` job
+  * over the whole lazy plan, and `sampleJson` serves a trial's rows without
+  * starting a job. Either way the step is first built on the full lazy
+  * frame, so analysis errors surface exactly as in a pipeline run.
   */
 object AgentApi {
 
@@ -125,31 +143,83 @@ object AgentApi {
   private def headOf(df: DataFrame, n: Int): Option[Array[Row]] =
     Option(heads.get(df)).flatMap(_.take(n))
 
-  private def rowLocal(op: Operation): Boolean = op match {
+  /** Whether a step's first rows follow, in order, from its input's first
+    * rows: a row-local step, a fold, or a broadcast left or inner bind (the
+    * cost model above).
+    */
+  private def headOrdered(op: Operation, inputs: Map[String, FileDef]): Boolean = op match {
     case _: Equality | _: Concatenation | _: Application | _: Switching |
-         _: Assignation | _: Casting | _: Arithmetic | _: Comparison => true
+         _: Assignation | _: Casting | _: Arithmetic | _: Comparison | _: Fold => true
+    case b: Bind => (b.how == "left" || b.how == "inner") && Ops.shouldBroadcast(b, inputs)
     case _ => false
   }
 
   private def localFrame(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
+  /** A trial's rows. Catalyst folds projections over local rows, but not a
+    * fold's `Expand`; its projections are evaluated here, on the driver, so
+    * a fold on a head starts no job either.
+    */
+  private def collectTrial(trial: DataFrame): Array[Row] = trial.queryExecution.optimizedPlan match {
+    case Limit(IntegerLiteral(n), Expand(projections, _, local: LocalRelation)) =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(trial.schema)
+      val expand = projections.map(new InterpretedProjection(_, local.output))
+      local.data.iterator.flatMap(r => expand.iterator.map(p => toRow(p(r)).asInstanceOf[Row]))
+        .take(n).toArray
+    case _ => trial.collect()
+  }
+
+  /** The values of `key` in first-appearance order, when the plan proves
+    * them: `key` is filled by a fold's `Expand` with a non-null literal in
+    * every projection, and only pass-through projections sit above it. Each
+    * input row of the fold then yields every key, in projection order, so
+    * on a non-empty frame that order is the first-appearance order.
+    */
+  private def foldKeys(df: DataFrame, key: String): Option[Seq[Any]] = {
+    def keys(plan: LogicalPlan, a: Attribute): Option[Seq[Any]] = plan match {
+      case Project(list, child) if list.exists {
+        case b: Attribute => b.exprId == a.exprId
+        case _ => false
+      } => keys(child, a)
+      case Expand(projections, output, _) =>
+        val i = output.indexWhere(_.exprId == a.exprId)
+        val lits = if (i < 0) Nil else projections.map(_(i)).collect {
+          case Literal(v, t) if v != null => CatalystTypeConverters.convertToScala(v, t)
+        }
+        if (i >= 0 && lits.size == projections.size) Some(lits.distinct) else None
+      case _ => None
+    }
+    val plan = df.queryExecution.analyzed
+    plan.output.filter(_.name == key) match {
+      case Seq(a) => keys(plan, a)
+      case _ => None
+    }
+  }
+
   /** Trial-apply one op (the reference's trial execution, main.py:255):
     * analysis on the full lazy frame plus a run over at most `sampleRows`
-    * rows to surface runtime errors — on the previous trial's rows for a
-    * row-local op, else one bounded job. Left = failure text to feed back
-    * to the generator, never empty.
+    * rows to surface runtime errors — on the previous trial's rows where
+    * the step's first rows follow from them, else one bounded job.
+    * Left = failure text to feed back to the generator, never empty.
     */
   def tryApply(spark: SparkSession, df: DataFrame, op: Operation,
                inputs: Map[String, FileDef], sampleRows: Int = 3): Either[String, DataFrame] =
     try {
-      val next = Ops.applyOp(spark, df, op, inputs)
-      val trial = headOf(df, sampleRows) match {
-        case Some(base) if rowLocal(op) && next.queryExecution.analyzed.deterministic =>
-          Ops.applyOp(spark, localFrame(spark, base, df.schema), op, inputs)
-        case _ => next.limit(sampleRows)
+      val base = headOf(df, sampleRows)
+      val next = (op, base) match {
+        // a non-empty head proves the pivot sees every fold key
+        case (u: Unfold, Some(rows)) if rows.nonEmpty => Ops.unfold(df, u, foldKeys(df, u.keyColumn))
+        case _ => Ops.applyOp(spark, df, op, inputs)
       }
-      heads.put(next, Head(sampleRows, trial.collect()))
+      val onHead = base
+        .filter(_ => headOrdered(op, inputs) && next.queryExecution.analyzed.deterministic)
+        .map(rows => collectTrial(
+          Ops.applyOp(spark, localFrame(spark, rows, df.schema), op, inputs).limit(sampleRows)))
+        // fewer rows than asked from a head that is not the whole frame
+        // (an inner bind with few matches) says nothing of the rows after it
+        .filter(_.length == sampleRows || base.exists(_.length < sampleRows))
+      heads.put(next, Head(sampleRows, onHead.getOrElse(collectTrial(next.limit(sampleRows)))))
       Right(next)
     } catch { case e: Exception => Left(feedback(e)) }
 

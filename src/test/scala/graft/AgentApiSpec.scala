@@ -2,7 +2,9 @@ package graft
 
 import graft.operators.Ops
 import graft.plans._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{lit, rand}
 
 /** The three primitives the external LLM flow-generation loop consumes
@@ -135,6 +137,131 @@ class AgentApiSpec extends SparkSpec {
     }
     assert(trial(spark.range(6).toDF("id").withColumn("r", lit(0.5))) == 0)
     assert(trial(spark.range(6).toDF("id").withColumn("r", rand(7))) > 0)
+  }
+
+  /** Jobs, SQL executions (actions) and task input rows started while
+    * `body` runs; a job outside any execution counts as one.
+    */
+  private final case class Work(jobs: Int, executions: Int, rowsRead: Long)
+
+  private def workDuring[T](body: => T): (T, Work) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val rows = new java.util.concurrent.atomic.AtomicLong()
+    val out = listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .getOrElse(s"job ${e.jobId}"))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => rows.addAndGet(m.inputMetrics.recordsRead))
+    })(body)
+    val ids = jobs.toArray.toSeq
+    (out, Work(ids.size, ids.distinct.size, rows.get))
+  }
+
+  /** Replays `chain` from `base` through tryApply. The last step's schema
+    * and 3-row sample must equal those of the same prefix applied op by op;
+    * returns its frame and the work its tryApply and sampleJson started.
+    */
+  private def lastStep(base: DataFrame, chain: Seq[Operation]): (DataFrame, Work) = {
+    val before = chain.init.foldLeft(base)((df, op) => applied(AgentApi.tryApply(spark, df, op, Map.empty)))
+    val ((next, sample), work) = workDuring {
+      val next = applied(AgentApi.tryApply(spark, before, chain.last, Map.empty))
+      (next, AgentApi.sampleJson(next, 3))
+    }
+    val full = chain.foldLeft(base)((acc, op) => Ops.applyOp(spark, acc, op, Map.empty))
+    assert(next.schema == full.schema, chain.last.opType)
+    assert(sample == fullSample(full, 3), chain.last.opType)
+    (next, work)
+  }
+
+  private def checkpointed(df: DataFrame): Boolean =
+    df.queryExecution.logical.collectLeaves().exists(_.isInstanceOf[LogicalRDD])
+
+  private def tempCsv(name: String, text: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory("agentapi")
+    dir.toFile.deleteOnExit()
+    val csv = dir.resolve(name)
+    java.nio.file.Files.write(csv, text.getBytes("UTF-8"))
+    csv.toFile.deleteOnExit()
+    csv.toString
+  }
+
+  /** `orders` read from a CSV file, so a trial that reads it shows in the
+    * task input rows.
+    */
+  private lazy val ordersCsv = {
+    val text = orders.collect().map(_.toSeq.mkString(",")).mkString(
+      orders.columns.mkString("", ",", "\n"), "\n", "\n")
+    graft.sources.Source.loadCsv(spark, tempCsv("orders.csv", text), Seq(
+      "order_id" -> SchemaType.Int64, "customer_id" -> SchemaType.Int64,
+      "unit_price" -> SchemaType.Str, "quantity" -> SchemaType.Int64, "order_date" -> SchemaType.Str))
+  }
+
+  /** A bind onto a customers CSV with the given data rows. */
+  private def bindOn(text: String, how: String): Bind =
+    Bind(tempCsv("customers.csv", "customer_id,country\n" + text),
+      Seq("customer_id" -> SchemaType.Int64, "country" -> SchemaType.Str),
+      "customer_id", "customer_id", how, Seq("country"))
+
+  private val seen = Equality("order_id", Some("seen"))
+  private val fold = Fold(Seq("order_id"), Seq("unit_price", "order_date"), "key", "value")
+  private val unfold = Unfold(Seq("order_id"), "key", "value")
+
+  test("a fold on a recorded head starts no job") {
+    val (_, work) = lastStep(orders, Seq(seen, fold))
+    assert(work.jobs == 0)
+  }
+
+  test("a broadcast left bind on a recorded head reads only the right side, duplicate keys in plan order") {
+    // the first order's customer 10 has four matches, more than the sample
+    val customers = "10,FR\n11,DE\n10,ES\n10,IT\n12,FR\n10,PT\n"
+    val (_, work) = lastStep(ordersCsv, Seq(seen, bindOn(customers, "left")))
+    assert(work.rowsRead == 6)
+  }
+
+  test("an inner bind whose head matches fewer rows than the sample takes the full path") {
+    // orders 1-3 are customers 10, 11 and 99; 99 has no match
+    val (_, work) = lastStep(ordersCsv, Seq(seen, bindOn("10,FR\n11,DE\n12,FR\n", "inner")))
+    assert(work.rowsRead > 3)
+    // with enough matches the inner bind stays on the head
+    val (_, matched) = lastStep(ordersCsv, Seq(seen, bindOn("10,FR\n11,DE\n99,FR\n", "inner")))
+    assert(matched.rowsRead == 3)
+  }
+
+  test("outer and cross binds take the full path") {
+    Seq("outer", "cross").foreach { how =>
+      val (_, work) = lastStep(ordersCsv, Seq(seen, bindOn("10,FR\n11,DE\n12,FR\n", how)))
+      assert(work.rowsRead > 3, how)
+    }
+  }
+
+  test("an unfold after a fold on a recorded head pivots on the fold's keys in one action") {
+    val (next, work) = lastStep(orders, Seq(seen, fold, unfold))
+    assert(work.executions == 1)
+    assert(!checkpointed(next))
+    assert(next.columns.toSeq == Seq("order_id", "unit_price", "order_date"))
+  }
+
+  test("an unfold after a fold over an empty input keeps discovery and its key-less schema") {
+    val (next, _) = lastStep(orders.filter(lit(false)), Seq(seen, fold, unfold))
+    assert(checkpointed(next))
+    assert(next.columns.toSeq == Seq("order_id"))
+  }
+
+  test("an unfold on a data key column keeps discovery") {
+    val (next, _) = lastStep(orders, Seq(seen, Unfold(Seq("customer_id"), "order_date", "quantity")))
+    assert(checkpointed(next))
+  }
+
+  test("the unfold key guard raises the same error on the fold's keys") {
+    val folded = Ops.applyOp(spark, orders, fold, Map.empty)
+    val recorded = applied(AgentApi.tryApply(spark,
+      applied(AgentApi.tryApply(spark, orders, seen, Map.empty)), fold, Map.empty))
+    System.setProperty("graft.unfold.maxKeys", "1")
+    try {
+      val expected = intercept[IllegalArgumentException](Ops.applyOp(spark, folded, unfold, Map.empty))
+      assert(AgentApi.tryApply(spark, recorded, unfold, Map.empty) == Left(expected.getMessage))
+    } finally System.clearProperty("graft.unfold.maxKeys")
   }
 
   test("feedback is never empty, even for exceptions without a message") {

@@ -83,6 +83,36 @@ class MultimodalCodecSpec extends graft.SparkSpec {
     assert(meta.sample_rate == 16000)
   }
 
+  test("audio decode: au and aiff round-trip recovers rate, frames and exact sample sum") {
+    // 16-bit big-endian mono PCM through the JDK's own AU and AIFF writers
+    def encode(kind: javax.sound.sampled.AudioFileFormat.Type, rate: Int, samples: Seq[Int]) = {
+      val data = samples.flatMap(v => Seq((v >> 8).toByte, v.toByte)).toArray
+      val fmt = new javax.sound.sampled.AudioFormat(rate.toFloat, 16, 1, true, true)
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.sound.sampled.AudioSystem.write(new javax.sound.sampled.AudioInputStream(
+        new java.io.ByteArrayInputStream(data), fmt, samples.length.toLong), kind, bos)
+      bos.toByteArray
+    }
+    val samples = (0 until 120).map(i => i * 211 % 4001 - 2000)
+    val media = mediaDf(Seq(
+      (1L, "audio/basic", encode(javax.sound.sampled.AudioFileFormat.Type.AU, 11025, samples)),
+      (2L, "audio/aiff", encode(javax.sound.sampled.AudioFileFormat.Type.AIFF, 22050, samples))))
+    val dec = Multimodal.decode(media).collect().map(d => d.media_id -> d).toMap
+    assert(dec(1L).format == "au" && dec(1L).sample_rate == 11025)
+    assert(dec(2L).format == "aiff" && dec(2L).sample_rate == 22050)
+    Seq(1L, 2L).foreach { id =>
+      assert(dec(id).n_samples == samples.size.toLong, s"media $id")
+      assert(dec(id).content_sum == samples.map(_.toLong).sum, s"media $id")
+    }
+    val meta = Multimodal.extractMeta(media).collect().map(m => m.media_id -> m).toMap
+    assert(meta(1L).format == "au" && meta(1L).sample_rate == 11025)
+    assert(meta(2L).format == "aiff")
+    // the Column sniff and the JVM sniff read the same table
+    val sniffed = media.select(col("media_id"), Multimodal.sniffFormat(col("content")))
+      .as[(Long, String)].collect().toMap
+    assert(sniffed == Map(1L -> "au", 2L -> "aiff"))
+  }
+
   test("jpeg header scan: 0xFF fill bytes skipped, stops at SOS/EOI") {
     // synthetic marker stream: SOI, fill bytes, then SOF0 with dims 640x480
     val h = 480; val w = 640
