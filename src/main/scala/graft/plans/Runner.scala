@@ -184,7 +184,7 @@ object AgentApi {
       } => keys(child, a)
       case Expand(projections, output, _) =>
         val i = output.indexWhere(_.exprId == a.exprId)
-        val lits = if (i < 0) Nil else projections.map(_(i)).collect {
+        val lits = projections.flatMap(_.lift(i)).collect {
           case Literal(v, t) if v != null => CatalystTypeConverters.convertToScala(v, t)
         }
         if (i >= 0 && lits.size == projections.size) Some(lits.distinct) else None

@@ -29,16 +29,7 @@ class AgentApiSpec extends SparkSpec {
     .toDF("order_id", "customer_id", "unit_price", "quantity", "order_date")
 
   /** A bind onto a small CSV of customers (customer 99 is absent → nulls). */
-  private lazy val bindCustomers: Bind = {
-    val dir = java.nio.file.Files.createTempDirectory("agentapi")
-    dir.toFile.deleteOnExit()
-    val csv = dir.resolve("customers.csv")
-    java.nio.file.Files.write(csv,
-      "customer_id,country\n10,FR\n11,DE\n12,FR\n".getBytes("UTF-8"))
-    csv.toFile.deleteOnExit()
-    Bind(csv.toString, Seq("customer_id" -> SchemaType.Int64, "country" -> SchemaType.Str),
-      "customer_id", "customer_id", "left", Seq("country"))
-  }
+  private lazy val bindCustomers: Bind = bindOn("10,FR\n11,DE\n12,FR\n", "left")
 
   private lazy val df = Seq((1L, "a", "2024-01-15"), (2L, "b", "not-a-date"))
     .toDF("id", "name", "d")
