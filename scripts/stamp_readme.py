@@ -8,8 +8,8 @@ Round-4 and round-5 both shipped stale hand-edited counts in README
              src/main/scala/graft/families/ (verified == the driver's
              CORRECTNESS key count)
   tests    — parsed from the last full `sbt test` log if gate.sh saved
-             one (target/test-summary.txt), else the stamp keeps the
-             previous value
+             one (target/test-summary.txt) and it is newer than every
+             file under src/, else the stamp keeps the previous value
   bench    — totals from target/bench-sf0.1.json (written by graft.Bench)
 
 Rewrites only the text between the STAMP:BEGIN / STAMP:END markers.
@@ -22,6 +22,7 @@ README = os.path.join(ROOT, "README.md")
 FAMILIES = os.path.join(ROOT, "src/main/scala/graft/families")
 TESTSUM = os.path.join(ROOT, "target/test-summary.txt")
 BENCH = os.path.join(ROOT, "target/bench-sf0.1.json")
+SRC = os.path.join(ROOT, "src")
 
 def query_count():
     n = 0
@@ -31,9 +32,17 @@ def query_count():
             n += len(re.findall(r'"[a-z0-9_]+" -> Query\(', src))
     return n
 
+def newest_src_mtime():
+    return max((os.path.getmtime(os.path.join(d, f))
+                for d, _, fs in os.walk(SRC) for f in fs), default=0.0)
+
 def test_counts():
-    """(suites, tests) from a saved `sbt test` log, or (None, None)."""
+    """(suites, tests) from a saved `sbt test` log, or (None, None) when
+    there is none or it predates a file under src/ (a log of another tree)."""
     if not os.path.exists(TESTSUM):
+        return None, None
+    if os.path.getmtime(TESTSUM) < newest_src_mtime():
+        print(f"[stamp] {os.path.relpath(TESTSUM, ROOT)} is older than src/ — test counts kept")
         return None, None
     log = open(TESTSUM, encoding="utf-8", errors="replace").read()
     mt = re.findall(r"Total number of tests run: (\d+)", log)

@@ -38,20 +38,13 @@ object RelationalQueries {
 
     "q_application_fallback" -> Query(
       """SELECT p_partkey, CASE WHEN p_size > 25 THEN repeat(string_split(p_name, ' ')[1], 2) ELSE CAST(length(p_name) AS VARCHAR) END AS p_dyn FROM part""")((s, dir) => {
-      // a DYNAMICALLY-typed lambda MiniLambda's static Column compiler
-      // rejects (mixed string/int conditional branches, string
-      // repetition): runs through the interpreted RowLambda fallback
-      // behind its explicit opt-in flag; result renders via Python str().
-      // The flag is read when the column is built, so it is set only for
-      // the build and restored after: the shared session never keeps it.
-      val flag = "spark.graft.application.fallback"
-      val prev = s.conf.getOption(flag)
-      s.conf.set(flag, "true")
-      val r = try Ops.application(T(s, dir, "part"),
+      // a mixed-type conditional on the Column path: the string and int
+      // branches unify to string, the int one rendered as Python str()
+      // would; the true branch is string repetition
+      val r = Ops.application(T(s, dir, "part"),
         Application(Seq("p_name", "p_size"),
           "lambda r: r['p_name'].split(' ')[0] * 2 if r['p_size'] > 25 else len(r['p_name'])",
           Some("p_dyn")))
-      finally prev.fold(s.conf.unset(flag))(s.conf.set(flag, _))
       r.select("p_partkey", "p_dyn")
     }),
 

@@ -6,20 +6,16 @@ import org.apache.spark.sql.types.StructType
 /** The one front end for the reference's `application` lambda strings
   * (Python syntax, e.g. `lambda r: r['unit_price'].replace('$', '')` —
   * reference application.py:19). A lambda is tokenized and parsed once,
-  * on the driver, into an [[LambdaSyntax.Ast]]; two backends consume it:
-  *   - [[MiniLambda]] lowers it to native Catalyst Columns (whole-stage
-  *     codegen, the default path);
-  *   - [[RowLambda]] interprets it per row, behind the explicit opt-in
-  *     `spark.graft.application.fallback=true`, for lambdas the lowering
-  *     rejects.
+  * on the driver, into an [[LambdaSyntax.Ast]], which [[MiniLambda]]
+  * lowers to native Catalyst Columns (whole-stage codegen).
   * A syntax error, a bad lambda parameter or an unknown column raises
-  * CompileError here, before either backend runs.
+  * CompileError here, before the lowering runs.
   */
 object LambdaSyntax {
 
   // ------------------------------------------------------------------ AST
 
-  sealed trait Ast extends Serializable
+  sealed trait Ast
   final case class Lit(v: Any) extends Ast
   final case class ColRef(name: String) extends Ast
   final case class Cond(c: Ast, t: Ast, f: Ast) extends Ast

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{LambdaSyntax, MiniLambda, RowLambda}
+import graft.functions.MiniLambda
 import graft.plans._
 import graft.sources.Source
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -87,30 +87,14 @@ object Ops {
     * expression stays inside whole-stage codegen). Reference:
     * application.py:5-33 (which eval's Python per row).
     *
-    * One parser, two backends: the lambda is parsed once (LambdaSyntax; a
-    * syntax error raises CompileError) and lowered to Columns
-    * (MiniLambda). Escape hatch (SURVEY §7.4): a lambda outside the
-    * lowerable surface raises CompileError by default (the LLM-loop
-    * feedback path) — unless `spark.graft.application.fallback=true`, in
-    * which case the same syntax tree runs through the interpreted per-row
-    * evaluator (RowLambda), trading whole-stage codegen for
-    * arbitrary-lambda coverage.
+    * The lambda is parsed once (LambdaSyntax) and lowered to Columns
+    * (MiniLambda), the one backend, with Python semantics as the contract.
+    * A syntax error, or a lambda outside the lowerable surface, raises
+    * CompileError: the LLM-loop feedback path.
     */
   def application(df: DataFrame, op: Application): DataFrame = {
     requireCols(df, op.inputColumns, "application")
-    val ast = LambdaSyntax.parse(op.functionStr, df.schema)
-    val compiled =
-      try MiniLambda.lowered(ast, df.schema)
-      catch {
-        case e: MiniLambda.CompileError =>
-          val allow = df.sparkSession.conf
-            .get("spark.graft.application.fallback", "false").toBoolean
-          if (!allow) throw MiniLambda.CompileError(
-            e.msg + " (set spark.graft.application.fallback=true to run " +
-              "out-of-surface lambdas via the interpreted row fallback)")
-          RowLambda.interpreted(ast, df.schema)
-      }
-    df.withColumn(out(op), compiled)
+    df.withColumn(out(op), MiniLambda.compile(op.functionStr, df.schema))
   }
 
   // ---------------------------------------------------------- 4 switching

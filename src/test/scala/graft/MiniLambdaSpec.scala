@@ -1,6 +1,8 @@
 package graft
 
 import graft.functions.MiniLambda
+import graft.operators.Ops
+import graft.plans.Application
 import org.apache.spark.sql.types._
 
 class MiniLambdaSpec extends SparkSpec {
@@ -13,6 +15,19 @@ class MiniLambdaSpec extends SparkSpec {
 
   private def evalOne[T](expr: String): Seq[Any] =
     base.select(MiniLambda.compile(expr, base.schema).as("r")).collect().map(_.get(0)).toSeq
+
+  /** Rows with a null string, an empty one, a zero and a null boolean,
+    * through `Ops.application` as a pipeline runs it.
+    */
+  private def df = Seq(
+    ("Alpha Beta Gamma", 5L, Some(true), "x", 7, 2.5),
+    ("single", 0L, Some(false), "", 0, Double.NaN),
+    ((null: String), 15L, None, "y", -3, 1e16)
+  ).toDF("name", "x", "b", "s", "i", "d")
+
+  private def run(fn: String, in: Seq[String] = Seq("name")) =
+    Ops.application(df, Application(in, fn, Some("out")))
+      .select("out").collect().map(r => Option(r.get(0))).toSeq
 
   test("replace strips characters literally (not regex)") {
     assert(evalOne("lambda r: r['price'].replace('$', '')") == Seq("1050.00", "25.50"))
@@ -157,5 +172,111 @@ class MiniLambdaSpec extends SparkSpec {
     assert(MiniLambda.inferType("lambda r: r['n'] / 2", base.schema) == DoubleType)
     assert(MiniLambda.inferType("lambda r: str(r['n'])", base.schema) == StringType)
     assert(MiniLambda.inferType("lambda r: r['n'] > 2", base.schema) == BooleanType)
+  }
+
+  test("an out-of-surface lambda raises CompileError whose message names no conf key") {
+    val e = intercept[MiniLambda.CompileError] {
+      run("lambda r: r['name'].casefold()")
+    }
+    assert(e.msg.contains("casefold") && !e.msg.contains("spark.graft"))
+  }
+
+  test("q_application_fallback builds on the default session and leaves its conf untouched") {
+    val before = spark.conf.getAll
+    val q = SparkEntry.queries("q_application_fallback")(spark, sf0001)
+    assert(spark.conf.getAll == before)
+    assert(q.limit(3).collect().length == 3)
+  }
+
+  test("truthy or-default and truthy and return an operand (value-returning)") {
+    assert(run("lambda r: r['s'] or 'default'", Seq("s")) ==
+      Seq(Some("x"), Some("default"), Some("y")))
+    assert(run("lambda r: r['s'] and 'seen'", Seq("s")) ==
+      Seq(Some("seen"), Some(""), Some("seen")))
+    // or-chains with mixed truthiness sources (long 0 is falsy)
+    assert(run("lambda r: r['x'] or 'zero'", Seq("x")) ==
+      Seq(Some("5"), Some("zero"), Some("15")))
+  }
+
+  test("string + non-string is a CompileError on the application path too") {
+    // a Python TypeError on every row: no lenient concatenation
+    intercept[MiniLambda.CompileError](run("lambda r: r['name'] + 1"))
+  }
+
+  test("in-surface python parity stays compiled: repetition, chained compare, find/count") {
+    assert(run("lambda r: r['s'] * 2", Seq("s")) == Seq(Some("xx"), Some(""), Some("yy")))
+    assert(run("lambda r: 0 < r['x'] < 10", Seq("x")) ==
+      Seq(Some(true), Some(false), Some(false)))
+    assert(run("lambda r: r['name'].find('Beta')") == Seq(Some(6L), Some(-1L), None))
+    assert(run("lambda r: r['name'].count('a')") == Seq(Some(4L), Some(0L), None))
+  }
+
+  test("application lambdas lower to native Columns: no interpreted expression in the plan") {
+    val out = Ops.application(df, Application(Seq("name"),
+      "lambda r: r['name'].replace(' ', '_').upper()", Some("out")))
+    assert(out.select("out").collect().map(r => Option(r.get(0))).toSeq ==
+      Seq(Some("ALPHA_BETA_GAMMA"), Some("SINGLE"), None))
+    assert(!out.queryExecution.analyzed.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback])))
+  }
+
+  test("not and bool() use Python truthiness on strings, numbers and None") {
+    assert(run("lambda r: not r['s']", Seq("s")) == Seq(Some(false), Some(true), Some(false)))
+    assert(run("lambda r: bool(r['s'])", Seq("s")) == Seq(Some(true), Some(false), Some(true)))
+    assert(run("lambda r: not r['x']", Seq("x")) == Seq(Some(false), Some(true), Some(false)))
+    assert(run("lambda r: bool(r['d'])", Seq("d")) == Seq(Some(true), Some(true), Some(true)))
+    // None is falsy: not None is True, bool(None) is False
+    assert(run("lambda r: not r['b']", Seq("b")) == Seq(Some(false), Some(true), Some(true)))
+    assert(run("lambda r: bool(r['name'])") == Seq(Some(true), Some(true), Some(false)))
+    assert(run("lambda r: 'yes' if r['s'] else 'no'", Seq("s")) ==
+      Seq(Some("yes"), Some("no"), Some("yes")))
+  }
+
+  test("str() renders bools, doubles, NaN, infinities and None as Python does") {
+    assert(run("lambda r: str(r['b'])", Seq("b")) == Seq(Some("True"), Some("False"), Some("None")))
+    assert(run("lambda r: str(r['d'])", Seq("d")) == Seq(Some("2.5"), Some("nan"), Some("1e+16")))
+    assert(evalOne("lambda r: str(1e-05) + str(0.0001) + str(100.0)") ==
+      Seq("1e-050.0001100.0", "1e-050.0001100.0"))
+    val inf = Seq(Double.PositiveInfinity, Double.NegativeInfinity, -0.0).toDF("v")
+    assert(inf.select(MiniLambda.compile("lambda r: str(r['v'])", inf.schema)).collect()
+      .map(_.getString(0)).toSeq == Seq("inf", "-inf", "-0.0"))
+    // str-unified branches render the same way
+    assert(run("lambda r: r['s'] if r['x'] > 10 else r['d']", Seq("s", "x", "d")) ==
+      Seq(Some("2.5"), Some("nan"), Some("y")))
+  }
+
+  test("int columns read as bigint: r['i'] if c else 0 stays integral") {
+    val out = Ops.application(df, Application(Seq("i", "x"),
+      "lambda r: r['i'] if r['x'] > 1 else 0", Some("out")))
+    assert(out.schema("out").dataType == LongType)
+    assert(out.select("out").collect().map(_.get(0)).toSeq == Seq(7L, 0L, -3L))
+    assert(run("lambda r: round(r['i'], 0)", Seq("i")) == Seq(Some(7L), Some(0L), Some(-3L)))
+  }
+
+  test("comparisons involving NaN and None follow Python") {
+    // NaN is unordered and unequal to everything, itself included
+    assert(run("lambda r: r['d'] > 1", Seq("d")) == Seq(Some(true), Some(false), Some(true)))
+    assert(run("lambda r: r['d'] <= 1e20", Seq("d")) == Seq(Some(true), Some(false), Some(true)))
+    assert(run("lambda r: r['d'] == r['d']", Seq("d")) == Seq(Some(true), Some(false), Some(true)))
+    assert(run("lambda r: r['d'] != r['d']", Seq("d")) == Seq(Some(false), Some(true), Some(false)))
+    // None == 'x' is False and None != 'x' is True; ordering None raises,
+    // which the engine propagates as null
+    assert(run("lambda r: r['name'] == 'single'") == Seq(Some(false), Some(true), Some(false)))
+    assert(run("lambda r: r['name'] != 'single'") == Seq(Some(true), Some(false), Some(true)))
+    assert(run("lambda r: r['name'] < 'b'") == Seq(Some(true), Some(false), None))
+  }
+
+  test("list literals, computed slices and out-of-range string indexes") {
+    assert(run("lambda r: r['s'] in ['x', 'y']", Seq("s")) == Seq(Some(true), Some(false), Some(true)))
+    assert(run("lambda r: r['name'] not in ['single']") == Seq(Some(true), Some(false), Some(true)))
+    assert(run("lambda r: '-'.join([r['s'], 'z'])", Seq("s")) == Seq(Some("x-z"), Some("-z"), Some("y-z")))
+    assert(run("lambda r: max([r['x'], 3, r['i']])", Seq("x", "i")) == Seq(Some(7L), Some(3L), Some(15L)))
+    assert(run("lambda r: r['name'][-3:-1]") == Seq(Some("mm"), Some("gl"), None))
+    assert(run("lambda r: r['name'][1:-1]") == Seq(Some("lpha Beta Gamm"), Some("ingl"), None))
+    assert(run("lambda r: r['name'][:r['x']]", Seq("name", "x")) ==
+      Seq(Some("Alpha"), Some(""), None))
+    assert(run("lambda r: r['name'][r['i']:]", Seq("name", "i")) ==
+      Seq(Some("eta Gamma"), Some("single"), None))
+    intercept[Exception](run("lambda r: r['s'][0]", Seq("s"))) // '' has no [0]: IndexError
   }
 }
