@@ -44,6 +44,7 @@ ROWS = [
 BUILTINS = {f: getattr(builtins, f)
             for f in ("str", "int", "float", "bool", "len", "abs", "round", "min", "max")}
 
+S, T, I, N, D, B = (f"r['{c}']" for c, _ in SCHEMA)
 STR_LITS = ["''", "'abc'", "'x'", "'ö'", "' - '", "'日本'", "'$'", "'42'", "'a'", "' '"]
 SEPS = ["' '", "'-'", "','", "'a'", "''", "'語'"]
 
@@ -70,7 +71,7 @@ class Gen:
 
     def g_str(self, d):
         if d <= 0 or self.r.random() < 0.25:
-            return self.pick(["r['s']", "r['s']", "r['t']"] + STR_LITS)
+            return self.pick([S, S, T] + STR_LITS)
         x = lambda: self.g_str(d - 1)
         k = self.r.randint(0, 22)
         if k == 0:
@@ -88,7 +89,7 @@ class Gen:
         if k == 8:
             return f"{x()} + {x()}"
         if k == 9:
-            return f"{x()} * {self.pick(['2', '0', '-1', 'r[' + repr('i') + ']', '3'])}"
+            return f"{x()} * {self.pick(['2', '0', '-1', I, '3'])}"
         if k in (10, 11):
             return f"str({self.g_any(d - 1)})"
         if k == 12:
@@ -120,9 +121,9 @@ class Gen:
         if k <= 3:
             return self.small_int()
         if k == 4:
-            return self.pick(["r['i']", "r['n']", "-r['i']"])
+            return self.pick([I, N, "-" + I])
         if k == 5:
-            return f"len({self.pick(['r[' + repr('s') + ']', 'r[' + repr('t') + ']'])}) - {self.r.randint(1, 4)}"
+            return f"len({self.pick([S, T])}) - {self.r.randint(1, 4)}"
         return f"{self.g_int(min(d - 1, 1))}"
 
     def g_list(self, d):
@@ -140,7 +141,7 @@ class Gen:
 
     def g_int(self, d):
         if d <= 0 or self.r.random() < 0.25:
-            return self.pick(["r['i']", "r['n']", "r['n']", self.small_int()])
+            return self.pick([I, N, N, self.small_int()])
         x = lambda: self.g_int(d - 1)
         k = self.r.randint(0, 16)
         if k == 0:
@@ -168,7 +169,7 @@ class Gen:
         if k == 12:
             return f"({x()} {self.pick(['or', 'and'])} {x()})"
         if k == 13:
-            return f"int({self.pick(['r[' + repr('s') + ']', 'r[' + repr('t') + ']', 'r[' + repr('b') + ']'])})"
+            return f"int({self.pick([S, T, B])})"
         if k == 14:
             return f"round({x()}, {self.r.randint(-2, 2)})"
         if k == 15:
@@ -177,7 +178,7 @@ class Gen:
 
     def g_float(self, d):
         if d <= 0 or self.r.random() < 0.25:
-            return self.pick(["r['d']", "r['d']", "0.5", "-0.0", "1e16", "1e-07", "2.675", "3.0", "0.1"])
+            return self.pick([D, D, "0.5", "-0.0", "1e16", "1e-07", "2.675", "3.0", "0.1"])
         x = lambda: self.g_float(d - 1)
         k = self.r.randint(0, 12)
         if k == 0:
@@ -199,14 +200,14 @@ class Gen:
         if k == 9:
             return f"{self.pick(['min', 'max'])}({x()}, {self.g_num(d - 1)})"
         if k == 10:
-            return f"float({self.pick(['r[' + repr('s') + ']', 'r[' + repr('t') + ']'])})"
+            return f"float({self.pick([S, T])})"
         if k == 11:
             return f"({x()} or {x()})"
         return f"float({self.g_float(d - 1)})"
 
     def g_bool(self, d):
         if d <= 0 or self.r.random() < 0.2:
-            return self.pick(["r['b']", "r['b']", "True", "False"])
+            return self.pick([B, B, "True", "False"])
         k = self.r.randint(0, 16)
         op = lambda: self.pick(["==", "!=", "<", ">", "<=", ">="])
         if k in (0, 1):

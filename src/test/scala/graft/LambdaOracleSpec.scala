@@ -7,6 +7,7 @@ import graft.functions.MiniLambda
 import graft.operators.Ops
 import graft.plans.Application
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
@@ -57,11 +58,7 @@ class LambdaOracleSpec extends SparkSpec {
     }
 
   private def collect(frame: DataFrame, cs: Seq[Case]): Seq[Seq[Any]] =
-    frame.select(cs.map(c => org.apache.spark.sql.functions.col(s"c${c.id}")): _*)
-      .collect().toSeq.map(_.toSeq).transpose match {
-      case Seq() => cs.map(_ => Seq.empty)
-      case t => t
-    }
+    frame.select(cs.map(c => col(s"c${c.id}")): _*).collect().toSeq.map(_.toSeq).transpose
 
   /** One select per batch; a batch that raises is rerun case by case. */
   private def run(cs: Seq[Case]): Map[Int, Outcome] = {
@@ -96,12 +93,12 @@ class LambdaOracleSpec extends SparkSpec {
 
   test("every lambda matches Python eval or a documented limit") {
     // cases Python raises on for some row run alone: the engine may raise too
-    val (raising, clean) = cases.partition(_.py.exists(p => p.has("err") && !p.get("none").asBoolean))
+    val (raising, clean) = cases.partition(_.py.exists(raises))
     val outcomes = clean.grouped(150).flatMap(run).toMap ++ raising.flatMap(c => run(Seq(c)))
     val found = cases.flatMap(c => divergences(c, rows, outcomes(c.id)))
     val (limited, unexplained) = found.partition(_.limit.isDefined)
     limited.groupBy(_.limit.get).toSeq.sortBy(_._1.name).foreach { case (l, ds) =>
-      info(f"limit ${l.name}%-20s ${ds.map(_.c.id).distinct.size}%3d lambdas, ${ds.size}%4d rows")
+      info(f"limit ${l.name}%-20s ${ds.map(_.c.id).distinct.size}%3d lambdas, ${ds.size}%4d rows: ${l.reason}")
     }
     assert(unexplained.isEmpty, unexplained.take(40).mkString("\n", "\n", "\n") +
       s"${unexplained.size} unexplained divergences in ${unexplained.map(_.c.id).distinct.size} lambdas")
@@ -124,8 +121,8 @@ object LambdaOracleSpec {
   final case class Divergence(c: Case, row: Option[Row], py: JsonNode, engine: Any) {
     lazy val limit: Option[Limit] = limits.find(_.applies(this))
     def pyErr(names: String*): Boolean =
-      py != null && py.has("err") && !py.get("none").asBoolean && names.contains(py.get("err").asText)
-    def onNone: Boolean = py != null && py.has("err") && py.get("none").asBoolean
+      py != null && raises(py) && names.contains(py.get("err").asText)
+    def onNone: Boolean = py != null && isErr(py) && !raises(py)
     def pyValue: Option[JsonNode] = Option(py).filterNot(_.has("err")).map(_.get("v"))
     def calls(fs: String*): Boolean = fs.exists(c.fn.contains)
     override def toString: String = s"#${c.id} ${c.fn}\n    " +
@@ -202,6 +199,9 @@ object LambdaOracleSpec {
 
   private def isErr(p: JsonNode) = p.has("err")
 
+  /** Python raised on this row, and not because of a None input. */
+  private def raises(p: JsonNode) = isErr(p) && !p.get("none").asBoolean
+
   private def show(p: JsonNode): String =
     if (isErr(p)) s"${p.get("err").asText}${if (p.get("none").asBoolean) " on None" else ""}"
     else p.get("v").toString
@@ -228,7 +228,7 @@ object LambdaOracleSpec {
   def divergences(c: Case, rows: Seq[Row], o: Outcome): Seq[Divergence] = o match {
     case Rejected(_) => if (c.py.forall(isErr)) Nil else Seq(Divergence(c, None, null, o))
     case Raised(_) =>
-      if (c.py.exists(p => isErr(p) && !p.get("none").asBoolean)) Nil
+      if (c.py.exists(raises)) Nil
       else Seq(Divergence(c, None, null, o))
     case Values(vs) =>
       c.py.zip(vs).zip(rows).collect {
