@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Generate the `application` lambda oracle corpus.
 
-    python3 scripts/lambda_oracle.py [--seed N] [--cases N] [--out PATH]
+    python3 scripts/lambda_oracle.py [--out PATH]
 
-Draws lambdas from the grammar `graft.functions.LambdaSyntax` parses (a
-typed random walk with a fixed seed, so the corpus is reproducible),
+Draws CASES lambdas from the grammar `graft.functions.LambdaSyntax` parses
+(a typed random walk with the fixed SEED, so the corpus is reproducible),
 evaluates each one with Python `eval` over a fixed set of rows under only
 the builtins LambdaSyntax accepts, and writes the rows, the lambdas and
 Python's per-row outcome as JSON (default:
@@ -28,6 +28,7 @@ DEFAULT_OUT = os.path.join(ROOT, "src", "test", "resources", "lambda_oracle.json
 SCHEMA = [("s", "string"), ("t", "string"), ("i", "int"), ("n", "long"),
           ("d", "double"), ("b", "boolean")]
 NAN, INF = float("nan"), float("inf")
+SEED, CASES = 20261019, 600
 ROWS = [
     ["Alpha Beta", "a", 3, 10, 2.5, True],
     ["", "", 0, 0, 0.0, False],
@@ -226,12 +227,15 @@ class Gen:
             return f"{self.g_bool(d - 1)} {self.pick(['and', 'or'])} {self.g_bool(d - 1)}"
         if k == 9:
             return f"{self.g_str(d - 1)} {self.pick(['in', 'not in'])} {self.g_str(d - 1)}"
-        if k == 10:
-            items = ", ".join(self.pick(STR_LITS) for _ in range(self.r.randint(1, 3)))
+        if k == 10:  # items of other types and columns too: `in` is ==
+            pool = STR_LITS + [S, T, "None", "42", "True"]
+            items = ", ".join(self.pick(pool) for _ in range(self.r.randint(1, 3)))
             return f"{self.g_str(d - 1)} {self.pick(['in', 'not in'])} [{items}]"
         if k == 11:
-            items = ", ".join(self.small_int() for _ in range(self.r.randint(1, 3)))
-            return f"{self.g_int(d - 1)} {self.pick(['in', 'not in'])} [{items}]"
+            item = lambda: self.pick([self.small_int(), self.small_int(), N, I, B, "'1'", "None", "3.0"])
+            items = ", ".join(item() for _ in range(self.r.randint(1, 3)))
+            x = self.pick([self.g_int(d - 1), self.g_int(d - 1), B])
+            return f"{x} {self.pick(['in', 'not in'])} [{items}]"
         if k == 12:
             return f"{self.g_any(d - 1)} is {self.pick(['None', 'not None'])}"
         if k == 13:
@@ -256,30 +260,31 @@ def outcome(fn, row):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--seed", type=int, default=20261019)
-    ap.add_argument("--cases", type=int, default=600)
     ap.add_argument("--out", default=DEFAULT_OUT)
     a = ap.parse_args()
-    rnd = random.Random(a.seed)
+    rnd = random.Random(SEED)
     gen = Gen(rnd)
     env = {"__builtins__": BUILTINS}
     warnings.simplefilter("ignore", SyntaxWarning)  # e.g. 1e16[1:] parses, then raises
     seen, cases = set(), []
     kinds = ["str", "int", "float", "bool", "any"]
-    while len(cases) < a.cases:
+    while len(cases) < CASES:
         src = "lambda r: " + gen.g(kinds[len(cases) % len(kinds)], rnd.randint(1, 3))
         if src in seen:
             continue
         seen.add(src)
-        fn = eval(src, env, {})
+        try:
+            fn = eval(src, env, {})
+        except SyntaxError:  # e.g. `s * -1.replace(..)`: not a lambda at all
+            continue
         cases.append({"id": len(cases), "fn": src, "py": [outcome(fn, row) for row in ROWS]})
-    doc = {"seed": a.seed, "schema": SCHEMA, "rows": ROWS, "cases": cases}
+    doc = {"seed": SEED, "schema": SCHEMA, "rows": ROWS, "cases": cases}
     dump = lambda x: json.dumps(x, ensure_ascii=False, separators=(",", ":"))
     with open(a.out, "w", encoding="utf-8") as f:  # one case per line
         f.write("{" + ",\n".join(f"{dump(k)}:{dump(v)}" for k, v in doc.items() if k != "cases"))
         f.write(',\n"cases":[\n' + ",\n".join(dump(c) for c in cases) + "\n]}\n")
     errs = sum(1 for c in cases if any("err" in o for o in c["py"]))
-    print(f"[oracle] seed {a.seed}: {len(cases)} lambdas x {len(ROWS)} rows "
+    print(f"[oracle] seed {SEED}: {len(cases)} lambdas x {len(ROWS)} rows "
           f"({errs} raise on some row) -> {os.path.relpath(a.out, ROOT)}")
 
 

@@ -93,8 +93,10 @@ object MiniLambda {
       case InOp(item, coll, negated) => // 'x' in s → substring; x in list → membership
         val l = go(item)
         val c = coll match {
-          // Python `in` on a list is ==, so None is in no list of values
-          case ListLit(items) => coalesce(l.col.isin(items.map(go(_).col): _*), lit(false))
+          // Python `in` on a list is `==` against each item: a str never
+          // equals a number, and None equals only None
+          case ListLit(items) =>
+            items.map(i => compare("==", l, go(i)).col).reduceOption(_ || _).getOrElse(lit(false))
           case _ =>
             val r = go(coll)
             r.dt match {
@@ -121,12 +123,12 @@ object MiniLambda {
       case Method(t, name, args) => applyMethod(t, go(t), name, args, args.map(go))
       case Index(ListLit(items), i) => // [a, b][i]: the item, picked on the driver
         val n = intLit(i).getOrElse(throw CompileError(s"expected integer list index, got $i"))
-        go(items.lift(if (n < 0) items.size + n else n).getOrElse(
-          throw CompileError(s"list index $n out of range (IndexError on every row)")))
+        val ts = items.map(go) // Python builds the whole list: an item's error is the lambda's
+        ts.lift(if (n < 0) items.size + n else n).getOrElse(
+          throw CompileError(s"list index $n out of range (IndexError on every row)"))
       case Index(t, i) => index(go(t), i)
       case Slice(t, lo, hi) => slice(go(t), lo.map(b => (b, go(b))), hi.map(b => (b, go(b))))
       case Builtin(fn @ ("min" | "max"), Seq(ListLit(items))) => extreme(fn, items.map(go))
-      case Builtin("len", Seq(ListLit(items))) => Typed(lit(items.size.toLong), LongType)
       case Builtin(fn, args) => applyBuiltin(fn, args, args.map(go))
       case ListLit(items) =>
         val ts = items.map(go)
@@ -164,11 +166,12 @@ object MiniLambda {
     else when(c.col.isNull, lit(null)).when(truthy(c), t).otherwise(f)
 
   /** Python `a or b` / `a and b` return an operand; on two booleans that
-    * is SQL OR / AND.
+    * is SQL OR / AND, unless `a` may be None: `None or False` is False
+    * and `None and False` is None, where SQL gives null and false.
     */
   private def logical(l: Typed, r: Typed, or: Boolean): Typed = {
     val noneable = l.noneable || r.noneable
-    if (l.dt == BooleanType && r.dt == BooleanType)
+    if (l.dt == BooleanType && r.dt == BooleanType && !l.noneable)
       Typed(if (or) l.col || r.col else l.col && r.col, BooleanType, noneable)
     else {
       val dt = unify(l.dt, r.dt)
@@ -202,10 +205,12 @@ object MiniLambda {
     val (l, r) = (num(l0, r0), num(r0, l0))
     def nans = Seq(l, r).filter(_.dt == DoubleType).map(e => !isnan(e.col))
     // a str never equals a bool or number in Python, and ordering them
-    // raises TypeError; a cast here would throw under ANSI instead
+    // raises TypeError; a cast here would throw under ANSI instead. Two
+    // None values are equal whatever their columns' types.
     if (strVsScalar(l.dt, r.dt) || strVsScalar(r.dt, l.dt)) op match {
-      case "==" => Typed(lit(false), BooleanType)
-      case "!=" => Typed(lit(true), BooleanType)
+      case "==" | "!=" =>
+        val eq = if (l.noneable && r.noneable) l.col.isNull && r.col.isNull else lit(false)
+        Typed(if (op == "==") eq else !eq, BooleanType)
       case _ => throw CompileError(s"'$op' between ${l.dt.simpleString} and " +
         s"${r.dt.simpleString} is a TypeError in Python")
     } else {
@@ -268,13 +273,14 @@ object MiniLambda {
       if (numericResult(l.dt, r.dt) == LongType) Typed(floor(l.col / r.col).cast(LongType), LongType)
       else {
         // float // is a float, computed as CPython does: from fmod's
-        // remainder, floored with its rounding fix; floor() returns a
-        // long, so a NaN or infinite quotient bypasses it
+        // remainder, floored with its rounding fix, and a zero quotient
+        // signed as l / r is; floor() returns a long, so a NaN or
+        // infinite quotient bypasses it
         val m = l.col % r.col
         val q = (l.col - m) / r.col
         val div = when(shifted(m, r.col), q - 1).otherwise(q)
         val fl = when(abs(div) < 1e18, floor(div).cast(DoubleType)).otherwise(div) // NaN, inf as is
-        Typed(when(div - fl > 0.5, fl + 1).otherwise(fl), DoubleType)
+        Typed(when(div === 0, lit(0.0) * (l.col / r.col)).when(div - fl > 0.5, fl + 1).otherwise(fl), DoubleType)
       }
     case "%" =>
       // Python modulo takes the divisor's sign (-7 % 3 == 2); Spark's %
@@ -347,7 +353,8 @@ object MiniLambda {
   private def applyMethod(targetAst: Ast, target: Typed, name: String,
                           argAsts: Seq[Ast], args: Seq[Typed]): Typed = {
     if (target.dt != StringType)
-      throw CompileError(s"method .$name() only supported on strings, got ${target.dt.simpleString}")
+      throw CompileError(s"method .$name() only supported on strings, got ${target.dt.simpleString} " +
+        "(AttributeError in Python)")
     val c = target.col
     def strArg(meth: String): String =
       strLit(argAsts.head).getOrElse(throw CompileError(s"$meth() argument must be a string literal"))

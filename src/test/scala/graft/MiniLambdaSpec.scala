@@ -47,6 +47,9 @@ class MiniLambdaSpec extends SparkSpec {
     assert(evalOne("lambda r: -7 % 3") == Seq(2L, 2L))
     assert(evalOne("lambda r: r['n'] % -4") == Seq(-1L, -2L))
     assert(evalOne("lambda r: -r['x'] % 2") == Seq(1.5, 1.5))
+    // a zero float quotient is signed as the true quotient is
+    assert(evalOne("lambda r: str(-0.0 // 1.0) + str(0.0 // -1.0) + str(0.5 // 1.0) + str(-0.5 // 1.0)") ==
+      Seq("-0.0-0.00.0-1.0", "-0.0-0.00.0-1.0"))
     // exponent literals are ordinary double literals
     assert(evalOne("lambda r: r['x'] * 1e3") == Seq(2500.0, 500.0))
   }
@@ -264,11 +267,19 @@ class MiniLambdaSpec extends SparkSpec {
     assert(run("lambda r: r['name'] == 'single'") == Seq(Some(false), Some(true), Some(false)))
     assert(run("lambda r: r['name'] != 'single'") == Seq(Some(true), Some(false), Some(true)))
     assert(run("lambda r: r['name'] < 'b'") == Seq(Some(true), Some(false), None))
+    // None or b is b, and None and b is None
+    assert(run("lambda r: r['b'] or False", Seq("b")) == Seq(Some(true), Some(false), Some(false)))
+    assert(run("lambda r: r['b'] and False", Seq("b")) == Seq(Some(false), Some(false), None))
   }
 
   test("list literals, computed slices and out-of-range string indexes") {
     assert(run("lambda r: r['s'] in ['x', 'y']", Seq("s")) == Seq(Some(true), Some(false), Some(true)))
     assert(run("lambda r: r['name'] not in ['single']") == Seq(Some(true), Some(false), Some(true)))
+    // `in` on a list is ==: a str never equals a number or bool, None equals None
+    assert(run("lambda r: r['x'] in ['5', 'a']", Seq("x")) == Seq(Some(false), Some(false), Some(false)))
+    assert(run("lambda r: r['b'] in ['x', 0]", Seq("b")) == Seq(Some(false), Some(true), Some(false)))
+    assert(run("lambda r: r['name'] in [r['b']]", Seq("name", "b")) == Seq(Some(false), Some(false), Some(true)))
+    assert(run("lambda r: r['name'] in [None]") == Seq(Some(false), Some(false), Some(true)))
     assert(run("lambda r: '-'.join([r['s'], 'z'])", Seq("s")) == Seq(Some("x-z"), Some("-z"), Some("y-z")))
     assert(run("lambda r: max([r['x'], 3, r['i']])", Seq("x", "i")) == Seq(Some(7L), Some(3L), Some(15L)))
     assert(run("lambda r: r['name'][-3:-1]") == Seq(Some("mm"), Some("gl"), None))
@@ -278,5 +289,8 @@ class MiniLambdaSpec extends SparkSpec {
     assert(run("lambda r: r['name'][r['i']:]", Seq("name", "i")) ==
       Seq(Some("eta Gamma"), Some("single"), None))
     intercept[Exception](run("lambda r: r['s'][0]", Seq("s"))) // '' has no [0]: IndexError
+    // Python builds the whole list before indexing it
+    intercept[MiniLambda.CompileError](run("lambda r: [r['name'], r['name'] + 1][0]"))
+    assert(run("lambda r: len([r['name'], 1])") == Seq(Some(2L), Some(2L), Some(2L)))
   }
 }
