@@ -372,7 +372,13 @@ object MiniLambda {
         val s = strLit(targetAst).getOrElse(
           throw CompileError("join() target must be a string literal separator"))
         Typed(array_join(a.col, s), StringType)
-      case ("replace", Seq(a, b)) => Typed(replace(c, a.col, b.col), StringType) // literal, not regex — Python str.replace
+      case ("replace", Seq(a, b)) =>
+        Seq(a, b).find(x => x.dt != StringType && x.dt != NullType).foreach(x => throw CompileError(
+          s"replace() arguments must be str, got ${x.dt.simpleString} (TypeError in Python)"))
+        // Spark's replace is literal, not regex, as Python's; only an empty
+        // `old` differs, so any `old` that may be empty takes PyReplaceExpr
+        if (strLit(argAsts.head).exists(_.nonEmpty)) Typed(replace(c, a.col, b.col), StringType)
+        else Typed(toCol(PyReplaceExpr(toExpr(c), toExpr(a.col), toExpr(b.col))), StringType)
       case ("upper", Nil)      => Typed(upper(c), StringType)
       case ("lower", Nil)      => Typed(lower(c), StringType)
       case ("strip", Nil)      => Typed(trim(c, whitespace), StringType)
@@ -398,7 +404,7 @@ object MiniLambda {
       case ("rjust", Seq(_)) =>
         val w = width(argAsts.head)
         Typed(padded(c, w, lpad(c, w, " ")), StringType)
-      case ("title", Nil)      => Typed(initcap(c), StringType)
+      case ("title", Nil)      => Typed(toCol(PyTitleExpr(toExpr(c))), StringType)
       case ("capitalize", Nil) =>
         Typed(concat(upper(substring(c, 1, 1)), lower(substring(c, 2, Int.MaxValue))), StringType)
       case ("startswith", Seq(p)) => Typed(startswith(c, p.col), BooleanType)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -40,4 +40,80 @@ object PyStrExpr {
         f"${mantissa}e${if (exp < 0) "-" else "+"}${math.abs(exp)}%02d"
       }
     }
+}
+
+/** CPython-parity `str.replace(old, new)`. Spark's `replace` returns the
+  * string as is for an empty `old`, where Python inserts `new` at every
+  * code-point boundary: `'x'.replace('', '-')` is `'-x-'`, and
+  * `''.replace('', '$')` is `'$'`. `MiniLambda` keeps Spark's `replace`
+  * for a non-empty literal `old`, and lowers any other `old` to this.
+  */
+case class PyReplaceExpr(first: Expression, second: Expression, third: Expression)
+  extends TernaryExpression with CodegenFallback {
+
+  override def dataType: DataType = StringType
+
+  override protected def nullSafeEval(s: Any, old: Any, rep: Any): Any = {
+    val (str, o, r) = (s.toString, old.toString, rep.toString)
+    if (o.nonEmpty) UTF8String.fromString(str.replace(o, r))
+    else {
+      val sb = new java.lang.StringBuilder(r)
+      str.codePoints.forEach(cp => sb.appendCodePoint(cp).append(r))
+      UTF8String.fromString(sb.toString)
+    }
+  }
+
+  override protected def withNewChildrenInternal(
+      a: Expression, b: Expression, c: Expression): PyReplaceExpr = copy(a, b, c)
+}
+
+/** CPython-parity `str.title()`. Spark's `initcap` starts a word only after
+  * whitespace; Python starts one at every character that follows an
+  * uncased one (`'a-b'` → `'A-B'`, `"they're"` → `"They'Re"`, `'0000ö'` →
+  * `'0000Ö'`), maps it by its full titlecase (`'ß'` → `'Ss'`) and lowercases
+  * the rest, a capital sigma ending a word to `'ς'`. Case properties are
+  * ICU's, which Spark ships.
+  */
+case class PyTitleExpr(child: Expression) extends UnaryExpression with CodegenFallback {
+
+  override def dataType: DataType = StringType
+
+  override protected def nullSafeEval(input: Any): Any =
+    UTF8String.fromString(PyTitleExpr.title(input.toString))
+
+  override protected def withNewChildInternal(newChild: Expression): PyTitleExpr =
+    copy(child = newChild)
+}
+
+object PyTitleExpr {
+  import com.ibm.icu.lang.{UCharacter, UProperty}
+  import com.ibm.icu.text.CaseMap
+  import java.util.Locale
+
+  private val titleOne = CaseMap.toTitle().wholeString().noBreakAdjustment().noLowercase()
+
+  private def cased(cp: Int) = UCharacter.hasBinaryProperty(cp, UProperty.CASED)
+  private def ignorable(cp: Int) = UCharacter.hasBinaryProperty(cp, UProperty.CASE_IGNORABLE)
+
+  def title(s: String): String = {
+    val cps = s.codePoints.toArray
+    val sb = new java.lang.StringBuilder
+    cps.indices.foreach { i =>
+      val cp = cps(i)
+      val one = new String(Character.toChars(cp))
+      if (i == 0 || !cased(cps(i - 1))) sb.append(titleOne.apply(Locale.ROOT, null, one))
+      else if (cp == 0x3a3) sb.appendCodePoint(if (finalSigma(cps, i)) 0x3c2 else 0x3c3)
+      else sb.append(UCharacter.toLowerCase(Locale.ROOT, one))
+    }
+    sb.toString
+  }
+
+  /** CPython's Final_Sigma test: a cased character before `i` and none
+    * after it, skipping case-ignorable ones both ways.
+    */
+  private def finalSigma(cps: Array[Int], i: Int): Boolean = {
+    val before = cps.take(i).reverseIterator.find(!ignorable(_))
+    val after = cps.drop(i + 1).find(!ignorable(_))
+    before.exists(cased) && !after.exists(cased)
+  }
 }

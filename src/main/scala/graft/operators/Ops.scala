@@ -4,6 +4,9 @@ import graft.functions.MiniLambda
 import graft.plans._
 import graft.sources.Source
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, LogicalPlan, Project}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -307,21 +310,26 @@ object Ops {
     * first-appearance order of the keys (Polars parity; Spark sorts unless
     * the key list is passed explicitly).
     *
-    * Scale note: key discovery is not cheap. Its eager `localCheckpoint`
-    * runs the whole upstream flow (scans, binds, everything before the
-    * unfold) once and keeps the result in executor blocks; the key
-    * aggregation and its driver `collect` then run over that snapshot, and
-    * the pivot reads it again. `AgentApi` skips all of it where the plan
-    * proves the keys (a fold's key column over a non-empty input) and
-    * passes them as `staticKeys`: the pivot is then the only pass over the
-    * input. `first` is order-sensitive — at scale callers needing
-    * determinism should ensure (index,key) uniqueness upstream
-    * (DistinctOp), exactly as with the reference.
+    * Scale note: the pivot needs its key list up front. Where the plan
+    * proves it ([[foldKeys]]: the key column is a fold's literal key),
+    * callers pass it as `staticKeys`, and the pivot is then the only pass
+    * over the input: `Runner.applyAll` does so for an unfold with index
+    * columns, and `AgentApi` on a non-empty recorded head. Otherwise the
+    * keys are discovered from the data: an eager `localCheckpoint` runs the
+    * whole upstream flow (scans, binds, everything before the unfold) once
+    * and keeps the result in executor blocks, the key aggregation and its
+    * driver `collect` run over that snapshot, and the pivot reads it again.
+    * `first` is order-sensitive — at scale callers needing determinism
+    * should ensure (index,key) uniqueness upstream (DistinctOp), exactly as
+    * with the reference.
     */
   def unfold(df: DataFrame, op: Unfold): DataFrame = unfold(df, op, None)
 
   /** `staticKeys`: the key column's values in first-appearance order, as
-    * the caller proved them; None discovers them from the data.
+    * the caller proved them; None discovers them from the data. Over an
+    * empty input discovery finds no keys, where static keys still give a
+    * column each: a caller that cannot prove its input non-empty must tell
+    * the two apart (`Runner.applyAll` does, with `Sink.guardEmpty`).
     */
   private[graft] def unfold(df: DataFrame, op: Unfold, staticKeys: Option[Seq[Any]]): DataFrame = {
     requireCols(df, op.indexColumns ++ Seq(op.keyColumn, op.valueColumn), "unfold")
@@ -355,6 +363,33 @@ object Ops {
     input.groupBy(op.indexColumns.map(col): _*)
       .pivot(op.keyColumn, keysInOrder)
       .agg(first(col(op.valueColumn), ignoreNulls = false))
+  }
+
+  /** The values of `key` in first-appearance order, when the plan proves
+    * them: `key` is filled by a fold's `Expand` with a non-null literal in
+    * every projection, and only pass-through projections sit above it. Each
+    * input row of the fold then yields every key, in projection order, so
+    * on a non-empty frame that order is the first-appearance order.
+    */
+  private[graft] def foldKeys(df: DataFrame, key: String): Option[Seq[Any]] = {
+    def keys(plan: LogicalPlan, a: Attribute): Option[Seq[Any]] = plan match {
+      case Project(list, child) if list.exists {
+        case b: Attribute => b.exprId == a.exprId
+        case _ => false
+      } => keys(child, a)
+      case Expand(projections, output, _) =>
+        val i = output.indexWhere(_.exprId == a.exprId)
+        val lits = projections.flatMap(_.lift(i)).collect {
+          case Literal(v, t) if v != null => CatalystTypeConverters.convertToScala(v, t)
+        }
+        if (i >= 0 && lits.size == projections.size) Some(lits.distinct) else None
+      case _ => None
+    }
+    val plan = df.queryExecution.analyzed
+    plan.output.filter(_.name == key) match {
+      case Seq(a) => keys(plan, a)
+      case _ => None
+    }
   }
 
   // ------------------------------------------- extended (beyond reference)

@@ -4,8 +4,8 @@ import graft.operators.Ops
 import graft.sources.{Sink, Source}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{Attribute, IntegerLiteral, InterpretedProjection, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Expand, Limit, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.{IntegerLiteral, InterpretedProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, Limit, LocalRelation}
 import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.apache.spark.sql.types._
 
@@ -22,12 +22,32 @@ object Runner {
   /** Fold all operations over the frame, then drop assignation-created temp
     * columns named `_*_` (leading+trailing underscore) — reference parity
     * (main.py:408-416, 423-427).
+    *
+    * An unfold with index columns whose key column is a fold's literal key
+    * ([[Ops.foldKeys]]) pivots on the fold's value column names, in fold
+    * order: building the flow starts no Spark job. Over an empty input the
+    * reference's pivot (and the discovery path) has no key columns, while
+    * this frame has one per key and no rows; its pivot carries
+    * `Sink.guardEmpty`'s row count, so `Sink.save` leaves the target as it
+    * was, and `runOutput` returns the discovery path's outcome.
     */
   def applyAll(spark: SparkSession, df: DataFrame, ops: Seq[Operation],
-               inputs: Map[String, FileDef]): DataFrame = {
+               inputs: Map[String, FileDef]): DataFrame =
+    build(spark, df, ops, inputs, staticUnfold = true)
+
+  private def build(spark: SparkSession, df: DataFrame, ops: Seq[Operation],
+                    inputs: Map[String, FileDef], staticUnfold: Boolean): DataFrame = {
     val result = ops.zipWithIndex.foldLeft(df) { case (acc, (op, i)) =>
-      try Ops.applyOp(spark, acc, op, inputs)
-      catch {
+      try op match {
+        // without index columns the pivot is one row even over no input,
+        // so its row count could not tell an empty input
+        case u: Unfold if staticUnfold && u.indexColumns.nonEmpty =>
+          Ops.foldKeys(acc, u.keyColumn) match {
+            case Some(keys) => Sink.guardEmpty(Ops.unfold(acc, u, Some(keys)))
+            case None => Ops.unfold(acc, u, None)
+          }
+        case _ => Ops.applyOp(spark, acc, op, inputs)
+      } catch {
         case e: Exception =>
           throw new RuntimeException(
             s"operation ${i + 1} (${op.opType}) failed: ${e.getMessage}", e)
@@ -42,6 +62,11 @@ object Runner {
 
   /** Run one output pipeline end-to-end: load source → ops → validate →
     * sink. Returns the validation feedback on failure (nothing written).
+    * The flow is built by `applyAll`, so a fold→unfold pivots on the fold's
+    * keys and the write is the flow's one pass over its input. Where that
+    * pivot saw no rows, nothing is written and the flow is built again
+    * with key discovery, whose outcome is returned: on the reference's
+    * flows, the validation feedback naming the missing key columns.
     */
   def runOutput(spark: SparkSession, config: PipelineConfig, outputKey: String,
                 flow: PipelineFlow, prettyJson: Boolean = true): Option[String] = {
@@ -50,11 +75,12 @@ object Runner {
     val srcDef = config.inputMap.getOrElse(flow.source,
       throw new IllegalArgumentException(s"flow source '${flow.source}' not in config inputs"))
     val df = Source.load(spark, srcDef)
-    val result = applyAll(spark, df, flow.operations, config.inputMap)
-    SchemaValidator.diff(result.schema, outDef.schema) match {
-      case some @ Some(_) => some
-      case None => Sink.save(result, outDef, prettyJson); None
+    def run(staticUnfold: Boolean): Option[String] = {
+      val result = build(spark, df, flow.operations, config.inputMap, staticUnfold)
+      SchemaValidator.diff(result.schema, outDef.schema).orElse(
+        if (Sink.write(result, outDef, prettyJson)) None else run(staticUnfold = false))
     }
+    run(staticUnfold = true)
   }
 }
 
@@ -116,7 +142,7 @@ object SchemaValidator {
   *     `sampleRows` rows proves nothing about the rows after the head, and
   *     takes the full path.
   * An unfold on a frame with remembered, non-empty rows whose key column is
-  * a fold's literal key (see [[foldKeys]]) pivots on the fold's value
+  * a fold's literal key (see [[Ops.foldKeys]]) pivots on the fold's value
   * column names directly: no eager `localCheckpoint` and no key `collect`,
   * only the trial's job. Every other step (cross and outer binds, a bind
   * that is not broadcast, the extended ops, a frame with no remembered
@@ -170,33 +196,6 @@ object AgentApi {
     case _ => trial.collect()
   }
 
-  /** The values of `key` in first-appearance order, when the plan proves
-    * them: `key` is filled by a fold's `Expand` with a non-null literal in
-    * every projection, and only pass-through projections sit above it. Each
-    * input row of the fold then yields every key, in projection order, so
-    * on a non-empty frame that order is the first-appearance order.
-    */
-  private def foldKeys(df: DataFrame, key: String): Option[Seq[Any]] = {
-    def keys(plan: LogicalPlan, a: Attribute): Option[Seq[Any]] = plan match {
-      case Project(list, child) if list.exists {
-        case b: Attribute => b.exprId == a.exprId
-        case _ => false
-      } => keys(child, a)
-      case Expand(projections, output, _) =>
-        val i = output.indexWhere(_.exprId == a.exprId)
-        val lits = projections.flatMap(_.lift(i)).collect {
-          case Literal(v, t) if v != null => CatalystTypeConverters.convertToScala(v, t)
-        }
-        if (i >= 0 && lits.size == projections.size) Some(lits.distinct) else None
-      case _ => None
-    }
-    val plan = df.queryExecution.analyzed
-    plan.output.filter(_.name == key) match {
-      case Seq(a) => keys(plan, a)
-      case _ => None
-    }
-  }
-
   /** Trial-apply one op (the reference's trial execution, main.py:255):
     * analysis on the full lazy frame plus a run over at most `sampleRows`
     * rows to surface runtime errors — on the previous trial's rows where
@@ -209,7 +208,7 @@ object AgentApi {
       val base = headOf(df, sampleRows)
       val next = (op, base) match {
         // a non-empty head proves the pivot sees every fold key
-        case (u: Unfold, Some(rows)) if rows.nonEmpty => Ops.unfold(df, u, foldKeys(df, u.keyColumn))
+        case (u: Unfold, Some(rows)) if rows.nonEmpty => Ops.unfold(df, u, Ops.foldKeys(df, u.keyColumn))
         case _ => Ops.applyOp(spark, df, op, inputs)
       }
       val onHead = base

@@ -4,8 +4,11 @@ import graft.plans.{FileDef, SchemaType}
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -42,30 +45,41 @@ object Sink {
     * passed only by the CLI-parity pipeline path (Runner.runOutput),
     * where outputs are reference-scale by construction. A library caller
     * never driver-collects by default.
+    *
+    * A frame with a [[guardEmpty]] count (`Runner.applyAll`'s static
+    * unfold) is
+    * written to `<path>.graft-tmp` and moved to `path` only where every
+    * guard counted rows in that write's pass; otherwise the temp output is
+    * removed and `path` is left as it was.
     */
   def save(df: DataFrame, fd: FileDef, prettyJson: Boolean = false): Unit = {
+    write(df, fd, prettyJson)
+    ()
+  }
+
+  /** `save`, returning false where a guard of `df` counted no rows and
+    * nothing was written.
+    */
+  private[graft] def write(df: DataFrame, fd: FileDef, prettyJson: Boolean): Boolean = {
     val out = projectToSchema(df, fd)
+    val guards = df.queryExecution.analyzed.flatMap(_.getTagValue(Guard).toSeq).distinct
     fd.format match {
       case "csv" if fd.path.toLowerCase.endsWith(".csv") =>
         // reference parity: the output is ONE file at exactly this path
         // (main.py writes a single csv). Extension-less paths keep Spark's
         // distributed directory layout — the at-scale mode.
-        writeSingleCsv(out, fd.path, Map("header" -> "true", "dateFormat" -> "yyyy-MM-dd"))
+        writeSingleCsv(out, fd.path, Map("header" -> "true", "dateFormat" -> "yyyy-MM-dd"), guards)
       case "csv" =>
-        out.write.mode(SaveMode.Overwrite).option("header", true)
-          .option("dateFormat", "yyyy-MM-dd").csv(fd.path)
+        writeDir(out, "csv", Map("header" -> "true", "dateFormat" -> "yyyy-MM-dd"), fd.path, guards)
       case "parquet" if fd.path.toLowerCase.endsWith(".parquet") =>
-        writeSingleFile(out, fd.path, "parquet")
-      case "parquet" =>
-        out.write.mode(SaveMode.Overwrite).parquet(fd.path)
+        writeSingleFile(out, fd.path, "parquet", guards)
       case "orc" if fd.path.toLowerCase.endsWith(".orc") =>
-        writeSingleFile(out, fd.path, "orc")
-      case "orc" =>
-        out.write.mode(SaveMode.Overwrite).orc(fd.path)
+        writeSingleFile(out, fd.path, "orc", guards)
+      case "parquet" | "orc" =>
+        writeDir(out, fd.format, Map.empty, fd.path, guards)
       case "json" if !prettyJson =>
         // distributed NDJSON — the at-scale JSON representation
-        val rendered = renderDates(out)
-        rendered.write.mode(SaveMode.Overwrite).json(fd.path)
+        writeDir(renderDates(out), "json", Map.empty, fd.path, guards)
       case "json" =>
         // reference parity (main.py:464-470): `json.dump(rows, indent=2)` —
         // an indent-2 array of row objects, dates %Y-%m-%d, nulls INCLUDED
@@ -75,14 +89,61 @@ object Sink {
         val rendered = renderDates(out)
         val names = rendered.schema.fieldNames.toSeq
         val rows = rendered.collect()
-        val body =
-          if (rows.isEmpty) "[]"
-          else rows.map(r => "  " + pyJsonObject(names.zip(r.toSeq), 2))
-            .mkString("[\n", ",\n", "\n]")
-        val p = Paths.get(fd.path)
-        if (p.getParent != null) Files.createDirectories(p.getParent)
-        Files.writeString(p, body)
+        rowsSeen(guards) && {
+          val body =
+            if (rows.isEmpty) "[]"
+            else rows.map(r => "  " + pyJsonObject(names.zip(r.toSeq), 2))
+              .mkString("[\n", ",\n", "\n]")
+          val p = Paths.get(fd.path)
+          if (p.getParent != null) Files.createDirectories(p.getParent)
+          Files.writeString(p, body)
+          true
+        }
       case other => throw new IllegalArgumentException(s"unsupported output format '$other'")
+    }
+  }
+
+  private val Guard = TreeNodeTag[Observation]("graft.emptyGuard")
+
+  /** `df` with a count of its rows, taken by `Observation` in the pass
+    * that writes it (no job of its own). `save` writes a frame that
+    * carries such a count only where it is positive; a count the write's
+    * plan did not take reads as 0, so nothing is written on a guess.
+    */
+  private[graft] def guardEmpty(df: DataFrame): DataFrame = {
+    val guard = Observation()
+    val observed = df.observe(guard, count(lit(1)).as("rows"))
+    // frames built on `observed` hold these analyzed nodes, tags included
+    observed.queryExecution.analyzed.foreach {
+      case c: CollectMetrics if c.name == guard.name => c.setTagValue(Guard, guard)
+      case _ =>
+    }
+    observed
+  }
+
+  /** Whether every guard counted rows; read after the write's own pass. */
+  private def rowsSeen(guards: Seq[Observation]): Boolean =
+    guards.forall(_.get.get("rows").exists { case n: Long => n > 0; case _ => false })
+
+  /** Spark's directory of part files at `path`, replacing what is there.
+    * A guarded frame goes through `<path>.graft-tmp`, renamed onto `path`
+    * only where `rowsSeen`.
+    */
+  private def writeDir(df: DataFrame, format: String, options: Map[String, String], path: String,
+                       guards: Seq[Observation]): Boolean = {
+    val w = df.write.mode(SaveMode.Overwrite).format(format).options(options)
+    if (guards.isEmpty) { w.save(path); true }
+    else {
+      val tmp = new HPath(path + ".graft-tmp")
+      val target = new HPath(path)
+      w.save(tmp.toString)
+      val fs = tmp.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      val seen = rowsSeen(guards)
+      if (seen) {
+        fs.delete(target, true)
+        if (!fs.rename(tmp, target)) throw new IllegalStateException(s"could not rename $tmp to $target")
+      } else fs.delete(tmp, true)
+      seen
     }
   }
 
@@ -92,28 +153,33 @@ object Sink {
     * first one with their header stripped, and that file is moved to
     * `path`. The bytes are those of a one-partition write of the same
     * frame, without running the whole plan as one task; the driver-side cost is
-    * one sequential copy of the non-first parts.
+    * one sequential copy of the non-first parts. Where a guard counted no
+    * rows, the temp dir is removed instead.
     */
-  private def writeSingleCsv(df: DataFrame, path: String,
-                             options: Map[String, String]): Unit = {
+  private def writeSingleCsv(df: DataFrame, path: String, options: Map[String, String],
+                             guards: Seq[Observation]): Boolean = {
     val tmp = path + ".graft-tmp"
     df.write.mode(SaveMode.Overwrite).options(options).csv(tmp)
-    val header = csvHeader(df, options)
-    val parts = partFiles(Paths.get(tmp)).sortBy(partOrder)
-    if (parts.isEmpty) throw new IllegalStateException(s"no part file in $tmp")
-    Using.resource(FileChannel.open(parts.head, StandardOpenOption.APPEND)) { out =>
-      parts.tail.foreach { part =>
-        Using.resource(FileChannel.open(part, StandardOpenOption.READ)) { in =>
-          val head = ByteBuffer.allocate(header.length)
-          while (head.hasRemaining && in.read(head) >= 0) {}
-          if (!java.util.Arrays.equals(head.array, header))
-            throw new IllegalStateException(s"$part does not start with the csv header")
-          var pos = header.length.toLong
-          while (pos < in.size) pos += in.transferTo(pos, in.size - pos, out)
+    if (!rowsSeen(guards)) { deleteTree(Paths.get(tmp)); false }
+    else {
+      val header = csvHeader(df, options)
+      val parts = partFiles(Paths.get(tmp)).sortBy(partOrder)
+      if (parts.isEmpty) throw new IllegalStateException(s"no part file in $tmp")
+      Using.resource(FileChannel.open(parts.head, StandardOpenOption.APPEND)) { out =>
+        parts.tail.foreach { part =>
+          Using.resource(FileChannel.open(part, StandardOpenOption.READ)) { in =>
+            val head = ByteBuffer.allocate(header.length)
+            while (head.hasRemaining && in.read(head) >= 0) {}
+            if (!java.util.Arrays.equals(head.array, header))
+              throw new IllegalStateException(s"$part does not start with the csv header")
+            var pos = header.length.toLong
+            while (pos < in.size) pos += in.transferTo(pos, in.size - pos, out)
+          }
         }
       }
+      moveToTarget(parts.head, tmp, path)
+      true
     }
-    moveToTarget(parts.head, tmp, path)
   }
 
   /** The header line Spark's CSV writer starts each part with, written by
@@ -152,22 +218,28 @@ object Sink {
     if (target.getParent != null) Files.createDirectories(target.getParent)
     Files.move(file, target, StandardCopyOption.REPLACE_EXISTING)
     // clean the temp dir (part crc/_SUCCESS markers)
-    Using.resource(Files.walk(Paths.get(tmp)))(_.sorted(java.util.Comparator.reverseOrder())
-      .iterator.asScala.foreach(Files.deleteIfExists))
+    deleteTree(Paths.get(tmp))
   }
+
+  private def deleteTree(dir: Path): Unit =
+    Using.resource(Files.walk(dir))(_.sorted(java.util.Comparator.reverseOrder())
+      .iterator.asScala.foreach(Files.deleteIfExists))
 
   /** Exactly one parquet or orc file at `path`: these formats cannot be
     * concatenated, so the whole plan is coalesced to ONE task writing into
-    * a temp dir, and its part file is moved. `maxRecordsPerFile` 0 (no
-    * limit) overrides the session's `spark.sql.files.maxRecordsPerFile`,
-    * which would otherwise split that task's output over several files.
+    * a temp dir, and its part file is moved (unless a guard counted no
+    * rows). `maxRecordsPerFile` 0 (no limit) overrides the session's
+    * `spark.sql.files.maxRecordsPerFile`, which would otherwise split that
+    * task's output over several files.
     */
-  private def writeSingleFile(df: DataFrame, path: String, format: String): Unit = {
+  private def writeSingleFile(df: DataFrame, path: String, format: String,
+                              guards: Seq[Observation]): Boolean = {
     val tmp = path + ".graft-tmp"
     df.coalesce(1).write.mode(SaveMode.Overwrite).format(format)
       .option("maxRecordsPerFile", "0").save(tmp)
-    partFiles(Paths.get(tmp)) match {
-      case Vector(part) => moveToTarget(part, tmp, path)
+    if (!rowsSeen(guards)) { deleteTree(Paths.get(tmp)); false }
+    else partFiles(Paths.get(tmp)) match {
+      case Vector(part) => moveToTarget(part, tmp, path); true
       case parts => throw new IllegalStateException(
         s"expected one part file in $tmp, found ${parts.size}")
     }

@@ -181,11 +181,6 @@ object LambdaOracleSpec {
       "min/max with a NaN: Python's answer depends on the argument order, least/greatest " +
         "order NaN above every number",
       d => d.of(227, 497, 562) && d.row.exists(_.toSeq.exists(isNaN))),
-    Limit("replace-empty",
-      "str.replace with an empty search string returns the string unchanged (Spark replace), " +
-        "where Python inserts the replacement around every character",
-      d => d.of(110, 135, 280, 314, 315, 445) && d.pyValue.exists(_.isTextual) &&
-        d.engine.isInstanceOf[String]),
     Limit("round-non-finite",
       "round() of NaN or ±inf is null (PyRoundExpr's contract), where Python raises " +
         "ValueError or OverflowError",

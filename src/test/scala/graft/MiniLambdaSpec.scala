@@ -293,4 +293,18 @@ class MiniLambdaSpec extends SparkSpec {
     intercept[MiniLambda.CompileError](run("lambda r: [r['name'], r['name'] + 1][0]"))
     assert(run("lambda r: len([r['name'], 1])") == Seq(Some(2L), Some(2L), Some(2L)))
   }
+
+  test("replace with an empty or computed old, and title(), follow Python") {
+    // expected values from python3
+    assert(evalOne("lambda r: 'x'.replace('', '日本') + ''.replace('', '$') + '😀a'.replace('', '-')") ==
+      Seq("日本x日本$-😀-a-", "日本x日本$-😀-a-"))
+    assert(run("lambda r: r['name'].replace(r['s'], '_')", Seq("name", "s")) ==
+      Seq(Some("Alpha Beta Gamma"), Some("_s_i_n_g_l_e_"), None))
+    intercept[MiniLambda.CompileError](run("lambda r: r['name'].replace('a', 1)"))
+    val words = Seq("0000ö", "a-b", "they're", "ß x", "ΣΑΣ ΟΔΟΣ.", "ﬁne ǆemal", "hello WORLD", "").toDF("w")
+    assert(words.select(MiniLambda.compile("lambda r: r['w'].title()", words.schema))
+      .collect().map(_.getString(0)).toSeq ==
+      Seq("0000Ö", "A-B", "They'Re", "Ss X", "Σας Οδος.", "Fine ǅemal", "Hello World", ""))
+    assert(run("lambda r: r['name'].title()") == Seq(Some("Alpha Beta Gamma"), Some("Single"), None))
+  }
 }
