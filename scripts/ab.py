@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """Alternated A/B of the benchmark between two checkouts.
 
-    python3 scripts/ab.py <parent-dir> <change-dir> --workload W --seed S --pairs N
-                          [--seconds 3] [--trace 0]
+    python3 scripts/ab.py <parent-dir> <change-dir> --workload W --seed S --pairs N [--trace 0]
 
 Each pair runs `python3 perfbench/run.py` once in each checkout, from that
-checkout's root; even pairs run the parent first, odd pairs the change.
+checkout's root, for the `run_seconds` of the change's BENCHMARK.json; even
+pairs run the parent first, odd pairs the change.
 Every `[perfbench] <metric> = <value>` line (and `[perfbench] layer ...`
 with --trace 1) is collected, and one markdown row is printed per metric:
 the pair count, each side's median with Q1-Q3, change/parent of the
@@ -27,9 +27,9 @@ import sys
 LINE = re.compile(r"^\[perfbench\] (?:layer )?(\S+) = (-?[0-9.eE+-]+|nan|inf)\b")
 
 
-def run(checkout, args):
+def run(checkout, args, seconds):
     cmd = [sys.executable, "perfbench/run.py", "--workload", args.workload, "--seed", str(args.seed),
-           "--seconds", str(args.seconds), "--trace", str(args.trace)]
+           "--seconds", str(seconds), "--trace", str(args.trace)]
     r = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True)
     metrics = {}
     for line in r.stdout.splitlines():
@@ -55,16 +55,6 @@ def quartiles(xs):
     return at(0.5), at(0.25), at(0.75)
 
 
-def higher_is_better(change_dir):
-    try:
-        with open(os.path.join(change_dir, "BENCHMARK.json")) as f:
-            b = json.load(f)
-    except OSError:
-        return set()
-    return {m["name"] for m in b.get("end_to_end", []) + b.get("per_layer", [])
-            if m.get("better") == "higher"}
-
-
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("parent")
@@ -72,15 +62,17 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--pairs", type=int, required=True)
-    ap.add_argument("--seconds", type=float, default=3)
     ap.add_argument("--trace", type=int, default=0)
     args = ap.parse_args()
-    higher = higher_is_better(args.change)
+    with open(os.path.join(args.change, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    higher = {m["name"] for m in bench.get("end_to_end", []) + bench.get("per_layer", [])
+              if m.get("better") == "higher"}
 
     pairs = []
     for i in range(args.pairs):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-        got = {side: run(getattr(args, side), args) for side in order}
+        got = {side: run(getattr(args, side), args, bench["run_seconds"]) for side in order}
         if None in got.values():
             continue
         pairs.append(got)

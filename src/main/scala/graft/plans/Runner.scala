@@ -29,7 +29,7 @@ object Runner {
     * reference's pivot (and the discovery path) has no key columns, while
     * this frame has one per key and no rows; its pivot carries
     * `Sink.guardEmpty`'s row count, so `Sink.save` leaves the target as it
-    * was, and `runOutput` returns the discovery path's outcome.
+    * was and throws, and `runOutput` returns the discovery path's outcome.
     */
   def applyAll(spark: SparkSession, df: DataFrame, ops: Seq[Operation],
                inputs: Map[String, FileDef]): DataFrame =
@@ -64,9 +64,10 @@ object Runner {
     * sink. Returns the validation feedback on failure (nothing written).
     * The flow is built by `applyAll`, so a fold→unfold pivots on the fold's
     * keys and the write is the flow's one pass over its input. Where that
-    * pivot saw no rows, nothing is written and the flow is built again
-    * with key discovery, whose outcome is returned: on the reference's
-    * flows, the validation feedback naming the missing key columns.
+    * pivot saw no rows, or its frame fails validation, nothing is written
+    * and the flow is built again with key discovery, whose outcome is
+    * returned: over an empty input on the reference's flows, the
+    * validation feedback naming the missing key columns.
     */
   def runOutput(spark: SparkSession, config: PipelineConfig, outputKey: String,
                 flow: PipelineFlow, prettyJson: Boolean = true): Option[String] = {
@@ -77,8 +78,13 @@ object Runner {
     val df = Source.load(spark, srcDef)
     def run(staticUnfold: Boolean): Option[String] = {
       val result = build(spark, df, flow.operations, config.inputMap, staticUnfold)
-      SchemaValidator.diff(result.schema, outDef.schema).orElse(
-        if (Sink.write(result, outDef, prettyJson)) None else run(staticUnfold = false))
+      SchemaValidator.diff(result.schema, outDef.schema) match {
+        // the static pivot has a column per key where discovery, over an
+        // empty input, has none: discovery's feedback is the outcome
+        case Some(_) if Sink.guarded(result) => run(staticUnfold = false)
+        case Some(feedback) => Some(feedback)
+        case None => if (Sink.write(result, outDef, prettyJson)) None else run(staticUnfold = false)
+      }
     }
     run(staticUnfold = true)
   }

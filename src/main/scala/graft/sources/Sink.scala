@@ -11,8 +11,10 @@ import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
-import scala.util.Using
+import scala.util.{Try, Using}
 
 /** Output writing. Reference: save_data (main.py:432-480) — projects to
   * exactly the schema columns, in schema declaration order, skipping (with a
@@ -46,23 +48,23 @@ object Sink {
     * where outputs are reference-scale by construction. A library caller
     * never driver-collects by default.
     *
-    * A frame with a [[guardEmpty]] count (`Runner.applyAll`'s static
-    * unfold) is
-    * written to `<path>.graft-tmp` and moved to `path` only where every
-    * guard counted rows in that write's pass; otherwise the temp output is
-    * removed and `path` is left as it was.
+    * Spark writes every output but the pretty-JSON array to
+    * `<path>.graft-tmp`, which is moved onto `path` after the write. A
+    * frame with a [[guardEmpty]] count (`Runner.applyAll`'s static unfold)
+    * is written only where every guard counted rows in that write's pass;
+    * otherwise the temp output is removed, `path` is left as it was, and
+    * `save` throws.
     */
-  def save(df: DataFrame, fd: FileDef, prettyJson: Boolean = false): Unit = {
-    write(df, fd, prettyJson)
-    ()
-  }
+  def save(df: DataFrame, fd: FileDef, prettyJson: Boolean = false): Unit =
+    if (!write(df, fd, prettyJson))
+      throw new IllegalStateException(s"nothing written to ${fd.path}: the frame's empty-input guard counted no rows")
 
   /** `save`, returning false where a guard of `df` counted no rows and
     * nothing was written.
     */
   private[graft] def write(df: DataFrame, fd: FileDef, prettyJson: Boolean): Boolean = {
     val out = projectToSchema(df, fd)
-    val guards = df.queryExecution.analyzed.flatMap(_.getTagValue(Guard).toSeq).distinct
+    val guards = guardsOf(df)
     fd.format match {
       case "csv" if fd.path.toLowerCase.endsWith(".csv") =>
         // reference parity: the output is ONE file at exactly this path
@@ -107,8 +109,12 @@ object Sink {
 
   /** `df` with a count of its rows, taken by `Observation` in the pass
     * that writes it (no job of its own). `save` writes a frame that
-    * carries such a count only where it is positive; a count the write's
-    * plan did not take reads as 0, so nothing is written on a guess.
+    * carries such a count only where it is positive. The count reaches the
+    * driver through the session's listener bus, after the write returns;
+    * one that has not come within `GuardWait` (say, the write's plan did
+    * not take it) reads as 0, so nothing is written on a guess. A guarded
+    * frame that is never executed leaves its `Observation` registered in
+    * the session.
     */
   private[graft] def guardEmpty(df: DataFrame): DataFrame = {
     val guard = Observation()
@@ -121,30 +127,35 @@ object Sink {
     observed
   }
 
+  private def guardsOf(df: DataFrame): Seq[Observation] =
+    df.queryExecution.analyzed.flatMap(_.getTagValue(Guard).toSeq).distinct
+
+  /** Whether `df` carries a [[guardEmpty]] count. */
+  private[graft] def guarded(df: DataFrame): Boolean = guardsOf(df).nonEmpty
+
+  private val GuardWait = 60.seconds
+
   /** Whether every guard counted rows; read after the write's own pass. */
   private def rowsSeen(guards: Seq[Observation]): Boolean =
-    guards.forall(_.get.get("rows").exists { case n: Long => n > 0; case _ => false })
+    guards.forall(g => Try(Await.result(g.future, GuardWait)).toOption.exists(_.getAs[Long]("rows") > 0))
 
-  /** Spark's directory of part files at `path`, replacing what is there.
-    * A guarded frame goes through `<path>.graft-tmp`, renamed onto `path`
-    * only where `rowsSeen`.
+  /** Spark's directory of part files at `path`, replacing what is there,
+    * written to `<path>.graft-tmp` and renamed onto `path` only where
+    * `rowsSeen`.
     */
   private def writeDir(df: DataFrame, format: String, options: Map[String, String], path: String,
                        guards: Seq[Observation]): Boolean = {
-    val w = df.write.mode(SaveMode.Overwrite).format(format).options(options)
-    if (guards.isEmpty) { w.save(path); true }
-    else {
-      val tmp = new HPath(path + ".graft-tmp")
-      val target = new HPath(path)
-      w.save(tmp.toString)
-      val fs = tmp.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-      val seen = rowsSeen(guards)
-      if (seen) {
-        fs.delete(target, true)
-        if (!fs.rename(tmp, target)) throw new IllegalStateException(s"could not rename $tmp to $target")
-      } else fs.delete(tmp, true)
-      seen
-    }
+    val target = new HPath(path)
+    // a sibling of the target (`path` may end in a slash)
+    val tmp = target.suffix(".graft-tmp")
+    df.write.mode(SaveMode.Overwrite).format(format).options(options).save(tmp.toString)
+    val fs = tmp.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val seen = rowsSeen(guards)
+    if (seen) {
+      fs.delete(target, true)
+      if (!fs.rename(tmp, target)) throw new IllegalStateException(s"could not rename $tmp to $target")
+    } else fs.delete(tmp, true)
+    seen
   }
 
   /** One CSV file at `path`, written by every partition in parallel: each

@@ -30,8 +30,10 @@ class StaticUnfoldSpec extends SparkSpec {
     d
   }
 
-  /** A config reading `rows` as orders.csv in `dir`, writing `out` there. */
-  private def config(dir: Path, rows: Seq[String], out: String): PipelineConfig = {
+  /** A config reading `rows` as orders.csv in `dir`, writing `out` there,
+    * whose output declares the `qty` key column as `qtyType`.
+    */
+  private def config(dir: Path, rows: Seq[String], out: String, qtyType: String = "float"): PipelineConfig = {
     val csv = dir.resolve("orders.csv")
     Files.writeString(csv, ("order_id,region,product,qty,price" +: rows).mkString("", "\n", "\n"))
     Yaml.parseConfig(
@@ -56,7 +58,7 @@ outputs:
       columns:
         region: { type: string }
         product: { type: string }
-        qty: { type: float }
+        qty: { type: $qtyType }
         price: { type: float }
 """)
   }
@@ -129,6 +131,42 @@ outputs:
       assert(contents(target) == before, name)
       assert(!Files.exists(dir.resolve(name + ".graft-tmp")), name)
     }
+  }
+
+  test("a key column of the wrong type gets discovery's feedback, over an empty input and over rows") {
+    Seq(Nil -> "missing column 'qty'; missing column 'price'",
+        orders -> "column 'qty': expected integer, got float").foreach { case (rows, want) =>
+      val dir = tempDir()
+      val cfg = config(dir, rows, "summary.csv", qtyType = "integer")
+      val expected = SchemaValidator.diff(discovered(cfg).schema, cfg.outputMap("summary").schema)
+      assert(expected.contains(want))
+      assert(Runner.runOutput(spark, cfg, "summary", flow) == expected)
+      assert(!Files.exists(dir.resolve("summary.csv")))
+    }
+  }
+
+  test("Sink.save of a guarded frame with no rows raises and writes nothing") {
+    Seq("summary.csv", "summary").foreach { name =>
+      val dir = tempDir()
+      val cfg = config(dir, Nil, name)
+      val target = dir.resolve(name)
+      Files.writeString(target, "old,bytes\n")
+      val result = Runner.applyAll(spark, source(cfg), flow.operations, cfg.inputMap)
+      assert(Sink.guarded(result), name)
+      val e = intercept[IllegalStateException](Sink.save(result, cfg.outputMap("summary")))
+      assert(e.getMessage.contains(target.toString), name)
+      assert(Files.readString(target) == "old,bytes\n", name)
+      assert(!Files.exists(dir.resolve(name + ".graft-tmp")), name)
+    }
+  }
+
+  test("a directory output is written through a sibling temp dir, also where its path ends in a slash") {
+    val dir = tempDir()
+    val cfg = config(dir, orders, "out")
+    val fd = cfg.outputMap("summary").copy(path = dir.resolve("out").toString + "/")
+    Sink.save(discovered(cfg), fd)
+    assert(contents(dir.resolve("out")).keys.exists(_.startsWith("part-")))
+    assert(Files.list(dir).iterator.asScala.map(_.getFileName.toString).toSet == Set("orders.csv", "out"))
   }
 
   test("a data key column and an unfold without index columns keep discovery") {
