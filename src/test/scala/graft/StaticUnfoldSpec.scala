@@ -166,7 +166,8 @@ outputs:
     val fd = cfg.outputMap("summary").copy(path = dir.resolve("out").toString + "/")
     Sink.save(discovered(cfg), fd)
     assert(contents(dir.resolve("out")).keys.exists(_.startsWith("part-")))
-    assert(Files.list(dir).iterator.asScala.map(_.getFileName.toString).toSet == Set("orders.csv", "out"))
+    assert(Using.resource(Files.list(dir))(_.iterator.asScala.map(_.getFileName.toString).toSet) ==
+      Set("orders.csv", "out"))
   }
 
   test("a data key column and an unfold without index columns keep discovery") {
