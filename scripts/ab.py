@@ -14,7 +14,11 @@ higher one for a metric the change's BENCHMARK.json marks
 `"better": "higher"`. A pair counts for a metric only where both runs
 printed it. A run that exits non-zero is reported and its pair skipped.
 Nothing is written; each checkout's run.py writes under its own
-`.bench_build/`.
+`.bench_build/`. The generated inputs it caches there name their files by
+absolute path, so a checkout copied with its `.bench_build/` would read
+the other checkout's files; before the first pair, a cached config whose
+input path lies outside its checkout stops the run with the directory to
+delete.
 """
 import argparse
 import json
@@ -25,6 +29,30 @@ import subprocess
 import sys
 
 LINE = re.compile(r"^\[perfbench\] (?:layer )?(\S+) = (-?[0-9.eE+-]+|nan|inf)\b")
+PATH = re.compile(r"^\s*path:\s*['\"]?([^'\"\s]+)")
+
+
+def inputs_dir(checkout):
+    return os.path.join(os.path.realpath(checkout), ".bench_build", "perfbench", "inputs")
+
+
+def foreign_inputs(checkout):
+    """(config, path) for each cached input path outside the checkout; an
+    output path still holds run.py's `{out}` placeholder and is skipped."""
+    root = os.path.realpath(checkout)
+    found = []
+    for d, _, files in os.walk(inputs_dir(checkout)):
+        if "config.yaml" not in files:
+            continue
+        cfg = os.path.join(d, "config.yaml")
+        with open(cfg) as f:
+            for line in f:
+                m = PATH.match(line)
+                if m and "{" not in m.group(1):
+                    p = os.path.realpath(os.path.join(root, m.group(1)))
+                    if os.path.commonpath([p, root]) != root:
+                        found.append((cfg, m.group(1)))
+    return found
 
 
 def run(checkout, args, seconds):
@@ -68,6 +96,14 @@ def main():
         bench = json.load(f)
     higher = {m["name"] for m in bench.get("end_to_end", []) + bench.get("per_layer", [])
               if m.get("better") == "higher"}
+
+    for side in ("parent", "change"):
+        checkout = getattr(args, side)
+        foreign = foreign_inputs(checkout)
+        if foreign:
+            cfg, path = foreign[0]
+            sys.exit(f"[ab] {cfg} reads {path}, outside the {side} checkout {checkout}; "
+                     f"delete {inputs_dir(checkout)} and run again")
 
     pairs = []
     for i in range(args.pairs):

@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ext.Ckpt.CkptOps
 
 /** Graph-based ANN (the NSW/HNSW family, Malkov & Yashunin 2018) as
   * deterministic DataFrame ops — the tier that completes the ladder

@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Vector column primitives over Array[Float] embeddings, backed by the
   * native expressions in graft.functions.VectorExprs (one fused JVM loop

@@ -1,7 +1,6 @@
 package graft
 package families
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import Shared._
 

@@ -206,10 +206,11 @@ object MiniLambda {
     def nans = Seq(l, r).filter(_.dt == DoubleType).map(e => !isnan(e.col))
     // a str never equals a bool or number in Python, and ordering them
     // raises TypeError; a cast here would throw under ANSI instead. Two
-    // None values are equal whatever their columns' types.
+    // None values are equal whatever their columns' types, and both
+    // operands are evaluated, so an error in either surfaces.
     if (strVsScalar(l.dt, r.dt) || strVsScalar(r.dt, l.dt)) op match {
       case "==" | "!=" =>
-        val eq = if (l.noneable && r.noneable) l.col.isNull && r.col.isNull else lit(false)
+        val eq = toCol(PyStrScalarEqExpr(toExpr(l.col), toExpr(r.col), l.noneable, r.noneable))
         Typed(if (op == "==") eq else !eq, BooleanType)
       case _ => throw CompileError(s"'$op' between ${l.dt.simpleString} and " +
         s"${r.dt.simpleString} is a TypeError in Python")

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** CPython-parity `str()` of a float: the shortest repr, in positional
@@ -116,4 +117,27 @@ object PyTitleExpr {
     val after = cps.drop(i + 1).find(!ignorable(_))
     before.exists(cased) && !after.exists(cased)
   }
+}
+
+/** CPython-parity `==` between a str and a number or bool: both operands
+  * are evaluated, so an error either raises surfaces on its row, and the
+  * answer is False unless both are None. A null operand is None where its
+  * flag says so, else a failed operand's, which gives null. The optimizer
+  * keeps both children: no rule folds this expression's operands away,
+  * whatever their nullability.
+  */
+case class PyStrScalarEqExpr(left: Expression, right: Expression, leftNone: Boolean, rightNone: Boolean)
+  extends BinaryExpression with CodegenFallback {
+
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = true
+
+  override def eval(input: InternalRow): Any = {
+    val (l, r) = (left.eval(input), right.eval(input))
+    if (l == null && !leftNone || r == null && !rightNone) null
+    else l == null && r == null
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): PyStrScalarEqExpr =
+    copy(left = l, right = r)
 }

@@ -3,10 +3,11 @@ package graft.plans
 import graft.operators.Ops
 import graft.sources.{Sink, Source}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{IntegerLiteral, InterpretedProjection}
+import org.apache.spark.sql.catalyst.expressions.json.StructsToJsonEvaluator
 import org.apache.spark.sql.catalyst.plans.logical.{Expand, Limit, LocalRelation}
-import org.apache.spark.sql.functions.{col, struct, to_json}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Pipeline execution. Reference control flow: apply_operations
@@ -133,17 +134,19 @@ object SchemaValidator {
   *   - a row-local step (one deterministic `withColumn`: equality,
   *     concatenation, application, switching, assignation, casting,
   *     arithmetic, comparison). head(f(df)) = f(head(df)) for a 1:1
-  *     deterministic projection, and Catalyst folds a projection over a
-  *     `LocalRelation` at optimization time, so it starts no Spark job;
+  *     deterministic projection, and Catalyst's optimizer evaluates a
+  *     projection and a limit over a `LocalRelation`, so the trial's rows
+  *     are read from the optimized plan: no query, no job, no codegen;
   *   - a fold. It is a per-row `Expand` that emits each input row's melted
   *     rows in place, so the first rows of fold(head) are the full plan's
-  *     first rows. Its projections are evaluated on the driver: no job;
+  *     first rows. Its projections are evaluated on the driver: no query;
   *   - a left or inner bind whose right side `Ops.shouldBroadcast` accepts.
   *     The full plan is then a broadcast hash join that streams its left
   *     side in order, so the head joined with the same right side gives the
   *     same first rows in the same order, matches of a duplicate right key
   *     included (both plans build the same hash relation from the same
-  *     right input). It runs the join's jobs over the right input, not over
+  *     right input). The head is one partition, so the trial is the
+  *     broadcast job over the right input plus one take, and nothing reads
   *     the lazy prefix. An inner bind whose head matches fewer than
   *     `sampleRows` rows proves nothing about the rows after the head, and
   *     takes the full path.
@@ -153,9 +156,10 @@ object SchemaValidator {
   * only the trial's job. Every other step (cross and outer binds, a bind
   * that is not broadcast, the extended ops, a frame with no remembered
   * rows, a nondeterministic plan) runs one bounded `limit(sampleRows)` job
-  * over the whole lazy plan, and `sampleJson` serves a trial's rows without
-  * starting a job. Either way the step is first built on the full lazy
-  * frame, so analysis errors surface exactly as in a pipeline run.
+  * over the whole lazy plan. `sampleJson` of a tried frame renders the
+  * trial's rows on the driver with no query. Either way the step is first
+  * built on the full lazy frame, so analysis errors surface exactly as in a
+  * pipeline run.
   */
 object AgentApi {
 
@@ -189,17 +193,26 @@ object AgentApi {
   private def localFrame(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
-  /** A trial's rows. Catalyst folds projections over local rows, but not a
-    * fold's `Expand`; its projections are evaluated here, on the driver, so
-    * a fold on a head starts no job either.
+  /** A trial's rows. On a head, Catalyst's optimizer evaluates a row-local
+    * step's projection and the limit over the local rows, leaving a
+    * `LocalRelation` whose rows are read here: no physical plan, no SQL
+    * execution and no codegen. It does not fold a fold's `Expand`, whose
+    * projections are evaluated here too. Either way the trial starts no
+    * job, and a runtime error (an ANSI cast) raises in `optimizedPlan`.
     */
-  private def collectTrial(trial: DataFrame): Array[Row] = trial.queryExecution.optimizedPlan match {
-    case Limit(IntegerLiteral(n), Expand(projections, _, local: LocalRelation)) =>
+  private def collectTrial(trial: DataFrame): Array[Row] = {
+    def rows(data: Iterator[InternalRow]): Array[Row] = {
       val toRow = CatalystTypeConverters.createToScalaConverter(trial.schema)
-      val expand = projections.map(new InterpretedProjection(_, local.output))
-      local.data.iterator.flatMap(r => expand.iterator.map(p => toRow(p(r)).asInstanceOf[Row]))
-        .take(n).toArray
-    case _ => trial.collect()
+      data.map(toRow(_).asInstanceOf[Row]).toArray
+    }
+    trial.queryExecution.optimizedPlan match {
+      case local: LocalRelation => rows(local.data.iterator)
+      case Limit(IntegerLiteral(n), local: LocalRelation) => rows(local.data.iterator.take(n))
+      case Limit(IntegerLiteral(n), Expand(projections, _, local: LocalRelation)) =>
+        val expand = projections.map(new InterpretedProjection(_, local.output))
+        rows(local.data.iterator.flatMap(r => expand.iterator.map(_(r))).take(n))
+      case _ => trial.collect()
+    }
   }
 
   /** Trial-apply one op (the reference's trial execution, main.py:255):
@@ -219,8 +232,17 @@ object AgentApi {
       }
       val onHead = base
         .filter(_ => headOrdered(op, inputs) && next.queryExecution.analyzed.deterministic)
-        .map(rows => collectTrial(
-          Ops.applyOp(spark, localFrame(spark, rows, df.schema), op, inputs).limit(sampleRows)))
+        .map { rows =>
+          // a bind's head is one partition: the take after its broadcast
+          // join is then one job, where a head split across partitions
+          // needs a second, scaled-up one. Any other step keeps the
+          // `LocalRelation`, whose projection the optimizer folds.
+          val head = op match {
+            case _: Bind => spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), df.schema)
+            case _ => localFrame(spark, rows, df.schema)
+          }
+          collectTrial(Ops.applyOp(spark, head, op, inputs).limit(sampleRows))
+        }
         // fewer rows than asked from a head that is not the whole frame
         // (an inner bind with few matches) says nothing of the rows after it
         .filter(_.length == sampleRows || base.exists(_.length < sampleRows))
@@ -244,15 +266,19 @@ object AgentApi {
 
   /** JSON sample of the first n rows (the reference sends head(3) to the
     * LLM, main.py:136-137). A frame returned by `tryApply` with
-    * `n ≤ sampleRows` is served from the trial's rows with no Spark job;
-    * `to_json` over them renders exactly as `Dataset.toJSON`.
+    * `n ≤ sampleRows` is served from the trial's rows on the driver, with
+    * no query: each row goes through the evaluator of Spark's `to_json`,
+    * which renders exactly as `Dataset.toJSON`.
     */
   def sampleJson(df: DataFrame, n: Int = 3): String = {
     val json = headOf(df, n) match {
       case Some(rows) =>
-        localFrame(df.sparkSession, rows, df.schema).select(to_json(struct(col("*"))))
-      case None => df.limit(n).toJSON.toDF()
+        val conf = df.sparkSession.sessionState.conf
+        val toJson = StructsToJsonEvaluator(Map.empty, df.schema, Some(conf.sessionLocalTimeZone))
+        val toInternal = CatalystTypeConverters.createToCatalystConverter(df.schema)
+        SQLConf.withExistingConf(conf)(rows.map(r => toJson.evaluate(toInternal(r)).toString))
+      case None => df.limit(n).toJSON.toDF().collect().map(_.getString(0))
     }
-    json.collect().map(_.getString(0)).mkString("[", ",", "]")
+    json.mkString("[", ",", "]")
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.plans.{FileDef, SchemaType}
+import graft.plans.FileDef
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}

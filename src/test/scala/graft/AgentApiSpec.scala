@@ -2,10 +2,13 @@ package graft
 
 import graft.operators.Ops
 import graft.plans._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{lit, rand}
+import org.apache.spark.sql.types._
 
 /** The three primitives the external LLM flow-generation loop consumes
   * (SURVEY §3.2): tryApply (trial-run feedback), schemaDiff, sampleJson.
@@ -130,13 +133,15 @@ class AgentApiSpec extends SparkSpec {
     assert(trial(spark.range(6).toDF("id").withColumn("r", rand(7))) > 0)
   }
 
-  /** Jobs, SQL executions (actions) and task input rows started while
-    * `body` runs; a job outside any execution counts as one.
+  /** Jobs, SQL executions (actions, also one that starts no job) and task
+    * input rows started while `body` runs; a job outside any execution
+    * counts as one.
     */
   private final case class Work(jobs: Int, executions: Int, rowsRead: Long)
 
   private def workDuring[T](body: => T): (T, Work) = {
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val rows = new java.util.concurrent.atomic.AtomicLong()
     val out = listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(
@@ -144,9 +149,20 @@ class AgentApiSpec extends SparkSpec {
           .getOrElse(s"job ${e.jobId}"))
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(e.taskMetrics).foreach(m => rows.addAndGet(m.inputMetrics.recordsRead))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => queries.add(s.executionId.toString)
+        case _ =>
+      }
     })(body)
     val ids = jobs.toArray.toSeq
-    (out, Work(ids.size, ids.distinct.size, rows.get))
+    (out, Work(ids.size, (ids ++ queries.toArray.toSeq).distinct.size, rows.get))
+  }
+
+  /** Janino compiles (generated projections, whole-stage code) during `body`. */
+  private def compilesDuring[T](body: => T): (T, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val out = body
+    (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
   }
 
   /** Replays `chain` from `base` through tryApply. The last step's schema
@@ -253,6 +269,57 @@ class AgentApiSpec extends SparkSpec {
       val expected = intercept[IllegalArgumentException](Ops.applyOp(spark, folded, unfold, Map.empty))
       assert(AgentApi.tryApply(spark, recorded, unfold, Map.empty) == Left(expected.getMessage))
     } finally System.clearProperty("graft.unfold.maxKeys")
+  }
+
+  test("a row-local step on a recorded head and its sample run no query and compile no code") {
+    // a column layout no other test compiles: a query over it would
+    // generate and compile its own projections
+    val schema = StructType(Seq(
+      StructField("s", ShortType), StructField("f", FloatType), StructField("b", ByteType),
+      StructField("m", DecimalType(13, 5)), StructField("d", DateType), StructField("t", StringType),
+      StructField("z", BooleanType), StructField("k", ShortType), StructField("g", FloatType)))
+    val rows = (1 to 4).map(i => Row(i.toShort, i * 0.5f, (-i).toByte, BigDecimal(s"$i.25"),
+      java.sql.Date.valueOf(s"2024-0$i-1$i"), s"v$i", i % 2 == 0, (i * 3).toShort, -i * 1.25f))
+    val base = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val chain = Seq(Equality("t", Some("t2")), Casting("s", SchemaType.Flt, Some("sf")))
+    val recorded = applied(AgentApi.tryApply(spark, base, chain.head, Map.empty))
+    val (((next, sample), work), compiles) = compilesDuring(workDuring {
+      val next = applied(AgentApi.tryApply(spark, recorded, chain(1), Map.empty))
+      (next, AgentApi.sampleJson(next, 3))
+    })
+    assert(work.jobs == 0)
+    assert(work.executions == 0)
+    assert(compiles == 0)
+    val full = chain.foldLeft(base)((acc, op) => Ops.applyOp(spark, acc, op, Map.empty))
+    assert(next.schema == full.schema)
+    assert(sample == fullSample(full, 3))
+  }
+
+  test("sampleJson of a recorded head renders numbers, strings, nulls and dates as toJSON does") {
+    val schema = StructType(Seq(StructField("i", IntegerType), StructField("l", LongType),
+      StructField("x", DoubleType), StructField("s", StringType), StructField("d", DateType),
+      StructField("b", BooleanType)))
+    val date = java.sql.Date.valueOf("2024-02-29")
+    val rows = Seq(
+      Row(1, 1L, Double.NaN, "a \"quoted\" word", date, true),
+      Row(-2, Long.MaxValue, Double.PositiveInfinity, "back\\slash", null, false),
+      Row(null, null, Double.NegativeInfinity, "new\nline", date, null),
+      Row(0, Long.MinValue, -0.0, "héllo 日本 🙂", java.sql.Date.valueOf("1970-01-01"), true),
+      Row(Int.MinValue, -1L, 1e16, "", date, false),
+      Row(Int.MaxValue, 0L, 1e-5, null, null, true),
+      Row(7, 7L, null, "tab\there", date, null))
+    val base = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val n = rows.size
+    val step = Equality("s", Some("s2"))
+    val next = applied(AgentApi.tryApply(spark, base, step, Map.empty, sampleRows = n))
+    val (sample, work) = workDuring(AgentApi.sampleJson(next, n))
+    assert(work.executions == 0)
+    assert(sample == fullSample(Ops.applyOp(spark, base, step, Map.empty), n))
+  }
+
+  test("a broadcast left bind on a recorded head runs its broadcast job and one take") {
+    val (_, work) = lastStep(ordersCsv, Seq(seen, bindOn("10,FR\n11,DE\n12,FR\n", "left")))
+    assert(work.jobs == 2)
   }
 
   test("feedback is never empty, even for exceptions without a message") {

@@ -294,6 +294,20 @@ class MiniLambdaSpec extends SparkSpec {
     assert(run("lambda r: len([r['name'], 1])") == Seq(Some(2L), Some(2L), Some(2L)))
   }
 
+  test("== and != between a str and a number or bool evaluate both operands") {
+    // expected values from python3
+    assert(run("lambda r: r['x'] // 1 != 'a'", Seq("x")) == Seq(Some(true), Some(true), Some(true)))
+    assert(run("lambda r: r['b'] == r['name']", Seq("b", "name")) == Seq(Some(false), Some(false), Some(true)))
+    // Python raises AttributeError on None.upper(): a failed operand's null
+    assert(run("lambda r: r['name'].upper() == 1") == Seq(Some(false), Some(false), None))
+    // ZeroDivisionError on the second row (0 // 0 and 0 % 0), over columns
+    // that cannot be null
+    intercept[Exception](run("lambda r: r['x'] // r['i'] == 'a'", Seq("x", "i")))
+    intercept[Exception](run("lambda r: 'a' != r['i'] % r['x']", Seq("x", "i")))
+    // ValueError: float('x')
+    intercept[Exception](run("lambda r: float(float(r['s'])) != ['42', '42'][-2]", Seq("s")))
+  }
+
   test("replace with an empty or computed old, and title(), follow Python") {
     // expected values from python3
     assert(evalOne("lambda r: 'x'.replace('', '日本') + ''.replace('', '$') + '😀a'.replace('', '-')") ==
