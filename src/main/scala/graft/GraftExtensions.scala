@@ -30,7 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
               (builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
         FunctionIdentifier(name),
-        new ExpressionInfo(clazz, null, name, usage, ""),
+        new ExpressionInfo(clazz, null, name, usage, "", "", "", "", "", "", ""),
         builder))
 
     inject("graft_simhash64", classOf[functions.SimHash64Expr].getName,

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Persisted IVF-ANN index: the missing piece between "train an index in
   * one job" ([[IvfIndex]]) and how a 100 TB corpus actually serves ANN —
@@ -200,7 +201,7 @@ object AnnIndex {
     * the next [[retrain]] (or per-cell compaction) physically drops the
     * rows. O(deleted) now — never a synchronous index rewrite.
     */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
+  def delete(path: String, ids: DataFrame): Unit =
     graft.sources.Tombstones.add(ids, path)
 
   /** Live root of a (possibly retrained) index: a RETRAIN rewrites both
@@ -341,7 +342,7 @@ object AnnIndex {
       .select(explode(graft.functions.VectorExprs.nearestCells(
         col(vecCol).cast("array<double>"), cents, nProbe)).as("cell"))
       .distinct().collect().map(_.getInt(0)).sorted
-    val pruned = cells.filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
+    val pruned = cells.filter(col("cell").isin(ArraySeq.unsafeWrapArray(probedCells.map(Integer.valueOf)): _*))
     IvfIndex.topK(pruned, queries, idCol, vecCol, cents, k, nProbe)
   }
 }

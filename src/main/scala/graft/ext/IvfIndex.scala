@@ -71,6 +71,7 @@ object IvfIndex {
         .collect()
         .zipWithIndex
         .map { case (r, i) => i -> r.getSeq[Double](1).toArray }
+        .toIndexedSeq
 
       for (_ <- 0 until iters) {
         val assigned = src.withColumn("cell", nearestCell(col("v"), centroids))

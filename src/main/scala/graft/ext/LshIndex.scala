@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Persisted MinHash-LSH near-duplicate LEDGER: the dedup analog of the
   * persisted ANN index ([[AnnIndex]]). A 100 TB corpus does not re-run
@@ -224,7 +225,7 @@ object LshIndex {
     * rewrite deferred to scheduled maintenance — a GDPR erasure against
     * a 100 TB ledger must not be a synchronous rewrite.
     */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
+  def delete(path: String, ids: DataFrame): Unit =
     graft.sources.Tombstones.add(ids, path)
 
   /** The live band postings (manifest-resolved); empty-ledger-safe only
@@ -301,7 +302,7 @@ object LshIndex {
     // side bounded by |batch|·bands, no giant expression tree.
     val ledger0 =
       if (keys.length <= pushLimit)
-        ledgerAll.filter(col("bkey").isin(keys.map(java.lang.Long.valueOf): _*))
+        ledgerAll.filter(col("bkey").isin(ArraySeq.unsafeWrapArray(keys.map(java.lang.Long.valueOf)): _*))
       else ledgerAll.join(broadcast(probe.select("bkey").distinct()),
         Seq("bkey"), "left_semi")
     // boilerplate-bucket cap, ledger side (see scaladoc)
@@ -332,7 +333,7 @@ object LshIndex {
       .collect().map(_.getLong(0))
     val oldSigsAll = sigsOpt.get
     val oldSigs = (if (candIds.length <= pushLimit)
-        oldSigsAll.filter(col("id").isin(candIds.map(java.lang.Long.valueOf): _*))
+        oldSigsAll.filter(col("id").isin(ArraySeq.unsafeWrapArray(candIds.map(java.lang.Long.valueOf)): _*))
       else oldSigsAll)
       .select(col("id").as("id_old"), col("sig").as("sig_a"))
     val newSigs = broadcast(

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.immutable.ArraySeq
 
 /** Dataset profiling for pipeline QA: per-column stats in ONE pass over the
   * data (a single aggregate row, unpivoted to one row per column) — at
@@ -75,7 +76,8 @@ object Skew {
     */
   def saltedSumCount(df: DataFrame, keys: Seq[String], valueCol: String,
                      salts: Int = 16): DataFrame = {
-    val salt = pmod(xxhash64(struct(df.columns.map(col): _*)), lit(salts)).as("__salt__")
+    val salt = pmod(xxhash64(struct(ArraySeq.unsafeWrapArray(df.columns.map(col)): _*)),
+      lit(salts)).as("__salt__")
     df.select((keys.map(col) :+ col(valueCol) :+ salt): _*)
       .groupBy((keys.map(col) :+ col("__salt__")): _*)
       .agg(sum(col(valueCol)).as("__psum__"), count(lit(1)).as("__pn__"))
@@ -100,7 +102,7 @@ object Skew {
                  joinType: String = "inner", salts: Int = 16): DataFrame = {
     require(joinType == "inner" || joinType == "left",
       s"saltedJoin supports inner/left, got $joinType")
-    val salt = pmod(xxhash64(struct(left.columns.map(col): _*)), lit(salts))
+    val salt = pmod(xxhash64(struct(ArraySeq.unsafeWrapArray(left.columns.map(col)): _*)), lit(salts))
     val saltedLeft = left.withColumn("__salt__", salt)
     val replicatedRight = right.withColumn("__salt__",
       explode(sequence(lit(0L), lit(salts - 1L))))

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Extended relational operators Spark lacks natively, built so the plan
   * shape survives 100 TB:
@@ -47,7 +48,8 @@ object Relational {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val carried = unioned.withColumn("__pay__", last(col("__pay__"), ignoreNulls = true).over(w))
     carried.filter(col("__tag__") === 1)
-      .select(left.columns.map(col) ++ payload.map(p => col("__pay__").getField(p).as(p)): _*)
+      .select(ArraySeq.unsafeWrapArray(
+        left.columns.map(col) ++ payload.map(p => col("__pay__").getField(p).as(p))): _*)
   }
 
   /** Interval-containment join: every left row where

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.immutable.ArraySeq
 
 /** Keyword search over the corpus: BM25 (Robertson/Spärck Jones) ranking
   * as one declarative plan.
@@ -172,7 +173,7 @@ object Search {
     val doclensAll = spark.read.parquet(s"$path/doclens")
     val doclens =
       if (matchedIds.length <= pushLimit)
-        doclensAll.filter(col(idCol).isin(matchedIds: _*))
+        doclensAll.filter(col(idCol).isin(ArraySeq.unsafeWrapArray(matchedIds): _*))
       else doclensAll
     val base = pivoted.join(doclens, Seq(idCol))
       .select((col(idCol) +: col("dl") +:

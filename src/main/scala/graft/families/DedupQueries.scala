@@ -195,7 +195,7 @@ object DedupQueries {
       val cohort = d.filter(col("doc_id") < 250)
       requireLedgerOracleValid(cohort)
       ext.LshIndex.write(cohort, "doc_id", "text", path)
-      ext.LshIndex.delete(s, path,
+      ext.LshIndex.delete(path,
         cohort.filter(col("doc_id") % 10 === 0).select("doc_id"))
       ext.LshIndex.probePairs(s, path, d.filter(col("doc_id") >= 250),
         "doc_id", "text", threshold = 0.5)
@@ -296,7 +296,7 @@ object DedupQueries {
       s"""SELECT CAST(s_pct AS INTEGER) AS s_pct,
          |  ${lshCurveSql(4, 16)} AS p_b16_r4,
          |  ${lshCurveSql(8, 8)} AS p_b8_r8
-         |FROM (SELECT unnest(range(5, 100, 5)) AS s_pct)""".stripMargin)((s, dir) => {
+         |FROM (SELECT unnest(range(5, 100, 5)) AS s_pct)""".stripMargin)((s, _) => {
       // LSH banding planner: the collision S-curves P(candidate | s) =
       // 1 − (1 − s^r)^b for the SHIPPED MinHash config (k=64: b=16,r=4)
       // and the tighter alternative (b=8,r=8), tabulated at Jaccard

@@ -1581,8 +1581,6 @@ object EventQueries {
       // exceeding τ — so the τ ∈ {15, 30, 60} min panel needs ONE
       // user-partitioned lag pass and a conditional agg, not three
       // sessionizations. The parameter-sweep-as-conditional-agg pattern.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       val gaps = events(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"))
         .withColumn("gap_s",

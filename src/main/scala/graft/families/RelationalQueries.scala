@@ -456,14 +456,18 @@ object RelationalQueries {
       """WITH bands AS (SELECT event_type AS band_type, min(value) AS lo, (min(value) + max(value)) / 2 AS hi FROM events GROUP BY 1) SELECT e.event_id, e.event_type, e.value, b.band_type, b.lo, b.hi FROM events e JOIN bands b ON e.value >= b.lo AND e.value <= b.hi""")((s, dir) => {
       // the SAME interval join as q_range_join but written as a plain SQL
       // theta join and rewritten by the RangeJoinRule optimizer rule —
-      // BroadcastNestedLoopJoin becomes a bucketed equi-join; conf stays
-      // set because optimization happens when the driver executes the plan
-      if (!s.experimental.extraOptimizations.contains(plans.RangeJoinRule))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ plans.RangeJoinRule
-      s.conf.set(plans.RangeJoinRule.WidthConf, "16")
-      events(s, dir).createOrReplaceTempView("graft_events_rj")
-      s.sql("""WITH bands AS (SELECT event_type AS band_type, min(value) AS lo,
+      // BroadcastNestedLoopJoin becomes a bucketed equi-join. The rule, its
+      // width and the view live in a clone of the caller's session (a copy
+      // of its runtime conf, views and optimizer rules, same SparkContext);
+      // the frame keeps the clone, so it is optimized with the rule whenever
+      // it runs, and the caller's session is unchanged
+      val rs = org.apache.spark.sql.graftbridge.Bridge.cloneSession(s)
+      if (!rs.experimental.extraOptimizations.contains(plans.RangeJoinRule))
+        rs.experimental.extraOptimizations =
+          rs.experimental.extraOptimizations :+ plans.RangeJoinRule
+      rs.conf.set(plans.RangeJoinRule.WidthConf, "16")
+      events(rs, dir).createOrReplaceTempView("graft_events_rj")
+      rs.sql("""WITH bands AS (SELECT event_type AS band_type, min(value) AS lo,
                                      (min(value) + max(value)) / 2 AS hi
                               FROM graft_events_rj GROUP BY 1)
                SELECT e.event_id, e.event_type, e.value, b.band_type, b.lo, b.hi

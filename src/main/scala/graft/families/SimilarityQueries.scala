@@ -207,7 +207,7 @@ object SimilarityQueries {
       val path = annIndexPath(dir, "ivf_forget")
       ext.AnnIndex.write(
         ext.IvfIndex.assign(emb, "vec_id", "embedding", cents), cents, path)
-      ext.AnnIndex.delete(s, path, emb.filter(col("vec_id") % 7 === 0).select("vec_id"))
+      ext.AnnIndex.delete(path, emb.filter(col("vec_id") % 7 === 0).select("vec_id"))
       ext.AnnIndex.probeTopK(s, path, emb.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 10, nProbe = 3)
     }),
@@ -287,7 +287,7 @@ object SimilarityQueries {
       val path = annIndexPath(dir, "nsw_forget")
       ext.AnnIndex.writeGraph(
         ext.GraphAnn.buildGraph(emb, "vec_id", "embedding", degree = 8), path)
-      ext.AnnIndex.delete(s, path,
+      ext.AnnIndex.delete(path,
         emb.filter(col("vec_id") % 9 === 0 && col("vec_id") >= 8).select("vec_id"))
       ext.AnnIndex.probeGraphTopK(s, path, emb, emb.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 10, ef = 16, rounds = 3, nSeeds = 4)

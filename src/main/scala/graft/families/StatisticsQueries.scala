@@ -338,7 +338,6 @@ object StatisticsQueries {
       // rank (never a single-partition sort), then the 10-row share /
       // cumulative-share table — the curve q_gini's coefficient
       // summarizes, and q_abc's 80/15/5 classes read off.
-      import org.apache.spark.sql.expressions.Window
       val rev = T(s, dir, "orders")
         .groupBy(col("o_custkey").as("c"))
         .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_c"))
@@ -350,8 +349,6 @@ object StatisticsQueries {
         .groupBy("decile")
         .agg(count(lit(1)).as("n_customers"), sum("rev_c").as("rev_c"))
       val tot = dec.agg(sum("rev_c").as("total_c"))
-      val wc = Window.orderBy("decile")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       dec.crossJoin(broadcast(tot))
         .withColumn("share_micro", expr("(rev_c * 1000000) div total_c"))
         .withColumn("cum_share_micro",

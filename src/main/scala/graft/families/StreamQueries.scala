@@ -163,7 +163,7 @@ object StreamQueries {
       // sf0.01); a silent hash mismatch at a bigger fixture would read
       // as an engine bug when it's an oracle-assumption break
       val maxBucket = staticBanded.groupBy("band", "bhash")
-        .agg(count(lit(1)).as("n")).agg(max(col("n"))).head.getLong(0)
+        .agg(count(lit(1)).as("n")).agg(max(col("n"))).head().getLong(0)
       require(maxBucket <= 2000,
         s"stream_neardup: widest static LSH bucket has $maxBucket rows > " +
           "2000-row star cap — capped pairs would diverge from the " +

@@ -645,8 +645,6 @@ object TimeSeriesQueries {
       // (micro-rounded once per day — the only ln), monthly vol =
       // √(Σr²/n) in micro. Return indexing runs on the bounded day
       // domain (whitelisted); the month panel is tiny.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.orderBy("d")
       T(s, dir, "lineitem")
         .groupBy(col("l_shipdate").as("d"))
         .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("x"))

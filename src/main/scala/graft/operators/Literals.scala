@@ -65,7 +65,7 @@ object Literals {
          _: java.math.BigInteger => "numeric"
     case _: java.lang.Boolean | _: Boolean => "boolean"
     case _: java.util.Date | _: java.time.LocalDate => "temporal"
-    case s: String => "string"
+    case _: String => "string"
     case _ => "other"
   }
 }

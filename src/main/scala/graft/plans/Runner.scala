@@ -235,11 +235,14 @@ object AgentApi {
         .map { rows =>
           // a bind's head is one partition: the take after its broadcast
           // join is then one job, where a head split across partitions
-          // needs a second, scaled-up one. Any other step keeps the
+          // needs a second, scaled-up one. Coalescing the local rows to one
+          // partition takes no shuffle and no RDD serializer, and at most
+          // `sampleRows` rows pass through it. Any other step keeps the
           // `LocalRelation`, whose projection the optimizer folds.
+          val local = localFrame(spark, rows, df.schema)
           val head = op match {
-            case _: Bind => spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), df.schema)
-            case _ => localFrame(spark, rows, df.schema)
+            case _: Bind => local.coalesce(1)
+            case _ => local
           }
           collectTrial(Ops.applyOp(spark, head, op, inputs).limit(sampleRows))
         }

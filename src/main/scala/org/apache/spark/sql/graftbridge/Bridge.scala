@@ -15,6 +15,14 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A new session that starts as a copy of `s`: its runtime conf, temp
+    * views, functions and optimizer rules, on the same SparkContext. Later
+    * changes to either session do not reach the other (Spark keeps
+    * `cloneSession` `private[sql]`; `newSession` would drop the runtime conf).
+    */
+  def cloneSession(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   /** Apply a SparkSessionExtensions' collected function injections to a
     * registry (the step SparkSession.Builder runs at session build) —
     * lets tests exercise an extensions class against the shared session,

@@ -322,6 +322,35 @@ class AgentApiSpec extends SparkSpec {
     assert(work.jobs == 2)
   }
 
+  test("a broadcast left bind on a recorded head compiles nothing for a layout it has run") {
+    // a column layout no other test compiles; its first head bind compiles
+    // the plan's classes, and a second one, on other rows, finds them all
+    // cached: its head adds no serializer or scan projection of its own
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("h", ShortType), StructField("q", DecimalType(11, 3)),
+      StructField("y", ByteType), StructField("e", FloatType)))
+    val rows = (1 to 5).map(i =>
+      Row(i.toLong, (i * 7).toShort, BigDecimal(s"$i.125"), (-i).toByte, i * 0.75f))
+    val bind = Bind(tempCsv("flags.csv",
+        "k,on,since,w\n1,true,2024-01-02,0.5\n2,false,2024-02-03,1.5\n4,true,2024-03-04,2.5\n"),
+      Seq("k" -> SchemaType.Int64, "on" -> SchemaType.Bool, "since" -> SchemaType.Dt,
+        "w" -> SchemaType.Flt),
+      "k", "k", "left", Seq("on", "since", "w"))
+    val chain = Seq(Equality("h", Some("h2")), bind)
+    def headBind(rows: Seq[Row]): ((DataFrame, Work), Long) = {
+      val base = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      val recorded = applied(AgentApi.tryApply(spark, base, chain.head, Map.empty))
+      compilesDuring(workDuring(applied(AgentApi.tryApply(spark, recorded, bind, Map.empty))))
+    }
+    headBind(rows)
+    val ((next, work), compiles) = headBind(rows.reverse)
+    assert(work.jobs == 2)
+    assert(compiles == 0)
+    val full = chain.foldLeft(spark.createDataFrame(java.util.Arrays.asList(rows.reverse: _*), schema))(
+      (acc, op) => Ops.applyOp(spark, acc, op, Map.empty))
+    assert(AgentApi.sampleJson(next, 3) == fullSample(full, 3))
+  }
+
   test("feedback is never empty, even for exceptions without a message") {
     assert(AgentApi.feedback(new IllegalArgumentException("bad column")) == "bad column")
     assert(AgentApi.feedback(new NullPointerException()) == "java.lang.NullPointerException")

@@ -114,7 +114,7 @@ class AnnIndexSpec extends SparkSpec {
     val dead = emb.filter(col("vec_id") % 5 === 3).select("vec_id")
     val deadIds = dead.collect().map(_.getLong(0)).toSet
     assert(deadIds.nonEmpty)
-    AnnIndex.delete(spark, path, dead)
+    AnnIndex.delete(path, dead)
     // adjacency: neither endpoint may be a deleted node
     val edges = AnnIndex.openGraph(spark, path).collect()
     assert(edges.forall(r => !deadIds(r.getLong(0)) && !deadIds(r.getLong(1))),
@@ -150,7 +150,7 @@ class AnnIndexSpec extends SparkSpec {
     val (c3, _) = AnnIndex.open(spark, path)
     assert(!(c3 eq c1) && c3.count() == emb.count())
     // a tombstone commit invalidates: the new open drops the ids
-    AnnIndex.delete(spark, path, emb.filter(col("vec_id") % 7 === 0).select("vec_id"))
+    AnnIndex.delete(path, emb.filter(col("vec_id") % 7 === 0).select("vec_id"))
     val (c4, _) = AnnIndex.open(spark, path)
     assert(!(c4 eq c3) && c4.count() ==
       emb.filter(!(col("vec_id") % 7 === 0)).count())
@@ -246,7 +246,7 @@ class AnnIndexSpec extends SparkSpec {
     val before = rowsOf(AnnIndex.probeTopK(spark, path, queries,
       "vec_id", "embedding", 10, 3))
     val dead = before.map(_._3).take(3).toSeq // delete known neighbors
-    AnnIndex.delete(spark, path, dead.toDF("vec_id"))
+    AnnIndex.delete(path, dead.toDF("vec_id"))
     val after = rowsOf(AnnIndex.probeTopK(spark, path, queries,
       "vec_id", "embedding", 10, 3))
     assert(after.forall(r => !dead.contains(r._3)),
@@ -264,7 +264,7 @@ class AnnIndexSpec extends SparkSpec {
     // per-cell compaction purges without clearing the set
     val path2 = tmpIndex("forget-cell")
     AnnIndex.write(IvfIndex.assign(emb, "vec_id", "embedding", cents), cents, path2)
-    AnnIndex.delete(spark, path2, dead.toDF("vec_id"))
+    AnnIndex.delete(path2, dead.toDF("vec_id"))
     val cell = graft.sources.Snapshots.read(spark, s"$path2/cells").get
       .filter(col("id") === dead.head).select("cell").head().getInt(0)
     AnnIndex.compactCell(spark, path2, cell)

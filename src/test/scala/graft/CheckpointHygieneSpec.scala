@@ -20,7 +20,6 @@ import graft.ext.{Ckpt, Graph, GraphAnn}
   */
 class CheckpointHygieneSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   private def residentIds(): Set[Int] =

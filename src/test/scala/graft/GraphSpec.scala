@@ -5,7 +5,6 @@ import graft.ext.Graph
 
 class GraphSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] =

@@ -48,7 +48,7 @@ class LshIndexSpec extends SparkSpec {
     LshIndex.write(ledgerCohort, "doc_id", "text", path)
     val deadIds = expected.map(_._1).take(2).toSeq
     assert(deadIds.nonEmpty)
-    LshIndex.delete(spark, path, deadIds.toDF("doc_id"))
+    LshIndex.delete(path, deadIds.toDF("doc_id"))
     val afterDelete = pairsOf(LshIndex.probePairs(spark, path, incoming,
       "doc_id", "text", 0.5))
     assert(afterDelete == expected.filterNot(p => deadIds.contains(p._1)),

@@ -14,7 +14,6 @@ import graft.sources.{SnapCache, Snapshots}
   */
 class ManifestLogSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   private def tmp(name: String): String = {
@@ -315,14 +314,14 @@ class ManifestLogSpec extends SparkSpec {
     Snapshots.listProbe = r => walked.add(r)
     try {
       ext.LshIndex.append(docs.filter(col("doc_id") >= 80), "doc_id", "text", ledger)
-      ext.LshIndex.delete(spark, ledger, Seq(5L).toDF("id"))
+      ext.LshIndex.delete(ledger, Seq(5L).toDF("id"))
       ext.LshIndex.compact(spark, ledger)
       assert(ext.LshIndex.probePairs(spark, ledger,
         docs.filter(col("doc_id") >= 100), "doc_id", "text", 0.2).count() > 0)
       ext.AnnIndex.append(
         (60L until 70L).map(i => (i, Array(i.toDouble % 7, (i % 3).toDouble)))
           .toDF("id", "v"), "id", "v", ann)
-      ext.AnnIndex.delete(spark, ann, Seq(3L).toDF("id"))
+      ext.AnnIndex.delete(ann, Seq(3L).toDF("id"))
       ext.AnnIndex.compactCell(spark, ann, cell = 0)
       ext.AnnIndex.retrain(spark, ann, k = 4)
     } finally Snapshots.listProbe = null

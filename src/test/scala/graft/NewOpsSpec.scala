@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
 class NewOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
-
   test("histogram: equi-width buckets cover [min,max], last bucket right-closed") {
     val df = (0 to 100).map(_.toDouble).toDF("v")
     val h = Profile.histogram(df, "v", 10).collect()

@@ -10,12 +10,17 @@ import org.apache.spark.sql.functions._
   */
 class RangeRuleSpec extends SparkSpec {
 
+  /** Runs `f` with the rule on at `width`, then leaves the shared session
+    * as it found it: no rule, no width.
+    */
   private def withRule[A](width: String)(f: => A): A = {
-    if (!spark.experimental.extraOptimizations.contains(RangeJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RangeJoinRule
+    val rules = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = rules :+ RangeJoinRule
     spark.conf.set(RangeJoinRule.WidthConf, width)
-    try f finally spark.conf.set(RangeJoinRule.WidthConf, "0")
+    try f finally {
+      spark.experimental.extraOptimizations = rules
+      spark.conf.unset(RangeJoinRule.WidthConf)
+    }
   }
 
   private def fixtures(): (DataFrame, DataFrame) = {
@@ -83,5 +88,16 @@ class RangeRuleSpec extends SparkSpec {
     new GraftExtensions().apply(ext)
     val rules = org.apache.spark.sql.graftbridge.Bridge.optimizerRules(ext, spark)
     assert(rules.contains(RangeJoinRule))
+  }
+
+  test("q_range_sql rewrites its theta join and leaves the caller's session unchanged") {
+    val df = SparkEntry.queries("q_range_sql")(spark, sf0001)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+      s"nested loop survived:\n$plan")
+    assert(plan.contains("Generate explode"), s"no bucket explode in:\n$plan")
+    assert(df.collect().nonEmpty)
+    assert(spark.conf.getOption(RangeJoinRule.WidthConf).isEmpty)
+    assert(!spark.experimental.extraOptimizations.contains(RangeJoinRule))
   }
 }

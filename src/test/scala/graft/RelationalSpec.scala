@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
 class RelationalSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
-
   test("asofJoin attaches the latest right row at or before the left time, per key") {
     val left = Seq(
       (1L, "u1", ts("2024-01-01 10:00:00")), // before any right row → null

@@ -5,7 +5,6 @@ import graft.ext.Robust
 
 class RobustSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("winsorize: nearest-rank bounds on a hand group") {

@@ -9,7 +9,6 @@ import java.sql.Date
   */
 class Round5aaSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_croston: occurrence-index kernel smoothing matches integer replay") {

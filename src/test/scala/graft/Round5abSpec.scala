@@ -9,10 +9,7 @@ import java.sql.Date
   */
 class Round5abSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_mannkendall: strictly rising 5-day series with one tie pair") {
     // x = 1, 2, 2, 3, 4 (dollars) → S: pairs (i<j): all rising except the

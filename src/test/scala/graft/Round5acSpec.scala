@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions.lit
   */
 class Round5acSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("sim_radius: hand-built vectors fall inside/outside the 0.25 ball") {

@@ -7,10 +7,7 @@ package graft
   */
 class Round5adSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_unpivot: 2-row melt aggregates per metric") {
     val li = Seq((2.0, 10.0, 0.05), (3.0, 20.0, 0.10))

@@ -6,10 +6,7 @@ package graft
   */
 class Round5aeSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("ev_balance: planted value imbalance is flagged, hour stays balanced") {
     // arm 0: values 100, 200; arm 1: values 900, 1000 → huge SMD on value;

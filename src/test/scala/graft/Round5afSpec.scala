@@ -7,10 +7,7 @@ package graft
   */
 class Round5afSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("ev_features_pit: hand-counted trailing windows, no leakage") {
     val ev = Seq(

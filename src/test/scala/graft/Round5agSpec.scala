@@ -8,7 +8,6 @@ import java.sql.Date
   */
 class Round5agSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_mcnemar: hand-drawn discordant pairs") {

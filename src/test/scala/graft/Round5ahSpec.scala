@@ -8,10 +8,7 @@ import java.sql.Date
   */
 class Round5ahSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_paired_ttest: three matched parts, d = (+100, +200, +300)") {
     val li = (1 to 3).flatMap { p =>

@@ -6,10 +6,7 @@ package graft
   */
 class Round5aiSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("ta_rouge: hand-scored consecutive pair") {
     val docs = Seq(

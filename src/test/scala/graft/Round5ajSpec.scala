@@ -8,10 +8,7 @@ import java.sql.Date
   */
 class Round5ajSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_xyz: steady part lands in X, erratic in Z, single-month excluded") {
     val li = Seq(

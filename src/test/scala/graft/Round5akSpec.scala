@@ -7,10 +7,7 @@ package graft
   */
 class Round5akSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("ev_shapley: symmetry and efficiency on a planted design") {
     // 4 users: {view}→conv, {view}→no, {click}→conv, {view,click}→conv

@@ -9,10 +9,7 @@ import java.sql.Date
   */
 class Round5alSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_kendall: one discordant pair and a y-tie, on paper") {
     // days: (x, y) = (1,1), (2,2), (3,2), (4,0)

@@ -8,10 +8,7 @@ import java.sql.Date
   */
 class Round5amSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_cpk: centered process has cpk = cp, off-center is penalized") {
     // A: values 24, 26 → mean 25 (center of [5,45]), s = sqrt(2)

@@ -8,7 +8,6 @@ import java.sql.Date
   */
 class Round5anSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_hhi: monopoly scores 1e6, an even duopoly 0.5e6") {

@@ -8,7 +8,6 @@ import java.sql.Date
   */
 class Round5aoSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_dense_ids: name order, dense, 0-based, no collisions") {

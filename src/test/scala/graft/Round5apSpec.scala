@@ -6,10 +6,7 @@ package graft
   */
 class Round5apSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_relative_risk: planted 2×2 matches the closed forms") {
     // exposed (disc ≥ 5%): 10 R, 30 N; unexposed: 5 R, 55 N

@@ -9,7 +9,6 @@ import java.sql.Date
   */
 class Round5aqSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_evt: three block maxima match the method-of-moments closed form") {

@@ -7,7 +7,6 @@ package graft
   */
 class Round5arSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("ta_negsample: 3/4-power smoothing compresses the head") {

@@ -9,10 +9,7 @@ import java.sql.Date
   */
 class Round5asSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_rev_rec: 100.01 spreads as 3334+3333+3334... no — exactly") {
     // one order of $100.01 = 10001c on Jan 15 → thirds 3333 r2:

@@ -5,7 +5,6 @@ package graft
   */
 class Round5atSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("ta_truncation: a 70-token doc loses exactly 6 tokens at 64") {

@@ -8,7 +8,6 @@ import java.sql.Date
   */
 class Round5auSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_weekday: 2024-01-01 is a Monday (wd 0) in both engines") {

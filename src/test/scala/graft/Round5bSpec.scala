@@ -14,7 +14,6 @@ import org.apache.spark.sql.functions._
   */
 class Round5bSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
 

@@ -13,7 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class Round5cSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
 

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class Round5dSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
 

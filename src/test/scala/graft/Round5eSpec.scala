@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class Round5eSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   private val ts0 = java.sql.Timestamp.valueOf("2024-02-01 12:00:00")

@@ -11,10 +11,8 @@ import org.apache.spark.sql.functions._
   */
 class Round5fSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
   private def d(s: String) = java.sql.Date.valueOf(s)
 
   test("ev_ltv: decay table applied per year offset, all-integer credits") {

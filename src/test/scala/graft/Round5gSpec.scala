@@ -11,10 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5gSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("dd_url: four variants collapse to two canonical groups per key") {
     val docs = (0L to 7L).map(i => (i, "t")).toDF("doc_id", "text")

@@ -11,10 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5hSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_treeagg: subtree counts and sums on a hand-drawn hierarchy") {
     val orders = Seq((1L, 123L, 1.00), (2L, 124L, 2.00), (3L, 5L, 4.00))

@@ -10,10 +10,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5iSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_cohend: hand-solved pooled sd gives d = -1.5*sqrt(3)") {
     val li = Seq(("R", 1.00), ("R", 2.00), ("R", 3.00), ("N", 4.00), ("N", 6.00))

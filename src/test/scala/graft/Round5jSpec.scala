@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class Round5jSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("ta_span_corrupt: masked + targets reconstruct every sf0.001 doc") {

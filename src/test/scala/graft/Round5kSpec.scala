@@ -10,10 +10,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5kSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("ta_tfidf: two-doc corpus with idf = ln 2 micro") {
     val docs = Seq((1L, "a a b", "x"), (2L, "b c", "x")).toDF("doc_id", "text", "source")

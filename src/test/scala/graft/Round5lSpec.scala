@@ -9,10 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5lSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_stl: constant series decomposes to zero seasonal and residual") {
     val li = (1 to 7).map(dd => (ts(s"2024-01-0$dd 00:00:00"), 1.00))

@@ -10,10 +10,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5mSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_lorenz: arithmetic ladder fills one customer per decile") {
     val orders = (1 to 10).map(i => (i.toLong, i.toLong, i * 1.00))

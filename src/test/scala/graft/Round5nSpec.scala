@@ -9,10 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5nSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_ewma: constant series is a fixed point; step response exact") {
     val li = Seq(

@@ -10,10 +10,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5oSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_percentile_cont: exact ranks and /4-remainder interpolation") {
     val li = ((1 to 5).map(i => ("R", i * 1.00)) ++ (1 to 4).map(i => ("N", i * 1.00)))

@@ -9,10 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5pSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("stream_srm: streamed 60/40 arm counts flag exactly like batch") {
     val ev = ((0 until 60).map(i =>

@@ -9,10 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5qSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_runs_test: hand-walked sequence gives R=4, z=0.6/sqrt(0.84)") {
     // daily cents 100,400,200,500,300,600; median 300 (dropped) →

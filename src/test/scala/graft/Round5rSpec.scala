@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
   */
 class Round5rSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_ttest: Welch t and Satterthwaite df match an independent calc") {

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class Round5sSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_anova: three hand-solved groups (SSB 388333, SSW 40000)") {

@@ -9,10 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5tSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_freshness: lag versus the 200-day SLA flags only the stale feed") {
     val orders = Seq((1L, 1L, ts("1998-12-01 00:00:00"), 1.0, "O"))

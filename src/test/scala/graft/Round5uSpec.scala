@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class Round5uSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_tukey: fences from hand-solved quartiles catch the outlier") {

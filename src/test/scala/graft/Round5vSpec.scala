@@ -11,10 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5vSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   private def chunk(t: String): Seq[String] = {
     val p = Array(1L, 31L, 961L, 29791L, 923521L, 28629151L, 887503681L, 27512614111L)

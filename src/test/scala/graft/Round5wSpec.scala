@@ -9,10 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class Round5wSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("ev_streaks: 3-day, 1-day and 2-day islands from the calendar") {
     val ev = Seq(

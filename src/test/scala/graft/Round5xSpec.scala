@@ -8,10 +8,7 @@ package graft
   */
 class Round5xSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("q_wilson: 1-of-4 purchase day matches the closed form exactly") {
     val ev = Seq(

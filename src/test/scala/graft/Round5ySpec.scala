@@ -6,7 +6,6 @@ package graft
   */
 class Round5ySpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   private def lat(key: Long, mul: Long) = (key * mul) % 180000000L - 90000000L

@@ -8,7 +8,6 @@ import java.sql.Date
   */
 class Round5zSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_fd_check: planted single- and multi-valued groups are counted") {

@@ -11,7 +11,6 @@ import java.sql.{Date, Timestamp}
   */
 class Round6aSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_friedman: perfectly consistent ranking reaches the chi2 maximum; incomplete days drop") {

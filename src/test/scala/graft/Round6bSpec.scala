@@ -9,7 +9,6 @@ import java.sql.Timestamp
   */
 class Round6bSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("ev_hazard: hand-computed risk table and cumulative hazard") {

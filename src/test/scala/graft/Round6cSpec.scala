@@ -7,7 +7,6 @@ package graft
   */
 class Round6cSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   test("q_conformal: hand-computed q̂ and held-out coverage") {

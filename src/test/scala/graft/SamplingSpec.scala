@@ -5,7 +5,6 @@ import graft.ext.Sampling
 
 class SamplingSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   private def docs = SparkEntry.T(spark, sf0001, "documents")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Shuffle-budget regression gate — the quantitative companion to
@@ -29,7 +30,12 @@ class ShuffleBudgetSpec extends SparkSpec {
 
   test("no query shuffles more than its committed budget") {
     // the pre-AQE executedPlan's main tree (QueryPlans); planning failures
-    // are PlanAuditSpec's job
+    // are PlanAuditSpec's job. An adaptive plan is a leaf that hides its
+    // exchanges, so a query that plans in a session with AQE on would count 0
+    val adaptive = QueryPlans.planned.collect {
+      case (name, p) if QueryPlans.nodes(p.executedPlan).exists(_.isInstanceOf[AdaptiveSparkPlanExec]) => name
+    }
+    assert(adaptive.isEmpty, s"planned with AQE on, exchanges not countable: ${adaptive.mkString(", ")}")
     val got = scala.collection.immutable.TreeMap.from(QueryPlans.planned.map { case (name, p) =>
       name -> QueryPlans.nodes(p.executedPlan, subqueries = false)
         .count(_.isInstanceOf[ShuffleExchangeExec])

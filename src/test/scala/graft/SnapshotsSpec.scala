@@ -13,7 +13,6 @@ import graft.sources.Snapshots
   */
 class SnapshotsSpec extends SparkSpec {
 
-  private lazy val sqlImplicits = spark.implicits
   import sqlImplicits._
 
   private def tmp(name: String): String = {

@@ -12,6 +12,11 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf0001 = SparkSpec.sf0001
 
+  /** The session's encoders and `$"col"`: `import sqlImplicits._`. */
+  protected lazy val sqlImplicits = spark.implicits
+
+  protected def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
+
   /** Jobs started while `body` runs. */
   protected def jobsDuring[T](body: => T): (T, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger()
